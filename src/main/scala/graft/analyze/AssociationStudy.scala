@@ -45,8 +45,11 @@ final case class AssocResult(
   *      keyed by variable distributes whole columns to executors.
   *   3. Each task joins its column against the broadcast block locally and
   *      runs the Breeze IRLS kernel — one (continuous/binary) or two
-  *      (categorical LRT) fits per variable. No further shuffles; results
-  *      are a tiny Dataset[AssocResult].
+  *      (categorical LRT) fits per variable. No further shuffles; the
+  *      O(#variables) result rows are collected ONCE, completed and sorted
+  *      on the driver, and returned as a local relation (see
+  *      [[LocalResult]]), so corrections and filters downstream of the
+  *      study start no jobs.
   *
   * At the 100 TB design point with *billions of rows*, the broadcast block
   * no longer fits and the melt shuffle carries the full table; the same
@@ -156,10 +159,14 @@ object AssociationStudy {
             standardizeData, surveyDesign, reportCategoricalBetas, broadcastBase)
       }
     }
-    val all = perOutcome.reduce(_ unionByName _)
-    // global sort by pvalue (reference: association_study.py:126-129)
-    all.orderBy(col("pvalue").asc_nulls_last, col("Variable"))
+    // global sort by pvalue (reference: association_study.py:126-129), on
+    // the driver; each built-in path's table is a local relation already
+    LocalResult.collectSorted(perOutcome.reduce(_ unionByName _), ResultOrder)
   }
+
+  /** Result row order: pvalue ascending with nulls last, then Variable. */
+  private val ResultOrder: Seq[SortKey] =
+    Seq(SortKey("pvalue", nullsLast = true), SortKey("Variable"))
 
   /** Deprecated alias kept for surface parity
     * (reference: clarite/modules/analyze/ewas.py:9-106 — a thin wrapper
@@ -349,24 +356,21 @@ object AssociationStudy {
       fitOne(variable, outcomeName, kind, levelsB.value.get(variable), b, idx,
         vals, presentIds.toArray, family, minN, doStd, catBetas)
     }
-    // a variable with NO non-null values forms no melt group at all; the
-    // reference still emits a null row for it (the result table always has
-    // one entry per tested variable). The membership check is an ACTION:
-    // cache the fit Dataset first so the whole broadcast-kernel pass runs
-    // ONCE, not once for this collect and again for the caller's action
-    // (the InteractionStudy discipline; measured 2x per bench pass before),
-    // then materialize the O(#rvs) result eagerly and release the cache.
-    val cached = results.cache()
-    val produced = cached.map(_.Variable).distinct().collect().toSet
-    val missing = rvs.filterNot(produced)
-    val missingRows = missing.map(v => AssocResult(v, outcome,
+    withMissingRows(spark, cf, outcome, rvs, results.collect())
+  }
+
+  /** The study's O(#rvs) result table as a local relation: the collected
+    * fit rows plus a null row for each variable with NO non-null values —
+    * it forms no melt group at all, and the reference still emits a row
+    * for it (the result table has one entry per tested variable). */
+  private def withMissingRows(spark: SparkSession, cf: CladeFrame, outcome: String,
+                              rvs: Seq[String], fitted: Array[AssocResult]): DataFrame = {
+    import spark.implicits._
+    val produced = fitted.iterator.map(_.Variable).toSet
+    val missingRows = rvs.filterNot(produced).map(v => AssocResult(v, outcome,
       cf.typeOf(v).name, None, Converged = false, 0, None, None, None, None,
       None, None, error = Some("no non-missing observations")))
-    val out = if (missingRows.isEmpty) cached.toDF()
-      else cached.toDF().unionByName(missingRows.toDF())
-    val fin = out.localCheckpoint()
-    cached.unpersist(blocking = false)
-    fin
+    (fitted.toSeq ++ missingRows).toDF()
   }
 
   /** Co-group execution: melt the rv columns, JOIN the (uncollected) base
@@ -575,21 +579,9 @@ object AssociationStudy {
         vals.toArray, allIds.toArray, family, minN, standardize = doStd,
         catBetas)
     }
-    // same single-execution discipline as the broadcast path: the
-    // membership check is an action, and without the cache the ENTIRE
-    // co-group fit (melt ⋈ base shuffle + per-variable kernels) ran once
-    // for this collect and AGAIN for the caller's action
-    val cached = resultDs.cache()
-    val produced = cached.map(_.Variable).distinct().collect().toSet
-    val missing = rvs.filterNot(produced)
-    val missingRows = missing.map(v => AssocResult(v, outcome,
-      cf.typeOf(v).name, None, Converged = false, 0, None, None, None, None,
-      None, None, error = Some("no non-missing observations")))
-    val out = if (missingRows.isEmpty) cached.toDF()
-      else cached.toDF().unionByName(missingRows.toDF())
-    val fin = out.localCheckpoint()
-    cached.unpersist(blocking = false)
-    fin
+    // the co-group fit (melt ⋈ base shuffle + per-variable kernels) runs
+    // once, for this collect of its O(#rvs) rows
+    withMissingRows(spark, cf, outcome, rvs, resultDs.collect())
   }
 
   /** Fit one variable's model(s) against the (subset of the) base block.

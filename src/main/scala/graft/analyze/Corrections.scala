@@ -12,15 +12,17 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   *     minimum from the LARGEST p downward (the monotonicity step of
   *     statsmodels' `multipletests(method="fdr_bh")`), clipped at 1.
   *
-  * Execution is fully DISTRIBUTED — no unpartitioned window: the ranks come
-  * from a range-partitioned sort + zipWithIndex, and the suffix-min is two
-  * passes (per-partition minima, then a driver-side suffix scan over the
-  * O(#partitions) minima feeding a reverse per-partition sweep). A results
-  * table is usually tiny, but a 100M-variant GWAS results table is not —
-  * the old single-partition ordering window was the bench log's
-  * "WindowExec: No Partition Defined" warning. With `groupby` keys the
-  * correction runs once per de-duplicated test, matching the reference's
-  * grouped mode (utils.py:77-117).
+  * Two executions, identical values. A table of at most
+  * `graft.corrections.localMaxRows` rows (default 100k) is collected once
+  * and corrected on the driver, and the result is a local relation — no
+  * jobs at all when the input is one already (a study's result table).
+  * Larger tables run fully DISTRIBUTED, with no unpartitioned window: the
+  * ranks come from a range-partitioned sort + zipWithIndex, and the
+  * suffix-min is two passes (per-partition minima, then a driver-side
+  * suffix scan over the O(#partitions) minima feeding a reverse
+  * per-partition sweep) — a 100M-variant GWAS results table is not tiny.
+  * With `groupby` keys the correction runs once per de-duplicated test,
+  * matching the reference's grouped mode (utils.py:77-117).
   */
 object Corrections {
 
@@ -35,79 +37,67 @@ object Corrections {
       val dedup = df.select((groupby :+ pvalue).map(col): _*).dropDuplicates(groupby)
       val corrected = addFlat(dedup, pvalue)
         .select((groupby ++ Seq("pvalue_bonferroni", "pvalue_fdr")).map(col): _*)
-      df.join(corrected, groupby, "left")
-        .orderBy(col("pvalue_fdr").asc_nulls_last, col("pvalue_bonferroni").asc_nulls_last)
+      df.join(corrected, groupby, "left").orderBy(CorrectedOrder.map(_.column): _*)
     }
   }
 
+  /** Corrected-table row order: FDR, then Bonferroni, nulls last. */
+  private val CorrectedOrder: Seq[SortKey] =
+    Seq(SortKey("pvalue_fdr", nullsLast = true), SortKey("pvalue_bonferroni", nullsLast = true))
+
   private def addFlat(df: DataFrame, pvalue: String): DataFrame = {
     val spark = df.sparkSession
-    val p = col(pvalue)
     val outSchema = StructType(df.schema.fields ++ Seq(
       StructField("pvalue_bonferroni", DoubleType, nullable = true),
       StructField("pvalue_fdr", DoubleType, nullable = true)))
     // NaN p-values are missing, like null: they must not inflate m, and
     // their corrections are null (NaN passed the old isNotNull filter and
-    // poisoned bonferroni via java math.min(NaN,1)=NaN). The cast-null
-    // check keeps the predicate two-valued — without it an uncastable
-    // string p-value makes `missing` NULL and the row vanishes from BOTH
-    // branches
-    val pd = expr(s"try_cast(`$pvalue` AS DOUBLE)") // ANSI-safe on strings
-    val missing = p.isNull || pd.isNull || isnan(pd)
+    // poisoned bonferroni via java math.min(NaN,1)=NaN). try_cast keeps
+    // ANSI from failing on an uncastable string p-value, which is missing
+    // too
+    val pd = expr(s"try_cast(`$pvalue` AS DOUBLE)")
+    // Bounded LOCAL path: a table of at most `localMax` rows is collected
+    // once (with its p-values as doubles) and corrected on the driver by
+    // the same sweep, in the same double arithmetic, as the distributed
+    // path below — sort ascending, raw = p·m/rank, suffix minimum. Every
+    // tie shares one corrected value on both paths (for equal p at ranks
+    // r1 < r2, raw(r1) > raw(r2), so the suffix-min reaches both at r2).
+    // The stats short-circuit (GraftConf.probeWorthIssuing) skips the
+    // collect when the input estimate says the bound will fail anyway.
+    val localMax = graft.GraftConf.positiveLong(spark,
+      "graft.corrections.localMaxRows", 100000L)
+    val limit = (math.min(localMax, Int.MaxValue.toLong - 1) + 1).toInt
+    val local =
+      if (!graft.GraftConf.probeWorthIssuing(df)) null
+      else df.withColumn("__pd", pd).limit(limit).collect()
+    if (local != null && local.length <= localMax) {
+      val width = df.schema.size
+      val pOf = local.map(r => if (r.isNullAt(width)) Double.NaN else r.getDouble(width))
+      val ranked = local.indices.filterNot(i => pOf(i).isNaN)
+        .sortBy(pOf)(Ordering.Double.TotalOrdering).toArray
+      val mD = ranked.length.toDouble
+      val fdr = new Array[Double](local.length)
+      var run = Double.PositiveInfinity
+      var k = ranked.length - 1
+      while (k >= 0) {
+        val i = ranked(k)
+        run = math.min(run, pOf(i) * mD / (k + 1))
+        fdr(i) = run
+        k -= 1
+      }
+      val rows = local.indices.map { i =>
+        Row.fromSeq(local(i).toSeq.take(width) ++
+          (if (pOf(i).isNaN) Seq(null, null)
+           else Seq(math.min(pOf(i) * mD, 1.0), math.min(fdr(i), 1.0))))
+      }
+      return LocalResult.sorted(spark, outSchema, rows, CorrectedOrder)
+    }
+
+    val missing = pd.isNull || isnan(pd)
     val nonNull = df.filter(!missing)
     val nullRows = df.filter(missing)
       .withColumn("pvalue_bonferroni", lit(null).cast(DoubleType))
       .withColumn("pvalue_fdr", lit(null).cast(DoubleType))
-    // Bounded LOCAL fast path (r17; the PageRank/components probe
-    // discipline): BH-FDR is a pure function of the DISTINCT p-values and
-    // their multiplicities — for equal p at ranks r1 < r2, raw(r1) =
-    // p·m/r1 > raw(r2), and the suffix-min assigns both min(raw(r2..m)),
-    // so every tie shares one corrected value and the whole correction is
-    // a mapping p → (bonferroni, fdr) computed from (p, count) pairs.
-    // Within a distinct-p block the suffix-min is reached at the block's
-    // LAST rank, so fdr_j = min_{i≥j}(p_i·m/R_i) over cumulative counts
-    // R_i — the identical double expressions the distributed sweep
-    // evaluates, in the same order. One bounded probe job replaces the
-    // count + sort/zipWithIndex + per-partition-minima jobs; over the
-    // bound (`graft.corrections.localMaxDistinct`, default 100k — a
-    // GWAS-scale table with millions of DISTINCT p-values) the
-    // distributed path below is unchanged.
-    val localMax = graft.GraftConf.positiveLong(spark,
-      "graft.corrections.localMaxDistinct", 100000L)
-    val probeLimit = (math.min(localMax, Int.MaxValue.toLong - 1) + 1).toInt
-    // stats short-circuit (GraftConf.probeWorthIssuing): a limit above this
-    // groupBy still aggregates every row, so don't issue it when the input
-    // estimate says the distinct gate will fail anyway
-    val probe =
-      if (!graft.GraftConf.probeWorthIssuing(nonNull)) null
-      else nonNull.groupBy(pd.as("__pd")).agg(count(lit(1)).as("__c"))
-        .limit(probeLimit).collect()
-    if (probe != null && probe.length <= localMax) {
-      if (probe.isEmpty) return nullRows
-      val sortedP = probe.map(r => (r.getDouble(0), r.getLong(1))).sortBy(_._1)
-      val mD = sortedP.iterator.map(_._2).sum.toDouble
-      var cum = 0L
-      val raws = sortedP.map { case (pv, c) => cum += c; pv * mD / cum }
-      val fdrArr = new Array[Double](raws.length)
-      var run = Double.PositiveInfinity
-      var i = raws.length - 1
-      while (i >= 0) { run = math.min(run, raws(i)); fdrArr(i) = run; i -= 1 }
-      val mapRows = sortedP.zipWithIndex.map { case ((pv, _), j) =>
-        Row(pv, math.min(pv * mD, 1.0), math.min(fdrArr(j), 1.0)) }
-      val mapSchema = StructType(Seq(
-        StructField("__pdkey", DoubleType, nullable = false),
-        StructField("pvalue_bonferroni", DoubleType, nullable = true),
-        StructField("pvalue_fdr", DoubleType, nullable = true)))
-      val mapping = spark.createDataFrame(
-        spark.sparkContext.parallelize(mapRows.toSeq, 1), mapSchema)
-      val corrected = nonNull.withColumn("__pdj", pd)
-        .join(broadcast(mapping), col("__pdj") === col("__pdkey"), "left")
-        .drop("__pdj", "__pdkey")
-      return corrected.unionByName(nullRows)
-        .orderBy(col("pvalue_fdr").asc_nulls_last,
-          col("pvalue_bonferroni").asc_nulls_last)
-    }
-
     val m = nonNull.count()
     if (m == 0) return nullRows
 
@@ -160,8 +150,7 @@ object Corrections {
         }
       }
       val corrected = spark.createDataFrame(outRdd, outSchema)
-      corrected.unionByName(nullRows)
-        .orderBy(col("pvalue_fdr").asc_nulls_last, col("pvalue_bonferroni").asc_nulls_last)
+      corrected.unionByName(nullRows).orderBy(CorrectedOrder.map(_.column): _*)
     } finally sorted.unpersist(blocking = false)
   }
 

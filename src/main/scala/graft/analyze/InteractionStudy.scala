@@ -599,8 +599,8 @@ object InteractionStudy {
   /** Co-group execution: a `stack` generator fans each base-complete
     * observation out to its (pair_id, val1, val2) rows, ONE shuffle keyed by
     * pair id, and each group streams through the same local kernels as the
-    * broadcast path. The only driver-side action is the tiny produced-pair
-    * membership check (results are O(#pairs)). */
+    * broadcast path. The only action is the one collect of the O(#pairs)
+    * result rows, which are completed and sorted on the driver. */
   private def runCogroup(
       spark: SparkSession,
       cf: CladeFrame,
@@ -666,64 +666,54 @@ object InteractionStudy {
     }
 
     val grouped = long.groupByKey(_.getInt(nCov + 1))
-    val (resultDf, producedPairIds: Set[Int], cached: org.apache.spark.sql.Dataset[_]) =
-      if (!reportBetas) {
-      // pair_id rides along so the produced-pair membership check does not
-      // depend on result naming (betas rows carry PARAMETER names)
-      val ds = grouped.mapGroups { (pairId, rows) =>
+    // a pair with NO complete rows forms no group; the reference still
+    // emits its non-converged row. pair_id rides along so the membership
+    // check does not depend on result naming (betas rows carry PARAMETER
+    // names). The fit runs once, for the one collect of its O(#pairs) rows,
+    // and the table is completed and sorted on the driver.
+    if (!reportBetas) {
+      val fitted = grouped.mapGroups { (pairId, rows) =>
         val (v1, v2) = interArr(pairId)
         val (y, a1, a2, covarRaw) = collectGroup(rows)
         pairId -> fitPairCore(v1, v2, outcomeName, varKinds(v1), varKinds(v2),
           y, a1, a2, covarRaw, family, minN)
-      }.cache()
-      (ds.map(_._2).toDF(), ds.map(_._1).distinct().collect().toSet,
-        ds: org.apache.spark.sql.Dataset[_])
+      }.collect()
+      val produced = fitted.iterator.map(_._1).toSet
+      val missing = interArr.indices.filterNot(produced).map { i =>
+        val (v1, v2) = interArr(i)
+        InteractionResult(v1, v2, outcomeName, Converged = false, 0,
+          None, None, None, None, error = Some("no non-missing observations"))
+      }
+      LocalResult.collectSorted((fitted.toSeq.map(_._2) ++ missing).toDF(), PlainOrder)
     } else {
-      val ds = grouped.flatMapGroups { (pairId, rows) =>
+      val fitted = grouped.flatMapGroups { (pairId, rows) =>
         val (v1, v2) = interArr(pairId)
         val (y, a1, a2, covarRaw) = collectGroup(rows)
         fitPairBetasCore(v1, v2, outcomeName, varKinds(v1), varKinds(v2),
           y, a1, a2, covarRaw, family, minN).map(pairId -> _)
-      }.cache()
-      (ds.map(_._2).toDF(), ds.map(_._1).distinct().collect().toSet,
-        ds: org.apache.spark.sql.Dataset[_])
-    }
-    // a pair with NO complete rows forms no group; the reference still
-    // emits its non-converged row
-    val missing = interArr.indices.filterNot(producedPairIds)
-    val out = if (missing.isEmpty) resultDf
-    else if (!reportBetas) {
-      import spark.implicits._
-      resultDf.unionByName(missing.map { i =>
-        val (v1, v2) = interArr(i)
-        InteractionResult(v1, v2, outcomeName, Converged = false, 0,
-          None, None, None, None, error = Some("no non-missing observations"))
-      }.toDF())
-    } else {
-      import spark.implicits._
-      resultDf.unionByName(missing.map { i =>
+      }.collect()
+      val produced = fitted.iterator.map(_._1).toSet
+      val missing = interArr.indices.filterNot(produced).map { i =>
         val (v1, v2) = interArr(i)
         InteractionBetaResult(v1, v2, outcomeName, s"$v1:$v2",
           Converged = false, 0, None, None, None, None, None, None, None,
           None, None, None, None, None, None, None, None, None,
           error = Some("no non-missing observations"))
-      }.toDF())
+      }
+      LocalResult.collectSorted((fitted.toSeq.map(_._2) ++ missing).toDF(), BetasOrder)
     }
-    val sorted = if (!reportBetas) sortPlain(out) else sortBetas(out)
-    // materialize the O(#pairs) result rows (eager localCheckpoint) and
-    // release the cached per-group fit Dataset deterministically — it
-    // otherwise lingers in executor storage across calls until GC
-    val fin = sorted.localCheckpoint()
-    cached.unpersist(blocking = false)
-    fin
   }
 
-  private def sortPlain(df: DataFrame): DataFrame =
-    df.orderBy(col("LRT_pvalue").asc_nulls_last, col("Term1"), col("Term2"))
+  /** Result row orders (plain and report_betas mode), shared by the
+    * distributed sorts below and the co-group path's driver-side sort. */
+  private val PlainOrder: Seq[SortKey] =
+    Seq(SortKey("LRT_pvalue", nullsLast = true), SortKey("Term1"), SortKey("Term2"))
+  private val BetasOrder: Seq[SortKey] = Seq(SortKey("LRT_pvalue", nullsLast = true),
+    SortKey("Full_Var1_Var2_Pval", nullsLast = true), SortKey("Parameter"))
 
-  private def sortBetas(df: DataFrame): DataFrame =
-    df.orderBy(col("LRT_pvalue").asc_nulls_last,
-      col("Full_Var1_Var2_Pval").asc_nulls_last, col("Parameter"))
+  private def sortPlain(df: DataFrame): DataFrame = df.orderBy(PlainOrder.map(_.column): _*)
+
+  private def sortBetas(df: DataFrame): DataFrame = df.orderBy(BetasOrder.map(_.column): _*)
 
   /** 0/1-encode a binary outcome by sorted level order with the
     * Case/Control override (reference: glm_regression.py:128-156). */

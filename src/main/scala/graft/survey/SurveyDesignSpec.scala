@@ -1,17 +1,18 @@
 package graft.survey
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Complex-survey design specification — strata / cluster (PSU) / sampling
   * weights / finite-population correction, aligned to the observation table
   * by id (reference: clarite/modules/survey/survey_design.py:9-146).
   *
-  * Construction is DISTRIBUTED: validations (missing strata/cluster/fpc
-  * counts, empty design), weight normalization means, and the
-  * cluster/stratum DESIGN TOTALS (clusters per stratum, stratum for
-  * cluster, fpc per cluster — survey_design.py:131-141) are Spark
-  * aggregations whose results are tiny (O(#strata + #clusters) rows). The
+  * Construction is ONE grouped Spark aggregation, keyed by PSU (or by
+  * stratum when there are no clusters), whose O(#PSUs) / O(#strata) rows
+  * are collected once; validations (missing strata/cluster/fpc counts,
+  * empty design), weight normalization means and the DESIGN TOTALS
+  * (clusters per stratum, stratum for cluster, fpc per cluster —
+  * survey_design.py:131-141) are computed from them on the driver. The
   * survey table itself is NEVER collected for the co-group execution path —
   * per-observation metadata reaches the kernels via `surveyRowsDf` joins.
   * Only the legacy broadcast execution path (which by contract collects its
@@ -79,51 +80,73 @@ final class SurveyDesignSpec(
       fpc.map(col(_).cast("double")).getOrElse(lit(0.0)).as("__fpc")) ++
       weightCols.map(wc => clampedW(wc).as(s"__w_$wc"))): _*)
 
-  // ------------------------------------- one aggregation pass: validations,
-  // weight means, full-design cluster count (results are a single row)
+  // ------------------------------------------ ONE grouped aggregation pass
+  // Keyed by PSU when the design is clustered, by stratum otherwise, so its
+  // rows are O(#PSUs) / O(#strata). Everything else derives from them on
+  // the driver: the validations, the weight means and the full-design
+  // totals (computed before subsets — survey_design.py:131-141). A
+  // no-cluster design (every observation its own PSU) never builds a
+  // per-PSU table — #PSUs == #rows there, and an O(rows) driver map is a
+  // scale bug; it uses the O(#strata) [[stratumTotals]] instead.
+  //
+  // Columns: the key, then clustered: s (first stratum), n, f (min fpc),
+  // ms (missing strata); no-cluster: n. Then mf (missing fpc), per weight
+  // sw_/cw_ (sum, count of non-missing), and no-cluster with fpc: sf, sinv,
+  // mn, mx. 1/__fpc only when there IS an fpc: without one __fpc is 0,
+  // and that division fails under ANSI.
+  private val designRows: Array[Row] = {
+    def nullCount(c: String): Column = sum(when(col(c).isNull, 1L).otherwise(0L))
+    val perKey: Seq[Column] =
+      if (hasCluster) Seq(first("__strat").as("s"), count(lit(1)).as("n"),
+        min("__fpc").as("f"), nullCount("__strat").as("ms"))
+      else Seq(count(lit(1)).as("n"))
+    val aggs: Seq[Column] = perKey ++ Seq(nullCount("__fpc").as("mf")) ++
+      weightCols.flatMap(wc => Seq(sum(col(s"__w_$wc")).as(s"sw_$wc"),
+        count(col(s"__w_$wc")).as(s"cw_$wc"))) ++
+      (if (hasFpc && !hasCluster) Seq(sum("__fpc").as("sf"),
+        sum(lit(1.0) / col("__fpc")).as("sinv"), min("__fpc").as("mn"),
+        max("__fpc").as("mx")) else Nil)
+    designProj.groupBy(if (hasCluster) "__clust" else "__strat")
+      .agg(aggs.head, aggs.tail: _*).collect()
+  }
+
+  private def total(field: String, rows: Iterable[Row] = designRows): Long =
+    rows.iterator.map { r =>
+      val i = r.fieldIndex(field)
+      if (r.isNullAt(i)) 0L else r.getLong(i)
+    }.sum
+
   private val (nRows: Long, nClustFull: Long, weightMeans: Map[String, Double]) = {
-    val aggs: Seq[Column] = Seq(
-      count(lit(1)),
-      // no-cluster: every row is its own PSU — a countDistinct over the
-      // per-row pseudo ids would be a full distinct shuffle for a number
-      // that is simply the row count
-      if (hasCluster) countDistinct(col("__clust")) else count(lit(1)),
-      sum(when(col("__strat").isNull, 1L).otherwise(0L)),
-      sum(when(col("__clust").isNull, 1L).otherwise(0L)),
-      sum(when(col("__fpc").isNull, 1L).otherwise(0L))) ++
-      weightCols.map(wc => avg(col(s"__w_$wc")))
-    val r = designProj.agg(aggs.head, aggs.tail: _*).head()
-    val n = r.getLong(0)
+    val n = total("n")
     require(n > 0, "survey design is empty")
-    def cnt(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
+    // rows whose key (PSU, or stratum) is missing form the null-key group
+    val nullKey = total("n", designRows.filter(_.isNullAt(0)))
+    val missStrat = if (hasCluster) total("ms") else nullKey
+    val missFpc = total("mf")
     // missing design values are a hard error with a count, like the
     // reference (survey_design.py:180-183, 206-210, 281-284)
     if (hasStrata)
-      require(cnt(2) == 0, s"${cnt(2)} of $n strata values were missing")
+      require(missStrat == 0, s"$missStrat of $n strata values were missing")
     if (hasCluster)
-      require(cnt(3) == 0, s"${cnt(3)} of $n cluster values were missing")
+      require(nullKey == 0, s"$nullKey of $n cluster values were missing")
     if (hasFpc)
-      require(cnt(4) == 0, s"${cnt(4)} of $n fpc values were missing")
-    val means = weightCols.zipWithIndex.map { case (wc, i) =>
-      wc -> (if (r.isNullAt(5 + i)) 1.0 else r.getDouble(5 + i))
+      require(missFpc == 0, s"$missFpc of $n fpc values were missing")
+    val means = weightCols.map { wc =>
+      val cnt = total(s"cw_$wc")
+      val sumW = designRows.iterator.map { r =>
+        val i = r.fieldIndex(s"sw_$wc")
+        if (r.isNullAt(i)) 0.0 else r.getDouble(i)
+      }.sum
+      wc -> (if (cnt == 0) 1.0 else sumW / cnt)
     }.toMap
-    (n, r.getLong(1), means)
+    (n, if (hasCluster) designRows.count(!_.isNullAt(0)).toLong else n, means)
   }
 
-  // ------------------------------------------------- design totals (full)
-  // grouped aggregates collected at O(#strata) / O(#clusters) — computed on
-  // the FULL design before subsets (survey_design.py:131-141). No-cluster
-  // designs (every observation its own PSU) never build the per-cluster
-  // table — #clusters == #rows there, and an O(rows) driver map is a scale
-  // bug; they use the O(#strata) [[stratumTotals]] instead.
   /** (cluster, stratum, rows-in-cluster, raw fpc) — one row per cluster.
     * CLUSTERED designs only. */
   private lazy val clusterTable: Array[(String, String, Long, Double)] =
-    designProj.groupBy("__clust")
-      .agg(first("__strat").as("s"), count(lit(1)).as("n"), min("__fpc").as("f"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2),
-        if (r.isNullAt(3)) 0.0 else r.getDouble(3)))
+    designRows.map(r => (r.getString(0), r.getString(1), r.getLong(2),
+      if (r.isNullAt(3)) 0.0 else r.getDouble(3)))
 
   /** No-cluster designs: per-stratum totals on the FULL design — PSU count
     * (= rows: each observation is its own PSU) and Σ(1 − fpc fraction),
@@ -133,10 +156,7 @@ final class SurveyDesignSpec(
     * population-form fpc without strata or clusters is invalid). */
   @transient private lazy val noClustTotals
       : (Map[String, (Long, Double)], Boolean) = {
-    val aggs = Seq(count(lit(1)).as("n")) ++ (if (hasFpc) Seq(
-      sum("__fpc").as("sf"), sum(lit(1.0) / col("__fpc")).as("sinv"),
-      min("__fpc").as("mn"), max("__fpc").as("mx")) else Nil)
-    val rows = designProj.groupBy("__strat").agg(aggs.head, aggs.tail: _*).collect()
+    val rows = designRows
     if (!hasFpc)
       (rows.map(r => r.getString(0) -> (r.getLong(1), r.getLong(1).toDouble)).toMap, false)
     else {

@@ -17,10 +17,11 @@ class PlanAuditSpec extends SparkSpec {
     * algebra, sample ranks) — there is no base-row predicate Catalyst
     * COULD push to the parquet scan. */
   private val allowlist: Map[String, String] = Map(
-    // (analyze_assoc_cogroup left the list in r17: the study result is now
-    // an eager localCheckpoint — the single-execution fix — so the audited
-    // plan is the checkpointed O(#rvs) frame; the melt/co-group pass whose
-    // post-stack IS NOT NULL filter was allowlisted runs at construction)
+    // (analyze_assoc_cogroup left the list in r17: the study result is a
+    // driver-local relation of its O(#rvs) rows, collected once at
+    // construction, so the audited plan is the query's sort over that
+    // relation; the melt/co-group pass whose post-stack IS NOT NULL filter
+    // was allowlisted runs at construction)
     "ann_knn_graph" -> "NO-PUSHDOWN: whole-corpus graph; filters on IVF list ranks (derived)",
     "events_retention" -> "NO-PUSHDOWN: explode's implicit size(days) > 0 guard on the AGGREGATED per-user day set — no base-row predicate exists",
     // (describe_cramers_v / describe_mutual_info left the list in r17:

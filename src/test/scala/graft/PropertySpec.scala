@@ -5,8 +5,9 @@ import org.scalacheck.{Gen, rng}
 import graft.analyze.Corrections
 
 /** Property-style checks (scalacheck generators, deterministic seeds): the
-  * window-function BH-FDR against a local reference implementation on
-  * arbitrary p-value vectors, plus invariants. */
+  * BH-FDR, on both its driver-local and its distributed path, against a
+  * local reference implementation on arbitrary p-value vectors, plus
+  * invariants. */
 class PropertySpec extends SparkSpec {
 
   /** Local statsmodels-style fdr_bh: sort, p*m/rank, reverse cummin, clip. */
@@ -23,25 +24,50 @@ class PropertySpec extends SparkSpec {
     out.toSeq
   }
 
+  /** Runs `body` with BH-FDR forced onto its distributed path
+    * (`graft.corrections.localMaxRows=1`: every input of 2+ rows is over
+    * the bound) or on its default, driver-local one. */
+  private def bhMode[T](distributed: Boolean)(body: => T): T = {
+    val key = "graft.corrections.localMaxRows"
+    if (distributed) spark.conf.set(key, "1")
+    try body finally spark.conf.unset(key)
+  }
+
+  private def bothModes(df: org.apache.spark.sql.DataFrame, order: Seq[String],
+                        groupby: Seq[String] = Nil): Seq[org.apache.spark.sql.Row] = {
+    val Seq(local, dist) = Seq(false, true).map { d =>
+      bhMode(d) {
+        val out = Corrections.addCorrectedPvalues(df, groupby = groupby)
+        // the local path returns a driver-local relation, the sweep does not
+        val isLocal = out.queryExecution.analyzed
+          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+        if (groupby.isEmpty && df.count() > 1) assert(isLocal === !d, s"distributed=$d")
+        out.orderBy(order.map(col): _*).collect().toSeq
+      }
+    }
+    assert(local === dist, s"local and distributed BH-FDR differ on ${df.collect().toSeq}")
+    local
+  }
+
   test("window BH-FDR matches the local reference on random p-vectors") {
     import spark.implicits._
     val gen = Gen.nonEmptyListOf(Gen.choose(0.0, 1.0))
     val cases = (0 until 25).flatMap { i =>
       gen(Gen.Parameters.default.withSize(1 + i * 8),
         rng.Seed(42L + i)).toSeq
-    } :+ List(0.5, 0.5, 0.5) :+ List(1.0) :+ List(0.0, 1.0, 0.25, 0.25)
+    } :+ List(0.5, 0.5, 0.5) :+ List(1.0) :+ List(0.0, 1.0, 0.25, 0.25) :+
+      List(0.01, 0.01, 0.2, 0.01, 0.2, 0.9, 0.9)
     cases.foreach { ps0 =>
       {
         val ps = ps0.take(200)
         val df = ps.zipWithIndex.map { case (p, i) => (i.toLong, p) }.toDF("id", "pvalue")
-        val got = Corrections.addCorrectedPvalues(df).orderBy("id")
-          .select("pvalue_fdr").collect().map(_.getDouble(0)).toSeq
+        val rows = bothModes(df, Seq("id"))
+        val got = rows.map(_.getDouble(3))
         val want = localBh(ps)
         got.zip(want).zipWithIndex.foreach { case ((g, w), i) =>
           assert(math.abs(g - w) < 1e-12, s"fdr mismatch at $i: $g vs $w (ps=$ps)")
         }
         // invariants: bonferroni >= fdr >= raw p (up to clipping)
-        val rows = Corrections.addCorrectedPvalues(df).collect()
         rows.foreach { r =>
           val p = r.getDouble(r.fieldIndex("pvalue"))
           val bonf = r.getDouble(r.fieldIndex("pvalue_bonferroni"))
@@ -49,6 +75,51 @@ class PropertySpec extends SparkSpec {
           assert(bonf >= fdr - 1e-12 && fdr >= p - 1e-12)
           assert(bonf <= 1.0 && fdr <= 1.0)
         }
+      }
+    }
+  }
+
+  test("BH-FDR, local and distributed: null, NaN and uncastable p-values are missing") {
+    import spark.implicits._
+    // string p-values: null, "NaN" and "abc" are missing (m counts the
+    // other five), and ties share their corrected value
+    val raw = Seq[(Long, String)](0L -> "0.01", 1L -> null, 2L -> "0.04", 3L -> "NaN",
+      4L -> "0.04", 5L -> "abc", 6L -> "0.5", 7L -> "0.02")
+    val rows = bothModes(raw.toDF("id", "pvalue"), Seq("id"))
+    val fdr = rows.map(r => if (r.isNullAt(3)) None else Some(r.getDouble(3)))
+    val valid = raw.collect { case (i, p) if p != null && p != "NaN" && p != "abc" =>
+      i -> p.toDouble }
+    val want = localBh(valid.map(_._2)).map(math.min(_, 1.0))
+    valid.zip(want).foreach { case ((i, _), w) =>
+      assert(math.abs(fdr(i.toInt).get - w) < 1e-12, s"id $i") }
+    Seq(1, 3, 5).foreach { i =>
+      assert(fdr(i).isEmpty && rows(i).isNullAt(2), s"id $i must be missing") }
+    assert(fdr(2) === fdr(4))
+    // double p-values: null and NaN
+    val dbl = Seq[(Long, Option[Double])](0L -> Some(0.2), 1L -> None,
+      2L -> Some(Double.NaN), 3L -> Some(0.01), 4L -> Some(0.2))
+    val drows = bothModes(dbl.toDF("id", "pvalue"), Seq("id"))
+    assert(drows.map(_.isNullAt(3)) === Seq(false, true, true, false, false))
+    assert(math.abs(drows(3).getDouble(3) - 0.03) < 1e-12 &&
+      math.abs(drows(0).getDouble(3) - 0.2) < 1e-12)
+  }
+
+  test("grouped BH-FDR agrees between the local and the distributed path") {
+    import spark.implicits._
+    val cases = (0 until 8).map { i =>
+      val r = new scala.util.Random(100 + i)
+      val groups = 1 + r.nextInt(30)
+      val gp = (0 until groups).map(g => g -> (if (g % 7 == 3) 0.25 else r.nextDouble()))
+      gp.flatMap { case (g, p) => (0 to r.nextInt(4)).map(m => (g, m, p)) }
+    }
+    cases.foreach { rows =>
+      val df = rows.toDF("g", "member", "pvalue")
+      val out = bothModes(df, Seq("g", "member"), groupby = Seq("g"))
+      // one correction per group: m = #groups
+      val byGroup = rows.map(r => r._1 -> r._3).distinct.sortBy(_._1)
+      val want = byGroup.map(_._1).zip(localBh(byGroup.map(_._2))).toMap
+      out.foreach { r =>
+        assert(math.abs(r.getDouble(r.fieldIndex("pvalue_fdr")) - want(r.getInt(0))) < 1e-12)
       }
     }
   }
