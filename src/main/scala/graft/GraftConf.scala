@@ -2,10 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared parsing for `graft.*` session-conf knobs. Every gate/cap in the
-  * library reads its knob through [[positiveLong]] so a malformed or
-  * whitespace-padded value fails with the SAME descriptive error naming
-  * the key — not a bare NumberFormatException from inside an operator. */
+/** Shared parsing for `graft.*` session-conf knobs. Every positive numeric
+  * cap in the library reads its knob through [[positiveLong]] so a
+  * malformed or whitespace-padded value fails with the SAME descriptive
+  * error naming the key — not a bare NumberFormatException from inside an
+  * operator. The bounds of the dual-path operators are constants, not
+  * knobs; [[LocalPath]] reads their one switch, `graft.local.mode`. */
 object GraftConf {
 
   /** Read `key` as a strictly positive Long, trimming whitespace;
@@ -20,40 +22,4 @@ object GraftConf {
       require(v > 0, s"$key must be > 0, got $v")
       v
     }.getOrElse(default)
-
-  /** Whether a bounded-local-path probe is worth issuing at all (r17
-    * verdict: "make the probes free at scale"). A `limit` above a hash
-    * aggregate still computes the FULL partial aggregation over every
-    * input row before CollectLimit truncates, so when the gate would fail
-    * (production scale) the probe is one wasted row-scale pass over the
-    * biggest table. Short-circuit on the optimizer's size estimate of the
-    * probe plan's INPUT — an upper bound proportional to the scan, known
-    * before any job runs: under `graft.localProbe.maxInputBytes` (default
-    * 4 GiB) the probe's aggregation pass is cheap even when the
-    * distinct-count gate then fails; a 100 TB table estimates far over
-    * and never issues the probe, taking the distributed path directly
-    * (the `Rows.fanOutSmall` stats-gate discipline). An estimation
-    * failure counts as over-bound: correctness never depends on the
-    * probe, only the small-input fast path does. */
-  def probeWorthIssuing(df: org.apache.spark.sql.DataFrame): Boolean = {
-    val maxB = BigInt(positiveLong(df.sparkSession,
-      "graft.localProbe.maxInputBytes", 4L << 30))
-    try {
-      val plan = df.queryExecution.optimizedPlan
-      // Plan-level estimate small -> cheap probe. Otherwise check the
-      // LEAVES: without CBO a join's size estimate is the PRODUCT of its
-      // children and a checkpointed/local input (LogicalRDD /
-      // LocalRelation) reports defaultSizeInBytes (= unknown, huge), so
-      // plan-level stats alone would wrongly block the probe for exactly
-      // the frames the r17 local paths serve (study outputs, pipeline
-      // checkpoints). A materialized leaf never rescans source files —
-      // its probe cost is bounded by what is already held in block
-      // storage — and any other leaf must itself be under the bound.
-      plan.stats.sizeInBytes <= maxB || plan.collectLeaves().forall {
-        case _: org.apache.spark.sql.execution.LogicalRDD => true
-        case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
-        case l => l.stats.sizeInBytes <= maxB
-      }
-    } catch { case _: Throwable => false }
-  }
 }

@@ -3,6 +3,7 @@ package graft.analyze
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import graft.LocalPath
 
 /** Multiple-testing correction — `analyze.add_corrected_pvalues`
   * (reference: clarite/modules/analyze/utils.py:9-117):
@@ -12,10 +13,10 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   *     minimum from the LARGEST p downward (the monotonicity step of
   *     statsmodels' `multipletests(method="fdr_bh")`), clipped at 1.
   *
-  * Two executions, identical values. A table of at most
-  * `graft.corrections.localMaxRows` rows (default 100k) is collected once
-  * and corrected on the driver, and the result is a local relation — no
-  * jobs at all when the input is one already (a study's result table).
+  * Two executions, identical values. A table of at most 100k rows is
+  * collected once and corrected on the driver, and the result is a local
+  * relation — no jobs at all when the input is one already (a study's
+  * result table).
   * Larger tables run fully DISTRIBUTED, with no unpartitioned window: the
   * ranks come from a range-partitioned sort + zipWithIndex, and the
   * suffix-min is two passes (per-partition minima, then a driver-side
@@ -41,6 +42,9 @@ object Corrections {
     }
   }
 
+  /** Row bound of the driver-local correction. */
+  private val LocalMaxRows = 100000L
+
   /** Corrected-table row order: FDR, then Bonferroni, nulls last. */
   private val CorrectedOrder: Seq[SortKey] =
     Seq(SortKey("pvalue_fdr", nullsLast = true), SortKey("pvalue_bonferroni", nullsLast = true))
@@ -56,21 +60,13 @@ object Corrections {
     // ANSI from failing on an uncastable string p-value, which is missing
     // too
     val pd = expr(s"try_cast(`$pvalue` AS DOUBLE)")
-    // Bounded LOCAL path: a table of at most `localMax` rows is collected
-    // once (with its p-values as doubles) and corrected on the driver by
-    // the same sweep, in the same double arithmetic, as the distributed
-    // path below — sort ascending, raw = p·m/rank, suffix minimum. Every
-    // tie shares one corrected value on both paths (for equal p at ranks
-    // r1 < r2, raw(r1) > raw(r2), so the suffix-min reaches both at r2).
-    // The stats short-circuit (GraftConf.probeWorthIssuing) skips the
-    // collect when the input estimate says the bound will fail anyway.
-    val localMax = graft.GraftConf.positiveLong(spark,
-      "graft.corrections.localMaxRows", 100000L)
-    val limit = (math.min(localMax, Int.MaxValue.toLong - 1) + 1).toInt
-    val local =
-      if (!graft.GraftConf.probeWorthIssuing(df)) null
-      else df.withColumn("__pd", pd).limit(limit).collect()
-    if (local != null && local.length <= localMax) {
+    // Bounded LOCAL path: the table (with its p-values as doubles) is
+    // corrected on the driver by the same sweep, in the same double
+    // arithmetic, as the distributed path below — sort ascending,
+    // raw = p·m/rank, suffix minimum. Every tie shares one corrected value
+    // on both paths (for equal p at ranks r1 < r2, raw(r1) > raw(r2), so
+    // the suffix-min reaches both at r2).
+    LocalPath.gate("addCorrectedPvalues", df.withColumn("__pd", pd), LocalMaxRows).foreach { local =>
       val width = df.schema.size
       val pOf = local.map(r => if (r.isNullAt(width)) Double.NaN else r.getDouble(width))
       val ranked = local.indices.filterNot(i => pOf(i).isNaN)

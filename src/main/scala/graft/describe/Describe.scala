@@ -3,6 +3,7 @@ package graft.describe
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.LocalPath
 import graft.model.{CladeFrame, VariableType}
 import graft.modify.Modify
 import VariableType._
@@ -470,15 +471,7 @@ object Describe {
     * DISTINCT-row table; ±5% estimate error only moves the refusal
     * threshold, never correctness. */
   private def groupedStatsMaxGroups(spark: SparkSession): Long =
-    spark.conf.getOption("graft.groupedStats.maxGroups")
-      .map { s =>
-        val v = try s.trim.toLong catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"graft.groupedStats.maxGroups must be a positive integer, got '$s'")
-        }
-        require(v > 0, s"graft.groupedStats.maxGroups must be > 0, got $v")
-        v
-      }.getOrElse(250000L)
+    graft.GraftConf.positiveLong(spark, "graft.groupedStats.maxGroups", 250000L)
 
   private def refuseGroupCardinality(op: String, est: Long, maxGroups: Long): Unit =
     if (est > maxGroups) throw new IllegalArgumentException(
@@ -545,6 +538,66 @@ object Describe {
     }
   }
 
+  /** Row bound of the describe ops' driver-local fast paths, counted in
+    * rows of the tie-aggregated table each op probes. */
+  private val LocalMaxRows = 1000000L
+
+  /** Index comparator ascending by `vals` (java compare: NaN greatest). */
+  private def byDouble(vals: Array[Double]): java.util.Comparator[Integer] =
+    (a: Integer, b: Integer) => java.lang.Double.compare(vals(a.intValue()), vals(b.intValue()))
+
+  /** Row order of the grouped local fast paths ([[giniByGroup]],
+    * [[weightedQuantile]], [[groupedQuantiles]]): row indices bucketed by
+    * group key in first-seen order (a counting sort), each group's slice
+    * sorted by `byVal`. Group g holds `idx(starts(g) until starts(g + 1))`
+    * and `first(g)` is its first row. The group-cardinality refusal holds
+    * on this path too. Returns (starts, idx, first). */
+  private def groupSlices(op: String, spark: SparkSession, keys: Array[String],
+                          byVal: java.util.Comparator[Integer])
+      : (Array[Int], Array[Integer], Array[Int]) = {
+    val np = keys.length
+    val gids = new Array[Int](np)
+    val ids = new java.util.HashMap[String, Integer]()
+    val first = scala.collection.mutable.ArrayBuffer.empty[Int]
+    var i = 0
+    while (i < np) {
+      var id = ids.get(keys(i))
+      if (id == null) {
+        id = Integer.valueOf(first.length)
+        ids.put(keys(i), id)
+        first += i
+      }
+      gids(i) = id.intValue()
+      i += 1
+    }
+    val nGroups = first.length
+    refuseGroupCardinality(op, nGroups.toLong, groupedStatsMaxGroups(spark))
+    val starts = new Array[Int](nGroups + 1)
+    i = 0; while (i < np) { starts(gids(i) + 1) += 1; i += 1 }
+    var g = 0
+    while (g < nGroups) { starts(g + 1) += starts(g); g += 1 }
+    val pos = java.util.Arrays.copyOf(starts, nGroups)
+    val idx = new Array[Integer](np)
+    i = 0
+    while (i < np) {
+      val p = pos(gids(i)); idx(p) = Integer.valueOf(i); pos(gids(i)) = p + 1
+      i += 1
+    }
+    g = 0
+    while (g < nGroups) { java.util.Arrays.sort(idx, starts(g), starts(g + 1), byVal); g += 1 }
+    (starts, idx, first.toArray)
+  }
+
+  /** The two-sample tie table (value, count A, count B) of the local fast
+    * paths of [[ksTwoSample]], [[mannWhitney]] and [[scoreEval]]: its two
+    * count columns as flat arrays in ascending value order, the order the
+    * distributed sweeps range-sort into. */
+  private def sortedTieCounts(rows: Array[Row]): (Array[Long], Array[Long]) = {
+    val idx = Array.tabulate[Integer](rows.length)(Integer.valueOf)
+    java.util.Arrays.sort(idx, byDouble(rows.map(_.getDouble(0))))
+    (idx.map(k => rows(k).getLong(1)), idx.map(k => rows(k).getLong(2)))
+  }
+
   /** Gini concentration coefficient per group, from the rank-weighted sum
     * identity G = 2·Σi·x₍ᵢ₎/(n·Σx) − (n+1)/n.
     *
@@ -571,89 +624,40 @@ object Describe {
       .select(col(groupCol).cast("string").as("__g"),
         col(valueCol).cast("double").as("__x"))
       .groupBy("__g", "__x").agg(count(lit(1)).as("__c"))
-    // Bounded LOCAL fast path (r17 probe discipline): the distributed
-    // sweep needs a range sort + cache + gate + prefix-metadata jobs —
-    // three eager scheduling rounds whose floor dominates when the
-    // TIE-AGGREGATED table (already O(distinct (group, value)) rows, not
-    // row-scale) is small. One bounded limit-collect loads it; the driver
+    // Bounded LOCAL fast path: the distributed sweep needs a range sort +
+    // cache + gate + prefix-metadata jobs — three eager scheduling rounds
+    // whose floor dominates when the TIE-AGGREGATED table (already
+    // O(distinct (group, value)) rows, not row-scale) is small. The driver
     // walks each group in value order accumulating the SAME closed-form
     // terms, so values agree to the final fp rounding (the per-group sums
     // are associative up to fp order, and the result is rounded at 6dp by
-    // every caller). Over `graft.groupedStats.localMaxRows` (default 1M
-    // distinct rows) the distributed path below is unchanged.
-    val localMax = graft.GraftConf.positiveLong(spark,
-      "graft.groupedStats.localMaxRows", 1000000L)
-    if (graft.GraftConf.probeWorthIssuing(counted)) {
-      val limitN = (math.min(localMax, Int.MaxValue.toLong - 1) + 1).toInt
-      val probe = counted.limit(limitN).collect()
-      if (probe.length <= localMax) {
-        // primitive-array replay (r18, §1.2 — the groupedQuantiles shape):
-        // extract fields once, bucket per group, sort index slices with a
-        // primitive-reading comparator; same closed-form terms accumulated
-        // in the same ascending value order
-        val np = probe.length
-        val gids = new Array[Int](np)
-        val vals = new Array[Double](np)
-        val cnts = new Array[Long](np)
-        val gIds = new java.util.HashMap[String, Integer]()
-        val gNames = scala.collection.mutable.ArrayBuffer.empty[String]
-        var i = 0
-        while (i < np) {
-          val r = probe(i)
-          var id = gIds.get(r.getString(0))
-          if (id == null) {
-            id = Integer.valueOf(gNames.length)
-            gIds.put(r.getString(0), id)
-            gNames += r.getString(0)
-          }
-          gids(i) = id.intValue(); vals(i) = r.getDouble(1); cnts(i) = r.getLong(2)
-          i += 1
+    // every caller).
+    LocalPath.gate("giniByGroup", counted, LocalMaxRows).foreach { probe =>
+      val vals = probe.map(_.getDouble(1))
+      val cnts = probe.map(_.getLong(2))
+      val (starts, idx, first) = groupSlices("giniByGroup", spark,
+        probe.map(_.getString(0)), byDouble(vals))
+      val rows = first.indices.map { g =>
+        var n = 0L; var sx = 0.0; var six = 0.0; var below = 0L
+        var j = starts(g)
+        while (j < starts(g + 1)) {
+          val k = idx(j).intValue(); val x = vals(k); val c = cnts(k)
+          n += c; sx += x * c
+          six += x * (2.0 * below + c + 1.0) * c / 2.0
+          below += c
+          j += 1
         }
-        val nGroups = gNames.length
-        // the group-cardinality refusal contract holds on BOTH paths (the
-        // conf is parsed, and the same named-knob error is raised, even
-        // though the local path's driver state is bounded by the probe)
-        refuseGroupCardinality("giniByGroup", nGroups.toLong,
-          groupedStatsMaxGroups(spark))
-        val starts = new Array[Int](nGroups + 1)
-        i = 0; while (i < np) { starts(gids(i) + 1) += 1; i += 1 }
-        var g = 0
-        while (g < nGroups) { starts(g + 1) += starts(g); g += 1 }
-        val pos = java.util.Arrays.copyOf(starts, nGroups)
-        val idx = new Array[Integer](np)
-        i = 0
-        while (i < np) {
-          val p = pos(gids(i)); idx(p) = Integer.valueOf(i); pos(gids(i)) = p + 1
-          i += 1
-        }
-        val byVal = new java.util.Comparator[Integer] {
-          def compare(a: Integer, b: Integer): Int =
-            java.lang.Double.compare(vals(a.intValue()), vals(b.intValue()))
-        }
-        val rows = (0 until nGroups).map { g =>
-          val s = starts(g); val e = starts(g + 1)
-          java.util.Arrays.sort(idx, s, e, byVal)
-          var n = 0L; var sx = 0.0; var six = 0.0; var below = 0L
-          var j = s
-          while (j < e) {
-            val k = idx(j).intValue(); val x = vals(k); val c = cnts(k)
-            n += c; sx += x * c
-            six += x * (2.0 * below + c + 1.0) * c / 2.0
-            below += c
-            j += 1
-          }
-          Row(gNames(g), n, 2.0 * six / (n * sx) - (n + 1.0) / n)
-        }
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(groupCol,
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("n",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("gini",
-            org.apache.spark.sql.types.DoubleType, nullable = false)))
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1), schema)
+        Row(probe(first(g)).getString(0), n, 2.0 * six / (n * sx) - (n + 1.0) / n)
       }
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField(groupCol,
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("n",
+          org.apache.spark.sql.types.LongType, nullable = false),
+        org.apache.spark.sql.types.StructField("gini",
+          org.apache.spark.sql.types.DoubleType, nullable = false)))
+      return spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 1), schema)
     }
     val sorted = counted
       .repartitionByRange(parts, col("__g"), col("__x"))
@@ -729,111 +733,72 @@ object Describe {
       .groupBy("__x").agg(
         sum(when(col("__a"), 1L).otherwise(0L)).as("__ca"),
         sum(when(col("__a"), 0L).otherwise(1L)).as("__cb"))
-    // Bounded LOCAL fast path (r17): the statistic is pure int64 algebra
-    // over the tie-aggregated (value, cA, cB) table — already O(distinct
-    // values), not row-scale — so below the bound one limit-collect
-    // replaces the sort + cache + two prefix jobs, and the driver sweep
-    // is BIT-IDENTICAL (exact integers, same Smirnov scalar tail). Over
-    // `graft.groupedStats.localMaxRows` the distributed path is unchanged.
-    val ksLocalMax = graft.GraftConf.positiveLong(spark,
-      "graft.groupedStats.localMaxRows", 1000000L)
-    val ksProbe =
-      if (!graft.GraftConf.probeWorthIssuing(counted)) null
-      else {
-        val limitN = (math.min(ksLocalMax, Int.MaxValue.toLong - 1) + 1).toInt
-        counted.limit(limitN).collect()
-      }
-    if (ksProbe != null && ksProbe.length <= ksLocalMax) {
-      // primitive-array replay (r18, §1.2): extract once, sort an index
-      // array with a primitive-reading comparator — not a boxed tuple
-      // sort of the whole tie table
-      val np = ksProbe.length
-      val vals = new Array[Double](np)
-      val cas = new Array[Long](np); val cbs = new Array[Long](np)
-      var i = 0
-      while (i < np) {
-        val r = ksProbe(i)
-        vals(i) = r.getDouble(0); cas(i) = r.getLong(1); cbs(i) = r.getLong(2)
-        i += 1
-      }
-      val idx = Array.tabulate[Integer](np)(Integer.valueOf)
-      java.util.Arrays.sort(idx, new java.util.Comparator[Integer] {
-        def compare(a: Integer, b: Integer): Int =
-          java.lang.Double.compare(vals(a.intValue()), vals(b.intValue()))
-      })
-      var na = 0L; var nb = 0L
-      i = 0
-      while (i < np) { na += cas(i); nb += cbs(i); i += 1 }
-      require(na > 0 && nb > 0,
-        s"ksTwoSample needs both samples non-empty: nA=$na nB=$nb")
+    // Bounded LOCAL fast path: the statistic is pure int64 algebra over
+    // the tie-aggregated (value, cA, cB) table — already O(distinct
+    // values), not row-scale — so the driver sweep replaces the sort +
+    // cache + two prefix jobs and is BIT-IDENTICAL (exact integers, same
+    // Smirnov scalar tail).
+    val (na, nb, dNum) = LocalPath.gate("ksTwoSample", counted, LocalMaxRows).map { rows =>
+      val (cas, cbs) = sortedTieCounts(rows)
+      val na = cas.sum; val nb = cbs.sum
       var ca = 0L; var cb = 0L; var dNum = 0L
-      i = 0
-      while (i < np) {
-        val k = idx(i).intValue()
-        ca += cas(k); cb += cbs(k)
+      var i = 0
+      while (i < cas.length) {
+        ca += cas(i); cb += cbs(i)
         val dd = math.abs(Math.subtractExact(
           Math.multiplyExact(ca, nb), Math.multiplyExact(cb, na)))
         if (dd > dNum) dNum = dd
         i += 1
       }
-      val d = dNum * 1.0 / (na * 1.0 * nb)
-      val ne = na * 1.0 * nb / (na + nb)
-      val lam = (math.sqrt(ne) + 0.12 + 0.11 / math.sqrt(ne)) * d
-      val series = (1 to 25).map { kk =>
-        val t = math.exp(-2.0 * (kk * kk) * lam * lam)
-        if (kk % 2 == 1) t else -t
-      }.foldLeft(0.0)(_ + _)
-      val p = math.min(1.0, math.max(0.0, 2.0 * series))
-      return Seq((na, nb,
-        BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-        BigDecimal(p).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
-        .toDF("n_a", "n_b", "d", "pvalue")
+      (na, nb, dNum)
+    }.getOrElse {
+      val sorted = counted
+        .repartitionByRange(parts, col("__x"))
+        .sortWithinPartitions("__x")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val perPart = sorted.rdd.mapPartitionsWithIndex { (pi, it) =>
+          var ca = 0L; var cb = 0L
+          it.foreach { r => ca += r.getLong(1); cb += r.getLong(2) }
+          Iterator.single((pi, ca, cb))
+        }.collect().sortBy(_._1)
+        val na = perPart.iterator.map(_._2).sum
+        val nb = perPart.iterator.map(_._3).sum
+        val starts = perPart.scanLeft((0L, 0L)) {
+          case ((a, b), (_, ca, cb)) => (a + ca, b + cb)
+        }.init
+        // exact-or-fail: cum·n products approach n² — Math.multiplyExact
+        // turns a would-be silent int64 wrap (possible past ~3e9 rows) into
+        // a loud ArithmeticException instead of a wrong statistic
+        val dNum = sorted.rdd.mapPartitionsWithIndex { (pi, it) =>
+          var (ca, cb) = starts(pi)
+          it.map { r =>
+            ca += r.getLong(1); cb += r.getLong(2)
+            math.abs(Math.subtractExact(
+              Math.multiplyExact(ca, nb), Math.multiplyExact(cb, na)))
+          }
+        }.fold(0L)(math.max)
+        (na, nb, dNum)
+      } finally sorted.unpersist(blocking = false)
     }
-    val sorted = counted
-      .repartitionByRange(parts, col("__x"))
-      .sortWithinPartitions("__x")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val perPart = sorted.rdd.mapPartitionsWithIndex { (pi, it) =>
-        var ca = 0L; var cb = 0L
-        it.foreach { r => ca += r.getLong(1); cb += r.getLong(2) }
-        Iterator.single((pi, ca, cb))
-      }.collect().sortBy(_._1)
-      val na = perPart.iterator.map(_._2).sum
-      val nb = perPart.iterator.map(_._3).sum
-      require(na > 0 && nb > 0,
-        s"ksTwoSample needs both samples non-empty: nA=$na nB=$nb")
-      val starts = perPart.scanLeft((0L, 0L)) {
-        case ((a, b), (_, ca, cb)) => (a + ca, b + cb)
-      }.init
-      // exact-or-fail: cum·n products approach n² — Math.multiplyExact
-      // turns a would-be silent int64 wrap (possible past ~3e9 rows) into
-      // a loud ArithmeticException instead of a wrong statistic
-      val dNum = sorted.rdd.mapPartitionsWithIndex { (pi, it) =>
-        var (ca, cb) = starts(pi)
-        it.map { r =>
-          ca += r.getLong(1); cb += r.getLong(2)
-          math.abs(Math.subtractExact(
-            Math.multiplyExact(ca, nb), Math.multiplyExact(cb, na)))
-        }
-      }.fold(0L)(math.max)
-      val d = dNum * 1.0 / (na * 1.0 * nb)
-      val ne = na * 1.0 * nb / (na + nb)
-      val lam = (math.sqrt(ne) + 0.12 + 0.11 / math.sqrt(ne)) * d
-      // alternating Smirnov series, fixed 25-term left-associated sum so
-      // the oracle's identical expression reproduces the same double. 25
-      // is ODD on purpose: for λ→0 the alternating partial sum overshoots
-      // (every term →1), so 2·sum ≥ 1 and the clamp returns the correct
-      // p=1; for λ ≥ ~0.12 the k=26 tail is < 1e-6 (inside the rounding)
-      val series = (1 to 25).map { k =>
-        val t = math.exp(-2.0 * (k * k) * lam * lam)
-        if (k % 2 == 1) t else -t
-      }.foldLeft(0.0)(_ + _)
-      val p = math.min(1.0, math.max(0.0, 2.0 * series))
-      Seq((na, nb, BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-        BigDecimal(p).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
-        .toDF("n_a", "n_b", "d", "pvalue")
-    } finally sorted.unpersist(blocking = false)
+    require(na > 0 && nb > 0,
+      s"ksTwoSample needs both samples non-empty: nA=$na nB=$nb")
+    val d = dNum * 1.0 / (na * 1.0 * nb)
+    val ne = na * 1.0 * nb / (na + nb)
+    val lam = (math.sqrt(ne) + 0.12 + 0.11 / math.sqrt(ne)) * d
+    // alternating Smirnov series, fixed 25-term left-associated sum so
+    // the oracle's identical expression reproduces the same double. 25
+    // is ODD on purpose: for λ→0 the alternating partial sum overshoots
+    // (every term →1), so 2·sum ≥ 1 and the clamp returns the correct
+    // p=1; for λ ≥ ~0.12 the k=26 tail is < 1e-6 (inside the rounding)
+    val series = (1 to 25).map { k =>
+      val t = math.exp(-2.0 * (k * k) * lam * lam)
+      if (k % 2 == 1) t else -t
+    }.foldLeft(0.0)(_ + _)
+    val p = math.min(1.0, math.max(0.0, 2.0 * series))
+    Seq((na, nb, BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
+      BigDecimal(p).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
+      .toDF("n_a", "n_b", "d", "pvalue")
   }
 
   /** ROC AUC + average precision of a score column against a boolean
@@ -874,90 +839,63 @@ object Describe {
     // the same global score order but without the distributed fold's
     // per-partition grouping, so AP agrees up to fp association — inside
     // the 6dp rounding both paths apply.
-    val seLocalMax = graft.GraftConf.positiveLong(spark,
-      "graft.groupedStats.localMaxRows", 1000000L)
-    if (graft.GraftConf.probeWorthIssuing(counted)) {
-      val limitN = (math.min(seLocalMax, Int.MaxValue.toLong - 1) + 1).toInt
-      val probe = counted.limit(limitN).collect()
-      if (probe.length <= seLocalMax) {
-        // primitive-array replay (r18, §1.2 — the ksTwoSample shape); the
-        // AP terms accumulate in the same ascending score order
-        val np = probe.length
-        val vals = new Array[Double](np)
-        val cps = new Array[Long](np); val cns = new Array[Long](np)
-        var i = 0
-        while (i < np) {
-          val r = probe(i)
-          vals(i) = r.getDouble(0); cps(i) = r.getLong(1); cns(i) = r.getLong(2)
-          i += 1
-        }
-        val idx = Array.tabulate[Integer](np)(Integer.valueOf)
-        java.util.Arrays.sort(idx, new java.util.Comparator[Integer] {
-          def compare(a: Integer, b: Integer): Int =
-            java.lang.Double.compare(vals(a.intValue()), vals(b.intValue()))
-        })
-        var nP = 0L; var nN = 0L
-        i = 0
-        while (i < np) { nP += cps(i); nN += cns(i); i += 1 }
-        require(nP > 0 && nN > 0,
-          s"scoreEval needs both classes non-empty: nPos=$nP nNeg=$nN")
-        var cpb = 0L; var cnb = 0L; var a2 = 0L; var ap = 0.0
-        i = 0
-        while (i < np) {
-          val k = idx(i).intValue(); val cp = cps(k); val cn = cns(k)
-          val term = Math.multiplyExact(cp,
-            Math.addExact(Math.multiplyExact(2L, cnb), cn))
-          val tp = nP - cpb; val fp = nN - cnb
-          ap += (cp.toDouble / nP) * (tp.toDouble / (tp.toDouble + fp))
-          a2 = Math.addExact(a2, term)
-          cpb += cp; cnb += cn
-          i += 1
-        }
-        val auc = a2.toDouble / (2.0 * nP * nN)
-        return Seq((nP, nN,
-          BigDecimal(auc).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-          BigDecimal(ap).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
-          .toDF("n_pos", "n_neg", "auc", "average_precision")
+    val (nP, nN, a2, ap) = LocalPath.gate("scoreEval", counted, LocalMaxRows).map { rows =>
+      val (cps, cns) = sortedTieCounts(rows)
+      val nP = cps.sum; val nN = cns.sum
+      var cpb = 0L; var cnb = 0L; var a2 = 0L; var ap = 0.0
+      var i = 0
+      while (i < cps.length) {
+        val cp = cps(i); val cn = cns(i)
+        val term = Math.multiplyExact(cp,
+          Math.addExact(Math.multiplyExact(2L, cnb), cn))
+        val tp = nP - cpb; val fp = nN - cnb
+        ap += (cp.toDouble / nP) * (tp.toDouble / (tp.toDouble + fp))
+        a2 = Math.addExact(a2, term)
+        cpb += cp; cnb += cn
+        i += 1
       }
+      (nP, nN, a2, ap)
+    }.getOrElse {
+      val sorted = counted
+        .repartitionByRange(parts, col("__x"))
+        .sortWithinPartitions("__x")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val perPart = sorted.rdd.mapPartitionsWithIndex { (pi, it) =>
+          var cp = 0L; var cn = 0L
+          it.foreach { r => cp += r.getLong(1); cn += r.getLong(2) }
+          Iterator.single((pi, cp, cn))
+        }.collect().sortBy(_._1)
+        val nP = perPart.iterator.map(_._2).sum
+        val nN = perPart.iterator.map(_._3).sum
+        val starts = perPart.scanLeft((0L, 0L)) {
+          case ((a, b), (_, cp, cn)) => (a + cp, b + cn)
+        }.init
+        // one pass: exact 2·U accumulator + the AP step terms
+        val (a2, ap) = sorted.rdd.mapPartitionsWithIndex { (pi, it) =>
+          var (cpb, cnb) = starts(pi)
+          it.map { r =>
+            val cp = r.getLong(1); val cn = r.getLong(2)
+            val term = Math.multiplyExact(cp,
+              Math.addExact(Math.multiplyExact(2L, cnb), cn))
+            val tp = nP - cpb; val fp = nN - cnb // cumulative from the top
+            val apTerm = (cp.toDouble / nP) * (tp.toDouble / (tp.toDouble + fp))
+            cpb += cp; cnb += cn
+            (term, apTerm)
+          }
+        }.fold((0L, 0.0)) { case ((s1, s2), (t1, t2)) =>
+          (Math.addExact(s1, t1), s2 + t2)
+        }
+        (nP, nN, a2, ap)
+      } finally sorted.unpersist(blocking = false)
     }
-    val sorted = counted
-      .repartitionByRange(parts, col("__x"))
-      .sortWithinPartitions("__x")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val perPart = sorted.rdd.mapPartitionsWithIndex { (pi, it) =>
-        var cp = 0L; var cn = 0L
-        it.foreach { r => cp += r.getLong(1); cn += r.getLong(2) }
-        Iterator.single((pi, cp, cn))
-      }.collect().sortBy(_._1)
-      val nP = perPart.iterator.map(_._2).sum
-      val nN = perPart.iterator.map(_._3).sum
-      require(nP > 0 && nN > 0,
-        s"scoreEval needs both classes non-empty: nPos=$nP nNeg=$nN")
-      val starts = perPart.scanLeft((0L, 0L)) {
-        case ((a, b), (_, cp, cn)) => (a + cp, b + cn)
-      }.init
-      // one pass: exact 2·U accumulator + the AP step terms
-      val (a2, ap) = sorted.rdd.mapPartitionsWithIndex { (pi, it) =>
-        var (cpb, cnb) = starts(pi)
-        it.map { r =>
-          val cp = r.getLong(1); val cn = r.getLong(2)
-          val term = Math.multiplyExact(cp,
-            Math.addExact(Math.multiplyExact(2L, cnb), cn))
-          val tp = nP - cpb; val fp = nN - cnb // cumulative from the top
-          val apTerm = (cp.toDouble / nP) * (tp.toDouble / (tp.toDouble + fp))
-          cpb += cp; cnb += cn
-          (term, apTerm)
-        }
-      }.fold((0L, 0.0)) { case ((s1, s2), (t1, t2)) =>
-        (Math.addExact(s1, t1), s2 + t2)
-      }
-      val auc = a2.toDouble / (2.0 * nP * nN)
-      Seq((nP, nN,
-        BigDecimal(auc).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
-        BigDecimal(ap).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
-        .toDF("n_pos", "n_neg", "auc", "average_precision")
-    } finally sorted.unpersist(blocking = false)
+    require(nP > 0 && nN > 0,
+      s"scoreEval needs both classes non-empty: nPos=$nP nNeg=$nN")
+    val auc = a2.toDouble / (2.0 * nP * nN)
+    Seq((nP, nN,
+      BigDecimal(auc).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble,
+      BigDecimal(ap).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
+      .toDF("n_pos", "n_neg", "auc", "average_precision")
   }
 
   /** Per-column numeric summary in the MERGEABLE form (variable, n, mean,
@@ -1060,50 +998,20 @@ object Describe {
     // as [[ksTwoSample]]: the rank-sum and tie accumulators are exact
     // int64 over the tie-aggregated table, and the u/z/p tail below is
     // the SAME column algebra either way.
-    val mwuLocalMax = graft.GraftConf.positiveLong(spark,
-      "graft.groupedStats.localMaxRows", 1000000L)
-    val mwuLocal: Option[(Long, Long, Long, Long)] =
-      if (!graft.GraftConf.probeWorthIssuing(counted)) None
-      else {
-      val limitN = (math.min(mwuLocalMax, Int.MaxValue.toLong - 1) + 1).toInt
-      val probe = counted.limit(limitN).collect()
-      if (probe.length > mwuLocalMax) None
-      else {
-        // primitive-array replay (r18, §1.2 — the ksTwoSample shape)
-        val np = probe.length
-        val vals = new Array[Double](np)
-        val cas = new Array[Long](np); val cbs = new Array[Long](np)
-        var i = 0
-        while (i < np) {
-          val r = probe(i)
-          vals(i) = r.getDouble(0); cas(i) = r.getLong(1); cbs(i) = r.getLong(2)
-          i += 1
-        }
-        val idx = Array.tabulate[Integer](np)(Integer.valueOf)
-        java.util.Arrays.sort(idx, new java.util.Comparator[Integer] {
-          def compare(a: Integer, b: Integer): Int =
-            java.lang.Double.compare(vals(a.intValue()), vals(b.intValue()))
-        })
-        var na = 0L; var nb = 0L
-        i = 0
-        while (i < np) { na += cas(i); nb += cbs(i); i += 1 }
-        require(na > 0 && nb > 0,
-          s"mannWhitney needs both samples non-empty: nA=$na nB=$nb")
-        var below = 0L; var r2 = 0L; var t3 = 0L
-        i = 0
-        while (i < np) {
-          val k = idx(i).intValue()
-          val t = cas(k) + cbs(k)
-          r2 = Math.addExact(r2, Math.multiplyExact(cas(k), 2L * below + t + 1L))
-          t3 = Math.addExact(t3,
-            Math.multiplyExact(Math.multiplyExact(t, t), t) - t)
-          below += t
-          i += 1
-        }
-        Some((na, nb, r2, t3))
+    val (na, nb, ra2, tie3) = LocalPath.gate("mannWhitney", counted, LocalMaxRows).map { rows =>
+      val (cas, cbs) = sortedTieCounts(rows)
+      var below = 0L; var r2 = 0L; var t3 = 0L
+      var i = 0
+      while (i < cas.length) {
+        val t = cas(i) + cbs(i)
+        r2 = Math.addExact(r2, Math.multiplyExact(cas(i), 2L * below + t + 1L))
+        t3 = Math.addExact(t3,
+          Math.multiplyExact(Math.multiplyExact(t, t), t) - t)
+        below += t
+        i += 1
       }
-    }
-    val (na, nb, ra2, tie3) = mwuLocal.getOrElse {
+      (cas.sum, cbs.sum, r2, t3)
+    }.getOrElse {
       val sorted = counted
         .repartitionByRange(parts, col("__x"))
         .sortWithinPartitions("__x")
@@ -1116,8 +1024,6 @@ object Describe {
         }.collect().sortBy(_._1)
         val na0 = perPart.iterator.map(_._2).sum
         val nb0 = perPart.iterator.map(_._3).sum
-        require(na0 > 0 && nb0 > 0,
-          s"mannWhitney needs both samples non-empty: nA=$na0 nB=$nb0")
         val starts = perPart.scanLeft(0L) { case (acc, (_, ca, cb)) => acc + ca + cb }.init
         // exact-or-fail (see ksTwoSample): t³ on a giant tie run or the
         // rank-sum at multi-billion rows must raise, never silently wrap
@@ -1138,6 +1044,8 @@ object Describe {
         (na0, nb0, r2, t3)
       } finally sorted.unpersist(blocking = false)
     }
+    require(na > 0 && nb > 0,
+      s"mannWhitney needs both samples non-empty: nA=$na nB=$nb")
     locally {
       // u/z/p in COLUMN algebra over the exact integers so the arithmetic
       // (and the Cody erfc) is the very expression the oracle replays
@@ -1215,70 +1123,27 @@ object Describe {
       .groupBy((groupCols.map(col) :+ col(valueCol)): _*)
       .agg(sum(col(weightCol).cast("double")).as("__w"))
       .withColumn("__g", gKey)
-    // Bounded LOCAL fast path (r17 probe discipline — the giniByGroup
-    // shape): the distributed sweep pays a range sort + cache + gate +
-    // prefix-metadata jobs whose scheduling floor dominates when the
-    // TIE-AGGREGATED table (O(distinct (group, value)), not row-scale) is
-    // small. One bounded limit-collect loads it; the driver walks each
-    // group in ASCENDING value order — exactly the range-sorted walk's
-    // order. For integer-valued double weights the crossing row and total
-    // weight are exact on both paths; for fractional weights the local
-    // strict left-to-right sum vs the distributed per-partition-then-
-    // combine sum can differ in ULPs (the same fp-order contract the
-    // docstring states for the distributed path). Gated on the value
-    // type having a
-    // driver-replayable SQL ordering; over
-    // `graft.groupedStats.localMaxRows` the distributed path is unchanged.
-    val localMax = graft.GraftConf.positiveLong(spark,
-      "graft.groupedStats.localMaxRows", 1000000L)
-    if (graft.GraftConf.probeWorthIssuing(counted))
+    // Bounded LOCAL fast path (the giniByGroup shape): the distributed
+    // sweep pays a range sort + cache + gate + prefix-metadata jobs whose
+    // scheduling floor dominates when the TIE-AGGREGATED table
+    // (O(distinct (group, value)), not row-scale) is small. The driver
+    // walks each group in ASCENDING value order — exactly the range-sorted
+    // walk's order. For integer-valued double weights the crossing row and
+    // total weight are exact on both paths; for fractional weights the
+    // local strict left-to-right sum vs the distributed per-partition-
+    // then-combine sum can differ in ULPs (the same fp-order contract the
+    // docstring states for the distributed path). Only value types with a
+    // driver-replayable SQL ordering take it.
     driverSortOrdering(df.schema(valueCol).dataType).foreach { ord =>
-      val limitN = (math.min(localMax, Int.MaxValue.toLong - 1) + 1).toInt
-      val probe = counted.limit(limitN).collect()
-      if (probe.length <= localMax) {
+      LocalPath.gate("weightedQuantile", counted, LocalMaxRows).foreach { probe =>
         val nG = groupCols.length // row layout: groupCols..., value, __w, __g
-        // Primitive-array replay (r18, §1.2 — the groupedQuantiles shape):
-        // extract each field once, bucket per group, sort index slices
-        // with a comparator reading flat arrays — not Row.get inside every
-        // sort comparison.
-        val np = probe.length
-        val gids = new Array[Int](np)
-        val vAny = new Array[Any](np)
-        val ws = new Array[Double](np)
-        val gIds = new java.util.HashMap[String, Integer]()
-        var nGroups = 0
-        var i = 0
-        while (i < np) {
-          val r = probe(i)
-          var id = gIds.get(r.getString(nG + 2))
-          if (id == null) {
-            id = Integer.valueOf(nGroups); nGroups += 1
-            gIds.put(r.getString(nG + 2), id)
-          }
-          gids(i) = id.intValue(); vAny(i) = r.get(nG); ws(i) = r.getDouble(nG + 1)
-          i += 1
-        }
-        // the group-cardinality refusal contract holds on BOTH paths
-        refuseGroupCardinality("weightedQuantile", nGroups.toLong,
-          groupedStatsMaxGroups(spark))
-        val starts = new Array[Int](nGroups + 1)
-        i = 0; while (i < np) { starts(gids(i) + 1) += 1; i += 1 }
-        var g = 0
-        while (g < nGroups) { starts(g + 1) += starts(g); g += 1 }
-        val pos = java.util.Arrays.copyOf(starts, nGroups)
-        val idx = new Array[Integer](np)
-        i = 0
-        while (i < np) {
-          val p = pos(gids(i)); idx(p) = Integer.valueOf(i); pos(gids(i)) = p + 1
-          i += 1
-        }
-        val byVal = new java.util.Comparator[Integer] {
-          def compare(a: Integer, b: Integer): Int =
-            ord.compare(vAny(a.intValue()), vAny(b.intValue()))
-        }
-        val rows = (0 until nGroups).flatMap { g =>
+        val vAny = probe.map(_.get(nG))
+        val ws = probe.map(_.getDouble(nG + 1))
+        val (starts, idx, first) = groupSlices("weightedQuantile", spark,
+          probe.map(_.getString(nG + 2)),
+          (a: Integer, b: Integer) => ord.compare(vAny(a.intValue()), vAny(b.intValue())))
+        val rows = first.indices.flatMap { g =>
           val s = starts(g); val e = starts(g + 1)
-          java.util.Arrays.sort(idx, s, e, byVal)
           var tw = 0.0
           var j = s
           while (j < e) { tw += ws(idx(j).intValue()); j += 1 }
@@ -1413,97 +1278,47 @@ object Describe {
       allG.filter(r => !present(r.getString(1)))
         .map(r => Row(r.get(0), 0L, null)).toSeq
     }
-    // Bounded LOCAL fast path (r17 probe discipline — the giniByGroup
-    // shape): below `graft.groupedStats.localMaxRows` ONE bounded
-    // limit-collect loads the tie-aggregated table and the driver reads
-    // off the needed order statistics from integer tie counts — the
-    // identical type-7 arithmetic on the identical counts, so the result
-    // is BIT-IDENTICAL to the distributed walk. Above the bound the
-    // distributed path is unchanged.
-    val localMax = graft.GraftConf.positiveLong(spark,
-      "graft.groupedStats.localMaxRows", 1000000L)
-    if (graft.GraftConf.probeWorthIssuing(counted)) {
-      val limitN = (math.min(localMax, Int.MaxValue.toLong - 1) + 1).toInt
-      val probe = counted.limit(limitN).collect()
-      if (probe.length <= localMax) {
-        // row layout: groupCol(0), __x(1), __c(2), __g(3).
-        // Primitive-array replay (r18, §1.2 per-task work): the first cut
-        // grouped and sorted the collected ROWS (Row.getDouble inside every
-        // sort comparison, boxed Ordering, ArrayBuffer churn) — ~1.3 s of
-        // single-threaded driver time at the 600k-distinct bench input.
-        // Extract each field ONCE into flat arrays, bucket rows per group
-        // (counting sort), and sort each group's index slice with a
-        // primitive-reading comparator.
-        val np = probe.length
-        val gids = new Array[Int](np)
-        val vals = new Array[Double](np)
-        val cnts = new Array[Long](np)
-        val gIds = new java.util.HashMap[String, Integer]()
-        val gFirst = scala.collection.mutable.ArrayBuffer.empty[Row]
-        var i = 0
-        while (i < np) {
-          val r = probe(i)
-          var id = gIds.get(r.getString(3))
-          if (id == null) {
-            id = Integer.valueOf(gFirst.length)
-            gIds.put(r.getString(3), id)
-            gFirst += r
-          }
-          gids(i) = id.intValue(); vals(i) = r.getDouble(1); cnts(i) = r.getLong(2)
-          i += 1
+    // Bounded LOCAL fast path (the giniByGroup shape): the driver reads
+    // off the needed order statistics of the tie-aggregated table from
+    // integer tie counts — the identical type-7 arithmetic on the
+    // identical counts, so the result is BIT-IDENTICAL to the distributed
+    // walk. Row layout: groupCol(0), __x(1), __c(2), __g(3).
+    LocalPath.gate("groupedQuantiles", counted, LocalMaxRows).foreach { probe =>
+      val vals = probe.map(_.getDouble(1))
+      val cnts = probe.map(_.getLong(2))
+      val keys = probe.map(_.getString(3))
+      val (starts, idx, first) = groupSlices("groupedQuantiles", spark, keys, byDouble(vals))
+      val rows = first.indices.map { g =>
+        val s = starts(g); val e = starts(g + 1)
+        var n = 0L
+        var j = s
+        while (j < e) { n += cnts(idx(j).intValue()); j += 1 }
+        val needRanks = fractions.flatMap { fq =>
+          val h = (n - 1) * fq
+          Seq(math.floor(h).toLong, math.ceil(h).toLong)
+        }.toSet
+        val ranks = scala.collection.mutable.HashMap.empty[Long, Double]
+        var below = 0L
+        j = s
+        while (j < e) {
+          val k = idx(j).intValue(); val c = cnts(k)
+          needRanks.foreach { rk =>
+            if (rk >= below && rk < below + c) ranks.update(rk, vals(k)) }
+          below += c
+          j += 1
         }
-        val nGroups = gFirst.length
-        // the group-cardinality refusal contract holds on BOTH paths
-        refuseGroupCardinality("groupedQuantiles", nGroups.toLong,
-          groupedStatsMaxGroups(spark))
-        val starts = new Array[Int](nGroups + 1)
-        i = 0; while (i < np) { starts(gids(i) + 1) += 1; i += 1 }
-        var g = 0
-        while (g < nGroups) { starts(g + 1) += starts(g); g += 1 }
-        val pos = java.util.Arrays.copyOf(starts, nGroups)
-        val idx = new Array[Integer](np)
-        i = 0
-        while (i < np) {
-          val p = pos(gids(i)); idx(p) = Integer.valueOf(i); pos(gids(i)) = p + 1
-          i += 1
+        val qs = fractions.map { fq =>
+          val h = (n - 1) * fq
+          val lo = math.floor(h).toLong
+          val vl = ranks(lo); val vh = ranks(math.ceil(h).toLong)
+          if (h == lo) vl else vl + (h - lo) * (vh - vl)
         }
-        val byVal = new java.util.Comparator[Integer] {
-          def compare(a: Integer, b: Integer): Int =
-            java.lang.Double.compare(vals(a.intValue()), vals(b.intValue()))
-        }
-        val rows = (0 until nGroups).map { g =>
-          val s = starts(g); val e = starts(g + 1)
-          java.util.Arrays.sort(idx, s, e, byVal)
-          var n = 0L
-          var j = s
-          while (j < e) { n += cnts(idx(j).intValue()); j += 1 }
-          val needRanks = fractions.flatMap { fq =>
-            val h = (n - 1) * fq
-            Seq(math.floor(h).toLong, math.ceil(h).toLong)
-          }.toSet
-          val ranks = scala.collection.mutable.HashMap.empty[Long, Double]
-          var below = 0L
-          j = s
-          while (j < e) {
-            val k = idx(j).intValue(); val c = cnts(k)
-            needRanks.foreach { rk =>
-              if (rk >= below && rk < below + c) ranks.update(rk, vals(k)) }
-            below += c
-            j += 1
-          }
-          val qs = fractions.map { fq =>
-            val h = (n - 1) * fq
-            val lo = math.floor(h).toLong
-            val vl = ranks(lo); val vh = ranks(math.ceil(h).toLong)
-            if (h == lo) vl else vl + (h - lo) * (vh - vl)
-          }
-          Row(gFirst(g).get(0), n, qs)
-        }
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            rows ++ emptyGroupRows(gIds.containsKey), 1),
-          schema)
+        Row(probe(first(g)).get(0), n, qs)
       }
+      return spark.createDataFrame(
+        spark.sparkContext.parallelize(
+          rows ++ emptyGroupRows(keys.toSet), 1),
+        schema)
     }
     val sorted = counted
       .repartitionByRange(parts, col("__g"), col("__x"))

@@ -649,15 +649,10 @@ object Modify {
       s"fractions must be in [0, 1]: $fractions")
     val spark = df.sparkSession
     val k = cols.length
-    val accuracy = spark.conf.getOption("graft.quantile.accuracy")
-      .map { s =>
-        val v = try s.trim.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"graft.quantile.accuracy must be a positive integer, got '$s'")
-        }
-        require(v > 0, s"graft.quantile.accuracy must be > 0, got $v")
-        v
-      }.getOrElse(10000)
+    val accuracy0 = graft.GraftConf.positiveLong(spark, "graft.quantile.accuracy", 10000L)
+    require(accuracy0 <= Int.MaxValue,
+      s"graft.quantile.accuracy must be <= ${Int.MaxValue}, got $accuracy0")
+    val accuracy = accuracy0.toInt
     val eps = 1.0 / accuracy
 
     // ---- pass 1: n / min / max / padded sketch brackets, one agg job
@@ -943,15 +938,7 @@ object Modify {
       : Map[String, Option[(Double, Double)]] = {
     if (cols.isEmpty) return Map.empty
     val spark = df.sparkSession
-    val budget = spark.conf.getOption("graft.robustScale.maxDistinct")
-      .map { s =>
-        val v = try s.trim.toLong catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"graft.robustScale.maxDistinct must be a positive integer, got '$s'")
-        }
-        require(v > 0, s"graft.robustScale.maxDistinct must be > 0, got $v")
-        v
-      }.getOrElse(2000000L)
+    val budget = graft.GraftConf.positiveLong(spark, "graft.robustScale.maxDistinct", 2000000L)
     def clean(c: String) = {
       val v = col(c).cast("double")
       when(isnan(v), lit(null).cast("double")).otherwise(v)
@@ -1248,15 +1235,7 @@ object Modify {
     // weight by tie counts — l_quantity-style integer columns pay ~50
     // psi evaluations instead of 60M × |λ|. High-cardinality columns
     // keep the zero-shuffle one-scan aggregation.
-    val budget = spark.conf.getOption("graft.powerTransform.maxDistinct")
-      .map { sVal =>
-        val v = try sVal.trim.toLong catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"graft.powerTransform.maxDistinct must be a positive integer, got '$sVal'")
-        }
-        require(v > 0, s"graft.powerTransform.maxDistinct must be > 0, got $v")
-        v
-      }.getOrElse(4000000L)
+    val budget = graft.GraftConf.positiveLong(spark, "graft.powerTransform.maxDistinct", 4000000L)
     val aggs0 = cols.map(c => approx_count_distinct(clean(c), 0.05))
     val r0 = df.agg(aggs0.head, aggs0.tail: _*).head()
     val (lowCols, highCols) = cols.zipWithIndex.partition {

@@ -350,15 +350,7 @@ object Decontaminate {
     require(numHashes > 0, s"numHashes must be positive: $numHashes")
     val spark = df.sparkSession
     import spark.implicits._
-    val maxGroups = spark.conf.getOption("graft.corpusMatrix.maxGroups")
-      .map { s =>
-        val v = try s.trim.toLong catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"graft.corpusMatrix.maxGroups must be a positive integer, got '$s'")
-        }
-        require(v > 0, s"graft.corpusMatrix.maxGroups must be > 0, got $v")
-        v
-      }.getOrElse(256L)
+    val maxGroups = graft.GraftConf.positiveLong(spark, "graft.corpusMatrix.maxGroups", 256L)
     val params = Dedup.hashParams(numHashes, seed)
     val fname = s"minhash_sig_${numHashes}_${shingleK}_$seed"
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.LocalPath
 
 /** Deduplication operators for training-data pipelines (driver mandate).
   *
@@ -20,6 +21,9 @@ import org.apache.spark.sql.functions._
   *  - embedding cosine: see Similarity (LSH-bucketed path there).
   */
 object Dedup {
+
+  /** Edge bound of [[components]]' driver union-find. */
+  private val ComponentsLocalMaxEdges = 1000000L
 
   /** Exact dedup on a normalized-text fingerprint: keep the smallest id per
     * group. Returns the deduplicated frame. */
@@ -324,27 +328,22 @@ object Dedup {
     * KEEPS its input type (a string cast would silently turn min into
     * lexicographic order and disagree with numeric-min keepers). */
   def components(pairs: DataFrame, idCol1: String = "id1",
-                 idCol2: String = "id2", maxIter: Int = 20,
-                 localMaxEdges: Long = 1000000L): DataFrame = {
+                 idCol2: String = "id2", maxIter: Int = 20): DataFrame = {
     val spark = pairs.sparkSession
     val edges = pairs.select(col(idCol1).as("src"), col(idCol2).as("dst"))
       .union(pairs.select(col(idCol2).as("src"), col(idCol1).as("dst")))
       .distinct()
       .localCheckpoint()
     // adaptive small-graph path: a dedup pair graph is usually orders of
-    // magnitude smaller than the corpus; below the (conf-able) edge bound
+    // magnitude smaller than the corpus; below [[ComponentsLocalMaxEdges]]
     // a driver union-find replaces 5+ distributed label-propagation rounds
-    // (each a join + checkpoint job). The distributed path is unchanged and
-    // takes over exactly when the graph could not fit one machine.
-    val localBound = spark.conf.getOption("graft.components.localMaxEdges")
-      .map(_.toLong).getOrElse(localMaxEdges)
+    // (each a join + checkpoint job).
     // local-path eligibility (same gate as Graph.pageRank): the union-find
     // keys a JVM HashMap and orders ids via Comparable — sound for strings
     // and primitive numerics only (binary ids compare by reference /
     // ClassCastException), and NULL ids would group in the Map where the
     // distributed path's SQL joins never match them. Both shapes route to
-    // the distributed path; the (count, null-count) probe is ONE aggregation
-    // over the checkpointed edge list.
+    // the distributed path.
     val idEligible = edges.schema("src").dataType match {
       case org.apache.spark.sql.types.StringType | org.apache.spark.sql.types.IntegerType |
            org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.ShortType |
@@ -352,19 +351,10 @@ object Dedup {
            org.apache.spark.sql.types.DoubleType => true
       case _ => false
     }
-    if (idEligible) {
-      // ONE bounded limit-collect both gates and loads the local path
-      // (was: a count/null-count aggregation job, then a second collect
-      // job inside localComponents — the PageRank r17 probe discipline).
-      // The transfer is bounded by localBound+1 two-column rows, the
-      // length/null checks run on the driver, and on the happy path the
-      // rows ARE the union-find input. Over-bound graphs fall through
-      // having only re-read the already-checkpointed edge blocks.
-      val limitN = (math.min(localBound, Int.MaxValue.toLong - 1) + 1).toInt
-      val probe = edges.limit(limitN).collect()
-      if (probe.length <= localBound &&
-          !probe.exists(r => r.isNullAt(0) || r.isNullAt(1)))
-        return localComponents(spark, edges, Some(probe))
+    if (idEligible) LocalPath.gate("components", edges, ComponentsLocalMaxEdges).foreach { probe =>
+      if (probe.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+        LocalPath.declined("components", "null id")
+      else return localComponents(spark, edges.schema("src").dataType, probe)
     }
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
@@ -407,14 +397,10 @@ object Dedup {
 
   /** Driver union-find over a collected (already direction-doubled) edge
     * list; representative = the component's minimum id under the same
-    * ordering the distributed path's min()/least() aggregation uses.
-    * `preCollected` carries the gate probe's rows when the caller already
-    * paid the collect, so the edge list crosses the wire once. */
-  private def localComponents(spark: org.apache.spark.sql.SparkSession,
-                              edges: DataFrame,
-                              preCollected: Option[Array[org.apache.spark.sql.Row]] = None)
-      : DataFrame = {
-    val idType = edges.schema("src").dataType
+    * ordering the distributed path's min()/least() aggregation uses. */
+  private def localComponents(spark: SparkSession,
+                              idType: org.apache.spark.sql.types.DataType,
+                              edges: Array[org.apache.spark.sql.Row]): DataFrame = {
     val parent = new java.util.HashMap[Any, Any]()
     def find(x: Any): Any = {
       var r = x
@@ -425,7 +411,7 @@ object Dedup {
     }
     def lt(a: Any, b: Any): Boolean =
       a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
-    preCollected.getOrElse(edges.collect()).foreach { r =>
+    edges.foreach { r =>
       val (s, d) = (r.get(0), r.get(1))
       if (!parent.containsKey(s)) parent.put(s, s)
       if (!parent.containsKey(d)) parent.put(d, d)

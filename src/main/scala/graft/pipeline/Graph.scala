@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.GraftConf
+import graft.LocalPath
 
 /** Iterative graph analytics over an edge DataFrame — the Pregel-shaped
   * workloads a corpus pipeline meets once documents/domains/entities are
@@ -20,6 +20,12 @@ import graft.GraftConf
   * across supersteps via persist.
   */
 object Graph {
+
+  /** Edge bound of the driver-local paths of k-core, LPA and PageRank. */
+  private val LocalMaxEdges = 1000000L
+
+  /** Node bound of PageRank's driver-local path. */
+  private val PageRankLocalMaxNodes = 10000
 
   /** Bounded k-core peeling: repeatedly remove nodes whose degree in the
     * surviving (undirected, deduped) graph is below `k`, for at most
@@ -49,19 +55,13 @@ object Graph {
     var e = base.union(base.select(col("b").as("a"), col("a").as("b")))
       .dropDuplicates("a", "b")
       .localCheckpoint()
-    // Bounded LOCAL fast path (r17, the PageRank/components probe
-    // discipline): each distributed peeling round costs a degree
-    // aggregation, two semi-joins, a checkpoint job and a count — pure
-    // job-scheduling floor on the small graphs dedup pipelines produce.
-    // One bounded unsorted limit-collect gates AND loads a driver-side
-    // peel running the identical recurrence; over the conf'd bound the
-    // distributed rounds below are untouched.
-    val kcBound = GraftConf.positiveLong(spark, "graft.kcore.localMaxEdges", 1000000L)
-    locally {
-      val limitN = (math.min(kcBound, Int.MaxValue.toLong - 1) + 1).toInt
-      val probe = e.limit(limitN).collect()
-      if (probe.length <= kcBound)
-        return localKCore(spark, probe, k, maxRounds)
+    // Bounded LOCAL fast path: each distributed peeling round costs a
+    // degree aggregation, two semi-joins, a checkpoint job and a count —
+    // pure job-scheduling floor on the small graphs dedup pipelines
+    // produce. The gate's rows feed a driver-side peel running the
+    // identical recurrence.
+    LocalPath.gate("kCoreBounded", e, LocalMaxEdges).foreach { probe =>
+      return localKCore(spark, probe, k, maxRounds)
     }
     var round = 0
     var stable = false
@@ -182,19 +182,14 @@ object Graph {
     val e = base.union(base.select(col("b").as("a"), col("a").as("b")))
       .dropDuplicates("a", "b")
       .localCheckpoint()
-    // Bounded LOCAL fast path (r17): each synchronous round is a join +
-    // two aggregations + an eager checkpoint — a job-floor tax the small
+    // Bounded LOCAL fast path: each synchronous round is a join + two
+    // aggregations + an eager checkpoint — a job-floor tax the small
     // graphs this op meets rarely earn back (profiled 27 jobs for 3
-    // rounds). One bounded limit-collect gates and loads a driver replay
-    // of the identical deterministic recurrence (most-frequent neighbor
-    // label, ties to the minimum label in the SQL sort's UTF-8 binary
-    // string order). Over the bound the distributed rounds are untouched.
-    val lpaBound = GraftConf.positiveLong(spark, "graft.lpa.localMaxEdges", 1000000L)
-    locally {
-      val limitN = (math.min(lpaBound, Int.MaxValue.toLong - 1) + 1).toInt
-      val probe = e.limit(limitN).collect()
-      if (probe.length <= lpaBound)
-        return localLpa(spark, probe, rounds)
+    // rounds). The gate's rows feed a driver replay of the identical
+    // deterministic recurrence (most-frequent neighbor label, ties to the
+    // minimum label in the SQL sort's UTF-8 binary string order).
+    LocalPath.gate("labelPropagation", e, LocalMaxEdges).foreach { probe =>
+      return localLpa(spark, probe, rounds)
     }
     var labels = e.select(col("a").as("node")).distinct()
       .withColumn("label", col("node"))
@@ -250,23 +245,18 @@ object Graph {
       .withColumn("__w", col(weightCol) / sum(col(weightCol)).over(outW))
       .select(col(srcCol).as("__src"), col(dstCol).as("__dst"), col("__w"))
       .persist()
-    // Bounded LOCAL fast path (same pattern as Dedup's conf'd union-find):
-    // the superstep machinery costs seconds of pure stage scheduling that a
-    // small graph never earns back — a 25-node nation graph spends 2-5s on
-    // ~12 trivial stages. A cheap count gates the path (a sorted-collect
-    // probe would build per-task 1M-row heaps on a billion-edge graph just
-    // to decide); below the conf'd bounds the identical recurrence runs on
-    // the driver, with the node set derived locally (every node appears in
-    // some edge by construction). The distributed path is unchanged above.
+    // Bounded LOCAL fast path: the superstep machinery costs seconds of
+    // pure stage scheduling that a small graph never earns back — a
+    // 25-node nation graph spends 2-5s on ~12 trivial stages. The gate's
+    // unsorted limit keeps tasks heap-free (a sorted probe would build
+    // per-task heaps on a billion-edge graph just to decide), and in the
+    // over-bound fallthrough its partial work warmed the `norm` cache the
+    // distributed path reuses.
     val spark = edges.sparkSession
-    val maxLocalNodes = spark.conf.get("graft.pagerank.localMaxNodes", "10000").toLong
-    val maxLocalEdges = spark.conf.get("graft.pagerank.localMaxEdges", "1000000").toLong
     val nodeType = nodes.schema.head.dataType
     // local-path eligibility: JVM Map/Set equality must agree with SQL
     // equality for the node ids — true for strings and primitive numerics,
-    // NOT for e.g. binary ids (Array[Byte] compares by reference). The
-    // node COUNT gates first (it is needed by the distributed path anyway)
-    // so an over-bound graph never pays a throwaway 1M-row driver collect.
+    // NOT for e.g. binary ids (Array[Byte] compares by reference).
     val localEligible = nodeType match {
       case org.apache.spark.sql.types.StringType | org.apache.spark.sql.types.IntegerType |
            org.apache.spark.sql.types.LongType | org.apache.spark.sql.types.ShortType |
@@ -274,79 +264,18 @@ object Graph {
            org.apache.spark.sql.types.DoubleType => true
       case _ => false
     }
-    // ONE bounded UNSORTED limit-collect both GATES and LOADS the local
-    // path (r17 §1: the old gate chained three eager job trees —
-    // nodes.count, norm.count, then a sorted collect — each a full
-    // scheduling round trip; the job-count floor, not the data, dominated
-    // the op on small graphs). An unsorted limit keeps tasks heap-free
-    // (the reason a sorted probe was rejected above), the driver transfer
-    // is bounded by maxLocalEdges+1 narrow rows, and on the happy path
-    // the rows ARE the local input, so nothing is thrown away. In the
-    // over-bound fallthrough the probe's partial work warmed the `norm`
-    // cache the distributed path reuses.
-    if (localEligible) {
-      // endpoints CAST to the coerced node type so mixed-width src/dst
-      // columns (int vs bigint) key one node, like the SQL path. A NULL
-      // weight normalizes to NULL __w; the distributed superstep's sum()
-      // skips it — locally that is a 0.0 contribution, with the edge KEPT
-      // so its endpoints still define nodes/out-degree
-      val limitN = (math.min(maxLocalEdges, Int.MaxValue.toLong - 1) + 1).toInt
-      val probe = norm
-        .select(col("__src").cast(nodeType), col("__dst").cast(nodeType), col("__w"))
-        .limit(limitN).collect()
-      // NULL endpoints: the SQL supersteps never join them (NULL matches
-      // nothing) while the JVM Map would key and propagate their mass —
-      // same input, path-dependent result. Any null src/dst falls through
-      // to the distributed path instead (probe rows are already bounded,
-      // so the scan is cheap).
-      if (probe.length <= maxLocalEdges &&
-          !probe.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-      val es0 = probe.map(r =>
-        (r.get(0), r.get(1), if (r.isNullAt(2)) 0.0 else r.getDouble(2)))
-      // deterministic accumulation order: edges sorted by (dst, src) ON
-      // THE DRIVER, with strings compared as UTF-8 bytes (UTF8String) —
-      // exactly the binary order the old SQL orderBy produced — and a
-      // STABLE sort, so duplicate (src, dst) edges accumulate in a fixed
-      // order where the SQL sort left ties partition-dependent
-      val ord: Ordering[Any] = (a: Any, b: Any) => (a, b) match {
-        case (x: String, y: String) =>
-          org.apache.spark.unsafe.types.UTF8String.fromString(x)
-            .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y))
-        case (x: java.lang.Number, y: java.lang.Number) =>
-          java.lang.Double.compare(x.doubleValue, y.doubleValue)
-        case (x, y) => String.valueOf(x).compareTo(String.valueOf(y))
-      }
-      val es = es0.sortBy(e => (e._2, e._1))(Ordering.Tuple2(ord, ord))
-      val vs: Array[Any] =
-        (es.iterator.map(_._1) ++ es.iterator.map(_._2)).toArray.distinct.sorted(ord)
-      if (vs.length <= maxLocalNodes) {
-        val n = vs.length
-        val idx: Map[Any, Int] = vs.zipWithIndex.toMap
-        val hasOut: Set[Any] = es.iterator.map(_._1).toSet
-        val baseV = (1.0 - damping) / n
-        var rank = Array.fill(n)(1.0 / n)
-        for (_ <- 1 to iterations) {
-          val in = new Array[Double](n)
-          es.foreach { case (s0, d0, w0) => in(idx(d0)) += w0 * rank(idx(s0)) }
-          val dm =
-            if (danglingMass)
-              vs.iterator.filterNot(hasOut).map(v => rank(idx(v))).sum / n
-            else 0.0
-          rank = Array.tabulate(n)(i => baseV + damping * (in(i) + dm))
+    // endpoints CAST to the coerced node type so mixed-width src/dst
+    // columns (int vs bigint) key one node, like the SQL path
+    if (localEligible) LocalPath.gate("pageRank", norm
+        .select(col("__src").cast(nodeType), col("__dst").cast(nodeType), col("__w")),
+        LocalMaxEdges).foreach { probe =>
+      localPageRank(spark, probe, nodes.schema.head, iterations, damping, danglingMass)
+        .foreach { out =>
+          norm.unpersist(blocking = false)
+          nodes.unpersist(blocking = false)
+          e0.unpersist(blocking = false)
+          return out
         }
-        val outSchema = org.apache.spark.sql.types.StructType(Seq(
-          nodes.schema.head.copy(name = "node"),
-          org.apache.spark.sql.types.StructField("rank",
-            org.apache.spark.sql.types.DoubleType, nullable = false)))
-        val rows = vs.zip(rank).map { case (v, r) =>
-          org.apache.spark.sql.Row(v, r) }.toSeq
-        norm.unpersist(blocking = false)
-        nodes.unpersist(blocking = false)
-        e0.unpersist(blocking = false)
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1), outSchema)
-      }
-      }
     }
     val n = nodes.count() // one scalar; materializes e0 + nodes
     val base = lit((1.0 - damping) / n)
@@ -390,5 +319,67 @@ object Graph {
     nodes.unpersist(blocking = false)
     e0.unpersist(blocking = false)
     out
+  }
+
+  /** Driver-side PageRank over the collected normalized edge list
+    * (src, dst, __w) — the identical recurrence the supersteps run, with
+    * the node set derived locally (every node appears in some edge by
+    * construction). None, so the distributed path runs instead, for a
+    * NULL endpoint (the SQL supersteps never join it while the JVM Map
+    * would key it and propagate its mass) or more than
+    * [[PageRankLocalMaxNodes]] nodes. A NULL weight normalizes to NULL
+    * __w; the distributed superstep's sum() skips it — locally that is a
+    * 0.0 contribution, with the edge KEPT so its endpoints still define
+    * nodes and out-degree. */
+  private def localPageRank(spark: SparkSession, probe: Array[Row],
+                            nodeField: org.apache.spark.sql.types.StructField,
+                            iterations: Int, damping: Double,
+                            danglingMass: Boolean): Option[DataFrame] = {
+    if (probe.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
+      LocalPath.declined("pageRank", "null endpoint")
+      return None
+    }
+    val es0 = probe.map(r =>
+      (r.get(0), r.get(1), if (r.isNullAt(2)) 0.0 else r.getDouble(2)))
+    // deterministic accumulation order: edges sorted by (dst, src) ON
+    // THE DRIVER, with strings compared as UTF-8 bytes (UTF8String) —
+    // exactly the binary order the old SQL orderBy produced — and a
+    // STABLE sort, so duplicate (src, dst) edges accumulate in a fixed
+    // order where the SQL sort left ties partition-dependent
+    val ord: Ordering[Any] = (a: Any, b: Any) => (a, b) match {
+      case (x: String, y: String) =>
+        org.apache.spark.unsafe.types.UTF8String.fromString(x)
+          .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(y))
+      case (x: java.lang.Number, y: java.lang.Number) =>
+        java.lang.Double.compare(x.doubleValue, y.doubleValue)
+      case (x, y) => String.valueOf(x).compareTo(String.valueOf(y))
+    }
+    val es = es0.sortBy(e => (e._2, e._1))(Ordering.Tuple2(ord, ord))
+    val vs: Array[Any] =
+      (es.iterator.map(_._1) ++ es.iterator.map(_._2)).toArray.distinct.sorted(ord)
+    if (vs.length > PageRankLocalMaxNodes) {
+      LocalPath.declined("pageRank", s"${vs.length} nodes over $PageRankLocalMaxNodes")
+      return None
+    }
+    val n = vs.length
+    val idx: Map[Any, Int] = vs.zipWithIndex.toMap
+    val hasOut: Set[Any] = es.iterator.map(_._1).toSet
+    val baseV = (1.0 - damping) / n
+    var rank = Array.fill(n)(1.0 / n)
+    for (_ <- 1 to iterations) {
+      val in = new Array[Double](n)
+      es.foreach { case (s0, d0, w0) => in(idx(d0)) += w0 * rank(idx(s0)) }
+      val dm =
+        if (danglingMass)
+          vs.iterator.filterNot(hasOut).map(v => rank(idx(v))).sum / n
+        else 0.0
+      rank = Array.tabulate(n)(i => baseV + damping * (in(i) + dm))
+    }
+    val outSchema = org.apache.spark.sql.types.StructType(Seq(
+      nodeField.copy(name = "node"),
+      org.apache.spark.sql.types.StructField("rank",
+        org.apache.spark.sql.types.DoubleType, nullable = false)))
+    val rows = vs.zip(rank).map { case (v, r) => Row(v, r) }.toSeq
+    Some(spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), outSchema))
   }
 }

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.LocalPath
 
 /** Text-analysis operators for large-scale training-data pipelines
   * (driver mandate — beyond the reference surface; SURVEY.md §7.2 step 9).
@@ -12,6 +13,9 @@ import org.apache.spark.sql.functions._
   * (per-row, no shuffle).
   */
 object Text {
+
+  /** Distinct-word bound of [[bpeTrain]]'s driver-local training. */
+  private val BpeLocalMaxVocab = 2000000L
 
   /** Normalize for fingerprinting: lowercase, collapse whitespace, trim.
     * The whitespace class is written out explicitly (= Java's `\s`)
@@ -1067,15 +1071,6 @@ object Text {
     require(minCount >= 1L, s"minCount must be >= 1: $minCount")
     val spark = docs.sparkSession
     import spark.implicits._
-    val maxLocal = spark.conf.getOption("graft.bpe.maxLocalVocab")
-      .map { s =>
-        val v = try s.trim.toLong catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"graft.bpe.maxLocalVocab must be a non-negative integer, got '$s'")
-        }
-        require(v >= 0, s"graft.bpe.maxLocalVocab must be >= 0, got $v")
-        v
-      }.getOrElse(2000000L)
     // ONE corpus scan: the distinct-word count table (map-side combined).
     // Everything after runs on vocabulary-sized data.
     val wordCounts = docs
@@ -1084,21 +1079,15 @@ object Text {
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= minCount)
       .localCheckpoint()
-    // ONE bounded limit-collect over the checkpoint both gates and loads
-    // (r18 — the r17 probe discipline; was a count() job THEN a collect()
-    // job over the same materialized blocks)
-    val bpeLimitN = (math.min(maxLocal, Int.MaxValue.toLong - 1) + 1).toInt
-    val bpeProbe = wordCounts.limit(bpeLimitN).collect()
+    // In-budget vocabulary: train EXACT greedy BPE locally with
+    // incremental pair-count maintenance — the shape every production
+    // tokenizer trainer uses (the corpus stays distributed; the vocabulary
+    // is the driver artifact). Bounded jobs TOTAL regardless of numMerges,
+    // vs one job per merge on the distributed path.
     val merges: Seq[(Int, String, String, Long)] =
-      if (bpeProbe.length <= maxLocal) {
-        // In-budget vocabulary: train EXACT greedy BPE locally with
-        // incremental pair-count maintenance — the shape every production
-        // tokenizer trainer uses (the corpus stays distributed; the
-        // vocabulary is the driver artifact). Bounded jobs TOTAL
-        // regardless of numMerges, vs one job per merge below.
-        localBpeTrain(bpeProbe
-          .map(r => (r.getString(0), r.getLong(1))), numMerges)
-      } else distributedBpeTrain(wordCounts, numMerges)
+      LocalPath.gate("bpeTrain", wordCounts, BpeLocalMaxVocab)
+        .map(rows => localBpeTrain(rows.map(r => (r.getString(0), r.getLong(1))), numMerges))
+        .getOrElse(distributedBpeTrain(wordCounts, numMerges))
     merges.toDF("step", "lhs", "rhs", "pair_count")
       .select(col("step"), col("lhs"), col("rhs"),
         concat(col("lhs"), col("rhs")).as("merged"), col("pair_count"))
@@ -1108,7 +1097,7 @@ object Text {
     * still exact greedy, but one pair-count job per merge. The production
     * lever at this scale is `minCount` (HF tokenizers' min_frequency): a
     * 100 TB web corpus's vocabulary is noise-heavy-tailed, and a frequency
-    * floor collapses it back under `graft.bpe.maxLocalVocab`. NOTE a
+    * floor collapses it back under [[BpeLocalMaxVocab]]. NOTE a
     * "top-N symbol-disjoint pairs per round" batch was considered and
     * rejected as UNSOUND for exact greedy: merging (a,b)->ab creates new
     * pairs (z,ab) whose count can exceed a later symbol-disjoint batch
@@ -1459,19 +1448,14 @@ object Text {
     import spark.implicits._
     val maxLocal = graft.GraftConf.positiveLong(spark,
       "graft.unigram.maxLocalVocab", 2000000L)
-    // ONE materialization of the word-count scan (r18): the previous
-    // shape ran the un-checkpointed scan+aggregation TWICE — once for the
-    // budget count() and again for the collect(). Checkpoint it, then a
-    // bounded limit-collect over the materialized blocks both gates and
-    // loads (the r17 probe discipline); the over-budget branch pays only
-    // cheap passes over the checkpoint.
+    // ONE materialization of the word-count scan, which the bounded
+    // collect reads; the over-budget branch pays only cheap passes over
+    // the checkpoint.
     val wc0 = trainWordCounts(docs, textCol, maxWordLen, minCount)
       .localCheckpoint()
-    val limitN = (math.min(maxLocal, Int.MaxValue.toLong - 1) + 1).toInt
-    val probe = wc0.limit(limitN).collect()
-    val words =
-      if (probe.length <= maxLocal) probe.map(r => (r.getString(0), r.getLong(1)))
-      else {
+    val words = LocalPath.collectAtMost(wc0, maxLocal)
+      .map(_.map(r => (r.getString(0), r.getLong(1))))
+      .getOrElse {
         val n = wc0.count()
         val mode = spark.conf.getOption("graft.unigram.overBudget")
           .map(_.trim).getOrElse("sample")

@@ -129,9 +129,9 @@ object BenchSf10 {
           s.read.parquet(s"$dir/documents.parquet"), "text", capacity = 200)),
       "ann_hard_negatives_ivf" -> graft.SparkEntry.queries("ann_hard_negatives_ivf"),
       "graph_pagerank_distributed" -> ((s: SparkSession, dir: String) => {
-        s.conf.set("graft.pagerank.localMaxNodes", "0")
+        s.conf.set(graft.LocalPath.ModeKey, "distributed")
         try graft.SparkEntry.queries("graph_pagerank")(s, dir)
-        finally s.conf.unset("graft.pagerank.localMaxNodes")
+        finally s.conf.unset(graft.LocalPath.ModeKey)
       }),
       "dedup_minhash_lsh_full" -> ((s: SparkSession, dir: String) =>
         graft.pipeline.Dedup.minhashCandidates(s,

@@ -666,17 +666,22 @@ class ModifyDescribeSpec extends SparkSpec {
     }
   }
 
-  test("robustScale: malformed graft.robustScale.maxDistinct rejected with a clear error") {
+  test("positive-integer knobs: malformed values rejected naming the key") {
     import spark.implicits._
-    val df = Seq((1L, 2.0), (2L, 3.0)).toDF("id", "x")
-    Seq("zero point five", "", "-3", "0").foreach { bad =>
-      spark.conf.set("graft.robustScale.maxDistinct", bad)
+    val df = Seq((1L, 2.0, "s1", "a b c d e f"), (2L, 3.0, "s2", "a b c d e g"))
+      .toDF("id", "x", "source", "text")
+    val knobs: Seq[(String, () => Any)] = Seq(
+      "graft.robustScale.maxDistinct" -> (() => Modify.robustScaleParams(df, Seq("x"))),
+      "graft.powerTransform.maxDistinct" -> (() => Modify.yeoJohnsonGrid(df, Seq("x")).collect()),
+      "graft.groupedStats.maxGroups" -> (() => Describe.giniByGroup(df, "x", "source").collect()),
+      "graft.corpusMatrix.maxGroups" ->
+        (() => graft.pipeline.Decontaminate.corpusMinhashMatrix(df, "text", "source")))
+    for ((key, run) <- knobs; bad <- Seq("zero point five", "", "-3", "0")) {
+      spark.conf.set(key, bad)
       try {
-        val e = intercept[IllegalArgumentException] {
-          Modify.robustScaleParams(df, Seq("x"))
-        }
-        assert(e.getMessage.contains("graft.robustScale.maxDistinct"), s"msg: ${e.getMessage}")
-      } finally spark.conf.unset("graft.robustScale.maxDistinct")
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains(key), s"msg: ${e.getMessage}")
+      } finally spark.conf.unset(key)
     }
   }
 
@@ -1281,7 +1286,7 @@ class ModifyDescribeSpec extends SparkSpec {
   test("tie-table stats: distributed path (forced via conf) equals the local fast path") {
     import spark.implicits._
     // ties, NaN-free, both classes/groups present — covers gini, ks, mwu,
-    // scoreEval (the r17 bounded local paths); forcing localMaxRows=1
+    // scoreEval (the bounded local paths); graft.local.mode=distributed
     // routes every op down the distributed sweep, which must agree
     val df = (1 to 400).map { i =>
       (if (i % 3 == 0) "A" else "B", (i % 25).toDouble, i % 2 == 0)
@@ -1292,8 +1297,7 @@ class ModifyDescribeSpec extends SparkSpec {
       Describe.mannWhitney(df, "x", col("pos")).collect().toSeq,
       Describe.scoreEval(df, "x", col("pos")).collect().toSeq)
     val local = all()
-    spark.conf.set("graft.groupedStats.localMaxRows", "1")
-    val dist = try all() finally spark.conf.unset("graft.groupedStats.localMaxRows")
+    val dist = distributed(all())
     local.zip(dist).zipWithIndex.foreach { case ((l, d), i) =>
       assert(l.size === d.size, s"op $i row count")
       l.zip(d).foreach { case (lr, dr) =>
@@ -1338,8 +1342,7 @@ class ModifyDescribeSpec extends SparkSpec {
         .map(r => (Option(r.get(0)), r.getLong(1),
           Option(r.getSeq[Double](2)).map(_.toList))).toSet)
     val local = run()
-    spark.conf.set("graft.groupedStats.localMaxRows", "1")
-    val dist = try run() finally spark.conf.unset("graft.groupedStats.localMaxRows")
+    val dist = distributed(run())
     assert(local._1 === dist._1)
     assert(local._2 === dist._2)
     // hand-checked crossings: a crosses 1.5 at v=3; b (tw=0.5) crosses

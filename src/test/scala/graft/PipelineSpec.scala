@@ -195,8 +195,8 @@ class PipelineSpec extends SparkSpec {
       .filter { case (a, b) => a != b }.toDF("id1", "id2")
     val local = graft.pipeline.Dedup.components(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = graft.pipeline.Dedup.components(pairs, localMaxEdges = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dist = distributed(graft.pipeline.Dedup.components(pairs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     assert(local === dist)
   }
 
@@ -2465,10 +2465,7 @@ class PipelineSpec extends SparkSpec {
       def table(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(4))).sortBy(_._1).toSeq
       val local = table(graft.pipeline.Text.bpeTrain(docs, "text", 6))
-      spark.conf.set("graft.bpe.maxLocalVocab", "0") // budget 0: nothing local
-      val dist =
-        try table(graft.pipeline.Text.bpeTrain(docs, "text", 6))
-        finally spark.conf.unset("graft.bpe.maxLocalVocab")
+      val dist = distributed(table(graft.pipeline.Text.bpeTrain(docs, "text", 6)))
       assert(local === dist, s"trial $trial: local vs distributed tables differ")
     }
   }
@@ -2500,17 +2497,25 @@ class PipelineSpec extends SparkSpec {
       s"bpeTrain(256) ran ${jobs.get()} Spark jobs — one-job-per-merge regression?")
   }
 
-  test("bpeTrain: malformed graft.bpe.maxLocalVocab and bad minCount rejected") {
+  test("graft.local.mode=bogus rejected in every module; bad bpeTrain minCount too") {
     import spark.implicits._
     val docs = Seq("ab ab").toDF("text")
-    Seq("abc", "-1", "1.5").foreach { bad =>
-      spark.conf.set("graft.bpe.maxLocalVocab", bad)
+    val edges = Seq(("a", "b"), ("b", "c")).toDF("id1", "id2")
+    val sample = Seq((1.0, true), (2.0, false)).toDF("x", "a")
+    val pvalues = Seq(("v1", 0.01), ("v2", 0.5)).toDF("Variable", "pvalue")
+    val gated: Seq[(String, () => Any)] = Seq(
+      "Describe" -> (() => graft.describe.Describe.ksTwoSample(sample, "x", col("a"))),
+      "Corrections" -> (() => graft.analyze.Corrections.addCorrectedPvalues(pvalues)),
+      "Graph" -> (() => graft.pipeline.Graph.labelPropagation(edges, "id1", "id2")),
+      "Dedup" -> (() => Dedup.components(edges)),
+      "Text" -> (() => Text.bpeTrain(docs, "text", 2)))
+    for ((module, run) <- gated; bad <- Seq("bogus", "local", "")) {
+      spark.conf.set(LocalPath.ModeKey, bad)
       try {
-        val e = intercept[IllegalArgumentException] {
-          graft.pipeline.Text.bpeTrain(docs, "text", 2)
-        }
-        assert(e.getMessage.contains("graft.bpe.maxLocalVocab"), s"msg: ${e.getMessage}")
-      } finally spark.conf.unset("graft.bpe.maxLocalVocab")
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains("graft.local.mode") && e.getMessage.contains("distributed"),
+          s"$module, '$bad': ${e.getMessage}")
+      } finally spark.conf.unset(LocalPath.ModeKey)
     }
     intercept[IllegalArgumentException] {
       graft.pipeline.Text.bpeTrain(docs, "text", 2, minCount = 0L)

@@ -24,26 +24,18 @@ class PropertySpec extends SparkSpec {
     out.toSeq
   }
 
-  /** Runs `body` with BH-FDR forced onto its distributed path
-    * (`graft.corrections.localMaxRows=1`: every input of 2+ rows is over
-    * the bound) or on its default, driver-local one. */
-  private def bhMode[T](distributed: Boolean)(body: => T): T = {
-    val key = "graft.corrections.localMaxRows"
-    if (distributed) spark.conf.set(key, "1")
-    try body finally spark.conf.unset(key)
-  }
-
   private def bothModes(df: org.apache.spark.sql.DataFrame, order: Seq[String],
                         groupby: Seq[String] = Nil): Seq[org.apache.spark.sql.Row] = {
     val Seq(local, dist) = Seq(false, true).map { d =>
-      bhMode(d) {
+      def run() = {
         val out = Corrections.addCorrectedPvalues(df, groupby = groupby)
         // the local path returns a driver-local relation, the sweep does not
         val isLocal = out.queryExecution.analyzed
           .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-        if (groupby.isEmpty && df.count() > 1) assert(isLocal === !d, s"distributed=$d")
+        if (groupby.isEmpty) assert(isLocal === !d, s"distributed=$d")
         out.orderBy(order.map(col): _*).collect().toSeq
       }
+      if (d) distributed(run()) else run()
     }
     assert(local === dist, s"local and distributed BH-FDR differ on ${df.collect().toSeq}")
     local

@@ -372,8 +372,7 @@ class ScaleOpsSpec extends SparkSpec {
       graft.pipeline.Graph.labelPropagation(edges, "src", "dst", rounds = 3)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val local = run()
-    spark.conf.set("graft.lpa.localMaxEdges", "1")
-    val dist = try run() finally spark.conf.unset("graft.lpa.localMaxEdges")
+    val dist = distributed(run())
     assert(local === dist)
     assert(local.keySet === Set("a", "b", "c", "d", "e", "x", "y"))
   }
@@ -387,8 +386,7 @@ class ScaleOpsSpec extends SparkSpec {
       graft.pipeline.Graph.kCoreBounded(edges, "src", "dst", k = 2)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val local = run()
-    spark.conf.set("graft.kcore.localMaxEdges", "1")
-    val dist = try run() finally spark.conf.unset("graft.kcore.localMaxEdges")
+    val dist = distributed(run())
     assert(local === dist)
     assert(local === Map("a" -> 2L, "b" -> 2L, "c" -> 2L))
   }
@@ -402,22 +400,19 @@ class ScaleOpsSpec extends SparkSpec {
           iterations = 3, danglingMass = dangling)
         .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     val localPlain = run(false); val localDangling = run(true)
-    spark.conf.set("graft.pagerank.localMaxNodes", "0")
-    try {
-      val distPlain = run(false); val distDangling = run(true)
-      Seq((localPlain, distPlain), (localDangling, distDangling)).foreach {
-        case (l, d) =>
-          assert(l.keySet === d.keySet)
-          l.foreach { case (k, v) => assert(math.abs(d(k) - v) < 1e-12, k) }
-      }
-    } finally spark.conf.unset("graft.pagerank.localMaxNodes")
+    val (distPlain, distDangling) = distributed((run(false), run(true)))
+    Seq((localPlain, distPlain), (localDangling, distDangling)).foreach {
+      case (l, d) =>
+        assert(l.keySet === d.keySet)
+        l.foreach { case (k, v) => assert(math.abs(d(k) - v) < 1e-12, k) }
+    }
   }
 
   test("pageRank: NULL endpoints fall through to the distributed path (paths agree)") {
     import spark.implicits._
     // a null src/dst edge: SQL joins never match it, while the local Map
-    // would key it and propagate its mass — the local gate must decline so
-    // BOTH conf settings produce the identical (SQL-semantics) result
+    // would key it and propagate its mass — the local path must decline so
+    // BOTH modes produce the identical (SQL-semantics) result
     val edges = Seq((Option("a"), Option("b"), 1.0), (Option("b"), Option("a"), 2.0),
       (Option.empty[String], Option("c"), 1.0)).toDF("src", "dst", "w")
     def run(): Map[Option[String], Double] =
@@ -425,8 +420,7 @@ class ScaleOpsSpec extends SparkSpec {
         .collect().map(r => (if (r.isNullAt(0)) None else Some(r.getString(0)))
           -> r.getDouble(1)).toMap
     val default = run()
-    spark.conf.set("graft.pagerank.localMaxNodes", "0")
-    val forced = try run() finally spark.conf.unset("graft.pagerank.localMaxNodes")
+    val forced = distributed(run())
     assert(default.keySet === forced.keySet)
     default.foreach { case (k, v) => assert(math.abs(forced(k) - v) < 1e-12, s"$k") }
     // and the null-src edge contributed no mass to c anywhere

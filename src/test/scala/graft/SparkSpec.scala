@@ -10,6 +10,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def refPath(p: String): String = s"/root/reference/tests/$p"
 
+  /** Runs `body` with every dual-path operator forced onto its distributed
+    * path (`graft.local.mode=distributed`). */
+  def distributed[T](body: => T): T = {
+    spark.conf.set(LocalPath.ModeKey, "distributed")
+    try body finally spark.conf.unset(LocalPath.ModeKey)
+  }
+
   /** rtol comparison mirroring the reference's assert_frame_equal contract
     * (atol=0, rtol=1e-4 — reference: tests/analyze/test_association_study.py:1-11). */
   def assertRtol(actual: Double, expected: Double, rtol: Double = 1e-4,
