@@ -1,30 +1,32 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line. Each query is forced with a count() action after
-  * its own transformations (results are small aggregates; the work is the
-  * scan/shuffle/fit, not the collect). */
+/** Benchmark main: runs every declared query (or the named ones:
+  * `runMain graft.Bench q1 q2 ...`) on SPARK_GRAFT_SF_DIR and prints ONE
+  * JSON line. Each query is forced through a noop sink after its own
+  * transformations (results are small aggregates; the work is the
+  * scan/shuffle/fit, not the collect).
+  *
+  * GRAFT_AB="k=v[;k=v...]" times a second session conf in the same JVM:
+  * each pass runs twice, baseline conf then with the overrides, so both
+  * medians share one JIT/page-cache state and per-invocation machine noise
+  * cancels. E.g. GRAFT_AB="graft.local.mode=distributed" times every
+  * dual-path operator's distributed path beside its local one. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.caseSensitive", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      // 103 queries x several codegen stages each far exceeds the default
-      // 100-entry generated-class cache: pass 2 of a multi-stage query was
-      // recompiling every stage pass 1 had just compiled (cramers_v
-      // measured 5.3s in the shared bench JVM vs 1.4s isolated, all of it
-      // Janino). A long-lived service JVM sizes this to its query library.
-      .config("spark.sql.codegen.cache.maxEntries", "8000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // optional subset: isolated steady-state timing of named lines — the
+    // driver's no-arg invocation is unchanged and still boards every
+    // declared query
+    val selected = SparkEntry.select(args.toSeq).sortBy(_._1)
+    val abConf: Seq[(String, String)] = sys.env.get("GRAFT_AB").toSeq
+      .flatMap(_.split(";").filter(_.nonEmpty).map(_.split("=", 2) match {
+        case Array(k, v) => (k.trim, v.trim)
+        case _ => throw new IllegalArgumentException(
+          s"GRAFT_AB entries must be k=v, got '${sys.env("GRAFT_AB")}'")
+      }))
+    val spark = GraftSession.create(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Belt-and-braces vs stdout-tail pollution (the driver parses the final
     // stdout line as JSON from a ~2000-char tail): WindowExec's "No
@@ -69,7 +71,7 @@ object Bench {
       val tiny = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
       if (tiny.isDirectory) {
         val tinyDir = tiny.getAbsolutePath
-        SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
+        selected.foreach { case (_, fn) =>
           try fn(spark, tinyDir).write.format("noop").mode("overwrite").save()
           catch { case _: Throwable => () }
         }
@@ -86,46 +88,57 @@ object Bench {
     // deltas can be judged against measured run-to-run variance instead of
     // guessed at.
     val passes = 3
-    // optional subset (`runMain graft.Bench q1 q2 ...`): isolated
-    // steady-state timing of named lines — the driver's no-arg
-    // invocation is unchanged and still boards every declared query
-    val selected =
-      if (args.isEmpty) SparkEntry.queries.toSeq
-      else {
-        val unknown = args.filterNot(SparkEntry.queries.keySet)
-        require(unknown.isEmpty,
-          s"unknown query name(s): ${unknown.mkString(", ")} — a typo here " +
-            "would otherwise benchmark nothing and exit 0")
-        SparkEntry.queries.toSeq.filter { case (n, _) => args.contains(n) }
+    // one timed pass; `alt` applies the GRAFT_AB overrides around it and
+    // restores the previous values after the clock stops
+    def timedPass(name: String, fn: (SparkSession, String) => DataFrame,
+                  alt: Boolean): Double = {
+      val saved = if (!alt) Nil else abConf.map { case (k, v) =>
+        val old = spark.conf.getOption(k); spark.conf.set(k, v); k -> old }
+      val t0 = System.nanoTime()
+      // noop sink: forces FULL computation of every output column —
+      // count() would let Catalyst prune the measured aggregates away
+      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name${if (alt) " (alt)" else ""} failed: ${e.getMessage}")
       }
-    val results = selected.sortBy(_._1).map { case (name, fn) =>
+      val secs = (System.nanoTime() - t0) / 1e9
+      saved.foreach { case (k, old) => old.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+      secs
+    }
+    def median(ts: Seq[Double]): Double = ts.sorted.apply(passes / 2)
+    def stddev(ts: Seq[Double]): Double = {
+      val mean = ts.sum / passes
+      math.sqrt(ts.map(t => (t - mean) * (t - mean)).sum / (passes - 1))
+    }
+    val runs = selected.map { case (name, fn) =>
       // collect the PREVIOUS query's garbage before timing this one: a
       // stop-the-world pause from another query's allocations otherwise
       // lands on whichever line is running when the heap fills (observed
       // as a one-off 19.7s describe_summarize_approx that measures 1.8s
       // in an isolated JVM)
       System.gc()
-      val times = (1 to passes).map { _ =>
-        val t0 = System.nanoTime()
-        // noop sink: forces FULL computation of every output column —
-        // count() would let Catalyst prune the measured aggregates away
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        (System.nanoTime() - t0) / 1e9
+      val ab = (1 to passes).map { _ =>
+        (timedPass(name, fn, alt = false),
+          if (abConf.isEmpty) Double.NaN else timedPass(name, fn, alt = true))
       }
-      val med = times.sorted.apply(passes / 2)
-      val mean = times.sum / passes
-      val sd = math.sqrt(times.map(t => (t - mean) * (t - mean)).sum / (passes - 1))
-      (name, med, sd)
+      val (times, alt) = ab.unzip
+      if (abConf.nonEmpty)
+        System.err.println(f"[bench] $name%-28s med ${median(times)}%6.3f s | alt ${median(alt)}%6.3f s  (${median(alt) / median(times) * 100}%.0f%%)   passes ${times.map(t => f"$t%.3f").mkString(" ")} | ${alt.map(t => f"$t%.3f").mkString(" ")}")
+      (name, times, alt)
     }
-    val qs = results.map { case (k, v, _) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val sds = results.map { case (k, _, s) => "\"" + k + "\":" + f"$s%.3f" }
-      .mkString("{", ",", "}")
+    def num(t: Double): String = f"$t%.3f"
+    def list(ts: Seq[Double]): String = ts.map(num).mkString("[", ",", "]")
+    def obj(kvs: Seq[(String, String)]): String =
+      kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val results = runs.map { case (name, times, _) => (name, median(times), stddev(times)) }
+    val qs = obj(results.map(r => r._1 -> num(r._2)))
+    val sds = obj(results.map(r => r._1 -> num(r._3)))
     val total = results.map(_._2).sum
-    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"estimator":"median","queries":$qs,"stddev":$sds,"sf":"$sfDir"}"""
+    val ab = if (abConf.isEmpty) "" else {
+      val conf = abConf.map { case (k, v) => s"$k=$v" }.mkString(";")
+      s""","ab":{"conf":"$conf","queries":${obj(runs.map(r => r._1 -> num(median(r._3))))},"pass_times":${obj(runs.map(r => r._1 -> list(r._3)))}}"""
+    }
+    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","passes":$passes,"estimator":"median","queries":$qs,"stddev":$sds,"sf":"$sfDir","pass_times":${obj(runs.map(r => r._1 -> list(r._2)))}$ab}"""
     // The complete per-line medians + stddev (~10 KB for 178 queries) go to a
     // file: the round driver captures only the last ~2000 chars of stdout, so
     // a single all-lines JSON line arrives with its head chopped off and
@@ -141,8 +154,8 @@ object Bench {
     // plus a pointer to the full file. Kept well under the 2000-char capture
     // even with sbt's "[success] Total time" trailer printed after it.
     val topN = results.sortBy(-_._2).take(12)
-    val topQs = topN.map { case (k, v, _) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
-    val topSds = topN.map { case (k, _, s) => "\"" + k + "\":" + f"$s%.3f" }.mkString("{", ",", "}")
+    val topQs = obj(topN.map(r => r._1 -> num(r._2)))
+    val topSds = obj(topN.map(r => r._1 -> num(r._3)))
     println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","passes":$passes,"estimator":"median","n_queries":${results.size},"queries":$topQs,"stddev":$topSds,"queries_are":"slowest12_of_${results.size}","full":"$outPath","sf":"$sfDir"}""")
     spark.stop()
   }

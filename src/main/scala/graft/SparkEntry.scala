@@ -275,6 +275,16 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
 
+  /** The named queries in [[queries]]' order, or all of them when `names`
+    * is empty. An unknown name fails, naming it: a typo would otherwise
+    * run nothing and exit 0. */
+  def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+    all.toSeq.filter { case (n, _) => names.isEmpty || names.contains(n) }
+  }
+
   // ======================================================== query inventory
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -2,32 +2,35 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare
+  * (`tools/check_oracle.py <sfDir> <outDir>`).
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [query ...]
+  *        runMain graft.Verify --sql-only <out.json> */
 object Verify {
   def main(args: Array[String]): Unit = {
     // --sql-only <path>: dump just oracle_sql.json (no Spark session) —
     // used by tools/lint_oracle_types.py to regenerate the type sidecar.
     if (args.headOption.contains("--sql-only")) {
       require(args.length == 2, "usage: Verify --sql-only <out.json>")
-      writeOracleJson(args(1)); return
+      writeOracleJson(args(1), SparkEntry.oracleSql.keySet); return
     }
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.caseSensitive", "true")
-      // non-ANSI cast semantics: categorize/make_continuous rely on
-      // invalid-cast -> NULL (pandas to_numeric parity), and the DuckDB
-      // oracle replays the same decisions with TRY_CAST
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [query ...]")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.create(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
+    dump(spark, args(0), args(1), args.drop(2).toSeq)
+    spark.stop()
+  }
+
+  /** Writes each named query's result (all queries when `names` is empty)
+    * to `<outDir>/<name>` as parquet, and their oracle SQL to
+    * `<outDir>/oracle_sql.json`. Returns the names that failed. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           names: Seq[String]): Seq[String] = {
+    val selected = SparkEntry.select(names)
     new java.io.File(outDir).mkdirs()
-    val failed = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
+    val failed = selected.flatMap { case (name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
@@ -41,12 +44,12 @@ object Verify {
     // output dir, easy to miss among the INFO noise
     if (failed.nonEmpty)
       println(s"[verify] ${failed.size} QUERY FAILURE(S): ${failed.mkString(", ")}")
-    else println(s"[verify] all ${SparkEntry.queries.size} queries dumped OK")
-    writeOracleJson(s"$outDir/oracle_sql.json")
-    spark.stop()
+    else println(s"[verify] all ${selected.size} queries dumped OK")
+    writeOracleJson(s"$outDir/oracle_sql.json", selected.map(_._1).toSet)
+    failed
   }
 
-  private def writeOracleJson(path: String): Unit = {
+  private def writeOracleJson(path: String, names: Set[String]): Unit = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -59,7 +62,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter { case (k, _) => names(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(path), json)
   }

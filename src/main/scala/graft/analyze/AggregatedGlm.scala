@@ -569,8 +569,6 @@ object AggregatedGlm {
         }
         iter += 1
       }
-      if (sys.env.contains("GRAFT_DEBUG_IRLS"))
-        System.err.println(s"[irls] converged after $iter passes")
 
       // one final pass at the converged betas for exact SEs of numeric rvs
       // (vcov evaluated AT the final beta, matching the local kernel)

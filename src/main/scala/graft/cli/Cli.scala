@@ -25,17 +25,9 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     if (args.length < 2) { println(usage); sys.exit(2) }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.caseSensitive", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // SPARK_MASTER is a deployment setting: the CLI is a spark-submit shape
+    val spark = graft.GraftSession.create(sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "spark.app.name" -> "graft-cli")
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, args.toList)
     finally spark.stop()

@@ -68,10 +68,9 @@ object MpegAudio {
     (2 * code - (levels - 1)).toDouble / levels
 
   // ------------------------------------------------------- prototype filter
-  /** Build a root-raised-cosine prototype with transition rolloff `alpha`;
-    * public for the design harness in tools/Drive — production uses
-    * [[prototype]]. Frequency-domain design on the exact 512-point grid:
-    * |H(w)| = cos(pi/2 * t) ramps 1 -> 0 across the band overlap centered
+  /** Build a root-raised-cosine prototype with transition rolloff `alpha`
+    * (production uses [[prototype]]). Frequency-domain design on the exact
+    * 512-point grid: |H(w)| = cos(pi/2 * t) ramps 1 -> 0 across the band overlap centered
     * at pi/64, so |H(w)|^2 + |H(pi/32 - w)|^2 = 1 EXACTLY at the fold —
     * the power-complementarity a time-domain Kaiser-sinc design misses
     * (measured: 13 dB round-trip vs 61 dB with this design). Linear phase,
@@ -79,7 +78,7 @@ object MpegAudio {
     * modulation phase, alias cancellation needs center-to-phase-reference
     * offset = 240 = 16 mod 32; a 255.5 center misses by half a sample and
     * the filterbank stops reconstructing). DC gain 1 (sum = 1). */
-  def makePrototype(alpha: Double): Array[Double] = {
+  private def makePrototype(alpha: Double): Array[Double] = {
     val n = 512
     val hF = new Array[Double](n / 2 + 1)
     val wEdge = math.Pi / 64

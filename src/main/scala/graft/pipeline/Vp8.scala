@@ -308,15 +308,6 @@ object Vp8 {
       s += 1
     }
 
-    if (java.lang.Boolean.getBoolean("graft.vp8.debugHeader"))
-      println(s"[vp8hdr] ${w}x$h part0=$part0Len segEnabled=$segEnabled updateMap=$updateMap " +
-        s"segAbs=$segAbsolute segQ=${segQuant.mkString(",")} segLf=${segLf.mkString(",")} " +
-        s"treeP=${segTreeProbs.mkString(",")} simpleF=$simpleFilter fl=$filterLevel sharp=$sharpness " +
-        s"lfDelta=$lfDeltaEnabled ref=${refLfDelta.mkString(",")} mode=${modeLfDelta.mkString(",")} " +
-        s"nparts=$numParts qi=$yacQi d=[$ydcDelta,$y2dcDelta,$y2acDelta,$uvdcDelta,$uvacDelta] " +
-        s"useSkip=$useSkip skipP=$skipProb " +
-        s"q0=[${qY1dc(0)},${qY1ac(0)},${qY2dc(0)},${qY2ac(0)},${qUVdc(0)},${qUVac(0)}]")
-
     // --- frame buffers: MB-padded planes with a 1-pixel prediction
     // border handled via explicit edge logic (no physical border rows)
     val mbW = (w + 15) >> 4
@@ -497,12 +488,6 @@ object Vp8 {
         }
         mbSkip(mbIdx) = skipBit
         mbHasCoeffs(mbIdx) = mbNz
-        if (java.lang.Boolean.getBoolean("graft.vp8.debugMb") && mbIdx < 4) {
-          println(s"[vp8mb] ($mbX,$mbY) seg=$seg skip=$skipBit ymode=$ymode uv=$uvmode " +
-            s"sub=${(0 until 16).map(k => subModes(sm + k)).mkString(",")}")
-          for (blk <- 0 until 25 if (0 until 16).exists(k => coeffs(blk * 16 + k) != 0))
-            println(s"   blk$blk: ${(0 until 16).map(k => coeffs(blk * 16 + k)).mkString(",")}")
-        }
 
         // ---- reconstruct
         if (hasY2) {
@@ -520,13 +505,8 @@ object Vp8 {
     }
 
     // ---- loop filter (RFC 15); raster order, vertical edges then
-    // horizontal, using each MB's own filter level. The system property
-    // graft.vp8.skipLoopFilter=true skips deblocking — NOT conformant
-    // output, but a documented fast path for hash-only pipelines (and
-    // the debugging seam that isolates filter bugs against libwebp's
-    // bypass_filtering mode).
-    val skipFilter = java.lang.Boolean.getBoolean("graft.vp8.skipLoopFilter")
-    if (filterLevel > 0 && !skipFilter) {
+    // horizontal, using each MB's own filter level.
+    if (filterLevel > 0) {
       mbY = 0
       while (mbY < mbH) {
         var mbX = 0

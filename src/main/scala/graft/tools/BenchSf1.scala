@@ -408,61 +408,117 @@ object BenchSf1 {
       Seq(graft.pipeline.Similarity.pqReconError(e, r, model)).toDF("opq_err")
     }))
 
-  /** ×10 replication with join-consistent key scaling. */
-  private def scaleUp(spark: SparkSession): Unit = {
+  /** ×10 replication of `src` into `dst` with the join-consistent key
+    * scaling above, rebuilt only when a table is missing from `dst`.
+    * `fileMul` scales the output file counts; each document copy gets
+    * `textSuffix` plus its copy index. */
+  private[tools] def scaleUp(spark: SparkSession, tag: String, src: String, dst: String,
+                             fileMul: Int, textSuffix: String): Unit = {
+    val scaled = Seq(
+      ("lineitem", Seq("l_orderkey", "l_partkey", "l_suppkey"), 32),
+      ("orders", Seq("o_orderkey", "o_custkey"), 16),
+      ("customer", Seq("c_custkey"), 8),
+      ("supplier", Seq("s_suppkey"), 4),
+      ("part", Seq("p_partkey"), 4), // consistent with l_partkey scaling
+      ("events", Seq("event_id", "user_id"), 16),
+      ("documents", Seq("doc_id"), 16),
+      ("embeddings", Seq("vec_id"), 4))
+    val fixed = Seq("nation", "region")
+    if ((scaled.map(_._1) ++ fixed).forall(n => new java.io.File(s"$dst/$n.parquet").isDirectory))
+      return
+    val t0 = System.nanoTime()
     val copies = explode(lit((0 until 10).toArray)).as("__i")
-    def scaled(name: String, keyCols: Seq[String], files: Int,
-               extra: DataFrame => DataFrame = identity): Unit = {
-      val src = spark.read.parquet(s"$srcDir/$name.parquet")
-      val rep = src.select(col("*"), copies)
+    scaled.foreach { case (name, keyCols, files) =>
+      val rep = spark.read.parquet(s"$src/$name.parquet").select(col("*"), copies)
       val keyed = keyCols.foldLeft(rep) { (d, k) =>
         d.withColumn(k, col(k) * 10 + col("__i")) }
-      extra(keyed).drop("__i")
-        .repartition(files)
-        .write.mode("overwrite").parquet(s"$outDir/$name.parquet")
+      val out = if (name != "documents") keyed
+        else keyed.withColumn("text", concat(col("text"), lit(textSuffix), col("__i")))
+      out.drop("__i")
+        .repartition(files * fileMul)
+        .write.mode("overwrite").parquet(s"$dst/$name.parquet")
     }
-    scaled("lineitem", Seq("l_orderkey", "l_partkey", "l_suppkey"), 32)
-    scaled("orders", Seq("o_orderkey", "o_custkey"), 16)
-    scaled("customer", Seq("c_custkey"), 8)
-    scaled("supplier", Seq("s_suppkey"), 4)
-    scaled("part", Seq("p_partkey"), 4) // consistent with l_partkey scaling
-    scaled("events", Seq("event_id", "user_id"), 16)
-    scaled("documents", Seq("doc_id"), 16, d =>
-      // per-copy suffix: cross-copy pairs become near-dups, not byte-dups
-      d.withColumn("text", concat(col("text"), lit(" variant"), col("__i"))))
-    scaled("embeddings", Seq("vec_id"), 4)
-    spark.read.parquet(s"$srcDir/nation.parquet")
-      .write.mode("overwrite").parquet(s"$outDir/nation.parquet")
-    spark.read.parquet(s"$srcDir/region.parquet")
-      .write.mode("overwrite").parquet(s"$outDir/region.parquet")
+    fixed.foreach(n => spark.read.parquet(s"$src/$n.parquet")
+      .write.mode("overwrite").parquet(s"$dst/$n.parquet"))
+    System.err.println(f"[$tag] scale-up built in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+  }
+
+  /** The timed sf-pair loop both scale mains share: codegen/JIT warm-up
+    * on the tiny SF, then the build-once index artifacts and the page
+    * cache/footers at both dirs, then per line the min of two noop-sink
+    * passes at each dir. Prints one JSON line with the lines' times under
+    * the two dirs' keys. */
+  private[tools] def timePairs(spark: SparkSession, tag: String,
+                               selected: Seq[(String, (SparkSession, String) => DataFrame)],
+                               lo: (String, String), hi: (String, String),
+                               sfLabel: String): Unit = {
+    val (loKey, loDir) = lo
+    val (hiKey, hiDir) = hi
+    selected.foreach { case (_, fn) =>
+      try fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
+      catch { case _: Throwable => () }
+    }
+    // IVF index build (train + assign) is a one-time cost at both dirs —
+    // the timed ann_ivf_topk line measures the QUERY path, as production
+    // does after persisting the assignment
+    Seq(loDir, hiDir).foreach { dir =>
+      try graft.SparkEntry.warmIndexes(spark, dir)
+      catch { case _: Throwable => () }
+    }
+    Seq(loDir, hiDir).foreach { dir =>
+      new java.io.File(dir).listFiles()
+        .filter(f => f.getName.endsWith(".parquet"))
+        .foreach { f =>
+          try spark.read.parquet(f.getAbsolutePath)
+            .write.format("noop").mode("overwrite").save()
+          catch { case _: Throwable => () }
+        }
+    }
+
+    // a failed line must NOT land in the published JSON as a plausible
+    // (usually faster) number — NaN propagates to "failed":true below
+    def timed(fn: (SparkSession, String) => DataFrame, dir: String): Double = {
+      val runs = (1 to 2).map { _ =>
+        System.gc()
+        val t0 = System.nanoTime()
+        try {
+          fn(spark, dir).write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        } catch { case e: Throwable =>
+          System.err.println(s"[$tag] failed on $dir: ${e.getMessage}")
+          Double.NaN
+        }
+      }
+      // ANY failed run fails the line: Scala's total-order min would pick
+      // the surviving (warm, usually faster) run and publish a plausible
+      // number with no failed flag — exactly what must not happen
+      if (runs.exists(_.isNaN)) Double.NaN else runs.min
+    }
+
+    val rows = selected.map { case (name, fn) =>
+      val a = timed(fn, loDir)
+      val b = timed(fn, hiDir)
+      System.err.println(f"[$tag] $name%-28s $loKey $a%7.2f s   $hiKey $b%7.2f s   x${b / a}%.1f")
+      (name, a, b)
+    }
+    def num(d: Double): String = if (d.isNaN) "null" else f"$d%.3f"
+    val qs = rows.map { case (n, a, b) =>
+      val failed = if (a.isNaN || b.isNaN) ""","failed":true""" else ""
+      s""""$n":{"$loKey":${num(a)},"$hiKey":${num(b)},"ratio":${num(b / a)}$failed}"""
+    }.mkString("{", ",", "}")
+    val okTotal = rows.map(_._3).filterNot(_.isNaN).sum
+    val nFailed = rows.count { case (_, a, b) => a.isNaN || b.isNaN }
+    println(s"""{"metric":"${tag}_subset_total","value":${f"$okTotal%.3f"},"unit":"sec","failed_lines":$nFailed,"queries":$qs,"sf":"$sfLabel"}""")
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.caseSensitive", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.codegen.cache.maxEntries", "8000")
-      // events.ts may be TIMESTAMP(NANOS) parquet depending on the testdata
-      // generator vintage (see SparkEntry.t / EntryCompatSpec); without this
-      // the scale-up read crashes with 'Illegal Parquet type' before timing
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // events.ts may be TIMESTAMP(NANOS) parquet depending on the testdata
+    // generator vintage (see SparkEntry.t / EntryCompatSpec); without this
+    // the scale-up read crashes with 'Illegal Parquet type' before timing
+    val spark = graft.GraftSession.create("local[32]", 32,
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
     spark.sparkContext.setLogLevel("WARN")
-
-    // part joined the table set with the r15 full-board backfill — a
-    // missing member triggers a full rebuild (the BenchSf10 precedent)
-    if (!new java.io.File(s"$outDir/lineitem.parquet").isDirectory ||
-        !new java.io.File(s"$outDir/part.parquet").isDirectory) {
-      val t0 = System.nanoTime()
-      scaleUp(spark)
-      System.err.println(f"[sf1] scale-up built in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
+    scaleUp(spark, "sf1", srcDir, outDir, fileMul = 1, textSuffix = " variant")
 
     // headline subset; minhash runs over the FULL corpus at both scales
     // (the oracled query's doc_id<200 slice would not grow with SF)
@@ -597,63 +653,8 @@ object BenchSf1 {
       if (args.isEmpty) board
       else board.filter { case (n, _) => args.contains(n) }
 
-    // codegen/JIT warmup on the tiny SF
-    selected.foreach { case (_, fn) =>
-      try fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
-    // IVF index build (train + assign) is a one-time cost at both dirs —
-    // the timed ann_ivf_topk line measures the QUERY path, as production
-    // does after persisting the assignment
-    Seq(srcDir, outDir).foreach { dir =>
-      try graft.SparkEntry.warmIndexes(spark, dir)
-      catch { case _: Throwable => () }
-    }
-    // table warmup (page cache + footers) for both measured dirs
-    Seq(srcDir, outDir).foreach { dir =>
-      new java.io.File(dir).listFiles()
-        .filter(f => f.getName.endsWith(".parquet"))
-        .foreach { f =>
-          try spark.read.parquet(f.getAbsolutePath)
-            .write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => () }
-        }
-    }
-
-    // a failed line must NOT land in the published JSON as a plausible
-    // (usually faster) number — NaN propagates to "failed":true below
-    def timed(fn: (SparkSession, String) => DataFrame, dir: String): Double = {
-      val runs = (1 to 2).map { _ =>
-        System.gc()
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, dir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
-          System.err.println(s"[sf1] failed on $dir: ${e.getMessage}")
-          Double.NaN
-        }
-      }
-      // ANY failed run fails the line: Scala's total-order min would pick
-      // the surviving (warm, usually faster) run and publish a plausible
-      // number with no failed flag — exactly what must not happen
-      if (runs.exists(_.isNaN)) Double.NaN else runs.min
-    }
-
-    val rows = selected.map { case (name, fn) =>
-      val t01 = timed(fn, srcDir)
-      val t1 = timed(fn, outDir)
-      System.err.println(f"[sf1] $name%-28s sf0.1 $t01%6.2f s   sf1 $t1%6.2f s   x${t1 / t01}%.1f")
-      (name, t01, t1)
-    }
-    def num(d: Double): String = if (d.isNaN) "null" else f"$d%.3f"
-    val qs = rows.map { case (n, a, b) =>
-      val failed = if (a.isNaN || b.isNaN) ""","failed":true""" else ""
-      s""""$n":{"sf01":${num(a)},"sf1":${num(b)},"ratio":${num(b / a)}$failed}"""
-    }.mkString("{", ",", "}")
-    val okTotal = rows.map(_._3).filterNot(_.isNaN).sum
-    val nFailed = rows.count { case (_, a, b) => a.isNaN || b.isNaN }
-    println(s"""{"metric":"sf1_subset_total","value":${f"$okTotal%.3f"},"unit":"sec","failed_lines":$nFailed,"queries":$qs,"sf":"1 (synthetic x10 of sf0.1)"}""")
+    timePairs(spark, "sf1", selected, "sf01" -> srcDir, "sf1" -> outDir,
+      "1 (synthetic x10 of sf0.1)")
     spark.stop()
   }
 }

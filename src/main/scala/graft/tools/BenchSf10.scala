@@ -20,62 +20,15 @@ object BenchSf10 {
   private val srcDir = "/tmp/sfx1"
   private val outDir = "/tmp/sfx10"
 
-  /** Same ×10 replication shape as BenchSf1.scaleUp, sourced from sfx1;
-    * only the tables the probed lines touch. */
-  private def scaleUp(spark: SparkSession): Unit = {
-    val copies = explode(lit((0 until 10).toArray)).as("__i")
-    def scaled(name: String, keyCols: Seq[String], files: Int,
-               extra: DataFrame => DataFrame = identity): Unit = {
-      val src = spark.read.parquet(s"$srcDir/$name.parquet")
-      val rep = src.select(col("*"), copies)
-      val keyed = keyCols.foldLeft(rep) { (d, k) =>
-        d.withColumn(k, col(k) * 10 + col("__i")) }
-      extra(keyed).drop("__i")
-        .repartition(files)
-        .write.mode("overwrite").parquet(s"$outDir/$name.parquet")
-    }
-    scaled("lineitem", Seq("l_orderkey", "l_partkey", "l_suppkey"), 64)
-    scaled("orders", Seq("o_orderkey", "o_custkey"), 32)
-    scaled("customer", Seq("c_custkey"), 16)
-    scaled("supplier", Seq("s_suppkey"), 8)
-    scaled("part", Seq("p_partkey"), 8) // consistent with l_partkey scaling
-    scaled("events", Seq("event_id", "user_id"), 32)
-    scaled("documents", Seq("doc_id"), 32, d =>
-      // per-copy suffix again: cross-copy pairs stay near-dups, not
-      // byte-dups (web-corpus boilerplate shape)
-      d.withColumn("text", concat(col("text"), lit(" rev"), col("__i"))))
-    scaled("embeddings", Seq("vec_id"), 8)
-    spark.read.parquet(s"$srcDir/nation.parquet")
-      .write.mode("overwrite").parquet(s"$outDir/nation.parquet")
-    spark.read.parquet(s"$srcDir/region.parquet")
-      .write.mode("overwrite").parquet(s"$outDir/region.parquet")
-  }
-
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.caseSensitive", "true")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.create("local[32]", 64,
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
     spark.sparkContext.setLogLevel("WARN")
 
     require(new java.io.File(s"$srcDir/lineitem.parquet").isDirectory,
       s"$srcDir missing — run graft.tools.BenchSf1 first (it builds sfx1)")
-    // embeddings joined the table set after the first sfx10 build — a
-    // missing member triggers a full rebuild
-    if (!new java.io.File(s"$outDir/lineitem.parquet").isDirectory ||
-        !new java.io.File(s"$outDir/embeddings.parquet").isDirectory ||
-        !new java.io.File(s"$outDir/part.parquet").isDirectory) {
-      val t0 = System.nanoTime()
-      scaleUp(spark)
-      System.err.println(f"[sf10] scale-up built in ${(System.nanoTime() - t0) / 1e9}%.1f s")
-    }
+    // per-copy suffix again: cross-copy pairs stay near-dups, not byte-dups
+    BenchSf1.scaleUp(spark, "sf10", srcDir, outDir, fileMul = 2, textSuffix = " rev")
 
     // the five worst sf1 ratios from BENCH_sf1 (VERDICT r9 #5, named),
     // plus a broad second wave covering every heavy family not probed in
@@ -194,52 +147,8 @@ object BenchSf10 {
       if (args.isEmpty) board
       else board.filter { case (n, _) => args.contains(n) }
 
-    // codegen/JIT warmup on the tiny SF
-    selected.foreach { case (_, fn) =>
-      try fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
-    // page-cache/footer warmup for both measured dirs
-    Seq(srcDir, outDir).foreach { dir =>
-      new java.io.File(dir).listFiles()
-        .filter(_.getName.endsWith(".parquet"))
-        .foreach { f =>
-          try spark.read.parquet(f.getAbsolutePath)
-            .write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => () }
-        }
-    }
-
-    def timed(fn: (SparkSession, String) => DataFrame, dir: String): Double = {
-      val runs = (1 to 2).map { _ =>
-        System.gc()
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, dir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
-          System.err.println(s"[sf10] failed on $dir: ${e.getMessage}")
-          Double.NaN
-        }
-      }
-      // ANY failed run fails the line (see BenchSf1.timed)
-      if (runs.exists(_.isNaN)) Double.NaN else runs.min
-    }
-
-    val rows = selected.map { case (name, fn) =>
-      val t1 = timed(fn, srcDir)
-      val t10 = timed(fn, outDir)
-      System.err.println(f"[sf10] $name%-28s sf1 $t1%7.2f s   sf10 $t10%7.2f s   x${t10 / t1}%.1f")
-      (name, t1, t10)
-    }
-    def num(d: Double): String = if (d.isNaN) "null" else f"$d%.3f"
-    val qs = rows.map { case (n, a, b) =>
-      val failed = if (a.isNaN || b.isNaN) ""","failed":true""" else ""
-      s""""$n":{"sf1":${num(a)},"sf10":${num(b)},"ratio":${num(b / a)}$failed}"""
-    }.mkString("{", ",", "}")
-    val okTotal = rows.map(_._3).filterNot(_.isNaN).sum
-    val nFailed = rows.count { case (_, a, b) => a.isNaN || b.isNaN }
-    println(s"""{"metric":"sf10_subset_total","value":${f"$okTotal%.3f"},"unit":"sec","failed_lines":$nFailed,"queries":$qs,"sf":"10 (synthetic x10 of the sfx1 set)"}""")
+    BenchSf1.timePairs(spark, "sf10", selected, "sf1" -> srcDir, "sf10" -> outDir,
+      "10 (synthetic x10 of the sfx1 set)")
     spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan auditor: for every declared query, checks the physical plan for the
   * properties that matter at 100 TB — parquet filter pushdown on filtered
@@ -10,7 +11,9 @@ import org.apache.spark.sql.SparkSession
   * `PlanAuditSpec` runs [[auditQuery]] over the whole query surface inside
   * `sbt test` and FAILS on any flag outside its justified allowlist, so a
   * pushdown/codegen regression reds the build rather than a log line.
-  * Run standalone: `sbt "runMain graft.tools.PlanAudit [sfDir]"`. */
+  * Run standalone: `sbt "runMain graft.tools.PlanAudit [sfDir] [outDir] [query ...]"`;
+  * with an `outDir` it also writes each audited query's formatted plan to
+  * `<outDir>/<query>.txt` (the optimization-round plan evidence). */
 object PlanAudit {
 
   final case class Audit(name: String, codegenSpans: Int, pushed: Boolean,
@@ -22,9 +25,11 @@ object PlanAudit {
     * Queries with eager driver-side steps (collect-based audits, local
     * fast paths) still only pay their construction cost. */
   def auditQuery(spark: SparkSession, sfDir: String, name: String,
-                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Audit = {
-    val plan = fn(spark, sfDir).queryExecution.executedPlan
-    val s = plan.toString
+                 fn: (SparkSession, String) => DataFrame): Audit =
+    audit(name, fn(spark, sfDir))
+
+  private def audit(name: String, df: DataFrame): Audit = {
+    val s = df.queryExecution.executedPlan.toString
     val pushed = "PushedFilters: \\[([^\\]]*)\\]".r
       .findAllMatchIn(s).map(_.group(1)).toSeq
     val hasScanFilter = pushed.exists(_.trim.nonEmpty)
@@ -41,20 +46,22 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.caseSensitive", "true")
-      .config("spark.ui.enabled", "false")
-      // AQE off: codegen stages are only visible in the static plan string
-      // without adaptive wrapping
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
+    val selected = graft.SparkEntry.select(args.drop(2).toSeq).sortBy(_._1)
+    val outDir = args.lift(1).map { d => val f = new java.io.File(d); f.mkdirs(); f }
+    // AQE off: codegen stages are only visible in the static plan string
+    // without adaptive wrapping
+    val spark = graft.GraftSession.create("local[4]", 4, "spark.sql.adaptive.enabled" -> "false")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try {
-        val a = auditQuery(spark, sfDir, name, fn)
+        val df = fn(spark, sfDir)
+        val a = audit(name, df)
         println(f"[audit] $name%-28s codegenSpans=${a.codegenSpans}%-3d pushed=${a.pushed}%-5s ${a.flags.mkString(",")}")
+        outDir.foreach { d =>
+          val w = new java.io.PrintWriter(new java.io.File(d, s"$name.txt"), "UTF-8")
+          try w.println(df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+          finally w.close()
+        }
       } catch {
         case e: Throwable => println(s"[audit] $name FAILED: ${e.getMessage}")
       }

@@ -66,6 +66,14 @@ class OracleTypeLintSpec extends SparkSpec {
       s"DuckDB will emit HUGEINT — CAST the aggregate in the oracle SQL: ${huge.sorted.mkString(", ")}")
   }
 
+  test("every declared query has an oracle and every oracle a query") {
+    val noOracle = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
+    val noQuery = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    assert(noOracle.isEmpty && noQuery.isEmpty,
+      s"queries without oracle: ${noOracle.toSeq.sorted.mkString(", ")}; " +
+        s"oracles without query: ${noQuery.toSeq.sorted.mkString(", ")}")
+  }
+
   test("every Spark query schema matches its DuckDB oracle schema") {
     val bad = SparkEntry.oracleSql.keys.toSeq.sorted.flatMap { name =>
       val exp = sidecar.getOrElse(name, Map.empty)

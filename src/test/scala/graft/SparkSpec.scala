@@ -31,19 +31,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.caseSensitive", "true")
-      // fail loudly on broken generated code instead of silently falling
-      // back to interpreted execution: a doGenCode bug is a perf cliff in
-      // production and must be a red test here (caught the NearestLists /
-      // HyperplaneSignature / CosineSimilarity nullable-vs-codegen bug)
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.create("local[4]", 4,
+      "spark.app.name" -> "graft-test",
+      // the Spark 4 default the suite is written against: runtime errors
+      // (a divide by zero, an invalid cast) fail here where the non-ANSI
+      // mains would turn them into NULLs
+      "spark.sql.ansi.enabled" -> "true")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

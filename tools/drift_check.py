@@ -5,7 +5,7 @@ Compares a driver bench board (BENCH_r{N}.json — either the raw driver
 dict with a 'parsed' payload, or a bare {'queries': {...}} board) against
 the same-code local board (BENCH_local.json). If the median per-line
 ratio driver/local exceeds the threshold (default 1.15), prints the
-top-10 inflated lines as a ready-to-run BenchAB target list — the A-last
+top-10 inflated lines as a ready-to-run `graft.Bench` target list — the A-last
 A/B protocol from SCALE.md (measure the suspect lines in fresh isolated
 JVMs, old tree LAST, so JIT/page-cache warmth favors the null
 hypothesis). Exit code 1 when the threshold trips, 0 otherwise.
@@ -54,7 +54,7 @@ def main():
         print(f"  {n}: {driver[n]:.2f}s vs {local[n]:.2f}s "
               f"(+{driver[n] - local[n]:.2f}s, {ratios[n]:.2f}x)")
     print("\nready-to-run A-last A/B (isolated JVM per line, old tree last):")
-    print("  sbt -batch 'runMain graft.tools.BenchAB " + " ".join(lost) + "'")
+    print("  sbt -batch 'runMain graft.Bench " + " ".join(lost) + "'")
     return 1
 
 
