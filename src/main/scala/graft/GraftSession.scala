@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession factory: every graft main and the test suite start
-  * from [[base]], so the board, the oracle dump and the tests run one
-  * engine configuration. A caller's real difference is an explicit
+  * from the base config below, so the board, the oracle dump and the tests
+  * run one engine configuration. A caller's real difference is an explicit
   * override, applied after the base. */
 object GraftSession {
 
-  val base: Seq[(String, String)] = Seq(
+  private val base: Seq[(String, String)] = Seq(
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.caseSensitive" -> "true",
     // non-ANSI cast semantics: categorize/make_continuous rely on
