@@ -29,6 +29,9 @@ object GraftSession {
     // NearestLists / HyperplaneSignature / CosineSimilarity
     // nullable-vs-codegen bug)
     "spark.sql.codegen.fallback" -> "false",
+    // testdata generations have stored events.ts as TIMESTAMP(NANOS),
+    // which Spark reads only as a long (queries.Tables.t normalizes it)
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.ui.enabled" -> "false")
 
   def create(master: String, shufflePartitions: Int,

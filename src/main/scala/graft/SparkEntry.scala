@@ -1,15 +1,15 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.model.CladeFrame
-import graft.modify.Modify
-import graft.describe.Describe
-import graft.analyze.{AssociationStudy, Corrections, InteractionStudy}
-import graft.pipeline.{Blocklist, Decontaminate, Dedup, Graph, Joins, Layout, Packing, Sampling, Similarity, SpaceSaving, Text}
-import graft.streaming.EventStreams
+import graft.queries._
+
+/** Adding a query: append a `Q` to its family's `all` in `graft.queries`,
+  * beside the SQL helpers only it uses. `oracle` renders the DuckDB SQL that
+  * must return `build`'s rows; set `dualPath` if `build` reaches [[LocalPath.gate]]. */
+final case class Q(name: String, build: (SparkSession, String) => DataFrame,
+                   oracle: () => String, dualPath: Boolean = false)
 
 /** Driver contract: one query per implemented operator (SURVEY.md §2), each
   * with an ANSI-SQL oracle the driver executes in DuckDB over the same
@@ -19,257 +19,31 @@ import graft.streaming.EventStreams
   */
 object SparkEntry {
 
-  /** Inferred parquet schema per table PATH — metadata only, the same
-    * class as Spark's own per-session file-listing cache (guide §6): a
-    * bare `read.parquet` runs a footer-inference JOB on every call, which
-    * taxed every query construction ~25-30 ms of pure scheduling floor
-    * (several t() calls per query × 3 bench passes × 235 queries).
-    * Passing the schema explicitly skips that job; the schema of an
-    * immutable table path never changes within a session, and every
-    * query still computes entirely from the parquet files. */
-  private val tableSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  /** Every query with its oracle, family by family; built once. */
+  lazy val registry: Seq[Q] = unique(Seq(RelationalQueries.all, DescribeQueries.all,
+    ModifyQueries.all, AnalyzeQueries.all, EventQueries.all, GraphQueries.all,
+    DedupQueries.all, AnnQueries.all, TextQueries.all, MultimodalQueries.all,
+    SampleQueries.all, PipelineQueries.all).flatten)
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    // events.ts has shipped in two parquet encodings across testdata
-    // generations: TIMESTAMP(NANOS) (Spark has no ns timestamps — read via
-    // nanosAsLong as a long) and TIMESTAMP_NTZ micros. Normalize BOTH to a
-    // session-tz microsecond TIMESTAMP so every query sees one type
-    // (sessions run UTC, so NTZ wall time == the instant, and DuckDB's
-    // naive epoch(ts) agrees; queries aggregate at >= second granularity)
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$dir/$name.parquet"
-    val schema = tableSchemaCache.computeIfAbsent(path,
-      _ => s.read.parquet(path).schema)
-    val df = s.read.schema(schema).parquet(path)
-    if (name == "events") df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", expr("timestamp_micros(ts DIV 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        df.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => df
-    } else df
+  /** `qs`, failing on any name that appears twice. */
+  private[graft] def unique(qs: Seq[Q]): Seq[Q] = {
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty, s"duplicate query name(s): ${dups.toSeq.sorted.mkString(", ")}")
+    qs
   }
 
-  /** lineitem with a deterministic synthetic row id: a hash of the full row.
-    * Zero-shuffle and partition-parallel (the previous global row_number()
-    * window funneled the whole table through ONE partition — a scale-killer).
-    * Identical full rows share an id, which is fine here: they are
-    * interchangeable, no harness query outputs or groups by `id`, and the
-    * CladeFrame id is only an observation label for these QC operators. */
-  private def lineitemKeyed(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem")
-    li.withColumn("id", xxhash64(li.columns.map(col): _*))
-  }
+  /** Each query's build, by name. Renders no oracle SQL. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
 
-  /** lineitem with deterministic injected nulls (the TPC-H tables have no
-    * NULLs; zero-discount/zero-tax become NULL so NA-aware operators have
-    * real work). */
-  private def lineitemWithNulls(s: SparkSession, dir: String): DataFrame =
-    lineitemKeyed(s, dir)
-      .withColumn("disc_nz", nullif(col("l_discount"), lit(0.0)))
-      .withColumn("tax_nz", nullif(col("l_tax"), lit(0.0)))
-
-  /** Deterministic synthetic p-values over documents (both engines compute
-    * the identical integer expression). */
-  private def docPvalues(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").filter(col("doc_id") < 200)
-      .select(col("doc_id"),
-        ((col("doc_id") * 37 % 100 + 1).cast("double") / 101.0).as("pvalue"))
-
-  /** Committed binary fixture (see test-scope FixtureGen for
-    * regeneration) — feeds the driver-visible multimodal queries whose
-    * oracles are VALUES literals pinned to these exact bytes. */
-  private def fixtureBytes(name: String): Array[Byte] = {
-    val in = getClass.getResourceAsStream(name)
-    require(in != null, s"missing fixture resource $name")
-    try in.readAllBytes() finally in.close()
-  }
-
-  /** The committed REAL lossy-WebP payload (libwebp 1.2.4-encoded VP8
-    * keyframe, 64x48 q=1 — see FIXTURES.md): the lossy class of the
-    * mixed-container corpora. Decodes through the from-scratch
-    * [[graft.pipeline.Vp8]] decoder; its YUV planes are
-    * conformance-pinned byte-exact to libwebp's own decode in Vp8Spec,
-    * which is what licenses the oracle's literal replay of its dhash. */
-  private lazy val lossyVp8Fixture: Array[Byte] =
-    fixtureBytes("/graft/fixtures/lossy_vp8.webp")
-
-  /** documents with two deterministic embedded URLs per row (mixed case,
-    * utm/fragment variants, a quoted port-carrying mirror) — the shared
-    * fixture for the URL extraction/canonicalization queries; the oracle
-    * builds the identical body with || concatenation. */
-  private def urlBody(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "documents").withColumn("body", concat(
-      col("text"), lit(" see https://Site"), (col("doc_id") % 5).cast("string"),
-      lit(".Example.COM/Page/"), (col("doc_id") % 25).cast("string"),
-      when(col("doc_id") % 4 === 0, "?utm_source=x&ref=1")
-        .when(col("doc_id") % 4 === 1, "?ref=1&utm_campaign=y")
-        .when(col("doc_id") % 4 === 2, "/").otherwise(""),
-      when(col("doc_id") % 5 === 0, "#frag").otherwise(""),
-      lit(" and 'http://mirror.example.org:8080/m/"),
-      (col("doc_id") % 11).cast("string"), lit("'")))
-
-  /** Procedural pixel formula for the image-dedup corpus: grayscale
-    * blocky noise in [24, 231] from pure integer math on (id, x, y) —
-    * headroom for the +7 brightness plant, SQL-replayable verbatim. */
-  private def imagePixel(id: Long, x: Int, y: Int): Int =
-    (((x * (3 + id % 5) + y * (2 + id % 7) + ((x.toLong * y + id) % 23) * 11) % 208) + 24).toInt
-
-  /** BMP image corpus derived from documents doc_ids: base 64x64
-    * grayscale images of [[imagePixel]], plus planted near-dups for
-    * base < nCopies — a 2x nearest-neighbor upscale at id+100000 and a
-    * +7 brightness shift at id+200000. BMP stores raw pixels, so the
-    * REAL ImageIO decode inside Dedup.imageSignatures recovers the
-    * formula values exactly and the DuckDB oracle replays
-    * pixels -> luma grid -> bit algebra engine-independently with no
-    * codec in the loop (imageCorpusCtes). */
-  private def imageCorpus(s: SparkSession, dir: String,
-                          nBase: Int, nCopies: Int): DataFrame = {
-    import s.implicits._
-    val ids = t(s, dir, "documents").filter(col("doc_id") < nBase)
-      .select(col("doc_id").as("base"))
-    val variants = ids
-      .select(col("base"), col("base").as("img_id"), lit(1).as("sc"), lit(0).as("db"))
-      .unionByName(ids.filter(col("base") < nCopies).select(col("base"),
-        (col("base") + 100000L).as("img_id"), lit(2).as("sc"), lit(0).as("db")))
-      .unionByName(ids.filter(col("base") < nCopies).select(col("base"),
-        (col("base") + 200000L).as("img_id"), lit(1).as("sc"), lit(7).as("db")))
-    variants.as[(Long, Long, Int, Int)].mapPartitions { it =>
-      it.map { case (base, img, sc, db) =>
-        (img, graft.pipeline.Multimodal.encodeBmpGray(64 * sc, 64 * sc,
-          (x, y) => imagePixel(base, x / sc, y / sc) + db))
-      }
-    }.toDF("img_id", "payload")
-  }
-
-  /** Mixed-container image corpus for the decode-coverage queries: ONE
-    * payload per document, container keyed by doc_id % 8 — real BMP,
-    * PNG and (r17) TIFF (decodable by stock ImageIO), a webp class
-    * split on doc_id % 16 (REAL lossless VP8L through the from-scratch
-    * [[graft.pipeline.Vp8l]] decoder vs the REAL libwebp-encoded lossy
-    * VP8 fixture through the from-scratch [[graft.pipeline.Vp8]] decoder
-    * — both halves decode as of r17), AVIF and (r17) HEIC containers
-    * with real meta/iprp/ipco/ispe property trees (sniffable, header
-    * dims parse for real, SAMPLE decode counted-not-stubbed), a corrupt
-    * JPEG (valid magic, broken stream), and plain non-image bytes. The
-    * class arithmetic is the oracle's replay handle: DuckDB counts by
-    * doc_id % 8 / % 16 while the engine really encodes, sniffs, and
-    * attempts the parse/decode. */
-  private def mixedImagePayload(id: Long): Array[Byte] = (id % 8) match {
-    case 0 => graft.pipeline.Multimodal.encodeBmpGray(8, 8,
-      (x, y) => ((x * 7 + y * 11 + id) % 240 + 8).toInt)
-    case 1 => graft.pipeline.Multimodal.encodePngGray(8, 8,
-      (x, y) => ((x * 7 + y * 11 + id) % 240 + 8).toInt)
-    case 2 =>
-      if (id % 16 == 2)
-        // REAL lossless WebP: VP8L stream from the in-house encoder —
-        // decodes through the from-scratch Vp8l decoder (r16)
-        graft.pipeline.Vp8lEncoder.encode(8, 8, Array.tabulate(64) { i =>
-          val p = ((i % 8) * 7 + (i / 8) * 11 + id) % 240 + 8
-          0xff000000 | (p.toInt << 16) | (p.toInt << 8) | p.toInt
-        })
-      else
-        // REAL lossy WebP (libwebp-encoded VP8 keyframe, FIXTURES.md):
-        // decodes through the from-scratch Vp8 decoder (r17) — the
-        // r16-era webp_lossy "sniffs but fails" row flips to decoded
-        lossyVp8Fixture
-    case 3 => // JPEG SOI + APP0 marker, then garbage: sniffs jpeg, decode fails
-      Array[Byte](0xff.toByte, 0xd8.toByte, 0xff.toByte, 0xe0.toByte) ++
-        s"corrupt jpeg $id".getBytes("UTF-8")
-    case 4 => // AVIF: ftyp + meta/iprp/ipco/ispe — dims parse, no decoder
-      bmffImagePayload("avif", 100 + (id % 23).toInt, 77)
-    case 5 => s"not an image payload $id".getBytes("UTF-8")
-    case 6 => graft.pipeline.Multimodal.encodeTiffGray(8, 8,
-      (x, y) => ((x * 7 + y * 11 + id) % 240 + 8).toInt)
-    case _ => // HEIC: same BMFF shape under the heic brand
-      bmffImagePayload("heic", 200 + (id % 31).toInt, 150)
-  }
-
-  /** Minimal-but-real ISO-BMFF image container: ftyp(brand) then
-    * meta(FullBox){ hdlr, iprp{ ipco{ ispe(w,h) } } } — the hdlr sibling
-    * forces [[graft.pipeline.Multimodal.imageDims]]'s walk to SKIP an
-    * unknown box like it must on real encoder output. */
-  private def bmffImagePayload(brand: String, w: Int, h: Int): Array[Byte] = {
-    def be32(v: Int): Array[Byte] =
-      Array[Byte]((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
-    def box(name: String, payload: Array[Byte]): Array[Byte] =
-      be32(8 + payload.length) ++ name.getBytes("ISO-8859-1") ++ payload
-    val ftyp = box("ftyp", brand.getBytes("ISO-8859-1") ++ be32(0) ++
-      "mif1".getBytes("ISO-8859-1"))
-    val ispe = box("ispe", be32(0) ++ be32(w) ++ be32(h))
-    val hdlr = box("hdlr", be32(0) ++ be32(0) ++
-      "pict".getBytes("ISO-8859-1") ++ new Array[Byte](12))
-    val meta = box("meta", be32(0) ++ hdlr ++ box("iprp", box("ipco", ispe)))
-    ftyp ++ meta
-  }
-
-  /** `maxId`: optional id cut applied BEFORE the payload-building
-    * mapPartitions — payloads are a pure function of the id, so filtering
-    * first is result-identical, pushes the predicate to the parquet scan
-    * (the typed map is opaque to Catalyst, so a post-map filter can
-    * never reach it), and skips encoding payloads that would be dropped. */
-  private def mixedImageCorpus(s: SparkSession, dir: String,
-                               maxId: Option[Long] = None): DataFrame = {
-    import s.implicits._
-    val ids = t(s, dir, "documents").select(col("doc_id"))
-    maxId.fold(ids)(m => ids.filter(col("doc_id") < m)).as[Long]
-      .mapPartitions(it => it.map(id => (id, mixedImagePayload(id))))
-      .toDF("img_id", "payload")
-  }
-
-  /** Build-once IVF index per sf dir: production trains the coarse
-    * quantizer and persists the assignment offline (CLI `pipeline
-    * ann-index`); queries then pay only the probe+scan path. Memoized so
-    * verify/bench build it once per process; the assignment is cached and
-    * materialized eagerly at build time. */
-  private val ivfIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Similarity.IvfModel, DataFrame)]
-  private def ivfIndex(s: SparkSession, dir: String): (Similarity.IvfModel, DataFrame) =
-    ivfIndexCache.getOrElseUpdate(dir, {
-      val e = t(s, dir, "embeddings")
-      val model = Similarity.ivfTrain(e, nLists = 16)
-      val assigned = Similarity.ivfAssign(model, e)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      assigned.count()
-      (model, assigned)
-    })
-
-  /** Build-once SCALED IVF index for the corpus-graph consumers
-    * ([[graft.pipeline.Similarity.knnGraph]]): nLists = max(16, n/200)
-    * via ivfTrainScaled, so the list-bucketed self-join stays linear at
-    * every corpus scale (the fixed-nLists=16 config measured ×252 for
-    * ×10 data at sf1 — quadratic, as the candidate algebra predicts).
-    * At the sf0.01 oracle scale (500 vectors) the formula lands on
-    * nLists=16 with a full-corpus train, so the DuckDB Lloyd replay
-    * (ivfOracleCtes with the same greatest(16, n//200) expression) stays
-    * hash-exact; the ENGINE config nonetheless scales with n. */
-  private val ivfGraphIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, (Similarity.IvfModel, DataFrame)]
-  private def ivfGraphIndex(s: SparkSession, dir: String): (Similarity.IvfModel, DataFrame) =
-    ivfGraphIndexCache.getOrElseUpdate(dir, {
-      val e = t(s, dir, "embeddings")
-      val model = Similarity.ivfTrainScaled(e, vectorsPerList = 200)
-      val assigned = Similarity.ivfAssign(model, e)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      assigned.count()
-      (model, assigned)
-    })
-
-  /** PQ codebooks are the same build-once artifact class as the IVF
-    * index: train once per dir, reuse across calls (the production shape
-    * after persisting a codebook; assignment itself is a cheap
-    * zero-shuffle projection re-derived per query). */
-  private val pqIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, Similarity.PqModel]
-  private def pqIndex(s: SparkSession, dir: String): Similarity.PqModel =
-    pqIndexCache.getOrElseUpdate(dir,
-      Similarity.pqTrain(t(s, dir, "embeddings"), m = 4, k = 16, iters = 4))
+  /** Each query's DuckDB oracle, by name, rendered on first use. */
+  lazy val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracle()).toMap
 
   /** Pre-build heavy build-once artifacts (IVF index, PQ codebooks)
     * outside any timed loop — Bench calls this during warmup. */
   def warmIndexes(s: SparkSession, dir: String): Unit =
-    { ivfIndex(s, dir); ivfGraphIndex(s, dir); pqIndex(s, dir); () }
+    { Tables.ivfIndex(s, dir); Tables.ivfGraphIndex(s, dir); Tables.pqIndex(s, dir); () }
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
@@ -283,3195 +57,6 @@ object SparkEntry {
     val unknown = names.filterNot(all.contains)
     require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
     all.toSeq.filter { case (n, _) => names.isEmpty || names.contains(n) }
-  }
-
-  // ======================================================== query inventory
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- relational core (scan/filter/join/agg/window/sort — SURVEY §2.1-2.8)
-    "q1_pricing_summary" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= lit("1998-09-01"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          round(sum("l_extendedprice"), 2).as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("sum_disc_price"),
-          round(avg("l_discount"), 6).as("avg_disc"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")),
-
-    "q2_topk_orders" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .select(col("o_orderkey"), round(col("o_totalprice"), 2).as("price"))
-        .orderBy(col("price").desc, col("o_orderkey"))
-        .limit(10)),
-
-    "q3_join_revenue_by_nation" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      val n = t(s, dir, "nation")
-      // dimension tables broadcast; the orders->customer join shuffles on
-      // custkey only after Catalyst prunes to the 3 needed columns
-      o.join(c, o("o_custkey") === c("c_custkey"))
-        .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-        .groupBy("n_name")
-        .agg(round(sum("o_totalprice"), 2).as("revenue"), count(lit(1)).as("n_orders"))
-        .orderBy("n_name")
-    }),
-
-    "q4_semi_join" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders").select(col("o_custkey").as("c_custkey"))
-      c.join(o, Seq("c_custkey"), "left_semi")
-        .groupBy("c_mktsegment").agg(count(lit(1)).as("n_customers"))
-        .orderBy("c_mktsegment")
-    }),
-
-    "q5_anti_join" -> ((s, dir) => {
-      // customers with NO order above 300k: the threshold keeps the
-      // anti-join NON-VACUOUS at every SF (unfiltered, every customer has
-      // orders and the result was empty — an oracle that exercised nothing)
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders").filter(col("o_totalprice") > 300000)
-        .select(col("o_custkey").as("c_custkey"))
-      c.join(o, Seq("c_custkey"), "left_anti")
-        .select("c_custkey").orderBy("c_custkey")
-    }),
-
-    "q6_window_running_sum" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("epoch"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, dir, "events").filter(col("user_id") < 20)
-        .withColumn("epoch", floor(unix_timestamp(col("ts"))).cast("long"))
-        .withColumn("running_value", round(sum("value").over(w), 4))
-        .select("user_id", "epoch", "event_id", "running_value")
-        .orderBy("user_id", "epoch", "event_id")
-    }),
-
-    "q7_tumbling_hourly" -> ((s, dir) =>
-      EventStreams.tumblingCounts(t(s, dir, "events"), "1 hour")
-        .select(unix_timestamp(col("window_start")).cast("long").as("hour_start"),
-          col("event_type"), col("n"), round(col("total_value"), 4).as("total_value"))
-        .orderBy("hour_start", "event_type")),
-
-    "describe_cramers_v" -> ((s, dir) =>
-      // pairwise categorical association: ALL pair tables from one
-      // grouping-sets shuffle; chi2/V algebra on the tiny aggregate
-      Describe.cramersV(
-          t(s, dir, "lineitem")
-            .withColumn("ship_mon", month(col("l_shipdate")).cast("string")),
-          Seq("l_returnflag", "l_linestatus", "ship_mon"))
-        .select(col("var_a"), col("var_b"), col("n"), col("df"),
-          round(col("chi2"), 6).as("chi2"),
-          round(col("cramers_v"), 6).as("cramers_v"))
-        .orderBy("var_a", "var_b")),
-
-    "describe_grouped_quantiles" -> ((s, dir) =>
-      // per-group EXACT type-7 quantiles WITHOUT an agg buffer holding any
-      // group's values (r10: Spark's `percentile` aggregate buffered every
-      // value of a group — the one row-scale agg buffer in the library;
-      // Describe.groupedQuantiles aggregates ties, sorts the DISTINCT
-      // rows, and walks out only the needed order statistics)
-      Describe.groupedQuantiles(t(s, dir, "lineitem"),
-          "l_extendedprice", "l_returnflag", Seq(0.5, 0.9, 0.99))
-        .select(col("l_returnflag"), col("n"),
-          round(element_at(col("quantiles"), 1), 6).as("p50"),
-          round(element_at(col("quantiles"), 2), 6).as("p90"),
-          round(element_at(col("quantiles"), 3), 6).as("p99"))
-        .orderBy("l_returnflag")),
-
-    "events_interarrival" -> ((s, dir) => {
-      // per-user inter-event gap profile: one shuffle on user_id, window
-      // lag; gap multiset is tie-order invariant so the agg is exact
-      val mic = unix_micros(col("ts"))
-      val w = Window.partitionBy("user_id").orderBy("t")
-      t(s, dir, "events").select(col("user_id"), mic.as("t"))
-        .withColumn("gap", col("t") - lag("t", 1).over(w))
-        .filter(col("gap").isNotNull)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_gaps"),
-          min("gap").as("min_gap_us"),
-          max("gap").as("max_gap_us"),
-          // EXACT cross-engine average: integer gap sums stay < 2^53
-          // (a user's gaps sum to its time span), so sum(long)/n is the
-          // same two IEEE ops in Spark and DuckDB; sig6 instead of
-          // round(x, 4) because the engines ROUND differently — Spark via
-          // exact BigDecimal, DuckDB via float multiply — which diverges
-          // on halfway decimals and on 1e10-magnitude values (measured at
-          // sf0.1); sig6 runs both engines through the identical
-          // float-scaled path, so ties land the same side
-          sig6(sum("gap").cast("double") / count(lit(1))).as("avg_gap_us"))
-        .orderBy("user_id")
-    }),
-
-    "events_funnel" -> ((s, dir) => {
-      // strict-order funnel view -> click -> purchase on first-touch
-      // times: ONE groupBy computes every user's stage timestamps, one
-      // tiny aggregate counts the stages (no joins, no windows)
-      val mic = unix_micros(col("ts"))
-      val f = t(s, dir, "events").groupBy("user_id").agg(
-        min(when(col("event_type") === "view", mic)).as("t_view"),
-        min(when(col("event_type") === "click", mic)).as("t_click"),
-        min(when(col("event_type") === "purchase", mic)).as("t_purchase"))
-      f.agg(count(lit(1)).as("n_users"),
-        sum(when(col("t_view").isNotNull, 1L).otherwise(0L)).as("viewed"),
-        sum(when(col("t_view") < col("t_click"), 1L).otherwise(0L))
-          .as("clicked_after_view"),
-        sum(when(col("t_view") < col("t_click") &&
-            col("t_click") < col("t_purchase"), 1L).otherwise(0L))
-          .as("full_funnel"))
-    }),
-
-    "events_resample" -> ((s, dir) =>
-      // complete hourly spine per event type: gap hours carry n=0 and a
-      // forward-filled mean value; spine rows = hours × types built from
-      // one broadcast bounds row (never event-row scale)
-      EventStreams.resampleHourly(t(s, dir, "events"))
-        .select(col("event_type"),
-          unix_timestamp(col("hour")).cast("long").as("hour_start"),
-          // sig6: same cross-engine halfway-decimal rounding divergence
-          // as events_moving_avg's ma
-          col("n"), sig6(col("ffill_avg")).as("ffill_avg"))
-        .orderBy("event_type", "hour_start")),
-
-    "events_anomaly" -> ((s, dir) =>
-      // hourly volume spikes/dips: hours > 2 sample-sd from the type's own
-      // mean hourly count; per-type moments broadcast onto the hourly frame
-      EventStreams.hourlyAnomaly(t(s, dir, "events"), zThreshold = 2.0)
-        .select(col("event_type"),
-          unix_timestamp(col("hour")).cast("long").as("hour_start"),
-          col("n"), round(col("z"), 6).as("z"))
-        .orderBy("event_type", "hour_start")),
-
-    "events_active_users" -> ((s, dir) =>
-      // DAU/WAU/MAU rollup: distinct (day, user) first, then a bounded
-      // 30x explode of the tiny distinct table — never a sliding self-join
-      EventStreams.activeUsers(t(s, dir, "events"))
-        .select(unix_timestamp(col("day")).cast("long").as("day_start"),
-          col("dau"), col("wau"), col("mau"))
-        .orderBy("day_start")),
-
-    "events_cusum_drift" -> ((s, dir) =>
-      // sequential-shift detector over hourly volumes: the CUSUM
-      // recurrence in its prefix form, all comparisons exact int64
-      EventStreams.cusumHourly(t(s, dir, "events"), slack = 0L, threshold = 10L)
-        .select(col("event_type"), col("n_hours"), col("total"),
-          round(col("max_cusum"), 6).as("max_cusum"), col("n_alarms"),
-          unix_timestamp(col("first_alarm_hour")).cast("long").as("first_alarm_hour"))
-        .orderBy("event_type")),
-
-    "events_drift_monitor" -> ((s, dir) => {
-      // streaming drift gate, batch shape (stream ≡ batch by shared
-      // plan, parity-tested on MemoryStream in StreamingSpec): day-1
-      // values are the static reference profile (O(bins) plan literals);
-      // every hourly window scores PSI + binned-KS + verdict against it
-      val ev = t(s, dir, "events")
-      val ref = graft.streaming.DriftMonitor.buildReference(
-        ev.filter(col("ts") < lit("2024-01-02 00:00:00").cast("timestamp")),
-        "value", bins = 10)
-      // r13: the cross-window CUSUM stage rides the same scored windows —
-      // a persistent small location shift that never trips one window's
-      // PSI accumulates in cusum_up/cusum_dn (prefix form, slack 0,
-      // threshold 1 bin·window)
-      graft.streaming.DriftMonitor.cusumBinnedScores(
-          graft.streaming.DriftMonitor.windowedDrift(ev, "ts", "value", ref, "1 hour"))
-        .select(unix_timestamp(col("window_start")).cast("long").as("hour_start"),
-          col("n"), round(col("psi"), 6).as("psi"),
-          round(col("ks_binned"), 6).as("ks_binned"), col("verdict"),
-          round(col("loc_shift"), 6).as("loc_shift"),
-          round(col("cusum_up"), 6).as("cusum_up"),
-          round(col("cusum_dn"), 6).as("cusum_dn"), col("cusum_alarm"))
-        .orderBy("hour_start")
-    }),
-
-    "events_drift_vector" -> ((s, dir) => {
-      // the RESTART-DURABLE drift pipeline's batch shape (r15): ONE
-      // windowed aggregation producing the per-window bin-count VECTOR
-      // (conditional sums — no second streaming agg), stateless
-      // scoreVector scoring, the same CUSUM columns. Bit-identical to
-      // events_drift_monitor by the shared scoreFolded expressions
-      // (spec-asserted), so the SAME oracle replays it; in streaming form
-      // this plan chains legally into the checkpointed CUSUM
-      // (durableDriftMonitor, kill-and-restart parity-tested).
-      val ev = t(s, dir, "events")
-      val ref = graft.streaming.DriftMonitor.buildReference(
-        ev.filter(col("ts") < lit("2024-01-02 00:00:00").cast("timestamp")),
-        "value", bins = 10)
-      graft.streaming.DriftMonitor.cusumBinnedScores(
-          graft.streaming.DriftMonitor.scoreVector(
-            graft.streaming.DriftMonitor.windowedBinVector(
-              ev, "ts", "value", ref, "1 hour"), ref))
-        .select(unix_timestamp(col("window_start")).cast("long").as("hour_start"),
-          col("n"), round(col("psi"), 6).as("psi"),
-          round(col("ks_binned"), 6).as("ks_binned"), col("verdict"),
-          round(col("loc_shift"), 6).as("loc_shift"),
-          round(col("cusum_up"), 6).as("cusum_up"),
-          round(col("cusum_dn"), 6).as("cusum_dn"), col("cusum_alarm"))
-        .orderBy("hour_start")
-    }),
-
-    "modify_quantile_normalize" -> ((s, dir) => {
-      // expression-array quantile normalization: all columns forced to the
-      // shared rank-mean distribution; ONE Tungsten range sort carries the
-      // row id so ranks, rank means, and the remap stay distributed
-      val li = t(s, dir, "lineitem").filter(col("l_orderkey") < 1000)
-        .withColumn("rid", col("l_orderkey") * 10 + col("l_linenumber"))
-      Modify.quantileNormalize(li, Seq("l_quantity", "l_discount", "l_tax"), "rid")
-        .withColumn("normalized", round(col("normalized"), 6))
-        .orderBy("rid", "variable")
-    }),
-
-    "modify_upsert" -> ((s, dir) => {
-      // incremental corpus refresh: a delta (every 10th customer with a
-      // new balance) supersedes stale rows via ONE anti-join (the delta
-      // broadcasts; the base table never shuffles) + union
-      val c = t(s, dir, "customer")
-      val delta = c.filter(col("c_custkey") % 10 === 0)
-        .withColumn("c_acctbal", round(col("c_acctbal") * 2, 2))
-      Joins.upsert(c, delta, Seq("c_custkey"))
-        .select(col("c_custkey"), col("c_mktsegment"),
-          round(col("c_acctbal"), 2).as("c_acctbal"))
-        .orderBy("c_custkey")
-    }),
-
-    "describe_quality_rules" -> ((s, dir) =>
-      // Deequ-style validation: five declarative predicates checked in ONE
-      // aggregation over ONE scan (null verdicts count as failures)
-      Describe.checkRules(t(s, dir, "lineitem"), Seq(
-          "quantity_positive" -> (col("l_quantity") > 0),
-          "discount_in_range" -> (col("l_discount") >= 0 && col("l_discount") <= 0.1),
-          "returnflag_domain" -> col("l_returnflag").isin("A", "N", "R"),
-          "price_not_null" -> col("l_extendedprice").isNotNull,
-          "tax_lt_discount" -> (col("l_tax") < col("l_discount"))))
-        .withColumn("pass_rate", round(col("pass_rate"), 6))
-        .orderBy("rule")),
-
-    "modify_diff_snapshots" -> ((s, dir) => {
-      // CDC between two snapshot versions: full-outer on the key +
-      // null-safe struct compare; statuses aggregated for audit
-      val c = t(s, dir, "customer")
-      val newer = c.filter(col("c_custkey") % 97 =!= 0)
-        .withColumn("c_acctbal",
-          when(col("c_custkey") % 10 === 0, round(col("c_acctbal") * 2, 2))
-            .otherwise(col("c_acctbal")))
-      Joins.diffSnapshots(c, newer, Seq("c_custkey"))
-        .groupBy("row_status").agg(count(lit(1)).as("n"))
-        .orderBy("row_status")
-    }),
-
-    "describe_gini" -> ((s, dir) =>
-      // concentration per group: Gini from the rank-weighted sum identity
-      // G = 2·Σi·x₍ᵢ₎/(n·Σx) − (n+1)/n; ranks from a range-partitioned
-      // sort (full parallelism however few groups — a per-group window
-      // collapses to #groups tasks). Tie order cannot move the sum, so
-      // the SQL window replay is exact
-      Describe.giniByGroup(t(s, dir, "lineitem"), "l_extendedprice",
-          "l_returnflag", Seq("l_orderkey", "l_linenumber"))
-        .select(col("l_returnflag"), col("n"),
-          round(col("gini"), 6).as("gini"))
-        .orderBy("l_returnflag")),
-
-    "describe_weighted_median" -> ((s, dir) =>
-      // survey-weighted median per group (value where cumulative weight
-      // crosses half the total): RANGE-frame windows make ties share one
-      // cumulative weight, and integer-valued double weights sum EXACTLY,
-      // so the crossing is deterministic in any engine
-      Describe.weightedQuantile(t(s, dir, "lineitem"),
-          "l_extendedprice", "l_quantity", Seq("l_returnflag"), q = 0.5)
-        .select(col("l_returnflag"),
-          round(col("weighted_quantile"), 4).as("weighted_median"),
-          round(col("total_weight"), 2).as("total_weight"))
-        .orderBy("l_returnflag")),
-
-    "describe_bootstrap_ci" -> ((s, dir) =>
-      // Poisson-bootstrap CI for the mean: 50 resamples in ONE pass via
-      // deterministic hash weights (exact hex-threshold compare, no float
-      // conversion); shuffle carries replica partial sums only
-      Describe.bootstrapCI(t(s, dir, "lineitem"), "l_extendedprice",
-          concat_ws("_", col("l_orderkey"), col("l_linenumber")), replicas = 50)
-        .select(col("n"), round(col("mean"), 4).as("mean"),
-          round(col("se_boot"), 4).as("se_boot"),
-          round(col("ci_lo"), 4).as("ci_lo"),
-          round(col("ci_p50"), 4).as("ci_p50"),
-          round(col("ci_hi"), 4).as("ci_hi"))),
-
-    "describe_entropy" -> ((s, dir) =>
-      // per-column Shannon entropy over level counts: exact count algebra
-      // (H = ln N − Σ n ln n / N), second aggregation is O(#levels)
-      Describe.entropy(t(s, dir, "orders"),
-          Seq("o_orderstatus", "o_orderpriority"))
-        .select(col("variable"), col("n_levels"), col("total"),
-          round(col("entropy_nats"), 6).as("entropy_nats"))
-        .orderBy("variable")),
-
-    "events_funnel_windowed" -> ((s, dir) => {
-      // per-view funnel with a 24-hour conversion window at each step:
-      // two FORWARD as-of joins (view→next click, click→next purchase),
-      // each ONE shuffle — the composition that replaces MATCH_RECOGNIZE.
-      // 24h is the tightest round window where every leg fires on the
-      // synthetic event density (1h left the final leg vacuous at all SFs)
-      val ev = t(s, dir, "events")
-      def stage(tp: String, out: String) =
-        ev.filter(col("event_type") === tp)
-          .select(col("user_id"), unix_micros(col("ts")).as(out))
-      val hourUs = 24L * 3600L * 1000000L
-      val vc = Joins.asofJoin(stage("view", "t_view"), stage("click", "t_click"),
-        keys = Seq("user_id"), leftTs = "t_view", rightTs = "t_click",
-        rightCols = Nil, prefix = "c_", tolerance = Some(hourUs),
-        direction = "forward")
-      val vcp = Joins.asofJoin(vc, stage("purchase", "t_purchase"),
-        keys = Seq("user_id"), leftTs = "c_t_click", rightTs = "t_purchase",
-        rightCols = Nil, prefix = "p_", tolerance = Some(hourUs),
-        direction = "forward")
-      vcp.agg(count(lit(1)).as("n_views"),
-        sum(when(col("c_t_click").isNotNull, 1L).otherwise(0L)).as("clicked_24h"),
-        sum(when(col("c_t_click").isNotNull && col("p_t_purchase").isNotNull, 1L)
-          .otherwise(0L)).as("full_24h"))
-    }),
-
-    "graph_kcore" -> ((s, dir) => {
-      // density filter on the bipartite part-supplier graph: bounded
-      // peeling to the 3-core (converged == exact; 12-round cap keeps
-      // the oracle a fixed CTE chain)
-      val li = t(s, dir, "lineitem").filter(col("l_partkey") < 800)
-      val edges = li.select(concat(lit("p"), col("l_partkey")).as("src"),
-        concat(lit("s"), col("l_suppkey")).as("dst")).distinct()
-      Graph.kCoreBounded(edges, "src", "dst", k = 3)
-        .orderBy("node")
-    }),
-
-    "graph_lpa" -> ((s, dir) => {
-      // synchronous deterministic LPA over the same bipartite
-      // part-supplier slice as graph_kcore: 3 rounds, ties to min label,
-      // one join + two-level argmax agg per round (no per-node window)
-      val li = t(s, dir, "lineitem").filter(col("l_partkey") < 800)
-      val edges = li.select(concat(lit("p"), col("l_partkey")).as("src"),
-        concat(lit("s"), col("l_suppkey")).as("dst")).distinct()
-      Graph.labelPropagation(edges, "src", "dst", rounds = 3)
-        .orderBy("node")
-    }),
-
-    "graph_triangles" -> ((s, dir) => {
-      // triangle counts per nation in the (undirected, thresholded) trade
-      // graph: the canonical a<b<c two-hop self-join — each edge list is
-      // tiny after aggregation, the pattern is the corpus-scale shape
-      val li = t(s, dir, "lineitem"); val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer"); val su = t(s, dir, "supplier")
-      val na = t(s, dir, "nation")
-      val raw = li
-        .join(o, li("l_orderkey") === o("o_orderkey"))
-        .join(c, o("o_custkey") === c("c_custkey"))
-        .join(su, li("l_suppkey") === su("s_suppkey"))
-        .join(broadcast(na.select(col("n_nationkey").as("__ck"), col("n_name").as("cn"))),
-          c("c_nationkey") === col("__ck"))
-        .join(broadcast(na.select(col("n_nationkey").as("__sk"), col("n_name").as("sn"))),
-          su("s_nationkey") === col("__sk"))
-        .groupBy("cn", "sn")
-        .agg(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("w"))
-        .filter(col("cn") =!= col("sn"))
-      // keep only above-average-weight trade lanes (self-normalizing across
-      // scale factors), then the undirected deduped edge list oriented a<b
-      val e = raw.crossJoin(broadcast(raw.agg(avg(col("w")).as("__wbar"))))
-        .filter(col("w") > col("__wbar"))
-        .select(least(col("cn"), col("sn")).as("a"),
-          greatest(col("cn"), col("sn")).as("b"))
-        .distinct()
-      val tri = e.as("e1")
-        .join(e.as("e2"), col("e1.b") === col("e2.a"))
-        .join(e.as("e3"),
-          col("e3.a") === col("e1.a") && col("e3.b") === col("e2.b"))
-        .select(col("e1.a").as("x"), col("e1.b").as("y"), col("e2.b").as("z"))
-      tri.select(explode(array(col("x"), col("y"), col("z"))).as("node"))
-        .groupBy("node").agg(count(lit(1)).as("n_triangles"))
-        .orderBy("node")
-    }),
-
-    "events_markov" -> ((s, dir) => {
-      // first-order behavior model: P(next event type | current) from
-      // per-user time-ordered transitions — one lag window keyed by user,
-      // one O(#types²) pair aggregation, probabilities row-normalized
-      val w = Window.partitionBy("user_id").orderBy(col("t"), col("event_id"))
-      val pairs = t(s, dir, "events")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("t"), col("event_type"))
-        .withColumn("next_type", lead(col("event_type"), 1).over(w))
-        .filter(col("next_type").isNotNull)
-        .groupBy(col("event_type").as("from_type"), col("next_type").as("to_type"))
-        .agg(count(lit(1)).as("n"))
-      val tot = Window.partitionBy("from_type")
-      pairs
-        .withColumn("p", round(col("n") / sum(col("n")).over(tot), 6))
-        .orderBy("from_type", "to_type")
-    }),
-
-    "events_sliding_distinct" -> ((s, dir) =>
-      // distinct users per 3-hour window sliding hourly: each event lands
-      // in 3 windows (bounded replication), exact distinct per (window,
-      // type) — the overlapping-window distinct that resists naive reuse
-      t(s, dir, "events")
-        .groupBy(window(col("ts"), "3 hours", "1 hour"), col("event_type"))
-        .agg(countDistinct(col("user_id")).as("n_users"))
-        .select(unix_timestamp(col("window.start")).cast("long").as("w_start"),
-          col("event_type"), col("n_users"))
-        .orderBy("w_start", "event_type")),
-
-    "events_scd2" -> ((s, dir) =>
-      // SCD2 state history: per-user validity intervals from the event
-      // stream (consecutive repeats merge; open state has null valid_to);
-      // both windows partition by user — key-parallel, never global
-      EventStreams.scd2History(t(s, dir, "events"))
-        .orderBy("user_id", "valid_from")),
-
-    "events_retention" -> ((s, dir) => {
-      // cohort retention matrix: users bucketed by first-seen day, counted
-      // at each day offset they return. ONE event-scale shuffle: the
-      // per-user active-day SET aggregates with map-side combine (bounded
-      // by the date range, ~30 entries), cohort = min of the set, offsets
-      // explode locally, and the O(days²)-group cell count is a plain
-      // count(*) — each (user, day) appears exactly once post-set, so no
-      // per-cell distinct state (which scaled superlinearly: the old
-      // join + countDistinct shape measured ×3.7 at ×10 data)
-      val perUser = t(s, dir, "events")
-        .select(col("user_id"), to_date(col("ts")).as("d"))
-        .groupBy("user_id").agg(collect_set(col("d")).as("days"))
-      perUser
-        .select(array_min(col("days")).as("cohort_d"), explode(col("days")).as("d"))
-        .groupBy(col("cohort_d"), datediff(col("d"), col("cohort_d")).as("day_offset"))
-        .agg(count(lit(1)).as("n_users"))
-        // date → ISO string: parquet DATE and DuckDB DATE reach the
-        // comparator as different dtypes even when values agree
-        .select(date_format(col("cohort_d"), "yyyy-MM-dd").as("cohort_day"),
-          col("day_offset"), col("n_users"))
-        .orderBy("cohort_day", "day_offset")
-    }),
-
-    "events_moving_avg" -> ((s, dir) => {
-      // trailing 1-hour time-RANGE window frame (interval lookback, not a
-      // row count): one shuffle on event_type, one pass per partition with
-      // a sliding frame — tie-safe because RANGE includes all equal keys
-      val w = Window.partitionBy("event_type").orderBy(col("t"))
-        .rangeBetween(-3600000000L, Window.currentRow)
-      t(s, dir, "events").filter(col("event_type") === "purchase")
-        .select(col("event_type"), unix_micros(col("ts")).as("t"), col("value"),
-          // exact integer cents: the measurements are 2-decimal, and the
-          // regular event spacing makes window counts power-of-two-dense,
-          // so float window sums land on EXACT .5 rounding ties that
-          // ±1-ulp accumulation-order noise flips per engine (89 rows at
-          // sf0.1). The sliding integer sum is order-free and exact in
-          // both engines; ma is then two identical IEEE ops + sig6.
-          round(col("value") * 100, 0).cast("long").as("__cents"))
-        .withColumn("n_win", count(lit(1)).over(w))
-        .withColumn("ma",
-          sum("__cents").over(w).cast("double") / (col("n_win") * lit(100.0)))
-        .select(col("event_type"), col("t"), round(col("value"), 4).as("value"),
-          col("n_win"), sig6(col("ma")).as("ma"))
-        .orderBy("event_type", "t")
-    }),
-
-    "graph_pagerank" -> ((s, dir) => {
-      // nation trade graph (cust-nation → supp-nation, weight = revenue):
-      // 3 damped PageRank supersteps, each ONE shuffle join keyed by dst
-      val li = t(s, dir, "lineitem"); val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer"); val su = t(s, dir, "supplier")
-      val na = t(s, dir, "nation")
-      val edges = li
-        .join(o, li("l_orderkey") === o("o_orderkey"))
-        .join(c, o("o_custkey") === c("c_custkey"))
-        .join(su, li("l_suppkey") === su("s_suppkey"))
-        .join(broadcast(na.select(col("n_nationkey").as("__ck"), col("n_name").as("src"))),
-          c("c_nationkey") === col("__ck"))
-        .join(broadcast(na.select(col("n_nationkey").as("__sk"), col("n_name").as("dst"))),
-          su("s_nationkey") === col("__sk"))
-        .groupBy("src", "dst")
-        .agg(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("w"))
-      Graph.pageRank(edges, "src", "dst", "w", iterations = 3, damping = 0.85)
-        .select(col("node"), round(col("rank"), 7).as("rank"))
-        .orderBy("node")
-    }),
-
-    "graph_pagerank_dangling" -> ((s, dir) => {
-      // mass-conserving variant: only src<dst edges survive, so the
-      // alphabetically-last nations have no out-edges and their rank is
-      // re-spread uniformly each superstep (total rank stays exactly 1);
-      // the per-step dangling mass is a one-row aggregate, never a collect
-      val li = t(s, dir, "lineitem"); val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer"); val su = t(s, dir, "supplier")
-      val na = t(s, dir, "nation")
-      val edges = li
-        .join(o, li("l_orderkey") === o("o_orderkey"))
-        .join(c, o("o_custkey") === c("c_custkey"))
-        .join(su, li("l_suppkey") === su("s_suppkey"))
-        .join(broadcast(na.select(col("n_nationkey").as("__ck"), col("n_name").as("src"))),
-          c("c_nationkey") === col("__ck"))
-        .join(broadcast(na.select(col("n_nationkey").as("__sk"), col("n_name").as("dst"))),
-          su("s_nationkey") === col("__sk"))
-        .filter(col("src") < col("dst"))
-        .groupBy("src", "dst")
-        .agg(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("w"))
-      Graph.pageRank(edges, "src", "dst", "w", iterations = 3, damping = 0.85,
-          danglingMass = true)
-        .select(col("node"), round(col("rank"), 7).as("rank"))
-        .orderBy("node")
-    }),
-
-    "layout_zorder" -> ((s, dir) =>
-      // Z-order clustering-quality report: all-integer bucketize+interleave
-      // (exact SQL replay), one ≤4096-group aggregation whatever the input
-      Layout.zCellStats(t(s, dir, "lineitem"), "l_partkey", "l_suppkey", bits = 6)
-        .orderBy("zcell")),
-
-    "describe_skew_report" -> ((s, dir) =>
-      // pre-join heavy-hitter diagnostic: one map-side-combined groupBy
-      // + O(#distinct) stats; top-k via TakeOrderedAndProject
-      Describe.skewReport(t(s, dir, "events"), "event_type", topK = 5)
-        .select(col("key"), col("cnt"), col("total_rows"), col("n_keys"),
-          round(col("share"), 6).as("share"),
-          round(col("skew_ratio"), 6).as("skew_ratio"))
-        .orderBy(col("cnt").desc, col("key").asc_nulls_first)),
-
-    "describe_mutual_info" -> ((s, dir) =>
-      // pairwise MI + normalized MI from the same one-shuffle
-      // grouping-sets machinery as cramers_v; only observed cells summed
-      Describe.mutualInfo(
-          t(s, dir, "lineitem")
-            .withColumn("ship_mon", month(col("l_shipdate")).cast("string")),
-          Seq("l_returnflag", "l_linestatus", "ship_mon"))
-        .select(col("var_a"), col("var_b"), col("n"),
-          round(col("mi"), 6).as("mi"), round(col("nmi"), 6).as("nmi"))
-        .orderBy("var_a", "var_b")),
-
-    "pipeline_drift_e2e" -> ((s, dir) => {
-      // release-monitoring composition: one report row per drift check
-      // (PSI binned shares, KS sup-CDF gap, Mann-Whitney rank shift) over
-      // the same reference/candidate pair — the corpus-release gate a
-      // data team actually runs; each stage is the real library operator
-      // and the oracle unions the three stand-alone replays
-      val li = t(s, dir, "lineitem")
-      val ref = li.filter(col("l_returnflag") === "A")
-      val cur = li.filter(col("l_returnflag") === "R")
-      val both = li.filter(col("l_returnflag").isin("R", "A"))
-      // §2.6 (overlap independent jobs): the three checks are independent
-      // library operators whose EAGER metadata passes (ks/mwu tie-sort +
-      // prefix collects, psi's exact-quantile bracket jobs) otherwise run
-      // strictly one after another on the driver thread, each leaving most
-      // of the machine idle. Constructing them concurrently lets the FIFO
-      // scheduler back-fill; results are unchanged (no shared state — each
-      // builds its own plan).
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val fKs = Future(Describe.ksTwoSample(both, "l_extendedprice",
-          col("l_returnflag") === "R")
-        .select(lit("ks").as("check"), col("d").as("statistic"), col("pvalue")))
-      val fMwu = Future(Describe.mannWhitney(both, "l_extendedprice",
-          col("l_returnflag") === "R")
-        .select(lit("mannwhitney").as("check"), col("z").as("statistic"),
-          col("pvalue")))
-      val fPsi = Future(Describe.psiDrift(ref, cur, Seq("l_extendedprice"))
-        .select(lit("psi").as("check"), round(col("psi"), 6).as("statistic"),
-          lit(null).cast("double").as("pvalue")))
-      val ks = Await.result(fKs, Duration.Inf)
-      val mwu = Await.result(fMwu, Duration.Inf)
-      val psi = Await.result(fPsi, Duration.Inf)
-      ks.unionByName(mwu).unionByName(psi).orderBy("check")
-    }),
-
-    "describe_merge_distinct" -> ((s, dir) => {
-      // mergeable cardinality: per-half HLL sketches union into the
-      // whole-data estimate; the estimate is approximate BY CONTRACT so
-      // it surfaces as a deterministic in-bounds boolean against the
-      // exact count (the summarize_approx pattern). Bound widened to 8%
-      // ≈ 4.9 sigma at lgK=12 (1.04/sqrt(4096) ≈ 1.6% per sigma; ADVICE
-      // r11: the old 5% was only ~3 sigma — a legitimate tail deviation
-      // at an untested SF or future datasketches version would have
-      // surfaced as an oracle hash mismatch)
-      val li = t(s, dir, "lineitem")
-      val cols = Seq("l_orderkey", "l_partkey", "l_suppkey")
-      val merged = Describe.mergeDistinctSketches(
-        Describe.distinctSketches(li.filter(col("l_orderkey") % 2 === 0), cols),
-        Describe.distinctSketches(li.filter(col("l_orderkey") % 2 =!= 0), cols))
-      // exact branch melts the RAW longs (no string cast): the cast
-      // tripled the shuffle/hash bytes and was the whole ×16 tail at
-      // sfx10 (isolated probe: 34.2 s string vs 11.1 s long for the
-      // branch; the sketch branch is 4.9 s) — counts are cast-invariant
-      val exact = li.select(explode(array(cols.map(c =>
-          struct(lit(c).as("variable"), col(c).as("value"))): _*)).as("e"))
-        .select(col("e.variable"), col("e.value"))
-        .groupBy("variable").agg(countDistinct(col("value")).as("n_exact"))
-      merged.join(exact, Seq("variable"))
-        .select(col("variable"), col("n_exact"),
-          (abs(hll_sketch_estimate(col("sketch")) / col("n_exact") - 1.0) <= 0.08)
-            .as("est_in_bounds"))
-        .orderBy("variable")
-    }),
-
-    "describe_merge_summaries" -> ((s, dir) => {
-      // incremental corpus statistics: per-batch mergeable profiles (Chan
-      // parallel combine) must equal the whole-data stats — the oracle
-      // computes the full table directly, so the merge algebra is proven
-      val li = t(s, dir, "lineitem")
-      val cols = Seq("l_discount", "l_extendedprice", "l_quantity", "l_tax")
-      val a = Describe.numericSummary(li.filter(col("l_orderkey") % 2 === 0), cols)
-      val b = Describe.numericSummary(li.filter(col("l_orderkey") % 2 =!= 0), cols)
-      Describe.mergeSummaries(a, b)
-        .select(col("variable"), col("n"), sig6(col("mean")).as("mean"),
-          sig6(sqrt(col("m2") / (col("n") - 1).cast("double"))).as("sd"),
-          col("min"), col("max"))
-        .orderBy("variable")
-    }),
-
-    "describe_score_eval" -> ((s, dir) =>
-      // classifier/ranking evaluation: exact-int64 ROC AUC (rank
-      // identity, ties at 1/2) + sklearn-step average precision of
-      // price as a "returned" predictor
-      Describe.scoreEval(
-        t(s, dir, "lineitem").filter(col("l_returnflag").isin("R", "A")),
-        "l_extendedprice", col("l_returnflag") === "R")),
-
-    "describe_mannwhitney" -> ((s, dir) =>
-      // rank-based location-shift drift (outlier-robust where a mean test
-      // is not); 2·rank-sum and the tie correction are exact int64
-      Describe.mannWhitney(
-        t(s, dir, "lineitem").filter(col("l_returnflag").isin("R", "A")),
-        "l_extendedprice", col("l_returnflag") === "R")),
-
-    "describe_ks_drift" -> ((s, dir) =>
-      // two-sample KS between returned (R) and accepted (A) line prices:
-      // the bin-free companion to the PSI report; the maximized statistic
-      // is an exact integer so the sup is partitioning-invariant
-      Describe.ksTwoSample(
-        t(s, dir, "lineitem").filter(col("l_returnflag").isin("R", "A")),
-        "l_extendedprice", col("l_returnflag") === "R")),
-
-    "describe_psi_categorical" -> ((s, dir) => {
-      // categorical drift: day-1 reference vs whole month over the raw
-      // event_type and a derived value band (with nulls as their own
-      // tagged category); categories = union of both sides, eps floor
-      val ev = t(s, dir, "events")
-        .withColumn("value_band",
-          when(col("value").isNull, lit(null).cast("string"))
-            .when(col("value") > 10, lit("high")).otherwise(lit("low")))
-      val ref = ev.filter(col("ts") < lit("2024-01-02 00:00:00").cast("timestamp"))
-      Describe.psiCategorical(ref, ev, Seq("event_type", "value_band"))
-        .select(col("variable"), col("n_ref"), col("n_cur"), col("n_levels"),
-          round(col("psi"), 6).as("psi"))
-        .orderBy("variable")
-    }),
-
-    "describe_psi_drift" -> ((s, dir) => {
-      // corpus-drift monitor: current = a 15%-inflated price column and an
-      // unchanged quantity column; PSI flags the former, not the latter
-      val li = t(s, dir, "lineitem")
-      val cur = li.withColumn("l_extendedprice", col("l_extendedprice") * 1.15)
-      Describe.psiDrift(li, cur, Seq("l_extendedprice", "l_quantity"))
-        .select(col("variable"), col("n_ref"), col("n_cur"),
-          round(col("psi"), 6).as("psi"))
-        .orderBy("variable")
-    }),
-
-    "describe_crosstab" -> ((s, dir) =>
-      Describe.crosstab(t(s, dir, "orders"), "o_orderstatus", "o_orderpriority")
-        .orderBy("a", "b")),
-
-    "describe_chi2_independence" -> ((s, dir) =>
-      // categorical x categorical screen: chi2 + Wilson-Hilferty p, both
-      // replayed exactly in SQL (erfc poly constants and all)
-      Describe.chi2Independence(t(s, dir, "orders"), "o_orderstatus", "o_orderpriority")
-        .select(col("n"), col("df"), round(col("chi2"), 6).as("chi2"),
-          round(col("pvalue_approx"), 6).as("pvalue_approx"))),
-
-    "events_json_extract" -> ((s, dir) => {
-      // semi-structured payloads: schema-projected from_json (codegen'd;
-      // only the needed field is materialized)
-      val parsed = t(s, dir, "events").withColumn("k",
-        from_json(col("props"), org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("k",
-            org.apache.spark.sql.types.LongType)))).getField("k"))
-      parsed.groupBy("event_type")
-        .agg(count(col("k")).as("n_k"), sum("k").as("sum_k"),
-          round(avg("k"), 6).as("avg_k"))
-        .orderBy("event_type")
-    }),
-
-    // ---- modify: projections / column filters (SURVEY §2.2)
-    "modify_colfilter" -> ((s, dir) => {
-      val cf = CladeFrame(t(s, dir, "part"), "p_partkey")
-      Modify.colfilter(cf, only = Some(Seq("p_name", "p_retailprice"))).df
-        .select(col("p_partkey"), col("p_name"), round(col("p_retailprice"), 2).as("p_retailprice"))
-        .orderBy("p_partkey")
-    }),
-
-    "modify_colfilter_min_n" -> ((s, dir) => {
-      import s.implicits._
-      val cf = CladeFrame(lineitemWithNulls(s, dir), "id")
-      val cols = Seq("l_quantity", "disc_nz", "tax_nz")
-      val counts = Modify.nonNullCounts(cf, cols)
-      val total = cf.df.count()
-      cols.map(c => (c, counts(c), counts(c) >= total * 9 / 10))
-        .toDF("variable", "n_nonnull", "kept").orderBy("variable")
-    }),
-
-    "modify_colfilter_min_cat_n" -> ((s, dir) => {
-      import s.implicits._
-      val cf = CladeFrame(t(s, dir, "orders"), "o_orderkey")
-      val m = Modify.minLevelCounts(cf, Seq("o_orderstatus", "o_orderpriority"))
-      m.toSeq.map { case (k, v) => (k, v) }
-        .toDF("variable", "min_level_n").orderBy("variable")
-    }),
-
-    "modify_colfilter_percent_zero" -> ((s, dir) => {
-      import s.implicits._
-      val cf = CladeFrame(t(s, dir, "lineitem"), "l_orderkey")
-      val p = Modify.percentZero(cf, Seq("l_discount", "l_tax"))
-      p.toSeq.map { case (k, v) => (k, math.rint(v * 1e6) / 1e6) }
-        .toDF("variable", "pct_zero").orderBy("variable")
-    }),
-
-    // ---- modify: row filters (SURVEY §2.3)
-    "modify_yeo_johnson_grid" -> ((s, dir) => {
-      // power-transform normality profile: the full (column, lambda)
-      // log-likelihood grid from ONE aggregation (reporting the grid,
-      // not an argmax, is what keeps the replay exact); q_centered
-      // exercises the negative-branch psi
-      val li = t(s, dir, "lineitem")
-        .withColumn("q_centered", col("l_quantity") - 25)
-      Modify.yeoJohnsonGrid(li, Seq("l_quantity", "q_centered"))
-        .select(col("variable"), col("lambda"), col("n"),
-          round(col("llf"), 4).as("llf"))
-        .orderBy("variable", "lambda")
-    }),
-
-    "modify_quantile_bins" -> ((s, dir) => {
-      // equi-depth deciles of l_extendedprice: exact batched quantile
-      // bounds + zero-shuffle assignment; oracle replays quantile_cont
-      val li = t(s, dir, "lineitem")
-      Modify.quantileBins(li, Seq("l_extendedprice"), k = 10)
-        .groupBy(col("l_extendedprice_bin").as("bin"))
-        .agg(count(lit(1)).as("n"),
-          round(min(col("l_extendedprice")), 2).as("lo"),
-          round(max(col("l_extendedprice")), 2).as("hi"))
-        .orderBy("bin")
-    }),
-
-    "modify_rint" -> ((s, dir) =>
-      // rank-based inverse-normal transform map: average ranks (tie runs),
-      // Blom offset, Acklam ppf — all replayed verbatim by the oracle
-      Modify.rintMap(t(s, dir, "lineitem"), Seq("l_quantity", "l_tax"))
-        .select(col("variable"), col("value"), col("n_ties"),
-          round(col("rint"), 6).as("rint"))
-        .orderBy("variable", "value")),
-
-    "modify_rowfilter" -> ((s, dir) => {
-      val cf = CladeFrame(t(s, dir, "lineitem"), "l_orderkey")
-      Modify.rowfilter(cf, "l_quantity", "lt", 10).df
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"), round(sum("l_quantity"), 2).as("sum_qty"))
-        .orderBy("l_returnflag")
-    }),
-
-    "modify_rowfilter_incomplete_obs" -> ((s, dir) => {
-      val cf = CladeFrame(lineitemWithNulls(s, dir), "id")
-      Modify.rowfilterIncompleteObs(cf, only = Some(Seq("disc_nz", "tax_nz"))).df
-        .groupBy("l_returnflag").agg(count(lit(1)).as("n"))
-        .orderBy("l_returnflag")
-    }),
-
-    // ---- modify: joins (SURVEY §2.4)
-    "modify_merge_variables" -> ((s, dir) => {
-      val orders = CladeFrame(t(s, dir, "orders")
-        .select("o_custkey", "o_orderkey", "o_totalprice"), "o_custkey")
-      val cust = CladeFrame(t(s, dir, "customer")
-        .select("c_custkey", "c_name", "c_mktsegment"), "c_custkey")
-      Modify.mergeVariables(orders, cust, "inner").df
-        .filter(col("o_orderkey") <= 100)
-        .select(col("o_orderkey"), col("c_name"), round(col("o_totalprice"), 2).as("price"))
-        .orderBy("o_orderkey")
-    }),
-
-    "modify_merge_observations" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val top = CladeFrame(o.filter(col("o_orderkey") % 2 === 0), "o_orderkey")
-      val bottom = CladeFrame(o.filter(col("o_orderkey") % 2 === 1), "o_orderkey")
-      Modify.mergeObservations(top, bottom).df
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // ---- modify: column functions (SURVEY §2.9)
-    "modify_recode_values" -> ((s, dir) => {
-      val cf = CladeFrame(t(s, dir, "lineitem"), "l_orderkey")
-      Modify.recodeValues(cf,
-        Map("A" -> "accepted", "N" -> "none", "R" -> "returned"),
-        only = Some(Seq("l_returnflag"))).df
-        .groupBy("l_returnflag").agg(count(lit(1)).as("n"))
-        .orderBy("l_returnflag")
-    }),
-
-    "modify_remove_outliers_iqr" -> ((s, dir) => {
-      val cf = CladeFrame(lineitemKeyed(s, dir), "id")
-      val out = Modify.removeOutliers(cf, "iqr", 1.5, only = Some(Seq("l_extendedprice")))
-      out.df.agg(count(lit(1)).as("n_total"),
-          count(col("l_extendedprice")).as("n_kept"))
-        .withColumn("n_removed", col("n_total") - col("n_kept"))
-    }),
-
-    "modify_remove_outliers_gaussian" -> ((s, dir) => {
-      val cf = CladeFrame(lineitemKeyed(s, dir), "id")
-      val out = Modify.removeOutliers(cf, "gaussian", 2.0, only = Some(Seq("l_quantity")))
-      out.df.agg(count(lit(1)).as("n_total"),
-          count(col("l_quantity")).as("n_kept"))
-        .withColumn("n_removed", col("n_total") - col("n_kept"))
-    }),
-
-    "modify_robust_scale" -> ((s, dir) => {
-      // median/MAD standardization over two batched range sorts; the
-      // aggregate fingerprints the full scaled distribution
-      val out = Modify.robustScale(t(s, dir, "lineitem"),
-        Seq("l_quantity", "l_tax"))
-      out.agg(
-        count(col("l_quantity")).as("n_qty"),
-        round(min("l_quantity"), 6).as("qty_min"),
-        round(max("l_quantity"), 6).as("qty_max"),
-        round(avg("l_quantity"), 6).as("qty_avg"),
-        count(col("l_tax")).as("n_tax"),
-        round(min("l_tax"), 6).as("tax_min"),
-        round(max("l_tax"), 6).as("tax_max"),
-        round(avg("l_tax"), 6).as("tax_avg"))
-    }),
-
-    "modify_target_encode_loo" -> ((s, dir) =>
-      // leave-one-out target encoding: (Σ_cat − own)/(n−1) from exact
-      // int64 sums (quantity cast long) — one O(#cats) agg broadcast
-      // back, the corpus never shuffles
-      Modify.targetEncodeLoo(
-        t(s, dir, "lineitem").filter(col("l_orderkey") < 400)
-          .select(col("l_orderkey"), col("l_linenumber"),
-            col("l_returnflag").as("cat"),
-            col("l_quantity").cast("long").as("q")),
-        "cat", "q")
-        .select(col("l_orderkey"), col("l_linenumber"), col("cat"),
-          round(col("te_loo"), 6).as("te_loo"))
-        .orderBy("l_orderkey", "l_linenumber")),
-
-    "modify_winsorize" -> ((s, dir) => {
-      val out = Modify.winsorize(t(s, dir, "lineitem"),
-        Seq("l_extendedprice"), lower = 0.05, upper = 0.95)
-      out.agg(count(lit(1)).as("n"),
-        round(min("l_extendedprice"), 4).as("lo"),
-        round(max("l_extendedprice"), 4).as("hi"),
-        round(sum("l_extendedprice"), 2).as("total"))
-    }),
-
-    "modify_transform_log" -> ((s, dir) => {
-      val cf = CladeFrame(t(s, dir, "lineitem"), "l_orderkey")
-      Modify.transform(cf, "log", only = Some(Seq("l_extendedprice"))).df
-        .groupBy("l_returnflag")
-        .agg(round(sum("l_extendedprice"), 4).as("sum_log_price"))
-        .orderBy("l_returnflag")
-    }),
-
-    "modify_make_binary" -> ((s, dir) => {
-      val cf = CladeFrame(t(s, dir, "lineitem")
-        .select("l_orderkey", "l_linestatus"), "l_orderkey")
-      val bin = Modify.makeBinary(cf, only = Some(Seq("l_linestatus")))
-      Describe.freqTable(s, bin).orderBy("variable", "value")
-    }),
-
-    "modify_categorize" -> ((s, dir) => {
-      import s.implicits._
-      val cf = CladeFrame(t(s, dir, "events"), "event_id")
-      val rep = Modify.categorize(cf)
-      rep.decisions.map { case (v, u, d) => (v, u, d) }
-        .toDF("variable", "nunique", "decision").orderBy("variable")
-    }),
-
-    // ---- describe (SURVEY §2.5)
-    "describe_percent_na" -> ((s, dir) => {
-      val cf = CladeFrame(lineitemWithNulls(s, dir)
-        .select("id", "l_quantity", "disc_nz", "tax_nz"), "id")
-      Describe.percentNa(s, cf)
-        .select(col("variable"), round(col("percent_na"), 6).as("percent_na"))
-        .orderBy("variable")
-    }),
-
-    "describe_freq_table" -> ((s, dir) => {
-      var cf = CladeFrame(t(s, dir, "orders")
-        .select("o_orderkey", "o_orderstatus", "o_orderpriority"), "o_orderkey")
-      cf = Modify.makeCategorical(cf, only = Some(Seq("o_orderstatus", "o_orderpriority")))
-      Describe.freqTable(s, cf).orderBy("variable", "value")
-    }),
-
-    "describe_correlations" -> ((s, dir) => {
-      val cf = CladeFrame(t(s, dir, "lineitem")
-        .select("l_orderkey", "l_quantity", "l_extendedprice", "l_discount", "l_tax"),
-        "l_orderkey")
-      Describe.correlations(s, cf, threshold = 0.0)
-        .select(col("var1"), col("var2"), round(col("correlation"), 6).as("correlation"))
-        .orderBy("var1", "var2")
-    }),
-
-    "describe_skewness" -> ((s, dir) => {
-      val cf = CladeFrame(t(s, dir, "lineitem")
-        .select("l_orderkey", "l_quantity", "l_extendedprice", "l_discount"),
-        "l_orderkey")
-      Describe.skewness(s, cf)
-        .select(col("variable"), round(col("skew"), 6).as("skew"))
-        .orderBy("variable")
-    }),
-
-    "describe_summarize" -> ((s, dir) => {
-      val cf = CladeFrame(t(s, dir, "events"), "event_id")
-      val rep = Modify.categorize(cf)
-      Describe.summarize(s, rep.frame).orderBy("type")
-    }),
-
-    "describe_summarize_approx" -> ((s, dir) =>
-      // sketch profile with an EXACT audit core: n/mean/min/max hash-match
-      // DuckDB directly; the HLL-distinct and GK-quantile sketches are
-      // approximate by contract so they surface as deterministic in-bounds
-      // booleans (rank window ±1/accuracy; |distinct err| ≤ 3·rsd) that the
-      // oracle pins TRUE — a sketch regression past its published bound
-      // reds this row instead of hiding behind "approximate";
-      // ModifyDescribeSpec pins the numeric error bounds as units
-      // accuracy 2000 (±0.05% rank error), not the library's Spark-parity
-      // default 10000: the GK sketch's per-row insert cost is strongly
-      // superlinear in accuracy (measured 16-35s vs 5s vs 3.3s for
-      // acc 10000/2000/500 on 60M×4 values) and a corpus profile does not
-      // need ±0.01% ranks — the audit bounds scale with 1/accuracy, so the
-      // in-bounds booleans stay pinned TRUE
-      Describe.summarizeApproxAudited(s, t(s, dir, "lineitem"),
-          Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"),
-          accuracy = 2000)
-        .select(col("variable"), col("n"), round(col("mean"), 6).as("mean"),
-          round(col("min"), 6).as("min"), round(col("max"), 6).as("max"),
-          col("distinct_ok"), col("p25_ok"), col("p50_ok"), col("p75_ok"))
-        .orderBy("variable")),
-
-    "describe_histogram" -> ((s, dir) =>
-      graft.describe.Plots.histogram(t(s, dir, "lineitem"), "l_extendedprice", bins = 20)
-        .select(col("bin"), round(col("lo"), 4).as("lo"), round(col("hi"), 4).as("hi"),
-          col("count"))
-        .orderBy("bin")),
-
-    "plot_qq_prep" -> ((s, dir) =>
-      // 300 input rows <= the n=400 subsample cap, so no sampling fires and
-      // the result is deterministic; theoretical_quantile (inverse normal
-      // CDF, no DuckDB builtin) is covered by PlotsSpec instead
-      graft.describe.Plots.qqPrep(s,
-          t(s, dir, "documents").filter(col("doc_id") < 300).select("doc_id", "n_chars"),
-          Seq("n_chars"))
-        .select(col("variable"), col("position"),
-          round(col("sample_quantile"), 6).as("sample_quantile"))
-        .orderBy("variable", "position")),
-
-    // ---- analyze (SURVEY §2.10, §2.6, §2.7)
-    "analyze_assoc_continuous" -> ((s, dir) => {
-      // all-numeric design -> routed to the distributed sufficient-stats
-      // path (AggregatedGlm): one scan, no ids needed
-      var cf = CladeFrame(t(s, dir, "lineitem")
-        .select("l_orderkey", "l_extendedprice", "l_quantity", "l_discount", "l_tax"),
-        "l_orderkey")
-      AssociationStudy.run(s, cf, outcomes = Seq("l_extendedprice"),
-        regressionVariables = Seq("l_quantity", "l_discount", "l_tax"), minN = 1)
-        .select(col("Variable").as("variable"), col("N").as("n"),
-          round(col("Beta"), 4).as("beta"), round(col("SE"), 4).as("se"))
-        .orderBy("variable")
-    }),
-
-    "analyze_assoc_wide" -> ((s, dir) => {
-      // EWAS-shaped wide fan-in: 32 derived variables fitted in ONE
-      // sufficient-stats aggregation pass (AggregatedGlm batch)
-      val base = t(s, dir, "lineitem")
-      val withVars = wideVars.foldLeft(base) { case (d, (name, ex)) =>
-        d.withColumn(name, expr(ex))
-      }
-      val cf = CladeFrame(withVars.select(
-        (Seq("l_orderkey", "l_extendedprice") ++ wideVars.map(_._1)).map(col): _*),
-        "l_orderkey")
-      AssociationStudy.run(s, cf, outcomes = Seq("l_extendedprice"),
-        regressionVariables = wideVars.map(_._1), minN = 1)
-        .select(col("Variable").as("variable"), col("N").as("n"),
-          round(col("Beta"), 4).as("beta"), round(col("SE"), 4).as("se"))
-        .orderBy("variable")
-    }),
-
-    "analyze_assoc_logistic" -> ((s, dir) => {
-      // binary outcome (high-price flag) ~ each continuous rv; hash-proven:
-      // the oracle unrolls the 2-parameter IRLS (closed-form 2×2 solve per
-      // iteration) with the engine's init + stopping rule in DuckDB SQL and
-      // replays erfc via Cody's approximation — see logisticIrlsOracleSql
-      var cf = CladeFrame(t(s, dir, "lineitem")
-        .withColumn("high_price", (col("l_extendedprice") > 30000).cast("string"))
-        .select("l_orderkey", "high_price", "l_quantity", "l_discount"), "l_orderkey")
-      cf = cf.withTypes(Map("high_price" -> graft.model.VariableType.Binary))
-        .withLevels(Map("high_price" -> Seq("false", "true")))
-      AssociationStudy.run(s, cf, outcomes = Seq("high_price"),
-        regressionVariables = Seq("l_quantity", "l_discount"), minN = 1)
-        .select(col("Variable").as("variable"), col("N").as("n"),
-          round(col("Beta"), 4).as("beta"), round(col("SE"), 4).as("se"),
-          round(col("pvalue"), 6).as("pvalue"))
-        .orderBy("variable")
-    }),
-
-    "analyze_quality_logit" -> ((s, dir) => {
-      // train a document-quality classifier with the SAME IRLS engine the
-      // EWAS studies use: label = src0 membership, features = exact text
-      // signals (word count; mean word length as an integer-ratio double,
-      // so both engines fit from bitwise-identical inputs)
-      val base = t(s, dir, "documents")
-        .withColumn("is_src0", (col("source") === "src0").cast("string"))
-        .withColumn("__t", Text.normalized(col("text")))
-        .withColumn("__nw", size(split(col("__t"), " ")))
-        .withColumn("n_words", col("__nw").cast("double"))
-        .withColumn("mean_wlen",
-          (char_length(col("__t")) - (col("__nw") - 1)).cast("double") / col("__nw"))
-        .select("doc_id", "is_src0", "n_words", "mean_wlen")
-      val cf = CladeFrame(base, "doc_id")
-        .withTypes(Map("is_src0" -> graft.model.VariableType.Binary))
-        .withLevels(Map("is_src0" -> Seq("false", "true")))
-      AssociationStudy.run(s, cf, outcomes = Seq("is_src0"),
-          regressionVariables = Seq("mean_wlen", "n_words"), minN = 1)
-        // se/pvalue at 3dp: the near-constant mean_wlen design makes the
-        // deviance stop marginal, and the engine can legitimately take one
-        // more IRLS step than the replay (see logisticIrlsOracleSqlFor)
-        .select(col("Variable").as("variable"), col("N").as("n"),
-          round(col("Beta"), 4).as("beta"), round(col("SE"), 3).as("se"),
-          round(col("pvalue"), 3).as("pvalue"))
-        .orderBy("variable")
-    }),
-
-    "analyze_assoc_cogroup" -> ((s, dir) => {
-      // the 100 TB association path, driver-oracled (VERDICT r9 #6): a
-      // CATEGORICAL covariate (l_returnflag) disqualifies the all-numeric
-      // sufficient-stats fast path, and broadcastBase=Some(false) forces the
-      // co-group route — melted variables JOIN the base block, each group
-      // streams through the row kernel, nothing row-scale reaches the driver
-      // (AssociationCogroupOracleSpec asserts !wasCollectedForBroadcast).
-      // Oracle: Frisch–Waugh — demeaning y and x within returnflag groups
-      // absorbs intercept + dummies, so the rv's beta/SE from the simple
-      // regression on residuals equal the full-model GLM's (df = n - k - 1).
-      // orders: o_orderkey is the one genuinely UNIQUE key in the testdata
-      // (the co-group path rejects duplicate observation ids — they'd
-      // explode the melt⋈base join); order_day = days since 1992-01-01
-      val cf = CladeFrame(t(s, dir, "orders")
-        .withColumn("order_day",
-          datediff(col("o_orderdate").cast("date"), lit("1992-01-01")).cast("double"))
-        .select("o_orderkey", "o_totalprice", "o_orderstatus",
-          "o_custkey", "order_day"), "o_orderkey")
-        .withTypes(Map("o_orderstatus" -> graft.model.VariableType.Categorical))
-      AssociationStudy.run(s, cf, outcomes = Seq("o_totalprice"),
-        covariates = Seq("o_orderstatus"),
-        regressionVariables = Seq("o_custkey", "order_day"), minN = 1,
-        broadcastBase = Some(false))
-        .select(col("Variable").as("variable"), col("N").as("n"),
-          round(col("Beta"), 4).as("beta"), round(col("SE"), 4).as("se"))
-        .orderBy("variable")
-    }),
-
-    "analyze_corrected_pvalues" -> ((s, dir) =>
-      Corrections.addCorrectedPvalues(docPvalues(s, dir))
-        .select(col("doc_id"), round(col("pvalue"), 6).as("pvalue"),
-          round(col("pvalue_bonferroni"), 6).as("pvalue_bonferroni"),
-          round(col("pvalue_fdr"), 6).as("pvalue_fdr"))
-        .orderBy("doc_id")),
-
-    "analyze_top_results" -> ((s, dir) =>
-      docPvalues(s, dir)
-        .orderBy(col("pvalue"), col("doc_id")).limit(10)
-        .select(col("doc_id"), round(col("pvalue"), 6).as("pvalue"))),
-
-    "analyze_manhattan_prep" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 100)
-        .select(col("doc_id"), col("lang"),
-          ((col("doc_id") * 37 % 100 + 1).cast("double") / 101.0).as("pvalue"))
-      Corrections.manhattanPrep(docs, "pvalue", "lang")
-        .select(col("doc_id"), col("lang"),
-          round(col("neg_log_pvalue"), 6).as("neg_log_pvalue"), col("xpos"))
-        .orderBy("doc_id")
-    }),
-
-    "analyze_corrected_grouped" -> ((s, dir) => {
-      // grouped correction mode (reference: analyze/utils.py:77-117):
-      // repeated tests share the group keys, the correction is computed
-      // once per de-duplicated group (m = #groups, not #rows), then
-      // re-joined to every original row
-      val li = t(s, dir, "lineitem")
-      val g = li.groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(round(avg("l_discount"), 6).as("pvalue"))
-      val members = li.select(col("l_returnflag"), col("l_linestatus"),
-        col("l_linenumber").as("member")).distinct()
-      val base = members.join(g, Seq("l_returnflag", "l_linestatus"))
-      Corrections.addCorrectedPvalues(base,
-          groupby = Seq("l_returnflag", "l_linestatus"))
-        .select(col("l_returnflag"), col("l_linestatus"), col("member"),
-          round(col("pvalue"), 6).as("pvalue"),
-          round(col("pvalue_bonferroni"), 6).as("pvalue_bonferroni"),
-          round(col("pvalue_fdr"), 6).as("pvalue_fdr"))
-        .orderBy("l_returnflag", "l_linestatus", "member")
-    }),
-
-    "analyze_get_significant" -> ((s, dir) => {
-      // significance filter over corrected results (reference:
-      // cli/commands/analyze.py:299-324); a planted 0.001 factor on every
-      // 10th doc gives the FDR pass a clear margin on both sides of the
-      // cutoff (tiny group fdr ~0.01, rest ~0.99 — no boundary floats)
-      val p = t(s, dir, "documents").filter(col("doc_id") < 200)
-        .select(col("doc_id"),
-          (((col("doc_id") * 37 % 100 + 1).cast("double") / 101.0) *
-            when(col("doc_id") % 10 === 0, 0.001).otherwise(1.0)).as("pvalue"))
-      Corrections.getSignificant(Corrections.addCorrectedPvalues(p), cutoff = 0.05)
-        .select(col("doc_id"), round(col("pvalue"), 8).as("pvalue"),
-          round(col("pvalue_fdr"), 6).as("pvalue_fdr"))
-        .orderBy("doc_id")
-    }),
-
-    "analyze_interaction_pair" -> ((s, dir) => {
-      // InteractionStudy LRT (reference: interaction_regression.py:22-501):
-      // gaussian outcome, three continuous pairs — full model
-      // y ~ 1 + v1 + v2 + v1:v2 vs restricted without the product term,
-      // lrstat = -2*(llf_r - llf_f) with estimated (Pearson) scale. The
-      // oracle replays the 4-parameter normal equations in DuckDB via
-      // sequential Gram-Schmidt orthogonalization: by Frisch-Waugh-Lovell
-      // the slope of the LAST orthogonalized regressor IS the full-model
-      // interaction beta, and the per-stage projection drops give both RSS
-      // values in closed form (see interactionPairArm)
-      val cf = CladeFrame(t(s, dir, "lineitem")
-        .select("l_orderkey", "l_extendedprice", "l_quantity", "l_discount", "l_tax"),
-        "l_orderkey")
-      InteractionStudy.run(s, cf, outcome = "l_extendedprice",
-        interactions = Seq(("l_quantity", "l_discount"), ("l_quantity", "l_tax"),
-          ("l_discount", "l_tax")), minN = 1)
-        .select(col("Term1").as("term1"), col("Term2").as("term2"),
-          col("N").as("n"),
-          sig6(col("Beta")).as("beta"), sig6(col("SE")).as("se"),
-          round(col("LRT_pvalue"), 6).as("lrt_pvalue"))
-        .orderBy("term1", "term2")
-    }),
-
-    "analyze_interaction_betas" -> ((s, dir) => {
-      // report_betas mode (reference: interaction_regression.py:255-295):
-      // one row per interaction design column carrying the REDUCED-model
-      // coefficients and the FULL-model var1/var2/interaction coefficients.
-      // Oracle: explicit Cramer's-rule solve of the 3-predictor normal
-      // equations on centered moments (betas + SEs + estimated-scale LRT);
-      // the t-based per-coefficient p-values stay golden-tested only
-      val cf = CladeFrame(t(s, dir, "lineitem")
-        .select("l_orderkey", "l_extendedprice", "l_quantity", "l_discount"),
-        "l_orderkey")
-      InteractionStudy.run(s, cf, outcome = "l_extendedprice",
-        interactions = Seq(("l_quantity", "l_discount")), minN = 1,
-        reportBetas = true)
-        .select(col("Term1").as("term1"), col("Term2").as("term2"),
-          col("Parameter").as("parameter"), col("N").as("n"),
-          round(col("LRT_pvalue"), 6).as("lrt_pvalue"),
-          sig6(col("Red_Var1_beta")).as("red_v1_beta"),
-          sig6(col("Red_Var1_SE")).as("red_v1_se"),
-          sig6(col("Red_Var2_beta")).as("red_v2_beta"),
-          sig6(col("Red_Var2_SE")).as("red_v2_se"),
-          sig6(col("Full_Var1_Var2_beta")).as("full_inter_beta"),
-          sig6(col("Full_Var1_Var2_SE")).as("full_inter_se"),
-          sig6(col("Full_Var1_beta")).as("full_v1_beta"),
-          sig6(col("Full_Var1_SE")).as("full_v1_se"),
-          sig6(col("Full_Var2_beta")).as("full_v2_beta"),
-          sig6(col("Full_Var2_SE")).as("full_v2_se"))
-    }),
-
-    "analyze_interaction_allpairs" -> ((s, dir) => {
-      // EWAS-shaped ALL-PAIRS interaction scan: 10 derived continuous
-      // variables -> allPairs = 45 pair models (90 OLS fits), ALL from ONE
-      // sufficient-stats treeAggregate scan (the aggregated fast path —
-      // nothing row-scale anywhere). The oracle replays every pair with
-      // the same Gram-Schmidt arms as analyze_interaction_pair, over the
-      // vars' defining SQL expressions
-      val base = t(s, dir, "lineitem")
-      val withVars = interScanVars.foldLeft(base) { case (d, (name, ex)) =>
-        d.withColumn(name, expr(ex))
-      }
-      val cf = CladeFrame(withVars.select(
-        (Seq("l_orderkey", "l_extendedprice") ++ interScanVars.map(_._1)).map(col): _*),
-        "l_orderkey")
-      InteractionStudy.run(s, cf, outcome = "l_extendedprice",
-        interactions = InteractionStudy.allPairs(cf, "l_extendedprice"), minN = 1)
-        .select(col("Term1").as("term1"), col("Term2").as("term2"),
-          col("N").as("n"),
-          sig6(col("Beta")).as("beta"), sig6(col("SE")).as("se"),
-          round(col("LRT_pvalue"), 6).as("lrt_pvalue"))
-        .orderBy("term1", "term2")
-    }),
-
-    "analyze_interaction_categorical" -> ((s, dir) => {
-      // categorical × continuous interaction (patsy level crossings,
-      // reference: interaction_regression.py:308-314): full model
-      // y ~ 1 + C + x + C:x spans exactly one (intercept, slope) line PER
-      // LEVEL, so the oracle computes RSS_full as the sum of per-level
-      // simple-regression residuals (grouped regr_* aggregates) and
-      // RSS_restricted by the ANCOVA common-slope identity — no matrix
-      // solve needed; lrdf = 2 makes chi2_sf(x,2) = exp(-x/2) SQL-exact
-      var cf = CladeFrame(t(s, dir, "lineitem")
-        .select("l_orderkey", "l_extendedprice", "l_quantity", "l_returnflag"),
-        "l_orderkey")
-      // makeCategorical DECLARES the level set, which routes this through
-      // the one-scan sufficient-stats path (patsy submatrix selection)
-      cf = Modify.makeCategorical(cf, only = Some(Seq("l_returnflag")))
-      InteractionStudy.run(s, cf, outcome = "l_extendedprice",
-        interactions = Seq(("l_returnflag", "l_quantity")), minN = 1)
-        .select(col("Term1").as("term1"), col("Term2").as("term2"),
-          col("N").as("n"), round(col("LRT_pvalue"), 6).as("lrt_pvalue"))
-    }),
-
-    "modify_make_categorical" -> ((s, dir) => {
-      // make_categorical (reference: modify.py:456-500): records the
-      // observed level sets as variable metadata; surfaced here as
-      // (variable, level) rows
-      import s.implicits._
-      var cf = CladeFrame(t(s, dir, "orders")
-        .select("o_orderkey", "o_orderstatus", "o_orderpriority"), "o_orderkey")
-      cf = Modify.makeCategorical(cf, only = Some(Seq("o_orderstatus", "o_orderpriority")))
-      cf.levels.toSeq.flatMap { case (v, ls) => ls.map(v -> _) }
-        .toDF("variable", "level").orderBy("variable", "level")
-    }),
-
-    "modify_make_continuous" -> ((s, dir) => {
-      // make_continuous (reference: modify.py:503-567): string-encoded
-      // numerics cast to double, any uncastable value is an error; the
-      // aggregate checksum proves the round-trip preserved every value
-      var cf = CladeFrame(t(s, dir, "lineitem")
-        .select(col("l_orderkey"),
-          col("l_quantity").cast("string").as("qty_str")), "l_orderkey")
-      cf = Modify.makeContinuous(cf, only = Some(Seq("qty_str")))
-      cf.df.agg(count(col("qty_str")).as("n"),
-        round(sum("qty_str"), 4).as("total"),
-        round(avg("qty_str"), 6).as("mean"))
-    }),
-
-    "modify_drop_extra_categories" -> ((s, dir) => {
-      // drop_extra_categories (reference: modify.py:1011-1061): a
-      // rowfilter leaves the recorded level set stale ('F' becomes a
-      // phantom level with zero rows); the op refreshes metadata from data
-      import s.implicits._
-      var cf = CladeFrame(t(s, dir, "orders")
-        .select("o_orderkey", "o_orderstatus"), "o_orderkey")
-      cf = Modify.makeCategorical(cf, only = Some(Seq("o_orderstatus")))
-      val filtered = cf.copy(df = cf.df.filter(col("o_orderstatus") =!= "F"))
-      val refreshed = Modify.dropExtraCategories(filtered, only = Some(Seq("o_orderstatus")))
-      refreshed.levels.toSeq.flatMap { case (v, ls) => ls.map(v -> _) }
-        .toDF("variable", "level").orderBy("variable", "level")
-    }),
-
-    "modify_move_variables" -> ((s, dir) => {
-      // move_variables (reference: modify.py:888-940): o_totalprice moves
-      // from the left frame to the right via the outer id-join; the
-      // per-variable sums prove the join aligned every row (a duplicated
-      // or dropped id would shift a checksum)
-      val c = t(s, dir, "customer")
-      val left0 = CladeFrame(c.select("c_custkey", "c_acctbal", "c_nationkey"),
-        "c_custkey")
-      val right0 = CladeFrame(c.select("c_custkey", "c_name"), "c_custkey")
-      val (nl, nr) = Modify.moveVariables(left0, right0, only = Some(Seq("c_acctbal")))
-      def sums(side: String, cf: CladeFrame) = cf.variables.sorted.map(v =>
-        cf.df.agg(count(col(v)).as("n_vals"),
-            round(sum(col(v).cast("double")), 2).as("value_sum"))
-          .select(lit(side).as("side"), lit(v).as("variable"),
-            col("n_vals"), col("value_sum")))
-      (sums("left", nl) ++ sums("right", nr)).reduce(_ unionByName _)
-        .orderBy("side", "variable")
-    }),
-
-    // ---- survey-design grouped aggregates, relationally (SURVEY §2.5)
-    "survey_design_aggs" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .withColumn("clust", col("o_custkey") % 20)
-        .groupBy(col("o_orderpriority").as("strat"))
-        .agg(countDistinct("clust").as("n_clusters"),
-          count(lit(1)).as("n_rows"),
-          round(avg("o_totalprice"), 4).as("avg_weight"))
-        .orderBy("strat")),
-
-    "genotype_ld" -> ((s, dir) => {
-      // linkage-disequilibrium screen: pairwise r² between SNP dosages
-      // (alt-allele counts) — ONE aggregation computes every pair's corr;
-      // the genotype-aware twin of describe_correlations
-      val li = t(s, dir, "lineitem")
-      val d = li.select(
-        ((col("l_linenumber") % 2) + (col("l_suppkey") % 2)).cast("double").as("s1"),
-        ((col("l_partkey") % 2) + (col("l_orderkey") % 2)).cast("double").as("s2"),
-        (when(col("l_orderkey") % 3 === 0, 1).otherwise(0)
-          + when(col("l_suppkey") % 3 === 0, 1).otherwise(0)).cast("double").as("s3"))
-      d.agg(
-        round(pow(corr(col("s1"), col("s2")), 2), 6).as("r2_s1_s2"),
-        round(pow(corr(col("s1"), col("s3")), 2), 6).as("r2_s1_s3"),
-        round(pow(corr(col("s2"), col("s3")), 2), 6).as("r2_s2_s3"))
-    }),
-
-    "genotype_maf_describe" -> ((s, dir) => {
-      // diploid calls synthesized deterministically from lineitem ints ->
-      // Genotypes.describeMaf (ONE stack melt + ONE grouped aggregation);
-      // DuckDB replays the identical alt-count arithmetic
-      val li = t(s, dir, "lineitem")
-      val calls = li.select(
-        xxhash64(li.columns.map(col): _*).as("id"),
-        array((col("l_linenumber") % 2).cast("int"),
-          (col("l_suppkey") % 2).cast("int")).as("g1"),
-        array((col("l_partkey") % 2).cast("int"),
-          (col("l_orderkey") % 2).cast("int")).as("g2"))
-      val cf = CladeFrame(calls).withTypes(Map(
-        "g1" -> (graft.model.VariableType.Genotype: graft.model.VariableType),
-        "g2" -> (graft.model.VariableType.Genotype: graft.model.VariableType)))
-      graft.genomics.Genotypes.describeMaf(cf)
-        .select(col("variable"), col("n_obs"), col("n_hom_ref"), col("n_het"),
-          col("n_hom_alt"), col("n_missing"),
-          round(col("alt_freq"), 6).as("alt_freq"), round(col("maf"), 6).as("maf"))
-        .orderBy("variable")
-    }),
-
-    "dedup_stream_batch" -> ((s, dir) => {
-      // at-least-once re-delivery simulated by a self-union; the SAME
-      // transform that runs watermarked on a stream (EventStreams
-      // .dedupStream) dedups it in batch mode — one definition, two modes
-      val ev = t(s, dir, "events")
-      EventStreams.dedupStream(ev.unionAll(ev))
-        .groupBy("event_type").agg(count(lit(1)).as("n"))
-        .orderBy("event_type")
-    }),
-
-    // ---- streaming-shaped custom state: gap sessionization
-    "sessionize_events" -> ((s, dir) => {
-      import s.implicits._
-      // predicate BEFORE the stateful op: sessionization is per-user, so
-      // the user slice prunes the scan — Catalyst cannot push a filter
-      // through mapGroups itself (plan-audit finding, r3)
-      EventStreams.sessionize(s, t(s, dir, "events").filter(col("user_id") < 50),
-          gapSeconds = 1800)
-        .groupByKey(_.user_id)
-        .mapGroups((u, it) => {
-          val ss = it.toSeq
-          (u, ss.size.toLong, ss.map(_.n_events).sum)
-        })
-        .toDF("user_id", "n_sessions", "n_events")
-        .filter(col("user_id") < 50)
-        .orderBy("user_id")
-    }),
-
-    // ---- dedup (driver mandate)
-    "dedup_exact" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-      Dedup.exactReport(docs, "text", "doc_id")
-        .agg(count(lit(1)).as("n_groups"), sum("n").as("n_docs"),
-          sum(when(col("n") > 1, col("n") - 1).otherwise(0L)).as("n_dupes"))
-    }),
-
-    "dedup_exact_against" -> ((s, dir) => {
-      // incremental dedup: the "new batch" (doc_id >= 250) against the
-      // fingerprint index of the existing corpus (doc_id < 250); bloom
-      // prunes the verify shuffle, result is the exact anti-join
-      val docs = t(s, dir, "documents")
-      val known = Dedup.exactReport(docs.filter(col("doc_id") < 250),
-        "text", "doc_id").select("fp")
-      Dedup.exactAgainst(docs.filter(col("doc_id") >= 250), known, "text")
-        .select(col("doc_id"), col("source"))
-        .orderBy("doc_id")
-    }),
-
-    "decon_semantic" -> ((s, dir) => {
-      // embedding-space decontamination: train = vec_id >= 100 scored
-      // against the "eval set" vec_id < 20; flags cosine >= 0.4
-      val e = t(s, dir, "embeddings")
-      Decontaminate.semanticOverlap(e.filter(col("vec_id") >= 100),
-          e.filter(col("vec_id") < 20), threshold = 0.4)
-        .select(col("id"), col("best_eval_id"),
-          round(col("best_cosine"), 6).as("best_cosine"), col("contaminated"))
-        .orderBy("id")
-    }),
-
-    "dedup_minhash_lsh" -> ((s, dir) => {
-      // hash-proven: the oracle replays polyHash + the fmix64 family +
-      // band buckets + candidate pairs in DuckDB SQL (see minhashOracleSql).
-      // est_jaccard stays unrounded — k/64 is an exact binary double on
-      // both engines, while round() would pit HALF_UP against HALF_EVEN.
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 200)
-      Dedup.minhashCandidates(s, docs, "text", "doc_id")
-        .select(col("id1"), col("id2"), col("est_jaccard"))
-        .orderBy("id1", "id2")
-    }),
-
-    "dedup_minhash_star" -> ((s, dir) => {
-      // the linear-in-duplication grouping path (star edges per bucket —
-      // same connected components as the pairwise cliques, O(m·bands)
-      // edges instead of O(m²); DedupStarSpec asserts component equality);
-      // hash-proven via the shared banded replay + per-bucket min rep
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 200)
-      Dedup.minhashStarEdges(s, docs, "text", "doc_id")
-        .orderBy("id1", "id2")
-    }),
-
-    "dedup_cluster_histogram" -> ((s, dir) => {
-      // the curation dashboard's "how deep is the duplication" number:
-      // duplicate-cluster SIZE distribution over the linear star-edge
-      // components (n_clusters per size; singletons = size 1). Output is
-      // O(max cluster size) rows at any corpus scale
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 200)
-      val comps = Dedup.components(
-        Dedup.minhashStarEdges(s, docs, "text", "doc_id"))
-      docs.select(col("doc_id").cast("string").as("id"))
-        .join(comps, Seq("id"), "left")
-        .select(coalesce(col("component"), col("id")).as("component"))
-        .groupBy("component").agg(count(lit(1)).as("size"))
-        .groupBy("size").agg(count(lit(1)).as("n_clusters"))
-        .orderBy("size")
-    }),
-
-    "dedup_source_report" -> ((s, dir) => {
-      // per-source exact-duplication dashboard: docs, distinct
-      // fingerprints, dup rate — ONE aggregation (count_distinct is the
-      // standard two-phase partial), zero joins. Copies are PLANTED
-      // (doc_id<30 re-ingested, same source) so the rate column does
-      // real work: the corpus has no natural byte-dups at the oracle SF
-      val d0 = t(s, dir, "documents").filter(col("source").isNotNull)
-        .select(col("doc_id"), col("source"), col("text"))
-      d0.unionByName(d0.filter(col("doc_id") < 30)
-          .withColumn("doc_id", col("doc_id") + 10000L))
-        .select(col("source"), Text.fingerprint(col("text")).as("__f"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          count_distinct(col("__f")).as("n_unique"))
-        .withColumn("dup_rate",
-          round((col("n_docs") - col("n_unique")).cast("double") /
-            col("n_docs"), 6))
-        .orderBy("source")
-    }),
-
-    "dedup_simhash" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 200)
-      Dedup.simhashCandidates(s, docs, "text", "doc_id")
-        .filter(col("hamming") <= 16)
-        .orderBy("id1", "id2")
-    }),
-
-    "dedup_ngram_jaccard" -> ((s, dir) => {
-      // exact jaccard on consecutive-id pairs (linear, deterministic)
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 100)
-      val pairs = docs.select(col("doc_id").as("id1"))
-        .withColumn("id2", col("id1") + 1).filter(col("id2") < 100)
-      Dedup.ngramJaccard(s, docs, pairs, "text", "doc_id", shingleK = 4)
-        .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("id1", "id2")
-    }),
-
-    "dedup_containment" -> ((s, dir) => {
-      // asymmetric overlap on consecutive-id pairs: containment catches
-      // short-in-long embeddings that jaccard dilutes
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 100)
-      val pairs = docs.select(col("doc_id").as("id1"))
-        .withColumn("id2", col("id1") + 1).filter(col("id2") < 100)
-      Dedup.ngramContainment(s, docs, pairs, "text", "doc_id", shingleK = 4)
-        .select(col("id1"), col("id2"),
-          round(col("containment1"), 6).as("containment1"),
-          round(col("containment2"), 6).as("containment2"),
-          round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("id1", "id2")
-    }),
-
-    "dedup_components" -> ((s, dir) => {
-      // verified pairs (consecutive-id chain, exact jaccard >= 0.3) ->
-      // connected components -> duplicate groups with min-id keeper
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 100)
-      val pairs = docs.select(col("doc_id").as("id1"))
-        .withColumn("id2", col("id1") + 1).filter(col("id2") < 100)
-      val verified = Dedup.ngramJaccard(s, docs, pairs, "text", "doc_id", shingleK = 4)
-        .filter(col("jaccard") >= 0.3)
-      Dedup.components(verified)
-        .select(col("id").cast("long").as("id"),
-          col("component").cast("long").as("component"))
-        .orderBy("id")
-    }),
-
-    "dedup_keep_best" -> ((s, dir) => {
-      // same verified chain components as dedup_components, but the keeper
-      // is the BEST cluster member (longest canonical text, string-id tie
-      // break) instead of the min id — the quality-aware canonical cut
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 100)
-      val pairs = docs.select(col("doc_id").as("id1"))
-        .withColumn("id2", col("id1") + 1).filter(col("id2") < 100)
-      val verified = Dedup.ngramJaccard(s, docs, pairs, "text", "doc_id", shingleK = 4)
-        .filter(col("jaccard") >= 0.3)
-      val comps = Dedup.components(verified)
-      Dedup.keepBest(docs, comps, "doc_id",
-          length(graft.pipeline.Text.normalized(col("text"))))
-        .select(col("doc_id").cast("long").as("doc_id"),
-          col("component").cast("long").as("component"),
-          length(graft.pipeline.Text.normalized(col("text"))).cast("long").as("quality"))
-        .orderBy("doc_id")
-    }),
-
-    "dedup_embedding_cosine" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      val a = e.select(col("vec_id").as("id1"), col("embedding").as("v1"))
-      val b = e.select((col("vec_id") - 1).as("id1"), col("vec_id").as("id2"),
-        col("embedding").as("v2"))
-      a.join(b, Seq("id1"))
-        .withColumn("cosine", round(Similarity.dot(col("v1"), col("v2")) /
-          (Similarity.norm(col("v1")) * Similarity.norm(col("v2"))), 6))
-        .select("id1", "id2", "cosine")
-        .orderBy("id1")
-    }),
-
-    // ---- similarity search (driver mandate)
-    "ann_bruteforce_topk" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-      Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 5), k = 3)
-        .orderBy("query_id", "rank")
-    }),
-
-    "ann_mmr_rerank" -> ((s, dir) => {
-      // diversity-aware rerank: top-8 cosine candidates per query, MMR
-      // greedy keeps 4 (lambda=0.5); every argmax on a 6dp decimal grid
-      val e = t(s, dir, "embeddings")
-      Similarity.mmrRerank(e, e.filter(col("vec_id") < 4), k = 4, m = 8)
-        .orderBy("query_id", "rank")
-    }),
-
-    "ann_hard_negatives" -> ((s, dir) => {
-      // contrastive-training mining: for each labeled query, the 3 most
-      // cosine-similar corpus vectors with a DIFFERENT label
-      val e = t(s, dir, "embeddings")
-      Similarity.hardNegatives(e, e.filter(col("vec_id") < 5), k = 3)
-        .orderBy("query_id", "rank")
-    }),
-
-    "ann_hard_negatives_ivf" -> ((s, dir) => {
-      // the SCALE path for negative mining (r12 VERDICT #6): candidates
-      // come from the probed IVF lists (nProbe/nLists of the corpus per
-      // query) instead of the exact full scan; label inequality in the
-      // same scan filter. ann_hard_negatives stays the exact contract;
-      // recall of this funnel vs exact is spec-asserted (PipelineSpec)
-      val e = t(s, dir, "embeddings")
-      val (model, assigned) = ivfIndex(s, dir)
-      Similarity.hardNegativesIvf(model, assigned,
-          e.filter(col("vec_id") < 5), k = 3, nProbe = 4)
-        .orderBy("query_id", "rank")
-    }),
-
-    "sample_kcenter" -> ((s, dir) => {
-      // greedy farthest-point diversity pick: 5 rounds, min-id seed,
-      // distances rounded to the shared decimal grid before each argmax
-      Similarity.kCenter(t(s, dir, "embeddings"), k = 5)
-        .orderBy("round")
-    }),
-
-    "ann_matryoshka_topk" -> ((s, dir) => {
-      // MRL-style funnel: coarse cosine on the first 16 of 64 dims keeps
-      // the top 10 per query; exact full-dim cosine reranks to top 3
-      val e = t(s, dir, "embeddings")
-      Similarity.matryoshkaTopK(e, e.filter(col("vec_id") < 5),
-          k = 3, prefixDims = 16, rerankK = 10)
-        .orderBy("query_id", "rank")
-    }),
-
-    "ann_knn_classify" -> ((s, dir) => {
-      // kNN majority-vote over the labeled embedding corpus — the
-      // label-propagation primitive; exact cosine votes, deterministic
-      // tie-break, full SQL replay in the oracle
-      val e = t(s, dir, "embeddings")
-      Similarity.knnClassify(e, e.filter(col("vec_id") < 50), k = 5)
-        .orderBy("query_id")
-    }),
-
-    "ann_label_audit" -> ((s, dir) => {
-      // noisy-label screen: per-label kNN agreement rate over a labeled
-      // slice; same exact-cosine vote kernel, aggregated per true label
-      val e = t(s, dir, "embeddings")
-      Similarity.knnLabelAudit(e, e.filter(col("vec_id") < 100), k = 5)
-    }),
-
-    "ann_lsh_topk" -> ((s, dir) => {
-      // approximate path, hash-proven: the oracle replays the seeded
-      // hyperplane family, sign-bit signatures, multi-probe buckets, and
-      // in-bucket cosine top-k in DuckDB SQL (see lshOracleSql); recall vs
-      // brute force is additionally asserted in SimilaritySpec
-      val e = t(s, dir, "embeddings")
-      Similarity.lshTopK(e, e.filter(col("vec_id") < 50), k = 3, dim = 64, bits = 4)
-        .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 6).as("cosine"),
-          col("rank"))
-        .orderBy("query_id", "rank")
-    }),
-
-    "ann_ivf_topk" -> ((s, dir) => {
-      // IVF coarse-quantizer path, HASH-PROVEN: ivfTrain is deterministic
-      // first-k-seeded Lloyd with 6-decimal center pinning, so the DuckDB
-      // oracle replays the full train/assign/query pipeline in chained
-      // CTEs (ivfOracleCtes). Recall + exactness-at-full-probe are also
-      // asserted in PipelineSpec. Uses the build-once index (train +
-      // assign memoized per dir) so repeated calls measure the QUERY path —
-      // the shape production has after persisting the assignment.
-      val (model, assigned) = ivfIndex(s, dir)
-      Similarity.ivfQuery(model, assigned, t(s, dir, "embeddings").filter(col("vec_id") < 50),
-          k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 6).as("cosine"),
-          col("rank"))
-        .orderBy("query_id", "rank")
-    }),
-
-    "ann_recall_eval" -> ((s, dir) => {
-      // index acceptance metric: recall@3 of the nProbe=4 IVF path
-      // against the exact brute-force ground truth, per query — both
-      // paths deterministic (round-before-rank + id tie-breaks), so the
-      // overlap count is hash-exact
-      val e = t(s, dir, "embeddings")
-      val queries = e.filter(col("vec_id") < 50)
-      val (model, assigned) = ivfIndex(s, dir)
-      val approx = Similarity.ivfQuery(model, assigned, queries, k = 3, nProbe = 4)
-        .select(col("query_id"), col("neighbor_id"), lit(1L).as("__hit"))
-      val truth = Similarity.bruteForceTopK(e, queries, k = 3)
-        .select(col("query_id"), col("neighbor_id"))
-      truth.join(approx, Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(sum(coalesce(col("__hit"), lit(0L))).as("n_hits"))
-        .withColumn("recall_at_3", round(col("n_hits").cast("double") / 3.0, 6))
-        .orderBy("query_id")
-    }),
-
-    "ann_pq_topk" -> ((s, dir) => {
-      // product quantization (Jégou 2011): per-block codebooks trained
-      // with the grid-pinned Lloyd loop, per-vector codes, then ADC
-      // scoring — O(m) codeword lookups per candidate instead of O(dim)
-      // float ops. HASH-PROVEN: the oracle replays all 4 block Lloyd
-      // chains, the code assignment, and the round-before-rank ADC scan
-      val e = t(s, dir, "embeddings")
-      val model = pqIndex(s, dir)
-      val coded = Similarity.pqAssign(model, e)
-      Similarity.pqAdcTopK(model, coded, e.filter(col("vec_id") < 5), k = 3)
-        .orderBy("query_id", "rank")
-    }),
-
-    "ann_ivfpq_topk" -> ((s, dir) => {
-      // the billion-scale layout: IVF prunes WHICH candidates are scored
-      // (probe 4 lists, join on list_id — corpus × nProbe, never corpus ×
-      // queries), PQ codes cut the COST of each score to O(m) lookups.
-      // HASH-PROVEN: ivf Lloyd chains + pq block chains + ADC replay
-      val e = t(s, dir, "embeddings")
-      val (ivfModel, assigned) = ivfIndex(s, dir)
-      val pq = pqIndex(s, dir)
-      val coded = Similarity.pqAssign(pq, assigned)
-      Similarity.ivfPqTopK(ivfModel, pq, coded,
-          e.filter(col("vec_id") < 20), k = 3, nProbe = 4)
-        .orderBy("query_id", "rank")
-    }),
-
-    "ann_knn_graph" -> ((s, dir) => {
-      // whole-corpus neighbor graph over the CORPUS-SCALED IVF index
-      // (ivfTrainScaled: nLists = max(16, n/200), so candidate pairs stay
-      // ~n·nProbe·200 — linear — at every corpus scale; the r15 probes
-      // measured the old fixed-nLists=16 config quadratic at sf1).
-      // knnGraph additionally pre-flights the candidate bound against
-      // graft.ann.maxGraphCandidates before launching the join.
-      // HASH-PROVEN: the oracle replays the same greatest(16, n//200)
-      // list count inside the Lloyd CTE chain (ivfGraphOracleSql);
-      // full-probe ≡ brute force is additionally asserted in PipelineSpec
-      val (model, assigned) = ivfGraphIndex(s, dir)
-      Similarity.knnGraph(model, assigned, k = 3, nProbe = 2)
-        .select(col("src_id"), col("dst_id"), round(col("cosine"), 6).as("cosine"),
-          col("rank"))
-        .orderBy("src_id", "rank")
-    }),
-
-    "ann_label_audit_graph" -> ((s, dir) => {
-      // CORPUS-SCALE label audit: majority vote over the bucketed IVF kNN
-      // graph (corpus-scaled nLists + the knnGraph candidate gate keep it
-      // linear, unlike the brute oracle slice in ann_label_audit).
-      // HASH-PROVEN: the oracle replays the Lloyd-CTE index at the same
-      // scaled list count, the graph, and the vote algebra
-      // (labelAuditGraphOracleSql)
-      val (model, assigned) = ivfGraphIndex(s, dir)
-      val graph = Similarity.knnGraph(model, assigned, k = 3, nProbe = 2)
-      Similarity.labelAuditFromGraph(graph, t(s, dir, "embeddings"))
-    }),
-
-    "sample_cluster_balanced" -> ((s, dir) => {
-      // cluster-then-curate composition: nearest-centroid bucketing over
-      // the deterministic seeds, then exactly-k-per-cluster deterministic
-      // sampling (WindowGroupLimit) — balanced topic coverage
-      val e = t(s, dir, "embeddings")
-      val assigned = Similarity.assignToCenters(e, Similarity.kmeansInit(e, k = 8))
-      Sampling.stratifiedSample(assigned, Seq("cluster_id"), k = 10,
-          key = col("vec_id"))
-        .select(col("cluster_id"), col("vec_id"))
-        .orderBy("cluster_id", "vec_id")
-    }),
-
-    "cluster_kmeans" -> ((s, dir) => {
-      // one Lloyd step from deterministic first-k seeds: zero-shuffle
-      // argmin assignment + ONE map-side-combined (cluster, dim) shuffle;
-      // the oracle replays seed choice, assignment, and means in SQL
-      val e = t(s, dir, "embeddings")
-      val centers = Similarity.kmeansInit(e, k = 8)
-      Similarity.kmeansStep(e, centers)
-        .select(col("cluster_id"), col("n_vectors"),
-          round(Similarity.norm(col("centroid")), 6).as("center_norm"),
-          round(element_at(col("centroid"), 1), 6).as("c1"))
-        .orderBy("cluster_id")
-    }),
-
-    "cluster_silhouette" -> ((s, dir) => {
-      // clustering-quality report: simplified silhouette vs the seed
-      // center table — zero-shuffle distance projection (centers ride the
-      // plan as literals), one O(k) aggregation
-      val e = t(s, dir, "embeddings")
-      val centers = Similarity.kmeansInit(e, k = 8)
-      Similarity.silhouette(Similarity.assignToCenters(e, centers), centers)
-        .select(col("cluster_id").cast("int").as("cluster_id"),
-          col("n_vectors"), round(col("silhouette"), 6).as("silhouette"))
-        .orderBy("cluster_id")
-    }),
-
-    "embedding_centroids" -> ((s, dir) =>
-      // per-label prototype vectors; exploded to (label, pos, v) so the
-      // oracle compares scalar cells, not list equality
-      Similarity.centroids(t(s, dir, "embeddings"), "label")
-        .select(col("label"), col("n_vectors"),
-          posexplode(col("centroid")).as(Seq("pos", "v")))
-        .withColumn("v", round(col("v"), 6))
-        .orderBy("label", "pos")),
-
-    "embedding_quantize" -> ((s, dir) => {
-      // int8 storage quantization: deterministic arithmetic, replayed
-      // exactly by the oracle (q uses the DOUBLE scale; the stored struct
-      // carries the float-rounded scale)
-      val e = t(s, dir, "embeddings").filter(col("vec_id") < 50)
-      e.select(col("vec_id"),
-          Similarity.quantizeInt8(col("embedding")).as("qz"))
-        .select(col("vec_id"),
-          round(col("qz").getField("scale").cast("double"), 9).as("scale"),
-          posexplode(col("qz").getField("q")).as(Seq("pos", "qv")))
-        .select(col("vec_id"), col("pos"), col("qv"), col("scale"))
-        .orderBy("vec_id", "pos")
-    }),
-
-    "embedding_random_projection" -> ((s, dir) => {
-      // JL projection onto 8 seeded gaussian planes (the SAME coefficient
-      // matrix the oracle embeds as literals); exploded + rounded so the
-      // hash compare sees scalars
-      val e = t(s, dir, "embeddings").filter(col("vec_id") < 100)
-      val projOf = Similarity.randomProjection(dim = 64, outDim = 8)
-      e.select(col("vec_id"),
-          posexplode(projOf(col("embedding"))).as(Seq("b", "p")))
-        .select(col("vec_id"), col("b"), round(col("p"), 6).as("proj"))
-        .orderBy("vec_id", "b")
-    }),
-
-    // ---- text analysis (driver mandate)
-    "text_fingerprint" -> ((s, dir) =>
-      t(s, dir, "documents").filter(col("doc_id") < 50)
-        .select(col("doc_id"), Text.fingerprint(col("text")).as("fp"))
-        .orderBy("doc_id")),
-
-    "text_char_entropy" -> ((s, dir) =>
-      // per-doc character-entropy gibberish signal: exact count algebra,
-      // zero shuffle; the Σ c·ln c fold runs over SORTED distinct chars
-      // so both engines add identical IEEE terms in identical order
-      Text.charEntropy(t(s, dir, "documents").filter(col("doc_id") < 200),
-          "text", "doc_id")
-        .select(col("id").as("doc_id"), col("n_chars"), col("n_distinct"),
-          round(col("entropy_nats"), 6).as("entropy_nats"))
-        .orderBy("doc_id")),
-
-    "dedup_winnow_pairs" -> ((s, dir) =>
-      // MOSS candidate pairs: docs sharing >= 8 distinct winnow prints.
-      // fp-bucketed index join (never all-pairs); the winnowing theorem
-      // makes >= w+k-1-word true overlaps ALWAYS candidates
-      Dedup.winnowCandidates(t(s, dir, "documents"), "text", "doc_id",
-          k = 3, w = 4, minShared = 8)
-        .orderBy("id1", "id2")),
-
-    "dedup_winnow_star" -> ((s, dir) =>
-      // grouping form: winnow candidates -> components -> one row per
-      // doc (linear output; the pairwise form is dup-cluster-quadratic).
-      // Oracle replays pairs + recursive reachability, so the green row
-      // IS the pairs==components identity on real data (the
-      // dedup_prefix_star precedent)
-      Dedup.winnowStar(t(s, dir, "documents"), "text", "doc_id",
-          k = 3, w = 4, minShared = 8, maxDocFreq = 50)
-        .orderBy("id")),
-
-    "dedup_image_dhash" -> ((s, dir) =>
-      // image near-dup GROUPS via dHash (difference hash): procedural
-      // BMP corpus (120 base + 40 resized + 40 brightness plants) ->
-      // REAL ImageIO decode -> exact integer luma grid -> 64-bit
-      // gradient-sign signature -> 16-bit-band bucket join (hamming <= 3
-      // guaranteed recalled) -> hamming <= 6 -> components. All int64
-      // bit algebra from exact pixel sums, so the oracle replays
-      // pixels -> grid -> bits -> bands -> pairs -> recursive
-      // reachability with no codec — the green row IS the decode+hash
-      // identity on planted resize/re-encode near-dups.
-      Dedup.imageDedupStar(imageCorpus(s, dir, 120, 40), "payload",
-          "img_id", "dhash", maxDist = 6)
-        .orderBy("id")),
-
-    "dedup_image_phash" -> ((s, dir) =>
-      // image near-dup PAIRS via pHash (DCT hash): 32x32 exact luma
-      // grid -> integer DCT-II over the fixed-point cosine table (the
-      // SAME integers interpolated into the oracle — no cross-engine
-      // libm drift) -> 8x8 low-frequency block vs its non-DC median ->
-      // banded pairs at hamming <= 10. Scale-invariant BY CONSTRUCTION
-      // (fixed-point means cancel k² upscales exactly), so the resized
-      // plants pair at hamming 0.
-      Dedup.imageCandidates(imageCorpus(s, dir, 80, 30), "payload",
-          "img_id", "phash", maxDist = 10)
-        .orderBy("id1", "id2")),
-
-    "dedup_winnow_pairs_capped" -> ((s, dir) =>
-      // the maxDocFreq boilerplate cap (MOSS practice): prints in more
-      // than maxDocFreq docs are template chrome, not copied passages,
-      // and their b² buckets dominate the uncapped join. Cap 3 BITES at
-      // the oracle SF (max print df is 7 — 20 pairs / Σshared 342 vs the
-      // uncapped 23 / 480, a visibly different result); production sets
-      // it ~2× the expected dup-cluster depth (sf1 probe: ×20.5 → ×1.2)
-      Dedup.winnowCandidates(t(s, dir, "documents"), "text", "doc_id",
-          k = 3, w = 4, minShared = 8, maxDocFreq = 3)
-        .orderBy("id1", "id2")),
-
-    "text_winnow" -> ((s, dir) =>
-      // MOSS winnowing (Schleimer et al. 2003): per-window min-hash gram
-      // SELECTION (rightmost on ties) — the partial-overlap detector with
-      // the w+k-1 shared-run guarantee. Zero shuffle; hash is the
-      // cross-engine md5-prefix int64, because selection depends on hash
-      // ORDER (an engine-local hash would select different grams). The
-      // oracle replays windows via SQL frames + a frame join-back for the
-      // rightmost-min position.
-      Text.winnow(t(s, dir, "documents").filter(col("doc_id") < 200),
-          "text", "doc_id", k = 3, w = 4)
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id", "pos")),
-
-    "text_token_count" -> ((s, dir) =>
-      t(s, dir, "documents").filter(col("doc_id") < 100)
-        .select(col("doc_id"),
-          Text.wsTokenCount(col("text")).as("ws_tokens"),
-          Text.regexTokenCount(col("text")).as("re_tokens"))
-        .orderBy("doc_id")),
-
-    "text_quality" -> ((s, dir) =>
-      Text.qualityFeatures(t(s, dir, "documents").filter(col("doc_id") < 100), "text")
-        .select(col("doc_id"), col("n_words"),
-          round(col("mean_word_len"), 6).as("mean_word_len"),
-          round(col("punct_ratio"), 6).as("punct_ratio"),
-          round(col("stopword_ratio"), 6).as("stopword_ratio"))
-        .orderBy("doc_id")),
-
-    "text_lm_perplexity" -> ((s, dir) =>
-      // add-1-smoothed unigram LM scoring (the KenLM quality-filter
-      // stand-in): vocab = corpus's own top-1000 tokens, OOV pooled into
-      // one pseudo-word; two row-scale shuffles, vocab + corpus constants
-      // broadcast back onto the token stream, fully lazy frame
-      Text.perplexityScore(t(s, dir, "documents"), "text", "doc_id",
-          topVocab = 1000, alpha = 1.0)
-        .select(col("doc_id"), col("n_tokens"),
-          round(col("avg_nll"), 6).as("avg_nll"))
-        .orderBy("doc_id")),
-
-    "text_zipf_fit" -> ((s, dir) => {
-      // rank-frequency power law: closed-form OLS of ln(tf) on ln(rank)
-      // over the top-500 vocab (Zipf exponent ≈ −slope). The rank window
-      // runs on 500 rows AFTER the top-k — bounded by construction; the
-      // literal partition key keeps the identical one-partition plan but
-      // without WindowExec's "No Partition Defined" WARN, which was the
-      // only log line spamming the driver's 2000-char stdout tail capture
-      val v = Text.vocab(t(s, dir, "documents"), "text", "doc_id", topK = 500)
-        .withColumn("rank",
-          row_number().over(Window.partitionBy(lit(0))
-            .orderBy(col("tf").desc, col("word").asc)))
-      val xy = v.select(log(col("rank").cast("double")).as("x"),
-        log(col("tf").cast("double")).as("y"))
-      xy.agg(count(lit(1)).as("__n"), sum("x").as("__sx"), sum("y").as("__sy"),
-          sum(col("x") * col("x")).as("__sxx"), sum(col("x") * col("y")).as("__sxy"))
-        .select(col("__n").as("n_terms"),
-          round((col("__n") * col("__sxy") - col("__sx") * col("__sy"))
-            / (col("__n") * col("__sxx") - col("__sx") * col("__sx")), 6)
-            .as("slope"),
-          round((col("__sy") - ((col("__n") * col("__sxy") - col("__sx") * col("__sy"))
-            / (col("__n") * col("__sxx") - col("__sx") * col("__sx"))) * col("__sx"))
-            / col("__n"), 6).as("intercept"))
-    }),
-
-    "text_readability" -> ((s, dir) =>
-      // Flesch-Kincaid grade: three integer regex counts + closed-form
-      // arithmetic, zero shuffle, exact replay in any engine
-      Text.readability(t(s, dir, "documents").filter(col("doc_id") < 100),
-          "text", "doc_id")
-        .withColumn("fk_grade", round(col("fk_grade"), 4))
-        .orderBy("doc_id")),
-
-    "text_bigram_lm" -> ((s, dir) =>
-      // interpolated bigram LM (λ·p₂ + (1−λ)·p₁): bigrams from a
-      // zero-shuffle array zip; top-K bigram/unigram tables + corpus
-      // constants broadcast; fully lazy
-      Text.bigramPerplexity(t(s, dir, "documents"), "text", "doc_id",
-          topBigrams = 2000, topVocab = 1000, alpha = 1.0, lambda = 0.7)
-        .select(col("doc_id"), col("n_bigrams"),
-          round(col("avg_nll"), 6).as("avg_nll"))
-        .orderBy("doc_id")),
-
-    "text_langid" -> ((s, dir) =>
-      Text.langId(t(s, dir, "documents").filter(col("doc_id") < 100), "text")
-        .select(col("doc_id"), col("pred_lang"))
-        .orderBy("doc_id")),
-
-    "text_html_extract" -> ((s, dir) => {
-      // web-crawl front door: wrap each doc in deterministic HTML (tags,
-      // a style block, a script, entities) and extract the text back —
-      // the oracle replays the identical backreference-free regex chain
-      val d = t(s, dir, "documents").filter(col("doc_id") < 100)
-      val html = concat(
-        lit("<html><head><style>p{color:red}</style></head><body><h1>"),
-        col("source"), lit("</h1><!-- crawl artifact --><p>"), col("text"),
-        lit(" &amp; more&nbsp;soon</p><script>var x=1;</script></body></html>"))
-      d.select(col("doc_id"), Text.htmlExtract(html).as("clean_text"))
-        .orderBy("doc_id")
-    }),
-
-    "text_url_extract" -> ((s, dir) => {
-      // URL harvesting: docs get two deterministic embedded URLs (mixed
-      // case, utm variants, fragments, a quoted one with a port); the
-      // extractor is a single generator projection and host aggregation
-      // is one map-side-combined shuffle. Oracle replays the RE2-safe
-      // regex verbatim.
-      Text.extractUrls(urlBody(s, dir), "body")
-        .groupBy(Text.urlHost(col("url")).as("host"))
-        .agg(count(lit(1)).as("n_urls"))
-        .orderBy("host")
-    }),
-
-    "dedup_url_canonical" -> ((s, dir) => {
-      // URL-level dedup after canonicalization: fragment stripped,
-      // scheme+authority lowercased, utm_* params dropped, trailing
-      // separators trimmed — case/utm/fragment raw variants collapse
-      // onto one canonical form (non-vacuous: n_raw_forms > 1 rows exist)
-      Text.extractUrls(urlBody(s, dir), "body")
-        .groupBy(Text.canonicalizeUrl(col("url")).as("canonical_url"))
-        .agg(count(lit(1)).as("n_occurrences"),
-          countDistinct(col("url")).as("n_raw_forms"))
-        .orderBy("canonical_url")
-    }),
-
-    "pipeline_release_e2e" -> ((s, dir) => {
-      // the release BACK door composed end-to-end (the curate_e2e chain is
-      // the front door): verified near-dup components -> leakage-safe
-      // component split -> temperature-flattened train mixture -> shard
-      // manifest of exactly what ships, all real library operators, the
-      // oracle replaying every stage in one CTE chain
-      val docs = t(s, dir, "documents")
-      val pairs = docs.select(col("doc_id").as("id1"))
-        .withColumn("id2", col("id1") + 1)
-      val verified = Dedup.ngramJaccard(s, docs, pairs, "text", "doc_id", shingleK = 4)
-        .filter(col("jaccard") >= 0.3)
-      val comps = Dedup.components(verified)
-      val split = Sampling.componentSplit(docs, comps, "doc_id",
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-      // materialize the split ONCE: temperatureMix's O(#domains) counts
-      // action would otherwise recompute the whole verification chain a
-      // second time (measured 26.8s -> chain-once at sfx10)
-      val train = split.filter(col("split") === "train")
-        .select("doc_id", "source", "text").localCheckpoint()
-      val mixed = Sampling.temperatureMix(train, "source", tau = 0.5,
-        key = col("doc_id"))
-      Sampling.shardManifest(mixed, content = Text.normalized(col("text")),
-          key = col("doc_id"), seed = "release1", numShards = 8)
-        .orderBy("shard_id")
-    }),
-
-    "pipeline_dedup_e2e" -> ((s, dir) => {
-      // the full DEDUP stack composed end-to-end (5th e2e): exact
-      // substring cut (cross-doc spans >= 15 tokens, min-id doc keeps its
-      // copy) -> token floor on the REBUILT text -> exact doc dedup of
-      // the rebuilds -> per-language survival report. One localCheckpoint
-      // after the cut (it feeds both the floor and the token report);
-      // every stage is the real library operator and the whole chain
-      // replays as one CTE chain
-      val docs = t(s, dir, "documents").filter(col("lang").isNotNull)
-      val cut = Dedup.removeSubstringDups(docs, "text", "doc_id", minTokens = 15)
-        .localCheckpoint()
-      val floored = cut.filter(col("n_words") - col("n_removed") >= 10)
-      val deduped = Dedup.exact(floored, "text_dedup", "id")
-      deduped.join(docs.select(col("doc_id").as("id"), col("lang")), Seq("id"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_words") - col("n_removed")).as("n_tokens"),
-          sum(col("n_removed")).as("n_tokens_cut"))
-        .orderBy("lang")
-    }),
-
-    "pipeline_incremental_e2e" -> ((s, dir) => {
-      // the DAILY INCREMENTAL-CRAWL RELEASE composed end-to-end (8th
-      // e2e, VERDICT r14 #6) — the pipeline a crawl operator actually
-      // runs each day: date docs by FIRST fetch event -> prior release
-      // (day < 2024-01-02) vs today's crawl (the rest, plus planted
-      // re-fetches of release pages at +100000 and within-crawl copies
-      // at +200000 — a real crawl's duplicate shape) -> exact dedup
-      // against the release fingerprint index (bloom-pruned anti-join,
-      // Dedup.exactAgainst) -> word-boundary phrase policy gate on the
-      // survivors (anchored broadcast) -> per-source health report:
-      // crawl size, within-crawl uniques/dup-rate (the
-      // dedup_source_report algebra), index-dup mass, blocked mass,
-      // accepted mass, and 3-gram novelty vs the release (the
-      // text_novelty_daily gram machinery). Every stage is the real
-      // library operator; the oracle replays the whole chain as one CTE
-      // pipeline.
-      import s.implicits._
-      val docs = t(s, dir, "documents").filter(col("source").isNotNull)
-      val days = t(s, dir, "events").groupBy(col("event_id").as("doc_id"))
-        .agg(min(col("ts")).as("__ts"))
-        .select(col("doc_id"), date_format(col("__ts"), "yyyy-MM-dd").as("day"))
-      val cutoff = "2024-01-02"
-      val dated = docs.join(days, Seq("doc_id"))
-        .select("doc_id", "source", "text", "day")
-        // dated feeds EVERY downstream stage: cut the lineage once — the
-        // old shape checkpointed only `prior`, so the crawl checkpoint
-        // re-ran the whole docs+events join for the day >= cutoff half
-        // (r18, one scan+join pass removed)
-        .localCheckpoint()
-      val prior = dated.filter(col("day") < cutoff)
-      val crawl0 = dated.filter(col("day") >= cutoff)
-      val index = Dedup.exactReport(prior, "text", "doc_id").select("fp")
-      // §2.6 (overlap independent jobs): the crawl checkpoint and the
-      // dedup index's bloom sketch both depend only on the dated
-      // checkpoint — run them concurrently (the drift_e2e pattern);
-      // composition unchanged (the sketch is the same bytes either way)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val fCrawl = Future {
-        crawl0
-          .unionByName(prior.filter(col("doc_id") < 40)
-            .select((col("doc_id") + 100000L).as("doc_id"), col("source"),
-              col("text"), lit(cutoff).as("day")))
-          .unionByName(crawl0.filter(col("doc_id") % 5 === 0)
-            .select((col("doc_id") + 200000L).as("doc_id"), col("source"),
-              col("text"), col("day")))
-          .localCheckpoint()
-      }
-      val fSketch = Future { Blocklist.sketch(index, "fp") }
-      val crawl = Await.result(fCrawl, Duration.Inf)
-      val bf = Await.result(fSketch, Duration.Inf)
-      val fresh = Dedup.exactAgainst(crawl, index, "text",
-        prebuiltSketch = bf).localCheckpoint()
-      val phrases = Seq("slow scan", "fast merge", "key agg",
-        "customer data", "spark join", "window sort", "stream filter",
-        "data leak probe").toDF("phrase")
-      val blocked = Blocklist.phraseMatches(fresh, phrases, "text", "doc_id")
-        .select("doc_id").distinct().withColumn("__blk", lit(1))
-      val freshFlag = fresh.select("doc_id").withColumn("__fresh", lit(1))
-      // novelty counts distinct gram HASHES vs the oracle's gram STRINGS
-      // — the documented Text.gramHashSets collision convention
-      val priorG = Text.gramHashSets(prior, "text", "doc_id", 3)
-        .select(explode(col("__gs")).as("gh")).distinct()
-        .withColumn("__seen", lit(1))
-      val crawlG = Text.gramHashSets(crawl, "text", "doc_id", 3)
-        .join(crawl.select(col("doc_id").as("id"), col("source")), Seq("id"))
-        .select(col("source"), explode(col("__gs")).as("gh")).distinct()
-      val nov = crawlG.join(priorG, Seq("gh"), "left")
-        .groupBy("source").agg(count(lit(1)).as("n_grams"),
-          sum(when(col("__seen").isNull, 1L).otherwise(0L)).as("n_novel"))
-      crawl.withColumn("__fp", Text.fingerprint(col("text")))
-        .join(freshFlag, Seq("doc_id"), "left")
-        .join(blocked, Seq("doc_id"), "left")
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_crawled"),
-          count_distinct(col("__fp")).as("n_unique"),
-          sum(when(col("__fresh").isNull, 1L).otherwise(0L)).as("n_dup_index"),
-          sum(when(col("__fresh") === 1 && col("__blk") === 1, 1L)
-            .otherwise(0L)).as("n_blocked"),
-          sum(when(col("__fresh") === 1 && col("__blk").isNull, 1L)
-            .otherwise(0L)).as("n_accepted"))
-        .join(nov, Seq("source"), "left")
-        .select(col("source"), col("n_crawled"), col("n_unique"),
-          round((col("n_crawled") - col("n_unique")).cast("double") /
-            col("n_crawled"), 6).as("dup_rate"),
-          col("n_dup_index"), col("n_blocked"), col("n_accepted"),
-          coalesce(col("n_grams"), lit(0L)).as("n_grams"),
-          coalesce(col("n_novel"), lit(0L)).as("n_novel"),
-          round(when(coalesce(col("n_grams"), lit(0L)) > 0,
-            col("n_novel").cast("double") / col("n_grams"))
-            .otherwise(0.0), 6).as("novelty"))
-        .orderBy("source")
-    }),
-
-    "pipeline_multimodal_e2e" -> ((s, dir) => {
-      // the MULTIMODAL curation release composed end-to-end (9th e2e,
-      // VERDICT r15 #6) — the first e2e through the r15 image machinery:
-      // mixed-container corpus (per doc a 16x16 BMP of procedural
-      // pixels; doc_id < 40 adds a PNG with IDENTICAL pixels at +100000 —
-      // a cross-FORMAT exact-pixel dup whose dhash is bit-identical since
-      // both containers decode losslessly; doc_id % 3 == 0 adds the REAL
-      // libwebp-encoded LOSSY-VP8 fixture at +200000 — as of r17 it
-      // DECODES through the from-scratch Vp8 decoder, and all its
-      // byte-identical twins merge into one lossy component instead of
-      // self-mapping) -> real encode + decodability
-      // flag in the SAME mapPartitions pass that builds the payloads ->
-      // imageDedupStar (dhash, maxDist 0; decode runs once inside via its
-      // localCheckpoint) -> caption quality gate (n_words >= 40 — the
-      // text_quality token split; median is 49, so the gate does real
-      // filtering) -> per-source release report. The
-      // oracle replays pixels -> luma grid -> dhash bits -> bands ->
-      // hamming-0 pairs -> recursive components -> the report algebra;
-      // the fixture's 64 dhash bits enter as literals derived from
-      // libwebp's OWN yuv dump by tools/lossy_fixture_dhash.py (never
-      // from graft code — Vp8Spec pins the planes byte-equal).
-      import s.implicits._
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 120)
-        .select("doc_id", "source", "text").localCheckpoint()
-      val ids = docs.select(col("doc_id").as("base"))
-      val variants = ids
-        .select(col("base"), col("base").as("img_id"), lit("bmp").as("fmt"))
-        .unionByName(ids.filter(col("base") < 40).select(col("base"),
-          (col("base") + 100000L).as("img_id"), lit("png").as("fmt")))
-        .unionByName(ids.filter(col("base") % 3 === 0).select(col("base"),
-          (col("base") + 200000L).as("img_id"), lit("webp").as("fmt")))
-      val corpus = variants.as[(Long, Long, String)].mapPartitions { it =>
-        it.map { case (base, img, fmt) =>
-          val payload = fmt match {
-            case "bmp" => graft.pipeline.Multimodal.encodeBmpGray(16, 16,
-              (x, y) => imagePixel(base, x, y))
-            case "png" => graft.pipeline.Multimodal.encodePngGray(16, 16,
-              (x, y) => imagePixel(base, x, y))
-            case _ => lossyVp8Fixture
-          }
-          (base, img, payload,
-            if (graft.pipeline.Multimodal.imageDecodes(payload)) 1L else 0L)
-        }
-      }.toDF("base", "img_id", "payload", "dec").localCheckpoint()
-      val comp = Dedup.imageDedupStar(corpus, "payload", "img_id", "dhash",
-        maxDist = 0)
-      val att = corpus.select(col("img_id").cast("string").as("id"),
-          col("base"), col("dec"))
-        .join(comp, Seq("id"))
-        .join(docs.select(col("doc_id").as("base"), col("source")), Seq("base"))
-      val perImg = att.groupBy("source").agg(
-        count(lit(1)).as("n_images"),
-        sum(col("dec")).as("n_decoded"),
-        sum(when(col("id") =!= col("component"), 1L).otherwise(0L))
-          .as("n_dup_merged"),
-        countDistinct(col("component")).as("n_groups"))
-      val cap = docs.select(col("source"),
-          when(size(split(trim(col("text")), "\\s+")) >= 40, 1L).otherwise(0L)
-            .as("__pass"))
-        .groupBy("source")
-        .agg(sum(col("__pass")).as("n_caption_pass"), count(lit(1)).as("__nb"))
-      perImg.join(cap, Seq("source"))
-        .select(col("source"), col("n_images"), col("n_decoded"),
-          col("n_dup_merged"), col("n_groups"), col("n_caption_pass"),
-          round(col("n_caption_pass").cast("double") / col("__nb"), 6)
-            .as("release_rate"))
-        .orderBy("source")
-    }),
-
-    "pipeline_policy_e2e" -> ((s, dir) => {
-      // the POLICY gate composed end-to-end (7th e2e): word-boundary
-      // phrase blocklist (anchored broadcast plan, corpus never shuffles)
-      // -> MOSS winnow fingerprints -> shared-fingerprint dup candidates
-      // (>= 8 DISTINCT shared prints; the larger id flags, smaller-id
-      // keeper discipline) -> per-language verdict rollup with policy
-      // priority phrase_blocked > dup_candidate > clean. Every stage is
-      // the real library operator; the whole chain replays as one CTE
-      // chain over the shared winnow CTEs.
-      import s.implicits._
-      val docs = t(s, dir, "documents").filter(col("lang").isNotNull)
-      val phrases = Seq("slow scan", "fast merge", "key agg",
-        "customer data", "spark join", "window sort", "stream filter",
-        "data leak probe").toDF("phrase")
-      val matched = Blocklist.phraseMatches(docs, phrases, "text", "doc_id")
-        .select("doc_id").distinct()
-      // maxDocFreq = 50: the production form — never bites at the oracle
-      // SF (max print doc-freq is 7) but kills the boilerplate
-      // megabuckets that dominate the uncapped join at bench scale (the
-      // ×10-copy corpus); the oracle replays the cap CTE faithfully
-      // winnowCandidates pairs in STRING id order (the dedup family
-      // convention) — id2 is the string-larger id; cast back to long
-      // for the corpus join (numeric doc_ids round-trip exactly)
-      val dup = Dedup.winnowCandidates(docs, "text", "doc_id",
-          k = 3, w = 4, minShared = 8, maxDocFreq = 50)
-        .select(col("id2").cast("long").as("doc_id")).distinct()
-      docs.select("doc_id", "lang")
-        .join(matched.withColumn("__pm", lit(1)), Seq("doc_id"), "left")
-        .join(dup.withColumn("__dup", lit(1)), Seq("doc_id"), "left")
-        .withColumn("verdict",
-          when(col("__pm") === 1, "phrase_blocked")
-            .when(col("__dup") === 1, "dup_candidate")
-            .otherwise("clean"))
-        .groupBy("lang", "verdict")
-        .agg(count(lit(1)).as("n_docs"))
-        .orderBy("lang", "verdict")
-    }),
-
-    "pipeline_budget_e2e" -> ((s, dir) => {
-      // the BUDGET back door composed end-to-end: token-count quality
-      // floor -> exact dedup (keep min id per fingerprint) -> per-language
-      // token totals -> data-constrained epoch WATER-FILL (budget = half
-      // the surviving corpus, maxEpochs 4). Each stage is the real
-      // library operator; the survivor frame localCheckpoints once so the
-      // dedup window does not compute twice (the domainMix trap), and the
-      // whole allocation replays as one CTE chain.
-      val docs = t(s, dir, "documents").filter(col("lang").isNotNull)
-        .withColumn("n_words", Text.wsTokenCount(col("text")))
-        .filter(col("n_words") >= 20)
-      val surv = Dedup.exact(docs, "text", "doc_id").localCheckpoint()
-      val toks = col("n_words").cast("long")
-      val total = surv.agg(sum(toks)).head().getLong(0)
-      Sampling.epochMix(surv, "lang", toks, budget = total / 2, maxEpochs = 4)
-        .select(col("domain"), col("n_tokens"), col("cap"),
-          round(col("alloc"), 6).as("alloc"), round(col("epochs"), 6).as("epochs"))
-        .orderBy("domain")
-    }),
-
-    "pipeline_curate_e2e" -> ((s, dir) => {
-      // the WHOLE curation front door composed in ONE declarative plan —
-      // HTML extraction → exact dedup (copies planted at doc_id+10000)
-      // → token-count quality gate → deterministic hash sample — each
-      // stage the real library operator, the whole chain one Catalyst
-      // plan (scan → projections → one fingerprint shuffle → filters),
-      // and the oracle replays every stage in a single CTE chain
-      val d0 = t(s, dir, "documents").filter(col("doc_id") < 200)
-        .select("doc_id", "text", "source")
-      val docs = d0.unionByName(
-        d0.filter(col("doc_id") < 40).withColumn("doc_id", col("doc_id") + 10000))
-      val html = concat(
-        lit("<html><head><style>p{color:red}</style></head><body><h1>"),
-        col("source"), lit("</h1><!-- crawl artifact --><p>"), col("text"),
-        lit(" &amp; more&nbsp;soon</p><script>var x=1;</script></body></html>"))
-      val cleaned = docs.select(col("doc_id"), Text.htmlExtract(html).as("clean_text"))
-      val deduped = Dedup.exact(cleaned, "clean_text", "doc_id")
-      val gated = deduped
-        .withColumn("n_words", Text.wsTokenCount(col("clean_text")))
-        .filter(col("n_words") >= 12)
-      Sampling.hashSample(gated, col("doc_id"), 0.4)
-        .select(col("doc_id"), col("n_words"),
-          md5(col("clean_text").cast("binary")).as("text_md5"))
-        .orderBy("doc_id")
-    }),
-
-    "pipeline_curriculum_e2e" -> ((s, dir) => {
-      // 6th e2e composition (r14): classifier quality gate → difficulty
-      // = token count → exact ntile buckets + round-robin interleave
-      // position (the windowless curriculum machinery) → CONTIGUOUS
-      // position-range shards (readers consume shards in order, so each
-      // shard inherits the interleave — the rollup SHOWS every shard
-      // mixing all difficulty buckets) → per-(shard, bucket) rollup.
-      // Real operators at every stage; the oracle replays the whole
-      // chain as one CTE pipeline. The filter compares the 6dp-ROUNDED
-      // score (the cross-engine equality check_oracle itself proves on
-      // text_quality_score); shard size is exact integer math off a
-      // broadcast one-row count
-      val scored = Text.classifierScore(t(s, dir, "documents"), "text",
-        weights = Map("stopword_ratio" -> 4.0, "punct_ratio" -> 2.0,
-          "mean_word_len" -> 0.1, "n_words" -> 0.001), bias = -1.0)
-      val kept = scored.filter(round(col("quality_score"), 6) >= 0.5)
-        .select(col("doc_id"),
-          size(filter(split(trim(col("text")), "\\s+"),
-            x => length(x) > 0)).cast("double").as("difficulty"))
-      val cur = Sampling.curriculumOrder(kept, "difficulty", "doc_id", k = 4)
-      cur.crossJoin(broadcast(cur.agg(count(lit(1)).as("__n"))))
-        .withColumn("shard", expr("position DIV ((__n + 4) DIV 5)"))
-        .groupBy("shard", "bucket")
-        .agg(count(lit(1)).as("n_docs"),
-          round(avg(col("difficulty")), 6).as("avg_difficulty"),
-          min(col("position")).as("first_position"))
-        .orderBy("shard", "bucket")
-    }),
-
-    "dedup_paragraphs" -> ((s, dir) => {
-      // paragraph-level dedup over synthetic multi-paragraph docs: every
-      // doc gets the SAME boilerplate footer paragraph plus its per-source
-      // tag paragraph, so the footer survives only in the first doc and
-      // each source tag only in its first carrier — non-vacuous at every SF
-      val d = t(s, dir, "documents").filter(col("doc_id") < 200)
-      val multi = d.select(col("doc_id"),
-        concat(col("text"), lit("\n\n"),
-          lit("GRAFT boilerplate footer - subscribe now"), lit("\n\n"),
-          col("source")).as("text"))
-      Dedup.dedupParagraphs(multi, "text", "doc_id")
-        .select(col("id"), col("n_paras"), col("n_removed"),
-          md5(col("text_dedup").cast("binary")).as("text_md5"))
-        .orderBy("id")
-    }),
-
-    "dedup_prefix_join" -> ((s, dir) =>
-      // EXACT set-similarity self-join (PPJoin-family prefix filter):
-      // all word-set Jaccard >= 0.8 pairs with NO false negatives — the
-      // guarantee-grade counterpart to the probabilistic MinHash paths.
-      // Output is pair-scale (inherently quadratic in dup-cluster depth,
-      // like dedup_minhash_lsh), so the oracled slice mirrors theirs
-      Dedup.prefixJaccardJoin(
-          t(s, dir, "documents").filter(col("doc_id") < 200),
-          "text", "doc_id", threshold = 0.8)
-        .select(col("id1"), col("id2"), round(col("jaccard"), 6).as("jaccard"))
-        .orderBy("id1", "id2")),
-
-    "dedup_prefix_star" -> ((s, dir) =>
-      // the GROUPING form of dedup_prefix_join (r13 VERDICT #2): exact
-      // no-false-negative duplicate COMPONENTS via triangle-inequality
-      // star pruning — linear output where the pairwise contract is
-      // dup-cluster-quadratic; oracle replays the full pairwise graph +
-      // recursive reachability, so this row IS the pairs≡star identity
-      Dedup.prefixJaccardStar(
-          t(s, dir, "documents").filter(col("doc_id") < 200),
-          "text", "doc_id", threshold = 0.8)
-        .orderBy("id")),
-
-    "dedup_substring" -> ((s, dir) =>
-      // exact substring dedup, corpus-vs-itself (Lee et al. 2022): maximal
-      // cross-document duplicated spans of >= 15 tokens. L=15 suits this
-      // corpus's ~55-token docs (production runs 50 on web-length docs);
-      // output is span-bounded, never corpus-bounded
-      Dedup.substringSpans(t(s, dir, "documents"), "text", "doc_id",
-          minTokens = 15)
-        .select(col("id").as("doc_id"), col("span_start").cast("long"),
-          col("span_end").cast("long"), col("n_tokens").cast("long"))
-        .orderBy("doc_id", "span_start")),
-
-    "dedup_substring_cut" -> ((s, dir) =>
-      // the keep-one cut over the flagged coverage: every cross-doc
-      // duplicated 15-gram occurrence outside its min-id keeper document
-      // is removed; docs rebuilt from surviving words (md5-proven)
-      Dedup.removeSubstringDups(t(s, dir, "documents"), "text", "doc_id",
-          minTokens = 15)
-        .select(col("id").as("doc_id"), col("n_words"), col("n_removed"),
-          md5(col("text_dedup").cast("binary")).as("dedup_md5"))
-        .orderBy("doc_id")),
-
-    "text_heavy_hitters_sketch" -> ((s, dir) =>
-      // one-pass Space-Saving sketch in its EXACT regime (capacity >=
-      // the slice's vocabulary -> estimates are true counts, err 0):
-      // hash-proves the offer/merge/treeReduce machinery end-to-end;
-      // the approximate regime's bounds are property-tested
-      SpaceSaving.approxHeavyHitters(
-          t(s, dir, "documents").filter(col("doc_id") < 100), "text",
-          capacity = 20000)
-        .filter(col("estimate") >= 5)
-        .orderBy(col("estimate").desc, col("word").asc)),
-
-    "text_hh_guaranteed" -> ((s, dir) => {
-      // the sketch BEYOND the exact regime (r13 VERDICT #5): capacity 512
-      // << the ~950-type unigram+bigram stream, so counters genuinely
-      // differ under partitioning — but the guaranteed (estimate − err)
-      // verdict at φ = 1/100 is partitioning-invariant on this corpus
-      // (unigrams ≥ ~840 tokens vs bigrams ≤ ~48 vs φN ≈ 538, a gap far
-      // wider than the ≤ N/512 ≈ 105 err bound); oracle = TRUE counts
-      import s.implicits._
-      val w = t(s, dir, "documents")
-        .select(filter(split(lower(trim(col("text"))), "\\s+"),
-          x => length(x) > 0).as("w"))
-      val uni = w.select(explode(col("w")).as("g"))
-      val bi = w.select(explode(when(size(col("w")) >= 2,
-          expr("transform(sequence(0, size(w) - 2), i -> concat_ws(' ', slice(w, i + 1, 2)))"))
-        .otherwise(array().cast("array<string>"))).as("g"))
-      SpaceSaving.guaranteedHeavyHitters(uni.union(bi).as[String],
-        capacity = 512, phiNum = 1L, phiDen = 100L)
-    }),
-
-    "text_novelty_curve" -> ((s, dir) =>
-      // corpus-growth signal: per doc (in id order), the share of its
-      // distinct word 3-grams never seen in any earlier document — the
-      // diminishing-returns curve of a crawl (first-occurrence = min id,
-      // one 8-byte-hash aggregation; house fingerprint contract)
-      Text.noveltyCurve(t(s, dir, "documents"), "text", "doc_id", n = 3)
-        .select(col("id").as("doc_id"), col("n_ngrams").cast("long"),
-          col("n_novel"), round(col("novelty"), 6).as("novelty"))
-        .orderBy("doc_id")),
-
-    "text_novelty_daily" -> ((s, dir) =>
-      // the crawl-health TIME series (r13 VERDICT #4): novelty per crawl
-      // DAY — docs dated via the events timestamps (event_id as the crawl
-      // record key, first fetch wins), gram first-occurrence by min day.
-      // "distinct grams" = distinct 64-bit HASHES vs the oracle's gram
-      // STRINGS — the documented Text.gramHashSets collision convention
-      Text.noveltyDaily(t(s, dir, "documents"), "text", "doc_id",
-          t(s, dir, "events"), "event_id", "ts", n = 3)
-        .select(col("day"), col("n_docs"), col("n_grams"), col("n_novel"),
-          round(col("novelty"), 6).as("novelty"))
-        .orderBy("day")),
-
-    "embedding_dispersion" -> ((s, dir) =>
-      // per-label intra-class diversity: E||x||^2 - ||mean||^2 without
-      // materializing the centroid or any pairwise work; collapsing
-      // dispersion = near-duplicate mass (the SemDeDup symptom)
-      Similarity.dispersionByLabel(t(s, dir, "embeddings"))
-        .select(col("label"), col("n"),
-          round(col("dispersion"), 6).as("dispersion"),
-          round(col("centroid_norm"), 6).as("centroid_norm"))
-        .orderBy("label")),
-
-    "text_oov_curve" -> ((s, dir) =>
-      // tokenizer-budget tradeoff: corpus token coverage of the top-k
-      // vocabulary at candidate budgets; coverage = one exact-int64
-      // division; top-k is a TakeOrdered, never a vocab-scale window
-      Text.oovCurve(t(s, dir, "documents"), "text",
-          sizes = Seq(100, 500, 1000, 5000))
-        .select(col("vocab_size").cast("long").as("vocab_size"),
-          col("covered_tokens"), col("total_tokens"),
-          round(col("coverage"), 6).as("coverage"))
-        .orderBy("vocab_size")),
-
-    "text_langid_eval" -> ((s, dir) => {
-      // language-ID accuracy audit against the corpus lang column — the
-      // text twin of ann_label_audit: per-language doc counts and
-      // heuristic-agreement rate, same langid kernel, one extra join +
-      // agg. On this synthetic corpus the non-en rows are English-ish
-      // text carrying arbitrary lang tags, so ~0 accuracy there is the
-      // CORRECT audit verdict (mislabeled data is what an audit flags);
-      // both engines agree exactly
-      val d = t(s, dir, "documents").filter(col("doc_id") < 100)
-      Text.langId(d, "text")
-        .select(col("doc_id"), col("pred_lang"))
-        .join(d.select(col("doc_id"), col("lang")), Seq("doc_id"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("pred_lang") === col("lang"), 1L).otherwise(0L))
-            .as("n_correct"))
-        .withColumn("accuracy",
-          round(col("n_correct").cast("double") / col("n"), 6))
-        .orderBy("lang")
-    }),
-
-    "text_gopher_quality" -> ((s, dir) =>
-      Text.gopherQualityFlags(t(s, dir, "documents").filter(col("doc_id") < 100),
-          "text", minWords = 25)
-        .select(col("doc_id"), col("n_words"),
-          round(col("mean_word_len"), 6).as("mean_word_len"),
-          round(col("symbol_word_ratio"), 6).as("symbol_word_ratio"),
-          round(col("alpha_word_ratio"), 6).as("alpha_word_ratio"),
-          round(col("bullet_line_ratio"), 6).as("bullet_line_ratio"),
-          round(col("ellipsis_line_ratio"), 6).as("ellipsis_line_ratio"),
-          col("n_req_stopwords"), col("gopher_keep"))
-        .orderBy("doc_id")),
-
-    "text_pii_redact" -> ((s, dir) =>
-      Text.redactPii(t(s, dir, "documents").filter(col("doc_id") < 100), "text")
-        .select(col("doc_id"), col("n_emails"), col("n_ips"), col("n_phones"),
-          md5(col("redacted").cast("binary")).as("redacted_md5"))
-        .orderBy("doc_id")),
-
-    "text_repetition" -> ((s, dir) =>
-      Text.repetitionSignals(t(s, dir, "documents").filter(col("doc_id") < 100), "text")
-        .select(col("doc_id"),
-          round(col("dup_line_frac"), 6).as("dup_line_frac"),
-          round(col("dup_line_char_frac"), 6).as("dup_line_char_frac"),
-          round(col("dup_para_frac"), 6).as("dup_para_frac"),
-          round(col("top_bigram_frac"), 6).as("top_bigram_frac"))
-        .orderBy("doc_id")),
-
-    // ---- multimodal (driver mandate; real decode kernels for image/PCM/
-    // FLAC/MP2 + real ISO-BMFF demux; only MP3-L3/video SAMPLE decode stubbed)
-    "multimodal_meta" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 50)
-        .withColumn("payload", col("text").cast("binary"))
-      graft.pipeline.Multimodal.withMediaMeta(docs, "payload", "text/plain")
-        .select(col("doc_id"), col("payload_meta.byte_len").as("byte_len"),
-          col("payload_meta.mime").as("mime"))
-        .orderBy("doc_id")
-    }),
-
-    "multimodal_features" -> ((s, dir) => {
-      // every REAL decode kernel end-to-end through ONE extractFeatures
-      // call on committed deterministic fixtures: MPEG-1 Layer II
-      // bitstream+filterbank (mp2), from-scratch FLAC (fixed+Rice /
-      // verbatim frames), javax.sound PCM (wav), ImageIO pixels (bmp),
-      // ISO-BMFF container metadata (mp4) — plus one text payload pinning
-      // the documented stub fallback. The oracle is the VALUES literal of
-      // the full 8-dim feature table (kernels separately unit-proven in
-      // MpegAudioSpec / PipelineSpec incl. FLAC-vs-WAV cross-decode)
-      import s.implicits._
-      val df = Seq(
-        (1L, fixtureBytes("/graft/fixtures/sample.mp2")),
-        (2L, fixtureBytes("/graft/fixtures/sample.flac")),
-        (3L, fixtureBytes("/graft/fixtures/sample.wav")),
-        (4L, fixtureBytes("/graft/fixtures/sample.bmp")),
-        (5L, fixtureBytes("/graft/fixtures/sample.mp4")),
-        (6L, "GRAFT stub fallback payload".getBytes("UTF-8")))
-        .toDF("doc_id", "payload")
-      graft.pipeline.Multimodal.extractFeatures(s, df, "doc_id", "payload")
-        .select(col("id") +: (1 to 8).map(i =>
-          round(element_at(col("features"), i).cast("double"), 4).as(s"f${i - 1}")): _*)
-        .orderBy("id")
-    }),
-
-    "multimodal_audio_mp2" -> ((s, dir) => {
-      // REAL compressed-audio decode end-to-end through the driver
-      // harness: the committed Layer II fixture (FixtureGen) runs the
-      // full bitstream+filterbank decoder inside extractFeatures; the
-      // oracle pins the exact rounded signal statistics as literals
-      import s.implicits._
-      val df = Seq((1L, fixtureBytes("/graft/fixtures/sample.mp2")))
-        .toDF("doc_id", "payload")
-      graft.pipeline.Multimodal.extractFeatures(s, df, "doc_id", "payload")
-        .select(col("id"),
-          round(element_at(col("features"), 1).cast("double"), 4).as("duration_sec"),
-          element_at(col("features"), 2).cast("int").as("channels"),
-          element_at(col("features"), 3).cast("int").as("rate_hz"),
-          round(element_at(col("features"), 4).cast("double"), 4).as("rms"),
-          round(element_at(col("features"), 5).cast("double"), 4).as("zcr"),
-          round(element_at(col("features"), 6).cast("double"), 4).as("peak"),
-          round(element_at(col("features"), 7).cast("double"), 4).as("mean_abs"))
-    }),
-
-    "multimodal_mp4_demux" -> ((s, dir) => {
-      // REAL ISO-BMFF demux end-to-end: the committed two-chunk container
-      // (ctts composition offsets, stss keyframes) explodes to one row
-      // per sample; the oracle is the VALUES literal of its sample table
-      import s.implicits._
-      val df = Seq((1L, fixtureBytes("/graft/fixtures/sample.mp4")))
-        .toDF("doc_id", "payload")
-      graft.pipeline.Multimodal.mp4Samples(s, df, "doc_id", "payload")
-        .select(col("track_id"), col("codec"), col("sample_idx"),
-          round(col("pts_sec"), 6).as("pts_sec"), col("keyframe"), col("size"))
-        .orderBy("sample_idx")
-    }),
-
-    "multimodal_decode_report" -> ((s, dir) => {
-      // decode-COVERAGE honesty contract of the image-dedup family
-      // (VERDICT r15 #2): per sniffed container, how many payloads stock
-      // ImageIO actually decodes — the report a user MUST publish next to
-      // imageDedupStar results (undecodable payloads self-map there). The
-      // engine really encodes each payload, sniffs magic bytes, and
-      // attempts the decode in ONE mapPartitions pass (payloads never
-      // shuffle; O(#containers) rows reach the agg); the oracle replays
-      // the corpus-construction arithmetic (counts by doc_id % 8) —
-      // BMP/PNG/TIFF (ImageIO) and WebP (both VP8L and lossy VP8,
-      // from-scratch codecs) decode; AVIF/HEIC/corrupt-JPEG sniff but
-      // fail; text is unknown
-      graft.pipeline.Multimodal.imageDecodeReport(mixedImageCorpus(s, dir))
-    }),
-
-    "multimodal_image_dims" -> ((s, dir) => {
-      // HEADER-ONLY dims over the mixed corpus (r17): a few header bytes
-      // per payload — PNG IHDR, BMP info header, TIFF IFD tags, WebP
-      // VP8/VP8L/VP8X headers, the ISO-BMFF ispe walk for AVIF *and*
-      // HEIC (dims parse for real even where sample decode is a counted
-      // stub), JPEG SOF scan (the corrupt class has no SOF -> NULL).
-      // Zero shuffle, zero codec. The oracle replays the construction
-      // arithmetic per doc_id % 8 / % 16 class.
-      graft.pipeline.Multimodal.withImageDims(
-          mixedImageCorpus(s, dir, maxId = Some(400L)),
-          "payload", "img_id")
-        .orderBy("img_id")
-    }),
-
-    "multimodal_lossy_webp" -> ((s, dir) => {
-      // the r17 from-scratch VP8 keyframe decoder as a first-class board
-      // line: the committed real libwebp-encoded lossy fixture runs the
-      // FULL decode (boolean decoder, token trees, dequant, iDCT, intra
-      // prediction, loop filter, BT.601 ARGB) inside extractFeatures.
-      // The oracle pins the 8-dim feature vector as literals derived
-      // INDEPENDENTLY from libwebp's own .yuv dump + the documented
-      // BT.601/stat arithmetic (tools/lossy_fixture_dhash.py family);
-      // Vp8Spec separately proves plane-level byte equality.
-      import s.implicits._
-      val df = Seq((1L, lossyVp8Fixture)).toDF("doc_id", "payload")
-      graft.pipeline.Multimodal.extractFeatures(s, df, "doc_id", "payload")
-        .select(col("id") +: (1 to 8).map(i =>
-          round(element_at(col("features"), i).cast("double"), 4).as(s"f${i - 1}")): _*)
-        .orderBy("id")
-    }),
-
-    "ann_semantic_dedup" -> ((s, dir) => {
-      // one-call semantic dedup, hash-proven AND non-vacuous: the corpus
-      // embeddings have max pairwise cosine ~0.51, so duplicates are
-      // PLANTED (exact copies at vec_id+100000 of vec_id<30, cosine 1) —
-      // the LSH bucket join, component build, and keep-one all do real
-      // work, and a missed pair or wrong keeper surfaces as extra rows.
-      // The oracle replays the plane family, bucket pairs, threshold, and
-      // a general recursive-CTE connected components (see semdedupOracleSql)
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val planted = e.filter(col("vec_id") < 30)
-        .select((col("vec_id") + lit(100000L)).as("vec_id"), col("embedding"))
-      Similarity.semanticDedup(s, e.unionByName(planted), threshold = 0.95,
-          dim = 64)
-        .select(col("vec_id")).orderBy("vec_id")
-    }),
-
-    "dedup_semdedup" -> ((s, dir) => {
-      // SemDeDup (Abbas et al. 2023): k-means clusters scope the pairwise
-      // cosine search — Σ c² work, never corpus². Two regimes in one
-      // query: planted exact copies (cosine 1, provably co-clustered —
-      // identical vectors share an argmin) AND natural within-cluster
-      // near-pairs at threshold 0.45 (corpus max cosine ~0.51), so the
-      // drop rule does non-trivial work on real data. Oracle replays
-      // seeds, argmin assignment, within-cluster pairs, and the
-      // smaller-id-keeper rule.
-      val e = t(s, dir, "embeddings").select("vec_id", "embedding")
-      val planted = e.filter(col("vec_id") < 30)
-        .select((col("vec_id") + lit(100000L)).as("vec_id"), col("embedding"))
-      Similarity.semDedupClustered(e.unionByName(planted), k = 8,
-          threshold = 0.45)
-        .select(col("vec_id"), col("cluster_id"))
-        .orderBy("vec_id")
-    }),
-
-    "describe_calibration" -> ((s, dir) =>
-      // reliability table for the quality-filter sigmoid against an
-      // is-English label: scores quantize to integer micro-probs (the
-      // DSIR discipline) so bins and sums are exact int64 — mean_pred
-      // vs obs_rate per bin is the filter-calibration report
-      Describe.calibration(
-        Text.classifierScore(t(s, dir, "documents"), "text",
-          weights = Map("stopword_ratio" -> 4.0, "punct_ratio" -> 2.0,
-            "mean_word_len" -> 0.1, "n_words" -> 0.001),
-          bias = -1.0),
-        "quality_score", col("lang") === "en", bins = 10)
-        .orderBy("bin")),
-
-    "text_quality_score" -> ((s, dir) =>
-      // linear classifier inference as a zero-shuffle projection; the
-      // oracle replays the identical sigmoid arithmetic
-      Text.classifierScore(t(s, dir, "documents").filter(col("doc_id") < 200), "text",
-          weights = Map("stopword_ratio" -> 4.0, "punct_ratio" -> 2.0,
-            "mean_word_len" -> 0.1, "n_words" -> 0.001),
-          bias = -1.0)
-        .select(col("doc_id"), round(col("quality_score"), 6).as("quality_score"))
-        .orderBy("doc_id")),
-
-    // ---- benchmark decontamination + corpus curation (driver mandate)
-    "decon_overlap" -> ((s, dir) => {
-      // eval slice is every 7th doc; the eval n-gram set is broadcast, so
-      // the 100 TB train side never shuffles rows — only the final per-doc
-      // aggregation moves (id, count) pairs
-      val docs = t(s, dir, "documents")
-      Decontaminate.overlapReport(
-          docs.filter(col("doc_id") % 7 =!= 0), docs.filter(col("doc_id") % 7 === 0),
-          "text", "doc_id", n = 5)
-        .select(col("id").as("doc_id"), col("n_ngrams").cast("long").as("n_ngrams"),
-          col("n_overlap"), round(col("overlap_frac"), 6).as("overlap_frac"),
-          col("contaminated"))
-        .orderBy("doc_id")
-    }),
-
-    "decon_minhash_lsh" -> ((s, dir) => {
-      // fuzzy decontamination: train docs that would be an LSH candidate
-      // pair with some eval doc (shared band bucket); eval side broadcast
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 200)
-      Decontaminate.lshOverlap(
-          docs.filter(col("doc_id") % 7 =!= 0),
-          docs.filter(col("doc_id") % 7 === 0), "text", "doc_id")
-        .select(col("id").cast("long").as("doc_id"), col("n_bands_matched"))
-        .orderBy("doc_id")
-    }),
-
-    "decon_corpus_minhash" -> ((s, dir) => {
-      // corpus-level overlap estimate: NO join — one signature projection
-      // + one O(numHashes)-state aggregation per side
-      val docs = t(s, dir, "documents")
-      Decontaminate.corpusMinhashJaccard(
-        docs.filter(col("doc_id") % 2 === 0),
-        docs.filter(col("doc_id") % 2 =!= 0), "text")
-    }),
-
-    "decon_source_matrix" -> ((s, dir) =>
-      // pre-merge audit: pairwise corpus-overlap estimates across the
-      // source column from ONE pass — O(#groups·numHashes) driver state,
-      // gated by graft.corpusMatrix.maxGroups
-      Decontaminate.corpusMinhashMatrix(t(s, dir, "documents"), "text", "source")
-        .orderBy("group_a", "group_b")),
-
-    "decon_crossdoc_dup" -> ((s, dir) =>
-      Decontaminate.crossDocDupScore(
-          t(s, dir, "documents").filter(col("doc_id") < 300), "text", "doc_id", n = 5)
-        .select(col("id").as("doc_id"), col("n_ngrams").cast("long").as("n_ngrams"),
-          col("n_dup"), round(col("dup_frac"), 6).as("dup_frac"))
-        .orderBy("doc_id")),
-
-    "decon_remove_spans" -> ((s, dir) =>
-      // the cut step: every non-first occurrence of a corpus-duplicated
-      // word-5-gram is removed; doc rebuilt from surviving words
-      Decontaminate.removeDupSpans(t(s, dir, "documents"), "text", "doc_id", n = 5)
-        .select(col("id").as("doc_id"), col("n_words"), col("n_removed"),
-          md5(col("text_dedup").cast("binary")).as("dedup_md5"))
-        .orderBy("doc_id")),
-
-    // ---- sequence packing (driver mandate)
-    "pack_chunked" -> ((s, dir) =>
-      Packing.packChunked(t(s, dir, "documents"), col("n_chars"), maxTokens = 4096,
-          groupCol = "lang", orderCol = "doc_id")
-        .select(col("doc_id"), col("lang"), col("start_offset"),
-          col("chunk_first"), col("chunk_last"))
-        .orderBy("doc_id")),
-
-    "pack_firstfit" -> ((s, dir) =>
-      // greedy no-split bin packing is sequential per group (one linear
-      // mapPartitions pass) but still deterministic — the oracle replays
-      // the exact (bin_id, fill) recurrence with a DuckDB recursive CTE
-      // advancing every group one row per iteration; PackingSpec
-      // additionally verifies against a brute-force sequential reference
-      Packing.packFirstFit(t(s, dir, "documents"), "n_chars", maxTokens = 4096,
-          groupCol = "lang", orderCol = "doc_id")
-        .select(col("doc_id"), col("lang"), col("bin_id"))
-        .orderBy("doc_id")),
-
-    "text_chunk_windows" -> ((s, dir) =>
-      // context-window prep: overlapping 64-word chunks every 48 words;
-      // chunk text compared by md5 so the result stays small
-      Text.chunkDocs(t(s, dir, "documents").filter(col("doc_id") < 100),
-          "text", "doc_id", chunkWords = 64, strideWords = 48)
-        .withColumn("chunk_md5", md5(col("chunk_text").cast("binary")))
-        .select(col("doc_id"), col("chunk_id"), col("chunk_words"), col("chunk_md5"))
-        .orderBy("doc_id", "chunk_id")),
-
-    "sample_weighted" -> ((s, dir) => {
-      // Efraimidis–Spirakis weighted-without-replacement: exactly 20 docs
-      // per lang, longer docs favored proportionally to n_chars
-      val d = t(s, dir, "documents")
-      Sampling.weightedSample(d, col("n_chars"), col("doc_id"), k = 20,
-          strataCols = Seq("lang"))
-        .select(col("lang"), col("doc_id"), col("n_chars"))
-        .orderBy("lang", "doc_id")
-    }),
-
-    // ---- deterministic sampling / mixture (driver mandate)
-    "sample_hash" -> ((s, dir) =>
-      Sampling.hashSample(t(s, dir, "documents"), col("doc_id"), fraction = 0.25)
-        .select(col("doc_id")).orderBy("doc_id")),
-
-    "sample_stratified" -> ((s, dir) =>
-      Sampling.stratifiedSample(t(s, dir, "documents"), Seq("lang"), k = 20,
-          key = col("doc_id"))
-        .select(col("lang"), col("doc_id")).orderBy("lang", "doc_id")),
-
-    "sample_domain_mix" -> ((s, dir) =>
-      Sampling.domainMix(t(s, dir, "documents"), "source",
-          targets = Map("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2),
-          key = col("doc_id"), exact = true)
-        .select(col("doc_id"), col("source")).orderBy("doc_id")),
-
-    "sample_split" -> ((s, dir) =>
-      // leakage-safe 80/10/10 split keyed on the CONTENT fingerprint so
-      // exact dups co-locate; zero-shuffle projection + one count agg
-      Sampling.splitAssign(t(s, dir, "documents"),
-          Text.fingerprint(col("text")),
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .groupBy("split")
-        .agg(count(lit(1)).as("n_docs"), sum("doc_id").as("id_sum"))
-        .orderBy("split")),
-
-    "sample_shard_manifest" -> ((s, dir) =>
-      // reproducible-release artifact: deterministic shard membership +
-      // order-free int64 content checksums, re-derivable by any reader
-      Sampling.shardManifest(t(s, dir, "documents"),
-          content = Text.normalized(col("text")), key = col("doc_id"),
-          seed = "release1", numShards = 32)
-        .orderBy("shard_id")),
-
-    "sample_epoch_mix" -> ((s, dir) => {
-      // data-constrained repetition budgeting: a token budget of half the
-      // corpus x maxEpochs=4 caps, water-filled across languages; the
-      // waterline is ONE division of exact int64s so every double is
-      // engine-identical (sig discipline)
-      val docs = t(s, dir, "documents")
-      val toks = size(split(trim(col("text")), "\\s+")).cast("long")
-      val total = docs.agg(sum(toks)).head().getLong(0)
-      Sampling.epochMix(docs.filter(col("lang").isNotNull), "lang", toks,
-          budget = total / 2, maxEpochs = 4)
-        .select(col("domain"), col("n_tokens"), col("cap"),
-          round(col("alloc"), 6).as("alloc"), round(col("epochs"), 6).as("epochs"))
-        .orderBy("domain")
-    }),
-
-    "sample_temperature_mix" -> ((s, dir) =>
-      // p_d ∝ sqrt(n_d) tail-flattening mixture; sqrt is IEEE correctly
-      // rounded, so the quota algebra replays bitwise in the oracle
-      Sampling.temperatureMix(t(s, dir, "documents"), "source",
-          tau = 0.5, key = col("doc_id"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"), sum("doc_id").as("id_sum"))
-        .orderBy("source")),
-
-    "sample_dsir" -> ((s, dir) =>
-      // domain-targeted data selection: top-20 docs by likelihood ratio
-      // vs the src0 target model, exact integer micro-nat aggregation
-      Sampling.dsirScores(t(s, dir, "documents"), "text", "doc_id",
-          col("source") === "src0")
-        .orderBy(col("score_unats").desc, col("doc_id").asc)
-        .limit(20)
-        .select(col("doc_id"), col("n_tokens"), col("score_unats"))),
-
-    "sample_dsir_resample" -> ((s, dir) =>
-      // the full DSIR pipeline: likelihood-ratio scores -> deterministic
-      // importance RESAMPLING (A-ES with w = exp(score); stochastic-like
-      // but reproducible via key-hash randomness, unlike a hard top-k)
-      Sampling.weightedSample(
-          Sampling.dsirScores(t(s, dir, "documents"), "text", "doc_id",
-            col("source") === "src0"),
-          exp(col("score_unats").cast("double") / 1e6), col("doc_id"), k = 25)
-        .select(col("doc_id"), col("n_tokens"), col("score_unats"))
-        .orderBy("doc_id")),
-
-    "sample_component_split" -> ((s, dir) => {
-      // leakage-safe split at NEAR-dup granularity: verified chain pairs ->
-      // connected components -> the whole component keys ONE split decision
-      // (sample_split's content fingerprint only co-locates exact dups)
-      val docs = t(s, dir, "documents")
-      val pairs = docs.select(col("doc_id").as("id1"))
-        .withColumn("id2", col("id1") + 1)
-      val verified = Dedup.ngramJaccard(s, docs, pairs, "text", "doc_id", shingleK = 4)
-        .filter(col("jaccard") >= 0.3)
-      val comps = Dedup.components(verified)
-      Sampling.componentSplit(docs, comps, "doc_id",
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
-        .groupBy("split")
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(col("split_group")).as("n_groups"),
-          sum("doc_id").as("id_sum"))
-        .orderBy("split")
-    }),
-
-    "text_good_turing" -> ((s, dir) =>
-      // crawl-coverage report: counts-of-counts, Turing unseen mass
-      // n1/N, smoothed r* — every number a division of exact int64s
-      Text.goodTuring(t(s, dir, "documents"), "text", maxR = 10)
-        .select(col("r"), col("n_r"), round(col("r_star"), 6).as("r_star"),
-          round(col("p_unseen"), 6).as("p_unseen"))
-        .orderBy("r")),
-
-    "text_ccnet_buckets" -> ((s, dir) =>
-      // CCNet-style quality triage: head/middle/tail thirds by per-doc
-      // LM NLL; per-doc scores round to 6dp BEFORE the tercile edges and
-      // the bucketing, so the split replays bitwise
-      Text.perplexityBuckets(t(s, dir, "documents"), "text", "doc_id",
-          topVocab = 1000, alpha = 1.0)
-        .select(col("bucket"), col("n_docs"),
-          round(col("mean_nll"), 6).as("mean_nll"), col("n_tokens"))
-        .orderBy("bucket")),
-
-    "text_js_divergence" -> ((s, dir) => {
-      // crawl-snapshot comparison: JS divergence between the even- and
-      // odd-doc_id halves' unigram distributions — symmetric, bounded,
-      // eps-free (absent-side terms are 0 by the 0*ln(0) convention)
-      val docs = t(s, dir, "documents")
-      Text.jsDivergence(docs.filter(col("doc_id") % 2 === 0),
-          docs.filter(col("doc_id") % 2 =!= 0), "text")
-        .select(col("n_a"), col("n_b"), col("vocab_a"), col("vocab_b"),
-          col("vocab_shared"), round(col("js_nats"), 6).as("js_nats"),
-          round(col("js_norm"), 6).as("js_norm"))
-    }),
-
-    "text_vocab_topk" -> ((s, dir) =>
-      Text.vocab(t(s, dir, "documents"), "text", "doc_id", topK = 100)
-        .select(col("word"), col("tf"), col("df"))
-        .orderBy(col("tf").desc, col("word").asc)),
-
-    "text_heavy_hitters" -> ((s, dir) =>
-      // exact >=phi*N frequent words WITHOUT shuffling the tail
-      // vocabulary (lossy-counting candidates + exact verify pass)
-      Text.heavyHitters(t(s, dir, "documents"), "text", phi = 0.002)),
-
-    "text_bpe_train" -> ((s, dir) =>
-      // tokenizer training at corpus scale: the corpus is scanned ONCE
-      // (word counts); 8 merge rounds then run on the vocab-sized table
-      Text.bpeTrain(t(s, dir, "documents"), "text", numMerges = 8)
-        .orderBy("step")),
-
-    "text_bpe_fertility" -> ((s, dir) =>
-      // per-language tokenizer fertility: ONE shared tokenizer trained
-      // on the whole corpus, BPE tokens per word + chars per token per
-      // lang — the vocab-budget reallocation signal. Trained on the FULL
-      // table (matching the oracle's training CTEs); null-lang groups
-      // drop at the rollup
-      Text.bpeFertility(t(s, dir, "documents"), "text", "doc_id", "lang",
-          numMerges = 8)
-        .filter(col("lang").isNotNull)
-        .select(col("lang"), col("n_docs"), col("n_words"),
-          col("n_bpe_tokens"),
-          round(col("fertility"), 6).as("fertility"),
-          round(col("chars_per_token"), 6).as("chars_per_token"))
-        .orderBy("lang")),
-
-    "text_bpe_apply" -> ((s, dir) => {
-      // train on the FULL corpus, tokenize a slice with the learned
-      // merges (the merge table is O(#merges) driver metadata; the
-      // application itself is a zero-shuffle per-row fold chain)
-      val d = t(s, dir, "documents")
-      val merges = Text.bpeTrain(d, "text", numMerges = 8)
-        .orderBy("step").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      Text.bpeApply(d.filter(col("doc_id") < 40), "text", "doc_id", merges)
-        .orderBy("doc_id")
-    }),
-
-    "text_unigram_apply" -> ((s, dir) => {
-      // unigram-LM tokenizer (SentencePiece family, Kudo 2018) with the
-      // DETERMINISTIC integer hard-EM: seed substrings -> 2 Viterbi
-      // E-steps with count-as-score M-steps -> prune -> apply. Trained on
-      // the FULL corpus (one scan to word counts, vocab-local EM); the
-      // oracle replays seeding, BOTH EM rounds, the prune, and the final
-      // segmentation as unrolled integer DP chains in SQL. Output sliced
-      // to doc_id < 300 (row-bounded); training is unsliced.
-      val d = t(s, dir, "documents")
-      val pieces = Text.unigramTrain(d, "text")
-        .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-      Text.unigramApply(d, "text", "doc_id", pieces)
-        .filter(col("doc_id") < 300)
-        .orderBy("doc_id")
-    }),
-
-    "text_tokenizer_fertility_ab" -> ((s, dir) =>
-      // the tokenizer-family A/B (VERDICT r14 #5): BPE and unigram-LM
-      // trained on the SAME corpus, applied everywhere, per-language
-      // fertility side by side — the vocab-budget question
-      // text_bpe_fertility half-answers, now answered across families.
-      // Both trainings run on the full table (matching both oracle
-      // chains); null-lang groups drop at the rollup.
-      Text.tokenizerFertilityAb(t(s, dir, "documents"), "text", "doc_id",
-          "lang", numMerges = 8)
-        .filter(col("lang").isNotNull)
-        .select(col("lang"), col("n_docs"), col("n_words"),
-          col("n_bpe_tokens"), col("n_unigram_tokens"),
-          round(col("bpe_fertility"), 6).as("bpe_fertility"),
-          round(col("unigram_fertility"), 6).as("unigram_fertility"))
-        .orderBy("lang")),
-
-    "text_tfidf_topk" -> ((s, dir) =>
-      Text.tfidfTopK(t(s, dir, "documents"), "text", "doc_id",
-          topK = 3, minDf = 2L)
-        .select(col("doc_id"), col("term"), col("tf"), col("df"),
-          round(col("tfidf"), 6).as("tfidf"), col("rank"))
-        .orderBy("doc_id", "rank")),
-
-    "sample_contrastive_pairs" -> ((s, dir) => {
-      // contrastive training-pair feed: positives from (planted)
-      // exact-dup components, negatives by deterministic circular
-      // seeded-hash order skipping same-component partners — byte-stable
-      // per seed, the release-reproducibility contract
-      val d0 = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val docs = d0.unionByName(d0.filter(col("doc_id") < 30)
-        .select((col("doc_id") + 10000L).as("doc_id"), col("text")))
-      val c = docs.select(col("doc_id").cast("string").as("id"),
-        Text.fingerprint(col("text")).as("__f"))
-      val reps = c.groupBy("__f").agg(min("id").as("component"))
-      val comp = c.join(reps, Seq("__f")).select("id", "component")
-      Sampling.contrastivePairs(docs, comp, "doc_id", negK = 2, seed = "cp1")
-        .orderBy("anchor", "kind", "partner")
-    }),
-
-    "sample_corpus_shuffle" -> ((s, dir) =>
-      Sampling.shufflePositions(
-          t(s, dir, "documents").select("doc_id", "lang"),
-          key = col("doc_id"), seed = "epoch0")
-        .select(col("doc_id"), col("lang"), col("shuffle_pos"))
-        .orderBy("doc_id")),
-
-    "sample_curriculum" -> ((s, dir) => {
-      // curriculum interleave (r13 VERDICT #3): difficulty = token count,
-      // 8 exact ntile buckets, position = rank_in_bucket*8 + bucket — all
-      // closed-form off ONE range sort's global rank, zero windows; the
-      // oracle replays the same arithmetic from row_number()
-      val docs = t(s, dir, "documents").select(col("doc_id"),
-        size(filter(split(trim(col("text")), "\\s+"),
-          x => length(x) > 0)).cast("double").as("difficulty"))
-      Sampling.curriculumOrder(docs, "difficulty", "doc_id", k = 8)
-        .select(col("id").as("doc_id"), col("difficulty"), col("bucket"),
-          col("rank_in_bucket"), col("position"))
-        .orderBy("position")
-    }),
-
-    // ---- temporal joins Spark lacks natively (scale-join surface)
-    "join_asof" -> ((s, dir) => {
-      // each click attaches the user's most recent prior purchase
-      val e = t(s, dir, "events")
-      val mic = unix_micros(col("ts"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), mic.as("t"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), mic.as("pt"), col("value"))
-      Joins.asofJoin(clicks, purchases, Seq("user_id"), "t", "pt",
-          rightCols = Seq("value"), prefix = "purchase_")
-        .select(col("event_id"), col("user_id"), col("t"),
-          col("purchase_pt"), round(col("purchase_value"), 4).as("purchase_value"))
-        .orderBy("event_id")
-    }),
-
-    "join_asof_forward" -> ((s, dir) => {
-      // each click attaches the user's NEXT purchase (forward as-of)
-      val e = t(s, dir, "events")
-      val mic = unix_micros(col("ts"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), mic.as("t"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), mic.as("pt"), col("value"))
-      Joins.asofJoin(clicks, purchases, Seq("user_id"), "t", "pt",
-          rightCols = Seq("value"), prefix = "next_", direction = "forward")
-        .select(col("event_id"), col("user_id"), col("t"),
-          col("next_pt"), round(col("next_value"), 4).as("next_value"))
-        .orderBy("event_id")
-    }),
-
-    "text_collocations" -> ((s, dir) =>
-      // multi-word-expression mining: top adjacent pairs by PMI
-      Text.collocations(t(s, dir, "documents"), "text", minCount = 5L, topK = 50)
-        .orderBy(col("pmi").desc, col("w1"), col("w2"))),
-
-    "genotype_hwe" -> ((s, dir) => {
-      // Hardy-Weinberg QC on the same synthesized diploid calls as the MAF
-      // describe; chi2 + A-S erfc p-value replay exactly in SQL
-      val li = t(s, dir, "lineitem")
-      val calls = li.select(
-        xxhash64(li.columns.map(col): _*).as("id"),
-        array((col("l_linenumber") % 2).cast("int"),
-          (col("l_suppkey") % 2).cast("int")).as("g1"),
-        array((col("l_partkey") % 2).cast("int"),
-          (col("l_orderkey") % 2).cast("int")).as("g2"))
-      val cf = CladeFrame(calls).withTypes(Map(
-        "g1" -> (graft.model.VariableType.Genotype: graft.model.VariableType),
-        "g2" -> (graft.model.VariableType.Genotype: graft.model.VariableType)))
-      graft.genomics.Genotypes.hweTest(cf)
-        .select(col("variable"), col("n_obs"), col("n_hom_ref"), col("n_het"),
-          col("n_hom_alt"), round(col("alt_freq"), 6).as("alt_freq"),
-          round(col("hwe_chi2"), 6).as("hwe_chi2"),
-          round(col("hwe_p"), 6).as("hwe_p"), col("hwe_fail"))
-        .orderBy("variable")
-    }),
-
-    "join_interval" -> ((s, dir) => {
-      // overlap join of two interval sets: purchase hours x click
-      // half-hours, per user; pair survives in exactly one bucket
-      val e = t(s, dir, "events")
-      val mic = unix_micros(col("ts"))
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"),
-          mic.as("p_start"), (mic + 3600L * 1000 * 1000).as("p_end"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"),
-          mic.as("c_start"), (mic + 1800L * 1000 * 1000).as("c_end"))
-      Joins.intervalJoin(purchases, clicks, Seq("user_id"),
-          "p_start", "p_end", "c_start", "c_end",
-          bucketWidth = 3600L * 1000 * 1000)
-        .groupBy(col("purchase_id"))
-        .agg(count(lit(1)).as("n_overlap"), min(col("click_id")).as("first_click"))
-        .orderBy("purchase_id")
-    }),
-
-    "join_salted" -> ((s, dir) => {
-      // skew-defused equi-join: big side salted by row hash, small side
-      // exploded x salt — hot keys spread over `salt` reducers; the result
-      // is EXACTLY the plain join (the oracle is the plain join)
-      val li = t(s, dir, "lineitem")
-        .select(col("l_suppkey").as("s_suppkey"), col("l_extendedprice"))
-      val sup = t(s, dir, "supplier").select(col("s_suppkey"), col("s_nationkey"))
-      Joins.saltedJoin(li, sup, Seq("s_suppkey"), salt = 8)
-        .groupBy("s_nationkey")
-        .agg(count(lit(1)).as("n"),
-          round(sum("l_extendedprice"), 2).as("revenue"))
-        .orderBy("s_nationkey")
-    }),
-
-    "join_range" -> ((s, dir) => {
-      // clicks landing inside the hour after each purchase, per user
-      val e = t(s, dir, "events")
-      val mic = unix_micros(col("ts"))
-      val intervals = e.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"),
-          mic.as("w_start"), (mic + lit(3600000000L)).as("w_end"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), mic.as("t"), col("value"))
-      Joins.rangeJoin(clicks, intervals, Seq("user_id"), "t",
-          "w_start", "w_end", bucketWidth = 3600000000L)
-        .groupBy("purchase_id")
-        .agg(count(lit(1)).as("n_clicks"),
-          round(sum("value"), 4).as("click_value"))
-        .orderBy("purchase_id")
-    }),
-
-    "text_corpus_report" -> ((s, dir) =>
-      // corpus health dashboard: size stats at every (lang, source) rollup
-      // explicit NULLS FIRST on both sides: Spark ASC defaults nulls-first,
-      // DuckDB nulls-last — the cube's rollup rows are disambiguated by the
-      // g_* grouping flags, but a REAL null lang/source value would
-      // otherwise break row-order parity (ADVICE r5)
-      Text.corpusReport(t(s, dir, "documents"), Seq("lang", "source"), "n_chars")
-        .orderBy(col("g_lang"), col("g_source"),
-          col("lang").asc_nulls_first, col("source").asc_nulls_first)),
-
-    "sample_importance" -> ((s, dir) => {
-      // quality-weighted downsampling: longer docs survive with higher p
-      val d = t(s, dir, "documents")
-      val p = col("n_chars").cast("double") / (col("n_chars") + lit(500))
-      Sampling.importanceSample(d, p, key = col("doc_id"))
-        .select(col("doc_id"), col("n_chars")).orderBy("doc_id")
-    }),
-
-    "text_bm25_topk" -> ((s, dir) =>
-      // keyword retrieval over the corpus: top-20 docs for a 3-term query
-      Text.bm25Rank(t(s, dir, "documents"), "text", "doc_id",
-          terms = Seq("hash", "join", "vector"), topK = 20)
-        .withColumn("bm25", round(col("bm25"), 6))),
-
-    "fuzzy_join_parts" -> ((s, dir) => {
-      // near-miss NAME VARIANTS in the part catalog: fuzzy-link the distinct
-      // name vocabulary, not the rows — dedupe-before-quadratic-verify is
-      // the scale pattern (row-level blocking on a catalog that is mostly
-      // duplicate names degenerates to |rows-per-name|² pairs).
-      // maxDist = 3: the tightest radius at which the TPC-H color vocabulary
-      // has real near-misses (32 pairs at every SF) — at 2 the oracle
-      // compared empty results and exercised nothing (ADVICE r5)
-      val p = t(s, dir, "part")
-      val a = p.select(col("p_name").as("a_name")).distinct()
-      val b = p.select(col("p_name").as("b_name")).distinct()
-      Joins.fuzzyJoin(a, b, "a_name", "b_name", maxDist = 3, prefixLen = 4)
-        .filter(col("edit_dist") >= 1)
-        .groupBy(col("a_name"))
-        .agg(count(lit(1)).as("n_near"), min(col("edit_dist")).as("min_dist"))
-        .orderBy("a_name")
-    }),
-
-    // ---- bloom-sketch-accelerated exact blocklist filtering
-    "blocklist_filter_out" -> ((s, dir) => {
-      // remove documents whose content hash is on a bad-hash blocklist;
-      // bloom-negative rows never shuffle, result is the exact anti-join
-      val docs = t(s, dir, "documents").withColumn("fp", md5(col("text")))
-      val bl = docs.filter(col("doc_id") % 7 === 0).select(col("fp").as("bad_fp"))
-      Blocklist.filterOut(docs, bl, "fp", blocklistKey = "bad_fp")
-        .select(col("doc_id"), col("source")).orderBy("doc_id")
-    }),
-
-    "blocklist_phrase" -> ((s, dir) => {
-      // multi-word phrase blocklist at word boundaries: first-token
-      // anchored broadcast join (provably no false negatives for
-      // word-aligned matches), contains-verify — the corpus never
-      // shuffles. One phrase ("data leak probe") has a corpus-frequent
-      // anchor but never matches in full: a false positive would show as
-      // extra rows vs the oracle's brute cross-join.
-      import s.implicits._
-      val phrases = Seq("slow scan", "fast merge", "key agg",
-        "customer data", "spark join", "window sort", "stream filter",
-        "data leak probe").toDF("phrase")
-      Blocklist.phraseMatches(t(s, dir, "documents"), phrases,
-          "text", "doc_id")
-        .orderBy("doc_id", "phrase")
-    }),
-
-    "blocklist_semi" -> ((s, dir) => {
-      // audit pull: every document matching the blocklist (exact semi-join,
-      // bloom prunes the probe side before the shuffle)
-      val docs = t(s, dir, "documents").withColumn("fp", md5(col("text")))
-      val bl = docs.filter(col("doc_id") % 7 === 0).select(col("fp").as("bad_fp"))
-      Blocklist.keepMatching(docs, bl, "fp", blocklistKey = "bad_fp")
-        .select(col("doc_id"), col("lang")).orderBy("doc_id")
-    }))
-
-  /** 32 deterministic derived variables over lineitem — identical SQL in
-    * Spark and DuckDB (integer modulo + double arithmetic only). */
-  private val wideVars: Seq[(String, String)] = (0 until 32).map { i =>
-    (f"wv$i%02d",
-      s"l_quantity * ((l_partkey % ${i + 2}) + 1) + l_tax * $i + l_discount * ${i % 7}")
-  }
-
-  private def wideOracle: String = {
-    val arms = wideVars.map { case (name, ex) =>
-      s"""SELECT '$name' AS variable, CAST(regr_count(l_extendedprice, $ex) AS BIGINT) AS n,
-         round(regr_slope(l_extendedprice, $ex), 4) AS beta,
-         round(sqrt((regr_syy(l_extendedprice, $ex)
-                 - regr_sxy(l_extendedprice, $ex)^2 / regr_sxx(l_extendedprice, $ex))
-               / (regr_count(l_extendedprice, $ex) - 2)
-               / regr_sxx(l_extendedprice, $ex)), 4) AS se FROM lineitem"""
-    }
-    arms.mkString("SELECT * FROM (\n", "\nUNION ALL\n", "\n) ORDER BY variable")
   }
 
   /** 6-significant-digit rounding that is bitwise deterministic across
@@ -3507,5029 +92,4 @@ object SparkEntry {
        | WHEN 5 - $e >= 0 THEN round($x * pow(10, 5 - $e)) / pow(10, 5 - $e)
        | ELSE round($x / pow(10, $e - 5)) * pow(10, $e - 5) END""".stripMargin
   }
-
-  /** One UNION-ALL arm of the interaction oracle: full-vs-restricted OLS
-    * for y ~ 1 + x1 + x2 + x1*x2 replayed via sequential Gram-Schmidt.
-    * Center everything (eliminates the intercept), then z2 = c2 − proj(c2
-    * on c1), z3 = c3 − proj(c3 on c1, z2). By Frisch–Waugh–Lovell,
-    * beta(x1:x2) = Σz3·cy / Σz3², SE = sqrt(RSS_f/(n−4)/Σz3²), and each
-    * orthogonal stage's squared-projection drop yields RSS_restricted /
-    * RSS_full in closed form. lrstat mirrors Glm.fitGaussian's estimated-
-    * scale llf: 1 + n·ln((RSS_r/(n−3))·(n−4)/RSS_f); p = chi2_sf(·,1)
-    * = erfc(sqrt(lr/2)) via the Cody replay. */
-  private def interactionPairArm(x1: String, x2: String): String =
-    interactionPairArm(x1, x1, x2, x2)
-
-  /** Arm over DERIVED variables: `e1`/`e2` are the defining SQL
-    * expressions, `n1`/`n2` the reported term names. */
-  private def interactionPairArm(n1: String, e1: String,
-                                 n2: String, e2: String): String = {
-    val (x1, x2) = (e1, e2)
-    val lr = "(1.0 + n * ln((rss_r / (n - 3)) * (n - 4) / rss_f))"
-    s"""SELECT '$n1' AS term1, '$n2' AS term2, CAST(n AS BIGINT) AS n,
-       |  ${sqlSig6("beta3")} AS beta,
-       |  ${sqlSig6("sqrt(rss_f / (n - 4) / s33)")} AS se,
-       |  round(CASE WHEN $lr <= 0 THEN 1.0
-       |        ELSE ${sqlErfc(s"sqrt($lr / 2)")} END, 6) AS lrt_pvalue
-       |FROM (
-       |  WITH b AS (SELECT CAST($x1 AS DOUBLE) AS x1, CAST($x2 AS DOUBLE) AS x2,
-       |               CAST($x1 AS DOUBLE) * CAST($x2 AS DOUBLE) AS x3,
-       |               CAST(l_extendedprice AS DOUBLE) AS y FROM lineitem),
-       |  m AS (SELECT count(*) AS n, avg(x1) AS m1, avg(x2) AS m2,
-       |               avg(x3) AS m3, avg(y) AS my FROM b),
-       |  c AS (SELECT x1 - m1 AS c1, x2 - m2 AS c2, x3 - m3 AS c3, y - my AS cy
-       |        FROM b CROSS JOIN m),
-       |  g1 AS (SELECT sum(c1*c1) AS s11, sum(c1*c2) AS s12, sum(c1*c3) AS s13,
-       |                sum(c1*cy) AS s1y FROM c),
-       |  z2t AS (SELECT c.*, c2 - (s12/s11)*c1 AS z2 FROM c CROSS JOIN g1),
-       |  g2 AS (SELECT sum(z2*z2) AS s22, sum(z2*c3) AS s23, sum(z2*cy) AS s2y FROM z2t),
-       |  z3t AS (SELECT z2t.*, c3 - (s13/s11)*c1 - (s23/s22)*z2 AS z3
-       |          FROM z2t CROSS JOIN g1 CROSS JOIN g2),
-       |  g3 AS (SELECT sum(z3*z3) AS s33, sum(z3*cy) AS s3y FROM z3t),
-       |  gy AS (SELECT sum(cy*cy) AS syy FROM c)
-       |  SELECT n, s33, s3y/s33 AS beta3,
-       |    syy - s1y*s1y/s11 - s2y*s2y/s22 AS rss_r,
-       |    syy - s1y*s1y/s11 - s2y*s2y/s22 - s3y*s3y/s33 AS rss_f
-       |  FROM m CROSS JOIN g1 CROSS JOIN g2 CROSS JOIN g3 CROSS JOIN gy
-       |)""".stripMargin
-  }
-
-  /** report_betas oracle: explicit Cramer's-rule solve of the centered
-    * 3-predictor normal equations (y ~ x1 + x2 + x1·x2) — full-model
-    * betas/SEs from cofactor diagonals, reduced-model (2-predictor) betas
-    * in closed form, LRT from the two RSS values with estimated scale. */
-  private def interactionBetasOracle: String = {
-    val lr = "(1.0 + n * ln((rss_r / (n - 3)) * (n - 4) / rss_f))"
-    s"""WITH b AS (SELECT CAST(l_quantity AS DOUBLE) AS x1,
-       |             CAST(l_discount AS DOUBLE) AS x2,
-       |             CAST(l_quantity AS DOUBLE) * CAST(l_discount AS DOUBLE) AS x3,
-       |             CAST(l_extendedprice AS DOUBLE) AS y FROM lineitem),
-       |m AS (SELECT count(*) AS n, avg(x1) AS m1, avg(x2) AS m2,
-       |             avg(x3) AS m3, avg(y) AS my FROM b),
-       |c AS (SELECT x1 - m1 AS c1, x2 - m2 AS c2, x3 - m3 AS c3, y - my AS cy
-       |      FROM b CROSS JOIN m),
-       |g AS (SELECT sum(c1*c1) AS s11, sum(c1*c2) AS s12, sum(c1*c3) AS s13,
-       |             sum(c2*c2) AS s22, sum(c2*c3) AS s23, sum(c3*c3) AS s33,
-       |             sum(c1*cy) AS s1y, sum(c2*cy) AS s2y, sum(c3*cy) AS s3y,
-       |             sum(cy*cy) AS syy FROM c),
-       |d AS (SELECT n, s11, s12, s22, s1y, s2y, s3y, syy,
-       |        s11*(s22*s33 - s23*s23) - s12*(s12*s33 - s23*s13)
-       |          + s13*(s12*s23 - s22*s13) AS det,
-       |        s22*s33 - s23*s23 AS c11, s11*s33 - s13*s13 AS c22,
-       |        s11*s22 - s12*s12 AS c33,
-       |        s1y*(s22*s33 - s23*s23) - s12*(s2y*s33 - s23*s3y)
-       |          + s13*(s2y*s23 - s22*s3y) AS d1,
-       |        s11*(s2y*s33 - s23*s3y) - s1y*(s12*s33 - s23*s13)
-       |          + s13*(s12*s3y - s2y*s13) AS d2,
-       |        s11*(s22*s3y - s2y*s23) - s12*(s12*s3y - s2y*s13)
-       |          + s1y*(s12*s23 - s22*s13) AS d3
-       |      FROM m CROSS JOIN g),
-       |f AS (SELECT *, d1/det AS b1, d2/det AS b2, d3/det AS b3 FROM d),
-       |r AS (SELECT *, syy - b1*s1y - b2*s2y - b3*s3y AS rss_f,
-       |        (s1y*s22 - s12*s2y) / c33 AS rb1,
-       |        (s11*s2y - s12*s1y) / c33 AS rb2 FROM f),
-       |fin AS (SELECT *, syy - rb1*s1y - rb2*s2y AS rss_r FROM r)
-       |SELECT 'l_quantity' AS term1, 'l_discount' AS term2,
-       |  'l_quantity:l_discount' AS parameter, CAST(n AS BIGINT) AS n,
-       |  round(CASE WHEN $lr <= 0 THEN 1.0
-       |        ELSE ${sqlErfc(s"sqrt($lr / 2)")} END, 6) AS lrt_pvalue,
-       |  ${sqlSig6("rb1")} AS red_v1_beta,
-       |  ${sqlSig6("sqrt(rss_r / (n - 3) * s22 / c33)")} AS red_v1_se,
-       |  ${sqlSig6("rb2")} AS red_v2_beta,
-       |  ${sqlSig6("sqrt(rss_r / (n - 3) * s11 / c33)")} AS red_v2_se,
-       |  ${sqlSig6("b3")} AS full_inter_beta,
-       |  ${sqlSig6("sqrt(rss_f / (n - 4) * c33 / det)")} AS full_inter_se,
-       |  ${sqlSig6("b1")} AS full_v1_beta,
-       |  ${sqlSig6("sqrt(rss_f / (n - 4) * c11 / det)")} AS full_v1_se,
-       |  ${sqlSig6("b2")} AS full_v2_beta,
-       |  ${sqlSig6("sqrt(rss_f / (n - 4) * c22 / det)")} AS full_v2_se
-       |FROM fin""".stripMargin
-  }
-
-  private def interactionPairOracle: String =
-    Seq(("l_quantity", "l_discount"), ("l_quantity", "l_tax"), ("l_discount", "l_tax"))
-      .map { case (a, b) => interactionPairArm(a, b) }
-      .mkString("SELECT * FROM (\n", "\nUNION ALL\n", "\n) ORDER BY term1, term2")
-
-  /** 10 derived continuous variables for the all-pairs interaction scan —
-    * wideVars-shaped (distinct partkey moduli keep every pair genuinely
-    * non-collinear, so no fit is singular). */
-  private val interScanVars: Seq[(String, String)] = (0 until 10).map { i =>
-    (f"iv$i%02d",
-      s"l_quantity * ((l_partkey % ${i + 2}) + 1) + l_tax * ${i + 1} + l_discount * ${i % 5 + 1}")
-  }
-
-  private def interactionAllPairsOracle: String = {
-    val arms = for {
-      i <- interScanVars.indices; j <- (i + 1) until interScanVars.size
-    } yield interactionPairArm(
-      interScanVars(i)._1, interScanVars(i)._2,
-      interScanVars(j)._1, interScanVars(j)._2)
-    arms.mkString("SELECT * FROM (\n", "\nUNION ALL\n", "\n) ORDER BY term1, term2")
-  }
-
-  // -------------------------------------------- minhash/simhash SQL replay
-  // DuckDB replay of the Dedup hash kernels (Dedup.polyHash via Text,
-  // fmix64, the seeded family) so the LSH candidate queries are hash-proven
-  // rather than rows-only. All 64-bit wrapping arithmetic runs in HUGEINT
-  // limbs (DuckDB raises on BIGINT overflow instead of wrapping); signed
-  // Long min-comparison is obtained on UBIGINT bits by flipping the sign
-  // bit (x XOR 2^63 maps signed order onto unsigned order). Corpus is
-  // ASCII (verified), so unicode() == Java charAt and lower() == toLowerCase.
-
-  /** 64-bit wrapping multiply of a UBIGINT sql expression by a constant:
-    * 32-bit limb products in HUGEINT, recombined mod 2^64. */
-  private def sqlUmul64(a: String, c: BigInt): String = {
-    val cl = c & 0xFFFFFFFFL
-    val ch = c >> 32
-    s"CAST((((($a)::HUGEINT % 4294967296) * $cl" +
-      s" + (((($a)::HUGEINT // 4294967296) * $cl" +
-      s" + (($a)::HUGEINT % 4294967296) * $ch) % 4294967296) * 4294967296)" +
-      s" % 18446744073709551616) AS UBIGINT)"
-  }
-
-  /** Text.polyHash replay: h = h*1000003 + char, wrapping at 2^64. */
-  private def sqlPolyHash(x: String): String =
-    s"""CAST(list_reduce(list_prepend(CAST(0 AS HUGEINT),
-       |  list_transform(range(length($x)), ci -> CAST(unicode($x[CAST(ci AS INT)+1:CAST(ci AS INT)+1]) AS HUGEINT))),
-       |  (acc, c) -> (acc * 1000003 + c) % CAST('18446744073709551616' AS HUGEINT)) AS UBIGINT)""".stripMargin
-
-  /** Dedup.fmix64 replay as chained CTEs over a column named `a`. */
-  private def sqlFmixSteps(from: String): String = {
-    val c1 = BigInt("ff51afd7ed558ccd", 16)
-    val c2 = BigInt("c4ceb9fe1a85ec53", 16)
-    s"""f1 AS (SELECT id, i, xor(a, a >> 33) AS a FROM $from),
-       |f2 AS (SELECT id, i, ${sqlUmul64("a", c1)} AS a FROM f1),
-       |f3 AS (SELECT id, i, xor(a, a >> 33) AS a FROM f2),
-       |f4 AS (SELECT id, i, ${sqlUmul64("a", c2)} AS a FROM f3),
-       |f5 AS (SELECT id, i, xor(a, a >> 33) AS a FROM f4)""".stripMargin
-  }
-
-  /** Full DuckDB replay of Dedup.minhashCandidates on documents doc_id<200:
-    * shingle → polyHash → fmix64(x ^ param_i) → per-function signed min →
-    * 16 band slices → bucket self-join → est_jaccard from full signatures.
-    * Buckets join on the band SLICE itself where the engine joins on
-    * xxhash64(slice) — identical pairs unless xxhash64 collides on two
-    * distinct 4-long slices within one band (2^-64 per pair, r12: was
-    * 32-bit murmur3 whose birthday bound ~2^16 distinct slices per band
-    * undercut the 100 TB claim — ADVICE r11; a collision would surface
-    * as extra Spark rows here). */
-  /** Chained-CTE replay of Similarity.mmrRerank(k, m, lambda=0.5):
-    * rel = the top-m cosine (rounded 6), pairwise candidate sims rounded
-    * 6, then one greedy CTE block per rank — score = round(0.5·rel −
-    * 0.5·max sim to selected, 6), argmax (score DESC, id ASC) per query
-    * partition. Same decimal-grid argmaxes as the engine's driver greedy. */
-  private def mmrOracleSql(k: Int, m: Int): String = {
-    require(k >= 1 && m >= k)
-    val sb = new StringBuilder
-    sb ++= s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 4),
-         c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-         dots AS (
-           SELECT query_id, neighbor_id,
-             sum(CAST(qv[r.range + 1] AS DOUBLE) * CAST(cv[r.range + 1] AS DOUBLE)) AS d,
-             sum(CAST(qv[r.range + 1] AS DOUBLE) ^ 2) AS nq,
-             sum(CAST(cv[r.range + 1] AS DOUBLE) ^ 2) AS nc
-           FROM q CROSS JOIN c CROSS JOIN range(64) r
-           WHERE query_id <> neighbor_id GROUP BY 1, 2),
-         ranked AS (SELECT query_id, neighbor_id,
-             round(d / (sqrt(nq) * sqrt(nc)), 6) AS rel,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY round(d / (sqrt(nq) * sqrt(nc)), 6) DESC, neighbor_id) AS rn
-           FROM dots),
-         cand AS (SELECT query_id, neighbor_id, rel FROM ranked WHERE rn <= $m),
-         cv2 AS (SELECT vec_id AS id, embedding AS v FROM embeddings),
-         ps AS (
-           SELECT a.query_id, a.neighbor_id AS id_a, b.neighbor_id AS id_b,
-             round(sum(CAST(x.v[r.range + 1] AS DOUBLE) * CAST(y.v[r.range + 1] AS DOUBLE))
-               / (sqrt(sum(CAST(x.v[r.range + 1] AS DOUBLE) ^ 2))
-                  * sqrt(sum(CAST(y.v[r.range + 1] AS DOUBLE) ^ 2))), 6) AS sim
-           FROM cand a JOIN cand b USING (query_id)
-           JOIN cv2 x ON x.id = a.neighbor_id JOIN cv2 y ON y.id = b.neighbor_id
-           CROSS JOIN range(64) r GROUP BY 1, 2, 3),
-         sel1 AS (SELECT query_id, neighbor_id, rel, round(0.5 * rel, 6) AS score
-           FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-               ORDER BY round(0.5 * rel, 6) DESC, neighbor_id) AS rn2 FROM cand)
-           WHERE rn2 = 1),
-         sall1 AS (SELECT query_id, neighbor_id FROM sel1)"""
-    for (j <- 2 to k) {
-      sb ++= s""",
-         red$j AS (SELECT p.query_id, p.id_a AS neighbor_id, max(p.sim) AS red
-           FROM ps p JOIN sall${j - 1} s
-             ON s.query_id = p.query_id AND s.neighbor_id = p.id_b
-           GROUP BY 1, 2),
-         sc$j AS (SELECT c.query_id, c.neighbor_id, c.rel,
-             round(0.5 * c.rel - 0.5 * r.red, 6) AS score
-           FROM cand c JOIN red$j r USING (query_id, neighbor_id)
-           WHERE NOT EXISTS (SELECT 1 FROM sall${j - 1} s
-             WHERE s.query_id = c.query_id AND s.neighbor_id = c.neighbor_id)),
-         sel$j AS (SELECT query_id, neighbor_id, rel, score
-           FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-               ORDER BY score DESC, neighbor_id) AS rn2 FROM sc$j)
-           WHERE rn2 = 1),
-         sall$j AS (SELECT * FROM sall${j - 1}
-           UNION ALL SELECT query_id, neighbor_id FROM sel$j)"""
-    }
-    sb ++= (1 to k).map(j =>
-        s"SELECT query_id, neighbor_id, rel AS cosine, score AS mmr_score, " +
-          s"CAST($j AS INT) AS rank FROM sel$j")
-      .mkString("\n         ", "\n         UNION ALL ", "\n         ORDER BY query_id, rank")
-    sb.toString
-  }
-
-  /** Fixed-CTE replay of Graph.kCoreBounded on the part-supplier graph:
-    * `rounds` peel blocks (degree ≥ k semi-filter on both endpoints);
-    * converged rounds are no-ops, so the final CTE equals the engine's
-    * fixpoint whenever peeling converges within the bound — which is the
-    * engine's own contract (it caps at the same maxRounds). */
-  /** `graph_lpa` oracle: one CTE block per synchronous round — neighbor
-    * label counts, then the deterministic argmax (max count via window,
-    * min label among maximizers). MATERIALIZED: every round references
-    * the previous one twice, and DuckDB would inline the recursion into
-    * 2^rounds base scans otherwise (the kcore lesson). */
-  private def lpaOracleSql(rounds: Int): String = {
-    val steps = (1 to rounds).map { r =>
-      val p = r - 1
-      s"""c$r AS (SELECT e.a, l.label, count(*) AS c
-         |  FROM e JOIN l$p l ON l.node = e.b GROUP BY 1, 2),
-         |l$r AS MATERIALIZED (SELECT a AS node, min(label) AS label FROM (
-         |    SELECT a, label, c, max(c) OVER (PARTITION BY a) AS cm FROM c$r)
-         |  WHERE c = cm GROUP BY a)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH base AS (SELECT DISTINCT concat('p', l_partkey) AS a, concat('s', l_suppkey) AS b
-       |  FROM lineitem WHERE l_partkey < 800),
-       |e AS MATERIALIZED (SELECT DISTINCT a, b FROM
-       |  (SELECT a, b FROM base UNION ALL SELECT b, a FROM base)),
-       |l0 AS MATERIALIZED (SELECT DISTINCT a AS node, a AS label FROM e),
-       |$steps
-       |SELECT node, label FROM l$rounds ORDER BY node""".stripMargin
-  }
-
-  private def kCoreGraphOracleSql(k: Int, rounds: Int): String = {
-    val sb = new StringBuilder
-    // AS MATERIALIZED: each e_j is referenced three times by round j+1 —
-    // DuckDB would otherwise inline the chain and expand the base scan
-    // 2^rounds times ("too many open files" before it even plans)
-    sb ++= s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT a, b FROM (
-           SELECT 'p' || l_partkey AS a, 's' || l_suppkey AS b
-             FROM lineitem WHERE l_partkey < 800
-           UNION ALL
-           SELECT 's' || l_suppkey, 'p' || l_partkey
-             FROM lineitem WHERE l_partkey < 800))"""
-    for (j <- 1 to rounds) {
-      sb ++= s""",
-         k$j AS MATERIALIZED (SELECT a FROM e${j - 1} GROUP BY a HAVING count(*) >= $k),
-         e$j AS MATERIALIZED (SELECT e.a, e.b FROM e${j - 1} e
-           JOIN k$j ka ON e.a = ka.a JOIN k$j kb ON e.b = kb.a)"""
-    }
-    sb ++= s"""
-         SELECT a AS node, CAST(count(*) AS BIGINT) AS degree
-         FROM e$rounds GROUP BY 1 ORDER BY 1"""
-    sb.toString
-  }
-
-  /** UNION-arm replay of Modify.yeoJohnsonGrid: one arm per (column
-    * expression, lambda) with the branch-exact psi and the identical
-    * MLE-variance log-likelihood algebra. */
-  private def yeoJohnsonOracleSql(cols: Seq[(String, String)],
-                                  lambdas: Seq[Double]): String = {
-    val arms = for { (name, expr) <- cols; lam <- lambdas } yield {
-      val pos =
-        if (lam == 0.0) "ln(x + 1.0)"
-        else s"(pow(x + 1.0, $lam) - 1.0) / $lam"
-      val neg =
-        if (lam == 2.0) "-ln(-x + 1.0)"
-        else s"-(pow(-x + 1.0, ${2.0 - lam}) - 1.0) / ${2.0 - lam}"
-      s"""SELECT '$name' AS variable, CAST($lam AS DOUBLE) AS lambda,
-           CAST(count(x) AS BIGINT) AS n,
-           round(CASE WHEN (spp - sp * sp / n0) / n0 <= 0 THEN NULL
-             ELSE -n0 / 2.0 * ln((spp - sp * sp / n0) / n0)
-               + ($lam - 1.0) * slog END, 4) AS llf
-         FROM (SELECT x, count(x) OVER () AS n0,
-             sum(CASE WHEN x >= 0 THEN $pos ELSE $neg END) OVER () AS sp,
-             sum((CASE WHEN x >= 0 THEN $pos ELSE $neg END)
-               * (CASE WHEN x >= 0 THEN $pos ELSE $neg END)) OVER () AS spp,
-             sum(CAST(sign(x) AS DOUBLE) * ln(abs(x) + 1.0)) OVER () AS slog
-           FROM (SELECT CAST($expr AS DOUBLE) AS x FROM lineitem)
-           WHERE x IS NOT NULL)
-         GROUP BY n0, sp, spp, slog"""
-    }
-    arms.mkString("SELECT * FROM (\n", "\nUNION ALL\n",
-      "\n) ORDER BY variable, lambda")
-  }
-
-  /** Chained-CTE replay of Similarity.kCenter(k): seed = min id; round
-    * j's per-point min distance md_j = least(md_{j-1}, round(sqdist to
-    * center_{j-1}, 6)); the next center is the (md DESC, id ASC) argmax
-    * excluding already-chosen ids — exactly the engine's
-    * round-before-argmax greedy, one CTE pair per round. */
-  private def kCenterOracleSql(k: Int): String = {
-    require(k >= 1)
-    val sb = new StringBuilder
-    sb ++= """WITH e AS (SELECT vec_id AS id, embedding AS v FROM embeddings),
-         c1 AS (SELECT id, v, CAST(0.0 AS DOUBLE) AS d FROM e ORDER BY id LIMIT 1)"""
-    for (j <- 2 to k) {
-      val prevC = s"c${j - 1}"
-      val chosen = (1 until j).map(i => s"SELECT id FROM c$i").mkString(" UNION ALL ")
-      sb ++= s""",
-         dj$j AS (SELECT e.id, e.v,
-             round(sum((CAST(e.v[r.range + 1] AS DOUBLE)
-                 - CAST(c.v[r.range + 1] AS DOUBLE)) ^ 2), 6) AS dc
-           FROM e CROSS JOIN $prevC c CROSS JOIN range(64) r
-           GROUP BY e.id, e.v),
-         m$j AS (${
-        if (j == 2) "SELECT id, v, dc AS md FROM dj2"
-        else s"SELECT m${j - 1}.id, m${j - 1}.v, least(m${j - 1}.md, dj$j.dc) AS md " +
-          s"FROM m${j - 1} JOIN dj$j USING (id)"
-      }),
-         c$j AS (SELECT id, v, md AS d FROM m$j
-           WHERE id NOT IN ($chosen)
-           ORDER BY md DESC, id ASC LIMIT 1)"""
-    }
-    sb ++= (1 to k).map(j =>
-        s"SELECT $j AS round, id AS center_id, d AS dist_sq FROM c$j")
-      .mkString("\n         ", "\n         UNION ALL ", "\n         ORDER BY round")
-    sb.toString
-  }
-
-  /** Shared CTE prefix: shingle → polyHash → fmix64(x ^ param_i) →
-    * per-function signed min → signature list → 16 band slices (`bd`). */
-  private def minhashBandedCte: String = {
-    val params = graft.pipeline.Dedup.hashParams(64, 42L)
-    val prvals = params.zipWithIndex
-      .map { case (p, i) => s"($i, CAST('${java.lang.Long.toUnsignedString(p)}' AS UBIGINT))" }
-      .mkString(", ")
-    s"""WITH d AS (
-       |  SELECT CAST(doc_id AS VARCHAR) AS id,
-       |         trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')) AS n
-       |  FROM documents WHERE doc_id < 200),
-       |shl AS (SELECT id, unnest(list_distinct(CASE WHEN length(n) <= 5 THEN [n]
-       |    ELSE list_transform(range(length(n)-4), i -> n[CAST(i AS INT)+1:CAST(i AS INT)+5]) END)) AS s
-       |  FROM d),
-       |ph AS (SELECT id, ${sqlPolyHash("s")} AS x FROM shl),
-       |pr(i, p) AS (VALUES $prvals),
-       |f0 AS (SELECT id, i, xor(x, p) AS a FROM ph CROSS JOIN pr),
-       |${sqlFmixSteps("f0")},
-       |mn AS (SELECT id, i, min(xor(a, CAST('9223372036854775808' AS UBIGINT))) AS m FROM f5 GROUP BY id, i),
-       |sg AS (SELECT id, list(m ORDER BY i) AS sig FROM mn GROUP BY id),
-       |bd AS (SELECT id, sig, b, sig[CAST(b AS INT)*4+1 : CAST(b AS INT)*4+4] AS slice
-       |       FROM sg CROSS JOIN range(16) r(b))""".stripMargin
-  }
-
-  private def minhashOracleSql: String =
-    s"""$minhashBandedCte,
-       |cd AS (SELECT DISTINCT x.id AS id1, y.id AS id2, x.sig AS s1, y.sig AS s2
-       |       FROM bd x JOIN bd y ON x.b = y.b AND x.slice = y.slice AND x.id < y.id)
-       |SELECT id1, id2,
-       |  CAST(len(list_filter(range(64), i -> s1[CAST(i AS INT)+1] = s2[CAST(i AS INT)+1])) AS DOUBLE)/64 AS est_jaccard
-       |FROM cd ORDER BY id1, id2""".stripMargin
-
-  /** Corpus-level minhash replay: same shingle → polyHash → fmix64 →
-    * signed-min pipeline as [[minhashBandedCte]], but the min groups by
-    * CORPUS SIDE (doc_id parity) instead of document — the elementwise
-    * min of per-doc signatures IS the corpus signature, so the SQL can
-    * min straight over the side's distinct shingle set. */
-  private def corpusMinhashOracleSql: String = {
-    val params = graft.pipeline.Dedup.hashParams(64, 42L)
-    val prvals = params.zipWithIndex
-      .map { case (p, i) => s"($i, CAST('${java.lang.Long.toUnsignedString(p)}' AS UBIGINT))" }
-      .mkString(", ")
-    s"""WITH d AS (
-       |  SELECT CAST(doc_id % 2 AS INT) AS side,
-       |         trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')) AS n
-       |  FROM documents),
-       |shl AS (SELECT side, unnest(list_distinct(CASE WHEN length(n) <= 5 THEN [n]
-       |    ELSE list_transform(range(length(n)-4), i -> n[CAST(i AS INT)+1:CAST(i AS INT)+5]) END)) AS s
-       |  FROM d WHERE n IS NOT NULL),
-       |ph AS (SELECT DISTINCT side AS id, ${sqlPolyHash("s")} AS x FROM shl),
-       |pr(i, p) AS (VALUES $prvals),
-       |f0 AS (SELECT id, i, xor(x, p) AS a FROM ph CROSS JOIN pr),
-       |${sqlFmixSteps("f0")},
-       |mn AS (SELECT id, i, min(xor(a, CAST('9223372036854775808' AS UBIGINT))) AS m FROM f5 GROUP BY id, i),
-       |cnt AS (SELECT
-       |    CAST(count(CASE WHEN side = 0 AND n IS NOT NULL THEN 1 END) AS BIGINT) AS n_train,
-       |    CAST(count(CASE WHEN side = 1 AND n IS NOT NULL THEN 1 END) AS BIGINT) AS n_eval FROM d),
-       |mt AS (SELECT CAST(count(*) AS BIGINT) AS matching_components
-       |       FROM mn a JOIN mn b ON a.i = b.i AND a.id = 0 AND b.id = 1 AND a.m = b.m)
-       |SELECT n_train, n_eval, matching_components,
-       |  CASE WHEN n_train = 0 OR n_eval = 0 THEN NULL
-       |       ELSE matching_components / 64.0 END AS est_jaccard
-       |FROM cnt CROSS JOIN mt""".stripMargin
-  }
-
-  /** Per-source overlap-matrix replay: the corpusMinhashOracleSql recipe
-    * grouped by source instead of the %2 split; signed-min via the 2⁶³
-    * xor trick; pairs on id < id with the empty-side NULL rule. */
-  private def corpusMatrixOracleSql: String = {
-    val params = graft.pipeline.Dedup.hashParams(64, 42L)
-    val prvals = params.zipWithIndex
-      .map { case (p, i) => s"($i, CAST('${java.lang.Long.toUnsignedString(p)}' AS UBIGINT))" }
-      .mkString(", ")
-    s"""WITH d AS (
-       |  SELECT source AS id,
-       |         trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')) AS n
-       |  FROM documents),
-       |shl AS (SELECT id, unnest(list_distinct(CASE WHEN length(n) <= 5 THEN [n]
-       |    ELSE list_transform(range(length(n)-4), i -> n[CAST(i AS INT)+1:CAST(i AS INT)+5]) END)) AS s
-       |  FROM d WHERE n IS NOT NULL),
-       |ph AS (SELECT DISTINCT id, ${sqlPolyHash("s")} AS x FROM shl),
-       |pr(i, p) AS (VALUES $prvals),
-       |f0 AS (SELECT id, i, xor(x, p) AS a FROM ph CROSS JOIN pr),
-       |${sqlFmixSteps("f0")},
-       |mn AS (SELECT id, i, min(xor(a, CAST('9223372036854775808' AS UBIGINT))) AS m FROM f5 GROUP BY id, i),
-       |cnt AS (SELECT id, CAST(count(CASE WHEN n IS NOT NULL THEN 1 END) AS BIGINT) AS nd FROM d GROUP BY id),
-       |mt AS (SELECT a.id AS ga, b.id AS gb,
-       |    CAST(count(CASE WHEN a.m = b.m THEN 1 END) AS BIGINT) AS mc
-       |  FROM mn a JOIN mn b ON a.i = b.i AND a.id < b.id GROUP BY 1, 2)
-       |SELECT ca.id AS group_a, cb.id AS group_b, ca.nd AS n_a, cb.nd AS n_b,
-       |  coalesce(mt.mc, 0) AS matching_components,
-       |  CASE WHEN ca.nd = 0 OR cb.nd = 0 THEN NULL
-       |       ELSE coalesce(mt.mc, 0) / 64.0 END AS est_jaccard
-       |FROM cnt ca JOIN cnt cb ON ca.id < cb.id
-       |LEFT JOIN mt ON mt.ga = ca.id AND mt.gb = cb.id
-       |ORDER BY group_a, group_b""".stripMargin
-  }
-
-  /** JL-projection replay: the seeded gaussian plane matrix rides as
-    * 8×64 literal coefficients — the SAME doubles the native
-    * RandomProjection expression embeds. Rounding to 6 dp tolerates
-    * summation-order noise exactly as the cosine oracles do. */
-  private def randomProjectionOracleSql: String = {
-    val planes = graft.pipeline.Similarity.hyperplanes(dim = 64, bits = 8, seed = 42L)
-    val pvals = planes.zipWithIndex.flatMap { case (row, b) =>
-      row.zipWithIndex.map { case (w, j) => s"($b, $j, $w)" } }.mkString(", ")
-    s"""WITH plane(b, j, w) AS (VALUES $pvals),
-       |proj AS (
-       |  SELECT e.vec_id, p.b, sum(CAST(e.embedding[p.j + 1] AS DOUBLE) * p.w) AS pr
-       |  FROM embeddings e CROSS JOIN plane p
-       |  WHERE e.vec_id < 100 GROUP BY 1, 2)
-       |SELECT vec_id, CAST(b AS INT) AS b, round(pr, 6) AS proj
-       |FROM proj ORDER BY vec_id, b""".stripMargin
-  }
-
-  /** Star-edge replay: per (band, slice) bucket the lexicographically-
-    * smallest member is the representative; edges = (rep, member). */
-  private def minhashStarOracleSql: String =
-    s"""$minhashBandedCte,
-       |rp AS (SELECT b, slice, min(id) AS id1 FROM bd GROUP BY b, slice)
-       |SELECT DISTINCT rp.id1, bd.id AS id2
-       |FROM bd JOIN rp ON bd.b = rp.b AND bd.slice = rp.slice
-       |WHERE bd.id <> rp.id1
-       |ORDER BY id1, id2""".stripMargin
-
-  /** Full DuckDB replay of Similarity.lshTopK over embeddings (dim=64,
-    * bits=4, seed=42, probes=1): the seeded gaussian plane matrix rides as
-    * 256 literal coefficients (Similarity.hyperplanes — the SAME doubles
-    * the native expression embeds), signature bit b = sign(v · plane_b),
-    * multi-probe buckets = sig XOR {0,1,2,4,8}, then exact cosine + rank
-    * within the candidate set. Sign tests and ranking tolerate summation-
-    * order noise only if no projection sits within ~1e-12 of zero and no
-    * two candidate cosines are equal to ~1e-15 — true on this data (a
-    * violation would surface as a hash mismatch, not silently). */
-  private def lshOracleSql: String = {
-    val planes = graft.pipeline.Similarity.hyperplanes(dim = 64, bits = 4, seed = 42L)
-    val pvals = planes.zipWithIndex.flatMap { case (row, b) =>
-      row.zipWithIndex.map { case (w, j) => s"($b, $j, $w)" } }.mkString(", ")
-    s"""WITH plane(b, j, w) AS (VALUES $pvals),
-       |proj AS (
-       |  SELECT e.vec_id, p.b,
-       |         sum(CAST(e.embedding[p.j + 1] AS DOUBLE) * p.w) AS pr
-       |  FROM embeddings e CROSS JOIN plane p GROUP BY 1, 2),
-       |sig AS (
-       |  SELECT vec_id,
-       |         sum(CASE WHEN pr >= 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS s
-       |  FROM proj GROUP BY 1),
-       |qp AS (
-       |  SELECT s.vec_id AS query_id, xor(s.s, CAST(m.m AS BIGINT)) AS bucket
-       |  FROM sig s CROSS JOIN (VALUES (0), (1), (2), (4), (8)) m(m)
-       |  WHERE s.vec_id < 50),
-       |cand AS (
-       |  SELECT DISTINCT qp.query_id, cs.vec_id AS neighbor_id
-       |  FROM qp JOIN sig cs ON cs.s = qp.bucket
-       |  WHERE cs.vec_id <> qp.query_id),
-       |dots AS (
-       |  SELECT c.query_id, c.neighbor_id,
-       |    sum(CAST(qe.embedding[r.range + 1] AS DOUBLE) * CAST(ne.embedding[r.range + 1] AS DOUBLE)) AS d,
-       |    sum(CAST(qe.embedding[r.range + 1] AS DOUBLE) ^ 2) AS nq,
-       |    sum(CAST(ne.embedding[r.range + 1] AS DOUBLE) ^ 2) AS nc
-       |  FROM cand c
-       |  JOIN embeddings qe ON qe.vec_id = c.query_id
-       |  JOIN embeddings ne ON ne.vec_id = c.neighbor_id
-       |  CROSS JOIN range(64) r GROUP BY 1, 2),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, d / (sqrt(nq) * sqrt(nc)) AS cr,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY d / (sqrt(nq) * sqrt(nc)) DESC, neighbor_id) AS INT) AS rank
-       |  FROM dots)
-       |SELECT query_id, neighbor_id, round(cr, 6) AS cosine, rank
-       |FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** Shared CTE prefix for the URL oracles: the deterministic body build
-    * + RE2 extraction — ONE definition mirrored against [[urlBody]]. */
-  private val urlBodyCtes: String =
-    """b AS (SELECT text || ' see https://Site' || (doc_id % 5)
-      |     || '.Example.COM/Page/' || (doc_id % 25)
-      |     || (CASE WHEN doc_id % 4 = 0 THEN '?utm_source=x&ref=1'
-      |              WHEN doc_id % 4 = 1 THEN '?ref=1&utm_campaign=y'
-      |              WHEN doc_id % 4 = 2 THEN '/' ELSE '' END)
-      |     || (CASE WHEN doc_id % 5 = 0 THEN '#frag' ELSE '' END)
-      |     || ' and ''http://mirror.example.org:8080/m/' || (doc_id % 11)
-      |     || '''' AS body FROM documents),
-      | u AS (SELECT unnest(regexp_extract_all(body,
-      |     '(?i:https?)://[^ \t\n\x0B\f\r"''<>]+')) AS url FROM b)""".stripMargin
-
-  /** Full IVF train/assign replay as chained DuckDB CTEs — what flips
-    * `ann_ivf_topk`/`ann_knn_graph` from rows-only to hash-proven.
-    * Mirrors [[graft.pipeline.Similarity.ivfTrain]] exactly: first-k seeds
-    * (ORDER BY vec_id LIMIT n), then `iters` Lloyd steps where each step
-    * is argmin assignment (ties to the lower list id — `ORDER BY
-    * squared-distance-sum, cid LIMIT 1` = the NearestLists tie-break,
-    * replayed on SQUARED distance — ordering by sqrt can collapse two
-    * distinct squared distances onto one double and flip the tie) and
-    * per-(list, dim) `round(avg(x), 6)` means with empty lists keeping
-    * their previous center (the LEFT JOIN + coalesce). The 6-decimal grid
-    * is what makes cross-engine equality exact: both engines' sub-ulp
-    * mean disagreements collapse onto the same decimal lattice (see
-    * Similarity.lloyd). Exposes CTEs `e` (vec_id, v DOUBLE[]),
-    * `ctr$iters` (cid, c) and `asg` (vec_id, v, list_id).
-    * `nLists` is a SQL EXPRESSION (DuckDB allows scalar subqueries in
-    * LIMIT) — the graph oracles pass the corpus-scaled
-    * greatest(16, count//200) formula of ivfTrainScaled so engine and
-    * oracle derive the list count from the SAME rule at any sf. */
-  private def ivfOracleCtes(nLists: String, iters: Int): String = {
-    val steps = (1 to iters).map { i =>
-      val p = i - 1
-      s"""a$i AS (SELECT e.vec_id, e.v,
-         |  (SELECT i.cid FROM ctr$p i ORDER BY
-         |    (SELECT sum((e.v[r2.range+1] - i.c[r2.range+1])^2) FROM range(64) r2), i.cid LIMIT 1) AS cid
-         |  FROM e),
-         |m$i AS (SELECT cid, pos, round(avg(x), 6) AS mv FROM
-         |  (SELECT cid, generate_subscripts(v, 1) AS pos, unnest(v) AS x FROM a$i)
-         |  GROUP BY 1, 2),
-         |ml$i AS (SELECT cid, list(mv ORDER BY pos) AS c FROM m$i GROUP BY cid),
-         |ctr$i AS (SELECT p.cid, coalesce(n.c, p.c) AS c
-         |  FROM ctr$p p LEFT JOIN ml$i n USING (cid))""".stripMargin
-    }.mkString(",\n")
-    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |ctr0 AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS c
-       |  FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT $nLists)),
-       |$steps,
-       |asg AS (SELECT e.vec_id, e.v,
-       |  (SELECT i.cid FROM ctr$iters i ORDER BY
-       |    (SELECT sum((e.v[r2.range+1] - i.c[r2.range+1])^2) FROM range(64) r2), i.cid LIMIT 1) AS list_id
-       |  FROM e)""".stripMargin
-  }
-
-  /** `ann_pq_topk` oracle: one grid-pinned Lloyd chain PER BLOCK on the
-    * sliced subvectors (the ivfOracleCtes recipe at subDim), per-vector
-    * code argmins, then the ADC scan with round-before-rank. */
-  /** Per-block Lloyd chains + code argmins for the PQ oracles: defines
-    * e$b, ctr${b}_0..iters, code$b for each block over the sliced
-    * subvectors (requires an `e` CTE with the cast DOUBLE[] vectors). */
-  private def pqOracleBlockCtes(m: Int, k: Int, iters: Int, sub: Int): String =
-    (0 until m).map { b =>
-      val lo = b * sub + 1
-      val hi = (b + 1) * sub
-      val steps = (1 to iters).map { i =>
-        val p = i - 1
-        s"""a${b}_$i AS (SELECT e.vec_id, e.v,
-           |  (SELECT i.cid FROM ctr${b}_$p i ORDER BY
-           |    (SELECT sum((e.v[r2.range+1] - i.c[r2.range+1])^2) FROM range($sub) r2), i.cid LIMIT 1) AS cid
-           |  FROM e$b e),
-           |m${b}_$i AS (SELECT cid, pos, round(avg(x), 6) AS mv FROM
-           |  (SELECT cid, generate_subscripts(v, 1) AS pos, unnest(v) AS x FROM a${b}_$i)
-           |  GROUP BY 1, 2),
-           |ml${b}_$i AS (SELECT cid, list(mv ORDER BY pos) AS c FROM m${b}_$i GROUP BY cid),
-           |ctr${b}_$i AS (SELECT p.cid, coalesce(n.c, p.c) AS c
-           |  FROM ctr${b}_$p p LEFT JOIN ml${b}_$i n USING (cid))""".stripMargin
-      }.mkString(",\n")
-      s"""e$b AS (SELECT vec_id, v[$lo:$hi] AS v FROM e),
-         |ctr${b}_0 AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, v AS c
-         |  FROM (SELECT vec_id, v FROM e$b ORDER BY vec_id LIMIT $k)),
-         |$steps,
-         |code$b AS (SELECT e.vec_id,
-         |  (SELECT i.cid FROM ctr${b}_$iters i ORDER BY
-         |    (SELECT sum((e.v[r2.range+1] - i.c[r2.range+1])^2) FROM range($sub) r2), i.cid LIMIT 1) AS cid
-         |  FROM e$b e)""".stripMargin
-    }.mkString(",\n")
-
-  /** Shared ADC tail for the PQ oracles: codes join, per-block distance
-    * arms, round-before-rank top-k. `candFrom` supplies the candidate
-    * rows as (query_id, qv, neighbor_id, k0..k{m-1}). */
-  private def pqAdcTailSql(m: Int, iters: Int, sub: Int, topK: Int,
-                           candFrom: String): String = {
-    val distArms = (0 until m).map { b =>
-      s"(SELECT sum((cand.qv[${b * sub} + r.range + 1] - b$b.c[r.range + 1])^2) FROM range($sub) r)"
-    }.mkString("\n   + ")
-    val cbJoins = (0 until m).map(b =>
-      s"JOIN ctr${b}_$iters b$b ON b$b.cid = cand.k$b").mkString("\n  ")
-    s"""cand AS ($candFrom),
-       |d AS (SELECT cand.query_id, cand.neighbor_id,
-       |   $distArms AS dist
-       |  FROM cand
-       |  $cbJoins),
-       |ranked AS (SELECT query_id, neighbor_id, round(dist, 6) AS adc_dist,
-       |    CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY round(dist, 6) ASC, neighbor_id ASC) AS INT) AS rank FROM d)
-       |SELECT query_id, neighbor_id, adc_dist, rank FROM ranked
-       |WHERE rank <= $topK ORDER BY query_id, rank""".stripMargin
-  }
-
-  private def pqCodesCteSql(m: Int): String = {
-    val codeJoins = (1 until m).map(b => s"JOIN code$b c$b USING (vec_id)").mkString(" ")
-    val codeCols = (0 until m).map(b => s"c$b.cid AS k$b").mkString(", ")
-    s"codes AS (SELECT c0.vec_id, $codeCols FROM code0 c0 $codeJoins)"
-  }
-
-  private def pqTopkOracleSql: String = {
-    val (m, k, iters, sub, nQ, topK) = (4, 16, 4, 16, 5, 3)
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |${pqOracleBlockCtes(m, k, iters, sub)},
-       |${pqCodesCteSql(m)},
-       |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $nQ),
-       |${pqAdcTailSql(m, iters, sub, topK,
-          s"""SELECT q.query_id, q.qv, codes.vec_id AS neighbor_id, ${(0 until m).map(b => s"codes.k$b").mkString(", ")}
-             |  FROM q CROSS JOIN codes WHERE codes.vec_id <> q.query_id""".stripMargin)}""".stripMargin
-  }
-
-  /** `ann_ivfpq_topk` oracle: the ivf Lloyd chains prune candidates to
-    * the nProbe nearest lists, the pq block chains supply the codes, the
-    * shared ADC tail scores and ranks — the full IVF × PQ replay. */
-  private def ivfPqTopkOracleSql: String = {
-    val (nLists, ivfIters) = ("16", 8)
-    val (m, k, iters, sub, nQ, topK, nProbe) = (4, 16, 4, 16, 20, 3, 4)
-    s"""WITH ${ivfOracleCtes(nLists, ivfIters)},
-       |${pqOracleBlockCtes(m, k, iters, sub)},
-       |${pqCodesCteSql(m)},
-       |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $nQ),
-       |probe AS (SELECT query_id, qv, cid AS list_id FROM (
-       |    SELECT q.query_id, q.qv, i.cid,
-       |      row_number() OVER (PARTITION BY q.query_id
-       |        ORDER BY (SELECT sum((q.qv[r2.range+1] - i.c[r2.range+1])^2) FROM range(64) r2), i.cid) AS pr
-       |    FROM q CROSS JOIN ctr$ivfIters i) WHERE pr <= $nProbe),
-       |${pqAdcTailSql(m, iters, sub, topK,
-          s"""SELECT p.query_id, p.qv, a.vec_id AS neighbor_id, ${(0 until m).map(b => s"codes.k$b").mkString(", ")}
-             |  FROM probe p JOIN asg a ON a.list_id = p.list_id
-             |  JOIN codes ON codes.vec_id = a.vec_id
-             |  WHERE a.vec_id <> p.query_id""".stripMargin)}""".stripMargin
-  }
-
-  /** `ann_ivf_topk` oracle: [[ivfOracleCtes]] + the probe/scan/top-k query
-    * path. Ranks by ROUNDED cosine then neighbor id — the ivfQuery
-    * contract (round-before-rank, same as bruteForceTopK). */
-  private def ivfTopkOracleSql: String = {
-    val (nLists, iters, k, nProbe) = ("16", 8, 3, 4)
-    s"""WITH ${ivfOracleCtes(nLists, iters)},
-       |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 50),
-       |probe AS (SELECT query_id, qv, cid AS list_id FROM (
-       |    SELECT q.query_id, q.qv, i.cid,
-       |      row_number() OVER (PARTITION BY q.query_id
-       |        ORDER BY (SELECT sum((q.qv[r2.range+1] - i.c[r2.range+1])^2) FROM range(64) r2), i.cid) AS pr
-       |    FROM q CROSS JOIN ctr$iters i) WHERE pr <= $nProbe),
-       |cand AS (SELECT p.query_id, p.qv, a.vec_id AS neighbor_id, a.v AS cv
-       |  FROM probe p JOIN asg a ON a.list_id = p.list_id
-       |  WHERE a.vec_id <> p.query_id),
-       |dots AS (SELECT query_id, neighbor_id,
-       |    sum(qv[r.range + 1] * cv[r.range + 1]) AS d,
-       |    sum(qv[r.range + 1] ^ 2) AS nq,
-       |    sum(cv[r.range + 1] ^ 2) AS nc
-       |  FROM cand CROSS JOIN range(64) r GROUP BY 1, 2),
-       |scored AS (SELECT query_id, neighbor_id,
-       |    round(d / (sqrt(nq) * sqrt(nc)), 6) AS cosine FROM dots),
-       |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cosine DESC, neighbor_id) AS INT) AS rank FROM scored)
-       |SELECT query_id, neighbor_id, cosine, rank FROM ranked
-       |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** `ann_recall_eval` oracle: the full IVF replay (same CTEs as
-    * ivfTopkOracleSql) joined against the brute-force ground truth —
-    * recall@k per query as an exact overlap count. */
-  private def annRecallOracleSql: String = {
-    val (nLists, iters, k, nProbe) = ("16", 8, 3, 4)
-    s"""WITH ${ivfOracleCtes(nLists, iters)},
-       |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 50),
-       |probe AS (SELECT query_id, qv, cid AS list_id FROM (
-       |    SELECT q.query_id, q.qv, i.cid,
-       |      row_number() OVER (PARTITION BY q.query_id
-       |        ORDER BY (SELECT sum((q.qv[r2.range+1] - i.c[r2.range+1])^2) FROM range(64) r2), i.cid) AS pr
-       |    FROM q CROSS JOIN ctr$iters i) WHERE pr <= $nProbe),
-       |cand AS (SELECT p.query_id, p.qv, a.vec_id AS neighbor_id, a.v AS cv
-       |  FROM probe p JOIN asg a ON a.list_id = p.list_id
-       |  WHERE a.vec_id <> p.query_id),
-       |dots AS (SELECT query_id, neighbor_id,
-       |    sum(qv[r.range + 1] * cv[r.range + 1]) AS d,
-       |    sum(qv[r.range + 1] ^ 2) AS nq,
-       |    sum(cv[r.range + 1] ^ 2) AS nc
-       |  FROM cand CROSS JOIN range(64) r GROUP BY 1, 2),
-       |scored AS (SELECT query_id, neighbor_id,
-       |    round(d / (sqrt(nq) * sqrt(nc)), 6) AS cosine FROM dots),
-       |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cosine DESC, neighbor_id) AS INT) AS rank FROM scored),
-       |approx AS (SELECT query_id, neighbor_id FROM ranked WHERE rank <= $k),
-       |bd AS (SELECT q.query_id, e2.vec_id AS neighbor_id,
-       |    sum(q.qv[r.range + 1] * e2.v[r.range + 1]) AS d,
-       |    sum(q.qv[r.range + 1] ^ 2) AS nq,
-       |    sum(e2.v[r.range + 1] ^ 2) AS nc
-       |  FROM q CROSS JOIN e e2 CROSS JOIN range(64) r
-       |  WHERE e2.vec_id <> q.query_id GROUP BY 1, 2),
-       |bscored AS (SELECT query_id, neighbor_id,
-       |    round(d / (sqrt(nq) * sqrt(nc)), 6) AS cosine FROM bd),
-       |branked AS (SELECT *, row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cosine DESC, neighbor_id) AS rk FROM bscored),
-       |truth AS (SELECT query_id, neighbor_id FROM branked WHERE rk <= $k)
-       |SELECT t.query_id, CAST(count(a.neighbor_id) AS BIGINT) AS n_hits,
-       |  round(CAST(count(a.neighbor_id) AS DOUBLE) / $k, 6) AS recall_at_3
-       |FROM truth t LEFT JOIN approx a
-       |  ON a.query_id = t.query_id AND a.neighbor_id = t.neighbor_id
-       |GROUP BY 1 ORDER BY 1""".stripMargin
-  }
-
-  /** `ann_hard_negatives_ivf` oracle: the ivfTopkOracleSql replay with
-    * labels joined on both sides and the IS DISTINCT FROM inequality in
-    * the candidate filter (the engine's null-safe !(<=>)). */
-  private def annHardNegativesIvfOracleSql: String = {
-    val (nLists, iters, k, nProbe) = ("16", 8, 3, 4)
-    s"""WITH ${ivfOracleCtes(nLists, iters)},
-       |lab AS (SELECT vec_id, label FROM embeddings),
-       |q AS (SELECT e.vec_id AS query_id, e.v AS qv, lab.label
-       |  FROM e JOIN lab ON lab.vec_id = e.vec_id WHERE e.vec_id < 5),
-       |probe AS (SELECT query_id, qv, label, cid AS list_id FROM (
-       |    SELECT q.query_id, q.qv, q.label, i.cid,
-       |      row_number() OVER (PARTITION BY q.query_id
-       |        ORDER BY (SELECT sum((q.qv[r2.range+1] - i.c[r2.range+1])^2) FROM range(64) r2), i.cid) AS pr
-       |    FROM q CROSS JOIN ctr$iters i) WHERE pr <= $nProbe),
-       |cand AS (SELECT p.query_id, p.label, p.qv, a.vec_id AS neighbor_id,
-       |    a.v AS cv, nl.label AS neighbor_label
-       |  FROM probe p JOIN asg a ON a.list_id = p.list_id
-       |  JOIN lab nl ON nl.vec_id = a.vec_id
-       |  WHERE a.vec_id <> p.query_id AND nl.label IS DISTINCT FROM p.label),
-       |dots AS (SELECT query_id, label, neighbor_id, neighbor_label,
-       |    sum(qv[r.range + 1] * cv[r.range + 1]) AS d,
-       |    sum(qv[r.range + 1] ^ 2) AS nq,
-       |    sum(cv[r.range + 1] ^ 2) AS nc
-       |  FROM cand CROSS JOIN range(64) r GROUP BY 1, 2, 3, 4),
-       |scored AS (SELECT query_id, label, neighbor_id, neighbor_label,
-       |    round(d / (sqrt(nq) * sqrt(nc)), 6) AS cosine FROM dots),
-       |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cosine DESC, neighbor_id) AS INT) AS rank FROM scored)
-       |SELECT query_id, label, neighbor_id, neighbor_label, cosine, rank FROM ranked
-       |WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** `ann_knn_graph` oracle: every corpus vector probes its nProbe nearest
-    * lists over the SAME replayed index; k best rounded-cosine neighbors
-    * per source. nLists is the CORPUS-SCALED ivfTrainScaled formula
-    * (max(16, n/200)) as a SQL expression — integer division truncates
-    * identically in Scala `/` and DuckDB `//` for non-negative counts —
-    * so the oracle derives the list count from the corpus exactly like
-    * the engine does at ANY sf (at sf0.01's 500 vectors both land on
-    * 16). */
-  private def ivfGraphCtes: String = {
-    val (nLists, iters, k, nProbe) =
-      ("greatest(16, (SELECT count(*) // 200 FROM e))", 8, 3, 2)
-    s"""${ivfOracleCtes(nLists, iters)},
-       |probe AS (SELECT vec_id AS src_id, sv, cid AS list_id FROM (
-       |    SELECT e.vec_id, e.v AS sv, i.cid,
-       |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY (SELECT sum((e.v[r2.range+1] - i.c[r2.range+1])^2) FROM range(64) r2), i.cid) AS pr
-       |    FROM e CROSS JOIN ctr$iters i) WHERE pr <= $nProbe),
-       |cand AS (SELECT p.src_id, p.sv, a.vec_id AS dst_id, a.v AS dv
-       |  FROM probe p JOIN asg a ON a.list_id = p.list_id
-       |  WHERE a.vec_id <> p.src_id),
-       |dots AS (SELECT src_id, dst_id,
-       |    sum(sv[r.range + 1] * dv[r.range + 1]) AS d,
-       |    sum(sv[r.range + 1] ^ 2) AS ns,
-       |    sum(dv[r.range + 1] ^ 2) AS nd
-       |  FROM cand CROSS JOIN range(64) r GROUP BY 1, 2),
-       |scored AS (SELECT src_id, dst_id,
-       |    round(d / (sqrt(ns) * sqrt(nd)), 6) AS cosine FROM dots),
-       |ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY src_id
-       |      ORDER BY cosine DESC, dst_id) AS INT) AS rank FROM scored),
-       |graph AS (SELECT src_id, dst_id, cosine, rank FROM ranked
-       |  WHERE rank <= $k)""".stripMargin
-  }
-
-  private def ivfGraphOracleSql: String =
-    s"""WITH $ivfGraphCtes
-       |SELECT src_id, dst_id, cosine, rank FROM graph
-       |ORDER BY src_id, rank""".stripMargin
-
-  /** `ann_label_audit_graph` oracle: the SAME replayed IVF kNN graph, then
-    * the majority-vote + per-label agreement algebra of
-    * [[graft.pipeline.Similarity.labelAuditFromGraph]] in plain SQL
-    * (votes desc, best rounded cosine desc, label asc tie-break). */
-  private def labelAuditGraphOracleSql: String =
-    s"""WITH $ivfGraphCtes,
-       |votes AS (SELECT g.src_id, l.label AS lbl,
-       |    count(*) AS nv, max(g.cosine) AS best_cosine
-       |  FROM graph g JOIN embeddings l ON l.vec_id = g.dst_id
-       |  GROUP BY 1, 2),
-       |pred AS (SELECT src_id, lbl AS predicted_label FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY src_id
-       |      ORDER BY nv DESC, best_cosine DESC, lbl) AS r FROM votes)
-       |  WHERE r = 1)
-       |SELECT l.label, CAST(count(*) AS BIGINT) AS n,
-       |  CAST(sum(CASE WHEN p.predicted_label = l.label THEN 1 ELSE 0 END) AS BIGINT) AS n_agree,
-       |  round(CAST(sum(CASE WHEN p.predicted_label = l.label THEN 1 ELSE 0 END) AS DOUBLE)
-       |    / count(*), 6) AS agree_rate
-       |FROM pred p JOIN embeddings l ON l.vec_id = p.src_id
-       |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** Full DuckDB replay of Similarity.semanticDedup over embeddings plus
-    * the query's planted duplicates (dim=64, bits=6, seed=42, threshold
-    * 0.95): seeded plane literals → sign-bit signatures → same-bucket
-    * pairs (id1 < id2) → cosine threshold → GENERAL connected components
-    * via a recursive-CTE transitive closure (no chain-structure shortcut)
-    * → keep-one (min id per component) → surviving ids. */
-  private def semdedupOracleSql: String = {
-    val planes = graft.pipeline.Similarity.hyperplanes(dim = 64, bits = 6, seed = 42L)
-    val pvals = planes.zipWithIndex.flatMap { case (row, b) =>
-      row.zipWithIndex.map { case (w, j) => s"($b, $j, $w)" } }.mkString(", ")
-    s"""WITH RECURSIVE plane(b, j, w) AS (VALUES $pvals),
-       |base AS (
-       |  SELECT vec_id, embedding FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 100000, embedding FROM embeddings WHERE vec_id < 30),
-       |proj AS (
-       |  SELECT e.vec_id, p.b,
-       |         sum(CAST(e.embedding[p.j + 1] AS DOUBLE) * p.w) AS pr
-       |  FROM base e CROSS JOIN plane p GROUP BY 1, 2),
-       |sig AS (
-       |  SELECT vec_id,
-       |         sum(CASE WHEN pr >= 0 THEN (CAST(1 AS BIGINT) << b) ELSE 0 END) AS s
-       |  FROM proj GROUP BY 1),
-       |cp AS (
-       |  SELECT a.vec_id AS id1, b.vec_id AS id2
-       |  FROM sig a JOIN sig b ON a.s = b.s AND a.vec_id < b.vec_id),
-       |dots AS (
-       |  SELECT cp.id1, cp.id2,
-       |    sum(CAST(x.embedding[r.range + 1] AS DOUBLE) * CAST(y.embedding[r.range + 1] AS DOUBLE)) AS d,
-       |    sum(CAST(x.embedding[r.range + 1] AS DOUBLE) ^ 2) AS nx,
-       |    sum(CAST(y.embedding[r.range + 1] AS DOUBLE) ^ 2) AS ny
-       |  FROM cp JOIN base x ON x.vec_id = cp.id1
-       |         JOIN base y ON y.vec_id = cp.id2
-       |  CROSS JOIN range(64) r GROUP BY 1, 2),
-       |ed AS (SELECT id1, id2 FROM dots WHERE d / (sqrt(nx) * sqrt(ny)) >= 0.95),
-       |sym AS (SELECT id1 AS a, id2 AS b FROM ed
-       |        UNION SELECT id2, id1 FROM ed),
-       |reach(src, dst) AS (
-       |  SELECT a, b FROM sym
-       |  UNION
-       |  SELECT r.src, s.b FROM reach r JOIN sym s ON s.a = r.dst),
-       |removed AS (SELECT src AS id FROM reach GROUP BY src HAVING min(dst) < src)
-       |SELECT vec_id FROM base
-       |WHERE vec_id NOT IN (SELECT id FROM removed) ORDER BY vec_id""".stripMargin
-  }
-
-  /** Full DuckDB replay of Dedup.simhashCandidates on documents doc_id<200:
-    * token polyHash → ±1 per bit → sign bit pack → 4 16-bit bands (exact
-    * bit-slice buckets, no hash compression anywhere) → hamming ≤ 16. */
-  /** Winnowing CTE chain (k=3, w=4) over `documents` rows matching
-    * `where` — replays Text.winnow exactly: gram hash list (md5-prefix
-    * int64, the cross-engine hash), per-position rows, window-frame mins
-    * with the short-doc truncated window, and the rightmost-min position
-    * via a frame join-back. Exposes `sel` (doc_id, pos, fp — one row per
-    * window, pre-dedup) and `fps` (DISTINCT (doc_id, fp)). Shared by the
-    * text_winnow oracle and the policy-e2e composition. */
-  private def winnowCtes(where: String): String =
-    s"""d AS (SELECT doc_id,
-             list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> length(x) > 0) AS w
-           FROM documents $where),
-         gl AS (SELECT doc_id,
-             list_transform(range(CASE WHEN len(w) >= 3 THEN len(w) - 2 ELSE 0 END),
-               i -> CAST(('0x' || substr(md5(array_to_string(
-                      w[CAST(i AS INT) + 1 : CAST(i AS INT) + 3], ' ')), 1, 15)) AS BIGINT)) AS hs
-           FROM d),
-         p AS (SELECT doc_id,
-             CAST(generate_subscripts(hs, 1) - 1 AS BIGINT) AS pos,
-             unnest(hs) AS h FROM gl),
-         wm AS (SELECT doc_id, pos AS e, h,
-             min(h) OVER win AS winmin,
-             max(pos) OVER (PARTITION BY doc_id) AS maxpos
-           FROM p
-           WINDOW win AS (PARTITION BY doc_id ORDER BY pos
-                          ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)),
-         sel AS (SELECT wm.doc_id, max(p2.pos) AS pos, wm.winmin AS fp
-           FROM wm JOIN p p2 ON p2.doc_id = wm.doc_id
-             AND p2.pos BETWEEN wm.e - 3 AND wm.e AND p2.h = wm.winmin
-           WHERE wm.e >= 3 OR wm.e = wm.maxpos
-           GROUP BY wm.doc_id, wm.e, wm.winmin),
-         fps AS (SELECT DISTINCT doc_id, fp FROM sel)"""
-
-  /** Shared image-corpus replay CTEs (through the fixed-point luma-mean
-    * grid): procedural pixels -> luma_permille (= 1000·v, grayscale) ->
-    * per-pixel cell assignment (x·gw div w) -> exact integer sums ->
-    * mean·65536 div count. All int64; GROUP BY sums are of INTEGERS so
-    * no order pinning is needed anywhere in the image oracles. */
-  private def imageGridCtes(nBase: Int, nCopies: Int, gw: Int, gh: Int): String = {
-    // MUST mirror imageCorpus's variant construction (base width 64,
-    // upscale factors {1, 2}): the pixel-enumeration ceiling is DERIVED
-    // as baseW·max(sc), so growing the plant's scale factors can never
-    // silently truncate oracle pixels while the engine decodes full
-    // images (advisor r15)
-    val baseW = 64
-    val scales = Seq(1, 2)
-    val maxDim = baseW * scales.max
-    s"""ids AS (SELECT doc_id FROM documents WHERE doc_id < $nBase),
-       |imgs AS (
-       |  SELECT doc_id AS base, doc_id AS img, $baseW AS wid, 1 AS sc, 0 AS db FROM ids
-       |  UNION ALL SELECT doc_id, doc_id + 100000, ${baseW * 2}, 2, 0 FROM ids WHERE doc_id < $nCopies
-       |  UNION ALL SELECT doc_id, doc_id + 200000, $baseW, 1, 7 FROM ids WHERE doc_id < $nCopies),
-       |px AS (SELECT img, wid, base, sc, db, x.range AS x, y.range AS y
-       |       FROM imgs, range($maxDim) x, range($maxDim) y
-       |       WHERE x.range < wid AND y.range < wid),
-       |pv AS (SELECT img, wid, x, y,
-       |         1000 * (((((x//sc) * (3 + base % 5) + (y//sc) * (2 + base % 7)
-       |           + (((x//sc) * (y//sc) + base) % 23) * 11) % 208) + 24) + db) AS lum
-       |       FROM px),
-       |grid AS (SELECT img, (y*$gh)//wid AS gy, (x*$gw)//wid AS gx,
-       |           CAST((sum(lum)*65536)//count(*) AS BIGINT) AS g
-       |         FROM pv GROUP BY 1, 2, 3)""".stripMargin
-  }
-
-  /** bits(img, idx, bit) -> 16-bit bands -> pivoted sig -> banded
-    * candidate pairs with exact hamming (ids as VARCHAR, string order —
-    * the dedup pairing convention). */
-  /** The committed lossy fixture's 64 dhash bits as a SQL VALUES body —
-    * output of tools/lossy_fixture_dhash.py over the libwebp-produced
-    * vp8_photo_q1.yuv (bands 31675/281/56472/33885; derivation is
-    * independent of graft code, see the script header). */
-  private val lossyFixtureDhashBits: String =
-    "(0, 1), (1, 1), (2, 0), (3, 1), (4, 1), (5, 1), (6, 0), (7, 1), " +
-    "(8, 1), (9, 1), (10, 0), (11, 1), (12, 1), (13, 1), (14, 1), (15, 0), " +
-    "(16, 1), (17, 0), (18, 0), (19, 1), (20, 1), (21, 0), (22, 0), (23, 0), " +
-    "(24, 1), (25, 0), (26, 0), (27, 0), (28, 0), (29, 0), (30, 0), (31, 0), " +
-    "(32, 0), (33, 0), (34, 0), (35, 1), (36, 1), (37, 0), (38, 0), (39, 1), " +
-    "(40, 0), (41, 0), (42, 1), (43, 1), (44, 1), (45, 0), (46, 1), (47, 1), " +
-    "(48, 1), (49, 0), (50, 1), (51, 1), (52, 1), (53, 0), (54, 1), (55, 0), " +
-    "(56, 0), (57, 0), (58, 1), (59, 0), (60, 0), (61, 0), (62, 0), (63, 1)"
-
-  private def imageBandCtes: String =
-    s"""bands AS (SELECT img, idx//16 AS band,
-       |            CAST(sum(bit * (1 << (idx % 16))) AS BIGINT) AS bv
-       |          FROM bits GROUP BY 1, 2),
-       |sig AS (SELECT img,
-       |          max(CASE WHEN band = 0 THEN bv END) AS b0,
-       |          max(CASE WHEN band = 1 THEN bv END) AS b1,
-       |          max(CASE WHEN band = 2 THEN bv END) AS b2,
-       |          max(CASE WHEN band = 3 THEN bv END) AS b3
-       |        FROM bands GROUP BY 1),
-       |cd AS (SELECT CAST(x.img AS VARCHAR) AS id1, CAST(y.img AS VARCHAR) AS id2,
-       |         bit_count(xor(x.b0, y.b0)) + bit_count(xor(x.b1, y.b1)) +
-       |         bit_count(xor(x.b2, y.b2)) + bit_count(xor(x.b3, y.b3)) AS hamming
-       |       FROM sig x JOIN sig y
-       |       ON (x.b0 = y.b0 OR x.b1 = y.b1 OR x.b2 = y.b2 OR x.b3 = y.b3)
-       |          AND CAST(x.img AS VARCHAR) < CAST(y.img AS VARCHAR))""".stripMargin
-
-  private def imageDhashOracleSql: String =
-    s"""WITH RECURSIVE ${imageGridCtes(120, 40, 9, 8)},
-       |bits AS (SELECT a.img, a.gy*8 + a.gx AS idx,
-       |           CASE WHEN b.g > a.g THEN 1 ELSE 0 END AS bit
-       |         FROM grid a JOIN grid b
-       |           ON b.img = a.img AND b.gy = a.gy AND b.gx = a.gx + 1
-       |         WHERE a.gx < 8),
-       |$imageBandCtes,
-       |e AS (SELECT id1, id2 FROM cd WHERE hamming <= 6),
-       |ed AS MATERIALIZED (
-       |  SELECT id1 AS src, id2 AS dst FROM e
-       |  UNION SELECT id2 AS src, id1 AS dst FROM e),
-       |allid AS (SELECT CAST(img AS VARCHAR) AS id FROM imgs),
-       |reach AS (
-       |  SELECT id, id AS node FROM allid
-       |  UNION
-       |  SELECT r.id, ed.dst AS node FROM reach r JOIN ed ON ed.src = r.node)
-       |SELECT id, min(node) AS component FROM reach GROUP BY id ORDER BY id""".stripMargin
-
-  private def imagePhashOracleSql: String = {
-    val cosLit = graft.pipeline.Dedup.phashCosTable.mkString("[", ", ", "]")
-    s"""WITH ${imageGridCtes(80, 30, 32, 32)},
-       |ct AS (SELECT $cosLit AS c),
-       |rt AS (SELECT g.img, g.gy, u.range AS u,
-       |         CAST(sum(g.g * ct.c[u.range*32 + g.gx + 1]) AS BIGINT)//65536 AS rv
-       |       FROM grid g CROSS JOIN range(8) u CROSS JOIN ct
-       |       GROUP BY 1, 2, 3),
-       |dct AS (SELECT rt.img, rt.u, v.range AS v,
-       |          CAST(sum(rt.rv * ct.c[v.range*32 + rt.gy + 1]) AS BIGINT) AS cc
-       |        FROM rt CROSS JOIN range(8) v CROSS JOIN ct
-       |        GROUP BY 1, 2, 3),
-       |med AS (SELECT img, quantile_disc(cc, 0.5) AS m
-       |        FROM dct WHERE NOT (u = 0 AND v = 0) GROUP BY 1),
-       |bits AS (SELECT dct.img, dct.u*8 + dct.v AS idx,
-       |           CASE WHEN dct.cc > med.m THEN 1 ELSE 0 END AS bit
-       |         FROM dct JOIN med ON med.img = dct.img),
-       |$imageBandCtes
-       |SELECT id1, id2, CAST(hamming AS BIGINT) AS hamming
-       |FROM cd WHERE hamming <= 10 ORDER BY id1, id2""".stripMargin
-  }
-
-  /** Shared by events_drift_monitor and events_drift_vector (the two
-    * scoring forms are bit-identical by the shared scoreFolded
-    * expressions — spec-asserted). Full replay: reference equi-depth
-    * edges (quantile_cont = the engine's type-7), per-bin reference
-    * proportions, per-hour window bin proportions, PSI with the eps
-    * floor, binned KS via windowed cumulative sums over the bin order,
-    * verdict bands on raw psi, CUSUM prefix form. */
-  private def driftMonitorOracleSql: String = {
-    val probs = (1 until 10).map(i => s"0.$i").mkString(", ")
-    val binChain = (1 to 9)
-      .map(i => s"(CASE WHEN value > be[$i] THEN 1 ELSE 0 END)").mkString(" + ")
-    s"""WITH refv AS (SELECT CAST(value AS DOUBLE) AS value FROM events
-           WHERE ts < TIMESTAMP '2024-01-02 00:00:00' AND value IS NOT NULL),
-       b AS (SELECT quantile_cont(value, [$probs]) AS be FROM refv),
-       refb AS (SELECT $binChain AS bin, count(*) AS n FROM refv, b GROUP BY 1),
-       reft AS (SELECT sum(n) AS t FROM refb),
-       props AS (SELECT g.bin, CAST(coalesce(refb.n, 0) AS DOUBLE) / reft.t AS p
-         FROM generate_series(0, 9) g(bin) LEFT JOIN refb USING (bin), reft),
-       curv AS (SELECT CAST(floor(epoch(date_trunc('hour', ts))) AS BIGINT) AS hour_start,
-           $binChain AS bin
-         FROM events, b WHERE value IS NOT NULL),
-       curb AS (SELECT hour_start, bin, count(*) AS n FROM curv GROUP BY 1, 2),
-       curt AS (SELECT hour_start, sum(n) AS t FROM curb GROUP BY 1),
-       cells AS (SELECT curt.hour_start, props.bin, props.p, curt.t,
-           CAST(coalesce(curb.n, 0) AS DOUBLE) / curt.t AS q
-         FROM curt CROSS JOIN props
-         LEFT JOIN curb ON curb.hour_start = curt.hour_start AND curb.bin = props.bin),
-       cums AS (SELECT hour_start, t,
-           greatest(p, 1.0e-6) AS pf, greatest(q, 1.0e-6) AS qf,
-           sum(p) OVER (PARTITION BY hour_start ORDER BY bin) AS cp,
-           sum(q) OVER (PARTITION BY hour_start ORDER BY bin) AS cq
-         FROM cells),
-       scored AS (SELECT hour_start, CAST(max(t) AS BIGINT) AS n,
-           sum((pf - qf) * ln(pf / qf)) AS psi_raw,
-           max(abs(cp - cq)) AS ks_raw
-         FROM cums GROUP BY 1),
-       mu AS (SELECT sum(bin * p) AS m FROM props),
-       locs AS (SELECT hour_start, sum(bin * q) AS mq FROM cells GROUP BY 1),
-       ser AS (SELECT hour_start, mq - mu.m AS d FROM locs, mu),
-       pre AS (SELECT hour_start, d, sum(d) OVER (ORDER BY hour_start) AS p FROM ser),
-       cus AS (SELECT hour_start, d,
-           p - least(0.0, min(p) OVER (ORDER BY hour_start)) AS s_up,
-           greatest(0.0, max(p) OVER (ORDER BY hour_start)) - p AS s_dn
-         FROM pre)
-       SELECT scored.hour_start, n, round(psi_raw, 6) AS psi,
-         round(ks_raw, 6) AS ks_binned,
-         CASE WHEN psi_raw >= 0.25 THEN 'action'
-              WHEN psi_raw >= 0.1 THEN 'warning' ELSE 'stable' END AS verdict,
-         round(d, 6) AS loc_shift, round(s_up, 6) AS cusum_up,
-         round(s_dn, 6) AS cusum_dn,
-         greatest(s_up, s_dn) > 1.0 AS cusum_alarm
-       FROM scored JOIN cus USING (hour_start) ORDER BY hour_start"""
-  }
-
-  private def simhashOracleSql: String =
-    s"""WITH d AS (
-       |  SELECT CAST(doc_id AS VARCHAR) AS id, lower(text) AS lt
-       |  FROM documents WHERE doc_id < 200),
-       |tk AS (SELECT id, unnest(string_split_regex(lt, '\\s+')) AS tok FROM d),
-       |ph AS (SELECT id, ${sqlPolyHash("tok")} AS x FROM tk),
-       |bits AS (SELECT id, b, sum(CASE WHEN (x >> CAST(b AS INT)) & CAST(1 AS UBIGINT) = CAST(1 AS UBIGINT) THEN 1 ELSE -1 END) AS acc
-       |         FROM ph CROSS JOIN range(64) r(b) GROUP BY id, b),
-       |sg AS (SELECT id, CAST(CAST(sum(CASE WHEN acc > 0 THEN (CAST(1 AS UBIGINT) << CAST(b AS INT))::HUGEINT ELSE 0 END) AS HUGEINT)
-       |         % 18446744073709551616 AS UBIGINT) AS sig
-       |       FROM bits GROUP BY id),
-       |bd AS (SELECT id, sig, b, (sig >> CAST(b*16 AS INT)) & CAST(65535 AS UBIGINT) AS bucket
-       |       FROM sg CROSS JOIN range(4) r(b)),
-       |cd AS (SELECT DISTINCT x.id AS id1, y.id AS id2, x.sig AS s1, y.sig AS s2
-       |       FROM bd x JOIN bd y ON x.b = y.b AND x.bucket = y.bucket AND x.id < y.id)
-       |SELECT id1, id2, CAST(bit_count(xor(s1, s2)) AS BIGINT) AS hamming
-       |FROM cd WHERE bit_count(xor(s1, s2)) <= 16 ORDER BY id1, id2""".stripMargin
-
-  // ------------------------------------------ logistic IRLS SQL replay
-  // DuckDB replay of the Glm.fitBinomial kernel for the 2-parameter
-  // (intercept + one continuous rv) logistic fits of analyze_assoc_logistic:
-  // the 2×2 weighted normal equations solve in closed form, so each IRLS
-  // iteration is one aggregation pass, unrolled to 8 iterations with the
-  // engine's exact statsmodels init (mu = (y+0.5)/2) and deviance stopping
-  // rule replayed via a lag window (the FIRST iteration meeting
-  // |dev_k − dev_{k−1}| ≤ 1e-8(|dev_{k−1}|+1e-8) is reported, exactly like
-  // the Scala loop). p-values replay erfc via Cody's rational Chebyshev
-  // approximation (≤8e-16 relative for x ≤ 4; erfc beyond 4 is < 1.6e-8 and
-  // rounds to 0 at 6 decimals).
-
-  /** Cody erfc over a non-negative sql expression. */
-  private def mannWhitneyOracleSql: String = {
-      // average-rank algebra over tie runs: 2·R_A = Σ ca·(2·below + t + 1)
-      // stays integral; u/z/p mirror the engine's column ops term for term
-      val zExpr = "(abs(z) / sqrt(2.0))"
-      s"""WITH s AS (SELECT l_extendedprice AS x, l_returnflag = 'R' AS a
-               FROM lineitem WHERE l_returnflag IN ('R', 'A')),
-         g AS (SELECT x, sum(CASE WHEN a THEN 1 ELSE 0 END) AS ca,
-                 sum(CASE WHEN a THEN 0 ELSE 1 END) AS cb
-               FROM s GROUP BY 1),
-         w AS (SELECT ca, ca + cb AS t,
-                 coalesce(sum(ca + cb) OVER (ORDER BY x
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS below
-               FROM g),
-         tot AS (SELECT sum(ca) AS na, sum(cb) AS nb FROM g),
-         acc AS (SELECT sum(ca * (2 * below + t + 1)) AS ra2,
-                   sum(t * t * t - t) AS t3 FROM w),
-         kv AS (SELECT na, nb,
-                 CAST(ra2 AS DOUBLE) / 2.0 - CAST(na * (na + 1) AS DOUBLE) / 2.0 AS u,
-                 CAST(na * nb AS DOUBLE) / 2.0 AS mu,
-                 CAST(na * nb AS DOUBLE) / 12.0 *
-                   (CAST(na + nb + 1 AS DOUBLE) -
-                     CAST(t3 AS DOUBLE) /
-                       (CAST(na + nb AS DOUBLE) * (CAST(na + nb AS DOUBLE) - 1.0))) AS s2
-               FROM acc, tot),
-         zt AS (SELECT na, nb, u, (u - mu) / sqrt(s2) AS z FROM kv)
-         SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b, u,
-           round(z, 6) AS z, round(${sqlErfc(zExpr)}, 6) AS pvalue
-         FROM zt""".stripMargin
-  }
-
-  private def ksDriftOracleSql: String = {
-      // window prefix-sums over tie-aggregated distinct values; the engine's
-      // Smirnov series is replayed with the SAME left-associated 25-term sum
-      val terms = (1 to 25).map { k =>
-        val sign = if (k == 1) "" else if (k % 2 == 1) " + " else " - "
-        s"${sign}exp(-2.0 * ${k * k} * lam * lam)"
-      }.mkString
-      s"""WITH s AS (SELECT l_extendedprice AS x, l_returnflag = 'R' AS a
-               FROM lineitem WHERE l_returnflag IN ('R', 'A')),
-         g AS (SELECT x, sum(CASE WHEN a THEN 1 ELSE 0 END) AS ca,
-                 sum(CASE WHEN a THEN 0 ELSE 1 END) AS cb
-               FROM s GROUP BY 1),
-         tot AS (SELECT sum(ca) AS na, sum(cb) AS nb FROM g),
-         c AS (SELECT sum(ca) OVER (ORDER BY x) AS cuma,
-                 sum(cb) OVER (ORDER BY x) AS cumb FROM g),
-         m AS (SELECT max(abs(cuma * nb - cumb * na)) AS dnum FROM c, tot),
-         k AS (SELECT na, nb,
-                 dnum * 1.0 / (na * 1.0 * nb) AS d,
-                 (sqrt(na * 1.0 * nb / (na + nb)) + 0.12
-                   + 0.11 / sqrt(na * 1.0 * nb / (na + nb)))
-                   * (dnum * 1.0 / (na * 1.0 * nb)) AS lam
-               FROM m, tot)
-         SELECT CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-           round(d, 6) AS d,
-           round(least(1.0, greatest(0.0, 2.0 * ($terms))), 6) AS pvalue
-         FROM k"""
-  }
-
-  private def sqlErfc(x: String): String = {
-    val a = Seq("3.16112374387056560e0", "1.13864154151050156e2",
-      "3.77485237685302021e2", "3.20937758913846947e3", "1.85777706184603153e-1")
-    val b = Seq("2.36012909523441209e1", "2.44024637934444173e2",
-      "1.28261652607737228e3", "2.84423683343917062e3")
-    val c = Seq("5.64188496988670089e-1", "8.88314979438837594e0",
-      "6.61191906371416295e1", "2.98635138197400131e2", "8.81952221241769090e2",
-      "1.71204761263407058e3", "2.05107837782607147e3", "1.23033935479799725e3",
-      "2.15311535474403846e-8")
-    val d = Seq("1.57449261107098347e1", "1.17693950891312499e2",
-      "5.37181101862009858e2", "1.62138957456669019e3", "3.29079923573345963e3",
-      "4.36261909014324716e3", "3.43936767414372164e3", "1.23033935480374942e3")
-    val ysq = s"(($x)*($x))"
-    val num1 = s"((((${a(4)}*$ysq+${a(0)})*$ysq+${a(1)})*$ysq+${a(2)})*$ysq+${a(3)})"
-    val den1 = s"(((($ysq+${b(0)})*$ysq+${b(1)})*$ysq+${b(2)})*$ysq+${b(3)})"
-    val erfSmall = s"(($x)*$num1/$den1)"
-    var num2 = s"${c(8)}*($x)"
-    for (ci <- c.take(7)) num2 = s"(($num2+$ci)*($x))"
-    num2 = s"($num2+${c(7)})"
-    var den2 = s"($x)"
-    for (di <- d.take(7)) den2 = s"(($den2+$di)*($x))"
-    den2 = s"($den2+${d(7)})"
-    val ysq16 = s"(floor(($x)*16)/16)"
-    val del = s"((($x)-$ysq16)*(($x)+$ysq16))"
-    val erfcMid = s"(exp(-$ysq16*$ysq16)*exp(-$del)*$num2/$den2)"
-    s"(CASE WHEN ($x) <= 0.46875 THEN 1.0 - $erfSmall" +
-      s" WHEN ($x) <= 4.0 THEN $erfcMid ELSE 0.0 END)"
-  }
-
-  /** Full IRLS replay for analyze_assoc_logistic (verified to hash-match
-    * the engine's rounded beta/se/pvalue at sf0.001 and sf0.01). */
-  /** CTEs replaying `Sampling.dsirScores` on the documents table with
-    * target = source 'src0': add-1-smoothed unigram log-likelihood ratio,
-    * quantized to integer micro-nats per word BEFORE the per-document sum
-    * (exact int64 — no float summation-order sensitivity). Exposes `sc`
-    * = (doc_id, n_tokens, score_unats). */
-  private def dsirScoreCtes: String =
-    """tk AS (SELECT doc_id, source = 'src0' AS tgt,
-             unnest(string_split(trim(regexp_replace(lower(text), '[ \t\n\x0B\f\r]+', ' ', 'g')), ' ')) AS word
-           FROM documents),
-         tw AS (SELECT * FROM tk WHERE word <> ''),
-         c AS (SELECT word, count(*) AS c_all,
-                 sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS c_tgt
-               FROM tw GROUP BY 1),
-         tot AS (SELECT sum(c_all) AS n_raw, sum(c_tgt) AS n_tgt, count(*) AS vocab FROM c),
-         lam AS (SELECT word,
-                 CAST(round((ln((c_tgt + 1) * 1.0 / (n_tgt + vocab))
-                           - ln((c_all + 1) * 1.0 / (n_raw + vocab))) * 1e6) AS BIGINT) AS lam
-                 FROM c, tot),
-         dc AS (SELECT doc_id, word, count(*) AS cw FROM tw GROUP BY 1, 2),
-         sc AS (SELECT dc.doc_id, CAST(sum(cw) AS BIGINT) AS n_tokens,
-                  CAST(sum(cw * lam) AS BIGINT) AS score_unats
-                FROM dc JOIN lam USING (word) GROUP BY 1)"""
-
-  /** The canonical greedy left-to-right BPE merge as a DuckDB
-    * `list_reduce` fold — state string "<merged>\x02<pending>",
-    * byte-identical to `Text.bpeApplyMerge`'s `functions.aggregate` fold.
-    * `best` is a 1-row CTE exposing the merge pair as columns a, b. */
-  private def bpeFoldSql(best: String, symCol: String): String =
-    s"""list_reduce(list_prepend(chr(2), string_split($symCol, ' ')),
-       (acc, x) -> CASE WHEN split_part(acc, chr(2), 2) = $best.a AND x = $best.b
-           THEN split_part(acc, chr(2), 1) || ' ' || $best.a || $best.b || chr(2)
-           ELSE (CASE WHEN split_part(acc, chr(2), 2) = '' THEN split_part(acc, chr(2), 1)
-                 ELSE split_part(acc, chr(2), 1) || ' ' || split_part(acc, chr(2), 2) END) || chr(2) || x END)"""
-
-  /** Per-document BPE apply chain: dw1..dwn fold dw0's (doc_id, word,
-    * char-split sym) through the trained b1..bn merges in learned order —
-    * shared by the text_bpe_apply and text_bpe_fertility oracles. */
-  private def bpeApplyChainSql(n: Int): String =
-    (1 to n).map { i =>
-      s"""dw$i AS (SELECT doc_id, word,
-             ltrim(CASE WHEN split_part(f, chr(2), 2) = '' THEN split_part(f, chr(2), 1)
-                  ELSE split_part(f, chr(2), 1) || ' ' || split_part(f, chr(2), 2) END) AS sym FROM (
-             SELECT doc_id, word, ${bpeFoldSql(s"b$i", "sym")} AS f
-             FROM dw${i - 1}, b$i))"""
-    }.mkString(",\n         ")
-
-  /** CTE chain replaying `n` BPE training rounds on the documents table:
-    * wd = corpus word counts, w0 = char-split symbol strings, then per
-    * round p_i (weighted adjacent-pair counts), b_i (argmax with the
-    * (count DESC, pair ASC) tie break), w_i (the fold applied). */
-  private def bpeTrainCtes(n: Int): String = {
-    val steps = (1 to n).map { i =>
-      val prev = s"w${i - 1}"
-      s"""p$i AS (SELECT pair, CAST(sum(cnt) AS BIGINT) AS c FROM (
-         SELECT unnest(list_transform(range(len(string_split(sym, ' ')) - 1),
-           k -> string_split(sym, ' ')[CAST(k AS INT) + 1] || ' ' || string_split(sym, ' ')[CAST(k AS INT) + 2])) AS pair, cnt
-         FROM $prev) GROUP BY 1),
-       b$i AS (SELECT pair, c, split_part(pair, ' ', 1) AS a, split_part(pair, ' ', 2) AS b
-               FROM p$i ORDER BY c DESC, pair ASC LIMIT 1),
-       w$i AS (SELECT ltrim(CASE WHEN split_part(f, chr(2), 2) = '' THEN split_part(f, chr(2), 1)
-                    ELSE split_part(f, chr(2), 1) || ' ' || split_part(f, chr(2), 2) END) AS sym, cnt FROM (
-           SELECT cnt, ${bpeFoldSql(s"b$i", "sym")} AS f
-           FROM $prev, b$i))"""
-    }.mkString(",\n         ")
-    s"""wr AS (SELECT trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')) AS t
-                    FROM documents),
-       wd AS (SELECT word, count(*) AS cnt
-              FROM (SELECT unnest(string_split(t, ' ')) AS word FROM wr)
-              WHERE length(word) > 0 AND NOT contains(word, chr(2)) GROUP BY 1),
-       w0 AS (SELECT array_to_string(list_transform(range(length(word)),
-                k -> substr(word, CAST(k AS INT) + 1, 1)), ' ') AS sym, cnt FROM wd),
-       $steps"""
-  }
-
-  /** One unigram Viterbi segmentation pass as an unrolled integer DP
-    * chain: d{tag}_0..d{tag}_18 (best state per word per position under
-    * the (np ASC, sc DESC, path ASC) total order — Text.uniBetter
-    * verbatim) + seg{tag} (the final state of every word). Pieces up to
-    * length 3; words up to length 18 (the Text.unigramTrain caps). */
-  private def unigramDpSql(tag: String, vocab: String): String = {
-    val M = 18
-    val steps = (1 to M).map { i =>
-      val cands = (1 to math.min(3, i)).map { j =>
-        s"""SELECT d.word, d.cnt, d.np + 1 AS np, d.sc + v.cnt AS sc,
-           CASE WHEN d.path = '' THEN v.piece
-                ELSE d.path || chr(1) || v.piece END AS path
-           FROM (SELECT word, cnt, np, sc, path,
-                   substr(word, ${i - j + 1}, $j) AS pc
-                 FROM d${tag}_${i - j} WHERE length(word) >= $i) d
-           JOIN $vocab v ON v.piece = d.pc"""
-      }.mkString("\n         UNION ALL\n         ")
-      s"""d${tag}_$i AS MATERIALIZED (SELECT word, cnt, np, sc, path FROM (
-         SELECT *, row_number() OVER (
-           PARTITION BY word ORDER BY np, sc DESC, path) AS rn
-         FROM ($cands)) WHERE rn = 1)"""
-    }.mkString(",\n       ")
-    val collect = (1 to M).map(i =>
-      s"SELECT word, cnt, np, sc, path FROM d${tag}_$i WHERE length(word) = $i")
-      .mkString("\n         UNION ALL\n         ")
-    s"""d${tag}_0 AS MATERIALIZED (SELECT word, cnt, 0 AS np, CAST(0 AS BIGINT) AS sc,
-         '' AS path FROM uwd),
-       $steps,
-       seg$tag AS ($collect)"""
-  }
-
-  /** Full Text.unigramTrain replay (defaults: seedMulti 60, 2 EM rounds,
-    * vocabSize 80, pieces <= 3 chars, words <= 18 chars): normalized word
-    * counts -> occurrence-counted substring seeds (+ all single chars) ->
-    * E1/M1 -> E2/M2 (zero-usage multigrams drop, chars persist) -> prune
-    * (top-80 multigrams + chars) -> final apply segmentation `segf`.
-    * Exposes `wtok` (word -> token count) and `udwc` (per-doc word
-    * counts, NO length cap — excluded words char-fallback via the LEFT
-    * JOIN coalesce, exactly Text.unigramApply). */
-  private def unigramTrainCtes: String = {
-    def usage(seg: String) =
-      s"""(SELECT piece, CAST(sum(cnt) AS BIGINT) AS cnt FROM (
-         SELECT unnest(string_split(path, chr(1))) AS piece, cnt FROM $seg)
-         GROUP BY 1)"""
-    def nextVocab(prevV: String, uc: String) =
-      s"""MATERIALIZED (SELECT c.piece, CAST(coalesce(u.cnt, 0) AS BIGINT) AS cnt
-         FROM (SELECT piece FROM $prevV WHERE length(piece) = 1) c
-         LEFT JOIN $uc u USING (piece)
-         UNION ALL
-         SELECT piece, cnt FROM $uc WHERE length(piece) > 1)"""
-    s"""uwr AS (SELECT doc_id,
-           trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')) AS t
-         FROM documents),
-       uaw AS (SELECT doc_id, unnest(string_split(t, ' ')) AS word FROM uwr),
-       uwd AS MATERIALIZED (SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM uaw
-               WHERE length(word) > 0 AND length(word) <= 18
-                 AND NOT contains(word, chr(1)) AND NOT contains(word, chr(2))
-               GROUP BY 1),
-       subs AS (SELECT substr(word, s.range + 1, l.range + 2) AS piece, cnt
-                FROM uwd, range(18) s, range(2) l
-                WHERE s.range + l.range + 2 <= length(word)),
-       seedm AS (SELECT piece, cnt FROM (
-                 SELECT piece, CAST(sum(cnt) AS BIGINT) AS cnt
-                 FROM subs GROUP BY 1)
-                 ORDER BY cnt DESC, piece ASC LIMIT 60),
-       seedc AS (SELECT substr(word, s.range + 1, 1) AS piece,
-                   CAST(sum(cnt) AS BIGINT) AS cnt
-                 FROM uwd, range(18) s WHERE s.range < length(word)
-                 GROUP BY 1),
-       v1 AS MATERIALIZED (SELECT piece, cnt FROM seedc
-              UNION ALL SELECT piece, cnt FROM seedm),
-       ${unigramDpSql("e1", "v1")},
-       uc1 AS ${usage("sege1")},
-       v2 AS ${nextVocab("v1", "uc1")},
-       ${unigramDpSql("e2", "v2")},
-       uc2 AS ${usage("sege2")},
-       v3 AS ${nextVocab("v2", "uc2")},
-       vf AS MATERIALIZED (SELECT piece, cnt FROM v3 WHERE length(piece) = 1
-              UNION ALL
-              SELECT piece, cnt FROM (
-                SELECT piece, cnt FROM v3 WHERE length(piece) > 1
-                ORDER BY cnt DESC, piece ASC LIMIT 80)),
-       ${unigramDpSql("f", "vf")},
-       wtok AS MATERIALIZED (SELECT word, CAST(np AS BIGINT) AS tok FROM segf),
-       udwc AS MATERIALIZED (SELECT doc_id, word, CAST(count(*) AS BIGINT) AS c
-                FROM uaw WHERE length(word) > 0 GROUP BY 1, 2)"""
-  }
-
-  private def logisticIrlsOracleSql: String =
-    logisticIrlsOracleSqlFor(
-      "SELECT l_quantity, l_discount, " +
-        "CASE WHEN l_extendedprice > 30000 THEN 1.0 ELSE 0.0 END AS y FROM lineitem",
-      Seq("l_quantity", "l_discount"))
-
-  /** Generalized single-covariate logistic IRLS replay: `dat0Select` must
-    * yield every column in `vars` (exact cross-engine doubles) plus a
-    * 1.0/0.0 `y`; one unrolled IRLS chain per var with the engine's init
-    * and relative-deviance stopping rule. `seDigits`/`pDigits` let
-    * ill-conditioned fits round past the near-convergence spread: when
-    * the deviance step at the stopping iteration sits close to the
-    * tolerance, the engine's partition-order accumulation can legitimately
-    * run ONE more IRLS step than the replay, and the slowest-converging
-    * outputs (se, then pvalue) differ at ~1e-4 relative — rounding must
-    * absorb that, not pretend bit-parity (see analyze_quality_logit). */
-  private def logisticIrlsOracleSqlFor(dat0Select: String, vars: Seq[String],
-                                       seDigits: Int = 4, pDigits: Int = 6): String = {
-    val iters = 8
-    def chain(v: String): Seq[String] = {
-      val init =
-        s"""i_${v}_0 AS (SELECT 2*sum(-ln(0.75)) AS dev FROM dat_$v)"""
-      val steps = (1 to iters).flatMap { k =>
-        val inner =
-          if (k == 1)
-            s"""SELECT x, y,
-               |  CASE WHEN y = 1.0 THEN ln(3.0) ELSE ln(1.0/3.0) END AS eta,
-               |  CASE WHEN y = 1.0 THEN 0.75 ELSE 0.25 END AS mu
-               |FROM dat_$v""".stripMargin
-          else
-            s"""SELECT x, y, b0 + b1*x AS eta, 1.0/(1.0+exp(-(b0 + b1*x))) AS mu
-               |FROM dat_$v CROSS JOIN p_${v}_${k - 1}""".stripMargin
-        Seq(
-          s"""s_${v}_$k AS (
-             |  SELECT sum(w) AS sw, sum(w*x) AS swx, sum(w*x*x) AS swxx,
-             |         sum(w*z) AS swz, sum(w*x*z) AS swxz
-             |  FROM (SELECT x, y, eta, mu, greatest(mu*(1.0-mu), 1e-10) AS w,
-             |               eta + (y-mu)/greatest(mu*(1.0-mu), 1e-10) AS z
-             |        FROM ($inner)))""".stripMargin,
-          s"""p_${v}_$k AS (
-             |  SELECT (swxx*swz - swx*swxz)/(sw*swxx - swx*swx) AS b0,
-             |         (sw*swxz - swx*swz)/(sw*swxx - swx*swx) AS b1,
-             |         sqrt(sw/(sw*swxx - swx*swx)) AS se1
-             |  FROM s_${v}_$k)""".stripMargin,
-          s"""q_${v}_$k AS (
-             |  SELECT b0, b1, se1,
-             |    2*sum(CASE WHEN y = 1.0
-             |      THEN -ln(least(greatest(1.0/(1.0+exp(-(b0 + b1*x))), 1e-10), 1.0-1e-10))
-             |      ELSE -ln(least(greatest(1.0 - 1.0/(1.0+exp(-(b0 + b1*x))), 1e-10), 1.0-1e-10)) END) AS dev
-             |  FROM dat_$v CROSS JOIN p_${v}_$k GROUP BY b0, b1, se1)""".stripMargin)
-      }
-      val unions = (Seq(s"SELECT 0 AS k, NULL AS b0, NULL AS b1, NULL AS se1, dev FROM i_${v}_0") ++
-        (1 to iters).map(k => s"SELECT $k AS k, b0, b1, se1, dev FROM q_${v}_$k"))
-        .mkString(" UNION ALL ")
-      val track = Seq(
-        s"""t_$v AS (SELECT k, b0, b1, se1, dev, lag(dev) OVER (ORDER BY k) AS pdev FROM ($unions))""",
-        s"""r_$v AS (SELECT b0, b1, se1 FROM t_$v
-           |  WHERE k >= 1 AND abs(dev - pdev) <= 1e-8*(abs(pdev) + 1e-8)
-           |  ORDER BY k LIMIT 1)""".stripMargin)
-      init +: steps :+ track.head :+ track.last
-    }
-    val zExpr = "(abs(b1/se1)/sqrt(2.0))"
-    val ctes = vars.flatMap(v => s"dat_$v AS (SELECT $v AS x, y FROM dat0)" +: chain(v))
-    val arms = vars.map { v =>
-      s"""SELECT '$v' AS variable, (SELECT count(*) FROM dat_$v) AS n,
-         |  round(b1, 4) AS beta, round(se1, $seDigits) AS se,
-         |  round(${sqlErfc(zExpr)}, $pDigits) AS pvalue FROM r_$v""".stripMargin
-    }
-    s"WITH dat0 AS ($dat0Select),\n" +
-      ctes.mkString(",\n") + "\n" +
-      "SELECT * FROM (" + arms.mkString(" UNION ALL ") + ") ORDER BY variable"
-  }
-
-  // ============================================================ oracle SQL
-
-  /** DuckDB-runnable oracles. Keys without an entry get the driver's weaker
-    * rows-only check (noted per-query above). */
-  def oracleSql: Map[String, String] = Map(
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-         round(sum(l_quantity), 2) AS sum_qty,
-         round(sum(l_extendedprice), 2) AS sum_base_price,
-         round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-         round(avg(l_discount), 6) AS avg_disc,
-         count(*) AS count_order
-         FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-01'
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "q2_topk_orders" ->
-      """SELECT o_orderkey, round(o_totalprice, 2) AS price FROM orders
-         ORDER BY price DESC, o_orderkey LIMIT 10""",
-
-    "q3_join_revenue_by_nation" ->
-      """SELECT n_name, round(sum(o_totalprice), 2) AS revenue, count(*) AS n_orders
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         JOIN nation ON c_nationkey = n_nationkey
-         GROUP BY 1 ORDER BY 1""",
-
-    "q4_semi_join" ->
-      """SELECT c_mktsegment, count(*) AS n_customers FROM customer
-         WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-         GROUP BY 1 ORDER BY 1""",
-
-    "q5_anti_join" ->
-      """SELECT c_custkey FROM customer
-         WHERE NOT EXISTS (SELECT 1 FROM orders
-                           WHERE o_custkey = c_custkey
-                             AND o_totalprice > 300000)
-         ORDER BY 1""",
-
-    "q6_window_running_sum" ->
-      """SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS epoch, event_id,
-         round(sum(value) OVER (PARTITION BY user_id ORDER BY floor(epoch(ts)), event_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS running_value
-         FROM events WHERE user_id < 20
-         ORDER BY user_id, epoch, event_id""",
-
-    "q7_tumbling_hourly" ->
-      """SELECT CAST(floor(epoch(date_trunc('hour', ts))) AS BIGINT) AS hour_start,
-         event_type, count(*) AS n, round(sum(value), 4) AS total_value
-         FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "pipeline_drift_e2e" -> {
-      // each check is its own stand-alone replay, unioned: the ks/mwu
-      // oracles verbatim as subqueries, plus a single-column psi replay
-      // with equi-depth edges from the REFERENCE slice
-      val probs = (1 until 10).map(i => s"0.$i").mkString(", ")
-      val binChain = (1 to 9)
-        .map(i => s"(CASE WHEN value > be[$i] THEN 1 ELSE 0 END)").mkString(" + ")
-      val psiSql =
-        s"""WITH b AS (SELECT quantile_cont(l_extendedprice, [$probs]) AS be
-                 FROM lineitem WHERE l_returnflag = 'A'),
-           refm AS (SELECT CAST(l_extendedprice AS DOUBLE) AS value
-                    FROM lineitem WHERE l_returnflag = 'A'),
-           curm AS (SELECT CAST(l_extendedprice AS DOUBLE) AS value
-                    FROM lineitem WHERE l_returnflag = 'R'),
-           refb AS (SELECT $binChain AS bin, count(*) AS n_ref
-                    FROM refm, b WHERE value IS NOT NULL GROUP BY 1),
-           curb AS (SELECT $binChain AS bin, count(*) AS n_cur
-                    FROM curm, b WHERE value IS NOT NULL GROUP BY 1),
-           grid AS (SELECT g.bin FROM generate_series(0, 9) g(bin)),
-           cells AS (SELECT grid.bin,
-               CAST(coalesce(n_ref, 0) AS DOUBLE) AS n_ref,
-               CAST(coalesce(n_cur, 0) AS DOUBLE) AS n_cur
-             FROM grid LEFT JOIN refb USING (bin) LEFT JOIN curb USING (bin)),
-           tots AS (SELECT sum(n_ref) AS t_ref, sum(n_cur) AS t_cur FROM cells),
-           pq AS (SELECT greatest(n_ref / t_ref, 1.0e-6) AS p,
-                    greatest(n_cur / t_cur, 1.0e-6) AS q FROM cells, tots)
-           SELECT round(sum((p - q) * ln(p / q)), 6) AS psi FROM pq"""
-      s"""SELECT * FROM (
-         SELECT 'ks' AS "check", d AS statistic, pvalue FROM ($ksDriftOracleSql)
-         UNION ALL SELECT 'mannwhitney', z, pvalue FROM ($mannWhitneyOracleSql)
-         UNION ALL SELECT 'psi', psi, CAST(NULL AS DOUBLE) FROM ($psiSql))
-         ORDER BY "check""""
-    },
-
-    "describe_merge_distinct" ->
-      // exact distinct per column; the merged-sketch estimate sits ~4.9
-      // sigma inside the 8% bound so its verdict replays as TRUE
-      """SELECT variable, n_exact, TRUE AS est_in_bounds FROM (
-           SELECT 'l_orderkey' AS variable, count(DISTINCT l_orderkey) AS n_exact FROM lineitem
-           UNION ALL SELECT 'l_partkey', count(DISTINCT l_partkey) FROM lineitem
-           UNION ALL SELECT 'l_suppkey', count(DISTINCT l_suppkey) FROM lineitem)
-         ORDER BY variable""",
-
-    "describe_merge_summaries" -> {
-      // the oracle never merges: it computes each column's stats over the
-      // WHOLE table — equality proves the Chan combine is exact
-      val arms = Seq("l_discount", "l_extendedprice", "l_quantity", "l_tax").map { c =>
-        s"""SELECT '$c' AS variable, count($c) AS n,
-           ${sqlSig6(s"avg($c)")} AS mean,
-           ${sqlSig6(s"stddev_samp($c)")} AS sd,
-           CAST(min($c) AS DOUBLE) AS min, CAST(max($c) AS DOUBLE) AS max
-           FROM lineitem"""
-      }.mkString(" UNION ALL ")
-      s"SELECT * FROM ($arms) ORDER BY variable"
-    },
-
-    "describe_score_eval" ->
-      """WITH s AS (SELECT CAST(l_extendedprice AS DOUBLE) AS x,
-             CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS p
-           FROM lineitem WHERE l_returnflag IN ('R', 'A')),
-         b AS (SELECT x, CAST(sum(p) AS BIGINT) AS cp,
-             CAST(count(*) - sum(p) AS BIGINT) AS cn FROM s GROUP BY 1),
-         c AS (SELECT *,
-             CAST(coalesce(sum(cp) OVER (ORDER BY x
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cpb,
-             CAST(coalesce(sum(cn) OVER (ORDER BY x
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cnb
-           FROM b),
-         t AS (SELECT CAST(sum(cp) AS BIGINT) AS np, CAST(sum(cn) AS BIGINT) AS nn FROM b),
-         agg AS (SELECT CAST(sum(cp * (2 * cnb + cn)) AS BIGINT) AS a2,
-             sum((CAST(cp AS DOUBLE) / np)
-               * (CAST(np - cpb AS DOUBLE) / (CAST(np - cpb AS DOUBLE) + (nn - cnb)))) AS apv
-           FROM c, t)
-         SELECT np AS n_pos, nn AS n_neg,
-           round(CAST(a2 AS DOUBLE) / (2.0 * np * nn), 6) AS auc,
-           round(apv, 6) AS average_precision
-         FROM agg, t""",
-
-    "describe_mannwhitney" -> mannWhitneyOracleSql,
-
-    "describe_ks_drift" -> ksDriftOracleSql,
-
-    "describe_psi_categorical" ->
-      """WITH src AS (SELECT event_type,
-             CASE WHEN value IS NULL THEN NULL
-                  WHEN value > 10 THEN 'high' ELSE 'low' END AS value_band, ts
-           FROM events),
-         refm AS (
-           SELECT 'event_type' AS variable,
-             CASE WHEN event_type IS NULL THEN 'N' ELSE 'V' || event_type END AS category
-           FROM src WHERE ts < TIMESTAMP '2024-01-02 00:00:00'
-           UNION ALL
-           SELECT 'value_band',
-             CASE WHEN value_band IS NULL THEN 'N' ELSE 'V' || value_band END
-           FROM src WHERE ts < TIMESTAMP '2024-01-02 00:00:00'),
-         curm AS (
-           SELECT 'event_type' AS variable,
-             CASE WHEN event_type IS NULL THEN 'N' ELSE 'V' || event_type END AS category
-           FROM src
-           UNION ALL
-           SELECT 'value_band',
-             CASE WHEN value_band IS NULL THEN 'N' ELSE 'V' || value_band END
-           FROM src),
-         refb AS (SELECT variable, category, count(*) AS n_ref FROM refm GROUP BY 1, 2),
-         curb AS (SELECT variable, category, count(*) AS n_cur FROM curm GROUP BY 1, 2),
-         cells AS (SELECT variable, category,
-             CAST(coalesce(n_ref, 0) AS BIGINT) AS n_ref,
-             CAST(coalesce(n_cur, 0) AS BIGINT) AS n_cur
-           FROM refb FULL OUTER JOIN curb USING (variable, category)),
-         tots AS (SELECT variable, CAST(sum(n_ref) AS BIGINT) AS t_ref,
-             CAST(sum(n_cur) AS BIGINT) AS t_cur,
-             CAST(count(*) AS BIGINT) AS n_levels
-           FROM cells GROUP BY 1),
-         pq AS (SELECT cells.variable,
-             greatest(CAST(n_ref AS DOUBLE) / t_ref, 1.0e-6) AS p,
-             greatest(CAST(n_cur AS DOUBLE) / t_cur, 1.0e-6) AS q,
-             t_ref, t_cur, n_levels
-           FROM cells JOIN tots USING (variable))
-         SELECT variable, max(t_ref) AS n_ref, max(t_cur) AS n_cur,
-           max(n_levels) AS n_levels,
-           round(sum((p - q) * ln(p / q)), 6) AS psi
-         FROM pq GROUP BY 1 ORDER BY 1""",
-
-    "describe_psi_drift" -> {
-      val probs = (1 until 10).map(i => s"0.$i").mkString(", ")
-      def binChain(lst: String): String =
-        (1 to 9).map(i => s"(CASE WHEN value > $lst[$i] THEN 1 ELSE 0 END)")
-          .mkString(" + ")
-      s"""WITH b AS (SELECT quantile_cont(l_extendedprice, [$probs]) AS be,
-             quantile_cont(l_quantity, [$probs]) AS bq FROM lineitem),
-         refm AS (
-           SELECT 'l_extendedprice' AS variable, CAST(l_extendedprice AS DOUBLE) AS value FROM lineitem
-           UNION ALL SELECT 'l_quantity', CAST(l_quantity AS DOUBLE) FROM lineitem),
-         curm AS (
-           SELECT 'l_extendedprice' AS variable, CAST(l_extendedprice * 1.15 AS DOUBLE) AS value FROM lineitem
-           UNION ALL SELECT 'l_quantity', CAST(l_quantity AS DOUBLE) FROM lineitem),
-         refb AS (SELECT variable,
-             CASE WHEN variable = 'l_extendedprice' THEN ${binChain("be")}
-                  ELSE ${binChain("bq")} END AS bin, count(*) AS n_ref
-           FROM refm, b WHERE value IS NOT NULL GROUP BY 1, 2),
-         curb AS (SELECT variable,
-             CASE WHEN variable = 'l_extendedprice' THEN ${binChain("be")}
-                  ELSE ${binChain("bq")} END AS bin, count(*) AS n_cur
-           FROM curm, b WHERE value IS NOT NULL GROUP BY 1, 2),
-         grid AS (SELECT v.variable, g.bin
-           FROM (SELECT DISTINCT variable FROM refm) v, generate_series(0, 9) g(bin)),
-         cells AS (SELECT grid.variable, grid.bin,
-             CAST(coalesce(n_ref, 0) AS DOUBLE) AS n_ref,
-             CAST(coalesce(n_cur, 0) AS DOUBLE) AS n_cur
-           FROM grid LEFT JOIN refb USING (variable, bin)
-             LEFT JOIN curb USING (variable, bin)),
-         tots AS (SELECT variable, sum(n_ref) AS t_ref, sum(n_cur) AS t_cur
-           FROM cells GROUP BY 1),
-         pq AS (SELECT cells.variable,
-             greatest(n_ref / t_ref, 1.0e-6) AS p,
-             greatest(n_cur / t_cur, 1.0e-6) AS q, t_ref, t_cur
-           FROM cells JOIN tots ON cells.variable = tots.variable)
-         SELECT variable, CAST(max(t_ref) AS BIGINT) AS n_ref,
-           CAST(max(t_cur) AS BIGINT) AS n_cur,
-           round(sum((p - q) * ln(p / q)), 6) AS psi
-         FROM pq GROUP BY 1 ORDER BY 1"""
-    },
-
-    "describe_cramers_v" -> {
-      def pairSql(a: String, b: String): String =
-        s"""SELECT '$a' AS var_a, '$b' AS var_b, n, dof AS df,
-           round(chi2, 6) AS chi2,
-           round(sqrt(chi2 / (CAST(n AS DOUBLE) * CAST(mindim AS DOUBLE))), 6) AS cramers_v
-         FROM (
-           WITH li AS (SELECT l_returnflag, l_linestatus,
-               CAST(month(l_shipdate) AS VARCHAR) AS ship_mon FROM lineitem),
-           cc AS (SELECT CAST($a AS VARCHAR) AS la, CAST($b AS VARCHAR) AS lb
-               FROM li
-               WHERE l_returnflag IS NOT NULL AND l_linestatus IS NOT NULL
-                 AND ship_mon IS NOT NULL),
-           cells AS (SELECT la, lb, count(*) AS n FROM cc GROUP BY 1, 2),
-           rt AS (SELECT la, sum(n) AS ra FROM cells GROUP BY 1),
-           ct AS (SELECT lb, sum(n) AS cb FROM cells GROUP BY 1),
-           tot AS (SELECT sum(n) AS nn FROM cells),
-           f AS (SELECT rt.la, ct.lb, CAST(coalesce(cells.n, 0) AS DOUBLE) AS o,
-               CAST(ra AS DOUBLE) * cb / nn AS e, nn
-             FROM rt CROSS JOIN ct CROSS JOIN tot
-             LEFT JOIN cells ON rt.la = cells.la AND ct.lb = cells.lb)
-           SELECT CAST(max(nn) AS BIGINT) AS n,
-             CAST((count(DISTINCT la) - 1) * (count(DISTINCT lb) - 1) AS BIGINT) AS dof,
-             least(count(DISTINCT la) - 1, count(DISTINCT lb) - 1) AS mindim,
-             sum((o - e) * (o - e) / e) AS chi2 FROM f)"""
-      // pair labels follow the Spark call's column order (var_a = earlier
-      // listed column), chi2/V are symmetric
-      Seq(("l_returnflag", "l_linestatus"), ("l_returnflag", "ship_mon"),
-        ("l_linestatus", "ship_mon"))
-        .map { case (x, y) => pairSql(x, y) }
-        .mkString("SELECT * FROM (\n", "\nUNION ALL\n", "\n) ORDER BY var_a, var_b")
-    },
-
-    "describe_crosstab" ->
-      """SELECT CAST(o_orderstatus AS VARCHAR) AS a,
-           CAST(o_orderpriority AS VARCHAR) AS b, count(*) AS n
-         FROM orders
-         WHERE o_orderstatus IS NOT NULL AND o_orderpriority IS NOT NULL
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "describe_chi2_independence" ->
-      """WITH cells AS (SELECT CAST(o_orderstatus AS VARCHAR) AS a,
-             CAST(o_orderpriority AS VARCHAR) AS b, count(*) AS n
-           FROM orders
-           WHERE o_orderstatus IS NOT NULL AND o_orderpriority IS NOT NULL
-           GROUP BY 1, 2),
-         rt AS (SELECT a, sum(n) AS ra FROM cells GROUP BY 1),
-         ct AS (SELECT b, sum(n) AS cb FROM cells GROUP BY 1),
-         tot AS (SELECT sum(n) AS nn FROM cells),
-         f AS (SELECT rt.a, ct.b, CAST(coalesce(cells.n, 0) AS DOUBLE) AS o,
-             CAST(ra AS DOUBLE) * cb / nn AS e, nn
-           FROM rt CROSS JOIN ct CROSS JOIN tot
-           LEFT JOIN cells ON rt.a = cells.a AND ct.b = cells.b),
-         s AS (SELECT CAST(max(nn) AS BIGINT) AS n,
-             CAST((count(DISTINCT a) - 1) * (count(DISTINCT b) - 1) AS BIGINT) AS dof,
-             sum((o - e) * (o - e) / e) AS chi2 FROM f),
-         wh AS (SELECT *, (pow(chi2 / CAST(dof AS DOUBLE), 1.0 / 3.0)
-               - (1.0 - 2.0 / (9.0 * CAST(dof AS DOUBLE))))
-             / sqrt(2.0 / (9.0 * CAST(dof AS DOUBLE))) AS z FROM s),
-         az AS (SELECT *, abs(z) / sqrt(2.0) AS za FROM wh),
-         tp AS (SELECT *, 1.0 / (1.0 + 0.3275911 * za) AS tt FROM az),
-         ef AS (SELECT *, tt * (0.254829592 + tt * (-0.284496736 + tt * (1.421413741
-             + tt * (-1.453152027 + tt * 1.061405429)))) * exp(-za * za) AS ep FROM tp)
-         SELECT n, dof AS df, round(chi2, 6) AS chi2,
-           round(0.5 * (CASE WHEN z >= 0 THEN ep ELSE 2.0 - ep END), 6) AS pvalue_approx
-         FROM ef""",
-
-    "events_json_extract" ->
-      """SELECT event_type,
-         count(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS n_k,
-         CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-         round(avg(CAST(json_extract_string(props, '$.k') AS BIGINT)), 6) AS avg_k
-         FROM events GROUP BY 1 ORDER BY 1""",
-
-    "modify_colfilter" ->
-      """SELECT p_partkey, p_name, round(p_retailprice, 2) AS p_retailprice
-         FROM part ORDER BY p_partkey""",
-
-    "modify_colfilter_min_n" ->
-      """WITH tot AS (SELECT count(*) AS n FROM lineitem)
-         SELECT 'disc_nz' AS variable, count(nullif(l_discount, 0.0)) AS n_nonnull,
-           count(nullif(l_discount, 0.0)) >= (SELECT n * 9 // 10 FROM tot) AS kept FROM lineitem
-         UNION ALL
-         SELECT 'l_quantity', count(l_quantity),
-           count(l_quantity) >= (SELECT n * 9 // 10 FROM tot) FROM lineitem
-         UNION ALL
-         SELECT 'tax_nz', count(nullif(l_tax, 0.0)),
-           count(nullif(l_tax, 0.0)) >= (SELECT n * 9 // 10 FROM tot) FROM lineitem
-         ORDER BY 1""",
-
-    "modify_colfilter_min_cat_n" ->
-      """SELECT 'o_orderpriority' AS variable,
-           (SELECT min(n) FROM (SELECT count(*) AS n FROM orders GROUP BY o_orderpriority)) AS min_level_n
-         UNION ALL
-         SELECT 'o_orderstatus',
-           (SELECT min(n) FROM (SELECT count(*) AS n FROM orders GROUP BY o_orderstatus))
-         ORDER BY 1""",
-
-    "modify_colfilter_percent_zero" ->
-      """SELECT 'l_discount' AS variable,
-           round(avg(CASE WHEN l_discount = 0 THEN 1.0 ELSE 0.0 END) * 100, 6) AS pct_zero
-         FROM lineitem
-         UNION ALL
-         SELECT 'l_tax', round(avg(CASE WHEN l_tax = 0 THEN 1.0 ELSE 0.0 END) * 100, 6)
-         FROM lineitem ORDER BY 1""",
-
-    "modify_rowfilter" ->
-      """SELECT l_returnflag, count(*) AS n, round(sum(l_quantity), 2) AS sum_qty
-         FROM lineitem WHERE l_quantity < 10 GROUP BY 1 ORDER BY 1""",
-
-    "modify_rowfilter_incomplete_obs" ->
-      """SELECT l_returnflag, count(*) AS n FROM lineitem
-         WHERE nullif(l_discount, 0.0) IS NOT NULL AND nullif(l_tax, 0.0) IS NOT NULL
-         GROUP BY 1 ORDER BY 1""",
-
-    "modify_merge_variables" ->
-      """SELECT o_orderkey, c_name, round(o_totalprice, 2) AS price
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         WHERE o_orderkey <= 100 ORDER BY o_orderkey""",
-
-    "modify_merge_observations" ->
-      """SELECT o_orderstatus, count(*) AS n, round(sum(o_totalprice), 2) AS total
-         FROM (SELECT * FROM orders WHERE o_orderkey % 2 = 0
-               UNION ALL SELECT * FROM orders WHERE o_orderkey % 2 = 1)
-         GROUP BY 1 ORDER BY 1""",
-
-    "modify_recode_values" ->
-      """SELECT CASE l_returnflag WHEN 'A' THEN 'accepted' WHEN 'N' THEN 'none'
-           WHEN 'R' THEN 'returned' ELSE l_returnflag END AS l_returnflag,
-         count(*) AS n FROM lineitem GROUP BY 1 ORDER BY 1""",
-
-    "modify_remove_outliers_iqr" ->
-      """WITH b AS (SELECT quantile_cont(l_extendedprice, 0.25) AS q1,
-                    quantile_cont(l_extendedprice, 0.75) AS q3 FROM lineitem)
-         SELECT count(*) AS n_total,
-           count(*) FILTER (WHERE l_extendedprice BETWEEN q1 - 1.5*(q3-q1) AND q3 + 1.5*(q3-q1)) AS n_kept,
-           count(*) - count(*) FILTER (WHERE l_extendedprice BETWEEN q1 - 1.5*(q3-q1) AND q3 + 1.5*(q3-q1)) AS n_removed
-         FROM lineitem, b""",
-
-    "modify_robust_scale" ->
-      """WITH m AS (SELECT quantile_cont(CAST(l_quantity AS DOUBLE), 0.5) AS mq,
-                    quantile_cont(CAST(l_tax AS DOUBLE), 0.5) AS mt FROM lineitem),
-         d AS (SELECT quantile_cont(abs(CAST(l_quantity AS DOUBLE) - mq), 0.5) AS dq,
-                      quantile_cont(abs(CAST(l_tax AS DOUBLE) - mt), 0.5) AS dt
-               FROM lineitem, m),
-         z AS (SELECT (CAST(l_quantity AS DOUBLE) - mq) / (1.4826022185056018 * dq) AS zq,
-                      (CAST(l_tax AS DOUBLE) - mt) / (1.4826022185056018 * dt) AS zt
-               FROM lineitem, m, d)
-         SELECT count(zq) AS n_qty, round(min(zq), 6) AS qty_min,
-           round(max(zq), 6) AS qty_max, round(avg(zq), 6) AS qty_avg,
-           count(zt) AS n_tax, round(min(zt), 6) AS tax_min,
-           round(max(zt), 6) AS tax_max, round(avg(zt), 6) AS tax_avg
-         FROM z""",
-
-    "modify_target_encode_loo" ->
-      """WITH t AS (SELECT l_orderkey, l_linenumber, l_returnflag AS cat,
-             CAST(l_quantity AS BIGINT) AS q
-           FROM lineitem WHERE l_orderkey < 400),
-         s AS (SELECT cat, CAST(sum(q) AS BIGINT) AS sq,
-             CAST(count(q) AS BIGINT) AS n FROM t GROUP BY 1)
-         SELECT t.l_orderkey, t.l_linenumber, t.cat,
-           round(CASE WHEN s.n > 1 AND t.q IS NOT NULL
-             THEN CAST(s.sq - t.q AS DOUBLE) / (s.n - 1) END, 6) AS te_loo
-         FROM t LEFT JOIN s USING (cat) ORDER BY 1, 2""",
-
-    "modify_winsorize" ->
-      """WITH b AS (SELECT quantile_cont(l_extendedprice, 0.05) AS lo,
-                    quantile_cont(l_extendedprice, 0.95) AS hi FROM lineitem)
-         SELECT count(*) AS n,
-           round(min(least(greatest(CAST(l_extendedprice AS DOUBLE), lo), hi)), 4) AS lo,
-           round(max(least(greatest(CAST(l_extendedprice AS DOUBLE), lo), hi)), 4) AS hi,
-           round(sum(least(greatest(CAST(l_extendedprice AS DOUBLE), lo), hi)), 2) AS total
-         FROM lineitem, b""",
-
-    "modify_rint" ->
-      s"""WITH m AS (SELECT 'l_quantity' AS variable, CAST(l_quantity AS DOUBLE) AS value
-             FROM lineitem WHERE l_quantity IS NOT NULL
-           UNION ALL
-           SELECT 'l_tax', CAST(l_tax AS DOUBLE) FROM lineitem WHERE l_tax IS NOT NULL),
-         g AS (SELECT variable, value, count(*) AS n_ties FROM m GROUP BY 1, 2),
-         w AS (SELECT *, CAST(coalesce(sum(n_ties) OVER (PARTITION BY variable ORDER BY value
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS DOUBLE) AS below,
-             CAST(sum(n_ties) OVER (PARTITION BY variable) AS DOUBLE) AS nn FROM g),
-         r AS (SELECT variable, value, n_ties,
-             below + (CAST(n_ties AS DOUBLE) + 1.0) / 2.0 AS avg_rank, nn FROM w),
-         p AS (SELECT variable, value, n_ties,
-             (avg_rank - 0.375) / (nn + 0.25) AS pp FROM r)
-         SELECT variable, value, CAST(n_ties AS BIGINT) AS n_ties,
-           round(${graft.stats.ColMath.normalPpfSql("pp")}, 6) AS rint
-         FROM p ORDER BY variable, value""",
-
-    "modify_yeo_johnson_grid" -> yeoJohnsonOracleSql(
-      Seq(("l_quantity", "l_quantity"), ("q_centered", "l_quantity - 25")),
-      (-4 to 4).map(_ * 0.5)),
-
-    "modify_quantile_bins" ->
-      s"""WITH q AS (SELECT ${(1 until 10).map(i =>
-             s"quantile_cont(l_extendedprice, 0.$i) AS b$i").mkString(", ")}
-           FROM lineitem)
-         SELECT (${(1 until 10).map(i =>
-             s"(CASE WHEN l_extendedprice > b$i THEN 1 ELSE 0 END)").mkString(" + ")}) AS bin,
-           CAST(count(*) AS BIGINT) AS n,
-           round(min(l_extendedprice), 2) AS lo,
-           round(max(l_extendedprice), 2) AS hi
-         FROM lineitem, q GROUP BY 1 ORDER BY 1""",
-
-    "modify_remove_outliers_gaussian" ->
-      """WITH b AS (SELECT avg(l_quantity) AS m, stddev_samp(l_quantity) AS s FROM lineitem)
-         SELECT count(*) AS n_total,
-           count(*) FILTER (WHERE l_quantity BETWEEN m - 2*s AND m + 2*s) AS n_kept,
-           count(*) - count(*) FILTER (WHERE l_quantity BETWEEN m - 2*s AND m + 2*s) AS n_removed
-         FROM lineitem, b""",
-
-    "modify_transform_log" ->
-      """SELECT l_returnflag, round(sum(ln(l_extendedprice)), 4) AS sum_log_price
-         FROM lineitem GROUP BY 1 ORDER BY 1""",
-
-    "modify_make_binary" ->
-      """SELECT 'l_linestatus' AS variable, l_linestatus AS value, count(*) AS count
-         FROM lineitem GROUP BY 2 ORDER BY 1, 2""",
-
-    "modify_categorize" ->
-      """WITH u AS (
-           SELECT 'event_type' AS variable, count(DISTINCT event_type) AS nunique,
-             count(*) FILTER (WHERE event_type IS NOT NULL AND TRY_CAST(event_type AS DOUBLE) IS NULL) AS bad
-           FROM events
-           UNION ALL SELECT 'props', count(DISTINCT props),
-             count(*) FILTER (WHERE props IS NOT NULL AND TRY_CAST(props AS DOUBLE) IS NULL) FROM events
-           UNION ALL SELECT 'ts', count(DISTINCT ts), 0 FROM events
-           UNION ALL SELECT 'user_id', count(DISTINCT user_id), 0 FROM events
-           UNION ALL SELECT 'value', count(DISTINCT value), 0 FROM events)
-         SELECT variable, nunique,
-           CASE WHEN nunique = 0 THEN 'dropped'
-                WHEN nunique = 1 THEN 'constant'
-                WHEN nunique = 2 THEN 'binary'
-                WHEN nunique BETWEEN 3 AND 6 THEN 'categorical'
-                WHEN nunique >= 15 AND bad = 0 THEN 'continuous'
-                ELSE 'unknown' END AS decision
-         FROM u ORDER BY variable""",
-
-    "describe_percent_na" ->
-      """SELECT 'disc_nz' AS variable,
-           round((1.0 - count(nullif(l_discount, 0.0)) * 1.0 / count(*)) * 100, 6) AS percent_na
-         FROM lineitem
-         UNION ALL SELECT 'l_quantity',
-           round((1.0 - count(l_quantity) * 1.0 / count(*)) * 100, 6) FROM lineitem
-         UNION ALL SELECT 'tax_nz',
-           round((1.0 - count(nullif(l_tax, 0.0)) * 1.0 / count(*)) * 100, 6) FROM lineitem
-         ORDER BY 1""",
-
-    "describe_freq_table" ->
-      """SELECT * FROM (
-           SELECT 'o_orderpriority' AS variable, o_orderpriority AS value, count(*) AS count
-           FROM orders GROUP BY 2
-           UNION ALL
-           SELECT 'o_orderstatus', o_orderstatus, count(*) FROM orders GROUP BY 2)
-         ORDER BY variable, value""",
-
-    "describe_correlations" ->
-      """SELECT * FROM (
-           SELECT 'l_quantity' AS var1, 'l_extendedprice' AS var2,
-             round(corr(l_quantity, l_extendedprice), 6) AS correlation FROM lineitem
-           UNION ALL SELECT 'l_quantity', 'l_discount', round(corr(l_quantity, l_discount), 6) FROM lineitem
-           UNION ALL SELECT 'l_quantity', 'l_tax', round(corr(l_quantity, l_tax), 6) FROM lineitem
-           UNION ALL SELECT 'l_extendedprice', 'l_discount', round(corr(l_extendedprice, l_discount), 6) FROM lineitem
-           UNION ALL SELECT 'l_extendedprice', 'l_tax', round(corr(l_extendedprice, l_tax), 6) FROM lineitem
-           UNION ALL SELECT 'l_discount', 'l_tax', round(corr(l_discount, l_tax), 6) FROM lineitem)
-         ORDER BY var1, var2""",
-
-    "describe_skewness" ->
-      """SELECT variable, round(g1, 6) AS skew FROM (
-           SELECT 'l_quantity' AS variable,
-             skewness(l_quantity) * (count(*) - 2) / sqrt(count(*) * (count(*) - 1.0)) AS g1 FROM lineitem
-           UNION ALL SELECT 'l_extendedprice',
-             skewness(l_extendedprice) * (count(*) - 2) / sqrt(count(*) * (count(*) - 1.0)) FROM lineitem
-           UNION ALL SELECT 'l_discount',
-             skewness(l_discount) * (count(*) - 2) / sqrt(count(*) * (count(*) - 1.0)) FROM lineitem)
-         ORDER BY variable""",
-
-    "describe_summarize" ->
-      """WITH u AS (
-           SELECT 'event_type' AS variable, count(DISTINCT event_type) AS nunique,
-             count(*) FILTER (WHERE event_type IS NOT NULL AND TRY_CAST(event_type AS DOUBLE) IS NULL) AS bad FROM events
-           UNION ALL SELECT 'props', count(DISTINCT props),
-             count(*) FILTER (WHERE props IS NOT NULL AND TRY_CAST(props AS DOUBLE) IS NULL) FROM events
-           UNION ALL SELECT 'ts', count(DISTINCT ts), 0 FROM events
-           UNION ALL SELECT 'user_id', count(DISTINCT user_id), 0 FROM events
-           UNION ALL SELECT 'value', count(DISTINCT value), 0 FROM events),
-         d AS (SELECT CASE WHEN nunique = 0 THEN 'dropped' WHEN nunique = 1 THEN 'constant'
-                WHEN nunique = 2 THEN 'binary' WHEN nunique BETWEEN 3 AND 6 THEN 'categorical'
-                WHEN nunique >= 15 AND bad = 0 THEN 'continuous' ELSE 'unknown' END AS decision FROM u),
-         kinds(type) AS (VALUES ('binary'), ('categorical'), ('constant'), ('continuous'), ('genotypes'), ('unknown'))
-         SELECT kinds.type,
-           (SELECT count(*) FROM d WHERE d.decision = kinds.type) AS n_variables,
-           (SELECT count(*) FROM events) AS n_rows
-         FROM kinds ORDER BY kinds.type""",
-
-    "describe_summarize_approx" ->
-      // the exact audit core hash-matches; the sketch in-bounds booleans are
-      // pinned TRUE (deterministic hash-seeded sketches inside published
-      // error bounds — see Describe.summarizeApproxAudited)
-      """SELECT variable, n, mean, min, max,
-           TRUE AS distinct_ok, TRUE AS p25_ok, TRUE AS p50_ok, TRUE AS p75_ok
-         FROM (
-           SELECT 'l_quantity' AS variable, count(CAST(l_quantity AS DOUBLE)) AS n,
-             round(avg(CAST(l_quantity AS DOUBLE)), 6) AS mean,
-             round(min(CAST(l_quantity AS DOUBLE)), 6) AS min,
-             round(max(CAST(l_quantity AS DOUBLE)), 6) AS max FROM lineitem
-           UNION ALL
-           SELECT 'l_extendedprice', count(CAST(l_extendedprice AS DOUBLE)),
-             round(avg(CAST(l_extendedprice AS DOUBLE)), 6),
-             round(min(CAST(l_extendedprice AS DOUBLE)), 6),
-             round(max(CAST(l_extendedprice AS DOUBLE)), 6) FROM lineitem
-           UNION ALL
-           SELECT 'l_discount', count(CAST(l_discount AS DOUBLE)),
-             round(avg(CAST(l_discount AS DOUBLE)), 6),
-             round(min(CAST(l_discount AS DOUBLE)), 6),
-             round(max(CAST(l_discount AS DOUBLE)), 6) FROM lineitem
-           UNION ALL
-           SELECT 'l_tax', count(CAST(l_tax AS DOUBLE)),
-             round(avg(CAST(l_tax AS DOUBLE)), 6),
-             round(min(CAST(l_tax AS DOUBLE)), 6),
-             round(max(CAST(l_tax AS DOUBLE)), 6) FROM lineitem)
-         ORDER BY variable""",
-
-    "describe_histogram" ->
-      """WITH b AS (SELECT min(l_extendedprice) AS lo, max(l_extendedprice) AS hi FROM lineitem),
-         w AS (SELECT lo, hi, (hi - lo) / 20 AS width FROM b),
-         binned AS (SELECT CAST(least(floor((l_extendedprice - w.lo) / w.width), 19) AS INT) AS bin
-                    FROM lineitem, w)
-         SELECT bin, round((SELECT lo FROM w) + bin * (SELECT width FROM w), 4) AS lo,
-           round((SELECT lo FROM w) + (bin + 1) * (SELECT width FROM w), 4) AS hi,
-           count(*) AS count
-         FROM binned GROUP BY bin ORDER BY bin""",
-
-    "plot_qq_prep" ->
-      """WITH v AS (SELECT 'n_chars' AS variable, CAST(n_chars AS DOUBLE) AS value
-                    FROM documents WHERE doc_id < 300),
-         m AS (SELECT variable, count(*) AS n, avg(value) AS mu, stddev_samp(value) AS sd
-               FROM v GROUP BY 1)
-         SELECT v.variable,
-           CAST(row_number() OVER (PARTITION BY v.variable ORDER BY value) AS INT) AS position,
-           round((value - mu) / sd, 6) AS sample_quantile
-         FROM v JOIN m ON v.variable = m.variable
-         ORDER BY v.variable, position""",
-
-    "analyze_assoc_continuous" ->
-      """SELECT variable, n, round(beta, 4) AS beta, round(se, 4) AS se FROM (
-           SELECT 'l_quantity' AS variable, CAST(regr_count(l_extendedprice, l_quantity) AS BIGINT) AS n,
-             regr_slope(l_extendedprice, l_quantity) AS beta,
-             sqrt((regr_syy(l_extendedprice, l_quantity)
-                   - regr_sxy(l_extendedprice, l_quantity)^2 / regr_sxx(l_extendedprice, l_quantity))
-                  / (regr_count(l_extendedprice, l_quantity) - 2)
-                  / regr_sxx(l_extendedprice, l_quantity)) AS se FROM lineitem
-           UNION ALL
-           SELECT 'l_discount', CAST(regr_count(l_extendedprice, l_discount) AS BIGINT),
-             regr_slope(l_extendedprice, l_discount),
-             sqrt((regr_syy(l_extendedprice, l_discount)
-                   - regr_sxy(l_extendedprice, l_discount)^2 / regr_sxx(l_extendedprice, l_discount))
-                  / (regr_count(l_extendedprice, l_discount) - 2)
-                  / regr_sxx(l_extendedprice, l_discount)) FROM lineitem
-           UNION ALL
-           SELECT 'l_tax', CAST(regr_count(l_extendedprice, l_tax) AS BIGINT),
-             regr_slope(l_extendedprice, l_tax),
-             sqrt((regr_syy(l_extendedprice, l_tax)
-                   - regr_sxy(l_extendedprice, l_tax)^2 / regr_sxx(l_extendedprice, l_tax))
-                  / (regr_count(l_extendedprice, l_tax) - 2)
-                  / regr_sxx(l_extendedprice, l_tax)) FROM lineitem)
-         ORDER BY variable""",
-
-    "analyze_assoc_cogroup" ->
-      // Frisch–Waugh replay of the co-group GLM: within-returnflag demeaning
-      // absorbs the intercept + categorical dummies, so the residual simple
-      // regression reproduces the full model's rv beta and (with
-      // df = n - #groups - 1) its GLM SE exactly
-      """WITH cc AS (
-           SELECT o_orderstatus AS g, CAST(o_totalprice AS DOUBLE) AS y,
-             CAST(o_custkey AS DOUBLE) AS x1,
-             CAST(datediff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS DOUBLE) AS x2
-           FROM orders),
-         d AS (
-           SELECT g, y - avg(y) OVER (PARTITION BY g) AS yd,
-             x1 - avg(x1) OVER (PARTITION BY g) AS x1d,
-             x2 - avg(x2) OVER (PARTITION BY g) AS x2d
-           FROM cc),
-         f AS (
-           SELECT count(*) AS n, count(DISTINCT g) AS k,
-             sum(yd * x1d) AS sxy1, sum(x1d * x1d) AS sxx1,
-             sum(yd * x2d) AS sxy2, sum(x2d * x2d) AS sxx2,
-             sum(yd * yd) AS syy
-           FROM d)
-         SELECT variable, n, round(beta, 4) AS beta, round(se, 4) AS se FROM (
-           SELECT 'o_custkey' AS variable, n, sxy1 / sxx1 AS beta,
-             sqrt((syy - sxy1 * sxy1 / sxx1) / (n - k - 1) / sxx1) AS se FROM f
-           UNION ALL
-           SELECT 'order_day', n, sxy2 / sxx2,
-             sqrt((syy - sxy2 * sxy2 / sxx2) / (n - k - 1) / sxx2) FROM f)
-         ORDER BY variable""",
-
-    "analyze_assoc_wide" -> wideOracle,
-    "analyze_assoc_logistic" -> logisticIrlsOracleSql,
-
-    "analyze_quality_logit" -> logisticIrlsOracleSqlFor(
-      // features from exact integer counts only (word count; mean word
-      // length = (chars - separators) / words as one int-ratio division)
-      """SELECT CAST(nw AS DOUBLE) AS n_words,
-           (lt - (nw - 1)) * 1.0 / nw AS mean_wlen, y
-         FROM (SELECT len(string_split(t, ' ')) AS nw, length(t) AS lt, y
-               FROM (SELECT trim(regexp_replace(lower(text), '[ \t\n\x0B\f\r]+', ' ', 'g')) AS t,
-                       CASE WHEN source = 'src0' THEN 1.0 ELSE 0.0 END AS y
-                     FROM documents))""",
-      Seq("mean_wlen", "n_words"), seDigits = 3, pDigits = 3),
-
-    "analyze_corrected_pvalues" ->
-      """WITH p AS (SELECT doc_id, (doc_id * 37 % 100 + 1) / 101.0 AS pvalue
-                    FROM documents WHERE doc_id < 200),
-         r AS (SELECT doc_id, pvalue,
-                 count(*) OVER () AS m,
-                 row_number() OVER (ORDER BY pvalue, doc_id) AS rk FROM p),
-         f AS (SELECT doc_id, pvalue, least(pvalue * m, 1.0) AS bonf,
-                 least(min(pvalue * m / rk) OVER (ORDER BY rk
-                   ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING), 1.0) AS fdr
-               FROM r)
-         SELECT doc_id, round(pvalue, 6) AS pvalue, round(bonf, 6) AS pvalue_bonferroni,
-           round(fdr, 6) AS pvalue_fdr
-         FROM f ORDER BY doc_id""",
-
-    "analyze_top_results" ->
-      """SELECT doc_id, round((doc_id * 37 % 100 + 1) / 101.0, 6) AS pvalue
-         FROM documents WHERE doc_id < 200
-         ORDER BY (doc_id * 37 % 100 + 1) / 101.0, doc_id LIMIT 10""",
-
-    "analyze_manhattan_prep" ->
-      """SELECT doc_id, lang,
-           round(-log10((doc_id * 37 % 100 + 1) / 101.0), 6) AS neg_log_pvalue,
-           dense_rank() OVER (ORDER BY lang) AS xpos
-         FROM documents WHERE doc_id < 100 ORDER BY doc_id""",
-
-    "analyze_corrected_grouped" ->
-      """WITH g AS (SELECT l_returnflag, l_linestatus, round(avg(l_discount), 6) AS pvalue
-                    FROM lineitem GROUP BY 1, 2),
-         r AS (SELECT *, count(*) OVER () AS m,
-                 row_number() OVER (ORDER BY pvalue, l_returnflag, l_linestatus) AS rk FROM g),
-         f AS (SELECT l_returnflag, l_linestatus, pvalue,
-                 least(pvalue * m, 1.0) AS bonf,
-                 least(min(pvalue * m / rk) OVER (ORDER BY rk
-                   ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING), 1.0) AS fdr
-               FROM r),
-         mem AS (SELECT DISTINCT l_returnflag, l_linestatus, l_linenumber AS member FROM lineitem)
-         SELECT mem.l_returnflag, mem.l_linestatus, mem.member,
-           round(f.pvalue, 6) AS pvalue, round(f.bonf, 6) AS pvalue_bonferroni,
-           round(f.fdr, 6) AS pvalue_fdr
-         FROM mem JOIN f USING (l_returnflag, l_linestatus)
-         ORDER BY 1, 2, 3""",
-
-    "analyze_get_significant" ->
-      """WITH p AS (SELECT doc_id,
-                 ((doc_id * 37 % 100 + 1) / 101.0) *
-                   (CASE WHEN doc_id % 10 = 0 THEN 0.001 ELSE 1.0 END) AS pvalue
-               FROM documents WHERE doc_id < 200),
-         r AS (SELECT doc_id, pvalue, count(*) OVER () AS m,
-                 row_number() OVER (ORDER BY pvalue, doc_id) AS rk FROM p),
-         f AS (SELECT doc_id, pvalue,
-                 least(min(pvalue * m / rk) OVER (ORDER BY rk
-                   ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING), 1.0) AS fdr
-               FROM r)
-         SELECT doc_id, round(pvalue, 8) AS pvalue, round(fdr, 6) AS pvalue_fdr
-         FROM f WHERE fdr <= 0.05 ORDER BY doc_id""",
-
-    "analyze_interaction_pair" -> interactionPairOracle,
-    "analyze_interaction_betas" -> interactionBetasOracle,
-    "analyze_interaction_allpairs" -> interactionAllPairsOracle,
-
-    "analyze_interaction_categorical" ->
-      // full model = per-level (intercept, slope) lines -> RSS_f is the sum
-      // of grouped simple-regression residuals; restricted = ANCOVA common
-      // slope: RSS_r = sum(Syy_g) - (sum(Sxy_g))^2 / sum(Sxx_g). lrstat
-      // mirrors Glm.fitGaussian's estimated-scale llf with p_r=4, p_f=6
-      // (intercept + 2 dummies + slope [+ 2 slope crossings]); lrdf=2 so
-      // chi2_sf = exp(-lr/2) exactly
-      """WITH g AS (SELECT l_returnflag AS lvl, count(*) AS n_g,
-             regr_sxx(CAST(l_extendedprice AS DOUBLE), CAST(l_quantity AS DOUBLE)) AS sxx,
-             regr_sxy(CAST(l_extendedprice AS DOUBLE), CAST(l_quantity AS DOUBLE)) AS sxy,
-             regr_syy(CAST(l_extendedprice AS DOUBLE), CAST(l_quantity AS DOUBLE)) AS syy
-           FROM lineitem GROUP BY 1),
-         t AS (SELECT sum(n_g) AS n,
-             sum(syy) - sum(sxy)*sum(sxy)/sum(sxx) AS rss_r,
-             sum(syy - sxy*sxy/sxx) AS rss_f FROM g),
-         l AS (SELECT n, 2.0 + n * ln((rss_r / (n - 4)) * (n - 6) / rss_f) AS lr FROM t)
-         SELECT 'l_returnflag' AS term1, 'l_quantity' AS term2,
-           CAST(n AS BIGINT) AS n,
-           round(CASE WHEN lr <= 0 THEN 1.0 ELSE exp(-lr / 2) END, 6) AS lrt_pvalue
-         FROM l""",
-
-    "modify_make_categorical" ->
-      """SELECT 'o_orderstatus' AS variable, o_orderstatus AS level FROM orders GROUP BY 2
-         UNION ALL
-         SELECT 'o_orderpriority', o_orderpriority FROM orders GROUP BY 2
-         ORDER BY 1, 2""",
-
-    "modify_make_continuous" ->
-      """SELECT count(l_quantity) AS n,
-           round(sum(CAST(l_quantity AS DOUBLE)), 4) AS total,
-           round(avg(CAST(l_quantity AS DOUBLE)), 6) AS mean
-         FROM lineitem""",
-
-    "modify_drop_extra_categories" ->
-      """SELECT 'o_orderstatus' AS variable, o_orderstatus AS level FROM orders
-         WHERE o_orderstatus <> 'F' GROUP BY 2 ORDER BY 1, 2""",
-
-    "modify_move_variables" ->
-      """SELECT 'left' AS side, 'c_nationkey' AS variable,
-           count(c_nationkey) AS n_vals,
-           round(sum(CAST(c_nationkey AS DOUBLE)), 2) AS value_sum FROM customer
-         UNION ALL
-         SELECT 'right', 'c_acctbal', count(c_acctbal),
-           round(sum(CAST(c_acctbal AS DOUBLE)), 2) FROM customer
-         UNION ALL
-         SELECT 'right', 'c_name', count(c_name),
-           round(sum(TRY_CAST(c_name AS DOUBLE)), 2) FROM customer
-         ORDER BY 1, 2""",
-
-    "survey_design_aggs" ->
-      """SELECT o_orderpriority AS strat, count(DISTINCT o_custkey % 20) AS n_clusters,
-         count(*) AS n_rows, round(avg(o_totalprice), 4) AS avg_weight
-         FROM orders GROUP BY 1 ORDER BY 1""",
-
-    "genotype_ld" ->
-      """WITH d AS (SELECT
-             CAST((l_linenumber % 2) + (l_suppkey % 2) AS DOUBLE) AS s1,
-             CAST((l_partkey % 2) + (l_orderkey % 2) AS DOUBLE) AS s2,
-             CAST((CASE WHEN l_orderkey % 3 = 0 THEN 1 ELSE 0 END)
-               + (CASE WHEN l_suppkey % 3 = 0 THEN 1 ELSE 0 END) AS DOUBLE) AS s3
-           FROM lineitem)
-         SELECT round(pow(corr(s1, s2), 2), 6) AS r2_s1_s2,
-           round(pow(corr(s1, s3), 2), 6) AS r2_s1_s3,
-           round(pow(corr(s2, s3), 2), 6) AS r2_s2_s3
-         FROM d""",
-
-    "genotype_maf_describe" ->
-      """WITH melted AS (
-           SELECT 'g1' AS variable, (l_linenumber % 2) + (l_suppkey % 2) AS ac FROM lineitem
-           UNION ALL
-           SELECT 'g2' AS variable, (l_partkey % 2) + (l_orderkey % 2) AS ac FROM lineitem)
-         SELECT variable,
-           CAST(count(ac) AS BIGINT) AS n_obs,
-           CAST(sum(CASE WHEN ac = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_hom_ref,
-           CAST(sum(CASE WHEN ac = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_het,
-           CAST(sum(CASE WHEN ac = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_hom_alt,
-           CAST(0 AS BIGINT) AS n_missing,
-           round(sum(ac) / (2.0 * count(ac)), 6) AS alt_freq,
-           round(least(sum(ac) / (2.0 * count(ac)), 1 - sum(ac) / (2.0 * count(ac))), 6) AS maf
-         FROM melted GROUP BY variable ORDER BY variable""",
-
-    "genotype_hwe" ->
-      // replays hweTest's arithmetic left-to-right: expected counts from
-      // the observed allele frequency, 1-df chi2, A-S 7.1.26 erfc p-value
-      """WITH melted AS (
-           SELECT 'g1' AS variable, (l_linenumber % 2) + (l_suppkey % 2) AS ac FROM lineitem
-           UNION ALL
-           SELECT 'g2' AS variable, (l_partkey % 2) + (l_orderkey % 2) AS ac FROM lineitem),
-         c AS (SELECT variable,
-             CAST(count(ac) AS BIGINT) AS n_obs,
-             CAST(sum(CASE WHEN ac = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_hom_ref,
-             CAST(sum(CASE WHEN ac = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_het,
-             CAST(sum(CASE WHEN ac = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_hom_alt,
-             sum(ac) AS aa
-           FROM melted GROUP BY 1),
-         s AS (SELECT *, CAST(aa AS DOUBLE) / (2.0 * CAST(n_obs AS DOUBLE)) AS p FROM c),
-         x AS (SELECT *, 1.0 - p AS q FROM s),
-         ch AS (SELECT *,
-             (CAST(n_hom_ref AS DOUBLE) - CAST(n_obs AS DOUBLE) * q * q)
-               * (CAST(n_hom_ref AS DOUBLE) - CAST(n_obs AS DOUBLE) * q * q)
-               / (CAST(n_obs AS DOUBLE) * q * q)
-           + (CAST(n_het AS DOUBLE) - 2.0 * CAST(n_obs AS DOUBLE) * p * q)
-               * (CAST(n_het AS DOUBLE) - 2.0 * CAST(n_obs AS DOUBLE) * p * q)
-               / (2.0 * CAST(n_obs AS DOUBLE) * p * q)
-           + (CAST(n_hom_alt AS DOUBLE) - CAST(n_obs AS DOUBLE) * p * p)
-               * (CAST(n_hom_alt AS DOUBLE) - CAST(n_obs AS DOUBLE) * p * p)
-               / (CAST(n_obs AS DOUBLE) * p * p) AS chi2
-           FROM x),
-         z AS (SELECT *, sqrt(chi2 / 2.0) AS zz FROM ch),
-         tp AS (SELECT *, 1.0 / (1.0 + 0.3275911 * zz) AS tt FROM z),
-         pv AS (SELECT *, tt * (0.254829592 + tt * (-0.284496736 + tt * (1.421413741
-             + tt * (-1.453152027 + tt * 1.061405429)))) * exp(-zz * zz) AS hp FROM tp)
-         SELECT variable, n_obs, n_hom_ref, n_het, n_hom_alt,
-           round(p, 6) AS alt_freq, round(chi2, 6) AS hwe_chi2,
-           round(hp, 6) AS hwe_p, hp < 1e-6 AS hwe_fail
-         FROM pv ORDER BY variable""",
-
-    "join_interval" ->
-      """WITH e AS (SELECT event_id, user_id, event_type,
-             epoch_ns(ts) // 1000 AS t FROM events),
-         p AS (SELECT event_id AS purchase_id, user_id, t AS p_start,
-             t + 3600000000 AS p_end FROM e WHERE event_type = 'purchase'),
-         c AS (SELECT event_id AS click_id, user_id, t AS c_start,
-             t + 1800000000 AS c_end FROM e WHERE event_type = 'click')
-         SELECT p.purchase_id, CAST(count(*) AS BIGINT) AS n_overlap,
-           min(c.click_id) AS first_click
-         FROM p JOIN c ON p.user_id = c.user_id
-           AND p.p_start <= c.c_end AND c.c_start <= p.p_end
-         GROUP BY 1 ORDER BY 1""",
-
-    "dedup_stream_batch" ->
-      """WITH uni AS (SELECT * FROM events UNION ALL SELECT * FROM events),
-         d AS (SELECT DISTINCT event_id, ts, event_type FROM uni)
-         SELECT event_type, count(*) AS n FROM d GROUP BY 1 ORDER BY 1""",
-
-    "sessionize_events" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS ep
-                    FROM events WHERE user_id < 50),
-         g AS (SELECT user_id, ep,
-                 CASE WHEN ep - lag(ep) OVER (PARTITION BY user_id ORDER BY ep, event_id) > 1800
-                      THEN 1 ELSE 0 END AS new_session
-               FROM e),
-         s AS (SELECT user_id, sum(new_session) OVER (PARTITION BY user_id ORDER BY ep
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-               FROM g)
-         SELECT user_id, CAST(count(DISTINCT session_id) AS BIGINT) AS n_sessions,
-           count(*) AS n_events
-         FROM s GROUP BY 1 ORDER BY 1""",
-
-    "dedup_minhash_lsh" -> minhashOracleSql,
-    "dedup_minhash_star" -> minhashStarOracleSql,
-
-    "dedup_cluster_histogram" ->
-      // the star-edge CTEs + recursive reachability (the winnow_star
-      // oracle pattern) + the size histogram on top
-      s"""${minhashBandedCte.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         rp AS (SELECT b, slice, min(id) AS id1 FROM bd GROUP BY b, slice),
-         e AS (SELECT DISTINCT rp.id1, bd.id AS id2
-               FROM bd JOIN rp ON bd.b = rp.b AND bd.slice = rp.slice
-               WHERE bd.id <> rp.id1),
-         ed AS MATERIALIZED (
-           SELECT id1 AS src, id2 AS dst FROM e
-           UNION SELECT id2 AS src, id1 AS dst FROM e),
-         ids AS (SELECT CAST(doc_id AS VARCHAR) AS id FROM documents
-                 WHERE doc_id < 200),
-         reach AS (
-           SELECT id, id AS node FROM ids
-           UNION
-           SELECT r.id, ed.dst AS node FROM reach r JOIN ed ON ed.src = r.node),
-         comp AS (SELECT id, min(node) AS component FROM reach GROUP BY id),
-         sz AS (SELECT component, CAST(count(*) AS BIGINT) AS size
-                FROM comp GROUP BY 1)
-         SELECT size, CAST(count(*) AS BIGINT) AS n_clusters
-         FROM sz GROUP BY 1 ORDER BY 1""",
-
-    "dedup_source_report" ->
-      """WITH base AS (
-           SELECT source, text FROM documents WHERE source IS NOT NULL
-           UNION ALL
-           SELECT source, text FROM documents
-           WHERE source IS NOT NULL AND doc_id < 30),
-         f AS (SELECT source,
-             md5(trim(regexp_replace(lower(text), '[ \t\n\x0B\f\r]+', ' ', 'g'))) AS f
-           FROM base)
-         SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(count(DISTINCT f) AS BIGINT) AS n_unique,
-           round(CAST(count(*) - count(DISTINCT f) AS DOUBLE) / count(*), 6)
-             AS dup_rate
-         FROM f GROUP BY 1 ORDER BY 1""",
-    "dedup_simhash" -> simhashOracleSql,
-    "dedup_image_dhash" -> imageDhashOracleSql,
-    "dedup_image_phash" -> imagePhashOracleSql,
-    "ann_lsh_topk" -> lshOracleSql,
-    "ann_recall_eval" -> annRecallOracleSql,
-
-    "ann_hard_negatives_ivf" -> annHardNegativesIvfOracleSql,
-
-    "ann_ivf_topk" -> ivfTopkOracleSql,
-
-    "ann_pq_topk" -> pqTopkOracleSql,
-
-    "ann_ivfpq_topk" -> ivfPqTopkOracleSql,
-    "ann_knn_graph" -> ivfGraphOracleSql,
-    "ann_label_audit_graph" -> labelAuditGraphOracleSql,
-    "ann_semantic_dedup" -> semdedupOracleSql,
-
-    "dedup_semdedup" ->
-      """WITH base AS (
-           SELECT vec_id, embedding FROM embeddings
-           UNION ALL
-           SELECT vec_id + 100000, embedding FROM embeddings WHERE vec_id < 30),
-         init AS (
-           SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid,
-                  CAST(embedding AS DOUBLE[]) AS c
-           FROM (SELECT vec_id, embedding FROM base ORDER BY vec_id LIMIT 8)),
-         d0 AS (
-           SELECT e.vec_id, e.embedding, i.cid,
-             list_sum(list_transform(range(64),
-               r2 -> (CAST(e.embedding AS DOUBLE[])[r2+1] - i.c[r2+1])^2)) AS dist
-           FROM base e CROSS JOIN init i),
-         a AS (
-           SELECT vec_id, embedding, cid FROM (
-             SELECT *, row_number() OVER (
-               PARTITION BY vec_id ORDER BY dist, cid) AS rn FROM d0)
-           WHERE rn = 1),
-         p AS (SELECT x.vec_id AS id1, y.vec_id AS id2,
-                 x.embedding AS v1, y.embedding AS v2
-               FROM a x JOIN a y ON x.cid = y.cid AND x.vec_id < y.vec_id),
-         -- order-pinned index folds (list_transform preserves index
-         -- order; the unordered GROUP-BY-over-range form it replaced
-         -- could flip a near-threshold cosine nondeterministically)
-         dots AS (SELECT id1, id2,
-             list_sum(list_transform(range(64),
-               r -> CAST(v1[r + 1] AS DOUBLE) * CAST(v2[r + 1] AS DOUBLE))) AS d,
-             list_sum(list_transform(range(64),
-               r -> CAST(v1[r + 1] AS DOUBLE) ^ 2)) AS n1,
-             list_sum(list_transform(range(64),
-               r -> CAST(v2[r + 1] AS DOUBLE) ^ 2)) AS n2
-           FROM p),
-         dr AS (SELECT DISTINCT id2 FROM dots
-                WHERE round(d / (sqrt(n1) * sqrt(n2)), 6) >= 0.45)
-         SELECT a.vec_id, CAST(a.cid AS INT) AS cluster_id FROM a
-         WHERE a.vec_id NOT IN (SELECT id2 FROM dr)
-         ORDER BY a.vec_id""",
-
-    "ann_knn_classify" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 50),
-         c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-         dots AS (
-           SELECT query_id, neighbor_id,
-             sum(CAST(qv[r.range + 1] AS DOUBLE) * CAST(cv[r.range + 1] AS DOUBLE)) AS d,
-             sum(CAST(qv[r.range + 1] AS DOUBLE) ^ 2) AS nq,
-             sum(CAST(cv[r.range + 1] AS DOUBLE) ^ 2) AS nc
-           FROM q CROSS JOIN c CROSS JOIN range(64) r
-           WHERE query_id <> neighbor_id GROUP BY 1, 2),
-         scored AS (SELECT query_id, neighbor_id, round(d / (sqrt(nq) * sqrt(nc)), 6) AS cosine
-                    FROM dots),
-         ranked AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                      ORDER BY cosine DESC, neighbor_id) AS rank FROM scored),
-         votes AS (SELECT r.query_id, e.label AS l,
-                     count(*) AS votes, max(r.cosine) AS best_cosine
-                   FROM ranked r JOIN embeddings e ON e.vec_id = r.neighbor_id
-                   WHERE r.rank <= 5 GROUP BY 1, 2),
-         best AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                    ORDER BY votes DESC, best_cosine DESC, l) AS rr FROM votes)
-         SELECT query_id, l AS predicted_label, votes, best_cosine
-         FROM best WHERE rr = 1 ORDER BY query_id""",
-
-    "ann_label_audit" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 100),
-         c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-         dots AS (
-           SELECT query_id, neighbor_id,
-             sum(CAST(qv[r.range + 1] AS DOUBLE) * CAST(cv[r.range + 1] AS DOUBLE)) AS d,
-             sum(CAST(qv[r.range + 1] AS DOUBLE) ^ 2) AS nq,
-             sum(CAST(cv[r.range + 1] AS DOUBLE) ^ 2) AS nc
-           FROM q CROSS JOIN c CROSS JOIN range(64) r
-           WHERE query_id <> neighbor_id GROUP BY 1, 2),
-         scored AS (SELECT query_id, neighbor_id, round(d / (sqrt(nq) * sqrt(nc)), 6) AS cosine
-                    FROM dots),
-         ranked AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                      ORDER BY cosine DESC, neighbor_id) AS rank FROM scored),
-         votes AS (SELECT r.query_id, e.label AS l,
-                     count(*) AS votes, max(r.cosine) AS best_cosine
-                   FROM ranked r JOIN embeddings e ON e.vec_id = r.neighbor_id
-                   WHERE r.rank <= 5 GROUP BY 1, 2),
-         best AS (SELECT *, row_number() OVER (PARTITION BY query_id
-                    ORDER BY votes DESC, best_cosine DESC, l) AS rr FROM votes),
-         pred AS (SELECT query_id, l AS p FROM best WHERE rr = 1)
-         SELECT t.label, count(*) AS n,
-           CAST(sum(CASE WHEN pred.p = t.label THEN 1 ELSE 0 END) AS BIGINT) AS n_agree,
-           round(sum(CASE WHEN pred.p = t.label THEN 1 ELSE 0 END) * 1.0 / count(*), 6) AS agree_rate
-         FROM pred JOIN embeddings t ON t.vec_id = pred.query_id
-         GROUP BY 1 ORDER BY 1""",
-
-    "dedup_ngram_jaccard" ->
-      // set-of-4-grams jaccard on the raw strings — equivalent to the Spark
-      // side's hashed-shingle sets as long as polyHash is collision-free on
-      // the corpus (it is; a collision would show up as a hash mismatch here)
-      """WITH d AS (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-                    FROM documents WHERE doc_id < 100),
-         sh AS (SELECT doc_id, list_distinct(CASE WHEN length(t) <= 4 THEN [t]
-                  ELSE list_transform(range(length(t) - 3), i -> substr(t, CAST(i AS INT) + 1, 4)) END) AS s
-                FROM d)
-         SELECT a.doc_id AS id1, b.doc_id AS id2,
-           round(len(list_intersect(a.s, b.s)) * 1.0 / len(list_distinct(list_concat(a.s, b.s))), 6) AS jaccard
-         FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1
-         ORDER BY id1, id2""",
-
-    "dedup_containment" ->
-      // same shingle-set replay as dedup_ngram_jaccard; union size derived
-      // as |A|+|B|-|A∩B| exactly like the Spark side
-      """WITH d AS (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-                    FROM documents WHERE doc_id < 100),
-         sh AS (SELECT doc_id, list_distinct(CASE WHEN length(t) <= 4 THEN [t]
-                  ELSE list_transform(range(length(t) - 3), i -> substr(t, CAST(i AS INT) + 1, 4)) END) AS s
-                FROM d),
-         p AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
-                 CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) AS i,
-                 CAST(len(a.s) AS DOUBLE) AS n1, CAST(len(b.s) AS DOUBLE) AS n2
-               FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1)
-         SELECT id1, id2,
-           round(i / n1, 6) AS containment1,
-           round(i / n2, 6) AS containment2,
-           round(i / (n1 + n2 - i), 6) AS jaccard
-         FROM p ORDER BY id1, id2""",
-
-    "dedup_components" ->
-      // the pair graph here is the consecutive-id chain, so components are
-      // maximal runs of adjacent verified pairs — expressible exactly via
-      // a run-break cumulative sum (general CC is not needed for the oracle)
-      """WITH d AS (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-                    FROM documents WHERE doc_id < 100),
-         sh AS (SELECT doc_id, list_distinct(CASE WHEN length(t) <= 4 THEN [t]
-                  ELSE list_transform(range(length(t) - 3), i -> substr(t, CAST(i AS INT) + 1, 4)) END) AS s
-                FROM d),
-         j AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
-                 len(list_intersect(a.s, b.s)) * 1.0 / len(list_distinct(list_concat(a.s, b.s))) AS jac
-               FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1),
-         e AS (SELECT id1, id2 FROM j WHERE jac >= 0.3),
-         n AS (SELECT DISTINCT id FROM (SELECT id1 AS id FROM e UNION ALL SELECT id2 AS id FROM e)),
-         m AS (SELECT id, CASE WHEN EXISTS (SELECT 1 FROM e WHERE e.id1 = n.id - 1 AND e.id2 = n.id)
-                 THEN 0 ELSE 1 END AS brk FROM n),
-         r AS (SELECT id, sum(brk) OVER (ORDER BY id) AS grp FROM m)
-         SELECT CAST(id AS BIGINT) AS id,
-           CAST(min(id) OVER (PARTITION BY grp) AS BIGINT) AS component
-         FROM r ORDER BY id""",
-
-    "dedup_keep_best" ->
-      // same run-break components replay as dedup_components, plus the
-      // quality argmax: keeper = (length(t) DESC, string-id ASC) row_number 1
-      """WITH d AS (SELECT doc_id, trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
-                    FROM documents WHERE doc_id < 100),
-         sh AS (SELECT doc_id, list_distinct(CASE WHEN length(t) <= 4 THEN [t]
-                  ELSE list_transform(range(length(t) - 3), i -> substr(t, CAST(i AS INT) + 1, 4)) END) AS s
-                FROM d),
-         j AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
-                 len(list_intersect(a.s, b.s)) * 1.0 / len(list_distinct(list_concat(a.s, b.s))) AS jac
-               FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1),
-         e AS (SELECT id1, id2 FROM j WHERE jac >= 0.3),
-         n AS (SELECT DISTINCT id FROM (SELECT id1 AS id FROM e UNION ALL SELECT id2 AS id FROM e)),
-         m AS (SELECT id, CASE WHEN EXISTS (SELECT 1 FROM e WHERE e.id1 = n.id - 1 AND e.id2 = n.id)
-                 THEN 0 ELSE 1 END AS brk FROM n),
-         r AS (SELECT id, sum(brk) OVER (ORDER BY id) AS grp FROM m),
-         comp AS (SELECT id, min(id) OVER (PARTITION BY grp) AS component FROM r),
-         membr AS (SELECT c.id, c.component, length(d.t) AS q FROM comp c JOIN d ON d.doc_id = c.id),
-         win AS (SELECT component, id AS winner FROM (
-                   SELECT id, component, row_number() OVER (PARTITION BY component
-                     ORDER BY q DESC, CAST(id AS VARCHAR)) AS rn FROM membr) WHERE rn = 1),
-         losers AS (SELECT mb.id FROM membr mb JOIN win w ON w.component = mb.component
-                    WHERE mb.id <> w.winner)
-         SELECT CAST(d.doc_id AS BIGINT) AS doc_id,
-           CAST(coalesce(w.component, d.doc_id) AS BIGINT) AS component,
-           CAST(length(d.t) AS BIGINT) AS quality
-         FROM d
-         LEFT JOIN losers l ON l.id = d.doc_id
-         LEFT JOIN win w ON w.winner = d.doc_id
-         WHERE l.id IS NULL
-         ORDER BY doc_id""",
-
-    "dedup_exact" ->
-      """WITH fp AS (SELECT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS f
-                     FROM documents),
-         grp AS (SELECT f, count(*) AS n FROM fp GROUP BY 1)
-         SELECT count(*) AS n_groups, CAST(sum(n) AS BIGINT) AS n_docs,
-           CAST(sum(CASE WHEN n > 1 THEN n - 1 ELSE 0 END) AS BIGINT) AS n_dupes FROM grp""",
-
-    "dedup_exact_against" ->
-      """WITH known AS (SELECT DISTINCT md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS f
-             FROM documents WHERE doc_id < 250)
-         SELECT doc_id, source FROM documents
-         WHERE doc_id >= 250
-           AND md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) NOT IN
-             (SELECT f FROM known)
-         ORDER BY doc_id""",
-
-    "decon_semantic" ->
-      """WITH t AS (SELECT vec_id AS id, embedding AS tv FROM embeddings WHERE vec_id >= 100),
-         e AS (SELECT vec_id AS eid, embedding AS ev FROM embeddings WHERE vec_id < 20),
-         dots AS (
-           SELECT id, eid,
-             sum(CAST(tv[r.range + 1] AS DOUBLE) * CAST(ev[r.range + 1] AS DOUBLE)) AS d,
-             sum(CAST(tv[r.range + 1] AS DOUBLE) ^ 2) AS nt,
-             sum(CAST(ev[r.range + 1] AS DOUBLE) ^ 2) AS ne
-           FROM t CROSS JOIN e CROSS JOIN range(64) r GROUP BY 1, 2),
-         scored AS (SELECT id, eid, d / (sqrt(nt) * sqrt(ne)) AS cos FROM dots),
-         best AS (SELECT id, eid, cos, row_number() OVER (PARTITION BY id
-             ORDER BY cos DESC, eid ASC) AS rn FROM scored)
-         SELECT id, eid AS best_eval_id, round(cos, 6) AS best_cosine,
-           cos >= 0.4 AS contaminated
-         FROM best WHERE rn = 1 ORDER BY id""",
-
-    "dedup_embedding_cosine" ->
-      """WITH pairs AS (
-           SELECT a.vec_id AS id1, b.vec_id AS id2, a.embedding AS v1, b.embedding AS v2
-           FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1),
-         dots AS (
-           SELECT id1, id2,
-             sum(CAST(v1[r.range + 1] AS DOUBLE) * CAST(v2[r.range + 1] AS DOUBLE)) AS d,
-             sum(CAST(v1[r.range + 1] AS DOUBLE) ^ 2) AS n1,
-             sum(CAST(v2[r.range + 1] AS DOUBLE) ^ 2) AS n2
-           FROM pairs CROSS JOIN range(64) r GROUP BY 1, 2)
-         SELECT id1, id2, round(d / (sqrt(n1) * sqrt(n2)), 6) AS cosine
-         FROM dots ORDER BY id1""",
-
-    "ann_mmr_rerank" -> mmrOracleSql(k = 4, m = 8),
-
-    "ann_hard_negatives" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv, label
-             FROM embeddings WHERE vec_id < 5),
-         c AS (SELECT vec_id AS neighbor_id, embedding AS cv,
-             label AS neighbor_label FROM embeddings),
-         dots AS (
-           SELECT query_id, q.label, neighbor_id, neighbor_label,
-             sum(CAST(qv[r.range + 1] AS DOUBLE) * CAST(cv[r.range + 1] AS DOUBLE)) AS d,
-             sum(CAST(qv[r.range + 1] AS DOUBLE) ^ 2) AS nq,
-             sum(CAST(cv[r.range + 1] AS DOUBLE) ^ 2) AS nc
-           FROM q CROSS JOIN c CROSS JOIN range(64) r
-           WHERE query_id <> neighbor_id
-             AND neighbor_label IS DISTINCT FROM q.label
-           GROUP BY 1, 2, 3, 4),
-         scored AS (SELECT query_id, label, neighbor_id, neighbor_label,
-             round(d / (sqrt(nq) * sqrt(nc)), 6) AS cosine FROM dots),
-         ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-             ORDER BY cosine DESC, neighbor_id) AS INT) AS rank FROM scored)
-         SELECT query_id, label, neighbor_id, neighbor_label, cosine, rank
-         FROM ranked WHERE rank <= 3 ORDER BY query_id, rank""",
-
-    "sample_kcenter" -> kCenterOracleSql(5),
-
-    "ann_matryoshka_topk" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
-         c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-         coarse AS (
-           SELECT query_id, neighbor_id,
-             sum(CAST(qv[r.range + 1] AS DOUBLE) * CAST(cv[r.range + 1] AS DOUBLE)) AS d,
-             sum(CAST(qv[r.range + 1] AS DOUBLE) ^ 2) AS nq,
-             sum(CAST(cv[r.range + 1] AS DOUBLE) ^ 2) AS nc
-           FROM q CROSS JOIN c CROSS JOIN range(16) r
-           WHERE query_id <> neighbor_id GROUP BY 1, 2),
-         cs AS (SELECT query_id, neighbor_id,
-             round(d / (sqrt(nq) * sqrt(nc)), 6) AS coarse_cosine FROM coarse),
-         cr AS (SELECT *, row_number() OVER (PARTITION BY query_id
-             ORDER BY coarse_cosine DESC, neighbor_id) AS crank FROM cs),
-         cand AS (SELECT query_id, neighbor_id, coarse_cosine FROM cr WHERE crank <= 10),
-         ex AS (
-           SELECT cand.query_id, cand.neighbor_id, cand.coarse_cosine,
-             sum(CAST(qv[r.range + 1] AS DOUBLE) * CAST(cv[r.range + 1] AS DOUBLE)) AS d,
-             sum(CAST(qv[r.range + 1] AS DOUBLE) ^ 2) AS nq,
-             sum(CAST(cv[r.range + 1] AS DOUBLE) ^ 2) AS nc
-           FROM cand JOIN q USING (query_id) JOIN c USING (neighbor_id)
-           CROSS JOIN range(64) r GROUP BY 1, 2, 3),
-         es AS (SELECT query_id, neighbor_id, coarse_cosine,
-             round(d / (sqrt(nq) * sqrt(nc)), 6) AS cosine FROM ex),
-         rk AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-             ORDER BY cosine DESC, neighbor_id) AS INT) AS rank FROM es)
-         SELECT query_id, neighbor_id, coarse_cosine, cosine, rank FROM rk
-         WHERE rank <= 3 ORDER BY query_id, rank""",
-
-    "ann_bruteforce_topk" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 5),
-         c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-         dots AS (
-           SELECT query_id, neighbor_id,
-             sum(CAST(qv[r.range + 1] AS DOUBLE) * CAST(cv[r.range + 1] AS DOUBLE)) AS d,
-             sum(CAST(qv[r.range + 1] AS DOUBLE) ^ 2) AS nq,
-             sum(CAST(cv[r.range + 1] AS DOUBLE) ^ 2) AS nc
-           FROM q CROSS JOIN c CROSS JOIN range(64) r
-           WHERE query_id <> neighbor_id GROUP BY 1, 2),
-         scored AS (SELECT query_id, neighbor_id, round(d / (sqrt(nq) * sqrt(nc)), 6) AS cosine
-                    FROM dots),
-         ranked AS (SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-                      ORDER BY cosine DESC, neighbor_id) AS INT) AS rank FROM scored)
-         SELECT query_id, neighbor_id, cosine, rank FROM ranked
-         WHERE rank <= 3 ORDER BY query_id, rank""",
-
-    "text_fingerprint" ->
-      """SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-         FROM documents WHERE doc_id < 50 ORDER BY doc_id""",
-
-    "text_winnow" ->
-      s"""WITH ${winnowCtes("WHERE doc_id < 200")}
-         SELECT DISTINCT doc_id, pos, fp FROM sel ORDER BY doc_id, pos""",
-
-    "text_char_entropy" ->
-      """WITH d AS (SELECT doc_id, text FROM documents
-             WHERE doc_id < 200 AND text IS NOT NULL),
-         ch AS (SELECT doc_id, length(text) AS n,
-             list_transform(range(length(text)),
-               i -> substr(text, CAST(i AS INT) + 1, 1)) AS cs
-           FROM d),
-         e AS (SELECT doc_id, n, cs, list_sort(list_distinct(cs)) AS ds FROM ch),
-         s AS (SELECT doc_id, n, len(ds) AS n_distinct,
-             list_aggregate(list_transform(ds,
-               c -> CAST(len(list_filter(cs, x -> x = c)) AS DOUBLE)
-                    * ln(CAST(len(list_filter(cs, x -> x = c)) AS DOUBLE))),
-               'sum') AS t
-           FROM e)
-         SELECT doc_id, CAST(n AS BIGINT) AS n_chars,
-           CAST(n_distinct AS BIGINT) AS n_distinct,
-           round(CASE WHEN n > 0 THEN ln(CAST(n AS DOUBLE)) - t / n
-                      ELSE 0.0 END, 6) AS entropy_nats
-         FROM s ORDER BY doc_id""",
-
-    "dedup_winnow_pairs" ->
-      s"""WITH ${winnowCtes("")},
-         fs AS (SELECT CAST(doc_id AS VARCHAR) AS doc_id, fp FROM fps),
-         pairs AS (SELECT x.doc_id AS id1, y.doc_id AS id2,
-             CAST(count(*) AS BIGINT) AS shared
-           FROM fs x JOIN fs y ON x.fp = y.fp AND x.doc_id < y.doc_id
-           GROUP BY 1, 2 HAVING count(*) >= 8)
-         SELECT id1, id2, shared FROM pairs ORDER BY id1, id2""",
-
-    "dedup_winnow_star" ->
-      s"""WITH RECURSIVE ${winnowCtes("")},
-         dfq AS (SELECT fp, count(*) AS c FROM fps GROUP BY 1),
-         f2 AS (SELECT fps.doc_id, fps.fp FROM fps JOIN dfq USING (fp)
-                WHERE dfq.c <= 50),
-         pairs AS (SELECT x.doc_id AS i1, y.doc_id AS i2
-           FROM f2 x JOIN f2 y ON x.fp = y.fp AND x.doc_id < y.doc_id
-           GROUP BY 1, 2 HAVING count(*) >= 8),
-         e AS (SELECT CAST(i1 AS VARCHAR) AS id1, CAST(i2 AS VARCHAR) AS id2
-               FROM pairs),
-         ed AS MATERIALIZED (
-           SELECT id1 AS src, id2 AS dst FROM e
-           UNION SELECT id2 AS src, id1 AS dst FROM e),
-         ids AS (SELECT CAST(doc_id AS VARCHAR) AS id FROM documents),
-         reach AS (
-           SELECT id, id AS node FROM ids
-           UNION
-           SELECT r.id, ed.dst AS node FROM reach r JOIN ed ON ed.src = r.node)
-         SELECT id, min(node) AS component
-         FROM reach GROUP BY id ORDER BY id""",
-
-    "dedup_winnow_pairs_capped" ->
-      s"""WITH ${winnowCtes("")},
-         dfq AS (SELECT fp, count(*) AS c FROM fps GROUP BY 1),
-         f2 AS (SELECT CAST(fps.doc_id AS VARCHAR) AS doc_id, fps.fp
-                FROM fps JOIN dfq USING (fp) WHERE dfq.c <= 3),
-         pairs AS (SELECT x.doc_id AS id1, y.doc_id AS id2,
-             CAST(count(*) AS BIGINT) AS shared
-           FROM f2 x JOIN f2 y ON x.fp = y.fp AND x.doc_id < y.doc_id
-           GROUP BY 1, 2 HAVING count(*) >= 8)
-         SELECT id1, id2, shared FROM pairs ORDER BY id1, id2""",
-
-    "text_token_count" ->
-      """SELECT doc_id,
-           len(string_split_regex(trim(text), '\s+')) AS ws_tokens,
-           len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS re_tokens
-         FROM documents WHERE doc_id < 100 ORDER BY doc_id""",
-
-    "text_quality" ->
-      """WITH f AS (SELECT doc_id, text,
-             len(string_split_regex(trim(text), '\s+')) AS n_words,
-             length(text) AS n_chars,
-             len(regexp_extract_all(text, '[\.,;:!\?]')) AS punct,
-             len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-               x -> x IN ('the', 'a', 'of', 'and', 'to', 'in'))) AS stop
-           FROM documents WHERE doc_id < 100)
-         SELECT doc_id, n_words,
-           round(CASE WHEN n_words > 0 THEN (n_chars - (n_words - 1)) * 1.0 / n_words END, 6) AS mean_word_len,
-           round(CASE WHEN n_chars > 0 THEN punct * 1.0 / n_chars ELSE 0.0 END, 6) AS punct_ratio,
-           round(CASE WHEN n_words > 0 THEN stop * 1.0 / n_words ELSE 0.0 END, 6) AS stopword_ratio
-         FROM f ORDER BY doc_id""",
-
-    "text_zipf_fit" ->
-      """WITH w AS (SELECT doc_id,
-             unnest(string_split_regex(lower(trim(text)), '\s+')) AS word
-           FROM documents),
-         v AS (SELECT word, count(*) AS tf FROM w WHERE word <> ''
-               GROUP BY 1 ORDER BY tf DESC, word LIMIT 500),
-         r AS (SELECT ln(CAST(row_number() OVER (ORDER BY tf DESC, word)
-                   AS DOUBLE)) AS x,
-                 ln(CAST(tf AS DOUBLE)) AS y FROM v),
-         s AS (SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-                 sum(x * x) AS sxx, sum(x * y) AS sxy FROM r)
-         SELECT n AS n_terms,
-           round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6) AS slope,
-           round((sy - ((n * sxy - sx * sy) / (n * sxx - sx * sx)) * sx) / n, 6)
-             AS intercept
-         FROM s""",
-
-    "text_readability" ->
-      """WITH c AS (SELECT doc_id,
-             len(regexp_extract_all(lower(trim(text)), '[a-z0-9'']+')) AS n_words,
-             greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS n_sentences,
-             len(regexp_extract_all(lower(text), '[aeiouy]+')) AS n_syllables
-           FROM documents WHERE doc_id < 100)
-         SELECT doc_id, CAST(n_words AS INT) AS n_words,
-           CAST(n_sentences AS INT) AS n_sentences,
-           CAST(n_syllables AS INT) AS n_syllables,
-           CASE WHEN n_words > 0 THEN
-             round(CAST(0.39 AS DOUBLE) * n_words / n_sentences
-               + CAST(11.8 AS DOUBLE) * n_syllables / n_words
-               - CAST(15.59 AS DOUBLE), 4) END AS fk_grade
-         FROM c ORDER BY doc_id""",
-
-    "text_bigram_lm" ->
-      """WITH a AS (SELECT doc_id,
-             list_filter(string_split_regex(lower(trim(text)), '\s+'),
-               w -> w <> '') AS arr
-           FROM documents),
-         bg AS (SELECT doc_id, unnest(arr[1:len(arr)-1]) AS w1,
-                  unnest(arr[2:len(arr)]) AS w2 FROM a),
-         bt AS (SELECT w1, w2, count(*) AS c12 FROM bg GROUP BY 1, 2
-                ORDER BY c12 DESC, w1 ASC, w2 ASC LIMIT 2000),
-         cx AS (SELECT w1, count(*) AS c1 FROM bg GROUP BY 1),
-         btc AS (SELECT bt.w1, bt.w2, bt.c12, cx.c1 FROM bt JOIN cx USING (w1)),
-         wf AS (SELECT doc_id, unnest(arr) AS word FROM a),
-         top AS (SELECT word, count(*) AS cu FROM wf GROUP BY 1
-                 ORDER BY cu DESC, word ASC LIMIT 1000),
-         tot AS (SELECT count(*) AS t FROM wf),
-         vs AS (SELECT coalesce(sum(cu), 0) AS iv, count(*) AS k FROM top)
-         SELECT bg.doc_id, count(*) AS n_bigrams,
-           round(-sum(ln(
-               CAST(0.7 AS DOUBLE)
-                 * coalesce(CAST(btc.c12 AS DOUBLE) / btc.c1, CAST(0 AS DOUBLE))
-             + (CAST(1.0 AS DOUBLE) - CAST(0.7 AS DOUBLE))
-                 * ((CAST(coalesce(top.cu, t - iv) AS DOUBLE) + CAST(1.0 AS DOUBLE))
-                    / (t + CAST(1.0 AS DOUBLE) * (k + 1)))
-           )) / count(*), 6) AS avg_nll
-         FROM bg LEFT JOIN btc ON bg.w1 = btc.w1 AND bg.w2 = btc.w2
-         LEFT JOIN top ON bg.w2 = top.word
-         CROSS JOIN tot CROSS JOIN vs
-         GROUP BY bg.doc_id, t, iv, k ORDER BY bg.doc_id""",
-
-    "text_lm_perplexity" ->
-      """WITH w AS (SELECT doc_id,
-             unnest(string_split_regex(lower(trim(text)), '\s+')) AS word
-           FROM documents),
-         wf AS (SELECT doc_id, word FROM w WHERE word <> ''),
-         top AS (SELECT word, count(*) AS c FROM wf GROUP BY 1
-                 ORDER BY c DESC, word ASC LIMIT 1000),
-         tot AS (SELECT count(*) AS t FROM wf),
-         vs AS (SELECT coalesce(sum(c), 0) AS iv, count(*) AS k FROM top)
-         SELECT doc_id, count(*) AS n_tokens,
-           round(-sum(ln((CAST(coalesce(top.c, t - iv) AS DOUBLE) + CAST(1.0 AS DOUBLE))
-                 / (t + CAST(1.0 AS DOUBLE) * (k + 1)))) / count(*), 6) AS avg_nll
-         FROM wf LEFT JOIN top USING (word) CROSS JOIN tot CROSS JOIN vs
-         GROUP BY doc_id, t, iv, k ORDER BY doc_id""",
-
-    "text_langid" ->
-      """WITH toks AS (SELECT doc_id, text, string_split_regex(lower(trim(text)), '\s+') AS tk
-                       FROM documents WHERE doc_id < 100),
-         s AS (SELECT doc_id,
-             len(list_filter(tk, x -> x IN ('the','and','of','to','is','with'))) AS s_en,
-             len(list_filter(tk, x -> x IN ('el','la','de','que','los','una'))) AS s_es,
-             len(list_filter(tk, x -> x IN ('der','die','und','das','ist','nicht'))) AS s_de,
-             len(list_filter(tk, x -> x IN ('le','la','les','des','est','une'))) AS s_fr,
-             len(regexp_extract_all(text, '的')) + len(regexp_extract_all(text, '是'))
-               + len(regexp_extract_all(text, '了')) + len(regexp_extract_all(text, '在'))
-               + len(regexp_extract_all(text, '有')) + len(regexp_extract_all(text, '我')) AS s_zh
-           FROM toks),
-         m AS (SELECT *, greatest(s_en, s_es, s_de, s_fr, s_zh) AS mx FROM s)
-         SELECT doc_id,
-           CASE WHEN mx = 0 THEN 'und'
-                WHEN s_en = mx THEN 'en' WHEN s_es = mx THEN 'es'
-                WHEN s_de = mx THEN 'de' WHEN s_fr = mx THEN 'fr'
-                ELSE 'zh' END AS pred_lang
-         FROM m ORDER BY doc_id""",
-
-    "text_html_extract" ->
-      // the SAME backreference-free regex chain Text.htmlExtract emits,
-      // with DuckDB's explicit 'g' flag (Spark replaces globally by default)
-      """SELECT doc_id,
-           trim(regexp_replace(
-             replace(replace(replace(replace(replace(replace(
-               regexp_replace(
-                 regexp_replace(
-                   regexp_replace(
-                     regexp_replace(
-                       concat('<html><head><style>p{color:red}</style></head><body><h1>', source,
-                              '</h1><!-- crawl artifact --><p>', text,
-                              ' &amp; more&nbsp;soon</p><script>var x=1;</script></body></html>'),
-                       '(?is)<script[^>]*>.*?</script>', ' ', 'g'),
-                     '(?is)<style[^>]*>.*?</style>', ' ', 'g'),
-                   '(?s)<!--.*?-->', ' ', 'g'),
-                 '(?s)<[^>]*>', ' ', 'g'),
-               '&nbsp;', ' '), '&amp;', '&'), '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-             '[ \t\n\x0B\f\r]+', ' ', 'g')) AS clean_text
-         FROM documents WHERE doc_id < 100 ORDER BY doc_id""",
-
-    "text_url_extract" ->
-      s"""WITH $urlBodyCtes
-         SELECT lower(regexp_extract(url, '(?i)^https?://([^/?#]+)', 1)) AS host,
-           count(*) AS n_urls
-         FROM u GROUP BY 1 ORDER BY 1""",
-
-    "dedup_url_canonical" ->
-      s"""WITH $urlBodyCtes,
-         c1 AS (SELECT url, regexp_replace(url, '#.*$$', '', 'g') AS nf FROM u),
-         c2 AS (SELECT url,
-             lower(regexp_extract(nf, '^[^/]*//[^/?#]*', 0))
-               || regexp_replace(nf, '^[^/]*//[^/?#]*', '', 'g') AS lw FROM c1),
-         c3 AS (SELECT url, regexp_replace(regexp_replace(lw,
-             '([?&])(utm_[^&#]*&)+', '\\1', 'g'), '[?&]utm_[^&#]*$$', '', 'g') AS nu FROM c2),
-         c4 AS (SELECT url, regexp_replace(regexp_replace(nu,
-             '\\?$$', '', 'g'), '/$$', '', 'g') AS canonical_url FROM c3)
-         SELECT canonical_url, count(*) AS n_occurrences,
-           count(DISTINCT url) AS n_raw_forms
-         FROM c4 GROUP BY 1 ORDER BY 1""",
-
-    // full-chain replay: the dedup_substring_cut CTEs (on the lang-filtered
-    // corpus), the token floor, exact dedup via md5 of the rebuilt text
-    // (already canonical: lowercased words joined by single spaces, so
-    // fingerprint == md5(text_dedup)), then the per-language report
-    "pipeline_dedup_e2e" ->
-      """WITH d AS (SELECT doc_id,
-             list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> length(x) > 0) AS w
-           FROM documents WHERE lang IS NOT NULL),
-         o AS (SELECT doc_id, u.start AS start, u.g AS g
-           FROM (SELECT doc_id,
-               unnest(list_transform(range(CASE WHEN len(w) >= 15 THEN len(w) - 14 ELSE 0 END),
-                 i -> {'start': CAST(i AS INT),
-                       'g': array_to_string(w[CAST(i AS INT) + 1 : CAST(i AS INT) + 15], ' ')})) AS u
-             FROM d)),
-         cd AS (SELECT g, min(doc_id) AS keeper FROM o GROUP BY g
-           HAVING min(doc_id) <> max(doc_id)),
-         rm AS (SELECT doc_id, list(start) AS starts
-           FROM o JOIN cd USING (g) WHERE doc_id <> keeper GROUP BY doc_id),
-         k AS (SELECT d.doc_id, d.w,
-             list_filter(d.w, (x, i) -> len(list_filter(coalesce(rm.starts, []),
-               s -> i - 1 >= s AND i - 1 < s + 15)) = 0) AS kept
-           FROM d LEFT JOIN rm USING (doc_id)),
-         cut AS (SELECT doc_id, len(w) AS n_words, len(w) - len(kept) AS n_removed,
-             array_to_string(kept, ' ') AS text_dedup
-           FROM k),
-         flo AS (SELECT * FROM cut WHERE n_words - n_removed >= 10),
-         ex AS (SELECT flo.*, row_number() OVER (PARTITION BY md5(text_dedup)
-             ORDER BY doc_id) AS rn FROM flo),
-         surv AS (SELECT * FROM ex WHERE rn = 1)
-         SELECT dd.lang, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(surv.n_words - surv.n_removed) AS BIGINT) AS n_tokens,
-           CAST(sum(surv.n_removed) AS BIGINT) AS n_tokens_cut
-         FROM surv JOIN documents dd ON dd.doc_id = surv.doc_id
-         GROUP BY 1 ORDER BY 1""",
-
-    "pipeline_incremental_e2e" ->
-      """WITH dy AS (SELECT event_id AS doc_id, strftime(min(ts), '%Y-%m-%d') AS day
-           FROM events GROUP BY 1),
-         base AS (SELECT d.doc_id, d.source, d.text, dy.day
-           FROM documents d JOIN dy USING (doc_id) WHERE d.source IS NOT NULL),
-         prior AS MATERIALIZED (SELECT * FROM base WHERE day < '2024-01-02'),
-         crawl AS MATERIALIZED (
-           SELECT doc_id, source, text, day FROM base WHERE day >= '2024-01-02'
-           UNION ALL
-           SELECT doc_id + 100000, source, text, '2024-01-02' FROM prior
-           WHERE doc_id < 40
-           UNION ALL
-           SELECT doc_id + 200000, source, text, day FROM base
-           WHERE day >= '2024-01-02' AND doc_id % 5 = 0),
-         pfp AS (SELECT DISTINCT md5(trim(regexp_replace(lower(text),
-             '[ \t\n\x0B\f\r]+', ' ', 'g'))) AS fp FROM prior),
-         cfp AS (SELECT doc_id, source, text,
-             md5(trim(regexp_replace(lower(text), '[ \t\n\x0B\f\r]+', ' ', 'g'))) AS fp
-           FROM crawl),
-         flags AS MATERIALIZED (SELECT c.doc_id, c.source, c.text, c.fp,
-             CASE WHEN pfp.fp IS NOT NULL THEN 1 ELSE 0 END AS dup
-           FROM cfp c LEFT JOIN pfp ON pfp.fp = c.fp),
-         ph(phrase) AS (
-           SELECT * FROM (VALUES ('slow scan'), ('fast merge'), ('key agg'),
-             ('customer data'), ('spark join'), ('window sort'),
-             ('stream filter'), ('data leak probe')) v(phrase)),
-         nrm AS (SELECT doc_id,
-             trim(regexp_replace(lower(text), '[ \t\n\x0B\f\r]+', ' ', 'g')) AS norm
-           FROM flags WHERE dup = 0),
-         blk AS (SELECT DISTINCT doc_id FROM nrm CROSS JOIN ph
-                 WHERE contains(' ' || norm || ' ', ' ' || phrase || ' ')),
-         pg AS (SELECT DISTINCT g FROM (
-             SELECT unnest(list_distinct(list_transform(
-                 range(CASE WHEN len(w) >= 3 THEN len(w) - 2 ELSE 0 END),
-                 i -> array_to_string(w[CAST(i AS INT) + 1 : CAST(i AS INT) + 3], ' ')))) AS g
-             FROM (SELECT list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                     x -> length(x) > 0) AS w FROM prior))),
-         cg AS (SELECT DISTINCT source, g FROM (
-             SELECT source, unnest(list_distinct(list_transform(
-                 range(CASE WHEN len(w) >= 3 THEN len(w) - 2 ELSE 0 END),
-                 i -> array_to_string(w[CAST(i AS INT) + 1 : CAST(i AS INT) + 3], ' ')))) AS g
-             FROM (SELECT source, list_filter(string_split_regex(lower(trim(text)), '\s+'),
-                     x -> length(x) > 0) AS w FROM crawl))),
-         nov AS (SELECT source, CAST(count(*) AS BIGINT) AS n_grams,
-             CAST(sum(CASE WHEN pg.g IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_novel
-           FROM cg LEFT JOIN pg USING (g) GROUP BY 1),
-         rep AS (SELECT source, CAST(count(*) AS BIGINT) AS n_crawled,
-             CAST(count(DISTINCT fp) AS BIGINT) AS n_unique,
-             CAST(sum(dup) AS BIGINT) AS n_dup_index,
-             CAST(sum(CASE WHEN dup = 0 AND blk.doc_id IS NOT NULL
-               THEN 1 ELSE 0 END) AS BIGINT) AS n_blocked,
-             CAST(sum(CASE WHEN dup = 0 AND blk.doc_id IS NULL
-               THEN 1 ELSE 0 END) AS BIGINT) AS n_accepted
-           FROM flags LEFT JOIN blk USING (doc_id) GROUP BY 1)
-         SELECT rep.source, n_crawled, n_unique,
-           round(CAST(n_crawled - n_unique AS DOUBLE) / n_crawled, 6) AS dup_rate,
-           n_dup_index, n_blocked, n_accepted,
-           CAST(coalesce(nov.n_grams, 0) AS BIGINT) AS n_grams,
-           CAST(coalesce(nov.n_novel, 0) AS BIGINT) AS n_novel,
-           round(CASE WHEN coalesce(nov.n_grams, 0) > 0
-             THEN CAST(nov.n_novel AS DOUBLE) / nov.n_grams ELSE 0.0 END, 6) AS novelty
-         FROM rep LEFT JOIN nov USING (source) ORDER BY source""",
-
-    // the multimodal release chain replayed engine-independently: the
-    // procedural 16x16 pixel corpus (BMP + exact-pixel PNG twins under
-    // id+100000, the REAL libwebp lossy-VP8 fixture under id+200000 —
-    // byte-identical twins that all merge into one component), luma grid
-    // at the dhash 9x8 cells, fixed-point means, horizontal-diff bits,
-    // 16-bit bands, hamming-0 banded pairs, recursive-CTE components,
-    // then the per-source report algebra with the text_quality caption
-    // tokens. The fixture's dhash bits are LITERALS derived from
-    // libwebp's own yuv dump (tools/lossy_fixture_dhash.py — BT.601 +
-    // grid + diff arithmetic in python, independent of graft; Vp8Spec
-    // pins the graft decode byte-equal to that dump).
-    "pipeline_multimodal_e2e" ->
-      s"""WITH RECURSIVE d AS (
-           SELECT doc_id, source, text FROM documents WHERE doc_id < 120),
-         imgs AS (
-           SELECT doc_id AS base, doc_id AS img, 1 AS dec FROM d
-           UNION ALL SELECT doc_id, doc_id + 100000, 1 FROM d WHERE doc_id < 40
-           UNION ALL SELECT doc_id, doc_id + 200000, 1 FROM d WHERE doc_id % 3 = 0),
-         px AS (SELECT img, base, x.range AS x, y.range AS y
-                FROM imgs, range(16) x, range(16) y
-                WHERE dec = 1 AND img < 200000),
-         pv AS (SELECT img, x, y,
-                  1000 * (((x*(3 + base % 5) + y*(2 + base % 7)
-                    + ((x*y + base) % 23) * 11) % 208) + 24) AS lum
-                FROM px),
-         grid AS (SELECT img, (y*8)//16 AS gy, (x*9)//16 AS gx,
-                    CAST((sum(lum)*65536)//count(*) AS BIGINT) AS g
-                  FROM pv GROUP BY 1, 2, 3),
-         pbits AS (SELECT a.img, a.gy*8 + a.gx AS idx,
-                    CASE WHEN b.g > a.g THEN 1 ELSE 0 END AS bit
-                  FROM grid a JOIN grid b
-                    ON b.img = a.img AND b.gy = a.gy AND b.gx = a.gx + 1
-                  WHERE a.gx < 8),
-         lb(idx, bit) AS (VALUES $lossyFixtureDhashBits),
-         bits AS (SELECT img, idx, bit FROM pbits
-                  UNION ALL
-                  SELECT i.img, lb.idx, lb.bit FROM imgs i, lb
-                  WHERE i.img >= 200000),
-         $imageBandCtes,
-         e AS (SELECT id1, id2 FROM cd WHERE hamming <= 0),
-         ed AS MATERIALIZED (
-           SELECT id1 AS src, id2 AS dst FROM e
-           UNION SELECT id2 AS src, id1 AS dst FROM e),
-         allid AS (SELECT CAST(img AS VARCHAR) AS id, base, dec FROM imgs),
-         reach AS (
-           SELECT id, id AS node FROM allid
-           UNION
-           SELECT r.id, ed.dst AS node FROM reach r JOIN ed ON ed.src = r.node),
-         comp AS (SELECT id, min(node) AS component FROM reach GROUP BY id),
-         att AS (SELECT a.id, a.base, a.dec, c.component, d.source
-                 FROM allid a JOIN comp c USING (id)
-                 JOIN d ON d.doc_id = a.base),
-         perimg AS (SELECT source,
-             CAST(count(*) AS BIGINT) AS n_images,
-             CAST(sum(dec) AS BIGINT) AS n_decoded,
-             CAST(sum(CASE WHEN id <> component THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_dup_merged,
-             CAST(count(DISTINCT component) AS BIGINT) AS n_groups
-           FROM att GROUP BY 1),
-         cap AS (SELECT source,
-             CAST(sum(CASE WHEN len(string_split_regex(trim(text), '\\s+')) >= 40
-               THEN 1 ELSE 0 END) AS BIGINT) AS n_caption_pass,
-             count(*) AS nb
-           FROM d GROUP BY 1)
-         SELECT p.source, n_images, n_decoded, n_dup_merged, n_groups,
-           n_caption_pass,
-           round(CAST(n_caption_pass AS DOUBLE) / nb, 6) AS release_rate
-         FROM perimg p JOIN cap USING (source) ORDER BY source""",
-
-    "pipeline_policy_e2e" ->
-      s"""WITH docs AS (SELECT * FROM documents WHERE lang IS NOT NULL),
-         ph(phrase) AS (
-           SELECT * FROM (VALUES ('slow scan'), ('fast merge'), ('key agg'),
-             ('customer data'), ('spark join'), ('window sort'),
-             ('stream filter'), ('data leak probe')) v(phrase)),
-         nrm AS (SELECT doc_id,
-             trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')) AS norm
-           FROM docs),
-         pm AS (SELECT DISTINCT doc_id FROM nrm CROSS JOIN ph
-                WHERE contains(' ' || norm || ' ', ' ' || phrase || ' ')),
-         ${winnowCtes("WHERE lang IS NOT NULL")},
-         dfq AS (SELECT fp, count(*) AS c FROM fps GROUP BY 1),
-         f2 AS (SELECT CAST(fps.doc_id AS VARCHAR) AS doc_id, fps.fp
-                FROM fps JOIN dfq USING (fp) WHERE dfq.c <= 50),
-         pairs AS (SELECT x.doc_id AS id1, y.doc_id AS id2, count(*) AS shared
-                   FROM f2 x JOIN f2 y ON x.fp = y.fp AND x.doc_id < y.doc_id
-                   GROUP BY 1, 2 HAVING count(*) >= 8),
-         dup AS (SELECT DISTINCT CAST(id2 AS BIGINT) AS doc_id FROM pairs),
-         v AS (SELECT d0.doc_id, d0.lang,
-                 CASE WHEN pm.doc_id IS NOT NULL THEN 'phrase_blocked'
-                      WHEN dup.doc_id IS NOT NULL THEN 'dup_candidate'
-                      ELSE 'clean' END AS verdict
-               FROM docs d0
-               LEFT JOIN pm USING (doc_id) LEFT JOIN dup USING (doc_id))
-         SELECT lang, verdict, CAST(count(*) AS BIGINT) AS n_docs
-         FROM v GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "pipeline_budget_e2e" ->
-      """WITH gated AS (SELECT doc_id, text, lang,
-             CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_words
-           FROM documents WHERE lang IS NOT NULL),
-         g2 AS (SELECT * FROM gated WHERE n_words >= 20),
-         fp AS (SELECT *, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fpr
-           FROM g2),
-         keep AS (SELECT fpr, min(doc_id) AS kid FROM fp GROUP BY 1),
-         surv AS (SELECT fp.* FROM fp
-           JOIN keep ON fp.fpr = keep.fpr AND fp.doc_id = keep.kid),
-         d AS (SELECT lang AS domain, CAST(sum(n_words) AS BIGINT) AS n
-           FROM surv GROUP BY 1),
-         p AS (SELECT CAST((SELECT sum(n) FROM d) // 2 AS BIGINT) AS budget),
-         o AS (SELECT domain, n, CAST(n * 4 AS BIGINT) AS cap,
-             row_number() OVER (ORDER BY n * 4, domain) - 1 AS idx,
-             CAST(coalesce(sum(n * 4) OVER (ORDER BY n * 4, domain
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS prefix,
-             count(*) OVER () AS dd,
-             CAST(sum(n * 4) OVER () AS BIGINT) AS totcap
-           FROM d),
-         jl AS (SELECT min(idx) AS j FROM o, p WHERE prefix + (dd - idx) * cap >= budget),
-         lv AS (SELECT (budget - o.prefix) / CAST(o.dd - o.idx AS DOUBLE) AS line
-                FROM o, jl, p WHERE o.idx = jl.j),
-         f AS (SELECT domain, n AS n_tokens, cap,
-             CASE WHEN totcap <= budget THEN CAST(cap AS DOUBLE)
-                  WHEN idx < jl.j THEN CAST(cap AS DOUBLE) ELSE line END AS alloc
-           FROM o, jl, lv, p)
-         SELECT domain, n_tokens, cap, round(alloc, 6) AS alloc,
-           round(alloc / n_tokens, 6) AS epochs
-         FROM f ORDER BY domain""",
-
-    "pipeline_curate_e2e" ->
-      ("""WITH docs AS (
-           SELECT doc_id, text, source FROM documents WHERE doc_id < 200
-           UNION ALL
-           SELECT doc_id + 10000, text, source FROM documents WHERE doc_id < 40),
-         cleaned AS (SELECT doc_id,
-           trim(regexp_replace(
-             replace(replace(replace(replace(replace(replace(
-               regexp_replace(
-                 regexp_replace(
-                   regexp_replace(
-                     regexp_replace(
-                       concat('<html><head><style>p{color:red}</style></head><body><h1>', source,
-                              '</h1><!-- crawl artifact --><p>', text,
-                              ' &amp; more&nbsp;soon</p><script>var x=1;</script></body></html>'),
-                       '(?is)<script[^>]*>.*?</script>', ' ', 'g'),
-                     '(?is)<style[^>]*>.*?</style>', ' ', 'g'),
-                   '(?s)<!--.*?-->', ' ', 'g'),
-                 '(?s)<[^>]*>', ' ', 'g'),
-               '&nbsp;', ' '), '&amp;', '&'), '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-             '[ \t\n\x0B\f\r]+', ' ', 'g')) AS clean_text
-           FROM docs),
-         fp AS (SELECT doc_id, clean_text,
-             md5(trim(regexp_replace(lower(clean_text), '[ \t\n\x0B\f\r]+', ' ', 'g'))) AS f
-           FROM cleaned),
-         deduped AS (SELECT doc_id, clean_text FROM fp
-           WHERE doc_id IN (SELECT min(doc_id) FROM fp GROUP BY f)),
-         gated AS (SELECT doc_id, clean_text,
-             CAST(len(string_split_regex(trim(clean_text), '\s+')) AS BIGINT) AS n_words
-           FROM deduped
-           WHERE len(string_split_regex(trim(clean_text), '\s+')) >= 12)
-         SELECT doc_id, n_words, md5(clean_text) AS text_md5
-         FROM gated
-         WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) < '""" +
-      graft.pipeline.Sampling.hexThreshold(0.4) + """'
-         ORDER BY doc_id"""),
-
-    "dedup_paragraphs" ->
-      """WITH d AS (SELECT doc_id AS id,
-                      concat(text, chr(10)||chr(10), 'GRAFT boilerplate footer - subscribe now', chr(10)||chr(10), source) AS t
-                    FROM documents WHERE doc_id < 200),
-         sp AS (SELECT id, string_split_regex(t, '\n{2,}') AS ps FROM d),
-         p AS (SELECT id, generate_subscripts(ps, 1) - 1 AS idx, unnest(ps) AS para FROM sp),
-         ph AS (SELECT id, idx, para,
-                  md5(trim(regexp_replace(lower(para), '[ \t\n\x0B\f\r]+', ' ', 'g'))) AS h
-                FROM p WHERE len(trim(para)) > 0),
-         r AS (SELECT *, row_number() OVER (PARTITION BY h ORDER BY id, idx) AS rn,
-                 count(*) OVER (PARTITION BY h) AS cnt FROM ph),
-         kept AS (SELECT id, idx, para FROM r WHERE cnt = 1 OR rn = 1),
-         agg AS (SELECT id, count(*) AS n_kept,
-                   md5(string_agg(para, chr(10)||chr(10) ORDER BY idx)) AS text_md5
-                 FROM kept GROUP BY id),
-         tot AS (SELECT id, count(*) AS n_paras FROM ph GROUP BY id)
-         SELECT tot.id, n_paras,
-           n_paras - coalesce(n_kept, 0) AS n_removed,
-           coalesce(text_md5, md5('')) AS text_md5
-         FROM tot LEFT JOIN agg USING (id) ORDER BY id""",
-
-    // prefix-filter replay: ids as VARCHAR (the engine's string-id
-    // contract, so id1 < id2 agrees), rare-first prefix via (df, token)
-    // window rank, candidate join on prefix tokens, exact-count verify
-    "dedup_prefix_join" ->
-      """WITH d AS (SELECT CAST(doc_id AS VARCHAR) AS did,
-             list_distinct(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-               x -> length(x) > 0)) AS s
-           FROM documents WHERE doc_id < 200),
-         dd AS (SELECT did, s FROM d WHERE len(s) > 0),
-         tk AS (SELECT did, unnest(s) AS tok FROM dd),
-         dfq AS (SELECT tok, count(*) AS dfc FROM tk GROUP BY 1),
-         pos AS (SELECT tk.did, tk.tok,
-             row_number() OVER (PARTITION BY tk.did ORDER BY dfq.dfc, tk.tok) AS p,
-             count(*) OVER (PARTITION BY tk.did) AS n
-           FROM tk JOIN dfq USING (tok)),
-         pre AS (SELECT did, tok FROM pos WHERE p <= n - ceil(0.8 * n) + 1),
-         cand AS (SELECT DISTINCT a.did AS id1, b.did AS id2
-           FROM pre a JOIN pre b ON a.tok = b.tok AND a.did < b.did),
-         sz AS (SELECT did, len(s) AS n FROM dd),
-         inter AS (SELECT c.id1, c.id2, count(*) AS i
-           FROM cand c JOIN tk t1 ON t1.did = c.id1
-           JOIN tk t2 ON t2.did = c.id2 AND t2.tok = t1.tok
-           GROUP BY 1, 2)
-         SELECT inter.id1, inter.id2,
-           round(CAST(i AS DOUBLE) / (sa.n + sb.n - i), 6) AS jaccard
-         FROM inter JOIN sz sa ON sa.did = inter.id1
-         JOIN sz sb ON sb.did = inter.id2
-         WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8
-         ORDER BY id1, id2""",
-
-    // INDEPENDENT replay of the star path's contract: the full PAIRWISE
-    // verified graph (dedup_prefix_join's recipe) + recursive reachability
-    // → component = min reachable id. The engine never builds this graph
-    // (star + triangle-pruned loose edges only), so a green row here IS
-    // the pairs≡star component-identity law on real data. ed is
-    // MATERIALIZED: the recursion must not re-inline the whole pipeline
-    // per iteration (the k-core lesson).
-    "dedup_prefix_star" ->
-      """WITH RECURSIVE d AS (SELECT CAST(doc_id AS VARCHAR) AS did,
-             list_distinct(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-               x -> length(x) > 0)) AS s
-           FROM documents WHERE doc_id < 200),
-         dd AS (SELECT did, s FROM d WHERE len(s) > 0),
-         tk AS (SELECT did, unnest(s) AS tok FROM dd),
-         dfq AS (SELECT tok, count(*) AS dfc FROM tk GROUP BY 1),
-         pos AS (SELECT tk.did, tk.tok,
-             row_number() OVER (PARTITION BY tk.did ORDER BY dfq.dfc, tk.tok) AS p,
-             count(*) OVER (PARTITION BY tk.did) AS n
-           FROM tk JOIN dfq USING (tok)),
-         pre AS (SELECT did, tok FROM pos WHERE p <= n - ceil(0.8 * n) + 1),
-         cand AS (SELECT DISTINCT a.did AS id1, b.did AS id2
-           FROM pre a JOIN pre b ON a.tok = b.tok AND a.did < b.did),
-         sz AS (SELECT did, len(s) AS n FROM dd),
-         inter AS (SELECT c.id1, c.id2, count(*) AS i
-           FROM cand c JOIN tk t1 ON t1.did = c.id1
-           JOIN tk t2 ON t2.did = c.id2 AND t2.tok = t1.tok
-           GROUP BY 1, 2),
-         e AS (SELECT inter.id1, inter.id2
-           FROM inter JOIN sz sa ON sa.did = inter.id1
-           JOIN sz sb ON sb.did = inter.id2
-           WHERE CAST(i AS DOUBLE) / (sa.n + sb.n - i) >= 0.8),
-         ed AS MATERIALIZED (
-           SELECT id1 AS src, id2 AS dst FROM e
-           UNION SELECT id2 AS src, id1 AS dst FROM e),
-         reach AS (
-           SELECT did AS id, did AS node FROM dd
-           UNION
-           SELECT r.id, ed.dst AS node FROM reach r JOIN ed ON ed.src = r.node)
-         SELECT id, min(node) AS component
-         FROM reach GROUP BY id ORDER BY id""",
-
-    // cross-doc duplicated 15-grams by STRING (the engine groups the same
-    // grams by their 8-byte fingerprint — the house dedup contract);
-    // min<>max doc_id is the ">=2 distinct docs" test; equal-length
-    // windows make the interval union a lag(start) island sweep
-    "dedup_substring" ->
-      """WITH d AS (SELECT doc_id,
-             list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> length(x) > 0) AS w
-           FROM documents),
-         o AS (SELECT doc_id, u.start AS start, u.g AS g
-           FROM (SELECT doc_id,
-               unnest(list_transform(range(CASE WHEN len(w) >= 15 THEN len(w) - 14 ELSE 0 END),
-                 i -> {'start': CAST(i AS INT),
-                       'g': array_to_string(w[CAST(i AS INT) + 1 : CAST(i AS INT) + 15], ' ')})) AS u
-             FROM d)),
-         cd AS (SELECT g FROM o GROUP BY g HAVING min(doc_id) <> max(doc_id)),
-         dup AS (SELECT doc_id, start FROM o JOIN cd USING (g)),
-         isl AS (SELECT doc_id, start,
-             CASE WHEN lag(start) OVER (PARTITION BY doc_id ORDER BY start) IS NULL
-                  OR start > lag(start) OVER (PARTITION BY doc_id ORDER BY start) + 15
-               THEN 1 ELSE 0 END AS nw
-           FROM dup),
-         isl2 AS (SELECT doc_id, start,
-             sum(nw) OVER (PARTITION BY doc_id ORDER BY start ROWS UNBOUNDED PRECEDING) AS island
-           FROM isl)
-         SELECT doc_id, CAST(min(start) AS BIGINT) AS span_start,
-           CAST(max(start) + 14 AS BIGINT) AS span_end,
-           CAST(max(start) + 14 - min(start) + 1 AS BIGINT) AS n_tokens
-         FROM isl2 GROUP BY doc_id, island ORDER BY doc_id, span_start""",
-
-    // the cut replay: same positioned 15-grams, keeper = min doc_id per
-    // cross-doc gram, coverage removal via the nested list lambdas
-    // (decon_remove_spans' recipe, cross-doc + keeper-doc semantics)
-    "dedup_substring_cut" ->
-      """WITH d AS (SELECT doc_id,
-             list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> length(x) > 0) AS w
-           FROM documents),
-         o AS (SELECT doc_id, u.start AS start, u.g AS g
-           FROM (SELECT doc_id,
-               unnest(list_transform(range(CASE WHEN len(w) >= 15 THEN len(w) - 14 ELSE 0 END),
-                 i -> {'start': CAST(i AS INT),
-                       'g': array_to_string(w[CAST(i AS INT) + 1 : CAST(i AS INT) + 15], ' ')})) AS u
-             FROM d)),
-         cd AS (SELECT g, min(doc_id) AS keeper FROM o GROUP BY g
-           HAVING min(doc_id) <> max(doc_id)),
-         rm AS (SELECT doc_id, list(start) AS starts
-           FROM o JOIN cd USING (g) WHERE doc_id <> keeper GROUP BY doc_id),
-         k AS (SELECT d.doc_id, d.w,
-             list_filter(d.w, (x, i) -> len(list_filter(coalesce(rm.starts, []),
-               s -> i - 1 >= s AND i - 1 < s + 15)) = 0) AS kept
-           FROM d LEFT JOIN rm USING (doc_id))
-         SELECT doc_id, CAST(len(w) AS BIGINT) AS n_words,
-           CAST(len(w) - len(kept) AS BIGINT) AS n_removed,
-           md5(coalesce(array_to_string(kept, ' '), '')) AS dedup_md5
-         FROM k ORDER BY doc_id""",
-
-    // exact-regime sketch replay: plain word counts (err 0 by contract
-    // when capacity exceeds the vocabulary)
-    "text_heavy_hitters_sketch" ->
-      """WITH w AS (SELECT unnest(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-             x -> length(x) > 0)) AS word
-           FROM documents WHERE doc_id < 100),
-         c AS (SELECT word, CAST(count(*) AS BIGINT) AS estimate FROM w GROUP BY 1)
-         SELECT word, estimate, CAST(0 AS BIGINT) AS err, estimate AS guaranteed
-         FROM c WHERE estimate >= 5 ORDER BY estimate DESC, word ASC""",
-
-    // TRUE-count replay of the guarantee contract: in the gap regime the
-    // sketch's (estimate − err) ≥ N/100 verdict equals tf · 100 >= N on
-    // true counts — the engine side never sees these counts (capacity 512
-    // << vocab), so a green row proves the lower-bound report is both
-    // sound and complete here
-    "text_hh_guaranteed" ->
-      """WITH d AS (SELECT list_filter(string_split_regex(lower(trim(text)), '\s+'),
-             x -> length(x) > 0) AS w
-           FROM documents),
-         bi0 AS (SELECT list_transform(range(CASE WHEN len(w) >= 2 THEN len(w) - 1 ELSE 0 END),
-             i -> array_to_string(w[CAST(i AS INT) + 1 : CAST(i AS INT) + 2], ' ')) AS gs
-           FROM d),
-         s AS (SELECT unnest(w) AS g FROM d
-               UNION ALL SELECT unnest(gs) AS g FROM bi0),
-         c AS (SELECT g, count(*) AS tf FROM s GROUP BY 1),
-         t AS (SELECT sum(tf) AS n FROM c)
-         SELECT c.g AS word, CAST(t.n AS BIGINT) AS n_total
-         FROM c, t WHERE c.tf * 100 >= t.n ORDER BY word""",
-
-    // first-occurrence attribution by gram STRING (engine: 8-byte
-    // fingerprint); empty/short docs survive via the LEFT JOIN
-    "text_novelty_curve" ->
-      """WITH d AS (SELECT doc_id,
-             list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> length(x) > 0) AS w
-           FROM documents),
-         gl AS (SELECT doc_id,
-             list_distinct(list_transform(range(CASE WHEN len(w) >= 3 THEN len(w) - 2 ELSE 0 END),
-               i -> array_to_string(w[CAST(i AS INT) + 1 : CAST(i AS INT) + 3], ' '))) AS gs
-           FROM d),
-         e AS (SELECT doc_id, unnest(gs) AS g FROM gl),
-         f AS (SELECT g, min(doc_id) AS fid FROM e GROUP BY g),
-         nov AS (SELECT e.doc_id, count(*) AS n_ngrams,
-             sum(CASE WHEN f.fid = e.doc_id THEN 1 ELSE 0 END) AS n_novel
-           FROM e JOIN f USING (g) GROUP BY 1)
-         SELECT gl.doc_id, CAST(coalesce(nov.n_ngrams, 0) AS BIGINT) AS n_ngrams,
-           CAST(coalesce(nov.n_novel, 0) AS BIGINT) AS n_novel,
-           round(CASE WHEN coalesce(nov.n_ngrams, 0) > 0
-             THEN CAST(nov.n_novel AS DOUBLE) / nov.n_ngrams ELSE 0.0 END, 6) AS novelty
-         FROM gl LEFT JOIN nov USING (doc_id) ORDER BY doc_id""",
-
-    // same raw-string gram replay as text_novelty_curve, re-keyed to crawl
-    // DAYS: doc day = strftime of its first event ts (UTC both engines),
-    // gram first-occurrence = min day over the per-day DISTINCT gram sets
-    "text_novelty_daily" ->
-      """WITH dy AS (SELECT event_id AS doc_id, strftime(min(ts), '%Y-%m-%d') AS day
-           FROM events GROUP BY 1),
-         d AS (SELECT doc_id,
-             list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> length(x) > 0) AS w
-           FROM documents),
-         gl AS (SELECT doc_id,
-             list_distinct(list_transform(range(CASE WHEN len(w) >= 3 THEN len(w) - 2 ELSE 0 END),
-               i -> array_to_string(w[CAST(i AS INT) + 1 : CAST(i AS INT) + 3], ' '))) AS gs
-           FROM d),
-         dd AS (SELECT gl.doc_id, dy.day, gl.gs FROM gl JOIN dy USING (doc_id)),
-         e AS (SELECT DISTINCT day, g FROM (SELECT day, unnest(gs) AS g FROM dd)),
-         f AS (SELECT g, min(day) AS fd FROM e GROUP BY g),
-         ds AS (SELECT e.day, count(*) AS n_grams,
-             sum(CASE WHEN f.fd = e.day THEN 1 ELSE 0 END) AS n_novel
-           FROM e JOIN f USING (g) GROUP BY 1),
-         nd AS (SELECT day, count(*) AS n_docs FROM dd GROUP BY 1)
-         SELECT nd.day, CAST(nd.n_docs AS BIGINT) AS n_docs,
-           CAST(coalesce(ds.n_grams, 0) AS BIGINT) AS n_grams,
-           CAST(coalesce(ds.n_novel, 0) AS BIGINT) AS n_novel,
-           round(CASE WHEN coalesce(ds.n_grams, 0) > 0
-             THEN CAST(ds.n_novel AS DOUBLE) / ds.n_grams ELSE 0.0 END, 6) AS novelty
-         FROM nd LEFT JOIN ds USING (day) ORDER BY day""",
-
-    // population-variance identity per label: sum over dims of
-    // (E x^2 - (E x)^2); centroid norm from the same per-dim sums
-    "embedding_dispersion" ->
-      """WITH x AS (SELECT label, generate_subscripts(embedding, 1) AS pos,
-             unnest(CAST(embedding AS DOUBLE[])) AS v
-           FROM embeddings WHERE embedding IS NOT NULL),
-         pd AS (SELECT label, pos, count(*) AS n, sum(v) AS sx, sum(v * v) AS sxx
-           FROM x GROUP BY 1, 2),
-         agg AS (SELECT label, max(n) AS n,
-             sum(sxx / n - (sx / n) * (sx / n)) AS disp,
-             sum((sx / n) * (sx / n)) AS mn2
-           FROM pd GROUP BY 1)
-         SELECT label, CAST(n AS BIGINT) AS n, round(disp, 6) AS dispersion,
-           round(sqrt(mn2), 6) AS centroid_norm
-         FROM agg ORDER BY label""",
-
-    // top-k coverage replay: rank by (tf desc, word asc), cumulative tf
-    // at each budget via the rank-bounded join; exact-int64 division
-    "text_oov_curve" ->
-      """WITH w AS (SELECT unnest(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-             x -> length(x) > 0)) AS word FROM documents),
-         c AS (SELECT word, count(*) AS tf FROM w GROUP BY 1),
-         r AS (SELECT tf, row_number() OVER (ORDER BY tf DESC, word ASC) AS rk FROM c),
-         tot AS (SELECT sum(tf) AS total FROM c),
-         s(k) AS (VALUES (100), (500), (1000), (5000)),
-         cov AS (SELECT s.k, coalesce(sum(r.tf), 0) AS covered
-           FROM s LEFT JOIN r ON r.rk <= s.k GROUP BY 1)
-         SELECT CAST(k AS BIGINT) AS vocab_size,
-           CAST(covered AS BIGINT) AS covered_tokens,
-           CAST(tot.total AS BIGINT) AS total_tokens,
-           round(CAST(covered AS DOUBLE) / tot.total, 6) AS coverage
-         FROM cov, tot ORDER BY vocab_size""",
-
-    "text_langid_eval" ->
-      """WITH toks AS (SELECT doc_id, text, lang, string_split_regex(lower(trim(text)), '\s+') AS tk
-                       FROM documents WHERE doc_id < 100),
-         s AS (SELECT doc_id, lang,
-             len(list_filter(tk, x -> x IN ('the','and','of','to','is','with'))) AS s_en,
-             len(list_filter(tk, x -> x IN ('el','la','de','que','los','una'))) AS s_es,
-             len(list_filter(tk, x -> x IN ('der','die','und','das','ist','nicht'))) AS s_de,
-             len(list_filter(tk, x -> x IN ('le','la','les','des','est','une'))) AS s_fr,
-             len(regexp_extract_all(text, '的')) + len(regexp_extract_all(text, '是'))
-               + len(regexp_extract_all(text, '了')) + len(regexp_extract_all(text, '在'))
-               + len(regexp_extract_all(text, '有')) + len(regexp_extract_all(text, '我')) AS s_zh
-           FROM toks),
-         m AS (SELECT *, greatest(s_en, s_es, s_de, s_fr, s_zh) AS mx FROM s),
-         p AS (SELECT doc_id, lang,
-           CASE WHEN mx = 0 THEN 'und'
-                WHEN s_en = mx THEN 'en' WHEN s_es = mx THEN 'es'
-                WHEN s_de = mx THEN 'de' WHEN s_fr = mx THEN 'fr'
-                ELSE 'zh' END AS pred_lang
-           FROM m)
-         SELECT lang, count(*) AS n,
-           CAST(sum(CASE WHEN pred_lang = lang THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
-           round(sum(CASE WHEN pred_lang = lang THEN 1 ELSE 0 END) * 1.0 / count(*), 6) AS accuracy
-         FROM p GROUP BY 1 ORDER BY 1""",
-
-    "text_gopher_quality" ->
-      """WITH base AS (
-           SELECT doc_id, text,
-             list_filter(string_split_regex(trim(text), '\s+'), w -> len(w) > 0) AS words,
-             list_filter(string_split(text, chr(10)), l -> len(trim(l)) > 0) AS lines
-           FROM documents WHERE doc_id < 100),
-         sig AS (
-           SELECT doc_id,
-             CAST(len(words) AS INT) AS n_words,
-             CASE WHEN len(words) > 0 THEN CAST(list_sum(list_transform(words, w -> len(w))) AS DOUBLE) / len(words) ELSE 0.0 END AS mean_word_len,
-             CASE WHEN len(words) > 0 THEN CAST(len(regexp_extract_all(text, '#|\.\.\.')) AS DOUBLE) / len(words) ELSE 0.0 END AS symbol_word_ratio,
-             CASE WHEN len(words) > 0 THEN CAST(len(list_filter(words, w -> regexp_matches(w, '[A-Za-z]'))) AS DOUBLE) / len(words) ELSE 0.0 END AS alpha_word_ratio,
-             CASE WHEN len(lines) > 0 THEN CAST(len(list_filter(lines, l -> regexp_matches(l, '^\s*[-*•]'))) AS DOUBLE) / len(lines) ELSE 0.0 END AS bullet_line_ratio,
-             CASE WHEN len(lines) > 0 THEN CAST(len(list_filter(lines, l -> regexp_matches(l, '\.\.\.\s*$'))) AS DOUBLE) / len(lines) ELSE 0.0 END AS ellipsis_line_ratio,
-             CAST(CAST(list_contains(list_transform(words, w -> lower(w)), 'the') AS INT)
-               + CAST(list_contains(list_transform(words, w -> lower(w)), 'be') AS INT)
-               + CAST(list_contains(list_transform(words, w -> lower(w)), 'to') AS INT)
-               + CAST(list_contains(list_transform(words, w -> lower(w)), 'of') AS INT)
-               + CAST(list_contains(list_transform(words, w -> lower(w)), 'and') AS INT)
-               + CAST(list_contains(list_transform(words, w -> lower(w)), 'that') AS INT)
-               + CAST(list_contains(list_transform(words, w -> lower(w)), 'have') AS INT)
-               + CAST(list_contains(list_transform(words, w -> lower(w)), 'with') AS INT) AS INT) AS n_req_stopwords
-           FROM base)
-         SELECT doc_id, n_words,
-           round(mean_word_len, 6) AS mean_word_len,
-           round(symbol_word_ratio, 6) AS symbol_word_ratio,
-           round(alpha_word_ratio, 6) AS alpha_word_ratio,
-           round(bullet_line_ratio, 6) AS bullet_line_ratio,
-           round(ellipsis_line_ratio, 6) AS ellipsis_line_ratio,
-           n_req_stopwords,
-           (n_words BETWEEN 25 AND 100000 AND mean_word_len BETWEEN 3.0 AND 10.0
-             AND symbol_word_ratio < 0.1 AND alpha_word_ratio >= 0.8
-             AND bullet_line_ratio <= 0.9 AND ellipsis_line_ratio <= 0.3
-             AND n_req_stopwords >= 2) AS gopher_keep
-         FROM sig ORDER BY doc_id""",
-
-    "text_pii_redact" ->
-      """SELECT doc_id,
-           CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INT) AS n_emails,
-           CAST(len(regexp_extract_all(text, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS INT) AS n_ips,
-           CAST(len(regexp_extract_all(text, '\+?\d[\d()\- ]{7,}\d')) AS INT) AS n_phones,
-           md5(regexp_replace(regexp_replace(regexp_replace(text,
-             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-             '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
-             '\+?\d[\d()\- ]{7,}\d', '<PHONE>', 'g')) AS redacted_md5
-         FROM documents WHERE doc_id < 100 ORDER BY doc_id""",
-
-    "text_repetition" ->
-      """WITH base AS (
-           SELECT doc_id,
-             list_filter(string_split(text, chr(10)), l -> len(trim(l)) > 0) AS lines,
-             list_filter(string_split_regex(text, '\n{2,}'), p -> len(trim(p)) > 0) AS paras,
-             list_filter(string_split_regex(lower(trim(text)), '\s+'), w -> len(w) > 0) AS words
-           FROM documents WHERE doc_id < 100),
-         bg AS (
-           SELECT doc_id, lines, paras,
-             list_filter(list_transform(words, (w, i) ->
-               CASE WHEN i < len(words) THEN w || ' ' || list_extract(words, i + 1) END),
-               x -> x IS NOT NULL) AS bigrams
-           FROM base),
-         lstats AS (
-           SELECT doc_id,
-             sum(CASE WHEN c > 1 THEN c * le ELSE 0 END) AS dup_chars,
-             sum(c * le) AS all_chars
-           FROM (SELECT doc_id, l, count(*) AS c, min(length(l)) AS le
-                 FROM (SELECT doc_id, unnest(lines) AS l FROM bg)
-                 GROUP BY doc_id, l)
-           GROUP BY doc_id),
-         bstats AS (
-           SELECT doc_id, max(c) AS top, sum(c) AS nb
-           FROM (SELECT doc_id, b, count(*) AS c
-                 FROM (SELECT doc_id, unnest(bigrams) AS b FROM bg)
-                 GROUP BY doc_id, b)
-           GROUP BY doc_id)
-         SELECT g.doc_id,
-           round(CASE WHEN len(g.lines) > 0 THEN 1.0 - CAST(len(list_distinct(g.lines)) AS DOUBLE) / len(g.lines) ELSE 0.0 END, 6) AS dup_line_frac,
-           round(CASE WHEN coalesce(l.all_chars, 0) > 0 THEN CAST(l.dup_chars AS DOUBLE) / l.all_chars ELSE 0.0 END, 6) AS dup_line_char_frac,
-           round(CASE WHEN len(g.paras) > 0 THEN 1.0 - CAST(len(list_distinct(g.paras)) AS DOUBLE) / len(g.paras) ELSE 0.0 END, 6) AS dup_para_frac,
-           round(CASE WHEN coalesce(b.nb, 0) > 0 THEN CAST(b.top AS DOUBLE) / b.nb ELSE 0.0 END, 6) AS top_bigram_frac
-         FROM bg g LEFT JOIN lstats l USING (doc_id) LEFT JOIN bstats b USING (doc_id)
-         ORDER BY g.doc_id""",
-
-    "multimodal_meta" ->
-      """SELECT doc_id, CAST(length(text) AS BIGINT) AS byte_len, 'text/plain' AS mime
-         FROM documents WHERE doc_id < 50 ORDER BY doc_id""",
-
-    // fixture-pinned oracles: the committed sample.mp2/sample.mp4 bytes
-    // are deterministic (FixtureGen), so the expected decode/demux output
-    // is a literal table — the driver hash now covers the real Layer II
-    // decoder and the ISO-BMFF sample-table demux end to end
-    "multimodal_features" ->
-      // one row per committed fixture through its REAL kernel: mp2 Layer II
-      // decode, FLAC decode, WAV PCM decode, BMP pixel stats, MP4 container
-      // metadata, text -> documented stub; values pinned from the
-      // deterministic fixtures (kernels unit-proven elsewhere)
-      """SELECT CAST(id AS BIGINT) AS id, CAST(f0 AS DOUBLE) AS f0,
-           CAST(f1 AS DOUBLE) AS f1, CAST(f2 AS DOUBLE) AS f2,
-           CAST(f3 AS DOUBLE) AS f3, CAST(f4 AS DOUBLE) AS f4,
-           CAST(f5 AS DOUBLE) AS f5, CAST(f6 AS DOUBLE) AS f6,
-           CAST(f7 AS DOUBLE) AS f7
-         FROM (VALUES
-           (1, 0.264,  1.0,    48000.0, 0.3704, 0.0416, 0.6986, 0.3133, 0.0),
-           (2, 0.016,  1.0,    8000.0,  0.1455, 0.0625, 0.2441, 0.1262, 0.0095),
-           (3, 0.1,    1.0,    8000.0,  0.3535, 0.1088, 0.5,    0.3183, 0.0),
-           (4, 8.0,    4.0,    3.0,     0.4985, 0.0,    0.5015, 0.2062, 0.0606),
-           (5, 0.5,    0.0,    0.0,     1.0,    1000.0, 0.0,    0.0,    0.0),
-           (6, 1.5529, 1.4745, 1.1922,  0.8,    1.149,  0.9294, 1.349,  1.2627))
-         t(id, f0, f1, f2, f3, f4, f5, f6, f7)
-         ORDER BY id""",
-
-    "multimodal_audio_mp2" ->
-      """SELECT CAST(1 AS BIGINT) AS id, CAST(0.264 AS DOUBLE) AS duration_sec,
-           1 AS channels, 48000 AS rate_hz, CAST(0.3704 AS DOUBLE) AS rms,
-           CAST(0.0416 AS DOUBLE) AS zcr, CAST(0.6986 AS DOUBLE) AS peak,
-           CAST(0.3133 AS DOUBLE) AS mean_abs""",
-
-    "multimodal_mp4_demux" ->
-      """SELECT * FROM (VALUES
-           (7, 'avc1', 0, CAST(0.0 AS DOUBLE), TRUE, 3),
-           (7, 'avc1', 1, CAST(0.1 AS DOUBLE), FALSE, 4),
-           (7, 'avc1', 2, CAST(0.25 AS DOUBLE), FALSE, 5),
-           (7, 'avc1', 3, CAST(0.3 AS DOUBLE), TRUE, 6),
-           (7, 'avc1', 4, CAST(0.4 AS DOUBLE), FALSE, 7))
-         t(track_id, codec, sample_idx, pts_sec, keyframe, size)
-         ORDER BY sample_idx""",
-
-    // independent replay of the mixed-corpus construction: container and
-    // decodability follow from doc_id % 8 by construction (BMP/PNG/TIFF
-    // real and decodable via ImageIO; the whole webp class decodes as of
-    // r17 — LOSSLESS VP8L through the from-scratch Vp8l decoder AND the
-    // real libwebp-encoded lossy fixture through the from-scratch Vp8
-    // decoder; AVIF/HEIC/corrupt-JPEG sniffable but undecodable; else
-    // unknown) — the ENGINE proves the same counts by actually encoding,
-    // sniffing, and running the real decoders per payload
-    "multimodal_decode_report" ->
-      """WITH c AS (SELECT
-             CASE doc_id % 8 WHEN 0 THEN 'bmp' WHEN 1 THEN 'png'
-               WHEN 2 THEN 'webp' WHEN 3 THEN 'jpeg' WHEN 4 THEN 'avif'
-               WHEN 5 THEN 'unknown' WHEN 6 THEN 'tiff'
-               ELSE 'heic' END AS container,
-             CASE WHEN doc_id % 8 IN (0, 1, 2, 6)
-               THEN 1 ELSE 0 END AS dec
-           FROM documents)
-         SELECT container, CAST(count(*) AS BIGINT) AS n_total,
-           CAST(sum(dec) AS BIGINT) AS n_decoded,
-           CAST(count(*) - sum(dec) AS BIGINT) AS n_failed,
-           round(CAST(sum(dec) AS DOUBLE) / count(*), 6) AS decode_rate
-         FROM c GROUP BY container ORDER BY container""",
-
-    // header-only dims replayed from the construction arithmetic: the
-    // decodable classes are fixed 8x8; the webp class is 8x8 (VP8L half)
-    // or the 64x48 lossy fixture; AVIF/HEIC carry their ispe values
-    // (100 + id%23, 77) / (200 + id%31, 150); corrupt JPEG has no SOF
-    // and text no container -> NULL dims
-    "multimodal_image_dims" ->
-      """SELECT doc_id AS img_id,
-           CASE doc_id % 8 WHEN 0 THEN 'bmp' WHEN 1 THEN 'png'
-             WHEN 2 THEN 'webp' WHEN 3 THEN 'jpeg' WHEN 4 THEN 'avif'
-             WHEN 5 THEN 'unknown' WHEN 6 THEN 'tiff'
-             ELSE 'heic' END AS container,
-           CAST(CASE
-             WHEN doc_id % 8 IN (0, 1, 6) THEN 8
-             WHEN doc_id % 8 = 2 THEN (CASE WHEN doc_id % 16 = 2 THEN 8 ELSE 64 END)
-             WHEN doc_id % 8 = 4 THEN 100 + doc_id % 23
-             WHEN doc_id % 8 = 7 THEN 200 + doc_id % 31
-             END AS INTEGER) AS img_w,
-           CAST(CASE
-             WHEN doc_id % 8 IN (0, 1, 6) THEN 8
-             WHEN doc_id % 8 = 2 THEN (CASE WHEN doc_id % 16 = 2 THEN 8 ELSE 48 END)
-             WHEN doc_id % 8 = 4 THEN 77
-             WHEN doc_id % 8 = 7 THEN 150
-             END AS INTEGER) AS img_h
-         FROM documents WHERE doc_id < 400 ORDER BY doc_id""",
-
-    // the full from-scratch VP8 decode pinned to literals derived from
-    // libwebp's own yuv dump (BT.601 + pixel-stat arithmetic in python,
-    // independent of graft code — tools/lossy_fixture_dhash.py family);
-    // plane-level byte equality is proven separately in Vp8Spec
-    "multimodal_lossy_webp" ->
-      """SELECT CAST(id AS BIGINT) AS id, CAST(f0 AS DOUBLE) AS f0,
-           CAST(f1 AS DOUBLE) AS f1, CAST(f2 AS DOUBLE) AS f2,
-           CAST(f3 AS DOUBLE) AS f3, CAST(f4 AS DOUBLE) AS f4,
-           CAST(f5 AS DOUBLE) AS f5, CAST(f6 AS DOUBLE) AS f6,
-           CAST(f7 AS DOUBLE) AS f7
-         FROM (VALUES
-           (1, 64.0, 48.0, 4.0, 0.6783, 0.5592, 0.7628, 0.618, 0.0801))
-         t(id, f0, f1, f2, f3, f4, f5, f6, f7)
-         ORDER BY id""",
-
-    // sigmoid(bias + Σ w·f) replayed with the same left-fold order over
-    // name-sorted features (float addition is not associative) and DOUBLE
-    // casts so both engines run IEEE double end-to-end
-    "describe_calibration" ->
-      """WITH f AS (SELECT doc_id, lang,
-             len(string_split_regex(trim(text), '\s+')) AS n_words,
-             length(text) AS n_chars,
-             len(regexp_extract_all(text, '[\.,;:!\?]')) AS punct,
-             len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-               x -> x IN ('the', 'a', 'of', 'and', 'to', 'in'))) AS stop
-           FROM documents),
-         g AS (SELECT doc_id, lang,
-             CASE WHEN n_words > 0
-               THEN CAST(n_chars - (n_words - 1) AS DOUBLE) / n_words END AS mean_word_len,
-             n_words,
-             CASE WHEN n_chars > 0
-               THEN CAST(punct AS DOUBLE) / n_chars ELSE 0.0 END AS punct_ratio,
-             CASE WHEN n_words > 0
-               THEN CAST(stop AS DOUBLE) / n_words ELSE 0.0 END AS stopword_ratio
-           FROM f),
-         q AS (SELECT doc_id, lang,
-             1.0 / (1.0 + exp(-(((((CAST(-1.0 AS DOUBLE)
-               + mean_word_len * CAST(0.1 AS DOUBLE))
-               + n_words * CAST(0.001 AS DOUBLE))
-               + punct_ratio * CAST(2.0 AS DOUBLE))
-               + stopword_ratio * CAST(4.0 AS DOUBLE))))) AS score
-           FROM g),
-         m AS (SELECT CAST(round(score * 1000000) AS BIGINT) AS mm,
-             CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-           FROM q WHERE lang IS NOT NULL AND score IS NOT NULL),
-         b AS (SELECT least(mm * 10 // 1000000, 9) AS bin,
-             CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(y) AS BIGINT) AS n_pos,
-             CAST(sum(mm) AS BIGINT) AS sm
-           FROM m GROUP BY 1)
-         SELECT CAST(bin AS BIGINT) AS bin, n, n_pos,
-           round(CAST(sm AS DOUBLE) / 1000000.0 / n, 6) AS mean_pred,
-           round(CAST(n_pos AS DOUBLE) / n, 6) AS obs_rate,
-           round(abs(CAST(sm AS DOUBLE) / 1000000.0 / n
-             - CAST(n_pos AS DOUBLE) / n), 6) AS gap
-         FROM b ORDER BY bin""",
-
-    "text_quality_score" ->
-      """WITH f AS (SELECT doc_id,
-             len(string_split_regex(trim(text), '\s+')) AS n_words,
-             length(text) AS n_chars,
-             len(regexp_extract_all(text, '[\.,;:!\?]')) AS punct,
-             len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-               x -> x IN ('the', 'a', 'of', 'and', 'to', 'in'))) AS stop
-           FROM documents WHERE doc_id < 200),
-         g AS (SELECT doc_id,
-             CASE WHEN n_words > 0
-               THEN CAST(n_chars - (n_words - 1) AS DOUBLE) / n_words END AS mean_word_len,
-             n_words,
-             CASE WHEN n_chars > 0
-               THEN CAST(punct AS DOUBLE) / n_chars ELSE 0.0 END AS punct_ratio,
-             CASE WHEN n_words > 0
-               THEN CAST(stop AS DOUBLE) / n_words ELSE 0.0 END AS stopword_ratio
-           FROM f)
-         SELECT doc_id,
-           round(1.0 / (1.0 + exp(-(((((CAST(-1.0 AS DOUBLE)
-             + mean_word_len * CAST(0.1 AS DOUBLE))
-             + n_words * CAST(0.001 AS DOUBLE))
-             + punct_ratio * CAST(2.0 AS DOUBLE))
-             + stopword_ratio * CAST(4.0 AS DOUBLE))))), 6) AS quality_score
-         FROM g ORDER BY doc_id""",
-
-    // the whole curriculum chain in one CTE pipeline: the identical
-    // alphabetical-fold sigmoid (text_quality_score's replay, unsliced),
-    // 6dp-rounded gate, token-count difficulty, row_number ntile
-    // arithmetic, position-modular shards, rollup
-    "pipeline_curriculum_e2e" ->
-      """WITH f AS (SELECT doc_id,
-             len(string_split_regex(trim(text), '\s+')) AS n_words,
-             length(text) AS n_chars,
-             len(regexp_extract_all(text, '[\.,;:!\?]')) AS punct,
-             len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-               x -> x IN ('the', 'a', 'of', 'and', 'to', 'in'))) AS stop
-           FROM documents),
-         g AS (SELECT doc_id,
-             CASE WHEN n_words > 0
-               THEN CAST(n_chars - (n_words - 1) AS DOUBLE) / n_words END AS mean_word_len,
-             n_words,
-             CASE WHEN n_chars > 0
-               THEN CAST(punct AS DOUBLE) / n_chars ELSE 0.0 END AS punct_ratio,
-             CASE WHEN n_words > 0
-               THEN CAST(stop AS DOUBLE) / n_words ELSE 0.0 END AS stopword_ratio
-           FROM f),
-         sc AS (SELECT doc_id,
-             round(1.0 / (1.0 + exp(-(((((CAST(-1.0 AS DOUBLE)
-               + mean_word_len * CAST(0.1 AS DOUBLE))
-               + n_words * CAST(0.001 AS DOUBLE))
-               + punct_ratio * CAST(2.0 AS DOUBLE))
-               + stopword_ratio * CAST(4.0 AS DOUBLE))))), 6) AS q
-           FROM g),
-         k AS (SELECT d.doc_id,
-             CAST(len(list_filter(string_split_regex(trim(d.text), '\s+'),
-               x -> length(x) > 0)) AS DOUBLE) AS difficulty
-           FROM documents d JOIN sc USING (doc_id) WHERE sc.q >= 0.5),
-         r AS (SELECT doc_id, difficulty,
-             row_number() OVER (ORDER BY difficulty, doc_id) - 1 AS r,
-             count(*) OVER () AS n
-           FROM k),
-         p AS (SELECT difficulty, r, n // 4 AS q2, n % 4 AS m FROM r),
-         c AS (SELECT difficulty,
-             CASE WHEN r < m * (q2 + 1) THEN r // (q2 + 1)
-                  ELSE m + (r - m * (q2 + 1)) // q2 END AS bucket,
-             CASE WHEN r < m * (q2 + 1) THEN r % (q2 + 1)
-                  ELSE (r - m * (q2 + 1)) % q2 END AS rib
-           FROM p),
-         s AS (SELECT difficulty, bucket, rib * 4 + bucket AS position,
-             count(*) OVER () AS n2 FROM c)
-         SELECT CAST(position // ((n2 + 4) // 5) AS BIGINT) AS shard,
-           CAST(bucket AS BIGINT) AS bucket,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           round(avg(difficulty), 6) AS avg_difficulty,
-           CAST(min(position) AS BIGINT) AS first_position
-         FROM s GROUP BY 1, 2 ORDER BY shard, bucket""",
-
-    // word-5-gram decontamination: DuckDB joins the RAW n-gram strings where
-    // the Spark side joins xxhash64 of them — a collision would surface here
-    // as a hash mismatch. unnest() of an empty list drops the row, so empty
-    // n-gram sets (docs under 5 words, e.g. spaceless zh) emit one NULL to
-    // mirror Spark's explode_outer.
-    "decon_overlap" ->
-      """WITH d AS (SELECT doc_id,
-             list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> length(x) > 0) AS w
-           FROM documents),
-         g AS (SELECT doc_id,
-             list_distinct(CASE WHEN len(w) >= 5
-               THEN list_transform(range(len(w) - 4),
-                      i -> array_to_string(w[CAST(i AS INT) + 1 : CAST(i AS INT) + 5], ' '))
-               ELSE [] END) AS gs
-           FROM d),
-         ev AS (SELECT DISTINCT unnest(gs) AS ng FROM g WHERE doc_id % 7 = 0),
-         tr AS (SELECT doc_id, CAST(len(gs) AS BIGINT) AS n_ngrams,
-             unnest(CASE WHEN len(gs) = 0 THEN [CAST(NULL AS VARCHAR)] ELSE gs END) AS ng
-           FROM g WHERE doc_id % 7 <> 0),
-         c AS (SELECT tr.doc_id, tr.n_ngrams,
-             CAST(coalesce(sum(CASE WHEN ev.ng IS NOT NULL THEN 1 END), 0) AS BIGINT) AS n_overlap
-           FROM tr LEFT JOIN ev ON tr.ng = ev.ng
-           GROUP BY 1, 2)
-         SELECT doc_id, n_ngrams, n_overlap,
-           round(CASE WHEN n_ngrams > 0 THEN CAST(n_overlap AS DOUBLE) / n_ngrams ELSE 0.0 END, 6) AS overlap_frac,
-           n_overlap > 0 AS contaminated
-         FROM c ORDER BY doc_id""",
-
-    "decon_corpus_minhash" -> corpusMinhashOracleSql,
-
-    "decon_source_matrix" -> corpusMatrixOracleSql,
-
-    "decon_minhash_lsh" ->
-      // same banded CTE as the dedup replays; the train/eval split rides
-      // doc_id parity mod 7, the join is on the band SLICE itself
-      s"""$minhashBandedCte,
-         |tb AS (SELECT id, b, slice FROM bd WHERE CAST(id AS BIGINT) % 7 <> 0),
-         |ebs AS (SELECT DISTINCT b, slice FROM bd WHERE CAST(id AS BIGINT) % 7 = 0)
-         |SELECT CAST(tb.id AS BIGINT) AS doc_id,
-         |  CAST(count(DISTINCT tb.b) AS BIGINT) AS n_bands_matched
-         |FROM tb JOIN ebs ON tb.b = ebs.b AND tb.slice = ebs.slice
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "decon_crossdoc_dup" ->
-      """WITH d AS (SELECT doc_id,
-             list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> length(x) > 0) AS w
-           FROM documents WHERE doc_id < 300),
-         g AS (SELECT doc_id,
-             list_distinct(CASE WHEN len(w) >= 5
-               THEN list_transform(range(len(w) - 4),
-                      i -> array_to_string(w[CAST(i AS INT) + 1 : CAST(i AS INT) + 5], ' '))
-               ELSE [] END) AS gs
-           FROM d),
-         ex AS (SELECT doc_id, CAST(len(gs) AS BIGINT) AS n_ngrams,
-             unnest(CASE WHEN len(gs) = 0 THEN [CAST(NULL AS VARCHAR)] ELSE gs END) AS ng
-           FROM g),
-         df AS (SELECT ng, count(*) AS nd FROM ex WHERE ng IS NOT NULL GROUP BY 1)
-         SELECT ex.doc_id, ex.n_ngrams,
-           CAST(coalesce(sum(CASE WHEN df.nd > 1 THEN 1 END), 0) AS BIGINT) AS n_dup,
-           round(CASE WHEN ex.n_ngrams > 0
-             THEN CAST(coalesce(sum(CASE WHEN df.nd > 1 THEN 1 END), 0) AS DOUBLE) / ex.n_ngrams
-             ELSE 0.0 END, 6) AS dup_frac
-         FROM ex LEFT JOIN df ON ex.ng = df.ng
-         GROUP BY 1, 2 ORDER BY doc_id""",
-
-    // positioned-occurrence replay of removeDupSpans: first occurrence per
-    // duplicated 5-gram via window rank; coverage via nested list lambdas
-    // (DuckDB list_filter index i is 1-based; Spark's is 0-based)
-    "decon_remove_spans" ->
-      """WITH d AS (SELECT doc_id,
-             list_filter(string_split_regex(lower(trim(text)), '\s+'), x -> length(x) > 0) AS w
-           FROM documents),
-         o AS (SELECT doc_id, u.start AS start, u.g AS g
-           FROM (SELECT doc_id,
-               unnest(list_transform(range(CASE WHEN len(w) >= 5 THEN len(w) - 4 ELSE 0 END),
-                 i -> {'start': CAST(i AS INT),
-                       'g': array_to_string(w[CAST(i AS INT) + 1 : CAST(i AS INT) + 5], ' ')})) AS u
-             FROM d)),
-         r AS (SELECT doc_id, start,
-             count(*) OVER (PARTITION BY g) AS cnt,
-             row_number() OVER (PARTITION BY g ORDER BY doc_id, start) AS rn
-           FROM o),
-         rm AS (SELECT doc_id, list(start) AS starts FROM r
-           WHERE cnt > 1 AND rn > 1 GROUP BY doc_id),
-         k AS (SELECT d.doc_id, d.w,
-             list_filter(d.w, (x, i) -> len(list_filter(coalesce(rm.starts, []),
-               s -> i - 1 >= s AND i - 1 < s + 5)) = 0) AS kept
-           FROM d LEFT JOIN rm USING (doc_id))
-         SELECT doc_id, CAST(len(w) AS BIGINT) AS n_words,
-           CAST(len(w) - len(kept) AS BIGINT) AS n_removed,
-           md5(coalesce(array_to_string(kept, ' '), '')) AS dedup_md5
-         FROM k ORDER BY doc_id""",
-
-    "pack_chunked" ->
-      // start_offset MUST be cast back to BIGINT: DuckDB's sum(BIGINT) is
-      // HUGEINT, which lands in pandas as float64 and hash-mismatches the
-      // Spark LongType column even though every value is identical
-      // (CORRECTNESS_r05: rows+schema matched, hash didn't)
-      """WITH o AS (SELECT doc_id, lang, n_chars,
-             CAST(coalesce(sum(n_chars) OVER (PARTITION BY lang ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_offset
-           FROM documents)
-         SELECT doc_id, lang, start_offset,
-           CAST(floor(start_offset / 4096.0) AS BIGINT) AS chunk_first,
-           CASE WHEN n_chars > 0
-             THEN CAST(floor((start_offset + n_chars - 1) / 4096.0) AS BIGINT)
-             ELSE CAST(floor(start_offset / 4096.0) AS BIGINT) END AS chunk_last
-         FROM o ORDER BY doc_id""",
-
-    "pack_firstfit" ->
-      // exact replay of Packing.packFirstFit's sequential (bin_id, fill)
-      // recurrence: the recursive CTE advances EVERY group by one row per
-      // iteration (rn joins rn+1), so depth = max rows per group, width =
-      // #groups — the same O(group-size) work as the engine's linear pass
-      """WITH RECURSIVE d AS (
-           SELECT doc_id, lang, CAST(coalesce(n_chars, 0) AS BIGINT) AS n,
-                  row_number() OVER (PARTITION BY lang ORDER BY doc_id) AS rn
-           FROM documents),
-         p AS (
-           SELECT doc_id, lang, rn, n, CAST(0 AS BIGINT) AS bin_id, n AS fill
-           FROM d WHERE rn = 1
-           UNION ALL
-           SELECT d.doc_id, d.lang, d.rn, d.n,
-             CASE WHEN p.fill > 0 AND p.fill + d.n > 4096
-                  THEN p.bin_id + CAST(1 AS BIGINT) ELSE p.bin_id END,
-             CASE WHEN p.fill > 0 AND p.fill + d.n > 4096
-                  THEN d.n ELSE p.fill + d.n END
-           FROM p JOIN d ON d.lang = p.lang AND d.rn = p.rn + 1)
-         SELECT doc_id, lang, bin_id FROM p ORDER BY doc_id""",
-
-    "sample_cluster_balanced" ->
-      """WITH init AS (
-           SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid,
-                  CAST(embedding AS DOUBLE[]) AS c
-           FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-         a AS (
-           SELECT e.vec_id,
-             (SELECT i.cid FROM init i
-                ORDER BY (SELECT sum((CAST(e.embedding AS DOUBLE[])[r2.range+1] - i.c[r2.range+1])^2) FROM range(64) r2), i.cid
-                LIMIT 1) AS cid
-           FROM embeddings e),
-         r AS (SELECT cid, vec_id,
-             row_number() OVER (PARTITION BY cid
-               ORDER BY substr(md5(CAST(vec_id AS VARCHAR)), 1, 15),
-                        CAST(vec_id AS VARCHAR)) AS rn
-           FROM a)
-         SELECT CAST(cid AS INT) AS cluster_id, vec_id
-         FROM r WHERE rn <= 10 ORDER BY cluster_id, vec_id""",
-
-    "cluster_kmeans" ->
-      """WITH init AS (
-           SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid,
-                  CAST(embedding AS DOUBLE[]) AS c
-           FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-         a AS (
-           SELECT e.vec_id, e.embedding,
-             (SELECT i.cid FROM init i
-                ORDER BY (SELECT sum((CAST(e.embedding AS DOUBLE[])[r2.range+1] - i.c[r2.range+1])^2) FROM range(64) r2), i.cid
-                LIMIT 1) AS cid
-           FROM embeddings e),
-         d AS (SELECT cid, generate_subscripts(embedding, 1) AS pos,
-                 CAST(unnest(embedding) AS DOUBLE) AS x FROM a),
-         m AS (SELECT cid, pos, avg(x) AS mv FROM d GROUP BY 1, 2),
-         ctr AS (SELECT cid, round(sqrt(sum(mv * mv)), 6) AS center_norm,
-                 round(max(CASE WHEN pos = 1 THEN mv END), 6) AS c1
-                 FROM m GROUP BY 1),
-         n AS (SELECT cid, CAST(count(*) AS BIGINT) AS n_vectors FROM a GROUP BY 1)
-         SELECT CAST(n.cid AS INT) AS cluster_id, n.n_vectors,
-           ctr.center_norm, ctr.c1
-         FROM n JOIN ctr USING (cid) ORDER BY 1""",
-
-    "cluster_silhouette" ->
-      """WITH init AS (
-           SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid,
-                  CAST(embedding AS DOUBLE[]) AS c
-           FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-         a AS (
-           SELECT e.vec_id, e.embedding,
-             (SELECT i.cid FROM init i
-                ORDER BY (SELECT sum((CAST(e.embedding AS DOUBLE[])[r2.range+1] - i.c[r2.range+1])^2) FROM range(64) r2), i.cid
-                LIMIT 1) AS cid
-           FROM embeddings e),
-         s AS (SELECT a.vec_id, a.cid,
-             (SELECT list_distance(CAST(a.embedding AS DOUBLE[]), i.c)
-              FROM init i WHERE i.cid = a.cid) AS da,
-             (SELECT min(list_distance(CAST(a.embedding AS DOUBLE[]), i.c))
-              FROM init i WHERE i.cid <> a.cid) AS db
-           FROM a)
-         SELECT CAST(cid AS INT) AS cluster_id,
-           CAST(count(*) AS BIGINT) AS n_vectors,
-           round(avg(CASE WHEN greatest(da, db) > 0
-                     THEN (db - da) / greatest(da, db) ELSE 0 END), 6)
-             AS silhouette
-         FROM s GROUP BY 1 ORDER BY 1""",
-
-    "embedding_centroids" ->
-      """WITH e AS (SELECT label, unnest(embedding) AS x,
-             generate_subscripts(embedding, 1) AS pos FROM embeddings)
-         SELECT label, CAST(count(*) AS BIGINT) AS n_vectors,
-           CAST(pos - 1 AS INT) AS pos,
-           round(avg(CAST(x AS DOUBLE)), 6) AS v
-         FROM e GROUP BY label, pos ORDER BY label, pos""",
-
-    "embedding_random_projection" -> randomProjectionOracleSql,
-
-    "embedding_quantize" ->
-      """WITH m AS (SELECT vec_id, embedding,
-             list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS maxabs
-           FROM embeddings WHERE vec_id < 50),
-         s AS (SELECT vec_id, embedding,
-             CASE WHEN maxabs > 0 THEN maxabs / 127.0 ELSE 1.0 END AS dscale FROM m)
-         SELECT vec_id,
-           CAST(generate_subscripts(embedding, 1) - 1 AS INT) AS pos,
-           CAST(round(CAST(unnest(embedding) AS DOUBLE) / dscale) AS TINYINT) AS qv,
-           round(CAST(CAST(dscale AS FLOAT) AS DOUBLE), 9) AS scale
-         FROM s ORDER BY vec_id, pos""",
-
-    "text_chunk_windows" ->
-      """WITH w AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws
-             FROM documents WHERE doc_id < 100),
-         n AS (SELECT doc_id, ws,
-             GREATEST(1, CAST(ceil((len(ws) - 64) / 48.0) AS BIGINT) + 1) AS nc FROM w)
-         SELECT doc_id, CAST(i AS INT) AS chunk_id,
-           CAST(len(ws[i*48+1 : i*48+64]) AS BIGINT) AS chunk_words,
-           md5(array_to_string(ws[i*48+1 : i*48+64], ' ')) AS chunk_md5
-         FROM n, generate_series(0, 10000) t(i) WHERE i < nc
-         ORDER BY doc_id, chunk_id""",
-
-    "sample_weighted" ->
-      """WITH s AS (SELECT lang, doc_id, n_chars,
-             pow((CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13)) AS BIGINT) + 1)
-                   / 4503599627370496.0,
-                 1.0 / CAST(n_chars AS DOUBLE)) AS es
-           FROM documents),
-         r AS (SELECT lang, doc_id, n_chars,
-             row_number() OVER (PARTITION BY lang
-               ORDER BY es DESC, CAST(doc_id AS VARCHAR) ASC) AS rn FROM s)
-         SELECT lang, doc_id, n_chars FROM r WHERE rn <= 20
-         ORDER BY lang, doc_id""",
-
-    "sample_hash" ->
-      s"""SELECT doc_id FROM documents
-         WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) < '${Sampling.hexThreshold(0.25)}'
-         ORDER BY doc_id""",
-
-    "describe_grouped_quantiles" ->
-      """SELECT l_returnflag, count(*) AS n,
-           round(quantile_cont(l_extendedprice, 0.5), 6) AS p50,
-           round(quantile_cont(l_extendedprice, 0.9), 6) AS p90,
-           round(quantile_cont(l_extendedprice, 0.99), 6) AS p99
-         FROM lineitem GROUP BY 1 ORDER BY 1""",
-
-    "events_interarrival" ->
-      s"""WITH e AS (SELECT user_id, epoch_ns(ts) // 1000 AS t FROM events),
-         g AS (SELECT user_id,
-                 t - lag(t) OVER (PARTITION BY user_id ORDER BY t) AS gap
-               FROM e)
-         SELECT user_id, count(*) AS n_gaps,
-           CAST(min(gap) AS BIGINT) AS min_gap_us,
-           CAST(max(gap) AS BIGINT) AS max_gap_us,
-           ${sqlSig6("(CAST(sum(gap) AS DOUBLE) / count(*))")} AS avg_gap_us
-         FROM g WHERE gap IS NOT NULL GROUP BY 1 ORDER BY 1""",
-
-    "events_funnel" ->
-      """WITH f AS (SELECT user_id,
-             min(CASE WHEN event_type = 'view' THEN epoch_ns(ts) // 1000 END) AS t_view,
-             min(CASE WHEN event_type = 'click' THEN epoch_ns(ts) // 1000 END) AS t_click,
-             min(CASE WHEN event_type = 'purchase' THEN epoch_ns(ts) // 1000 END) AS t_purchase
-           FROM events GROUP BY 1)
-         SELECT count(*) AS n_users,
-           CAST(sum(CASE WHEN t_view IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS viewed,
-           CAST(sum(CASE WHEN t_view < t_click THEN 1 ELSE 0 END) AS BIGINT) AS clicked_after_view,
-           CAST(sum(CASE WHEN t_view < t_click AND t_click < t_purchase
-                    THEN 1 ELSE 0 END) AS BIGINT) AS full_funnel
-         FROM f""",
-
-    "events_resample" ->
-      s"""WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hour,
-             count(*) AS n, avg(value) AS av FROM events GROUP BY 1, 2),
-         b AS (SELECT min(date_trunc('hour', ts)) AS mn,
-                 max(date_trunc('hour', ts)) AS mx FROM events),
-         s AS (SELECT t.event_type, g.hour
-               FROM (SELECT DISTINCT event_type FROM events) t
-               CROSS JOIN (SELECT unnest(generate_series(mn, mx, INTERVAL 1 HOUR))
-                             AS hour FROM b) g)
-         , fl AS (SELECT s.event_type, CAST(floor(epoch(s.hour)) AS BIGINT) AS hour_start,
-           CAST(coalesce(h.n, 0) AS BIGINT) AS n,
-           last_value(h.av IGNORE NULLS) OVER (
-             PARTITION BY s.event_type ORDER BY s.hour
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS f0
-         FROM s LEFT JOIN h ON s.event_type = h.event_type AND s.hour = h.hour)
-         SELECT event_type, hour_start, n, ${sqlSig6("f0")} AS ffill_avg
-         FROM fl ORDER BY 1, 2""",
-
-    "events_anomaly" ->
-      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hour,
-             count(*) AS n FROM events GROUP BY 1, 2),
-         st AS (SELECT event_type, avg(n) AS m, stddev_samp(n) AS sd
-                FROM h GROUP BY 1)
-         SELECT h.event_type, CAST(floor(epoch(hour)) AS BIGINT) AS hour_start,
-           CAST(n AS BIGINT) AS n, round((n - m) / sd, 6) AS z
-         FROM h JOIN st USING (event_type)
-         WHERE sd > 0 AND abs((n - m) / sd) > 2
-         ORDER BY 1, 2""",
-
-    "events_active_users" ->
-      """WITH ud AS (SELECT DISTINCT CAST(date_trunc('day', ts) AS DATE) AS day,
-             user_id AS u
-           FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL),
-         grid AS (SELECT DISTINCT day AS tday FROM ud),
-         c AS (SELECT day + CAST(r.range AS INTEGER) AS tday, day, u
-           FROM ud CROSS JOIN range(30) r),
-         j AS (SELECT c.tday, c.day, c.u FROM c JOIN grid USING (tday))
-         SELECT CAST(floor(epoch(tday)) AS BIGINT) AS day_start,
-           CAST(count(DISTINCT CASE WHEN tday = day THEN u END) AS BIGINT) AS dau,
-           CAST(count(DISTINCT CASE WHEN tday - day <= 6 THEN u END) AS BIGINT) AS wau,
-           CAST(count(DISTINCT u) AS BIGINT) AS mau
-         FROM j GROUP BY 1 ORDER BY 1""",
-
-    "events_cusum_drift" ->
-      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hour,
-             CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2),
-         st AS (SELECT event_type, CAST(sum(n) AS BIGINT) AS sx,
-             CAST(count(*) AS BIGINT) AS nh FROM h GROUP BY 1),
-         e AS (SELECT h.event_type, h.hour, h.n, st.sx, st.nh,
-             nh * n - sx AS ev FROM h JOIN st USING (event_type)),
-         p AS (SELECT *, CAST(sum(ev) OVER (PARTITION BY event_type
-             ORDER BY hour) AS BIGINT) AS pp FROM e),
-         s AS (SELECT *, pp - least(CAST(0 AS BIGINT),
-             CAST(min(pp) OVER (PARTITION BY event_type ORDER BY hour) AS BIGINT)) AS ss
-           FROM p),
-         a AS (SELECT *, ss > nh * 10 AS alarm FROM s)
-         SELECT event_type, max(nh) AS n_hours, max(sx) AS total,
-           round(CAST(max(ss) AS DOUBLE) / max(nh), 6) AS max_cusum,
-           CAST(count(*) FILTER (WHERE alarm) AS BIGINT) AS n_alarms,
-           CAST(floor(epoch(min(hour) FILTER (WHERE alarm))) AS BIGINT) AS first_alarm_hour
-         FROM a GROUP BY 1 ORDER BY 1""",
-
-    "events_drift_monitor" -> driftMonitorOracleSql,
-    // the vector-scored form is bit-identical by construction (shared
-    // scoreFolded expressions, spec-asserted) — same replay
-    "events_drift_vector" -> driftMonitorOracleSql,
-
-    "modify_quantile_normalize" ->
-      """WITH src AS (SELECT l_orderkey * 10 + l_linenumber AS rid,
-             l_quantity, l_discount, l_tax
-           FROM lineitem WHERE l_orderkey < 1000),
-         m AS (SELECT rid, 'l_quantity' AS variable,
-                 CAST(l_quantity AS DOUBLE) AS value FROM src
-               UNION ALL SELECT rid, 'l_discount', CAST(l_discount AS DOUBLE) FROM src
-               UNION ALL SELECT rid, 'l_tax', CAST(l_tax AS DOUBLE) FROM src),
-         f AS (SELECT * FROM m WHERE value IS NOT NULL),
-         r AS (SELECT rid, variable, value,
-                 row_number() OVER (PARTITION BY variable ORDER BY value, rid) - 1
-                   AS rank
-               FROM f),
-         rm AS (SELECT rank, avg(value) AS nv FROM r GROUP BY 1)
-         SELECT r.rid, r.variable, round(rm.nv, 6) AS normalized
-         FROM r JOIN rm USING (rank) ORDER BY rid, variable""",
-
-    "modify_upsert" ->
-      """SELECT c_custkey, c_mktsegment, round(round(c_acctbal * 2, 2), 2) AS c_acctbal
-         FROM customer WHERE c_custkey % 10 = 0
-         UNION ALL
-         SELECT c_custkey, c_mktsegment, round(c_acctbal, 2)
-         FROM customer WHERE c_custkey % 10 <> 0
-         ORDER BY c_custkey""",
-
-    "describe_quality_rules" ->
-      """WITH s AS (SELECT count(*) AS n,
-             sum(CASE WHEN coalesce(l_quantity > 0, false) THEN 1 ELSE 0 END) AS p0,
-             sum(CASE WHEN coalesce(l_discount >= 0 AND l_discount <= 0.1, false)
-                 THEN 1 ELSE 0 END) AS p1,
-             sum(CASE WHEN coalesce(l_returnflag IN ('A','N','R'), false)
-                 THEN 1 ELSE 0 END) AS p2,
-             sum(CASE WHEN l_extendedprice IS NOT NULL THEN 1 ELSE 0 END) AS p3,
-             sum(CASE WHEN coalesce(l_tax < l_discount, false)
-                 THEN 1 ELSE 0 END) AS p4
-           FROM lineitem),
-         r AS (
-           SELECT 'quantity_positive' AS rule, p0 AS passed, n FROM s
-           UNION ALL SELECT 'discount_in_range', p1, n FROM s
-           UNION ALL SELECT 'returnflag_domain', p2, n FROM s
-           UNION ALL SELECT 'price_not_null', p3, n FROM s
-           UNION ALL SELECT 'tax_lt_discount', p4, n FROM s)
-         SELECT rule, n AS n_rows, CAST(passed AS BIGINT) AS passed,
-           CAST(n - passed AS BIGINT) AS failed,
-           round(CAST(passed AS DOUBLE) / n, 6) AS pass_rate
-         FROM r ORDER BY rule""",
-
-    "modify_diff_snapshots" ->
-      """WITH o AS (SELECT * FROM customer),
-         nn AS (SELECT c_custkey, c_name, c_nationkey,
-                  CASE WHEN c_custkey % 10 = 0 THEN round(c_acctbal * 2, 2)
-                       ELSE c_acctbal END AS c_acctbal,
-                  c_mktsegment
-                FROM customer WHERE c_custkey % 97 <> 0),
-         j AS (SELECT o.c_custkey IS NOT NULL AS in_old,
-                 nn.c_custkey IS NOT NULL AS in_new,
-                 (o.c_name IS NOT DISTINCT FROM nn.c_name)
-                   AND (o.c_nationkey IS NOT DISTINCT FROM nn.c_nationkey)
-                   AND (o.c_acctbal IS NOT DISTINCT FROM nn.c_acctbal)
-                   AND (o.c_mktsegment IS NOT DISTINCT FROM nn.c_mktsegment) AS same
-               FROM o FULL OUTER JOIN nn ON o.c_custkey = nn.c_custkey)
-         SELECT CASE WHEN NOT in_old THEN 'added'
-                     WHEN NOT in_new THEN 'removed'
-                     WHEN same THEN 'unchanged' ELSE 'changed' END AS row_status,
-           count(*) AS n
-         FROM j GROUP BY 1 ORDER BY 1""",
-
-    "describe_gini" ->
-      """WITH r AS (SELECT l_returnflag, l_extendedprice,
-             row_number() OVER (PARTITION BY l_returnflag
-               ORDER BY l_extendedprice, l_orderkey, l_linenumber) AS i
-           FROM lineitem)
-         SELECT l_returnflag, count(*) AS n,
-           round(CAST(2.0 AS DOUBLE) * sum(i * l_extendedprice)
-               / (count(*) * sum(l_extendedprice))
-             - (count(*) + CAST(1.0 AS DOUBLE)) / count(*), 6) AS gini
-         FROM r GROUP BY 1 ORDER BY 1""",
-
-    "describe_weighted_median" ->
-      """WITH b AS (SELECT l_returnflag, l_extendedprice,
-             sum(l_quantity) OVER (PARTITION BY l_returnflag
-               ORDER BY l_extendedprice) AS cw,
-             sum(l_quantity) OVER (PARTITION BY l_returnflag) AS tw
-           FROM lineitem
-           WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL)
-         SELECT l_returnflag,
-           round(min(l_extendedprice), 4) AS weighted_median,
-           round(max(tw), 2) AS total_weight
-         FROM b WHERE cw >= tw * 0.5
-         GROUP BY 1 ORDER BY 1""",
-
-    "describe_bootstrap_ci" ->
-      """WITH s AS (SELECT CAST(l_extendedprice AS DOUBLE) AS x,
-             (('0x' || substr(md5(concat(CAST(l_orderkey AS VARCHAR), '_',
-                 CAST(l_linenumber AS VARCHAR))), 1, 12))::BIGINT)
-               % 2147483647 AS h
-           FROM lineitem WHERE l_extendedprice IS NOT NULL),
-         e AS (SELECT x, h, g.r FROM s CROSS JOIN
-               (SELECT unnest(generate_series(0, 49)) AS r) g),
-         w AS (SELECT r, x,
-             CASE WHEN u < 790015083 THEN 0
-                  WHEN u < 1580030167 THEN 1
-                  WHEN u < 1975037709 THEN 2
-                  WHEN u < 2106706890 THEN 3
-                  WHEN u < 2139624185 THEN 4
-                  WHEN u < 2146207644 THEN 5
-                  ELSE 6 END AS wt
-           FROM (SELECT x, r,
-                   (((r * 2654435761 + 1) % 2147483647) * h
-                     + (r * 40503 + 7) % 2147483647) % 2147483647 AS u
-                 FROM e)),
-         m AS (SELECT r, sum(wt * x) / sum(wt) AS mm FROM w GROUP BY r),
-         ci AS (SELECT stddev_samp(mm) AS se_boot,
-                quantile_cont(mm, [0.025, 0.5, 0.975]) AS q FROM m),
-         b AS (SELECT count(*) AS n, avg(x) AS mean FROM s)
-         SELECT n, round(mean, 4) AS mean, round(se_boot, 4) AS se_boot,
-           round(q[1], 4) AS ci_lo, round(q[2], 4) AS ci_p50,
-           round(q[3], 4) AS ci_hi
-         FROM b, ci""",
-
-    "describe_entropy" ->
-      """WITH m AS (
-           SELECT 'o_orderstatus' AS variable, CAST(o_orderstatus AS VARCHAR) AS value FROM orders
-           UNION ALL SELECT 'o_orderpriority', CAST(o_orderpriority AS VARCHAR) FROM orders),
-         c AS (SELECT variable, value, count(*) AS n FROM m
-               WHERE value IS NOT NULL GROUP BY 1, 2)
-         SELECT variable, count(*) AS n_levels, CAST(sum(n) AS BIGINT) AS total,
-           round(ln(sum(n)) - sum(n * ln(n)) / sum(n), 6) AS entropy_nats
-         FROM c GROUP BY 1 ORDER BY 1""",
-
-    "events_funnel_windowed" ->
-      """WITH v AS (SELECT user_id, epoch_ns(ts) // 1000 AS t FROM events
-             WHERE event_type = 'view'),
-         c AS (SELECT user_id, epoch_ns(ts) // 1000 AS t FROM events
-             WHERE event_type = 'click'),
-         p AS (SELECT user_id, epoch_ns(ts) // 1000 AS t FROM events
-             WHERE event_type = 'purchase'),
-         vc AS (SELECT v.user_id, v.t,
-                  (SELECT min(c.t) FROM c
-                   WHERE c.user_id = v.user_id AND c.t >= v.t) AS tc0
-                FROM v),
-         vc2 AS (SELECT user_id, t,
-                   CASE WHEN tc0 IS NOT NULL AND tc0 - t <= 86400000000
-                        THEN tc0 END AS tc
-                 FROM vc),
-         vcp AS (SELECT vc2.user_id, vc2.t, vc2.tc,
-                   CASE WHEN vc2.tc IS NOT NULL THEN
-                     (SELECT min(p.t) FROM p
-                      WHERE p.user_id = vc2.user_id AND p.t >= vc2.tc) END AS tp0
-                 FROM vc2),
-         f AS (SELECT user_id, t, tc,
-                 CASE WHEN tp0 IS NOT NULL AND tp0 - tc <= 86400000000
-                      THEN tp0 END AS tp FROM vcp)
-         SELECT count(*) AS n_views,
-           CAST(sum(CASE WHEN tc IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS clicked_24h,
-           CAST(sum(CASE WHEN tc IS NOT NULL AND tp IS NOT NULL
-                    THEN 1 ELSE 0 END) AS BIGINT) AS full_24h
-         FROM f""",
-
-    "graph_triangles" ->
-      """WITH eall AS (SELECT cn.n_name AS a0, sn.n_name AS b0,
-             sum(l_extendedprice * (1.0 - l_discount)) AS w
-           FROM lineitem
-           JOIN orders ON l_orderkey = o_orderkey
-           JOIN customer ON o_custkey = c_custkey
-           JOIN supplier ON l_suppkey = s_suppkey
-           JOIN nation cn ON c_nationkey = cn.n_nationkey
-           JOIN nation sn ON s_nationkey = sn.n_nationkey
-           WHERE cn.n_name <> sn.n_name
-           GROUP BY 1, 2),
-         e AS (SELECT DISTINCT least(a0, b0) AS a, greatest(a0, b0) AS b
-               FROM eall WHERE w > (SELECT avg(w) FROM eall)),
-         tri AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z
-                 FROM e e1 JOIN e e2 ON e1.b = e2.a
-                 JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-         n AS (SELECT unnest([x, y, z]) AS node FROM tri)
-         SELECT node, count(*) AS n_triangles FROM n GROUP BY 1 ORDER BY 1""",
-
-    "events_markov" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS t,
-             event_type FROM events),
-         s AS (SELECT event_type,
-                 lead(event_type) OVER
-                   (PARTITION BY user_id ORDER BY t, event_id) AS next_type
-               FROM e),
-         c AS (SELECT event_type AS from_type, next_type AS to_type,
-                 count(*) AS n
-               FROM s WHERE next_type IS NOT NULL GROUP BY 1, 2)
-         SELECT from_type, to_type, n,
-           round(CAST(n AS DOUBLE) /
-             sum(n) OVER (PARTITION BY from_type), 6) AS p
-         FROM c ORDER BY 1, 2""",
-
-    "events_sliding_distinct" ->
-      """WITH w AS (SELECT user_id, event_type,
-             date_trunc('hour', ts) - to_hours(g.k) AS w_start
-           FROM events CROSS JOIN (SELECT unnest([0, 1, 2]) AS k) g)
-         SELECT CAST(floor(epoch(w_start)) AS BIGINT) AS w_start, event_type,
-           count(DISTINCT user_id) AS n_users
-         FROM w GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "events_scd2" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_ns(ts) // 1000 AS t,
-             event_type FROM events),
-         d AS (SELECT *, lag(event_type) OVER
-                 (PARTITION BY user_id ORDER BY t, event_id) AS prev FROM e),
-         f AS (SELECT user_id, event_id, t, event_type FROM d
-               WHERE prev IS NULL OR prev <> event_type),
-         g AS (SELECT user_id, event_type, t AS valid_from,
-                 lead(t) OVER (PARTITION BY user_id ORDER BY t, event_id)
-                   AS valid_to FROM f)
-         SELECT user_id, event_type, valid_from, valid_to,
-           valid_to IS NULL AS is_current
-         FROM g ORDER BY user_id, valid_from""",
-
-    "events_retention" ->
-      """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS d FROM events),
-         f AS (SELECT user_id, min(d) AS cohort_d FROM e GROUP BY 1)
-         SELECT strftime(cohort_d, '%Y-%m-%d') AS cohort_day,
-           CAST(date_diff('day', cohort_d, d) AS INT) AS day_offset,
-           count(DISTINCT e.user_id) AS n_users
-         FROM e JOIN f ON e.user_id = f.user_id
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "events_moving_avg" ->
-      s"""WITH e AS (SELECT event_type, epoch_ns(ts) // 1000 AS t, value,
-             CAST(round(value * 100) AS BIGINT) AS cents
-           FROM events WHERE event_type = 'purchase'),
-         win AS (SELECT event_type, t, round(value, 4) AS value,
-             count(*) OVER w AS n_win,
-             CAST(sum(cents) OVER w AS DOUBLE) / (count(*) OVER w * 100.0) AS ma0
-           FROM e
-           WINDOW w AS (PARTITION BY event_type ORDER BY t
-             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW))
-         SELECT event_type, t, value, n_win, ${sqlSig6("ma0")} AS ma
-         FROM win ORDER BY 1, 2""",
-
-    "graph_kcore" -> kCoreGraphOracleSql(k = 3, rounds = 12),
-
-    "graph_lpa" -> lpaOracleSql(rounds = 3),
-
-    "graph_pagerank" ->
-      """WITH e AS (SELECT cn.n_name AS src, sn.n_name AS dst,
-             sum(l_extendedprice * (1.0 - l_discount)) AS w
-           FROM lineitem
-           JOIN orders ON l_orderkey = o_orderkey
-           JOIN customer ON o_custkey = c_custkey
-           JOIN supplier ON l_suppkey = s_suppkey
-           JOIN nation cn ON c_nationkey = cn.n_nationkey
-           JOIN nation sn ON s_nationkey = sn.n_nationkey
-           GROUP BY 1, 2),
-         nodes AS (SELECT DISTINCT node FROM
-           (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-         nn AS (SELECT count(*) AS n FROM nodes),
-         en AS (SELECT src, dst,
-                  w / sum(w) OVER (PARTITION BY src) AS wn FROM e),
-         r0 AS (SELECT node, 1.0 / n AS rank FROM nodes, nn),
-         r1 AS (SELECT nodes.node,
-                  0.15 / n + 0.85 * coalesce(sum(en.wn * r0.rank), 0) AS rank
-                FROM nodes CROSS JOIN nn
-                LEFT JOIN en ON en.dst = nodes.node
-                LEFT JOIN r0 ON r0.node = en.src
-                GROUP BY nodes.node, n),
-         r2 AS (SELECT nodes.node,
-                  0.15 / n + 0.85 * coalesce(sum(en.wn * r1.rank), 0) AS rank
-                FROM nodes CROSS JOIN nn
-                LEFT JOIN en ON en.dst = nodes.node
-                LEFT JOIN r1 ON r1.node = en.src
-                GROUP BY nodes.node, n),
-         r3 AS (SELECT nodes.node,
-                  0.15 / n + 0.85 * coalesce(sum(en.wn * r2.rank), 0) AS rank
-                FROM nodes CROSS JOIN nn
-                LEFT JOIN en ON en.dst = nodes.node
-                LEFT JOIN r2 ON r2.node = en.src
-                GROUP BY nodes.node, n)
-         SELECT node, round(rank, 7) AS rank FROM r3 ORDER BY node""",
-
-    "graph_pagerank_dangling" ->
-      """WITH e AS (SELECT cn.n_name AS src, sn.n_name AS dst,
-             sum(l_extendedprice * (1.0 - l_discount)) AS w
-           FROM lineitem
-           JOIN orders ON l_orderkey = o_orderkey
-           JOIN customer ON o_custkey = c_custkey
-           JOIN supplier ON l_suppkey = s_suppkey
-           JOIN nation cn ON c_nationkey = cn.n_nationkey
-           JOIN nation sn ON s_nationkey = sn.n_nationkey
-           WHERE cn.n_name < sn.n_name
-           GROUP BY 1, 2),
-         nodes AS (SELECT DISTINCT node FROM
-           (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-         nn AS (SELECT count(*) AS n FROM nodes),
-         en AS (SELECT src, dst,
-                  w / sum(w) OVER (PARTITION BY src) AS wn FROM e),
-         dang AS (SELECT node FROM nodes
-                  WHERE node NOT IN (SELECT DISTINCT src FROM e)),
-         r0 AS (SELECT node, 1.0 / n AS rank FROM nodes, nn),
-         d0 AS (SELECT coalesce(sum(rank), 0) AS dm FROM r0 JOIN dang USING (node)),
-         r1 AS (SELECT nodes.node,
-                  0.15 / n + 0.85 * (coalesce(sum(en.wn * r0.rank), 0) + dm / n) AS rank
-                FROM nodes CROSS JOIN nn CROSS JOIN d0
-                LEFT JOIN en ON en.dst = nodes.node
-                LEFT JOIN r0 ON r0.node = en.src
-                GROUP BY nodes.node, n, dm),
-         d1 AS (SELECT coalesce(sum(rank), 0) AS dm FROM r1 JOIN dang USING (node)),
-         r2 AS (SELECT nodes.node,
-                  0.15 / n + 0.85 * (coalesce(sum(en.wn * r1.rank), 0) + dm / n) AS rank
-                FROM nodes CROSS JOIN nn CROSS JOIN d1
-                LEFT JOIN en ON en.dst = nodes.node
-                LEFT JOIN r1 ON r1.node = en.src
-                GROUP BY nodes.node, n, dm),
-         d2 AS (SELECT coalesce(sum(rank), 0) AS dm FROM r2 JOIN dang USING (node)),
-         r3 AS (SELECT nodes.node,
-                  0.15 / n + 0.85 * (coalesce(sum(en.wn * r2.rank), 0) + dm / n) AS rank
-                FROM nodes CROSS JOIN nn CROSS JOIN d2
-                LEFT JOIN en ON en.dst = nodes.node
-                LEFT JOIN r2 ON r2.node = en.src
-                GROUP BY nodes.node, n, dm)
-         SELECT node, round(rank, 7) AS rank FROM r3 ORDER BY node""",
-
-    "layout_zorder" ->
-      """WITH b AS (SELECT min(l_partkey) AS mnx, max(l_partkey) AS mxx,
-             min(l_suppkey) AS mny, max(l_suppkey) AS mxy FROM lineitem),
-         z AS (SELECT l_partkey, l_suppkey,
-             ((l_partkey - mnx) * 63) // greatest(mxx - mnx, 1) AS bx,
-             ((l_suppkey - mny) * 63) // greatest(mxy - mny, 1) AS by
-           FROM lineitem, b),
-         zz AS (SELECT l_partkey, l_suppkey,
-             CAST((((bx >> 0) & 1) << 0) + (((by >> 0) & 1) << 1) +
-             (((bx >> 1) & 1) << 2) + (((by >> 1) & 1) << 3) +
-             (((bx >> 2) & 1) << 4) + (((by >> 2) & 1) << 5) +
-             (((bx >> 3) & 1) << 6) + (((by >> 3) & 1) << 7) +
-             (((bx >> 4) & 1) << 8) + (((by >> 4) & 1) << 9) +
-             (((bx >> 5) & 1) << 10) + (((by >> 5) & 1) << 11) AS BIGINT)
-               AS zcell
-           FROM z)
-         SELECT zcell, count(*) AS n_rows,
-           min(l_partkey) AS x_min, max(l_partkey) AS x_max,
-           min(l_suppkey) AS y_min, max(l_suppkey) AS y_max
-         FROM zz GROUP BY 1 ORDER BY 1""",
-
-    "describe_skew_report" ->
-      """WITH c AS (SELECT CAST(event_type AS VARCHAR) AS key, count(*) AS cnt
-                    FROM events GROUP BY 1),
-         s AS (SELECT CAST(sum(cnt) AS BIGINT) AS total_rows,
-                 count(*) AS n_keys, max(cnt) AS max_cnt FROM c),
-         t AS (SELECT key, cnt FROM c ORDER BY cnt DESC, key ASC NULLS FIRST LIMIT 5)
-         SELECT key, cnt, total_rows, n_keys,
-           round(CAST(cnt AS DOUBLE) / total_rows, 6) AS share,
-           round(CAST(max_cnt AS DOUBLE) * n_keys / total_rows, 6) AS skew_ratio
-         FROM t, s ORDER BY cnt DESC, key ASC NULLS FIRST""",
-
-    "describe_mutual_info" -> {
-      def pairSql(a: String, b: String): String =
-        s"""SELECT '$a' AS var_a, '$b' AS var_b, n,
-           round(mi, 6) AS mi, round(nmi, 6) AS nmi
-         FROM (
-           WITH li AS (SELECT l_returnflag, l_linestatus,
-               CAST(month(l_shipdate) AS VARCHAR) AS ship_mon FROM lineitem),
-           cc AS (SELECT CAST($a AS VARCHAR) AS la, CAST($b AS VARCHAR) AS lb
-               FROM li
-               WHERE l_returnflag IS NOT NULL AND l_linestatus IS NOT NULL
-                 AND ship_mon IS NOT NULL),
-           cells AS (SELECT la, lb, count(*) AS n FROM cc GROUP BY 1, 2),
-           rt AS (SELECT la, sum(n) AS ra FROM cells GROUP BY 1),
-           ct AS (SELECT lb, sum(n) AS cb FROM cells GROUP BY 1),
-           tot AS (SELECT sum(n) AS nn FROM cells),
-           m AS (SELECT CAST(max(nn) AS BIGINT) AS n,
-               sum((CAST(cells.n AS DOUBLE) / nn) *
-                   ln(CAST(cells.n AS DOUBLE) * nn / (CAST(ra AS DOUBLE) * cb))) AS mi
-             FROM cells JOIN rt USING (la) JOIN ct USING (lb) CROSS JOIN tot),
-           h1 AS (SELECT sum(-(CAST(ra AS DOUBLE) / nn) * ln(CAST(ra AS DOUBLE) / nn)) AS ha
-                  FROM rt CROSS JOIN tot),
-           h2 AS (SELECT sum(-(CAST(cb AS DOUBLE) / nn) * ln(CAST(cb AS DOUBLE) / nn)) AS hb
-                  FROM ct CROSS JOIN tot)
-           SELECT m.n, m.mi,
-             CASE WHEN ha > 0 AND hb > 0 THEN m.mi / sqrt(ha * hb) ELSE 0.0 END AS nmi
-           FROM m CROSS JOIN h1 CROSS JOIN h2)"""
-      Seq(("l_returnflag", "l_linestatus"), ("l_returnflag", "ship_mon"),
-        ("l_linestatus", "ship_mon")).map { case (x, y) => pairSql(x, y) }
-        .mkString("SELECT * FROM (\n", "\nUNION ALL\n", "\n) ORDER BY var_a, var_b")
-    },
-
-    // thresholds built with the SAME scanLeft the operator uses: 0.8+0.1
-    // in doubles is 0.9000000000000001, and the hex threshold must match
-    // that value bit-for-bit, not a literal 0.9
-    "sample_split" -> {
-      val cum = Seq(0.8, 0.1, 0.1).scanLeft(0.0)(_ + _).drop(1)
-      val (t1, t2) = (Sampling.hexThreshold(cum(0)), Sampling.hexThreshold(cum(1)))
-      s"""WITH f AS (SELECT doc_id,
-             substr(md5(md5(trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')))), 1, 15) AS b
-           FROM documents),
-         s AS (SELECT doc_id,
-             CASE WHEN b < '$t1' THEN 'train'
-                  WHEN b < '$t2' THEN 'val' ELSE 'test' END AS split
-           FROM f)
-         SELECT split, count(*) AS n_docs, CAST(sum(doc_id) AS BIGINT) AS id_sum
-         FROM s GROUP BY 1 ORDER BY 1"""
-    },
-
-    "pipeline_release_e2e" -> {
-      // every stage replayed in one chain: run-break components -> rep ->
-      // md5 split thresholds -> train slice -> sqrt-weight quotas within
-      // the train slice -> shard/checksum manifest of the survivors
-      val cum = Seq(0.8, 0.1, 0.1).scanLeft(0.0)(_ + _).drop(1)
-      val (t1, t2) = (Sampling.hexThreshold(cum(0)), Sampling.hexThreshold(cum(1)))
-      s"""WITH d AS (SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS t
-                    FROM documents),
-         sh AS (SELECT doc_id, list_distinct(CASE WHEN length(t) <= 4 THEN [t]
-                  ELSE list_transform(range(length(t) - 3), i -> substr(t, CAST(i AS INT) + 1, 4)) END) AS s
-                FROM d),
-         j AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
-                 len(list_intersect(a.s, b.s)) * 1.0 / len(list_distinct(list_concat(a.s, b.s))) AS jac
-               FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1),
-         e AS (SELECT id1, id2 FROM j WHERE jac >= 0.3),
-         n AS (SELECT DISTINCT id FROM (SELECT id1 AS id FROM e UNION ALL SELECT id2 AS id FROM e)),
-         m AS (SELECT id, CASE WHEN EXISTS (SELECT 1 FROM e WHERE e.id1 = n.id - 1 AND e.id2 = n.id)
-                 THEN 0 ELSE 1 END AS brk FROM n),
-         r AS (SELECT id, sum(brk) OVER (ORDER BY id) AS grp FROM m),
-         c AS (SELECT id, min(id) OVER (PARTITION BY grp) AS component FROM r),
-         k AS (SELECT doc_id, source, text,
-                 coalesce(CAST(c.component AS VARCHAR), CAST(doc_id AS VARCHAR)) AS rep
-               FROM documents LEFT JOIN c ON c.id = documents.doc_id),
-         tr AS (SELECT doc_id, source, text FROM k
-                WHERE substr(md5(rep), 1, 15) < '$t1'),
-         tc AS (SELECT source AS domain, count(*) AS n FROM tr GROUP BY 1),
-         p AS (SELECT domain, sqrt(CAST(n AS DOUBLE)) AS w, CAST(n AS DOUBLE) AS n
-               FROM tc WHERE n > 0),
-         f AS (SELECT min(n / w) AS bigt FROM p),
-         q AS (SELECT domain,
-                 least(CAST(n AS BIGINT),
-                   CAST(floor(w * (SELECT bigt FROM f) + 1e-9) AS BIGINT)) AS quota
-               FROM p),
-         rk AS (SELECT tr.doc_id, tr.source, tr.text,
-                 row_number() OVER (PARTITION BY tr.source
-                   ORDER BY substr(md5(CAST(tr.doc_id AS VARCHAR)), 1, 15),
-                            CAST(tr.doc_id AS VARCHAR)) AS rn
-               FROM tr JOIN q ON tr.source = q.domain),
-         mx AS (SELECT doc_id, text FROM rk JOIN q ON rk.source = q.domain
-                WHERE rn <= quota),
-         sm AS (SELECT
-             CAST(('0x' || substr(md5('release1:' || CAST(doc_id AS VARCHAR)), 1, 13)) AS BIGINT) % 8 AS shard_id,
-             CAST(('0x' || substr(md5(trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g'))), 1, 10)) AS BIGINT) AS sig
-           FROM mx)
-         SELECT shard_id, count(*) AS n_docs, CAST(sum(sig) AS BIGINT) AS content_checksum
-         FROM sm GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-
-    "sample_shard_manifest" ->
-      // shard = 52-bit seeded-key prefix mod 32; checksum = exact int64
-      // sum of 40-bit fingerprint prefixes (order-free in any engine)
-      """WITH s AS (SELECT
-             CAST(('0x' || substr(md5('release1:' || CAST(doc_id AS VARCHAR)), 1, 13)) AS BIGINT) % 32 AS shard_id,
-             CAST(('0x' || substr(md5(trim(regexp_replace(lower(text), '[ \t\n\x0B\f\r]+', ' ', 'g'))), 1, 10)) AS BIGINT) AS sig
-           FROM documents)
-         SELECT shard_id, count(*) AS n_docs, CAST(sum(sig) AS BIGINT) AS content_checksum
-         FROM s GROUP BY 1 ORDER BY 1""",
-
-    "sample_epoch_mix" ->
-      """WITH d AS (SELECT lang AS domain,
-             CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT) AS n
-           FROM documents WHERE lang IS NOT NULL GROUP BY 1),
-         p AS (SELECT CAST((SELECT sum(n) FROM d) // 2 AS BIGINT) AS budget),
-         o AS (SELECT domain, n, CAST(n * 4 AS BIGINT) AS cap,
-             row_number() OVER (ORDER BY n * 4, domain) - 1 AS idx,
-             CAST(coalesce(sum(n * 4) OVER (ORDER BY n * 4, domain
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS prefix,
-             count(*) OVER () AS dd,
-             CAST(sum(n * 4) OVER () AS BIGINT) AS totcap
-           FROM d),
-         jl AS (SELECT min(idx) AS j FROM o, p WHERE prefix + (dd - idx) * cap >= budget),
-         lv AS (SELECT (budget - o.prefix) / CAST(o.dd - o.idx AS DOUBLE) AS line
-                FROM o, jl, p WHERE o.idx = jl.j),
-         f AS (SELECT domain, n AS n_tokens, cap,
-             CASE WHEN totcap <= budget THEN CAST(cap AS DOUBLE)
-                  WHEN idx < jl.j THEN CAST(cap AS DOUBLE) ELSE line END AS alloc
-           FROM o, jl, lv, p)
-         SELECT domain, n_tokens, cap, round(alloc, 6) AS alloc,
-           round(alloc / n_tokens, 6) AS epochs
-         FROM f ORDER BY domain""",
-
-    "sample_temperature_mix" ->
-      // the domain-mix quota replay with data-derived sqrt(n) weights —
-      // scale-invariant quotas, so no normalizer sum enters the floats
-      """WITH c AS (SELECT source AS domain, count(*) AS n FROM documents GROUP BY 1),
-         p AS (SELECT domain, sqrt(CAST(n AS DOUBLE)) AS w, CAST(n AS DOUBLE) AS n
-               FROM c WHERE n > 0),
-         f AS (SELECT min(n / w) AS bigt FROM p),
-         q AS (SELECT domain,
-                 least(CAST(n AS BIGINT),
-                   CAST(floor(w * (SELECT bigt FROM f) + 1e-9) AS BIGINT)) AS quota
-               FROM p),
-         r AS (SELECT d.doc_id, d.source,
-                 row_number() OVER (PARTITION BY d.source
-                   ORDER BY substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15),
-                            CAST(d.doc_id AS VARCHAR)) AS rn
-               FROM documents d JOIN q ON d.source = q.domain)
-         SELECT source, count(*) AS n_docs, CAST(sum(doc_id) AS BIGINT) AS id_sum
-         FROM r JOIN q ON r.source = q.domain WHERE rn <= quota
-         GROUP BY 1 ORDER BY 1""",
-
-    "sample_dsir" ->
-      // same add-1-smoothed unigram likelihood ratio; per-word micro-nat
-      // quantization BEFORE the per-doc sum makes the aggregate exact
-      // int64 (no float summation-order sensitivity between engines)
-      s"""WITH $dsirScoreCtes
-         SELECT doc_id, n_tokens, score_unats
-         FROM sc ORDER BY score_unats DESC, doc_id ASC LIMIT 20""",
-
-    "sample_dsir_resample" ->
-      // the selection step: Efraimidis–Spirakis with w = exp(score), the
-      // same A-ES replay sample_weighted uses (13-hex exact-double u)
-      s"""WITH $dsirScoreCtes,
-         es AS (SELECT doc_id, n_tokens, score_unats,
-             pow((CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 13)) AS BIGINT) + 1)
-                   / 4503599627370496.0,
-                 1.0 / exp(score_unats / 1000000.0)) AS es
-           FROM sc),
-         r AS (SELECT doc_id, n_tokens, score_unats,
-             row_number() OVER (ORDER BY es DESC, CAST(doc_id AS VARCHAR) ASC) AS rn
-           FROM es)
-         SELECT doc_id, n_tokens, score_unats FROM r WHERE rn <= 25
-         ORDER BY doc_id""",
-
-    "sample_component_split" -> {
-      // run-break chain components (the dedup_components replay, full
-      // table) -> representative = numeric-min id -> md5 split thresholds
-      val cum = Seq(0.8, 0.1, 0.1).scanLeft(0.0)(_ + _).drop(1)
-      val (t1, t2) = (Sampling.hexThreshold(cum(0)), Sampling.hexThreshold(cum(1)))
-      s"""WITH d AS (SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS t
-                    FROM documents),
-         sh AS (SELECT doc_id, list_distinct(CASE WHEN length(t) <= 4 THEN [t]
-                  ELSE list_transform(range(length(t) - 3), i -> substr(t, CAST(i AS INT) + 1, 4)) END) AS s
-                FROM d),
-         j AS (SELECT a.doc_id AS id1, b.doc_id AS id2,
-                 len(list_intersect(a.s, b.s)) * 1.0 / len(list_distinct(list_concat(a.s, b.s))) AS jac
-               FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1),
-         e AS (SELECT id1, id2 FROM j WHERE jac >= 0.3),
-         n AS (SELECT DISTINCT id FROM (SELECT id1 AS id FROM e UNION ALL SELECT id2 AS id FROM e)),
-         m AS (SELECT id, CASE WHEN EXISTS (SELECT 1 FROM e WHERE e.id1 = n.id - 1 AND e.id2 = n.id)
-                 THEN 0 ELSE 1 END AS brk FROM n),
-         r AS (SELECT id, sum(brk) OVER (ORDER BY id) AS grp FROM m),
-         c AS (SELECT id, min(id) OVER (PARTITION BY grp) AS component FROM r),
-         k AS (SELECT doc_id, coalesce(CAST(c.component AS VARCHAR), CAST(doc_id AS VARCHAR)) AS rep
-               FROM documents LEFT JOIN c ON c.id = documents.doc_id),
-         sp AS (SELECT doc_id, rep,
-                 CASE WHEN substr(md5(rep), 1, 15) < '$t1' THEN 'train'
-                      WHEN substr(md5(rep), 1, 15) < '$t2' THEN 'val' ELSE 'test' END AS split
-                FROM k)
-         SELECT split, count(*) AS n_docs, count(DISTINCT rep) AS n_groups,
-           CAST(sum(doc_id) AS BIGINT) AS id_sum
-         FROM sp GROUP BY 1 ORDER BY 1"""
-    },
-
-    "sample_stratified" ->
-      """WITH r AS (SELECT lang, doc_id,
-             row_number() OVER (PARTITION BY lang
-               ORDER BY substr(md5(CAST(doc_id AS VARCHAR)), 1, 15), CAST(doc_id AS VARCHAR)) AS rn
-           FROM documents)
-         SELECT lang, doc_id FROM r WHERE rn <= 20 ORDER BY lang, doc_id""",
-
-    // mixture quotas replayed in DOUBLE arithmetic to match the JVM exactly
-    "sample_domain_mix" ->
-      """WITH t(domain, w) AS (VALUES ('src0', 0.5), ('src1', 0.3), ('src2', 0.2)),
-         c AS (SELECT source AS domain, count(*) AS n FROM documents GROUP BY 1),
-         p AS (SELECT t.domain, CAST(t.w AS DOUBLE) AS w, CAST(c.n AS DOUBLE) AS n
-               FROM t JOIN c USING (domain) WHERE t.w > 0 AND c.n > 0),
-         f AS (SELECT min(n / w) AS bigt FROM p),
-         q AS (SELECT domain,
-                 least(CAST(n AS BIGINT),
-                   CAST(floor(w * (SELECT bigt FROM f) + 1e-9) AS BIGINT)) AS quota
-               FROM p),
-         r AS (SELECT d.doc_id, d.source,
-                 row_number() OVER (PARTITION BY d.source
-                   ORDER BY substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15),
-                            CAST(d.doc_id AS VARCHAR)) AS rn
-               FROM documents d JOIN q ON d.source = q.domain)
-         SELECT doc_id, source FROM r JOIN q ON r.source = q.domain
-         WHERE rn <= quota ORDER BY doc_id""",
-
-    "text_heavy_hitters" ->
-      // plain GROUP BY + HAVING: the lossy-counting candidate pass is a
-      // guaranteed superset, so the engine's two-pass answer is EXACT
-      """WITH w AS (SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS word
-                    FROM documents),
-         ww AS (SELECT word FROM w WHERE word <> ''),
-         n AS (SELECT count(*) AS total FROM ww)
-         SELECT word, CAST(count(*) AS BIGINT) AS tf
-         FROM ww GROUP BY 1
-         HAVING count(*) >= (SELECT ceil(0.002 * total) FROM n)
-         ORDER BY tf DESC, word""",
-
-    "text_bpe_train" -> {
-      // chained-CTE replay of 8 BPE rounds (the Lloyd-iteration pattern):
-      // p_i = weighted adjacent-pair counts, b_i = argmax with the
-      // (count DESC, pair ASC) tie break, w_i = canonical greedy
-      // left-to-right merge via a list_reduce fold whose state string is
-      // "<merged>\x02<pending>" — byte-identical to the engine's
-      // functions.aggregate fold, including the `a a a a` -> `aa aa` run
-      // semantics a regexp replace cannot express
-      val n = 8
-      val sel = (1 to n).map(i =>
-        s"SELECT CAST($i AS INT) AS step, a AS lhs, b AS rhs, a || b AS merged, c AS pair_count FROM b$i")
-        .mkString(" UNION ALL ")
-      s"""WITH ${bpeTrainCtes(n)}
-         SELECT * FROM ($sel) ORDER BY step"""
-    },
-
-    "text_unigram_apply" -> {
-      // full unigram-LM training replay (seed -> EM x2 -> prune) + the
-      // final Viterbi apply, all as unrolled integer DP chains; words
-      // over 18 chars or with separator bytes char-fallback via the
-      // LEFT JOIN coalesce
-      s"""WITH $unigramTrainCtes
-         SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_words,
-           CAST(sum(c * length(word)) AS BIGINT) AS n_chars,
-           CAST(sum(c * coalesce(w.tok, length(word))) AS BIGINT)
-             AS n_unigram_tokens
-         FROM udwc LEFT JOIN wtok w USING (word)
-         WHERE doc_id < 300
-         GROUP BY 1 ORDER BY 1"""
-    },
-
-    "text_tokenizer_fertility_ab" -> {
-      // BOTH tokenizer-family training replays on the same corpus: the
-      // 8-round BPE chain and the unigram seed/EM/prune/apply chain,
-      // joined per language
-      val n = 8
-      s"""WITH ${bpeTrainCtes(n)},
-         dwords AS (SELECT doc_id,
-             unnest(string_split(trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ')) AS word
-           FROM documents),
-         dw0 AS (SELECT doc_id, word, array_to_string(list_transform(range(length(word)),
-                  k -> substr(word, CAST(k AS INT) + 1, 1)), ' ') AS sym
-                 FROM dwords WHERE length(word) > 0 AND NOT contains(word, chr(2))),
-         ${bpeApplyChainSql(n)},
-         perbpe AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-             CAST(sum(len(string_split(sym, ' '))) AS BIGINT) AS n_bpe
-           FROM dw$n GROUP BY 1),
-         $unigramTrainCtes,
-         peruni AS (SELECT doc_id,
-             CAST(sum(c * coalesce(w.tok, length(word))) AS BIGINT) AS n_uni
-           FROM udwc LEFT JOIN wtok w USING (word) GROUP BY 1)
-         SELECT d.lang, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(b.n_words) AS BIGINT) AS n_words,
-           CAST(sum(b.n_bpe) AS BIGINT) AS n_bpe_tokens,
-           CAST(sum(u.n_uni) AS BIGINT) AS n_unigram_tokens,
-           round(CAST(sum(b.n_bpe) AS DOUBLE) / CAST(sum(b.n_words) AS DOUBLE), 6)
-             AS bpe_fertility,
-           round(CAST(sum(u.n_uni) AS DOUBLE) / CAST(sum(b.n_words) AS DOUBLE), 6)
-             AS unigram_fertility
-         FROM perbpe b JOIN peruni u USING (doc_id)
-         JOIN documents d USING (doc_id)
-         WHERE d.lang IS NOT NULL
-         GROUP BY 1 ORDER BY 1"""
-    },
-
-    "text_bpe_fertility" -> {
-      // the same 8 trained rounds applied to EVERY document, rolled up
-      // per language over the per-doc word/char/token sums
-      val n = 8
-      s"""WITH ${bpeTrainCtes(n)},
-         dwords AS (SELECT doc_id,
-             unnest(string_split(trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ')) AS word
-           FROM documents),
-         dw0 AS (SELECT doc_id, word, array_to_string(list_transform(range(length(word)),
-                  k -> substr(word, CAST(k AS INT) + 1, 1)), ' ') AS sym
-                 FROM dwords WHERE length(word) > 0 AND NOT contains(word, chr(2))),
-         ${bpeApplyChainSql(n)},
-         perdoc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-             CAST(sum(length(word)) AS BIGINT) AS n_chars,
-             CAST(sum(len(string_split(sym, ' '))) AS BIGINT) AS n_bpe
-           FROM dw$n GROUP BY 1)
-         SELECT d.lang, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(p.n_words) AS BIGINT) AS n_words,
-           CAST(sum(p.n_bpe) AS BIGINT) AS n_bpe_tokens,
-           round(CAST(sum(p.n_bpe) AS DOUBLE) / CAST(sum(p.n_words) AS DOUBLE), 6) AS fertility,
-           round(CAST(sum(p.n_chars) AS DOUBLE) / CAST(sum(p.n_bpe) AS DOUBLE), 6) AS chars_per_token
-         FROM perdoc p JOIN documents d USING (doc_id)
-         WHERE d.lang IS NOT NULL
-         GROUP BY 1 ORDER BY 1"""
-    },
-
-    "text_bpe_apply" -> {
-      // the same 8 trained rounds, then the per-document words of the
-      // doc_id < 40 slice are folded through b1..b8 in learned order
-      val n = 8
-      val apply = bpeApplyChainSql(n)
-      s"""WITH ${bpeTrainCtes(n)},
-         dwords AS (SELECT doc_id,
-             unnest(string_split(trim(regexp_replace(lower(text), '[ \\t\\n\\x0B\\f\\r]+', ' ', 'g')), ' ')) AS word
-           FROM documents WHERE doc_id < 40),
-         dw0 AS (SELECT doc_id, word, array_to_string(list_transform(range(length(word)),
-                  k -> substr(word, CAST(k AS INT) + 1, 1)), ' ') AS sym
-                 FROM dwords WHERE length(word) > 0 AND NOT contains(word, chr(2))),
-         $apply
-         SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-           CAST(sum(length(word)) AS BIGINT) AS n_chars,
-           CAST(sum(len(string_split(sym, ' '))) AS BIGINT) AS n_bpe_tokens
-         FROM dw$n GROUP BY 1 ORDER BY 1"""
-    },
-
-    "text_good_turing" ->
-      """WITH w AS (SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS word
-             FROM documents),
-         wc AS (SELECT word, CAST(count(*) AS BIGINT) AS r FROM w
-                WHERE word <> '' GROUP BY 1),
-         coc AS (SELECT r, CAST(count(*) AS BIGINT) AS n_r FROM wc GROUP BY 1),
-         tot AS (SELECT CAST(sum(r) AS BIGINT) AS n,
-             CAST(count(*) FILTER (WHERE r = 1) AS BIGINT) AS n1 FROM wc)
-         SELECT coc.r, coc.n_r,
-           round((coc.r + 1) * CAST(nx.n_r AS DOUBLE) / coc.n_r, 6) AS r_star,
-           round(CAST(n1 AS DOUBLE) / n, 6) AS p_unseen
-         FROM coc LEFT JOIN coc nx ON nx.r = coc.r + 1 CROSS JOIN tot
-         WHERE coc.r <= 10 ORDER BY coc.r""",
-
-    "text_ccnet_buckets" -> {
-      val e1 = (1.0 / 3).toString
-      val e2 = (2.0 / 3).toString
-      s"""WITH w AS (SELECT doc_id,
-             unnest(string_split_regex(lower(trim(text)), '\\s+')) AS word
-           FROM documents),
-         wf AS (SELECT doc_id, word FROM w WHERE word <> ''),
-         top AS (SELECT word, count(*) AS c FROM wf GROUP BY 1
-                 ORDER BY c DESC, word ASC LIMIT 1000),
-         tot AS (SELECT count(*) AS t FROM wf),
-         vs AS (SELECT coalesce(sum(c), 0) AS iv, count(*) AS k FROM top),
-         docs AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-             round(-sum(ln((CAST(coalesce(top.c, t - iv) AS DOUBLE) + 1.0)
-                   / (t + 1.0 * (k + 1)))) / count(*), 6) AS nll6
-           FROM wf LEFT JOIN top USING (word) CROSS JOIN tot CROSS JOIN vs
-           GROUP BY doc_id, t, iv, k),
-         q AS (SELECT quantile_cont(nll6, [$e1, $e2]) AS qs FROM docs),
-         b AS (SELECT CASE WHEN nll6 <= qs[1] THEN 'head'
-                  WHEN nll6 <= qs[2] THEN 'middle' ELSE 'tail' END AS bucket,
-               nll6, n_tokens FROM docs, q)
-         SELECT bucket, CAST(count(*) AS BIGINT) AS n_docs,
-           round(avg(nll6), 6) AS mean_nll,
-           CAST(sum(n_tokens) AS BIGINT) AS n_tokens
-         FROM b GROUP BY 1 ORDER BY 1"""
-    },
-
-    "text_js_divergence" ->
-      """WITH wa AS (SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS word
-             FROM documents WHERE doc_id % 2 = 0),
-         wb AS (SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS word
-             FROM documents WHERE doc_id % 2 <> 0),
-         ca AS (SELECT word, CAST(count(*) AS BIGINT) AS na FROM wa WHERE word <> '' GROUP BY 1),
-         cb AS (SELECT word, CAST(count(*) AS BIGINT) AS nb FROM wb WHERE word <> '' GROUP BY 1),
-         j AS (SELECT word, CAST(coalesce(na, 0) AS BIGINT) AS na,
-             CAST(coalesce(nb, 0) AS BIGINT) AS nb
-           FROM ca FULL OUTER JOIN cb USING (word)),
-         t AS (SELECT CAST(sum(na) AS BIGINT) AS ta, CAST(sum(nb) AS BIGINT) AS tb,
-             CAST(count(*) FILTER (WHERE na > 0) AS BIGINT) AS vocab_a,
-             CAST(count(*) FILTER (WHERE nb > 0) AS BIGINT) AS vocab_b,
-             CAST(count(*) FILTER (WHERE na > 0 AND nb > 0) AS BIGINT) AS vocab_shared
-           FROM j),
-         c AS (SELECT
-             (CASE WHEN na > 0 THEN (CAST(na AS DOUBLE) / ta)
-                 * ln((CAST(na AS DOUBLE) / ta)
-                   / ((CAST(na AS DOUBLE) / ta + CAST(nb AS DOUBLE) / tb) / 2.0))
-               ELSE 0.0 END) * 0.5 +
-             (CASE WHEN nb > 0 THEN (CAST(nb AS DOUBLE) / tb)
-                 * ln((CAST(nb AS DOUBLE) / tb)
-                   / ((CAST(na AS DOUBLE) / ta + CAST(nb AS DOUBLE) / tb) / 2.0))
-               ELSE 0.0 END) * 0.5 AS contrib
-           FROM j, t)
-         SELECT ta AS n_a, tb AS n_b, vocab_a, vocab_b, vocab_shared,
-           round(sum(contrib), 6) AS js_nats,
-           round(sum(contrib) / ln(2.0), 6) AS js_norm
-         FROM c, t GROUP BY 1, 2, 3, 4, 5""",
-
-    "text_vocab_topk" ->
-      """WITH w AS (SELECT doc_id,
-             unnest(string_split_regex(lower(trim(text)), '\s+')) AS word
-           FROM documents)
-         SELECT word, CAST(count(*) AS BIGINT) AS tf,
-           CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-         FROM w WHERE word <> ''
-         GROUP BY 1 ORDER BY tf DESC, word LIMIT 100""",
-
-    "text_tfidf_topk" ->
-      """WITH toks AS (SELECT doc_id,
-             unnest(string_split_regex(lower(trim(text)), '\s+')) AS term
-           FROM documents),
-         tf AS (SELECT doc_id, term, count(*) AS tf
-                FROM toks WHERE term <> '' GROUP BY 1, 2),
-         dfq AS (SELECT term, count(*) AS df FROM tf
-                 GROUP BY 1 HAVING count(*) >= 2),
-         n AS (SELECT count(DISTINCT doc_id) AS n FROM documents),
-         sc AS (SELECT tf.doc_id, tf.term, tf.tf, dfq.df,
-             tf.tf * (ln((n.n + 1.0) / (dfq.df + 1.0)) + 1.0) AS tfidf
-           FROM tf JOIN dfq USING (term), n),
-         r AS (SELECT *, CAST(row_number() OVER (PARTITION BY doc_id
-                 ORDER BY tfidf DESC, term ASC) AS INT) AS rank FROM sc)
-         SELECT doc_id, term, CAST(tf AS BIGINT) AS tf, CAST(df AS BIGINT) AS df,
-           round(tfidf, 6) AS tfidf, rank
-         FROM r WHERE rank <= 3 ORDER BY doc_id, rank""",
-
-    "join_salted" ->
-      """SELECT s_nationkey, count(*) AS n,
-           round(sum(l_extendedprice), 2) AS revenue
-         FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-         GROUP BY 1 ORDER BY 1""",
-
-    "sample_contrastive_pairs" ->
-      """WITH base AS (SELECT doc_id, text FROM documents
-           UNION ALL SELECT doc_id + 10000, text FROM documents WHERE doc_id < 30),
-         c AS (SELECT CAST(doc_id AS VARCHAR) AS id,
-             md5(trim(regexp_replace(lower(text), '[ \t\n\x0B\f\r]+', ' ', 'g'))) AS f
-           FROM base),
-         r AS (SELECT f, min(id) AS component FROM c GROUP BY 1),
-         w AS (SELECT c.id, r.component FROM c JOIN r USING (f)),
-         pos AS (SELECT id AS anchor, component AS partner, 'pos' AS kind
-                 FROM w WHERE id <> component),
-         h AS (SELECT w.id, w.component,
-             row_number() OVER (ORDER BY md5('cp1:' || w.id), w.id) - 1 AS p
-           FROM w),
-         nn AS (SELECT count(*) AS n FROM c),
-         a AS (SELECT p1.anchor, h.p, h.component AS acomp
-               FROM (SELECT DISTINCT anchor FROM pos) p1
-               JOIN h ON h.id = p1.anchor),
-         negs AS (SELECT a.anchor, h2.id AS partner, 'neg' AS kind
-                  FROM a CROSS JOIN nn CROSS JOIN range(1, 3) j(j)
-                  JOIN h h2 ON h2.p = (a.p + j.j) % nn.n
-                  WHERE h2.component <> a.acomp)
-         SELECT anchor, partner, kind FROM pos
-         UNION ALL SELECT anchor, partner, kind FROM negs
-         ORDER BY anchor, kind, partner""",
-
-    "sample_corpus_shuffle" ->
-      """SELECT doc_id, lang,
-           CAST(row_number() OVER (
-             ORDER BY md5('epoch0:' || CAST(doc_id AS VARCHAR)),
-                      CAST(doc_id AS VARCHAR)) - 1 AS BIGINT) AS shuffle_pos
-         FROM documents ORDER BY doc_id""",
-
-    // independent replay of the curriculum arithmetic from a row_number()
-    // global rank (the engine derives the same rank from a range sort +
-    // partition offsets); ntile-of-rank is pure integer math both sides
-    "sample_curriculum" ->
-      """WITH d AS (SELECT doc_id,
-             CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-               x -> length(x) > 0)) AS DOUBLE) AS difficulty
-           FROM documents),
-         r AS (SELECT doc_id, difficulty,
-             row_number() OVER (ORDER BY difficulty, doc_id) - 1 AS r,
-             count(*) OVER () AS n
-           FROM d),
-         p AS (SELECT doc_id, difficulty, r, n // 8 AS q, n % 8 AS m FROM r),
-         c AS (SELECT doc_id, difficulty,
-             CASE WHEN r < m * (q + 1) THEN r // (q + 1)
-                  ELSE m + (r - m * (q + 1)) // q END AS bucket,
-             CASE WHEN r < m * (q + 1) THEN r % (q + 1)
-                  ELSE (r - m * (q + 1)) % q END AS rank_in_bucket
-           FROM p)
-         SELECT doc_id, difficulty, CAST(bucket AS BIGINT) AS bucket,
-           CAST(rank_in_bucket AS BIGINT) AS rank_in_bucket,
-           CAST(rank_in_bucket * 8 + bucket AS BIGINT) AS position
-         FROM c ORDER BY position""",
-
-    // events.ts is TIMESTAMP(NANOS); both engines truncate to epoch micros
-    // (Spark reads nanosAsLong and keys on unix_micros) so the as-of order
-    // is bit-identical
-    "join_asof" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, value,
-             epoch_ns(ts) // 1000 AS t FROM events),
-         l AS (SELECT event_id, user_id, t FROM e WHERE event_type = 'click'),
-         r AS (SELECT user_id, t AS pt, value FROM e WHERE event_type = 'purchase')
-         SELECT l.event_id, l.user_id, l.t,
-           r.pt AS purchase_pt, round(r.value, 4) AS purchase_value
-         FROM l ASOF LEFT JOIN r
-           ON l.user_id = r.user_id AND l.t >= r.pt
-         ORDER BY l.event_id""",
-
-    "join_asof_forward" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, value,
-             epoch_ns(ts) // 1000 AS t FROM events),
-         l AS (SELECT event_id, user_id, t FROM e WHERE event_type = 'click'),
-         r AS (SELECT user_id, t AS pt, value FROM e WHERE event_type = 'purchase')
-         SELECT l.event_id, l.user_id, l.t,
-           r.pt AS next_pt, round(r.value, 4) AS next_value
-         FROM l ASOF LEFT JOIN r
-           ON l.user_id = r.user_id AND l.t <= r.pt
-         ORDER BY l.event_id""",
-
-    "text_collocations" ->
-      """WITH d AS (SELECT list_filter(string_split_regex(lower(trim(text)), '\s+'),
-             x -> len(x) > 0) AS ws FROM documents),
-         b AS (SELECT ws[i] AS w1, ws[i+1] AS w2
-           FROM d, generate_series(1, 10000) t(i) WHERE i < len(ws)),
-         u AS (SELECT unnest(ws) AS w FROM d),
-         bc AS (SELECT w1, w2, count(*) AS n_xy FROM b GROUP BY 1, 2),
-         uc AS (SELECT w, count(*) AS n FROM u GROUP BY 1),
-         tot AS (SELECT (SELECT count(*) FROM b) AS nb, (SELECT count(*) FROM u) AS nw)
-         SELECT w1, w2, n_xy, x.n AS n_x, y.n AS n_y,
-           round(ln((CAST(n_xy AS DOUBLE) / nb) /
-             ((CAST(x.n AS DOUBLE) / nw) * (CAST(y.n AS DOUBLE) / nw))), 6) AS pmi
-         FROM bc JOIN uc x ON bc.w1 = x.w JOIN uc y ON bc.w2 = y.w CROSS JOIN tot
-         WHERE n_xy >= 5
-         ORDER BY pmi DESC, w1, w2 LIMIT 50""",
-
-    "join_range" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, value,
-             epoch_ns(ts) // 1000 AS t FROM events),
-         p AS (SELECT event_id AS purchase_id, user_id, t AS w_start,
-                 t + 3600000000 AS w_end FROM e WHERE event_type = 'purchase'),
-         c AS (SELECT user_id, t, value FROM e WHERE event_type = 'click')
-         SELECT p.purchase_id, CAST(count(*) AS BIGINT) AS n_clicks,
-           round(sum(c.value), 4) AS click_value
-         FROM p JOIN c ON p.user_id = c.user_id
-           AND c.t BETWEEN p.w_start AND p.w_end
-         GROUP BY 1 ORDER BY 1""",
-
-    "text_corpus_report" ->
-      """SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_chars) AS BIGINT) AS total_size,
-           avg(n_chars) AS avg_size,
-           CAST(min(n_chars) AS BIGINT) AS min_size,
-           CAST(max(n_chars) AS BIGINT) AS max_size,
-           CAST(GROUPING(lang) AS INT) AS g_lang,
-           CAST(GROUPING(source) AS INT) AS g_source
-         FROM documents GROUP BY CUBE(lang, source)
-         ORDER BY g_lang, g_source, lang NULLS FIRST, source NULLS FIRST""",
-
-    "sample_importance" ->
-      """SELECT doc_id, n_chars FROM documents
-         WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 15) <
-           lower(lpad(hex(least(
-             CAST(floor((CAST(n_chars AS DOUBLE) / (n_chars + 500)) * pow(16, 15)) AS BIGINT),
-             1152921504606846975)), 15, '0'))
-         ORDER BY doc_id""",
-
-    // BM25 replay: every constant CAST to DOUBLE (bare DuckDB literals are
-    // DECIMAL), term contributions added in the same order as the Spark
-    // expression, ORDER BY the raw score (round only in the projection)
-    "text_bm25_topk" ->
-      """WITH w AS (SELECT doc_id,
-             unnest(string_split_regex(lower(trim(text)), '\s+')) AS word
-           FROM documents),
-         d AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl,
-             sum(CASE WHEN word = 'hash' THEN 1 ELSE 0 END) AS tf0,
-             sum(CASE WHEN word = 'join' THEN 1 ELSE 0 END) AS tf1,
-             sum(CASE WHEN word = 'vector' THEN 1 ELSE 0 END) AS tf2
-           FROM w WHERE word <> '' GROUP BY 1),
-         s AS (SELECT count(*) AS n, avg(dl) AS avgdl,
-             sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-             sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1,
-             sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS df2
-           FROM d),
-         sc AS (SELECT doc_id, dl,
-             ln(CAST(1.0 AS DOUBLE) + (n - df0 + CAST(0.5 AS DOUBLE)) / (df0 + CAST(0.5 AS DOUBLE)))
-               * (CAST(tf0 AS DOUBLE) * (CAST(1.2 AS DOUBLE) + CAST(1.0 AS DOUBLE)))
-               / (CAST(tf0 AS DOUBLE) + CAST(1.2 AS DOUBLE) * (CAST(1.0 AS DOUBLE) - CAST(0.75 AS DOUBLE) + CAST(0.75 AS DOUBLE) * dl / avgdl))
-             + ln(CAST(1.0 AS DOUBLE) + (n - df1 + CAST(0.5 AS DOUBLE)) / (df1 + CAST(0.5 AS DOUBLE)))
-               * (CAST(tf1 AS DOUBLE) * (CAST(1.2 AS DOUBLE) + CAST(1.0 AS DOUBLE)))
-               / (CAST(tf1 AS DOUBLE) + CAST(1.2 AS DOUBLE) * (CAST(1.0 AS DOUBLE) - CAST(0.75 AS DOUBLE) + CAST(0.75 AS DOUBLE) * dl / avgdl))
-             + ln(CAST(1.0 AS DOUBLE) + (n - df2 + CAST(0.5 AS DOUBLE)) / (df2 + CAST(0.5 AS DOUBLE)))
-               * (CAST(tf2 AS DOUBLE) * (CAST(1.2 AS DOUBLE) + CAST(1.0 AS DOUBLE)))
-               / (CAST(tf2 AS DOUBLE) + CAST(1.2 AS DOUBLE) * (CAST(1.0 AS DOUBLE) - CAST(0.75 AS DOUBLE) + CAST(0.75 AS DOUBLE) * dl / avgdl))
-             AS score
-           FROM d, s WHERE tf0 > 0 OR tf1 > 0 OR tf2 > 0)
-         SELECT doc_id, round(score, 6) AS bm25, dl AS doc_len
-         FROM sc ORDER BY score DESC, doc_id LIMIT 20""",
-
-    "fuzzy_join_parts" ->
-      """WITH n AS (SELECT DISTINCT p_name FROM part)
-         SELECT a.p_name AS a_name, CAST(count(*) AS BIGINT) AS n_near,
-           CAST(min(levenshtein(lower(a.p_name), lower(b.p_name))) AS INT)
-             AS min_dist
-         FROM n a JOIN n b
-           ON substr(lower(a.p_name), 1, 4) = substr(lower(b.p_name), 1, 4)
-           AND abs(length(a.p_name) - length(b.p_name)) <= 3
-           AND levenshtein(lower(a.p_name), lower(b.p_name)) BETWEEN 1 AND 3
-         GROUP BY 1 ORDER BY 1""",
-
-    "blocklist_filter_out" ->
-      """SELECT doc_id, source FROM documents
-         WHERE md5(text) NOT IN
-           (SELECT md5(text) FROM documents WHERE doc_id % 7 = 0)
-         ORDER BY doc_id""",
-
-    "blocklist_semi" ->
-      """SELECT doc_id, lang FROM documents
-         WHERE md5(text) IN
-           (SELECT md5(text) FROM documents WHERE doc_id % 7 = 0)
-         ORDER BY doc_id""",
-
-    "blocklist_phrase" ->
-      """WITH ph(phrase) AS (
-           SELECT * FROM (VALUES ('slow scan'), ('fast merge'), ('key agg'),
-             ('customer data'), ('spark join'), ('window sort'),
-             ('stream filter'), ('data leak probe')) v(phrase)),
-         n AS (SELECT doc_id,
-             trim(regexp_replace(lower(text), '[ \t\n\x0B\f\r]+', ' ', 'g')) AS norm
-           FROM documents)
-         SELECT doc_id, phrase FROM n CROSS JOIN ph
-         WHERE contains(' ' || norm || ' ', ' ' || phrase || ' ')
-         ORDER BY doc_id, phrase""")
 }

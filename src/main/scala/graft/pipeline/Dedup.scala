@@ -129,13 +129,9 @@ object Dedup {
     call_function(fname, c)
   }
 
-  /** Default log sink for scale warnings (stderr). DEPRECATED as a
-    * mutation target: this is PROCESS-GLOBAL state — concurrent sessions
-    * or parallel test suites swapping it race and can misroute warnings.
-    * Always pass the per-call `warnSink` parameter instead; the var
-    * remains only so existing callers that never touch it keep the stderr
-    * default, and will become a val once no suite reassigns it. */
-  @volatile var logSink: String => Unit = s => System.err.println(s)
+  /** Default sink for scale warnings (stderr) when a call passes no
+    * `warnSink`. */
+  private val logSink: String => Unit = s => System.err.println(s)
 
   /** Parsed `graft.dedup.pairBlowupWarnFactor` (default 8; 0 disables) —
     * shared by every pre-flight pair-bound guard so the conf key keeps
@@ -151,10 +147,28 @@ object Dedup {
         v
       }.getOrElse(8L)
 
+  /** The pre-flight shared by the pairwise candidate joins: `buckets` holds
+    * one row per (bucket, member), grouped by `keys`. One aggregation of the
+    * bucket sizes gives the exact pre-dedup pair bound; when it passes
+    * `factor` x the member count / `rowsPerDoc`, `sink` gets
+    * `message(pairBound, docs, largestBucket)` before this returns, so the
+    * check runs inside the caller's job group. `factor` 0 skips it. */
+  private def warnPairBlowup(buckets: DataFrame, keys: Seq[String], factor: Long,
+                             rowsPerDoc: Long, sink: String => Unit)(
+                             message: (Long, Long, Long) => String): Unit =
+    if (factor > 0L) {
+      val r = buckets.groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
+        .agg(coalesce(sum(expr("c * (c - 1) DIV 2")), lit(0L)).as("pairs"),
+          coalesce(sum(col("c")), lit(0L)).as("rows"),
+          coalesce(max(col("c")), lit(0L)).as("maxb")).head()
+      val docs = math.max(r.getLong(1) / rowsPerDoc, 1L)
+      if (r.getLong(0) > factor * docs) sink(message(r.getLong(0), docs, r.getLong(2)))
+    }
+
   /** MinHash-LSH candidate pairs: documents sharing at least one band
     * bucket. Returns (id1, id2, estimated jaccard from full signatures),
     * id1 < id2, deduplicated. `warnSink` receives scale warnings (default:
-    * the process-wide [[logSink]], captured at call time). */
+    * stderr). */
   def minhashCandidates(spark: SparkSession, df: DataFrame, textCol: String,
                         idCol: String, numHashes: Int = 64, bands: Int = 16,
                         shingleK: Int = 5, seed: Long = 42L,
@@ -188,19 +202,14 @@ object Dedup {
         posexplode(expr(s"transform(sequence(0, ${bands - 1}), b -> " +
           s"xxhash64(slice(sig, b * $rowsPerBand + 1, $rowsPerBand)))")))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
-    if (warnFactor > 0L) {
-      val r = banded.groupBy("band", "bucket").agg(count(lit(1)).as("c"))
-        .agg(coalesce(sum(expr("c * (c - 1) DIV 2")), lit(0L)).as("pairs"),
-          coalesce(sum(col("c")), lit(0L)).as("rows")).head()
-      val pairBound = r.getLong(0)
-      val nDocs = math.max(r.getLong(1) / bands, 1L)
-      if (pairBound > warnFactor * nDocs)
-        sink(s"minhashCandidates: bucket co-occurrence bound ~$pairBound " +
+    warnPairBlowup(banded, Seq("band", "bucket"), warnFactor, bands, sink) {
+      (pairBound, nDocs, _) =>
+        s"minhashCandidates: bucket co-occurrence bound ~$pairBound " +
           s"pairs for ~$nDocs docs (> ${warnFactor}x, " +
           "graft.dedup.pairBlowupWarnFactor) — the pairwise contract is " +
           "OUTPUT-bound on dup-heavy corpora. For duplicate GROUPS use " +
           "minhashStarEdges + components instead: O(m*bands) edges, " +
-          "identical connected components (see SCALE.md, dedup_minhash_full).")
+          "identical connected components (see SCALE.md, dedup_minhash_full)."
     }
     val a = banded.select(col("band"), col("bucket"), col("id").as("id1"), col("sig").as("sig1"))
     val b = banded.select(col("band"), col("bucket"), col("id").as("id2"), col("sig").as("sig2"))
@@ -889,31 +898,17 @@ object Dedup {
     // winnow projection: materialize it once (first probe of the capped
     // path re-ran the whole selection and measured 2× the uncapped line)
     val all = if (maxDocFreq > 0 || warnFactor > 0L) all0.localCheckpoint() else all0
-    if (warnFactor > 0L && maxDocFreq == 0) {
-      // §2.6: the guard is WARN-ONLY — it never changes the result — so
-      // its aggregation over the checkpoint runs CONCURRENTLY with the
-      // caller's action instead of serializing construction (the conf was
-      // already parsed synchronously above, so a malformed knob still
-      // fails loudly; an aggregation failure here would equally fail the
-      // pair join that reads the same checkpoint)
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Future {
-        val r = all.groupBy("fp").agg(count(lit(1)).as("c"))
-          .agg(coalesce(sum(expr("c * (c - 1) DIV 2")), lit(0L)).as("pairs"),
-            coalesce(sum(col("c")), lit(0L)).as("rows"),
-            coalesce(max(col("c")), lit(0L)).as("maxb")).head()
-        val pairBound = r.getLong(0)
-        if (pairBound > warnFactor * r.getLong(1))
-          sink(s"winnowCandidates: print-bucket co-occurrence bound ~$pairBound " +
-            s"pairs over ${r.getLong(1)} (doc, print) rows, largest bucket " +
-            s"${r.getLong(2)} docs (> ${warnFactor}x, " +
+    if (maxDocFreq == 0)
+      warnPairBlowup(all, Seq("fp"), warnFactor, 1L, sink) {
+        (pairBound, rows, largest) =>
+          s"winnowCandidates: print-bucket co-occurrence bound ~$pairBound " +
+            s"pairs over $rows (doc, print) rows, largest bucket " +
+            s"$largest docs (> ${warnFactor}x, " +
             "graft.dedup.pairBlowupWarnFactor) — a template print's bucket is " +
             "ONE join key, so Σ b² work lands in one task. Set maxDocFreq " +
             "(~2x expected dup-cluster depth) to drop boilerplate prints " +
-            "(the MOSS practice; see SCALE.md dedup_winnow_pairs).")
+            "(the MOSS practice; see SCALE.md dedup_winnow_pairs)."
       }
-    }
     val fps =
       if (maxDocFreq == 0) all
       else {

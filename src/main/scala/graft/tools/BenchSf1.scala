@@ -26,14 +26,6 @@ object BenchSf1 {
   private val outDir = "/tmp/sfx1"
   private val srcDir = "/root/testdata/sf0.1"
 
-  /** The committed real lossy-WebP fixture (see SparkEntry's copy): the
-    * full-volume e2e pays the from-scratch VP8 decode per lossy payload. */
-  private[tools] lazy val lossyFixture: Array[Byte] = {
-    val in = getClass.getResourceAsStream("/graft/fixtures/lossy_vp8.webp")
-    require(in != null, "missing lossy_vp8.webp fixture")
-    try in.readAllBytes() finally in.close()
-  }
-
   /** Round-11 second wave, shared with [[BenchSf10]]: decontamination,
     * dedup-aware split, BPE tokenizer, DSIR selection — full-corpus forms
     * where the oracled query slices a fixed id range that would not grow
@@ -316,7 +308,7 @@ object BenchSf1 {
           val payload = k match {
             case 0 => graft.pipeline.Multimodal.encodeBmpGray(16, 16, pix)
             case 1 => graft.pipeline.Multimodal.encodePngGray(16, 16, pix)
-            case _ => BenchSf1.lossyFixture
+            case _ => graft.queries.Tables.lossyVp8Fixture
           }
           (base, img, payload,
             if (graft.pipeline.Multimodal.imageDecodes(payload)) 1L else 0L)
@@ -512,11 +504,7 @@ object BenchSf1 {
   }
 
   def main(args: Array[String]): Unit = {
-    // events.ts may be TIMESTAMP(NANOS) parquet depending on the testdata
-    // generator vintage (see SparkEntry.t / EntryCompatSpec); without this
-    // the scale-up read crashes with 'Illegal Parquet type' before timing
-    val spark = graft.GraftSession.create("local[32]", 32,
-      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+    val spark = graft.GraftSession.create("local[32]", 32)
     spark.sparkContext.setLogLevel("WARN")
     scaleUp(spark, "sf1", srcDir, outDir, fileMul = 1, textSuffix = " variant")
 

@@ -21,8 +21,7 @@ object BenchSf10 {
   private val outDir = "/tmp/sfx10"
 
   def main(args: Array[String]): Unit = {
-    val spark = graft.GraftSession.create("local[32]", 64,
-      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+    val spark = graft.GraftSession.create("local[32]", 64)
     spark.sparkContext.setLogLevel("WARN")
 
     require(new java.io.File(s"$srcDir/lineitem.parquet").isDirectory,

@@ -27,6 +27,16 @@ class EntryCompatSpec extends SparkSpec {
     assert(a === b, "both ts encodings must yield identical results")
   }
 
+  test("building and collecting a query leaves the caller's session conf alone") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val s = spark.newSession()
+    s.conf.unset(key)
+    val before = s.conf.getOption(key)
+    val rows = SparkEntry.queries("events_interarrival")(s, "/root/testdata/sf0.001").collect()
+    assert(rows.nonEmpty)
+    assert(s.conf.getOption(key) === before, s"$key changed by a table read")
+  }
+
   test("embedding/doc_id encoding drift: double[] vectors and int32 ids agree") {
     // guard for the NEXT testdata regeneration: if the generator ships
     // embeddings as array<double> (not float) or ids as int32 (not

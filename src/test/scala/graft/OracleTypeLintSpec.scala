@@ -74,6 +74,15 @@ class OracleTypeLintSpec extends SparkSpec {
         s"oracles without query: ${noQuery.toSeq.sorted.mkString(", ")}")
   }
 
+  test("query names in the registry are unique") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.distinct.size === names.size,
+      s"duplicate names: ${names.diff(names.distinct).distinct.sorted.mkString(", ")}")
+    val q = SparkEntry.registry.head
+    val e = intercept[IllegalArgumentException](SparkEntry.unique(Seq(q, q.copy(dualPath = !q.dualPath))))
+    assert(e.getMessage.contains(q.name), e.getMessage)
+  }
+
   test("every Spark query schema matches its DuckDB oracle schema") {
     val bad = SparkEntry.oracleSql.keys.toSeq.sorted.flatMap { name =>
       val exp = sidecar.getOrElse(name, Map.empty)

@@ -89,6 +89,26 @@ class PipelineSpec extends SparkSpec {
     } finally spark.conf.unset("graft.dedup.pairBlowupWarnFactor")
   }
 
+  test("winnowCandidates: the pair-blowup warning reaches the sink before the call returns") {
+    import spark.implicits._
+    val warnings = scala.collection.mutable.ArrayBuffer.empty[String]
+    val sink: String => Unit = s => warnings.synchronized { warnings += s }
+    // 100 byte-identical docs: every print's bucket holds all 100 docs ->
+    // pair bound C(100,2) per print >> 8 x (doc, print) rows
+    val heavy = (1 to 100).map(i => (i.toLong, "the same document body repeated in every row"))
+      .toDF("doc_id", "text")
+    Dedup.winnowCandidates(heavy, "text", "doc_id", warnSink = sink)
+    assert(warnings.synchronized(warnings.exists(w => w.contains("maxDocFreq") &&
+      w.contains("graft.dedup.pairBlowupWarnFactor"))),
+      s"expected the blow-up warning on return, got: $warnings")
+    warnings.synchronized(warnings.clear())
+    spark.conf.set("graft.dedup.pairBlowupWarnFactor", "0")
+    try {
+      Dedup.winnowCandidates(heavy, "text", "doc_id", warnSink = sink).collect()
+      assert(warnings.synchronized(warnings.isEmpty), "factor 0 must disable the guard")
+    } finally spark.conf.unset("graft.dedup.pairBlowupWarnFactor")
+  }
+
   test("minhash star edges: same connected components as pairwise cliques, fewer edges") {
     // real corpus slice: every bucket's star spans the clique's vertex
     // set, so components must be IDENTICAL — with at most O(m·bands)

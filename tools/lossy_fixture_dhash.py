@@ -19,7 +19,7 @@ post-codec arithmetic:
 
 Because Vp8Spec proves the Scala decoder reproduces the .yuv byte-for-byte,
 engine dhash == this derivation.  Prints the (idx, bit) VALUES rows pasted
-into SparkEntry's pipeline_multimodal_e2e oracle, plus the 16-bit bands.
+into the pipeline_multimodal_e2e oracle (graft.queries.PipelineQueries), plus the 16-bit bands.
 """
 import struct
 import sys
