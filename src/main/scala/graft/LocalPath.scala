@@ -50,6 +50,19 @@ object LocalPath extends Logging {
   def declined(op: String, reason: String): Unit =
     logInfo(s"$op: $reason -> distributed path")
 
+  /** Runs `body` with every gate on `spark` forced onto the distributed
+    * path, then restores the session's previous `graft.local.mode` (set or
+    * unset), so scopes nest. */
+  def distributed[T](spark: SparkSession)(body: => T): T = {
+    val previous = spark.conf.getOption(ModeKey)
+    spark.conf.set(ModeKey, "distributed")
+    try body
+    finally previous match {
+      case Some(v) => spark.conf.set(ModeKey, v)
+      case None    => spark.conf.unset(ModeKey)
+    }
+  }
+
   private def localAllowed(spark: SparkSession): Boolean =
     spark.conf.getOption(ModeKey).map(_.trim) match {
       case None | Some("auto") => true

@@ -19,6 +19,10 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = GraftSession.create(s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
+    // each dual-path decision stays visible (stderr): the only record of
+    // which path a gated query took
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "graft.LocalPath", org.apache.logging.log4j.Level.INFO)
     dump(spark, args(0), args(1), args.drop(2).toSeq)
     spark.stop()
   }

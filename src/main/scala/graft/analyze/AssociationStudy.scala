@@ -3,6 +3,7 @@ package graft.analyze
 import breeze.linalg.DenseVector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.LocalPath
 import graft.model.{CladeFrame, VariableType}
 import graft.modify.Modify
 import graft.stats.{DesignMatrix, Glm}
@@ -119,7 +120,6 @@ object AssociationStudy {
       standardizeData: Boolean = false,
       surveyDesign: Option[SurveyDesignSpec] = None,
       reportCategoricalBetas: Boolean = false,
-      broadcastBase: Option[Boolean] = None,
       encoding: String = "additive",
       edgeEncodingInfo: Option[DataFrame] = None,
       regressionKind: Option[String] = None,
@@ -156,7 +156,7 @@ object AssociationStudy {
             minN, surveyDesign)
         case None =>
           runOne(spark, cf, outcome, covariates, rvs.filterNot(_ == outcome), minN,
-            standardizeData, surveyDesign, reportCategoricalBetas, broadcastBase)
+            standardizeData, surveyDesign, reportCategoricalBetas)
       }
     }
     // global sort by pvalue (reference: association_study.py:126-129), on
@@ -181,38 +181,10 @@ object AssociationStudy {
       surveyDesign = surveyDesign)
   }
 
-  /** Broadcast the base block only when it plausibly fits the driver.
-    * Estimated from Catalyst plan stats on the projected base columns —
-    * zero jobs, conservative at scale (parquet stats flow through). */
-  private[analyze] val BroadcastBaseMaxBytes: Long = 256L << 20
-  /** Threshold override knob (bytes): `graft.broadcastBase.maxBytes`. */
-  private[analyze] def broadcastBaseMax(cf: CladeFrame): Long =
-    graft.GraftConf.positiveLong(cf.df.sparkSession,
-      "graft.broadcastBase.maxBytes", BroadcastBaseMaxBytes)
-  private def baseBlockBroadcastable(cf: CladeFrame, outcome: String,
-                                     covariates: Seq[String]): Boolean =
-    estimateFitsDriver(
-      cf.df.select((cf.idCol +: outcome +: covariates).map(col): _*),
-      nCols = 2 + covariates.size, maxBytes = broadcastBaseMax(cf))
-
-  /** Does this block plausibly fit the driver? Plan stats when real
-    * (parquet scans propagate file sizes); otherwise — CSV scans and
-    * windowed-id plans report the defaultSizeInBytes sentinel — a bounded
-    * row probe that scans at most maxRows+1 rows and never the full data. */
-  private[analyze] def estimateFitsDriver(df: DataFrame, nCols: Int,
-                                          maxBytes: Long): Boolean = {
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (est < BigInt(1L << 50)) est <= BigInt(maxBytes)
-    else {
-      val perRow = 32L * math.max(1, nCols)
-      val maxRows = math.min(maxBytes / perRow, (Int.MaxValue - 2).toLong)
-      df.limit(maxRows.toInt + 1).count() <= maxRows
-    }
-  }
-
-  /** Test probe: did the most recent runOne/runCogroup call on this JVM
-    * collect the base block for broadcast? (Auto path-selection tests.) */
-  @volatile private[graft] var wasCollectedForBroadcast: Boolean = false
+  /** Row bound of the broadcast path's driver-side block: 256 MiB at 32
+    * bytes a cell, for a block of `nCols` string columns. */
+  private[analyze] def broadcastRowBound(nCols: Int): Long =
+    (256L << 20) / (32L * nCols)
 
   private def runOne(
       spark: SparkSession,
@@ -223,8 +195,7 @@ object AssociationStudy {
       minN: Long,
       standardize: Boolean,
       surveyDesign: Option[SurveyDesignSpec] = None,
-      reportCategoricalBetas: Boolean = false,
-      broadcastBase: Option[Boolean] = None): DataFrame = {
+      reportCategoricalBetas: Boolean = false): DataFrame = {
     import spark.implicits._
 
     // tall-data fast path: every design column numeric -> distributed
@@ -232,19 +203,6 @@ object AssociationStudy {
     if (surveyDesign.isEmpty && !reportCategoricalBetas &&
         AggregatedGlm.supports(cf, outcome, covariates, rvs, standardize))
       return AggregatedGlm.run(spark, cf, outcome, covariates, rvs, minN)
-
-    // tall-data co-group path: the base block (and the per-observation
-    // survey metadata, when a design is attached) JOINS the melted
-    // variables instead of being collected+broadcast, so nothing row-scale
-    // ever reaches the driver; each variable's group streams through the
-    // same local kernel. Like the reference (association_study.py:100), a
-    // caller never has to choose: with no explicit flag the path is picked
-    // from the base block's estimated size (plan stats, zero jobs).
-    val useBroadcast = broadcastBase.getOrElse(
-      baseBlockBroadcastable(cf, outcome, covariates))
-    if (!useBroadcast)
-      return runOneCogroup(spark, cf, outcome, covariates, rvs, minN,
-        standardize, reportCategoricalBetas, surveyDesign)
 
     val outcomeType = cf.typeOf(outcome)
     val family = outcomeType match {
@@ -254,19 +212,29 @@ object AssociationStudy {
         s"outcome $outcome must be continuous or binary, got $t")
     }
 
-    // ------- base block: complete-case outcome + covariates, collected small
-    // (survey subsets restrict the analyzed rows here; design totals remain
-    // full -- survey_design.py:131-141 vs 552-578)
+    // ------- base block: complete-case outcome + covariates. Survey subsets
+    // restrict the analyzed rows (a left-semi join on the kept ids, which
+    // materializes nothing on the driver); design totals remain full --
+    // survey_design.py:131-141 vs 552-578. Like the reference
+    // (association_study.py:100), a caller never chooses the row path: the
+    // gate collects the analyzed block when it fits the driver, and that
+    // collect IS the broadcast path's base; otherwise the co-group path
+    // JOINS the block to the melted variables, so nothing row-scale ever
+    // reaches the driver.
     val baseCols = outcome +: covariates
-    val subsetDf = surveyDesign.flatMap(_.subsetFilter) match {
-      case Some(pred) => cf.df.filter(pred)
-      case None       => cf.df
-    }
-    val baseDf = subsetDf
+    val baseDf = cf.df
       .select((cf.idCol +: baseCols).map(c => col(c).cast("string").as(c)): _*)
       .na.drop("any", baseCols)
-    wasCollectedForBroadcast = true
-    val baseRows = baseDf.collect()
+    val analyzed = surveyDesign.flatMap(_.subsetKeepIdsDf) match {
+      case Some(keep) => baseDf.join(keep.toDF(cf.idCol), Seq(cf.idCol), "left_semi")
+      case None       => baseDf
+    }
+    val baseRows = LocalPath.gate("associationStudy", analyzed,
+      broadcastRowBound(2 + covariates.size)) match {
+      case Some(rows) => rows
+      case None => return runOneCogroup(spark, cf, outcome, covariates, rvs, minN,
+        standardize, reportCategoricalBetas, surveyDesign, family, baseDf)
+    }
     val n0 = baseRows.length
     val index = baseRows.iterator.zipWithIndex.map { case (r, i) => r.getString(0) -> i }.toMap
     require(index.size == n0,
@@ -373,9 +341,10 @@ object AssociationStudy {
     (fitted.toSeq ++ missingRows).toDF()
   }
 
-  /** Co-group execution: melt the rv columns, JOIN the (uncollected) base
-    * block by id, shuffle once keyed by variable, and rebuild the kernel's
-    * per-variable arrays inside each group. Identical numerics to the
+  /** Co-group execution: melt the rv columns, JOIN the (uncollected)
+    * complete-case base block `baseDf` by id, shuffle once keyed by
+    * variable, and rebuild the kernel's per-variable arrays inside each
+    * group. Identical numerics to the
     * broadcast path (same fitOne kernel); the trade is one wide shuffle of
     * (value + base) rows for zero driver-side materialization. */
   private def runOneCogroup(
@@ -387,16 +356,11 @@ object AssociationStudy {
       minN: Long,
       standardize: Boolean,
       reportCategoricalBetas: Boolean,
-      surveyDesign: Option[SurveyDesignSpec] = None): DataFrame = {
+      surveyDesign: Option[SurveyDesignSpec],
+      family: Glm.Family,
+      baseDf: DataFrame): DataFrame = {
     import spark.implicits._
-    wasCollectedForBroadcast = false
-    val outcomeType = cf.typeOf(outcome)
-    val family = outcomeType match {
-      case Continuous => Glm.Gaussian
-      case Binary     => Glm.Binomial
-      case t => throw new IllegalArgumentException(s"bad outcome type $t")
-    }
-    val outcomeLevels: Seq[String] = outcomeType match {
+    val outcomeLevels: Seq[String] = cf.typeOf(outcome) match {
       case Binary =>
         val levels0 = cf.levels.getOrElse(outcome,
           cf.df.select(col(outcome).cast("string")).na.drop().distinct()
@@ -404,10 +368,6 @@ object AssociationStudy {
         if (levels0 == Seq("Case", "Control")) Seq("Control", "Case") else levels0
       case _ => Nil
     }
-    val baseCols = outcome +: covariates
-    val baseDf = cf.df
-      .select((cf.idCol +: baseCols).map(c => col(c).cast("string").as(c)): _*)
-      .na.drop("any", baseCols)
     // same contract the broadcast path enforces via its collected index: a
     // duplicate observation id would EXPLODE the melt⋈base join below and
     // silently multiply every group's rows (observed: lineitem keyed by the
@@ -428,7 +388,7 @@ object AssociationStudy {
     // standardized inside the kernel from its own group, which is local.
     val stdTargets: Seq[(Int, String)] =
       if (!standardize) Nil
-      else (if (outcomeType == Continuous) Seq(-1 -> outcome) else Nil) ++
+      else (if (family == Glm.Gaussian) Seq(-1 -> outcome) else Nil) ++
         covariates.zipWithIndex.collect {
           case (c, j) if cf.typeOf(c) == Continuous => j -> c }
     val stdMom: Map[Int, (Double, Double)] =

@@ -3,6 +3,7 @@ package graft.analyze
 import breeze.linalg.DenseVector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.LocalPath
 import graft.model.{CladeFrame, VariableType}
 import graft.stats.{DesignMatrix, Glm}
 import VariableType._
@@ -43,15 +44,18 @@ final case class InteractionBetaResult(
   *
   * Two execution paths, identical numerics (shared array kernels):
   *
-  *  - broadcast (default): the projected column block is collected once and
+  *  - broadcast: the projected column block is collected once and
   *    broadcast; the PAIR list distributes. Right when rows fit on the
   *    driver and the pair list is large (all-pairs of a shortlist).
-  *  - co-group (`broadcastBase = false`): one `stack` generator fans each
-  *    observation out to its pairs, one shuffle keyed by pair id, each
-  *    group rebuilds the pair's local arrays executor-side. NOTHING
-  *    row-scale ever reaches the driver — the path for billion-row data
-  *    with a bounded pair list (each pair's rows must fit in one task,
-  *    exactly like the association study's per-variable groups).
+  *    [[graft.LocalPath.gate]] takes it when the block is within the
+  *    driver bound, and its probe IS that collect.
+  *  - co-group (otherwise, or under `graft.local.mode=distributed`): one
+  *    `stack` generator fans each observation out to its pairs, one
+  *    shuffle keyed by pair id, each group rebuilds the pair's local
+  *    arrays executor-side. NOTHING row-scale ever reaches the driver —
+  *    the path for billion-row data with a bounded pair list (each pair's
+  *    rows must fit in one task, exactly like the association study's
+  *    per-variable groups).
   */
 object InteractionStudy {
 
@@ -150,17 +154,12 @@ object InteractionStudy {
       covariates: Seq[String] = Nil,
       minN: Long = 200,
       reportBetas: Boolean = false,
-      broadcastBase: Option[Boolean] = None,
       encoding: String = "additive",
       edgeEncodingInfo: Option[DataFrame] = None,
       variantInfo: Map[String, graft.genomics.Genotypes.VariantInfo] = Map.empty): DataFrame = {
-    import spark.implicits._
     require(interactions.nonEmpty, "no interaction pairs")
     validatePairs(cf0, outcome, covariates, interactions)
     val cf = graft.genomics.Genotypes.encodeForStudy(cf0, encoding, edgeEncodingInfo, variantInfo)
-    // auto path selection from the projected block's plan-stats estimate
-    // (outcome + covars + every interaction var is what the broadcast path
-    // collects); the flag stays as an explicit override
     val allVars = interactions.flatMap(p => Seq(p._1, p._2)).distinct
     // Gaussian studies over continuous/declared-categorical variables
     // never need a row anywhere: each pair's full+restricted OLS is a
@@ -171,32 +170,37 @@ object InteractionStudy {
     // the same pass (their level sets must be declared — the CLARITE
     // make_categorical/make_binary contract). At sf1 the row paths cost
     // ~25s (6M-row collect or stack fan-out); this path is one pass of
-    // fused array arithmetic. An explicit broadcastBase flag still forces
-    // the row paths (the cross-path equivalence tests rely on that);
-    // report_betas with categorical blocks stays on them too (per-crossing
-    // coefficient naming is exercised by the golden suites there).
+    // fused array arithmetic. report_betas with categorical blocks stays
+    // on the row paths (per-crossing coefficient naming is exercised by the
+    // golden suites there); the cross-path equivalence tests reach the row
+    // kernels directly through [[runRows]].
     def aggEligible(v: String): Boolean = cf.typeOf(v) match {
       case Continuous => true
       case Categorical | Binary => !reportBetas && cf.levels.contains(v)
       case _ => false
     }
-    if (broadcastBase.isEmpty && cf.typeOf(outcome) == Continuous &&
+    if (cf.typeOf(outcome) == Continuous &&
         covariates.forall(c => cf.typeOf(c) == Continuous) &&
-        allVars.forall(aggEligible)) {
-      AssociationStudy.wasCollectedForBroadcast = false
-      return runAggregated(spark, cf, outcome, interactions, covariates,
-        minN, reportBetas)
-    }
-    val useBroadcast = broadcastBase.getOrElse(
-      AssociationStudy.estimateFitsDriver(
-        cf.df.select((outcome +: (covariates ++ allVars)).map(col): _*),
-        nCols = 1 + covariates.size + allVars.size,
-        maxBytes = AssociationStudy.broadcastBaseMax(cf)))
-    if (!useBroadcast) {
-      AssociationStudy.wasCollectedForBroadcast = false
-      return runCogroup(spark, cf, outcome, interactions, covariates, minN, reportBetas)
-    }
-    AssociationStudy.wasCollectedForBroadcast = true
+        allVars.forall(aggEligible))
+      runAggregated(spark, cf, outcome, interactions, covariates, minN, reportBetas)
+    else runRows(spark, cf, outcome, interactions, covariates, minN, reportBetas)
+  }
+
+  /** The row paths, broadcast or co-group, as [[graft.LocalPath.gate]]
+    * picks them. The block both read is the outcome, covariates and
+    * interaction vars as strings, complete-cased on outcome + covariates
+    * only — per-pair completeness is decided in the task. distinct: a
+    * covariate reused as an interaction var must not project (and crash
+    * na.drop on) a duplicate column. */
+  private[graft] def runRows(
+      spark: SparkSession,
+      cf: CladeFrame,
+      outcome: String,
+      interactions: Seq[(String, String)],
+      covariates: Seq[String],
+      minN: Long,
+      reportBetas: Boolean): DataFrame = {
+    import spark.implicits._
     val outcomeType = cf.typeOf(outcome)
     val family = outcomeType match {
       case Continuous => Glm.Gaussian
@@ -204,17 +208,16 @@ object InteractionStudy {
       case t => throw new IllegalArgumentException(s"bad outcome type $t")
     }
     val vars = interactions.flatMap(p => Seq(p._1, p._2)).distinct
-
-    // broadcast the full projected block (outcome + covars + interaction
-    // vars as strings); complete-case on outcome+covars only — per-pair
-    // completeness is decided in the task. distinct: a covariate reused as
-    // an interaction var must not project (and crash na.drop on) a
-    // duplicate column
     val cols = (outcome +: (covariates ++ vars)).distinct
-    val rows = cf.df
+    val block = cf.df
       .select(cols.map(c => col(c).cast("string").as(c)): _*)
       .na.drop("any", outcome +: covariates)
-      .collect()
+    val rows = LocalPath.gate("interactionStudy", block,
+      AssociationStudy.broadcastRowBound(1 + covariates.size + vars.size)) match {
+      case Some(r) => r
+      case None => return runCogroup(spark, cf, outcome, interactions, covariates,
+        minN, reportBetas, family, block)
+    }
     val n0 = rows.length
     val colIdx = cols.zipWithIndex.toMap
 
@@ -608,17 +611,13 @@ object InteractionStudy {
       interactions: Seq[(String, String)],
       covariates: Seq[String],
       minN: Long,
-      reportBetas: Boolean): DataFrame = {
+      reportBetas: Boolean,
+      family: Glm.Family,
+      base: DataFrame): DataFrame = {
     import spark.implicits._
-    val outcomeType = cf.typeOf(outcome)
-    val family = outcomeType match {
-      case Continuous => Glm.Gaussian
-      case Binary     => Glm.Binomial
-      case t => throw new IllegalArgumentException(s"bad outcome type $t")
-    }
     // binary outcome levels: from metadata if present, else one tiny
     // distinct scan (O(#levels) rows to the driver, never row-scale)
-    val outcomeLevels: Option[Seq[String]] = outcomeType match {
+    val outcomeLevels: Option[Seq[String]] = cf.typeOf(outcome) match {
       case Binary => Some(cf.levels.getOrElse(outcome,
         cf.df.select(col(outcome).cast("string")).na.drop().distinct()
           .collect().map(_.getString(0)).toSeq).sorted)
@@ -626,9 +625,6 @@ object InteractionStudy {
     }
     val vars = interactions.flatMap(p => Seq(p._1, p._2)).distinct
     val baseCols = outcome +: covariates
-    val base = cf.df
-      .select((baseCols ++ vars).distinct.map(c => col(c).cast("string").as(c)): _*)
-      .na.drop("any", baseCols)
     val pairSql = interactions.zipWithIndex.map { case ((a, b), i) =>
       s"$i, `$a`, `$b`"
     }.mkString(", ")

@@ -244,14 +244,11 @@ object Load {
     val json = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(sidecarPath)))
     val (types, levels, ordered) = parseDtypesJson(json)
     // categorical-kind columns are physically strings; continuous → double
-    val casted = types.foldLeft(base.df) { case (d, (c, t)) =>
-      if (!d.columns.contains(c)) d
-      else t match {
-        case VariableType.Continuous => d.withColumn(c, col(c).cast(DoubleType))
-        case VariableType.Unknown    => d
-        case _                       => d.withColumn(c, col(c).cast(StringType))
-      }
-    }
+    val present = base.df.columns.toSet
+    val casted = base.df.withColumns(types.collect {
+      case (c, VariableType.Continuous) if present(c) => c -> col(c).cast(DoubleType)
+      case (c, t) if present(c) && t != VariableType.Unknown => c -> col(c).cast(StringType)
+    }.toMap)
     CladeFrame(casted, base.types ++ types, levels, base.idCol, ordered)
   }
 }

@@ -265,8 +265,7 @@ object Modify {
       sum(when(col(c).isNotNull && tryCastDouble(c).isNull, 1L).otherwise(0L)).as(c)))
     val bad = cols.zipWithIndex.collect { case (c, i) if !r.isNullAt(i) && r.getLong(i) > 0 => c }
     require(bad.isEmpty, s"cannot make continuous (non-numeric values): ${bad.mkString(", ")}")
-    val casted = cols.foldLeft(cf.df)((d, c) => d.withColumn(c, tryCastDouble(c)))
-    cf.copy(df = casted,
+    cf.copy(df = cf.df.withColumns(cols.map(c => c -> tryCastDouble(c)).toMap),
       types = cf.types ++ cols.map(_ -> (Continuous: VariableType)),
       levels = cf.levels -- cols)
   }
@@ -332,9 +331,8 @@ object Modify {
     }
     val contCols = decisions.collect { case (c, _, d) if d == Continuous.name => c }
     val base = cf.selectVariables(keep)
-    val casted = contCols.foldLeft(castToString(base, catCols.filter(keep.contains)).df) {
-      (d, c) => d.withColumn(c, tryCastDouble(c))
-    }
+    val casted = base.df.withColumns((catCols.filter(keep.contains).map(c =>
+      c -> col(c).cast(StringType)) ++ contCols.map(c => c -> tryCastDouble(c))).toMap)
     val lv = levelSets(base, catCols)
     CategorizeReport(
       CladeFrame(casted, newTypes, lv, cf.idCol),
@@ -834,12 +832,10 @@ object Modify {
     * high-cardinality categoricals, and at extreme cardinality (tens of
     * millions of categories at the 100 TB design point) a forced
     * broadcast OOMs the driver. The stats side gets the broadcast hint
-    * only when its Catalyst size estimate fits
-    * `graft.broadcastBase.maxBytes` (default 256 MiB — the study
-    * runner's knob and default); past the cap it stays a plain join,
-    * where AQE still converts to broadcast at runtime if the ACTUAL
-    * aggregated size turns out small (the estimate for an aggregate is
-    * child-size-bounded, i.e. conservative).
+    * only when its Catalyst size estimate fits 256 MiB; past the cap it
+    * stays a plain join, where AQE still converts to broadcast at runtime
+    * if the ACTUAL aggregated size turns out small (the estimate for an
+    * aggregate is child-size-bounded, i.e. conservative).
     *
     * Determinism: pass an integer-valued target (cast it) and the sums
     * are exact int64, making the encoding one division of exact
@@ -850,10 +846,15 @@ object Modify {
     * at call time (no job runs, but plan errors surface here rather than
     * at the first action). */
   def targetEncodeLoo(df: DataFrame, catCol: String, targetCol: String,
-                      out: String = "te_loo"): DataFrame = {
+                      out: String = "te_loo"): DataFrame =
+    targetEncodeLoo(df, catCol, targetCol, out, TargetEncodeBroadcastMaxBytes)
+
+  private val TargetEncodeBroadcastMaxBytes = 256L << 20
+
+  /** [[targetEncodeLoo]] with the broadcast cap `maxBytes`. */
+  private[graft] def targetEncodeLoo(df: DataFrame, catCol: String, targetCol: String,
+                                     out: String, maxBytes: Long): DataFrame = {
     val t = col(targetCol)
-    val maxBytes = graft.GraftConf.positiveLong(df.sparkSession,
-      "graft.broadcastBase.maxBytes", 256L << 20)
     val stats = df.groupBy(col(catCol))
       .agg(sum(t).as("__te_s"), count(t).as("__te_n"))
     val est = stats.queryExecution.optimizedPlan.stats.sizeInBytes
@@ -1189,7 +1190,7 @@ object Modify {
     val bad = selected.filterNot(cf.typeOf(_) == Continuous)
     require(bad.isEmpty,
       s"transformations may only be applied to continuous variables: ${bad.mkString(", ")}")
-    cf.copy(df = selected.foldLeft(cf.df)((d, c) => d.withColumn(c, fn(col(c).cast(DoubleType)))))
+    cf.copy(df = cf.df.withColumns(selected.map(c => c -> fn(col(c).cast(DoubleType))).toMap))
   }
 
   /** Yeo-Johnson profile-likelihood GRID — the power-transform
@@ -1342,5 +1343,5 @@ object Modify {
   }
 
   private def castToString(cf: CladeFrame, cols: Seq[String]): CladeFrame =
-    cf.copy(df = cols.foldLeft(cf.df)((d, c) => d.withColumn(c, col(c).cast(StringType))))
+    cf.copy(df = cf.df.withColumns(cols.map(c => c -> col(c).cast(StringType)).toMap))
 }

@@ -128,10 +128,10 @@ private[graft] object AnalyzeQueries {
     Q("analyze_assoc_cogroup", (s, dir) => {
       // the 100 TB association path, driver-oracled (VERDICT r9 #6): a
       // CATEGORICAL covariate (l_returnflag) disqualifies the all-numeric
-      // sufficient-stats fast path, and broadcastBase=Some(false) forces the
-      // co-group route — melted variables JOIN the base block, each group
+      // sufficient-stats fast path, and graft.local.mode=distributed forces
+      // the co-group route — melted variables JOIN the base block, each group
       // streams through the row kernel, nothing row-scale reaches the driver
-      // (AssociationCogroupOracleSpec asserts !wasCollectedForBroadcast).
+      // (AssociationStudySpec checks the logged gate decision).
       // Oracle: Frisch–Waugh — demeaning y and x within returnflag groups
       // absorbs intercept + dummies, so the rv's beta/SE from the simple
       // regression on residuals equal the full-model GLM's (df = n - k - 1).
@@ -144,10 +144,9 @@ private[graft] object AnalyzeQueries {
         .select("o_orderkey", "o_totalprice", "o_orderstatus",
           "o_custkey", "order_day"), "o_orderkey")
         .withTypes(Map("o_orderstatus" -> graft.model.VariableType.Categorical))
-      AssociationStudy.run(s, cf, outcomes = Seq("o_totalprice"),
+      LocalPath.distributed(s)(AssociationStudy.run(s, cf, outcomes = Seq("o_totalprice"),
         covariates = Seq("o_orderstatus"),
-        regressionVariables = Seq("o_custkey", "order_day"), minN = 1,
-        broadcastBase = Some(false))
+        regressionVariables = Seq("o_custkey", "order_day"), minN = 1))
         .select(col("Variable").as("variable"), col("N").as("n"),
           round(col("Beta"), 4).as("beta"), round(col("SE"), 4).as("se"))
         .orderBy("variable")
@@ -178,7 +177,7 @@ private[graft] object AnalyzeQueries {
            UNION ALL
            SELECT 'order_day', n, sxy2 / sxx2,
              sqrt((syy - sxy2 * sxy2 / sxx2) / (n - k - 1) / sxx2) FROM f)
-         ORDER BY variable"""),
+         ORDER BY variable""", dualPath = true),
 
     Q("analyze_corrected_pvalues", (s, dir) =>
       Corrections.addCorrectedPvalues(docPvalues(s, dir))

@@ -305,14 +305,9 @@ final class SurveyDesignSpec(
     d.collect().map(_.getString(0)).toSet
   }
 
-  /** Filter for the analysis data: id ∈ subset as a broadcast hash-set
-    * predicate — BROADCAST-PATH ONLY (materializes the id set on the
-    * driver; the co-group path uses [[subsetKeepIdsDf]] instead). */
-  def subsetFilter: Option[Column] =
-    subsetIds.map(ids => col(idCol).cast("string").isInCollection(ids))
-
-  /** Ids kept by the subsets (None = no subset applied) — broadcast-path
-    * only, see [[subsetFilter]]. */
+  /** Ids kept by the subsets (None = no subset applied) — BROADCAST-PATH
+    * ONLY: materializes the id set on the driver, where the analyzed rows
+    * are restricted with [[subsetKeepIdsDf]] instead. */
   def subsetIdSet: Option[Set[String]] = subsetIds
 
   /** Like weightNameFor but Left(error) instead of throwing — one variable

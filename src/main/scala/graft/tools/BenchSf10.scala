@@ -80,11 +80,8 @@ object BenchSf10 {
         graft.pipeline.SpaceSaving.approxHeavyHitters(
           s.read.parquet(s"$dir/documents.parquet"), "text", capacity = 200)),
       "ann_hard_negatives_ivf" -> graft.SparkEntry.queries("ann_hard_negatives_ivf"),
-      "graph_pagerank_distributed" -> ((s: SparkSession, dir: String) => {
-        s.conf.set(graft.LocalPath.ModeKey, "distributed")
-        try graft.SparkEntry.queries("graph_pagerank")(s, dir)
-        finally s.conf.unset(graft.LocalPath.ModeKey)
-      }),
+      "graph_pagerank_distributed" -> ((s: SparkSession, dir: String) =>
+        graft.LocalPath.distributed(s)(graft.SparkEntry.queries("graph_pagerank")(s, dir))),
       "dedup_minhash_lsh_full" -> ((s: SparkSession, dir: String) =>
         graft.pipeline.Dedup.minhashCandidates(s,
           s.read.parquet(s"$dir/documents.parquet"), "text", "doc_id")

@@ -125,16 +125,25 @@ class AssociationStudySpec extends SparkSpec {
     val cf = CladeFrame(df).withTypes(Map(
       "y" -> VariableType.Continuous, "bad" -> VariableType.Continuous,
       "ok" -> VariableType.Continuous))
-    for (bcast <- Seq(true, false)) {
-      val res = AssociationStudy.run(spark, cf, Seq("y"),
-        regressionVariables = Seq("bad", "ok"), minN = 10, broadcastBase = Some(bcast))
-        .collect().map(r => r.getString(0) -> r).toMap
+    // the all-numeric study takes the aggregated path; reporting
+    // categorical betas keeps it on the row paths, broadcast under auto
+    // and co-group under distributed
+    def study(rows: Boolean) = AssociationStudy.run(spark, cf, Seq("y"),
+      regressionVariables = Seq("bad", "ok"), minN = 10, reportCategoricalBetas = rows)
+    val paths: Seq[(String, () => org.apache.spark.sql.DataFrame, Seq[String])] = Seq(
+      ("aggregated", () => study(rows = false), Nil),
+      ("broadcast", () => study(rows = true), Seq("-> driver-local path")),
+      ("co-group", () => distributed(study(rows = true)), Seq("-> distributed path")))
+    for ((path, run, want) <- paths) {
+      val (res0, decisions) = gateDecisions(run())
+      assert(decisions.map(d => d.substring(d.indexOf("->"))) === want, s"$path: $decisions")
+      val res = res0.collect().map(r => r.getString(0) -> r).toMap
       val bad = res("bad")
-      assert(bad.isNullAt(bad.fieldIndex("pvalue")), s"bcast=$bcast")
+      assert(bad.isNullAt(bad.fieldIndex("pvalue")), path)
       val err = bad.getString(bad.fieldIndex("error"))
       assert(err != null && err.contains("NumberFormatException"),
-        s"bcast=$bcast: error column should name the failure, got '$err'")
-      assert(res("ok").getString(res("ok").fieldIndex("error")) == null)
+        s"$path: error column should name the failure, got '$err'")
+      assert(res("ok").getString(res("ok").fieldIndex("error")) == null, path)
     }
     // min_n gate carries its reason too
     val tooFew = AssociationStudy.run(spark, cf, Seq("y"),
@@ -193,7 +202,7 @@ class AssociationStudySpec extends SparkSpec {
       covariates = Seq("c"), regressionVariables = Seq("x"), minN = 1).collect().head
     assert(agg.getString(agg.fieldIndex("warnings")).contains("non-varying covariates(s): c"))
     assert(!agg.isNullAt(agg.fieldIndex("pvalue"))) // still fits without c
-    // collect path (force via broadcastBase melt by making covar categorical)
+    // row path (a categorical covar disqualifies the aggregated one)
     var cf2 = cf.withTypes(Map("c" -> VariableType.Categorical))
       .withLevels(Map("c" -> Seq("7.0")))
     val mel = AssociationStudy.run(spark, cf2, Seq("y"),
@@ -242,39 +251,33 @@ class AssociationStudySpec extends SparkSpec {
     }
   }
 
-  test("auto path selection: tiny base broadcasts, over-threshold base routes to co-group") {
+  test("auto path selection: tiny base broadcasts, forced distributed routes to co-group") {
     val cfC = Modify.makeContinuous(nhanes, only = Some(Seq("WTMEC2YR")))
-    // default threshold: the nhanes base is tiny -> broadcast path collects
-    AssociationStudy.run(spark, cfC, outcomes = Seq("HI_CHOL"),
+    def study() = AssociationStudy.run(spark, cfC, outcomes = Seq("HI_CHOL"),
       covariates = Seq("race"), regressionVariables = Seq("WTMEC2YR")).collect()
-    assert(AssociationStudy.wasCollectedForBroadcast, "tiny base should broadcast")
-    // force the plan-stats estimate over the threshold: must route to
-    // co-group with NO driver-side base collection, same results
-    spark.conf.set("graft.broadcastBase.maxBytes", "1")
-    try {
-      val r = AssociationStudy.run(spark, cfC, outcomes = Seq("HI_CHOL"),
-        covariates = Seq("race"), regressionVariables = Seq("WTMEC2YR")).collect()
-      assert(!AssociationStudy.wasCollectedForBroadcast,
-        "large-estimate base must route to co-group")
-      assert(r.nonEmpty && !r.head.isNullAt(r.head.fieldIndex("pvalue")))
-    } finally spark.conf.unset("graft.broadcastBase.maxBytes")
+    // auto: the nhanes base is tiny -> the gate's probe is the broadcast base
+    val (bc, auto) = gateDecisions(study())
+    assert(auto.size === 1 && auto.head.startsWith("associationStudy:") &&
+      auto.head.endsWith("-> driver-local path"), auto)
+    // forced distributed: co-group, same results
+    val (cg, dist) = gateDecisions(distributed(study()))
+    assert(dist.size === 1 && dist.head.endsWith("-> distributed path"), dist)
+    assert(cg.nonEmpty && !cg.head.isNullAt(cg.head.fieldIndex("pvalue")))
+    assertRtol(cg.head.getDouble(cg.head.fieldIndex("pvalue")),
+      bc.head.getDouble(bc.head.fieldIndex("pvalue")), 1e-10, "pvalue across paths")
   }
 
-  test("interaction auto path selection honors the same threshold") {
+  test("interaction auto path selection goes through the same gate") {
     import graft.analyze.InteractionStudy
-    spark.conf.set("graft.broadcastBase.maxBytes", "1")
-    try {
-      val r = InteractionStudy.run(spark, nhanes, "HI_CHOL",
-        interactions = Seq(("agecat", "RIAGENDR")), covariates = Seq("race"))
-        .collect()
-      assert(!AssociationStudy.wasCollectedForBroadcast,
-        "interaction study must route to co-group over the threshold")
-      assert(r.nonEmpty)
-    } finally spark.conf.unset("graft.broadcastBase.maxBytes")
-    InteractionStudy.run(spark, nhanes, "HI_CHOL",
+    def study() = InteractionStudy.run(spark, nhanes, "HI_CHOL",
       interactions = Seq(("agecat", "RIAGENDR")), covariates = Seq("race")).collect()
-    assert(AssociationStudy.wasCollectedForBroadcast,
-      "tiny block broadcasts by default")
+    val (r, dist) = gateDecisions(distributed(study()))
+    assert(dist.size === 1 && dist.head.startsWith("interactionStudy:") &&
+      dist.head.endsWith("-> distributed path"), dist)
+    assert(r.nonEmpty)
+    val (_, auto) = gateDecisions(study())
+    assert(auto.size === 1 && auto.head.endsWith("-> driver-local path"),
+      s"tiny block broadcasts by default: $auto")
   }
 
   test("standardize_data through the co-group path matches the broadcast path") {
@@ -286,12 +289,11 @@ class AssociationStudySpec extends SparkSpec {
       (cfC, "HI_CHOL", Seq("race"), "WTMEC2YR"),
       (gOut, "WTMEC2YR", Seq("race"), "RIAGENDR"))
     cases.foreach { case (cf, outcome, covars, rv) =>
-      val bc = AssociationStudy.run(spark, cf, outcomes = Seq(outcome),
+      def study() = AssociationStudy.run(spark, cf, outcomes = Seq(outcome),
         covariates = covars, regressionVariables = Seq(rv),
-        standardizeData = true, broadcastBase = Some(true)).collect().head
-      val cg = AssociationStudy.run(spark, cf, outcomes = Seq(outcome),
-        covariates = covars, regressionVariables = Seq(rv),
-        standardizeData = true, broadcastBase = Some(false)).collect().head
+        standardizeData = true).collect().head
+      val bc = study()
+      val cg = distributed(study())
       assert(cg.getLong(cg.fieldIndex("N")) === bc.getLong(bc.fieldIndex("N")),
         s"$rv N")
       Seq("Beta", "SE", "pvalue").foreach { c =>
@@ -305,9 +307,8 @@ class AssociationStudySpec extends SparkSpec {
     val golden = goldenMap(refPath("r_test_output/analyze/nhanes_noweights_result.csv"))
     Seq(("race", Seq("agecat", "RIAGENDR")), ("RIAGENDR", Seq("race", "agecat")))
       .foreach { case (rv, covars) =>
-        val r = AssociationStudy.run(spark, nhanes, outcomes = Seq("HI_CHOL"),
-          covariates = covars, regressionVariables = Seq(rv),
-          broadcastBase = Some(false)).collect().head
+        val r = distributed(AssociationStudy.run(spark, nhanes, outcomes = Seq("HI_CHOL"),
+          covariates = covars, regressionVariables = Seq(rv))).collect().head
         val g = golden(rv)
         assert(r.getLong(r.fieldIndex("N")) === g("N").toLong, s"$rv N (cogroup)")
         assertRtol(r.getDouble(r.fieldIndex("pvalue")), g("pvalue"), 1e-4,
@@ -318,10 +319,11 @@ class AssociationStudySpec extends SparkSpec {
   test("driver query analyze_assoc_cogroup is collect-free and rejects dup ids") {
     // the CORRECTNESS board's co-group row (VERDICT r9 #6): assert the
     // declared query actually exercises the no-collect path
-    val r = SparkEntry.queries("analyze_assoc_cogroup")(spark, "/root/testdata/sf0.001")
-      .collect()
-    assert(!AssociationStudy.wasCollectedForBroadcast,
-      "analyze_assoc_cogroup must run the co-group path (no driver collect)")
+    val (r, decisions) = gateDecisions(
+      SparkEntry.queries("analyze_assoc_cogroup")(spark, "/root/testdata/sf0.001").collect())
+    assert(decisions.size === 1 && decisions.head.startsWith("associationStudy:") &&
+      decisions.head.endsWith("no probe (graft.local.mode=distributed) -> distributed path"),
+      s"analyze_assoc_cogroup must run the co-group path (no driver collect): $decisions")
     assert(r.length === 2 && r.forall(!_.isNullAt(2)))
 
     // duplicate observation ids would silently EXPLODE the melt⋈base join
@@ -333,10 +335,9 @@ class AssociationStudySpec extends SparkSpec {
       .toDF("id", "y", "x")
     val cf = graft.model.CladeFrame(dup, "id")
     val ex = intercept[IllegalArgumentException] {
-      AssociationStudy.run(spark, cf, outcomes = Seq("y"),
+      distributed(AssociationStudy.run(spark, cf, outcomes = Seq("y"),
         regressionVariables = Seq("x"), minN = 1,
-        reportCategoricalBetas = true, // disqualify the aggregated path
-        broadcastBase = Some(false)).collect()
+        reportCategoricalBetas = true)) // disqualify the aggregated path
     }
     assert(ex.getMessage.contains("not unique"), ex.getMessage)
   }

@@ -55,10 +55,9 @@ class EwasTailSpec extends SparkSpec {
   }
 
   test("after a broadcast-path study, its collect, BH-FDR and hits start 0 jobs") {
-    val res = AssociationStudy.run(spark, tiny, Seq("y"), covariates = Seq("k"),
-      regressionVariables = Seq("x", "c", "z", "empty"), minN = 10,
-      broadcastBase = Some(true))
-    assert(AssociationStudy.wasCollectedForBroadcast)
+    val (res, decisions) = gateDecisions(AssociationStudy.run(spark, tiny, Seq("y"),
+      covariates = Seq("k"), regressionVariables = Seq("x", "c", "z", "empty"), minN = 10))
+    assert(decisions.size === 1 && decisions.head.endsWith("-> driver-local path"), decisions)
     val (rows, collectJobs) = jobsOf(res.collect())
     assert(rows.length === 4)
     assert(collectJobs === 0, "collect of the study result")
@@ -102,10 +101,10 @@ class EwasTailSpec extends SparkSpec {
     // column has a null pvalue
     val twin = tiny.copy(df = tiny.df.withColumn("ü", col("x")).withColumn("b", col("x")))
       .withTypes(Map("ü" -> VariableType.Continuous, "b" -> VariableType.Continuous))
-    val study = AssociationStudy.run(spark, twin, Seq("y"), covariates = Seq("k"),
-      regressionVariables = Seq("ü", "c", "b", "empty", "z"), minN = 10,
-      broadcastBase = Some(true))
-    assert(AssociationStudy.wasCollectedForBroadcast)
+    val (study, decisions) = gateDecisions(AssociationStudy.run(spark, twin, Seq("y"),
+      covariates = Seq("k"), regressionVariables = Seq("ü", "c", "b", "empty", "z"),
+      minN = 10))
+    assert(decisions.size === 1 && decisions.head.endsWith("-> driver-local path"), decisions)
     val got = study.collect().map(_.getString(0)).toSeq
     assert(got === study.orderBy(col("pvalue").asc_nulls_last, col("Variable"))
       .collect().map(_.getString(0)).toSeq)

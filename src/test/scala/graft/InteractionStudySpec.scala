@@ -138,8 +138,8 @@ class InteractionStudySpec extends SparkSpec {
     val rvs = Seq("RIAGENDR", "race", "agecat")
     val pairs = for (i <- rvs.indices; j <- (i + 1) until rvs.size)
       yield (rvs(i), rvs(j))
-    val cg = InteractionStudy.run(spark, data, "HI_CHOL",
-      interactions = pairs, covariates = Nil, broadcastBase = Some(false))
+    val cg = distributed(InteractionStudy.run(spark, data, "HI_CHOL",
+      interactions = pairs, covariates = Nil))
     check(cg, golden("nhanes_pairwise.csv"))
     // exact numeric equivalence against the broadcast path
     val bc = InteractionStudy.run(spark, data, "HI_CHOL",
@@ -155,9 +155,10 @@ class InteractionStudySpec extends SparkSpec {
   test("co-group path reportBetas matches broadcast (ageXgender with covar)") {
     val data = Modify.colfilter(nhanes,
       only = Some(Seq("HI_CHOL", "RIAGENDR", "race", "agecat")))
-    val run = (b: Boolean) => InteractionStudy.run(spark, data, "HI_CHOL",
+    def study() = InteractionStudy.run(spark, data, "HI_CHOL",
       interactions = Seq(("agecat", "RIAGENDR")), covariates = Seq("race"),
-      reportBetas = true, broadcastBase = Some(b))
+      reportBetas = true)
+    val run = (b: Boolean) => if (b) study() else distributed(study())
     val bc = run(true).collect().map(r => r.getString(3) -> r.toSeq).toMap
     val cg = run(false).collect().map(r => r.getString(3) -> r.toSeq).toMap
     assert(bc.keySet === cg.keySet)
@@ -257,16 +258,17 @@ class InteractionStudySpec extends SparkSpec {
           cmpCell(x, y, s"$k field $i") }
       }
     }
-    def run(b: Option[Boolean], betas: Boolean) =
+    def run(betas: Boolean) =
       InteractionStudy.run(spark, cf, "y", interactions = pairs,
-        covariates = Seq("x3"), minN = 1, reportBetas = betas,
-        broadcastBase = b)
-    assert({ run(None, betas = false); !graft.analyze.AssociationStudy.wasCollectedForBroadcast },
+        covariates = Seq("x3"), minN = 1, reportBetas = betas)
+    def rows(betas: Boolean) = InteractionStudy.runRows(spark, cf, "y", pairs,
+      Seq("x3"), minN = 1, reportBetas = betas)
+    assert(gateDecisions(run(betas = false))._2.isEmpty,
       "default path must be the no-collect aggregated one")
-    cmp(run(None, betas = false), run(Some(true), betas = false), 1)
-    cmp(run(None, betas = true), run(Some(true), betas = true), 3)
+    cmp(run(betas = false), rows(betas = false), 1)
+    cmp(run(betas = true), rows(betas = true), 3)
     // the constant-variable pair produced the same error row on both paths
-    val err = run(None, betas = false).collect()
+    val err = run(betas = false).collect()
       .find(r => r.getString(0) == "xconst").get
     assert(!err.getBoolean(3) && err.getString(9) == "interaction term does not vary")
   }
@@ -290,12 +292,12 @@ class InteractionStudySpec extends SparkSpec {
     cf = Modify.makeCategorical(cf, only = Some(Seq("cat")))
     cf = Modify.makeBinary(cf, only = Some(Seq("bin")))
     val pairs = Seq(("cat", "x"), ("bin", "x"), ("cat", "x2"), ("bin", "cat"))
-    def run(b: Option[Boolean]) = InteractionStudy.run(spark, cf, "y",
-      interactions = pairs, minN = 1, broadcastBase = b)
-    val agg = run(None)
-    assert(!graft.analyze.AssociationStudy.wasCollectedForBroadcast,
+    val (agg, decisions) = gateDecisions(InteractionStudy.run(spark, cf, "y",
+      interactions = pairs, minN = 1))
+    assert(decisions.isEmpty,
       "declared categorical/binary blocks must ride the aggregated path")
-    val bcMap = run(Some(true)).collect()
+    val bcMap = InteractionStudy.runRows(spark, cf, "y", pairs, Nil, minN = 1,
+        reportBetas = false).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.toSeq).toMap
     agg.collect().foreach { r =>
       val k = (r.getString(0), r.getString(1))

@@ -4,8 +4,9 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import graft.analyze.Corrections
+import graft.analyze.{AssociationStudy, Corrections, InteractionStudy}
 import graft.describe.Describe
+import graft.model.{CladeFrame, VariableType}
 import graft.pipeline.{Dedup, Graph, Text}
 
 /** Routing guard for the dual-path operators: `graft.local.mode=distributed`
@@ -43,6 +44,11 @@ class LocalPathSpec extends SparkSpec {
       .toDF("src", "dst", "w")
     val pvalues = (1 to 20).map(i => (s"v$i", i / 21.0)).toDF("Variable", "pvalue")
     val docs = Seq("ab ab abc", "bca cab abab").toDF("text")
+    // a categorical covariate / interaction var keeps both studies off
+    // their aggregated paths, on the gated row paths
+    val study = CladeFrame(sample.withColumn("id", monotonically_increasing_id()), "id")
+      .withTypes(Map("g" -> VariableType.Categorical, "x" -> VariableType.Continuous,
+        "pos" -> VariableType.Binary, "w" -> VariableType.Continuous))
     val ops: Seq[(String, () => Any)] = Seq(
       "giniByGroup" -> (() => Describe.giniByGroup(sample, "x", "g").collect()),
       "ksTwoSample" -> (() => Describe.ksTwoSample(sample, "x", col("pos")).collect()),
@@ -57,11 +63,38 @@ class LocalPathSpec extends SparkSpec {
       "labelPropagation" -> (() => Graph.labelPropagation(edges, "src", "dst").collect()),
       "pageRank" -> (() => Graph.pageRank(edges, "src", "dst", "w").collect()),
       "components" -> (() => Dedup.components(edges, "src", "dst").collect()),
-      "bpeTrain" -> (() => Text.bpeTrain(docs, "text", 3).collect()))
+      "bpeTrain" -> (() => Text.bpeTrain(docs, "text", 3).collect()),
+      "associationStudy" -> (() => AssociationStudy.run(spark, study, Seq("x"),
+        covariates = Seq("g"), regressionVariables = Seq("w"), minN = 1).collect()),
+      "interactionStudy" -> (() => InteractionStudy.run(spark, study, "pos",
+        Seq(("g", "x")), minN = 1).collect()))
     ops.foreach { case (op, run) =>
       val auto = jobsOf(run())
       val dist = jobsOf(distributed(run()))
       assert(dist > auto, s"$op: $dist jobs under distributed, $auto under auto")
+    }
+  }
+
+  test("the distributed scope restores the mode the caller had set") {
+    val key = LocalPath.ModeKey
+    val before = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "auto")
+      val inner = LocalPath.distributed(spark) {
+        LocalPath.distributed(spark)(spark.conf.get(key)) // nested scopes
+      }
+      assert(inner === "distributed")
+      assert(spark.conf.getOption(key) === Some("auto"))
+      intercept[IllegalStateException] {
+        LocalPath.distributed(spark)(throw new IllegalStateException("body failed"))
+      }
+      assert(spark.conf.getOption(key) === Some("auto"), "restored after a failure")
+      spark.conf.unset(key)
+      LocalPath.distributed(spark)(())
+      assert(spark.conf.getOption(key) === None, "an unset mode stays unset")
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
     }
   }
 }

@@ -1223,8 +1223,8 @@ class ModifyDescribeSpec extends SparkSpec {
   test("targetEncodeLoo: broadcast gate falls back to a plain join past the cap, identical output") {
     import spark.implicits._
     val df = (0 until 200).map(i => (s"c${i % 17}", i.toLong)).toDF("cat", "q")
-    def run(): (Array[(String, Long, Option[Double])], String) = {
-      val out = graft.modify.Modify.targetEncodeLoo(df, "cat", "q")
+    def run(maxBytes: Long): (Array[(String, Long, Option[Double])], String) = {
+      val out = graft.modify.Modify.targetEncodeLoo(df, "cat", "q", "te_loo", maxBytes)
       val rows = out.collect().map(r => (r.getString(0), r.getLong(1),
         if (r.isNullAt(2)) None else Some(r.getDouble(2)))).sortBy(t => (t._1, t._2))
       (rows, out.queryExecution.executedPlan.toString)
@@ -1235,16 +1235,16 @@ class ModifyDescribeSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val (hinted, hintedPlan) = run()
+      val (hinted, hintedPlan) = run(256L << 20)
       assert(hintedPlan.contains("BroadcastHashJoin"),
         s"default cap must HINT broadcast despite threshold=-1:\n$hintedPlan")
-      spark.conf.set("graft.broadcastBase.maxBytes", "1")
-      try {
-        val (fallback, fbPlan) = run()
-        assert(!fbPlan.contains("BroadcastHashJoin"),
-          s"cap=1 must take the plain-join path:\n$fbPlan")
-        assert(fallback.toSeq === hinted.toSeq, "fallback output diverged")
-      } finally spark.conf.unset("graft.broadcastBase.maxBytes")
+      assert(graft.modify.Modify.targetEncodeLoo(df, "cat", "q")
+        .queryExecution.executedPlan.toString.contains("BroadcastHashJoin"),
+        "the public entry must use the default cap")
+      val (fallback, fbPlan) = run(1L)
+      assert(!fbPlan.contains("BroadcastHashJoin"),
+        s"cap=1 must take the plain-join path:\n$fbPlan")
+      assert(fallback.toSeq === hinted.toSeq, "fallback output diverged")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 

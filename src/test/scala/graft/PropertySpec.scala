@@ -228,8 +228,8 @@ class PropertySpec extends SparkSpec {
       val pairs = Seq(("x1", "x2"), ("cat", "x1"), ("cat", "x2"))
       val agg = InteractionStudy.run(spark, cf, "y", pairs, minN = 1)
         .collect().map(r => (r.getString(0), r.getString(1)) -> r.toSeq).toMap
-      val bc = InteractionStudy.run(spark, cf, "y", pairs, minN = 1,
-          broadcastBase = Some(true))
+      val bc = InteractionStudy.runRows(spark, cf, "y", pairs, Nil, minN = 1,
+          reportBetas = false)
         .collect().map(r => (r.getString(0), r.getString(1)) -> r.toSeq).toMap
       assert(agg.keySet === bc.keySet, s"trial $trial")
       agg.foreach { case (k, row) =>

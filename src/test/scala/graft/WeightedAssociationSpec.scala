@@ -153,9 +153,10 @@ class WeightedAssociationSpec extends SparkSpec {
     val data = Modify.colfilter(cf, only = Some(Seq("x", "y")))
     def runPath(bc: Boolean) = {
       val d = mkDesign()
-      val r = AssociationStudy.run(spark, data, outcomes = Seq("y"),
+      def study() = AssociationStudy.run(spark, data, outcomes = Seq("y"),
         regressionVariables = Seq("x"), minN = 5, standardizeData = true,
-        surveyDesign = Some(d), broadcastBase = Some(bc)).collect().head
+        surveyDesign = Some(d))
+      val r = (if (bc) study() else distributed(study())).collect().head
       (r, d)
     }
     val (b, _) = runPath(true)
@@ -168,9 +169,9 @@ class WeightedAssociationSpec extends SparkSpec {
         1e-10, s"standardized weighted $cn")
     }
     // and standardization actually changed the fit vs unstandardized
-    val plain = AssociationStudy.run(spark, data, outcomes = Seq("y"),
+    val plain = distributed(AssociationStudy.run(spark, data, outcomes = Seq("y"),
       regressionVariables = Seq("x"), minN = 5,
-      surveyDesign = Some(mkDesign()), broadcastBase = Some(false)).collect().head
+      surveyDesign = Some(mkDesign()))).collect().head
     assert(math.abs(plain.getDouble(plain.fieldIndex("Beta")) -
       c.getDouble(c.fieldIndex("Beta"))) > 1e-9)
   }
@@ -185,9 +186,9 @@ class WeightedAssociationSpec extends SparkSpec {
     val g = golden(refPath("r_test_output/analyze/nhanes_weightsonly_result.csv"))
     Seq(("race", Seq("agecat", "RIAGENDR")), ("RIAGENDR", Seq("race", "agecat")))
       .foreach { case (rv, covars) =>
-        val res = AssociationStudy.run(spark, data, outcomes = Seq("HI_CHOL"),
+        val res = distributed(AssociationStudy.run(spark, data, outcomes = Seq("HI_CHOL"),
           covariates = covars, regressionVariables = Seq(rv),
-          surveyDesign = Some(design), broadcastBase = Some(false))
+          surveyDesign = Some(design)))
         checkRow(res, rv, g(rv))
       }
     // the no-cluster design must reach the kernel through the O(#strata)
@@ -276,9 +277,9 @@ class WeightedAssociationSpec extends SparkSpec {
       .subset(cf.df, org.apache.spark.sql.functions.col("agecat") =!= "(19,39]")
     val data = Modify.colfilter(cf, only = Some(Seq("HI_CHOL", "RIAGENDR", "race", "agecat")))
     val g = golden(refPath("r_test_output/analyze/nhanes_complete_result_subset_cat.csv"))
-    val res = AssociationStudy.run(spark, data, outcomes = Seq("HI_CHOL"),
+    val res = distributed(AssociationStudy.run(spark, data, outcomes = Seq("HI_CHOL"),
       covariates = Seq("agecat", "RIAGENDR"), regressionVariables = Seq("race"),
-      surveyDesign = Some(design), broadcastBase = Some(false))
+      surveyDesign = Some(design)))
     checkRow(res, "race", g("race"), rtol = 1e-3)
     assert(!design.wasCollectedForBroadcast,
       "co-group subset run must not materialize ids on the driver")
@@ -357,9 +358,9 @@ class WeightedAssociationSpec extends SparkSpec {
     val g = golden(refPath("r_test_output/analyze/nhanes_complete_result.csv"))
     Seq(("race", Seq("agecat", "RIAGENDR")), ("RIAGENDR", Seq("race", "agecat")))
       .foreach { case (rv, covars) =>
-        val res = AssociationStudy.run(spark, data, outcomes = Seq("HI_CHOL"),
+        val res = distributed(AssociationStudy.run(spark, data, outcomes = Seq("HI_CHOL"),
           covariates = covars, regressionVariables = Seq(rv),
-          surveyDesign = Some(design), broadcastBase = Some(false))
+          surveyDesign = Some(design)))
         checkRow(res, rv, g(rv))
       }
     // the scale contract: the co-group path must never materialize the
