@@ -147,9 +147,9 @@ object Describe {
     //     `count_distinct(c)`s in a flat agg make Catalyst plan an
     //     (N+1)-way Expand (every input row replicated once per distinct
     //     aggregate; measured 1.5s of this query's 2.7s at sf0.1), while
-    //     (vid, value) melting leaves a SINGLE distinct expression, which
-    //     plans as two-phase hash aggregation (vid, value)→(vid) with
-    //     map-side partials and no row replication;
+    //     (variable, value) melting leaves a SINGLE distinct expression,
+    //     which plans as two-phase hash aggregation (variable, value) →
+    //     (variable) with map-side partials and no row replication;
     //  3. the quantile rank counts — a flat codegen'd conditional-count
     //     aggregate (needs job 1's thresholds).
     //
@@ -159,15 +159,10 @@ object Describe {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    val k = cols.length
     val skF = Future { summarizeApprox(spark, df, cols, rsd, accuracy).collect() }
     val distF = Future {
-      df.selectExpr(
-        s"stack($k, ${cols.zipWithIndex.map { case (c, j) => s"$j, CAST(`$c` AS DOUBLE)" }
-          .mkString(", ")}) AS (vid, value)")
-        .filter(col("value").isNotNull)
-        .groupBy("vid").agg(count_distinct(col("value")).as("d"))
-        .collect()
+      Modify.meltNumeric(df, cols).filter(col("value").isNotNull)
+        .groupBy("variable").agg(count_distinct(col("value")).as("d")).collect()
     }
     val sk = Await.result(skF, Duration.Inf)
     val byVar = sk.map(r => r.getString(0) -> r).toMap
@@ -184,13 +179,12 @@ object Describe {
     }
     val ranks = df.agg(rankAggs.head, rankAggs.tail: _*).head()
     // all-null columns have no melted rows: absent groups audit as zeros
-    val exByVid = Await.result(distF, Duration.Inf)
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val exByVar = Await.result(distF, Duration.Inf).map(r => r.getString(0) -> r.getLong(1)).toMap
     val eps = 1.0 / accuracy
     cols.zipWithIndex.map { case (c, ci) =>
       val r = byVar(c)
       val n = r.getLong(1)
-      val exactD = exByVid.getOrElse(ci, 0L)
+      val exactD = exByVar.getOrElse(c, 0L)
       val approxD = r.getLong(2)
       val distinctOk =
         if (exactD == 0L) approxD == 0L
@@ -1465,12 +1459,8 @@ object Describe {
     * O(#levels), never row-scale. */
   def entropy(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "cols must be non-empty")
-    val k = cols.length
-    val melted = df.selectExpr(
-      s"stack($k, ${cols.map(c => s"'$c', CAST(`$c` AS STRING)").mkString(", ")}) " +
-        "AS (variable, value)")
-      .filter(col("value").isNotNull)
-    melted.groupBy("variable", "value").agg(count(lit(1)).as("n"))
+    Modify.melt(df, cols).filter(col("value").isNotNull)
+      .groupBy("variable", "value").agg(count(lit(1)).as("n"))
       .groupBy("variable").agg(
         count(lit(1)).as("n_levels"),
         sum("n").as("total"),
@@ -1516,9 +1506,8 @@ object Describe {
       (1 until bins).map(_.toDouble / bins))
     val usable = cols.filter(bounds(_).isDefined)
     require(usable.nonEmpty, "no non-empty reference columns")
-    def melt(df: DataFrame): DataFrame = df.selectExpr(
-      s"stack(${usable.size}, ${usable.map(c => s"'$c', CAST(`$c` AS DOUBLE)").mkString(", ")}) AS (variable, value)")
-      .filter(col("value").isNotNull)
+    def melt(df: DataFrame): DataFrame =
+      Modify.meltNumeric(df, usable).filter(col("value").isNotNull)
     val bin = usable.foldLeft(lit(null).cast("int")) { (acc, c) =>
       when(col("variable") === c,
         bounds(c).get.map(b => when(col("value") > b, 1).otherwise(0))

@@ -37,29 +37,27 @@ object GraftFunctions {
       }, "scala_udf")
   }
 
-  /** cosine_similarity(a, b) as a Column. Registers on the active session
-    * first (Column <-> Expression bridges are session-private in Spark 4;
-    * `call_function` is the public path). */
-  def cosine_similarity(a: Column, b: Column): Column = {
-    register(SparkSession.active)
-    org.apache.spark.sql.functions.call_function("cosine_similarity", a, b)
+  /** `name(args)` as a Column of a frame on `spark`, registered there first: `call_function`,
+    * the public path in Spark 4, resolves in the session of the frame it is used in. */
+  private def call(spark: SparkSession, name: String, args: Column*): Column = {
+    register(spark)
+    org.apache.spark.sql.functions.call_function(name, args: _*)
   }
+
+  def cosine_similarity(spark: SparkSession, a: Column, b: Column): Column =
+    call(spark, "cosine_similarity", a, b)
 
   /** bloom_agg over PRE-HASHED (xxhash64) long keys; returns the serialized
     * sketch as one binary value. Sizing via expectedItems + numBits. */
-  def bloom_agg(hashed: Column, expectedItems: Long, numBits: Long): Column = {
-    register(SparkSession.active)
-    org.apache.spark.sql.functions.call_function("graft_bloom_agg", hashed,
-      org.apache.spark.sql.functions.lit(expectedItems),
-      org.apache.spark.sql.functions.lit(numBits))
-  }
+  def bloom_agg(spark: SparkSession, hashed: Column, expectedItems: Long,
+                numBits: Long): Column = call(spark, "graft_bloom_agg", hashed,
+    org.apache.spark.sql.functions.lit(expectedItems),
+    org.apache.spark.sql.functions.lit(numBits))
 
   /** Probe a serialized bloom sketch (binary, constant/foldable) with an
     * xxhash64-hashed key. Codegen'd; false positives possible, negatives exact. */
-  def might_contain(sketch: Column, hashed: Column): Column = {
-    register(SparkSession.active)
-    org.apache.spark.sql.functions.call_function("graft_might_contain", sketch, hashed)
-  }
+  def might_contain(spark: SparkSession, sketch: Column, hashed: Column): Column =
+    call(spark, "graft_might_contain", sketch, hashed)
 }
 
 /** SparkSessionExtensions hook: `spark.sql.extensions=graft.functions.GraftExtensions`

@@ -29,13 +29,4 @@ object VariableType {
   def fromString(s: String): VariableType =
     all.find(_.name == s).getOrElse(
       throw new IllegalArgumentException(s"unknown variable type: $s"))
-
-  /** Classify from a distinct-level count the way categorize() does
-    * (reference: clarite/modules/modify.py:40-176). Caller decides
-    * numeric-coercibility for the continuous branch. */
-  def fromLevelCount(n: Long): VariableType = n match {
-    case 0 | 1 => Constant
-    case 2     => Binary
-    case _     => Categorical
-  }
 }

@@ -1,6 +1,8 @@
 package graft.modify
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.model.{CladeFrame, VariableType}
@@ -30,15 +32,54 @@ object Modify {
   private def aggRow(df: DataFrame, aggs: Seq[Column]): Row =
     df.agg(aggs.head, aggs.tail: _*).head()
 
-  /** Exact distinct-count of non-null values per column, one pass.
-    * countDistinct is exact — required: type inference at a binary/
-    * categorical boundary must not be approximate. At extreme scale an
-    * approx_count_distinct prefilter can skip clearly-continuous columns,
-    * but the final decision stays exact. */
-  private def distinctCounts(df: DataFrame, cols: Seq[String]): Map[String, Long] = {
+  /** A variable's exact nunique, bad-cast flag and, if at most `maxLevels`, sorted levels. */
+  private final case class Distinct(nunique: Long, badCast: Boolean, levels: Option[Seq[String]])
+
+  /** The one definition of a variable's distinct values, shared by the
+    * typing operators: ONE job melts the typed columns to (variable, value
+    * as string, bad cast) and summarizes each variable's distinct pairs,
+    * linear in rows × columns (a flat distinct count per column plans an
+    * (N+1)-way Expand). All-null variables are absent. Exact like a distinct
+    * count of the typed column: the bad cast is judged on the typed column (a
+    * timestamp casts to double, its string does not), a string column's once
+    * per distinct value (a failed parse costs an exception), and `-0.0` and
+    * `0.0` count once, though the levels keep both strings as the cast
+    * column does. No level buffer grows past `maxLevels + 2` strings. */
+  private def distinctValues(df: DataFrame, cols: Seq[String],
+                             maxLevels: Int): Map[String, Distinct] = {
     if (cols.isEmpty) return Map.empty
-    val r = aggRow(df, cols.map(c => countDistinct(col(c)).as(c)))
-    cols.zipWithIndex.map { case (c, i) => c -> r.getLong(i) }.toMap
+    val typeOf = cols.map(c => c -> df.schema(c).dataType).toMap
+    val bad = (c: String) => // a string column is judged below, per distinct value
+      if (typeOf(c) == StringType) "CAST(NULL AS BOOLEAN)" else s"try_cast(`$c` AS DOUBLE) IS NULL"
+    val levels = udaf(new CappedLevels(maxLevels.toLong + 1), Encoders.STRING)
+    df.select(stack("variable, value, bad",
+        cols.map(c => Seq(quoted(c), s"CAST(`$c` AS STRING)", bad(c)))))
+      .filter(col("value").isNotNull)
+      .groupBy("variable", "value").agg(max("bad").as("bad"))
+      .groupBy("variable").agg(count(lit(1)),
+        max(coalesce(col("bad"), tryCastDouble("value").isNull)),
+        count(when(col("value").isin("0.0", "-0.0"), true)), sort_array(levels(col("value"))))
+      .collect().map { r =>
+        val c = r.getString(0)
+        val zeros = Seq(FloatType, DoubleType).contains(typeOf(c)) && r.getLong(3) == 2
+        val n = r.getLong(1) - (if (zeros) 1 else 0)
+        c -> Distinct(n, r.getBoolean(2), Option.when(n <= maxLevels)(r.getSeq[String](4)))
+      }.toMap
+  }
+
+  /** Every variable's sorted distinct strings; absent when all null. */
+  private def levelsOf(df: DataFrame, cols: Seq[String]): Map[String, Seq[String]] =
+    distinctValues(df, cols, Int.MaxValue).collect { case (c, Distinct(_, _, Some(l))) => c -> l }
+
+  /** A group's strings, or null once there are more than `cap`. The inputs
+    * are distinct, so the buffer only appends; it stops growing past `cap`. */
+  private final class CappedLevels(cap: Long) extends Aggregator[String, Seq[String], Seq[String]] {
+    def zero: Seq[String] = Vector.empty
+    def reduce(b: Seq[String], v: String): Seq[String] = if (b.size > cap) b else b :+ v
+    def merge(x: Seq[String], y: Seq[String]): Seq[String] = if (x.size > cap) x else x ++ y
+    def finish(b: Seq[String]): Seq[String] = if (b.size > cap) null else b
+    def bufferEncoder: Encoder[Seq[String]] = ExpressionEncoder[Seq[String]]()
+    def outputEncoder: Encoder[Seq[String]] = ExpressionEncoder[Seq[String]]()
   }
 
   // ----------------------------------------------------------- §2.2 columns
@@ -81,8 +122,7 @@ object Modify {
     val tested = cf.resolveSkipOnly(skip, only).filter(c =>
       Set[VariableType](Binary, Categorical, Continuous)(cf.typeOf(c)))
     if (tested.isEmpty) return cf
-    val r = aggRow(cf.df, tested.map(c => count(col(c)).as(c)))
-    val counts = tested.zipWithIndex.map { case (c, i) => c -> r.getLong(i) }.toMap
+    val counts = nonNullCounts(cf, tested)
     val dropped = tested.filter(counts(_) < n).toSet
     logColfilter(cf, tested, dropped, s"which had less than $n non-null values.",
       Seq(Binary, Categorical, Continuous))
@@ -238,19 +278,19 @@ object Modify {
   def makeBinary(cf: CladeFrame, skip: Option[Seq[String]] = None,
                  only: Option[Seq[String]] = None): CladeFrame = {
     val cols = cf.resolveSkipOnly(skip, only)
-    val counts = distinctCounts(cf.df, cols)
-    val bad = cols.filter(counts(_) != 2)
+    val dv = distinctValues(cf.df, cols, 2)
+    val bad = cols.filter(c => dv.get(c).forall(_.nunique != 2))
     require(bad.isEmpty,
       s"cannot make binary (not exactly 2 unique values): ${bad.mkString(", ")}")
-    val lv = levelSets(cf, cols)
-    castToString(cf, cols).withTypes(cols.map(_ -> (Binary: VariableType)).toMap).withLevels(lv)
+    castToString(cf, cols).withTypes(cols.map(_ -> (Binary: VariableType)).toMap)
+      .withLevels(cols.map(c => c -> dv(c).levels.get).toMap)
   }
 
   /** make_categorical (reference: modify.py:456-500). */
   def makeCategorical(cf: CladeFrame, skip: Option[Seq[String]] = None,
                       only: Option[Seq[String]] = None): CladeFrame = {
     val cols = cf.resolveSkipOnly(skip, only)
-    val lv = levelSets(cf, cols)
+    val lv = levelsOf(cf.df, cols)
     castToString(cf, cols)
       .withTypes(cols.map(_ -> (Categorical: VariableType)).toMap).withLevels(lv)
   }
@@ -270,14 +310,6 @@ object Modify {
       levels = cf.levels -- cols)
   }
 
-  /** Distinct sorted non-null level values per column (one melt pass). */
-  def levelSets(cf: CladeFrame, cols: Seq[String]): Map[String, Seq[String]] = {
-    if (cols.isEmpty) return Map.empty
-    melt(cf.df, cols).filter(col("value").isNotNull)
-      .groupBy("variable").agg(sort_array(collect_set(col("value"))).as("levels"))
-      .collect().map(r => r.getString(0) -> r.getSeq[String](1)).toMap
-  }
-
   /** Result of [[categorize]] with the per-variable decision trail
     * (the reference logs these counts; we surface them as data). */
   final case class CategorizeReport(
@@ -289,53 +321,35 @@ object Modify {
     * 0 uniques → dropped; 1 → constant; 2 → binary;
     * [catMin, catMax] → categorical; >= contMin → continuous if
     * numeric-coercible else unknown; the (catMax, contMin) gap → unknown.
-    * One aggregation pass computes nunique + coercibility for every column.
+    * One job computes every column's exact nunique, coercibility and, up
+    * to `catMax` values, its level set ([[distinctValues]]).
     */
   def categorize(cf: CladeFrame, catMin: Int = 3, catMax: Int = 6,
                  contMin: Int = 15): CategorizeReport = {
     require(catMin > 2 && catMin <= catMax && contMin > catMax)
     val vars = cf.variables
     if (vars.isEmpty) return CategorizeReport(cf, Nil)
-    val aggs = vars.flatMap { c =>
-      Seq(countDistinct(col(c)).as(s"u_$c"),
-        sum(when(col(c).isNotNull && tryCastDouble(c).isNull, 1L).otherwise(0L)).as(s"b_$c"))
-    }
-    // fanOutSmall (r18, §2.5): N countDistincts plan an (N+1)-way Expand —
-    // every row replicated once per distinct aggregate — and on a
-    // single-row-group input all of it ran in the scan's ONE task
-    // (915 ms of modify_categorize's 1.5 s). The deterministic union
-    // fan-out runs the Expand + distinct-hash work on 1/fanout rows per
-    // branch; countDistinct/sum are partitioning-invariant, so decisions
-    // are identical. (The r17 NEGATIVE result was a repartition-based
-    // spread — the exchange carried every column; this is the exchange-
-    // free xxhash64-filter union measured positive on the Gram scans.)
-    val r = aggRow(graft.stats.Rows.fanOutSmall(cf.df, col(cf.idCol)), aggs)
-    val decisions = vars.zipWithIndex.map { case (c, i) =>
-      val u = r.getLong(2 * i)
-      val badCast = if (r.isNullAt(2 * i + 1)) 0L else r.getLong(2 * i + 1)
+    val dv = distinctValues(cf.df, vars, catMax)
+    val decisions = vars.map { c =>
+      val Distinct(u, badCast, _) = dv.getOrElse(c, Distinct(0L, badCast = false, None))
       val decision: String =
         if (u == 0) "dropped"
         else if (u == 1) Constant.name
         else if (u == 2) Binary.name
         else if (u >= catMin && u <= catMax) Categorical.name
-        else if (u >= contMin && badCast == 0) Continuous.name
+        else if (u >= contMin && !badCast) Continuous.name
         else Unknown.name
       (c, u, decision)
     }
-    val keep = decisions.filter(_._3 != "dropped").map(_._1)
-    val newTypes = decisions.collect {
+    val kinds = decisions.collect {
       case (c, _, d) if d != "dropped" => c -> VariableType.fromString(d)
-    }.toMap
-    val catCols = decisions.collect {
-      case (c, _, d) if d == Constant.name || d == Binary.name || d == Categorical.name => c
     }
-    val contCols = decisions.collect { case (c, _, d) if d == Continuous.name => c }
-    val base = cf.selectVariables(keep)
-    val casted = base.df.withColumns((catCols.filter(keep.contains).map(c =>
+    val catCols = kinds.collect { case (c, Constant | Binary | Categorical) => c }
+    val contCols = kinds.collect { case (c, Continuous) => c }
+    val casted = cf.selectVariables(kinds.map(_._1)).df.withColumns((catCols.map(c =>
       c -> col(c).cast(StringType)) ++ contCols.map(c => c -> tryCastDouble(c))).toMap)
-    val lv = levelSets(base, catCols)
-    CategorizeReport(
-      CladeFrame(casted, newTypes, lv, cf.idCol),
+    CategorizeReport(CladeFrame(casted, kinds.toMap,
+      catCols.map(c => c -> dv(c).levels.get).toMap, cf.idCol),
       decisions)
   }
 
@@ -465,10 +479,7 @@ object Modify {
       : (org.apache.spark.rdd.RDD[(Int, Double)], Array[Long], Array[Long],
          Array[Long], DataFrame) = {
     val k = cols.length
-    val melted = df.selectExpr(
-      s"stack($k, ${cols.zipWithIndex.map { case (c, j) => s"$j, CAST(`$c` AS DOUBLE)" }
-        .mkString(", ")}) AS (vid, value)")
-      .filter(col("value").isNotNull && !isnan(col("value")))
+    val melted = numericCells(df, cols)
     val parts = math.max(df.sparkSession.sessionState.conf.numShufflePartitions, 1)
     // cache the sorted DATAFRAME (compressed Tungsten columnar batches),
     // not an RDD of boxed (Int, Double) tuples: at 240M melted rows the
@@ -536,10 +547,7 @@ object Modify {
     val spark = df.sparkSession
     import spark.implicits._
     val k = cols.length
-    val melted = df.selectExpr(
-      s"stack($k, ${cols.zipWithIndex.map { case (c, j) => s"$j, CAST(`$c` AS DOUBLE)" }
-        .mkString(", ")}) AS (vid, value)", s"`$idCol` AS __id")
-      .filter(col("value").isNotNull && !isnan(col("value")))
+    val melted = numericCells(df, cols, col(idCol).as("__id"))
     val parts = math.max(spark.sessionState.conf.numShufflePartitions, 1)
     // cache the sorted DATAFRAME (compressed Tungsten columnar), not boxed
     // tuples — same reasoning as sortedMelt: object-per-row storage was
@@ -721,10 +729,7 @@ object Modify {
         when(col("vid") < mid, dispatch(lo, mid)).otherwise(dispatch(mid, hi))
       }
     val zoneExpr: Column = dispatch(0, k)
-    val melted = df.selectExpr(
-      s"stack($k, ${cols.zipWithIndex.map { case (c, j) => s"$j, CAST(`$c` AS DOUBLE)" }
-        .mkString(", ")}) AS (vid, value)")
-      .filter(col("value").isNotNull && !isnan(col("value")))
+    val melted = numericCells(df, cols)
     val rows2 = melted
       .select(col("vid"), zoneExpr.as("zone"),
         when(zoneExpr % 2 === 1, col("value")).as("v"))
@@ -967,11 +972,7 @@ object Modify {
       if (lowIdx.isEmpty) Map.empty
       else {
         val lowCols = lowIdx.toSeq.sorted.map(cols(_))
-        val k = lowCols.length
-        val counted = df.selectExpr(
-          s"stack($k, ${lowCols.zipWithIndex.map { case (c, j) => s"$j, CAST(`$c` AS DOUBLE)" }
-            .mkString(", ")}) AS (vid, value)")
-          .filter(col("value").isNotNull && !isnan(col("value")))
+        val counted = numericCells(df, lowCols)
           .groupBy("vid", "value").agg(count(lit(1)).as("cnt"))
           .collect()
         // exact type-7 order statistic over (value, cnt) runs — the same
@@ -1049,10 +1050,7 @@ object Modify {
     val spark = df.sparkSession
     import spark.implicits._
     val k = cols.length
-    val counted = df.selectExpr(
-      s"stack($k, ${cols.zipWithIndex.map { case (c, j) => s"$j, CAST(`$c` AS DOUBLE)" }
-        .mkString(", ")}) AS (vid, value)")
-      .filter(col("value").isNotNull && !isnan(col("value")))
+    val counted = numericCells(df, cols)
       .groupBy("vid", "value").agg(count(lit(1)).as("cnt"))
     val parts = math.max(spark.sessionState.conf.numShufflePartitions, 1)
     val sortedDf = counted.repartitionByRange(parts, col("vid"), col("value"))
@@ -1279,11 +1277,7 @@ object Modify {
       if (lowCols.isEmpty) Nil
       else {
         val lc = lowCols.map(_._1)
-        val k = lc.length
-        val distinct = df.selectExpr(
-          s"stack($k, ${lc.zipWithIndex.map { case (c, j) =>
-            s"$j, CAST(`$c` AS DOUBLE)" }.mkString(", ")}) AS (vid, value)")
-          .filter(col("value").isNotNull && !isnan(col("value")))
+        val distinct = numericCells(df, lc)
           .groupBy("vid", "value").agg(count(lit(1)).as("cnt"))
         val x = col("value")
         val cd = col("cnt").cast("double")
@@ -1320,7 +1314,7 @@ object Modify {
       .filter(c => cf.levels.contains(c) || cf.typeOf(c) == Binary ||
         cf.typeOf(c) == Categorical || cf.typeOf(c) == Constant)
     if (cols.isEmpty) return cf
-    cf.withLevels(levelSets(cf, cols))
+    cf.withLevels(levelsOf(cf.df, cols))
   }
 
   // ------------------------------------------------------------------- melt
@@ -1329,18 +1323,27 @@ object Modify {
     * the scale-friendly shape for per-(column,value) aggregation: a single
     * generator projection (no shuffle by itself), values cast to string.
     * Public because describe/ and the EWAS long-format path reuse it. */
-  def melt(df: DataFrame, cols: Seq[String], keep: Seq[String] = Nil): DataFrame = {
-    val kept = keep.map(col)
-    val pairs = cols.map(c => s"'${c.replace("'", "\\'")}', CAST(`$c` AS STRING)").mkString(", ")
-    df.select(kept :+ expr(s"stack(${cols.size}, $pairs) AS (variable, value)"): _*)
-  }
+  def melt(df: DataFrame, cols: Seq[String], keep: Seq[String] = Nil): DataFrame =
+    df.select(keep.map(col) :+ stack("variable, value",
+      cols.map(c => Seq(quoted(c), s"CAST(`$c` AS STRING)"))): _*)
 
   /** Typed melt for numeric work: values cast to double, nulls kept out. */
-  def meltNumeric(df: DataFrame, cols: Seq[String], keep: Seq[String] = Nil): DataFrame = {
-    val kept = keep.map(col)
-    val pairs = cols.map(c => s"'${c.replace("'", "\\'")}', CAST(`$c` AS DOUBLE)").mkString(", ")
-    df.select(kept :+ expr(s"stack(${cols.size}, $pairs) AS (variable, value)"): _*)
-  }
+  def meltNumeric(df: DataFrame, cols: Seq[String], keep: Seq[String] = Nil): DataFrame =
+    df.select(keep.map(col) :+ stack("variable, value",
+      cols.map(c => Seq(quoted(c), s"CAST(`$c` AS DOUBLE)"))): _*)
+
+  /** (vid, value) of every non-null, non-NaN cell of `cols` as a double,
+    * vid the column's index, then the `keep` columns. */
+  private def numericCells(df: DataFrame, cols: Seq[String], keep: Column*): DataFrame =
+    df.select(stack("vid, value", cols.zipWithIndex.map { case (c, j) =>
+      Seq(j.toString, s"CAST(`$c` AS DOUBLE)") }) +: keep: _*)
+      .filter(col("value").isNotNull && !isnan(col("value")))
+
+  /** The `stack` generator of `rows`, its outputs named `names`. */
+  private def stack(names: String, rows: Seq[Seq[String]]): Column =
+    expr(s"stack(${rows.size}, ${rows.map(_.mkString(", ")).mkString(", ")}) AS ($names)")
+
+  private def quoted(name: String): String = s"'${name.replace("'", "\\'")}'"
 
   private def castToString(cf: CladeFrame, cols: Seq[String]): CladeFrame =
     cf.copy(df = cf.df.withColumns(cols.map(c => c -> col(c).cast(StringType)).toMap))

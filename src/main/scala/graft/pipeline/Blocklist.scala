@@ -59,9 +59,8 @@ object Blocklist {
     try {
       if (raiseItems) conf.set(itemsKey, n.toString)
       if (raiseBits) conf.set(bitsKey, bits.toString)
-      val row = blocklist
-        .agg(GraftFunctions.bloom_agg(xxhash64(col(keyCol)), n, bits).as("bf"))
-        .head()
+      val row = blocklist.agg(GraftFunctions.bloom_agg(blocklist.sparkSession,
+        xxhash64(col(keyCol)), n, bits).as("bf")).head()
       if (row.isNullAt(0)) {          // empty blocklist → empty sketch
         val out = new java.io.ByteArrayOutputStream()
         BloomFilter.create(1, fpp).writeTo(out)
@@ -73,8 +72,8 @@ object Blocklist {
     }
   }
 
-  private def probe(bf: Array[Byte], key: Column): Column =
-    GraftFunctions.might_contain(lit(bf), xxhash64(key))
+  private def probe(df: DataFrame, bf: Array[Byte], key: Column): Column =
+    GraftFunctions.might_contain(df.sparkSession, lit(bf), xxhash64(key))
 
   /** Exact left-anti join: rows of `df` whose `keyCol` does NOT appear in
     * `blocklist[blKey]`. Bloom-negative rows (the overwhelming majority when
@@ -100,8 +99,8 @@ object Blocklist {
     // semantics identical, the verify join still removes every FP
     val bf = Option(prebuiltSketch).getOrElse(sketch(blocklist, blKey, fpp))
     val src = if (persistInput) df.persist() else df
-    val clean = src.filter(!probe(bf, col(keyCol)))
-    val verified = src.filter(probe(bf, col(keyCol)))
+    val clean = src.filter(!probe(src, bf, col(keyCol)))
+    val verified = src.filter(probe(src, bf, col(keyCol)))
       .join(blocklist.select(col(blKey).as(keyCol)), Seq(keyCol), "left_anti")
     clean.unionByName(verified)
   }
@@ -114,7 +113,7 @@ object Blocklist {
                    blocklistKey: String = null, fpp: Double = 0.01): DataFrame = {
     val blKey = Option(blocklistKey).getOrElse(keyCol)
     val bf = sketch(blocklist, blKey, fpp)
-    df.filter(probe(bf, col(keyCol)))
+    df.filter(probe(df, bf, col(keyCol)))
       .join(blocklist.select(col(blKey).as(keyCol)), Seq(keyCol), "left_semi")
   }
 

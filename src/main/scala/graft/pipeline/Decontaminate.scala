@@ -138,8 +138,8 @@ object Decontaminate {
     val ev = broadcast(eval.select(col(idCol).as("__eid"), col(vecCol).as("__ev")))
     val scored = train.select(col(idCol).as("id"), col(vecCol).as("__tv"))
       .crossJoin(ev)
-      .withColumn("__cos",
-        graft.functions.GraftFunctions.cosine_similarity(col("__tv"), col("__ev")))
+      .withColumn("__cos", graft.functions.GraftFunctions.cosine_similarity(
+        train.sparkSession, col("__tv"), col("__ev")))
     // An EMPTY eval frame must report every training doc as
     // contaminated=false (best_cosine null), not cross-join to an empty
     // result — a caller anti-joining on flagged ids would misread an

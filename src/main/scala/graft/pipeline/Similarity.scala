@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.GraftFunctions
 
 /** Similarity search over embedding columns (driver mandate).
   *
@@ -198,7 +199,7 @@ object Similarity {
     val scored = src.join(nbr, Seq("list_id"))
       .filter(col("src_id") =!= col("dst_id"))
       .withColumn("cosine", round(
-        graft.functions.GraftFunctions.cosine_similarity(col("sv"), col("dv")), roundTo))
+        GraftFunctions.cosine_similarity(assigned.sparkSession, col("sv"), col("dv")), roundTo))
     val w = Window.partitionBy("src_id")
       .orderBy(col("cosine").desc, col("dst_id").asc)
     scored.withColumn("rank", row_number().over(w))
@@ -217,7 +218,7 @@ object Similarity {
     val scored = c.crossJoin(q)
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cosine", round(
-        graft.functions.GraftFunctions.cosine_similarity(col("qv"), col("cv")), roundTo))
+        GraftFunctions.cosine_similarity(corpus.sparkSession, col("qv"), col("cv")), roundTo))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))
@@ -271,7 +272,7 @@ object Similarity {
     val b = cand.select(col("query_id"), col("neighbor_id").as("id_b"), col("__v").as("vb"))
     val pairs = a.join(b, Seq("query_id"))
       .select(col("query_id"), col("id_a"), col("rel_a"), col("id_b"),
-        round(graft.functions.GraftFunctions.cosine_similarity(col("va"), col("vb")),
+        round(GraftFunctions.cosine_similarity(corpus.sparkSession, col("va"), col("vb")),
           roundTo).as("sim"))
       .collect()
     // driver greedy per query over the collected candidate metadata
@@ -318,7 +319,7 @@ object Similarity {
       .filter(col("neighbor_id") =!= col("query_id") &&
         !(col("neighbor_label") <=> col("label")))
       .withColumn("cosine", round(
-        graft.functions.GraftFunctions.cosine_similarity(col("qv"), col("cv")),
+        GraftFunctions.cosine_similarity(corpus.sparkSession, col("qv"), col("cv")),
         roundTo))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
@@ -354,7 +355,7 @@ object Similarity {
       .filter(col("neighbor_id") =!= col("query_id") &&
         !(col("neighbor_label") <=> col("label")))
       .withColumn("cosine", round(
-        graft.functions.GraftFunctions.cosine_similarity(col("qv"), col("cv")), roundTo))
+        GraftFunctions.cosine_similarity(assigned.sparkSession, col("qv"), col("cv")), roundTo))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))
@@ -435,7 +436,7 @@ object Similarity {
     val coarse = c.crossJoin(q)
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("coarse_cosine", round(
-        graft.functions.GraftFunctions.cosine_similarity(
+        GraftFunctions.cosine_similarity(corpus.sparkSession, 
           slice(col("qv"), 1, prefixDims), slice(col("cv"), 1, prefixDims)),
         roundTo))
     val wCoarse = Window.partitionBy("query_id")
@@ -443,7 +444,7 @@ object Similarity {
     val candidates = coarse.withColumn("__cr", row_number().over(wCoarse))
       .filter(col("__cr") <= rerankK)
     val exact = candidates.withColumn("cosine", round(
-      graft.functions.GraftFunctions.cosine_similarity(col("qv"), col("cv")),
+      GraftFunctions.cosine_similarity(corpus.sparkSession, col("qv"), col("cv")),
       roundTo))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
@@ -605,7 +606,7 @@ object Similarity {
       .dropDuplicates("query_id", "neighbor_id")
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cosine",
-        graft.functions.GraftFunctions.cosine_similarity(col("qv"), col("cv")))
+        GraftFunctions.cosine_similarity(corpus.sparkSession, col("qv"), col("cv")))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))
@@ -774,7 +775,7 @@ object Similarity {
     val scored = c.join(q, Seq("list_id"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cosine", round(
-        graft.functions.GraftFunctions.cosine_similarity(col("qv"), col("cv")), roundTo))
+        GraftFunctions.cosine_similarity(assigned.sparkSession, col("qv"), col("cv")), roundTo))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))
@@ -891,7 +892,7 @@ object Similarity {
       // via ordered list_transform/list_sum, and round(roundTo) absorbs
       // any residual engine-fold ULP); the dot/norm HOF form it replaced
       // evaluates interpreted and dominated the sf1 probe (~40 s)
-      .filter(round(graft.functions.GraftFunctions.cosine_similarity(
+      .filter(round(GraftFunctions.cosine_similarity(corpus.sparkSession, 
         col("__v1"), col("__v2")), roundTo) >= threshold)
       .select(col("__id2").as(idCol)).distinct()
     assigned.join(dropped, Seq(idCol), "left_anti")
@@ -921,7 +922,7 @@ object Similarity {
       }
     joined
       .withColumn("cosine",
-        graft.functions.GraftFunctions.cosine_similarity(col("v1"), col("v2")))
+        GraftFunctions.cosine_similarity(df.sparkSession, col("v1"), col("v2")))
       .filter(col("cosine") >= threshold)
       .select("id1", "id2", "cosine")
   }

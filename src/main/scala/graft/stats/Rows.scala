@@ -46,7 +46,9 @@ object Rows {
     * 256 MiB): a production-scale table plans thousands of row-group
     * splits and skips this entirely, so the knob derives from input size,
     * not the local core count. `graft.aggscan.fanout` (default 8) sizes
-    * the split; 1 disables. */
+    * the split; 1 disables. Callers: `AggregatedGlm.fitGaussianBatch`
+    * and `fitBinomialBatch`, `InteractionStudy.runAggregated` and
+    * `Describe.correlationsWide`. */
   def fanOutSmall(df: DataFrame,
                   key: org.apache.spark.sql.Column): DataFrame = {
     import org.apache.spark.sql.functions._

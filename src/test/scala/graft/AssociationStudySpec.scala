@@ -1,8 +1,10 @@
 package graft
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions._
 import graft.analyze.AssociationStudy
 import graft.io.Load
+import graft.model.{CladeFrame, VariableType}
 import graft.modify.Modify
 
 /** Golden-output parity with the reference's R `survey` oracle
@@ -314,6 +316,29 @@ class AssociationStudySpec extends SparkSpec {
         assertRtol(r.getDouble(r.fieldIndex("pvalue")), g("pvalue"), 1e-4,
           s"$rv pvalue (cogroup)")
       }
+  }
+
+  test("analyze_assoc_cogroup's study on the broadcast path returns the query's rows") {
+    // the query forces co-group and DuckDB checks that result; the same
+    // study under auto takes the broadcast path, which the oracle then
+    // certifies through this equality
+    val dir = "/root/testdata/sf0.001"
+    val want = SparkEntry.queries("analyze_assoc_cogroup")(spark, dir).collect().toSeq
+    val cf = CladeFrame(graft.queries.Tables.t(spark, dir, "orders")
+      .withColumn("order_day",
+        datediff(col("o_orderdate").cast("date"), lit("1992-01-01")).cast("double"))
+      .select("o_orderkey", "o_totalprice", "o_orderstatus", "o_custkey", "order_day"),
+      "o_orderkey")
+      .withTypes(Map("o_orderstatus" -> VariableType.Categorical))
+    val (got, decisions) = gateDecisions(AssociationStudy.run(spark, cf,
+      outcomes = Seq("o_totalprice"), covariates = Seq("o_orderstatus"),
+      regressionVariables = Seq("o_custkey", "order_day"), minN = 1)
+      .select(col("Variable").as("variable"), col("N").as("n"),
+        round(col("Beta"), 4).as("beta"), round(col("SE"), 4).as("se"))
+      .orderBy("variable").collect().toSeq)
+    assert(decisions.size === 1 && decisions.head.startsWith("associationStudy:") &&
+      decisions.head.endsWith("-> driver-local path"), decisions)
+    assert(want.length === 2 && got === want)
   }
 
   test("driver query analyze_assoc_cogroup is collect-free and rejects dup ids") {

@@ -61,7 +61,7 @@ class BlocklistSpec extends SparkSpec {
     val bf = Blocklist.sketch(bl, "k", fpp = 0.01)
     val probes = (members ++ (0 until 10000).map(i => s"x-$i")).toDF("k")
     val hits = probes.filter(
-        graft.functions.GraftFunctions.might_contain(lit(bf), xxhash64(col("k"))))
+        graft.functions.GraftFunctions.might_contain(spark, lit(bf), xxhash64(col("k"))))
       .as[String].collect()
     assert(members.forall(hits.contains), "bloom must have zero false negatives")
     val fp = hits.count(_.startsWith("x-"))

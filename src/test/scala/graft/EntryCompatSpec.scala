@@ -37,6 +37,19 @@ class EntryCompatSpec extends SparkSpec {
     assert(s.conf.getOption(key) === before, s"$key changed by a table read")
   }
 
+  test("a query built on a session other than the active one resolves graft's functions") {
+    // dedup_exact_against's bloom sketch and probe register their SQL
+    // functions on the session of the frame they are built on
+    import org.apache.spark.sql.SparkSession
+    val s = spark.newSession()
+    val q = SparkEntry.queries("dedup_exact_against")
+    val previous = SparkSession.getActiveSession
+    SparkSession.setActiveSession(spark)
+    val rows = try q(s, "/root/testdata/sf0.001").collect().toSeq
+      finally previous.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+    assert(rows.nonEmpty && rows === q(spark, "/root/testdata/sf0.001").collect().toSeq)
+  }
+
   test("embedding/doc_id encoding drift: double[] vectors and int32 ids agree") {
     // guard for the NEXT testdata regeneration: if the generator ships
     // embeddings as array<double> (not float) or ids as int32 (not

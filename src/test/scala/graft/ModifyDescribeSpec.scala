@@ -253,6 +253,10 @@ class ModifyDescribeSpec extends SparkSpec {
     val cf = Modify.makeBinary(sample, only = Some(Seq("cat")))
     assert(cf.typeOf("cat") === Binary)
     assert(cf.levels("cat") === Seq("a", "b"))
+    val three = sample.copy(df = sample.df.union(sample.df.limit(1).withColumn("cat", lit("c"))))
+    val e = intercept[IllegalArgumentException](Modify.makeBinary(three, only = Some(Seq("cat", "num"))))
+    assert(e.getMessage ===
+      "requirement failed: cannot make binary (not exactly 2 unique values): num, cat")
   }
 
   test("describe.percentNa / freqTable / summarize") {
@@ -1392,5 +1396,99 @@ class ModifyDescribeSpec extends SparkSpec {
     assert(pcEmpty.getLong(pcEmpty.fieldIndex("n_cur")) === 0L)
     assertRtol(pcEmpty.getDouble(pcEmpty.fieldIndex("psi")),
       (1.0 - eps) * math.log(1.0 / eps), 1e-9, "empty current psi")
+  }
+
+  /** A random column for the typing operators: about `k` distinct values
+    * of the type `kind` picks (each present, then drawn at random, ~15%
+    * null). Floating columns may hold -0.0 beside 0.0 and a NaN;
+    * numeric-looking strings carry one uncastable value when `k` is odd. */
+  private def typingColumn(r: scala.util.Random, rows: Int, kind: Int, k: Int)
+      : (org.apache.spark.sql.types.DataType, Seq[Any]) = {
+    import org.apache.spark.sql.types._
+    val (dt, pool): (DataType, Seq[Any]) = kind match {
+      case 0 => DoubleType -> ((if (r.nextBoolean()) Seq(-0.0, 0.0, Double.NaN) else Nil) ++
+        (1 to k).map(_ * 1.5)).take(k + (if (k > 1 && r.nextBoolean()) 1 else 0))
+      case 1 => FloatType -> ((if (r.nextBoolean()) Seq(-0.0f, 0.0f, Float.NaN) else Nil) ++
+        (1 to k).map(_ * 0.25f)).take(k + (if (k > 1 && r.nextBoolean()) 1 else 0))
+      case 2 => LongType -> (1 to k).map(i => i * 7L - 20)
+      case 3 => DecimalType(10, 2) -> (1 to k).map(i => new java.math.BigDecimal(i).movePointLeft(1))
+      case 4 => TimestampType -> (1 to k).map(i => java.sql.Timestamp.valueOf(
+        java.time.LocalDateTime.of(2020, 1, 1, 0, 0).plusHours(i * 5L)))
+      case 5 => StringType -> ((1 to k).map(i => if (i % 3 == 0) s"0$i" else s"$i.0") ++
+        (if (k % 2 == 1) Seq("n/a") else Nil)).takeRight(k)
+      case _ => StringType -> (1 to k).map(i => s"lvl$i")
+    }
+    (dt, pool ++ (pool.size until rows).map(_ =>
+      if (pool.isEmpty || r.nextDouble() < 0.15) null else pool(r.nextInt(pool.size))))
+  }
+
+  test("categorize and the level sets equal per-column countDistinct + collect_set on random frames") {
+    import org.apache.spark.sql.types._
+    val rows = 40
+    (0 until 3).foreach { trial =>
+      val r = new scala.util.Random(900L + trial)
+      val cols = (for (kind <- 0 to 6; k <- Seq(0, 1, 2, 3, 5, 6, 7, 11, 14, 15, 22))
+        yield typingColumn(r, rows, kind, k)).zipWithIndex.map { case (c, i) => (s"v$i", c) }
+      val schema = StructType(StructField("id", LongType) +:
+        cols.map { case (n, (dt, _)) => StructField(n, dt) })
+      val data = (0 until rows).map(i => Row.fromSeq(i.toLong +: cols.map(_._2._2(i))))
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(data, 3), schema)
+      val names = cols.map(_._1)
+      // the reference: one flat countDistinct + bad-cast count per column,
+      // and collect_set over the string cast
+      val ref = df.agg(count(lit(1)), names.flatMap(c => Seq(countDistinct(col(c)),
+        sum(when(col(c).isNotNull && expr(s"try_cast(`$c` AS DOUBLE)").isNull, 1)
+          .otherwise(0)),
+        sort_array(collect_set(col(c).cast("string"))))): _*).head()
+      val want = names.zipWithIndex.map { case (c, i) =>
+        val u = ref.getLong(1 + 3 * i)
+        val bad = ref.getLong(2 + 3 * i) > 0
+        val d = if (u == 0) "dropped" else if (u == 1) "constant" else if (u == 2) "binary"
+          else if (u >= 3 && u <= 6) "categorical" else if (u >= 15 && !bad) "continuous"
+          else "unknown"
+        (c, u, d, ref.getSeq[String](3 + 3 * i))
+      }
+      val cf = CladeFrame(df)
+      val rep = Modify.categorize(cf)
+      assert(rep.decisions === want.map(w => (w._1, w._2, w._3)), s"trial $trial")
+      val typedLevels = want.collect { case (c, _, d, l)
+        if Set("constant", "binary", "categorical")(d) => c -> l }.toMap
+      assert(rep.frame.levels === typedLevels, s"trial $trial")
+      typedLevels.foreach { case (c, l) =>
+        val cast = rep.frame.df.select(c).distinct().collect()
+          .collect { case x if !x.isNullAt(0) => x.getString(0) }.sorted.toSeq
+        assert(cast === l, s"trial $trial: $c's levels vs its cast values")
+      }
+      val all = want.collect { case (c, u, _, l) if u > 0 => c -> l }.toMap
+      assert(Modify.makeCategorical(cf).levels === all, s"trial $trial")
+      val two = want.collect { case (c, 2L, _, _) => c }
+      assert(Modify.makeBinary(cf, only = Some(two)).levels === all.view.filterKeys(two.toSet).toMap)
+    }
+  }
+
+  test("categorize on a wide frame runs one action and plans no Expand") {
+    import org.apache.spark.sql.execution.{ExpandExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val df = spark.range(200).select(col("id") +: (0 until 50).map(j =>
+      (if (j % 2 == 0) (col("id") * (j + 1)) % (j + 2) else (col("id") % 97).cast("string"))
+        .as(s"c$j")): _*)
+    val cf = CladeFrame(df)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = plans.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Modify.categorize(cf)
+      Thread.sleep(1000) // the listener bus is async
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size === 1, "categorize reads its input in one action")
+    object Plans extends AdaptiveSparkPlanHelper
+    plans.forEach { qe =>
+      assert(Plans.collect(qe.executedPlan) { case e: ExpandExec => e }.isEmpty,
+        qe.executedPlan.treeString)
+    }
   }
 }

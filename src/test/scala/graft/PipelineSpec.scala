@@ -965,7 +965,7 @@ class PipelineSpec extends SparkSpec {
     val pair = e.limit(1).select(col("embedding").as("a"))
       .crossJoin(e.orderBy(col("vec_id").desc).limit(1).select(col("embedding").as("b")))
     val native = pair.select(
-      graft.functions.GraftFunctions.cosine_similarity(col("a"), col("b"))).head.getDouble(0)
+      graft.functions.GraftFunctions.cosine_similarity(spark, col("a"), col("b"))).head.getDouble(0)
     val viaSql = pair.selectExpr("cosine_similarity(a, b)").head.getDouble(0)
     val hof = pair.select(
       (Similarity.dot(col("a"), col("b")) / (Similarity.norm(col("a")) * Similarity.norm(col("b"))))).head.getDouble(0)
@@ -1291,7 +1291,7 @@ class PipelineSpec extends SparkSpec {
     val v2 = array(lit(1.0f), lit(0.0f))
     val v2b = array(lit(0.6f), lit(0.8f))
     val cos = one.select(graft.functions.GraftFunctions
-      .cosine_similarity(v2, v2b).as("c")).head.getDouble(0)
+      .cosine_similarity(spark, v2, v2b).as("c")).head.getDouble(0)
     assertRtol(cos, 0.6, 1e-6, "cosine over literal arrays (float inputs)")
     val planes = Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))
     val reg = spark.sessionState.functionRegistry
@@ -1309,7 +1309,7 @@ class PipelineSpec extends SparkSpec {
     val row = one.select(
       call_function("t_hyper", wrongDim).as("s"),
       call_function("t_near", wrongDim).as("n"),
-      graft.functions.GraftFunctions.cosine_similarity(v2, wrongDim).as("c")).head
+      graft.functions.GraftFunctions.cosine_similarity(spark, v2, wrongDim).as("c")).head
     assert(row.isNullAt(0) && row.isNullAt(1) && row.isNullAt(2),
       "dim mismatch must yield null, not garbage")
   }

@@ -551,7 +551,7 @@ class StreamingSpec extends SparkSpec {
     // so streams compose sketch-prune -> stream-static anti join.)
     val bl = (0L until 100L by 7L).map(i => s"u-$i").toDF("bad")
     val bf = graft.pipeline.Blocklist.sketch(bl, "bad", fpp = 0.01)
-    val pruned = streamDf.filter(!graft.functions.GraftFunctions.might_contain(
+    val pruned = streamDf.filter(!graft.functions.GraftFunctions.might_contain(spark,
         lit(bf), xxhash64(col("url"))))
     val sampled = graft.pipeline.Sampling.importanceSample(
       pruned, when(col("doc_id") < 50, 0.9).otherwise(0.1), col("doc_id"))
