@@ -45,9 +45,12 @@ object SparkEntry {
   def warmIndexes(s: SparkSession, dir: String): Unit =
     { Tables.ivfIndex(s, dir); Tables.ivfGraphIndex(s, dir); Tables.pqIndex(s, dir); () }
 
+  /** The smallest test-data SF: [[entry]]'s input and Bench's warm-up. */
+  val TinyDir = "/root/testdata/sf0.001"
+
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    queries("q1_pricing_summary")(spark, "/root/testdata/sf0.001")
+    queries("q1_pricing_summary")(spark, TinyDir)
 
   /** The named queries in [[queries]]' order, or all of them when `names`
     * is empty. An unknown name fails, naming it: a typo would otherwise

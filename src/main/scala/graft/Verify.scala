@@ -53,11 +53,11 @@ object Verify {
     failed
   }
 
-  private def writeOracleJson(path: String, names: Set[String]): Unit = {
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
+  /** `s` as a JSON string literal. Escapes backslash, quote, and ALL
+    * control chars (<0x20): a tab or CR in builder-authored SQL would
+    * otherwise make the driver's json.load fail and silently zero the
+    * round's correctness. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
       case '\n' => "\\n"
@@ -66,8 +66,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+
+  private def writeOracleJson(path: String, names: Set[String]): Unit = {
     val json = SparkEntry.oracleSql.filter { case (k, _) => names(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(path), json)
   }
 }

@@ -42,9 +42,9 @@ object Modify {
     * (N+1)-way Expand). All-null variables are absent. Exact like a distinct
     * count of the typed column: the bad cast is judged on the typed column (a
     * timestamp casts to double, its string does not), a string column's once
-    * per distinct value (a failed parse costs an exception), and `-0.0` and
-    * `0.0` count once, though the levels keep both strings as the cast
-    * column does. No level buffer grows past `maxLevels + 2` strings. */
+    * per distinct value (a failed parse costs an exception), and the values
+    * are the strings of [[asString]], which writes `-0.0` as `0.0`. No level
+    * buffer grows past `maxLevels + 2` strings. */
   private def distinctValues(df: DataFrame, cols: Seq[String],
                              maxLevels: Int): Map[String, Distinct] = {
     if (cols.isEmpty) return Map.empty
@@ -53,17 +53,14 @@ object Modify {
       if (typeOf(c) == StringType) "CAST(NULL AS BOOLEAN)" else s"try_cast(`$c` AS DOUBLE) IS NULL"
     val levels = udaf(new CappedLevels(maxLevels.toLong + 1), Encoders.STRING)
     df.select(stack("variable, value, bad",
-        cols.map(c => Seq(quoted(c), s"CAST(`$c` AS STRING)", bad(c)))))
+        cols.map(c => Seq(quoted(c), asStringSql(c, typeOf(c)), bad(c)))))
       .filter(col("value").isNotNull)
       .groupBy("variable", "value").agg(max("bad").as("bad"))
       .groupBy("variable").agg(count(lit(1)),
-        max(coalesce(col("bad"), tryCastDouble("value").isNull)),
-        count(when(col("value").isin("0.0", "-0.0"), true)), sort_array(levels(col("value"))))
+        max(coalesce(col("bad"), tryCastDouble("value").isNull)), sort_array(levels(col("value"))))
       .collect().map { r =>
-        val c = r.getString(0)
-        val zeros = Seq(FloatType, DoubleType).contains(typeOf(c)) && r.getLong(3) == 2
-        val n = r.getLong(1) - (if (zeros) 1 else 0)
-        c -> Distinct(n, r.getBoolean(2), Option.when(n <= maxLevels)(r.getSeq[String](4)))
+        val n = r.getLong(1)
+        r.getString(0) -> Distinct(n, r.getBoolean(2), Option.when(n <= maxLevels)(r.getSeq[String](3)))
       }.toMap
   }
 
@@ -346,8 +343,9 @@ object Modify {
     }
     val catCols = kinds.collect { case (c, Constant | Binary | Categorical) => c }
     val contCols = kinds.collect { case (c, Continuous) => c }
-    val casted = cf.selectVariables(kinds.map(_._1)).df.withColumns((catCols.map(c =>
-      c -> col(c).cast(StringType)) ++ contCols.map(c => c -> tryCastDouble(c))).toMap)
+    val kept = cf.selectVariables(kinds.map(_._1)).df
+    val casted = kept.withColumns((catCols.map(c =>
+      c -> asString(kept, c)) ++ contCols.map(c => c -> tryCastDouble(c))).toMap)
     CategorizeReport(CladeFrame(casted, kinds.toMap,
       catCols.map(c => c -> dv(c).levels.get).toMap, cf.idCol),
       decisions)
@@ -1345,6 +1343,16 @@ object Modify {
 
   private def quoted(name: String): String = s"'${name.replace("'", "\\'")}'"
 
+  /** SQL for column `c` of type `t` as a string, with a float or double
+    * `-0.0` written as `0.0`: the two are one value to a distinct count, so
+    * they must be one level too. */
+  private def asStringSql(c: String, t: DataType): String = t match {
+    case FloatType | DoubleType => s"CAST(IF(`$c` = 0, CAST(0 AS ${t.sql}), `$c`) AS STRING)"
+    case _ => s"CAST(`$c` AS STRING)"
+  }
+
+  private def asString(df: DataFrame, c: String): Column = expr(asStringSql(c, df.schema(c).dataType))
+
   private def castToString(cf: CladeFrame, cols: Seq[String]): CladeFrame =
-    cf.copy(df = cf.df.withColumns(cols.map(c => c -> col(c).cast(StringType)).toMap))
+    cf.copy(df = cf.df.withColumns(cols.map(c => c -> asString(cf.df, c)).toMap))
 }

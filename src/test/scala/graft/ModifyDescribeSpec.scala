@@ -1435,7 +1435,8 @@ class ModifyDescribeSpec extends SparkSpec {
       val df = spark.createDataFrame(spark.sparkContext.parallelize(data, 3), schema)
       val names = cols.map(_._1)
       // the reference: one flat countDistinct + bad-cast count per column,
-      // and collect_set over the string cast
+      // and collect_set over the string cast, where a floating -0.0 is the
+      // level 0.0 (one value to countDistinct)
       val ref = df.agg(count(lit(1)), names.flatMap(c => Seq(countDistinct(col(c)),
         sum(when(col(c).isNotNull && expr(s"try_cast(`$c` AS DOUBLE)").isNull, 1)
           .otherwise(0)),
@@ -1446,7 +1447,9 @@ class ModifyDescribeSpec extends SparkSpec {
         val d = if (u == 0) "dropped" else if (u == 1) "constant" else if (u == 2) "binary"
           else if (u >= 3 && u <= 6) "categorical" else if (u >= 15 && !bad) "continuous"
           else "unknown"
-        (c, u, d, ref.getSeq[String](3 + 3 * i))
+        val floating = Set[DataType](FloatType, DoubleType)(cols(i)._2._1)
+        (c, u, d, ref.getSeq[String](3 + 3 * i)
+          .map(l => if (floating && l == "-0.0") "0.0" else l).distinct.sorted)
       }
       val cf = CladeFrame(df)
       val rep = Modify.categorize(cf)

@@ -21,6 +21,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * logger's previous config is put back afterwards. Lines from every
     * thread count: some operators build their gated inputs in a Future. */
   def gateDecisions[T](body: => T): (T, Seq[String]) = {
+    // build the session first: its setLogLevel would drop the capture
+    spark
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
     import org.apache.logging.log4j.core.appender.AbstractAppender
