@@ -1,6 +1,7 @@
 package graft.analyze
 
 import breeze.linalg.{DenseMatrix, DenseVector, inv}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.{CladeFrame, VariableType}
@@ -181,37 +182,12 @@ object AggregatedGlm {
     // df.agg: a 64-variable batch needs hundreds of aggregate expressions,
     // far past spark.sql.codegen.maxFields (100), so the Catalyst plan
     // silently drops to INTERPRETED evaluation (~5s for what is <1s of
-    // arithmetic at sf0.1). Row layout: [y | mask per rv | castfail per rv
-    // | distinct z columns]; the accumulation is plain fused loops with
-    // map-side combining via treeAggregate — the same shape the binomial
-    // IRLS uses, minus the iteration.
-    def zKey(c: Column): String = c.toString
-    val zList: Seq[(String, Column)] = {
-      val m = scala.collection.mutable.LinkedHashMap[String, Column]()
-      batch.foreach(v => zColumns(v).foreach(c => m.getOrElseUpdate(zKey(c), c)))
-      m.toSeq
-    }
-    val zPos: Map[String, Int] = zList.map(_._1).zipWithIndex.toMap
+    // arithmetic at sf0.1). The accumulation over [[batchRows]] is plain
+    // fused loops with map-side combining via treeAggregate — the same
+    // shape the binomial IRLS uses, minus the iteration.
     val nB = batch.size
-    val width = 1 + 2 * nB + zList.size
-    val selCols: Seq[Column] =
-      (yExpr.cast("double").as("__y") +:
-        batch.zipWithIndex.map { case (v, k) =>
-          maskFor(cf, covariates, v, outCols).cast("double").as(s"__m_$k") }) ++
-        batch.zipWithIndex.map { case (v, k) =>
-          // castfail: rows where the raw value is present but its numeric
-          // cast fails — the reference's astype(float) would error the
-          // variable (captured per-variable, base.py:155-195), not
-          // silently drop rows
-          (cf.typeOf(v) match {
-            case Continuous =>
-              when(col(v).isNotNull && tryD(v).isNull, 1.0).otherwise(0.0)
-            case _ => lit(0.0) // binary/categorical encode string levels
-          }).as(s"__cf_$k")
-        } ++
-        zList.zipWithIndex.map { case ((_, c), j) => c.cast("double").as(s"__z_$j") }
-    val zIdxPer: Array[Array[Int]] = batch.map(v =>
-      zColumns(v).map(c => 1 + 2 * nB + zPos(zKey(c))).toArray).toArray
+    val (rows, zIdxPer) = batchRows(cf, df, yExpr, outCols, covariates, batch,
+      batch.map(zColumns))
     val pPer: Array[Int] = zIdxPer.map(_.length)
     // block per rv: [n, castfail, yy, zy(p), zz(tri(p))]
     val blockOff = new Array[Int](nB)
@@ -220,9 +196,7 @@ object AggregatedGlm {
       blockOff(k) = szAcc; szAcc += 3 + pPer(k) + pPer(k) * (pPer(k) + 1) / 2
     }
     val size = szAcc
-    val acc = graft.stats.Rows.doubleRdd(
-      graft.stats.Rows.fanOutSmall(df, col(cf.idCol)).select(selCols: _*))
-      .treeAggregate(new Array[Double](size))(
+    val acc = rows.treeAggregate(new Array[Double](size))(
       seqOp = { (st, row) =>
         val y = row(0)
         var k = 0
@@ -340,15 +314,47 @@ object AggregatedGlm {
     }
   }
 
+  /** The batch pass's working rows, shared by both families. Row layout:
+    * [y | mask per batch rv | castfail per batch rv | distinct design
+    * columns]. Castfail marks rows where the raw rv value is present but
+    * its numeric cast fails: those must surface as the reference's
+    * per-variable NumberFormatException error row (captured per variable,
+    * base.py:155-195), not as a silently shrunk n. Design columns shared
+    * between designs (intercept, covariates) are projected once. Returns
+    * the rows and, per design, its columns' row indices. */
+  private def batchRows(cf: CladeFrame, df: DataFrame, yExpr: Column,
+                        outCols: Seq[String], covariates: Seq[String],
+                        batch: Seq[String], designs: Seq[Seq[Column]])
+      : (RDD[Array[Double]], Array[Array[Int]]) = {
+    def zKey(c: Column): String = c.toString
+    val zList: Seq[Column] = designs.flatten.distinctBy(zKey)
+    val zPos: Map[String, Int] = zList.map(zKey).zipWithIndex.toMap
+    val nB = batch.size
+    val selCols: Seq[Column] =
+      (yExpr.cast("double").as("__y") +:
+        batch.zipWithIndex.map { case (v, k) =>
+          maskFor(cf, covariates, v, outCols).cast("double").as(s"__m_$k") }) ++
+        batch.zipWithIndex.map { case (v, k) =>
+          (cf.typeOf(v) match {
+            case Continuous =>
+              when(col(v).isNotNull && tryD(v).isNull, 1.0).otherwise(0.0)
+            case _ => lit(0.0) // binary/categorical encode string levels
+          }).as(s"__cf_$k")
+        } ++
+        zList.zipWithIndex.map { case (c, j) => c.cast("double").as(s"__z_$j") }
+    (graft.stats.Rows.doubleRdd(df.select(selCols: _*)),
+      designs.map(_.map(c => 1 + 2 * nB + zPos(zKey(c))).toArray).toArray)
+  }
+
   // ------------------------------------------------------------- Binomial
 
-  /** One IRLS state: a design (column expressions) fitted under a mask.
+  /** One IRLS state: a design (column expressions) fitted under its rv's
+    * complete-case mask.
     * Numeric rvs have one model; categorical rvs have a full model
     * (interceptless all-levels dummies + covars — same span as intercept +
     * L-1 dummies, deviance-invariant) and a restricted model (intercept +
     * covars) under the SAME mask, so the working LRT is fully distributed. */
-  private final case class IrlsModel(key: String, rv: String,
-                                     cols: Seq[Column], mask: Column) {
+  private final case class IrlsModel(key: String, rv: String, cols: Seq[Column]) {
     def p: Int = cols.size
   }
 
@@ -371,55 +377,28 @@ object AggregatedGlm {
     // cast of a malformed covariate value would kill the whole study
     val covarCols = covariates.map(tryD)
     val models: Seq[IrlsModel] = batch.flatMap { v =>
-      val m = maskFor(cf, covariates, v, outCols)
       cf.typeOf(v) match {
         case Categorical =>
           val dummies = cf.levels(v).sorted.map(lvl =>
             when(col(v).cast("string") === lvl, 1.0).otherwise(0.0))
           Seq(
-            IrlsModel(s"$v@full", v, covarCols ++ dummies, m),
-            IrlsModel(s"$v@rest", v, lit(1.0) +: covarCols, m))
+            IrlsModel(s"$v@full", v, covarCols ++ dummies),
+            IrlsModel(s"$v@rest", v, lit(1.0) +: covarCols))
         case _ =>
-          Seq(IrlsModel(v, v, (lit(1.0) +: covarCols) :+ rvNumeric(cf, v), m))
+          Seq(IrlsModel(v, v, (lit(1.0) +: covarCols) :+ rvNumeric(cf, v)))
       }
     }
 
-    // row layout: [y | mask per batch rv | castfail per batch rv | distinct
-    // z columns] — castfail mirrors the gaussian path: rows where the raw
-    // rv value is present but its numeric cast fails must surface as the
-    // reference's per-variable NumberFormatException error row, not as a
-    // silently shrunk n
-    def zKey(c: Column): String = c.toString
-    val zList: Seq[(String, Column)] = {
-      val m = scala.collection.mutable.LinkedHashMap[String, Column]()
-      models.foreach(_.cols.foreach(c => m.getOrElseUpdate(zKey(c), c)))
-      m.toSeq
-    }
-    val zPos: Map[String, Int] = zList.map(_._1).zipWithIndex.toMap
     val maskPos: Map[String, Int] = batch.zipWithIndex.toMap
     val nB = batch.size
-    val width = 1 + 2 * nB + zList.size
-    val selCols: Seq[Column] =
-      (yExpr.cast("double").as("__y") +:
-        batch.map(v => maskFor(cf, covariates, v, outCols).cast("double")
-          .as(s"__m_${maskPos(v)}"))) ++
-        batch.map { v =>
-          (cf.typeOf(v) match {
-            case Continuous =>
-              when(col(v).isNotNull && tryD(v).isNull, 1.0).otherwise(0.0)
-            case _ => lit(0.0) // binary/categorical encode string levels
-          }).as(s"__cf_${maskPos(v)}")
-        } ++
-        zList.zipWithIndex.map { case ((_, c), j) => c.cast("double").as(s"__z_$j") }
-    val rdd = graft.stats.Rows.doubleRdd(
-      graft.stats.Rows.fanOutSmall(df0, col(cf.idCol)).select(selCols: _*))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (rows, zIdx) = batchRows(cf, df0, yExpr, outCols, covariates, batch,
+      models.map(_.cols))
+    val rdd = rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     final case class MSpec(key: String, rv: String, maskIdx: Int,
                            zIdx: Array[Int], p: Int)
-    val specs: Seq[MSpec] = models.map { md =>
-      MSpec(md.key, md.rv, 1 + maskPos(md.rv),
-        md.cols.map(c => 1 + 2 * nB + zPos(zKey(c))).toArray, md.p)
+    val specs: Seq[MSpec] = models.zip(zIdx).map { case (md, zi) =>
+      MSpec(md.key, md.rv, 1 + maskPos(md.rv), zi, md.p)
     }
     // (v, level-dummy row indices) for iteration-0 occupancy counting
     val lcSpecs: Seq[(String, Array[Int])] = batch

@@ -124,7 +124,6 @@ object AssociationStudy {
       edgeEncodingInfo: Option[DataFrame] = None,
       regressionKind: Option[String] = None,
       variantInfo: Map[String, graft.genomics.Genotypes.VariantInfo] = Map.empty): DataFrame = {
-    import spark.implicits._
     val cf = graft.genomics.Genotypes.encodeForStudy(cf0, encoding, edgeEncodingInfo, variantInfo)
     val rvs =
       if (regressionVariables.nonEmpty) regressionVariables
@@ -194,8 +193,8 @@ object AssociationStudy {
       rvs: Seq[String],
       minN: Long,
       standardize: Boolean,
-      surveyDesign: Option[SurveyDesignSpec] = None,
-      reportCategoricalBetas: Boolean = false): DataFrame = {
+      surveyDesign: Option[SurveyDesignSpec],
+      reportCategoricalBetas: Boolean): DataFrame = {
     import spark.implicits._
 
     // tall-data fast path: every design column numeric -> distributed
@@ -558,7 +557,7 @@ object AssociationStudy {
       family: Glm.Family,
       minN: Long,
       standardize: Boolean,
-      reportCategoricalBetas: Boolean = false): Seq[AssocResult] = {
+      reportCategoricalBetas: Boolean): Seq[AssocResult] = {
     val n = idx.length
     val nullRes = AssocResult(variable, outcome, kind, None, Converged = false,
       n, None, None, None, None, None, None)
@@ -661,7 +660,7 @@ object AssociationStudy {
       family: Glm.Family,
       minN: Long,
       standardize: Boolean,
-      reportCategoricalBetas: Boolean = false): Seq[AssocResult] = {
+      reportCategoricalBetas: Boolean): Seq[AssocResult] = {
     // an rv with no mapped weight nulls this variable, not the whole study
     // (reference: per-variable ValueError capture)
     sv.weightErrorRvs.get(variable).foreach { msg =>

@@ -1,6 +1,6 @@
 package graft.analyze
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import graft.LocalPath
@@ -98,7 +98,6 @@ object Corrections {
     if (m == 0) return nullRows
 
     val width = df.schema.size
-    val pPos = df.schema.fieldIndex(pvalue)
     val mD = m.toDouble
     // range-partitioned ascending sort; zipWithIndex = global 0-based rank
     val sorted = nonNull

@@ -228,7 +228,6 @@ object InteractionStudy {
       c -> Array.tabulate(n0)(i => rows(i).getString(colIdx(c)))
     }.toMap
     val typesMap = (covariates ++ vars).map(c => c -> cf.typeOf(c).name).toMap
-    val levelsMap = cf.levels
 
     val yB = spark.sparkContext.broadcast(y)
     val colsB = spark.sparkContext.broadcast(colData)
@@ -367,8 +366,7 @@ object InteractionStudy {
     // treeAggregate: the z scratch buffer and the accumulator are allocated
     // once per partition, not per row — 6M rows at sf1 would otherwise churn
     // 6M short-lived arrays through the young gen inside the hot loop
-    val partStates = graft.stats.Rows.doubleRdd(
-        graft.stats.Rows.fanOutSmall(base, col(cf.idCol)).select(selCols: _*))
+    val partStates = graft.stats.Rows.doubleRdd(base.select(selCols: _*))
       .mapPartitions { it =>
         val st = zero.clone()
         val z = new Array[Double](maxP)
@@ -640,7 +638,6 @@ object InteractionStudy {
     val outcomeName = outcome
     val oLevels = outcomeLevels
     val covarSeq = covariates
-    val levelsB = spark.sparkContext.broadcast(cf.levels)
 
     def collectGroup(rows: Iterator[org.apache.spark.sql.Row])
         : (Array[Double], Array[String], Array[String], Seq[(String, String, Array[String])]) = {

@@ -53,10 +53,10 @@ object Cli {
 
   def run(spark: SparkSession, args: List[String]): Unit = args match {
     // ------------------------------------------------------------- load
-    case "load" :: "from-csv" :: in :: out :: rest =>
+    case "load" :: "from-csv" :: in :: out :: _ =>
       val cf = Load.withSequentialId(Load.rawDelimited(spark, in, ","))
       saveState(cf, out)
-    case "load" :: "from-tsv" :: in :: out :: rest =>
+    case "load" :: "from-tsv" :: in :: out :: _ =>
       val cf = Load.withSequentialId(Load.rawDelimited(spark, in, "\t"))
       saveState(cf, out)
     case "jsonl" :: "to-parquet" :: in :: out :: rest =>

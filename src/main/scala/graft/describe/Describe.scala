@@ -1,7 +1,6 @@
 package graft.describe
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.LocalPath
 import graft.model.{CladeFrame, VariableType}
@@ -263,9 +262,8 @@ object Describe {
     // InternalRow-direct decode (see Rows.doubleRdd); null AND NaN both
     // arrive as NaN = missing, which matches pandas' pairwise-complete
     // drop (a literal NaN cell no longer poisons its pairs' moments)
-    val rows = graft.stats.Rows.doubleRdd(graft.stats.Rows
-      .fanOutSmall(cf.df.select(vars.map(col): _*), col(vars.head))
-      .select(vars.map(c => col(c).cast("double")): _*))
+    val rows = graft.stats.Rows.doubleRdd(
+      cf.df.select(vars.map(c => col(c).cast("double")): _*))
     // layout: acc(6*p .. 6*p+5) = n, sx, sy, sxy, sxx, syy for pair p;
     // tail block acc(6*m + i) = per-column shift (first non-null seen)
     val size = 6 * m + k
@@ -1628,7 +1626,6 @@ object Describe {
     val total = base.filter(cols.map(grouped).reduce(_ && _))
       .select(col("n").as("nn"))
     val perPair = pairs.map { case (a, b) =>
-      val others = cols.filterNot(c => c == a || c == b)
       def onlyThese(keep: Seq[String]): Column =
         cols.map(c => if (keep.contains(c)) !grouped(c) else grouped(c))
           .reduce(_ && _)

@@ -74,7 +74,6 @@ case class HyperplaneSignature(child: Expression, planes: Seq[Seq[Double]])
     nullSafeCodeGen(ctx, ev, x => {
       val b = ctx.freshName("b")
       val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
       val proj = ctx.freshName("proj")
       val sig = ctx.freshName("sig")
       val off = ctx.freshName("off")

@@ -1,6 +1,6 @@
 package graft.model
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The engine's core abstraction: a Spark DataFrame of observations ×

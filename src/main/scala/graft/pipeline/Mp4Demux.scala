@@ -29,8 +29,6 @@ object Mp4Demux {
                           ptsSec: Double, keyframe: Boolean,
                           offset: Long, size: Int)
 
-  private def be16(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
   private def be32(b: Array[Byte], i: Int): Long =
     ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
       ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)

@@ -124,10 +124,6 @@ object Vp8 {
     def signedDelta(n: Int): Int =
       if (bool(128) == 0) 0
       else { val v = literal(n); if (bool(128) == 1) -v else v }
-
-    def signedLiteral(n: Int): Int = {
-      val v = literal(n); if (bool(128) == 1) -v else v
-    }
   }
 
   // ------------------------------------------------------------ container

@@ -19,7 +19,7 @@ private[graft] object AnalyzeQueries {
     Q("analyze_assoc_continuous", (s, dir) => {
       // all-numeric design -> routed to the distributed sufficient-stats
       // path (AggregatedGlm): one scan, no ids needed
-      var cf = CladeFrame(t(s, dir, "lineitem")
+      val cf = CladeFrame(t(s, dir, "lineitem")
         .select("l_orderkey", "l_extendedprice", "l_quantity", "l_discount", "l_tax"),
         "l_orderkey")
       AssociationStudy.run(s, cf, outcomes = Seq("l_extendedprice"),

@@ -1,6 +1,6 @@
 package graft.stats
 
-import breeze.linalg.{DenseMatrix, DenseVector}
+import breeze.linalg.DenseMatrix
 
 /** Local design-matrix assembly for one model fit.
   *

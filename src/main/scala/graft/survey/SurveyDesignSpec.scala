@@ -116,7 +116,7 @@ final class SurveyDesignSpec(
       if (r.isNullAt(i)) 0L else r.getLong(i)
     }.sum
 
-  private val (nRows: Long, nClustFull: Long, weightMeans: Map[String, Double]) = {
+  private val (nClustFull: Long, weightMeans: Map[String, Double]) = {
     val n = total("n")
     require(n > 0, "survey design is empty")
     // rows whose key (PSU, or stratum) is missing form the null-key group
@@ -139,7 +139,7 @@ final class SurveyDesignSpec(
       }.sum
       wc -> (if (cnt == 0) 1.0 else sumW / cnt)
     }.toMap
-    (n, if (hasCluster) designRows.count(!_.isNullAt(0)).toLong else n, means)
+    (if (hasCluster) designRows.count(!_.isNullAt(0)).toLong else n, means)
   }
 
   /** (cluster, stratum, rows-in-cluster, raw fpc) — one row per cluster.

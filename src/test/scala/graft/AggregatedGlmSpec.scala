@@ -40,15 +40,18 @@ class AggregatedGlmSpec extends SparkSpec {
   }
 
   test("binary rv: aggregated path == collect path") {
-    val viaAgg = AssociationStudy.run(spark, li, outcomes = Seq("l_extendedprice"),
-      covariates = Seq("l_quantity"), regressionVariables = Seq("l_linestatus"),
-      minN = 1).collect().head
-    val viaCollect = AssociationStudy.run(spark, collectPathFrame(li),
-      outcomes = Seq("l_extendedprice"), covariates = Seq("l_quantity"),
-      regressionVariables = Seq("l_linestatus"), minN = 1).collect().head
-    Seq("Beta", "SE", "pvalue").foreach { c =>
-      assertRtol(viaAgg.getDouble(viaAgg.fieldIndex(c)),
-        viaCollect.getDouble(viaCollect.fieldIndex(c)), 1e-9, c)
+    layouts(li.df).foreach { case (layout, df) =>
+      val cf = li.copy(df = df)
+      val viaAgg = AssociationStudy.run(spark, cf, outcomes = Seq("l_extendedprice"),
+        covariates = Seq("l_quantity"), regressionVariables = Seq("l_linestatus"),
+        minN = 1).collect().head
+      val viaCollect = AssociationStudy.run(spark, collectPathFrame(cf),
+        outcomes = Seq("l_extendedprice"), covariates = Seq("l_quantity"),
+        regressionVariables = Seq("l_linestatus"), minN = 1).collect().head
+      Seq("Beta", "SE", "pvalue").foreach { c =>
+        assertRtol(viaAgg.getDouble(viaAgg.fieldIndex(c)),
+          viaCollect.getDouble(viaCollect.fieldIndex(c)), 1e-9, s"$c ($layout)")
+      }
     }
   }
 
@@ -97,20 +100,22 @@ class AggregatedGlmSpec extends SparkSpec {
   }
 
   test("binary outcome + binary rv: distributed IRLS == local IRLS") {
-    var cf = li.copy(df = li.df.withColumn("high",
-      (col("l_extendedprice") > 30000).cast("string")))
-      .withTypes(Map("high" -> VariableType.Binary))
-      .withLevels(Map("high" -> Seq("false", "true")))
-    val viaAgg = AssociationStudy.run(spark, cf, outcomes = Seq("high"),
-      covariates = Seq("l_quantity"), regressionVariables = Seq("l_linestatus"),
-      minN = 1).collect().head
-    val viaCollect = AssociationStudy.run(spark,
-      cf.copy(levels = cf.levels.view.filterKeys(_ == "high").toMap),
-      outcomes = Seq("high"), covariates = Seq("l_quantity"),
-      regressionVariables = Seq("l_linestatus"), minN = 1).collect().head
-    Seq("Beta", "SE", "pvalue").foreach { c =>
-      assertRtol(viaAgg.getDouble(viaAgg.fieldIndex(c)),
-        viaCollect.getDouble(viaCollect.fieldIndex(c)), 1e-6, c)
+    layouts(li.df).foreach { case (layout, df) =>
+      val cf = li.copy(df = df.withColumn("high",
+        (col("l_extendedprice") > 30000).cast("string")))
+        .withTypes(Map("high" -> VariableType.Binary))
+        .withLevels(Map("high" -> Seq("false", "true")))
+      val viaAgg = AssociationStudy.run(spark, cf, outcomes = Seq("high"),
+        covariates = Seq("l_quantity"), regressionVariables = Seq("l_linestatus"),
+        minN = 1).collect().head
+      val viaCollect = AssociationStudy.run(spark,
+        cf.copy(levels = cf.levels.view.filterKeys(_ == "high").toMap),
+        outcomes = Seq("high"), covariates = Seq("l_quantity"),
+        regressionVariables = Seq("l_linestatus"), minN = 1).collect().head
+      Seq("Beta", "SE", "pvalue").foreach { c =>
+        assertRtol(viaAgg.getDouble(viaAgg.fieldIndex(c)),
+          viaCollect.getDouble(viaCollect.fieldIndex(c)), 1e-6, s"$c ($layout)")
+      }
     }
   }
 }

@@ -238,7 +238,6 @@ class InteractionStudySpec extends SparkSpec {
         rnd.nextGaussian()
       (i.toLong, y, x1, x2, x3, x4, 5.0)
     }.toDF("id", "y", "x1", "x2", "x3", "x4", "xconst")
-    val cf = CladeFrame(df, "id")
     val pairs = Seq(("x1", "x2"), ("x2", "x4"), ("x1", "x4"), ("xconst", "x1"))
 
     def cmpCell(a: Any, b: Any, clue: String): Unit = (a, b) match {
@@ -249,28 +248,31 @@ class InteractionStudySpec extends SparkSpec {
       case _ => assert(a === b, clue)
     }
     def cmp(agg: org.apache.spark.sql.DataFrame,
-            bc: org.apache.spark.sql.DataFrame, keyIdx: Int): Unit = {
+            bc: org.apache.spark.sql.DataFrame, keyIdx: Int, layout: String): Unit = {
       val aMap = agg.collect().map(r => r.getString(keyIdx) + r.getString(0) + r.getString(1) -> r.toSeq).toMap
       val bMap = bc.collect().map(r => r.getString(keyIdx) + r.getString(0) + r.getString(1) -> r.toSeq).toMap
       assert(aMap.keySet === bMap.keySet)
       aMap.foreach { case (k, row) =>
         row.zip(bMap(k)).zipWithIndex.foreach { case ((x, y), i) =>
-          cmpCell(x, y, s"$k field $i") }
+          cmpCell(x, y, s"$k field $i ($layout)") }
       }
     }
-    def run(betas: Boolean) =
-      InteractionStudy.run(spark, cf, "y", interactions = pairs,
-        covariates = Seq("x3"), minN = 1, reportBetas = betas)
-    def rows(betas: Boolean) = InteractionStudy.runRows(spark, cf, "y", pairs,
-      Seq("x3"), minN = 1, reportBetas = betas)
-    assert(gateDecisions(run(betas = false))._2.isEmpty,
-      "default path must be the no-collect aggregated one")
-    cmp(run(betas = false), rows(betas = false), 1)
-    cmp(run(betas = true), rows(betas = true), 3)
-    // the constant-variable pair produced the same error row on both paths
-    val err = run(betas = false).collect()
-      .find(r => r.getString(0) == "xconst").get
-    assert(!err.getBoolean(3) && err.getString(9) == "interaction term does not vary")
+    layouts(df).foreach { case (layout, in) =>
+      val cf = CladeFrame(in, "id")
+      def run(betas: Boolean) =
+        InteractionStudy.run(spark, cf, "y", interactions = pairs,
+          covariates = Seq("x3"), minN = 1, reportBetas = betas)
+      def rows(betas: Boolean) = InteractionStudy.runRows(spark, cf, "y", pairs,
+        Seq("x3"), minN = 1, reportBetas = betas)
+      assert(gateDecisions(run(betas = false))._2.isEmpty,
+        s"default path must be the no-collect aggregated one ($layout)")
+      cmp(run(betas = false), rows(betas = false), 1, layout)
+      cmp(run(betas = true), rows(betas = true), 3, layout)
+      // the constant-variable pair produced the same error row on both paths
+      val err = run(betas = false).collect()
+        .find(r => r.getString(0) == "xconst").get
+      assert(!err.getBoolean(3) && err.getString(9) == "interaction term does not vary")
+    }
   }
 
   test("aggregated path matches the broadcast kernel for categorical/binary blocks") {
@@ -288,29 +290,31 @@ class InteractionStudySpec extends SparkSpec {
         (if (bin == "yes") 0.7 * x else 0.0) + rnd.nextGaussian()
       (i.toLong, y, cat, bin, x, x2)
     }.toDF("id", "y", "cat", "bin", "x", "x2")
-    var cf = CladeFrame(df, "id")
-    cf = Modify.makeCategorical(cf, only = Some(Seq("cat")))
-    cf = Modify.makeBinary(cf, only = Some(Seq("bin")))
     val pairs = Seq(("cat", "x"), ("bin", "x"), ("cat", "x2"), ("bin", "cat"))
-    val (agg, decisions) = gateDecisions(InteractionStudy.run(spark, cf, "y",
-      interactions = pairs, minN = 1))
-    assert(decisions.isEmpty,
-      "declared categorical/binary blocks must ride the aggregated path")
-    val bcMap = InteractionStudy.runRows(spark, cf, "y", pairs, Nil, minN = 1,
-        reportBetas = false).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.toSeq).toMap
-    agg.collect().foreach { r =>
-      val k = (r.getString(0), r.getString(1))
-      r.toSeq.zip(bcMap(k)).zipWithIndex.foreach { case ((a, b), i) => (a, b) match {
-        case (x: Double, y: Double) =>
-          assert(math.abs(x - y) <= 1e-8 * math.max(1.0, math.abs(y)),
-            s"$k field $i: $x vs $y")
-        case _ => assert(a === b, s"$k field $i")
-      } }
+    layouts(df).foreach { case (layout, in) =>
+      var cf = CladeFrame(in, "id")
+      cf = Modify.makeCategorical(cf, only = Some(Seq("cat")))
+      cf = Modify.makeBinary(cf, only = Some(Seq("bin")))
+      val (agg, decisions) = gateDecisions(InteractionStudy.run(spark, cf, "y",
+        interactions = pairs, minN = 1))
+      assert(decisions.isEmpty,
+        s"declared categorical/binary blocks must ride the aggregated path ($layout)")
+      val bcMap = InteractionStudy.runRows(spark, cf, "y", pairs, Nil, minN = 1,
+          reportBetas = false).collect()
+        .map(r => (r.getString(0), r.getString(1)) -> r.toSeq).toMap
+      agg.collect().foreach { r =>
+        val k = (r.getString(0), r.getString(1))
+        r.toSeq.zip(bcMap(k)).zipWithIndex.foreach { case ((a, b), i) => (a, b) match {
+          case (x: Double, y: Double) =>
+            assert(math.abs(x - y) <= 1e-8 * math.max(1.0, math.abs(y)),
+              s"$k field $i ($layout): $x vs $y")
+          case _ => assert(a === b, s"$k field $i ($layout)")
+        } }
+      }
+      // binary x continuous has a SINGLE patsy crossing -> Beta/SE reported
+      val binRow = agg.collect().find(r => r.getString(0) == "bin" && r.getString(1) == "x").get
+      assert(!binRow.isNullAt(5) && !binRow.isNullAt(6), "single-crossing beta reported")
     }
-    // binary x continuous has a SINGLE patsy crossing -> Beta/SE reported
-    val binRow = agg.collect().find(r => r.getString(0) == "bin" && r.getString(1) == "x").get
-    assert(!binRow.isNullAt(5) && !binRow.isNullAt(6), "single-crossing beta reported")
   }
 
   test("nhanes_pairwise_withbetas.csv: all-pairs per-parameter betas") {

@@ -303,14 +303,16 @@ class ModifyDescribeSpec extends SparkSpec {
         (0 until k).map(j => org.apache.spark.sql.types.StructField(
           s"v$j", org.apache.spark.sql.types.DoubleType, nullable = true)))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
-    val cf = CladeFrame(df)
-    val viaAgg = Describe.correlations(spark, cf, 0.0)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
-    val viaWide = Describe.correlations(spark, cf, 0.0, widePathMinPairs = 1)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
-    assert(viaAgg.keySet === viaWide.keySet)
-    viaAgg.foreach { case (pair, c) =>
-      assertRtol(viaWide(pair), c, 1e-9, s"pair $pair")
+    layouts(df).foreach { case (layout, in) =>
+      val cf = CladeFrame(in)
+      val viaAgg = Describe.correlations(spark, cf, 0.0)
+        .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
+      val viaWide = Describe.correlations(spark, cf, 0.0, widePathMinPairs = 1)
+        .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
+      assert(viaAgg.keySet === viaWide.keySet)
+      viaAgg.foreach { case (pair, c) =>
+        assertRtol(viaWide(pair), c, 1e-9, s"pair $pair ($layout)")
+      }
     }
 
     // the reference's documented width: 500 continuous columns -> 124,750

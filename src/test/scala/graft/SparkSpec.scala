@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +9,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   def refPath(p: String): String = s"/root/reference/tests/$p"
+
+  /** `df` as built and spread over 7 partitions, so an aggregated kernel's
+    * combine also runs over several partials. */
+  def layouts(df: DataFrame): Seq[(String, DataFrame)] =
+    Seq("as built" -> df, "repartition(7)" -> df.repartition(7))
 
   /** Runs `body` with every dual-path operator forced onto its distributed
     * path (`graft.local.mode=distributed`). */
