@@ -76,12 +76,8 @@ object AggregatedGlm {
     val binaryOutcome = cf.typeOf(outcome) == Binary
     val yExpr: Column =
       if (!binaryOutcome) tryD(outcome) // ANSI-safe: malformed -> null -> masked
-      else {
-        val levels0 = cf.levels(outcome).sorted
-        val levels = if (levels0 == Seq("Case", "Control")) Seq("Control", "Case") else levels0
-        require(levels.size == 2, s"binary outcome $outcome needs 2 levels")
-        when(col(outcome).cast("string") === levels(1), 1.0).otherwise(0.0)
-      }
+      else when(col(outcome).cast("string") ===
+        AssociationStudy.caseLevel(outcome, cf.levels(outcome)), 1.0).otherwise(0.0)
     val results = rvs.grouped(BatchSize).flatMap { batch =>
       if (binaryOutcome)
         fitBinomialBatch(cf, cf.df, yExpr, Seq(outcome), covariates, batch, minN)

@@ -1,13 +1,13 @@
 package graft.analyze
 
 import breeze.linalg.DenseVector
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.LocalPath
 import graft.model.{CladeFrame, VariableType}
 import graft.modify.Modify
 import graft.stats.{DesignMatrix, Glm}
-import graft.survey.{SurveyDesignSpec, SurveyKernel}
+import graft.survey.{DesignTotals, SurveyDesignSpec, SurveyKernel}
 import VariableType._
 
 /** One row of the association-study results table — fixed schema and column
@@ -37,10 +37,10 @@ final case class AssocResult(
   * Execution model (SURVEY.md §3.1, designed for the EWAS shape — thousands
   * of variables over a modest-row observation table):
   *
-  *   1. The outcome + covariates block is complete-cased once, projected,
-  *      and BROADCAST (it is a handful of columns — small even at millions
-  *      of rows; the per-variable data each task needs beyond it is just
-  *      that variable's column).
+  *   1. The observations — outcome, covariates and, with a survey design,
+  *      its per-row columns — are projected once and BROADCAST (a handful
+  *      of columns — small even at millions of rows; the per-variable data
+  *      each task needs beyond them is just that variable's column).
   *   2. The regression-variable columns are melted to long
   *      `(variable, id, value)` — one generator projection, then ONE shuffle
   *      keyed by variable distributes whole columns to executors.
@@ -52,11 +52,11 @@ final case class AssocResult(
   *      [[LocalResult]]), so corrections and filters downstream of the
   *      study start no jobs.
   *
-  * At the 100 TB design point with *billions of rows*, the broadcast block
-  * no longer fits and the melt shuffle carries the full table; the same
-  * kernel then runs over per-variable cogroups with distributed partial
-  * X'WX accumulation (the normal equations are associative) — the declared
-  * fan-out shape is unchanged, only the kernel's data feed switches.
+  * At the 100 TB design point with *billions of rows*, the observations no
+  * longer fit the driver: the melt is JOINED to them and shuffled by
+  * variable, and each group runs the same row assembly and kernel — the
+  * declared fan-out shape is unchanged, only the kernel's data feed
+  * switches.
   */
 /** A pluggable regression kind — the reference's `regression_kind=`
   * extension point (association_study.py:41-45: a builtin name or a custom
@@ -83,32 +83,40 @@ object AssociationStudy {
     kindRegistry(name) = kind
   }
 
-  /** Per-variable raw column data shipped to the fit kernel. */
+  /** The kernel's per-observation inputs, built by [[assemble]]. Positions
+    * number the assembled rows, complete-case rows first: `y` and the
+    * covariate arrays hold just those, the survey weights every row, as the
+    * missing-weight rule runs before complete-casing. */
   private final case class BaseData(
-      index: Map[String, Int],        // id -> row position
       y: Array[Double],
       covars: Seq[(String, String, Array[String], Array[Double])],
       // (name, kind, stringValues | null, doubleValues | null)
       survey: Option[SurveyBase])
 
-  /** Survey metadata aligned to the base rows (weighted studies). */
+  /** Survey columns of the assembled rows (weighted studies). */
   private final case class SurveyBase(
-      strat: Array[String],
-      clust: Array[String],
-      weightsByName: Map[String, Array[Double]], // normalized, NaN = missing
-      weightNameFor: Map[String, Option[String]],
-      weightErrorRvs: Map[String, String], // rv -> error when no mapped weight
-      weightByIdAll: Map[String, Map[String, Double]], // full-design lookup
-      subsetIds: Option[Set[String]],
-      fpcPerClust: Map[String, Double],
-      clustPerStratFull: Map[String, Int],
-      stratForClustFull: Map[String, String],
-      hasStrata: Boolean, hasCluster: Boolean, hasWeights: Boolean,
-      singleCluster: String, dropUnweighted: Boolean,
-      // no-cluster designs: O(#strata) full-design totals + per-row fpc
-      // fractions (replaces the per-pseudo-cluster maps, which stay empty)
-      stratumTotalsFull: Map[String, (Long, Double)] = Map.empty,
-      rowFpc: Array[Double] = Array.empty)
+      design: StudyDesign,
+      strat: Array[String],  // complete-case rows
+      clust: Array[String],  // complete-case rows
+      rowFpc: Array[Double], // complete-case rows: per-row fpc fraction
+      weightsByName: Map[String, Array[Double]]) // every row; normalized, NaN = missing
+
+  /** What every weighted fit of one study shares, on either row path. */
+  private final case class StudyDesign(
+      totals: DesignTotals,
+      weightNames: Seq[String], // the `__w_*` columns of surveyRowsDf, in order
+      weightFor: Map[String, Either[String, Option[String]]], // rv -> weight, or why none
+      dropUnweighted: Boolean)
+
+  /** How [[assemble]] turns rows of the study's one row layout (see
+    * [[observations]]) into the kernel's inputs. `standardize` maps the
+    * complete-case values of the continuous outcome (key -1) and of each
+    * continuous covariate (its index) to what the fits see. */
+  private final case class RowLayout(
+      covariates: Seq[(String, String)], // name, kind
+      caseLevel: Option[String],         // binary outcome: the value coded 1
+      design: Option[StudyDesign],
+      standardize: (Int, Array[Double]) => Array[Double])
 
   def run(
       spark: SparkSession,
@@ -185,6 +193,15 @@ object AssociationStudy {
   private[analyze] def broadcastRowBound(nCols: Int): Long =
     (256L << 20) / (32L * nCols)
 
+  /** The value a binary outcome codes as 1: the second of its sorted
+    * levels, or Case when they are Case/Control
+    * (reference: glm_regression.py:128-156). */
+  private[analyze] def caseLevel(outcome: String, levels: Seq[String]): String = {
+    val sorted = levels.sorted
+    require(sorted.size == 2, s"binary outcome $outcome must have 2 levels")
+    if (sorted == Seq("Case", "Control")) "Case" else sorted(1)
+  }
+
   private def runOne(
       spark: SparkSession,
       cf: CladeFrame,
@@ -203,97 +220,48 @@ object AssociationStudy {
         AggregatedGlm.supports(cf, outcome, covariates, rvs, standardize))
       return AggregatedGlm.run(spark, cf, outcome, covariates, rvs, minN)
 
-    val outcomeType = cf.typeOf(outcome)
-    val family = outcomeType match {
+    val family = cf.typeOf(outcome) match {
       case Continuous => Glm.Gaussian
       case Binary     => Glm.Binomial
       case t => throw new IllegalArgumentException(
         s"outcome $outcome must be continuous or binary, got $t")
     }
+    val covKinds = covariates.map(c => c -> (cf.typeOf(c) match {
+      case Continuous => "continuous"
+      case Binary     => "binary"
+      case _          => "categorical"
+    }))
+    val design = surveyDesign.map(sd => StudyDesign(sd.totals, sd.weightColumnNames,
+      rvs.map(rv => rv -> sd.weightNameFor(rv)).toMap, sd.dropUnweighted))
 
-    // ------- base block: complete-case outcome + covariates. Survey subsets
-    // restrict the analyzed rows (a left-semi join on the kept ids, which
-    // materializes nothing on the driver); design totals remain full --
-    // survey_design.py:131-141 vs 552-578. Like the reference
-    // (association_study.py:100), a caller never chooses the row path: the
-    // gate collects the analyzed block when it fits the driver, and that
-    // collect IS the broadcast path's base; otherwise the co-group path
-    // JOINS the block to the melted variables, so nothing row-scale ever
-    // reaches the driver.
-    val baseCols = outcome +: covariates
-    val baseDf = cf.df
-      .select((cf.idCol +: baseCols).map(c => col(c).cast("string").as(c)): _*)
-      .na.drop("any", baseCols)
-    val analyzed = surveyDesign.flatMap(_.subsetKeepIdsDf) match {
-      case Some(keep) => baseDf.join(keep.toDF(cf.idCol), Seq(cf.idCol), "left_semi")
-      case None       => baseDf
-    }
-    val baseRows = LocalPath.gate("associationStudy", analyzed,
-      broadcastRowBound(2 + covariates.size)) match {
+    // Like the reference (association_study.py:100), a caller never
+    // chooses the row path: the gate collects the observations when they
+    // fit the driver, and that collect IS the broadcast path's base;
+    // otherwise the co-group path JOINS them to the melted variables, so
+    // nothing row-scale ever reaches the driver.
+    val obs = observations(cf, outcome +: covariates, surveyDesign)
+    val probe = LocalPath.gate("associationStudy", obs,
+      broadcastRowBound(obs.columns.length)) match {
       case Some(rows) => rows
-      case None => return runOneCogroup(spark, cf, outcome, covariates, rvs, minN,
-        standardize, reportCategoricalBetas, surveyDesign, family, baseDf)
+      case None =>
+        val joined = surveyDesign.fold(obs) { sd =>
+          val rows = sd.surveyRowsDf
+          obs.join(rows.toDF(cf.idCol +: rows.columns.tail: _*), Seq(cf.idCol), "left")
+        }
+        return runOneCogroup(spark, cf, outcome, rvs, minN, standardize,
+          reportCategoricalBetas, family, joined, covKinds, design)
     }
-    val n0 = baseRows.length
-    val index = baseRows.iterator.zipWithIndex.map { case (r, i) => r.getString(0) -> i }.toMap
-    require(index.size == n0,
-      s"id column ${cf.idCol} is not unique (${n0 - index.size} duplicates) — " +
-        "the observation key must identify rows (reference enforces a proper index)")
-
-    val yRaw = Array.tabulate(n0)(i => baseRows(i).getString(1))
-    val y: Array[Double] = outcomeType match {
-      case Continuous =>
-        val v = yRaw.map(_.toDouble)
-        if (standardize) DesignMatrix.zscore(v) else v
-      case Binary =>
-        // 0/1 by sorted level order with the Case/Control override
-        // (reference: glm_regression.py:128-156)
-        val levels0 = cf.levels.getOrElse(outcome, yRaw.distinct.sorted.toSeq).sorted
-        val levels =
-          if (levels0 == Seq("Case", "Control")) Seq("Control", "Case") else levels0
-        require(levels.size == 2, s"binary outcome $outcome must have 2 levels")
-        yRaw.map(v => if (v == levels(1)) 1.0 else 0.0)
-      case _ => throw new IllegalStateException("unreachable")
-    }
-
-    val covarData = covariates.zipWithIndex.map { case (c, j) =>
-      val raw = Array.tabulate(n0)(i => baseRows(i).getString(j + 2))
-      cf.typeOf(c) match {
-        case Continuous =>
-          val v = raw.map(_.toDouble)
-          (c, "continuous", null: Array[String],
-            if (standardize) DesignMatrix.zscore(v) else v)
-        case Binary      => (c, "binary", raw, null: Array[Double])
-        case _           => (c, "categorical", raw, null: Array[Double])
-      }
-    }
-    val surveyBase = surveyDesign.map { sd =>
-      val idsArr = Array.tabulate(n0)(i => baseRows(i).getString(0))
-      val missing = idsArr.filterNot(sd.stratOf.contains)
-      require(missing.isEmpty,
-        s"The survey design is missing information for ${missing.length} rows in the data")
-      val weightLookups = rvs.map(rv => rv -> sd.weightNameEither(rv)).toMap
-      SurveyBase(
-        strat = idsArr.map(sd.stratOf),
-        clust = idsArr.map(sd.clustOf),
-        weightsByName = sd.normalizedWeights.map { case (wn, byId) =>
-          wn -> idsArr.map(id => byId.getOrElse(id, Double.NaN))
-        },
-        weightNameFor = weightLookups.collect { case (rv, Right(w)) => rv -> w },
-        weightErrorRvs = weightLookups.collect { case (rv, Left(e)) => rv -> e },
-        weightByIdAll = sd.normalizedWeights,
-        subsetIds = sd.subsetIdSet,
-        fpcPerClust = sd.fpcPerClust,
-        clustPerStratFull = sd.clustPerStrat,
-        stratForClustFull = sd.stratForClust,
-        hasStrata = sd.hasStrata, hasCluster = sd.hasCluster,
-        hasWeights = sd.hasWeights,
-        singleCluster = sd.singleCluster, dropUnweighted = sd.dropUnweighted,
-        stratumTotalsFull = sd.stratumTotals,
-        rowFpc = if (sd.hasCluster) Array.empty[Double]
-          else idsArr.map(id => sd.fpcFracOf.getOrElse(id, 0.0)))
-    }
-    val base = spark.sparkContext.broadcast(BaseData(index, y, covarData, surveyBase))
+    val rows = surveyDesign.fold(probe)(joinSurveyRows(probe, _))
+    val caseLv = if (family == Glm.Gaussian) None
+      else Some(caseLevel(outcome, cf.levels.getOrElse(outcome,
+        rows.filter(isComplete(_, covariates.size)).map(_.getString(1)).distinct.toSeq)))
+    val layout = RowLayout(covKinds, caseLv, design,
+      if (standardize) (_, v) => DesignMatrix.zscore(v) else (_, v) => v)
+    val (base, ids, _) = assemble(rows.iterator, layout, values = false)
+    val index = ids.iterator.zipWithIndex.toMap
+    checkObservations(cf.idCol, rows.length, index.size,
+      base.survey.fold(0L)(_.clust.count(_ == null).toLong))
+    val shared = spark.sparkContext.broadcast((index, base))
     val typesB = spark.sparkContext.broadcast(
       rvs.map(v => v -> cf.typeOf(v).name).toMap)
     val levelsB = spark.sparkContext.broadcast(cf.levels)
@@ -310,20 +278,110 @@ object AssociationStudy {
     val doStd = standardize
     val catBetas = reportCategoricalBetas
     val results = long.groupByKey(_._2).flatMapGroups { (variable, it) =>
-      val b = base.value
+      val (index, b) = shared.value
       val pairs = new scala.collection.mutable.ArrayBuffer[(Int, String)]()
-      val presentIds = new scala.collection.mutable.ArrayBuffer[String]()
-      it.foreach { case (id, _, v) =>
-        presentIds += id
-        b.index.get(id).foreach(i => pairs += ((i, v)))
-      }
-      val idx = pairs.map(_._1).toArray
-      val vals = pairs.map(_._2).toArray
-      val kind = typesB.value(variable)
-      fitOne(variable, outcomeName, kind, levelsB.value.get(variable), b, idx,
-        vals, presentIds.toArray, family, minN, doStd, catBetas)
+      it.foreach { case (id, _, v) => index.get(id).foreach(i => pairs += ((i, v))) }
+      fitOne(variable, outcomeName, typesB.value(variable), levelsB.value.get(variable),
+        b, pairs.map(_._1).toArray, pairs.map(_._2).toArray, family, minN, doStd, catBetas)
     }
     withMissingRows(spark, cf, outcome, rvs, results.collect())
+  }
+
+  /** The study's observations: id, outcome and covariates as strings.
+    * With a design they are the subset's observations, incomplete ones
+    * included (the missing-weight rule sees them), and each row path
+    * LEFT-joins them to `surveyRowsDf`, which gives the study's one row
+    * layout: id, outcome, covariates, `__strat`, `__clust`, the `__w_*`
+    * weights and `__fpc`. The design's totals stay full
+    * (survey_design.py:131-141 vs 552-578). Without a design they are the
+    * complete-case rows. */
+  private def observations(cf: CladeFrame, baseCols: Seq[String],
+                           surveyDesign: Option[SurveyDesignSpec]): DataFrame = {
+    val obs = cf.df.select((cf.idCol +: baseCols).map(c => col(c).cast("string").as(c)): _*)
+    surveyDesign match {
+      case None => obs.na.drop("any", baseCols)
+      case Some(sd) => sd.subsetKeepIdsDf.fold(obs)(keep =>
+        obs.join(keep.toDF(cf.idCol), Seq(cf.idCol), "left_semi"))
+    }
+  }
+
+  /** The broadcast path's LEFT join of its probed observations to the
+    * design's survey rows, done on the driver after one collect of
+    * `surveyRowsDf`; the co-group path joins the same two in Spark. In
+    * Spark this join is a broadcast hash join whose page-sized hash
+    * relation raised `ewas_survey_wide`'s peak heap from 73 to 90 MB. */
+  private def joinSurveyRows(probe: Array[Row], sd: SurveyDesignSpec): Array[Row] = {
+    val byId = sd.surveyRowsDf.collect().groupBy(_.getString(0))
+    val unmatched = Array(Row.fromSeq(Seq.fill[Any](4 + sd.weightColumnNames.size)(null)))
+    probe.flatMap(r => byId.getOrElse(r.getString(0), unmatched)
+      .map(s => Row.fromSeq(r.toSeq ++ s.toSeq.tail)))
+  }
+
+  /** Whether a row of the layout has its outcome and every covariate. */
+  private def isComplete(r: Row, nCov: Int): Boolean =
+    (1 to 1 + nCov).forall(!r.isNullAt(_))
+
+  /** The checks both row paths make before any fit, from counts over their
+    * observations: ids are unique (a duplicate would multiply rows in the
+    * co-group join — observed: lineitem keyed by the non-unique l_orderkey
+    * inflated N 60000→298996), and every complete-case observation has a
+    * row in the survey design. */
+  private def checkObservations(idCol: String, rows: Long, distinctIds: Long,
+                                unmatched: Long): Unit = {
+    require(distinctIds == rows,
+      s"id column $idCol is not unique (${rows - distinctIds} duplicates) — " +
+        "the observation key must identify rows (reference enforces a proper index)")
+    require(unmatched == 0,
+      s"The survey design is missing information for $unmatched rows in the data")
+  }
+
+  /** Builds the kernel's inputs from rows of the study's one row layout:
+    * the driver calls it once on the broadcast probe's rows, each co-group
+    * task on its variable's rows. Returns them with each position's id and,
+    * with `values` (co-group rows, which end with the variable's value),
+    * each position's value. */
+  private def assemble(rows: Iterator[Row], layout: RowLayout,
+                       values: Boolean): (BaseData, Array[String], Array[String]) = {
+    import scala.collection.mutable.ArrayBuffer
+    val nCov = layout.covariates.size
+    val nW = layout.design.fold(0)(_.weightNames.size)
+    val s0 = 2 + nCov // first survey cell
+    val ids, vals, strat, clust = new ArrayBuffer[String]()
+    val complete = new ArrayBuffer[Boolean]()
+    val cells = Array.fill(1 + nCov)(new ArrayBuffer[String]()) // outcome, covariates
+    val fpc = new ArrayBuffer[Double]()
+    val w = Array.fill(nW)(new ArrayBuffer[Double]())
+    rows.foreach { r =>
+      ids += r.getString(0)
+      complete += isComplete(r, nCov)
+      var j = 0
+      while (j <= nCov) { cells(j) += r.getString(1 + j); j += 1 }
+      if (layout.design.nonEmpty) {
+        strat += r.getString(s0)
+        clust += r.getString(s0 + 1)
+        var k = 0
+        while (k < nW) {
+          w(k) += (if (r.isNullAt(s0 + 2 + k)) Double.NaN else r.getDouble(s0 + 2 + k))
+          k += 1
+        }
+        fpc += (if (r.isNullAt(s0 + 2 + nW)) 0.0 else r.getDouble(s0 + 2 + nW))
+      }
+      if (values) vals += r.getString(r.length - 1)
+    }
+    val fit = ids.indices.filter(complete).toArray
+    val order = fit ++ ids.indices.filterNot(complete)
+    def doubles(cell: Int) = layout.standardize(cell - 1, fit.map(cells(cell)(_).toDouble))
+    val y = layout.caseLevel match {
+      case Some(one) => fit.map(i => if (cells(0)(i) == one) 1.0 else 0.0)
+      case None      => doubles(0)
+    }
+    val covars = layout.covariates.zipWithIndex.map {
+      case ((c, "continuous"), j) => (c, "continuous", null: Array[String], doubles(j + 1))
+      case ((c, kind), j)         => (c, kind, fit.map(cells(j + 1)), null: Array[Double])
+    }
+    val survey = layout.design.map(d => SurveyBase(d, fit.map(strat), fit.map(clust),
+      fit.map(fpc), d.weightNames.zipWithIndex.map { case (wn, k) => wn -> order.map(w(k)) }.toMap))
+    (BaseData(y, covars, survey), order.map(ids), if (values) order.map(vals) else Array.empty)
   }
 
   /** The study's O(#rvs) result table as a local relation: the collected
@@ -341,223 +399,105 @@ object AssociationStudy {
   }
 
   /** Co-group execution: melt the rv columns, JOIN the (uncollected)
-    * complete-case base block `baseDf` by id, shuffle once keyed by
-    * variable, and rebuild the kernel's per-variable arrays inside each
-    * group. Identical numerics to the
-    * broadcast path (same fitOne kernel); the trade is one wide shuffle of
-    * (value + base) rows for zero driver-side materialization. */
+    * observations `obs` (with a design, already LEFT-joined to its survey
+    * rows) by id, shuffle once keyed by variable, and
+    * [[assemble]] the kernel's inputs inside each group. Identical numerics
+    * to the broadcast path (same assembly, same fitOne kernel); the trade is
+    * one wide shuffle of (value + observation) rows for zero driver-side
+    * materialization. */
   private def runOneCogroup(
       spark: SparkSession,
       cf: CladeFrame,
       outcome: String,
-      covariates: Seq[String],
       rvs: Seq[String],
       minN: Long,
       standardize: Boolean,
       reportCategoricalBetas: Boolean,
-      surveyDesign: Option[SurveyDesignSpec],
       family: Glm.Family,
-      baseDf: DataFrame): DataFrame = {
+      obs: DataFrame,
+      covKinds: Seq[(String, String)],
+      design: Option[StudyDesign]): DataFrame = {
     import spark.implicits._
-    val outcomeLevels: Seq[String] = cf.typeOf(outcome) match {
-      case Binary =>
-        val levels0 = cf.levels.getOrElse(outcome,
-          cf.df.select(col(outcome).cast("string")).na.drop().distinct()
-            .collect().map(_.getString(0)).toSeq).sorted
-        if (levels0 == Seq("Case", "Control")) Seq("Control", "Case") else levels0
-      case _ => Nil
-    }
-    // same contract the broadcast path enforces via its collected index: a
-    // duplicate observation id would EXPLODE the melt⋈base join below and
-    // silently multiply every group's rows (observed: lineitem keyed by the
-    // non-unique l_orderkey inflated N 60000→298996). One narrow two-count
-    // aggregation over the projected base block — cheap relative to the fit
-    // scan, and a wrong-answer generator otherwise.
-    val Array(nBase, nIds) = baseDf
-      .agg(count(col(cf.idCol)), count_distinct(col(cf.idCol)))
-      .head().toSeq.map(_.asInstanceOf[Long]).toArray
-    require(nIds == nBase,
-      s"id column ${cf.idCol} is not unique (${nBase - nIds} duplicates) — " +
-        "the observation key must identify rows (reference enforces a proper index)")
-    // standardize_data support: global moments of the continuous outcome and
-    // continuous covariates from ONE aggregation over the (subset-restricted)
-    // complete-case base — each group then z-scores with the SAME moments
-    // the broadcast path uses driver-side. zscore semantics preserved:
-    // identity when n < 2 (null stddev) or sd == 0. The rv itself is
-    // standardized inside the kernel from its own group, which is local.
+    // binary outcome levels: from metadata if present, else one tiny
+    // distinct scan (O(#levels) rows to the driver, never row-scale)
+    val caseLv = if (family == Glm.Gaussian) None
+      else Some(caseLevel(outcome, cf.levels.getOrElse(outcome,
+        cf.df.select(col(outcome).cast("string")).na.drop().distinct()
+          .collect().map(_.getString(0)).toSeq)))
+    // ONE aggregation over the observations feeds the checks the broadcast
+    // path makes on its collected rows, and for standardize_data the global
+    // moments of the continuous outcome and covariates over the
+    // complete-case rows: each group then z-scores with the SAME moments the
+    // broadcast path uses driver-side (identity when n < 2 or sd == 0). The
+    // rv itself is standardized inside the kernel from its own group.
+    val complete = (outcome +: covKinds.map(_._1)).map(col(_).isNotNull).reduce(_ && _)
+    val unmatched =
+      if (design.isEmpty) Nil else Seq(count(when(complete && col("__clust").isNull, 1)))
     val stdTargets: Seq[(Int, String)] =
       if (!standardize) Nil
       else (if (family == Glm.Gaussian) Seq(-1 -> outcome) else Nil) ++
-        covariates.zipWithIndex.collect {
-          case (c, j) if cf.typeOf(c) == Continuous => j -> c }
-    val stdMom: Map[Int, (Double, Double)] =
-      if (stdTargets.isEmpty) Map.empty
-      else {
-        val baseForM = surveyDesign.flatMap(_.subsetKeepIdsDf) match {
-          case Some(keep) => baseDf.join(keep.toDF(cf.idCol), Seq(cf.idCol), "left_semi")
-          case None       => baseDf
-        }
-        val aggs = stdTargets.flatMap { case (_, c) => Seq(
-          avg(col(c).cast("double")), stddev_samp(col(c).cast("double"))) }
-        val r = baseForM.agg(aggs.head, aggs.tail: _*).head()
-        stdTargets.zipWithIndex.collect {
-          case ((j, _), k) if !r.isNullAt(2 * k) && !r.isNullAt(2 * k + 1) &&
-              r.getDouble(2 * k + 1) > 0.0 =>
-            j -> (r.getDouble(2 * k), r.getDouble(2 * k + 1))
-        }.toMap
+        covKinds.zipWithIndex.collect { case ((c, "continuous"), j) => j -> c }
+    val aggs = Seq(count(col(cf.idCol)), count_distinct(col(cf.idCol))) ++ unmatched ++
+      stdTargets.flatMap { case (_, c) =>
+        val v = when(complete, col(c).cast("double"))
+        Seq(avg(v), stddev_samp(v))
       }
-    val yMuSd: Option[(Double, Double)] = stdMom.get(-1)
-    val covMuSd: Map[Int, (Double, Double)] = stdMom - (-1)
-    val long0 = Modify.melt(
+    val r = obs.agg(aggs.head, aggs.tail: _*).head()
+    checkObservations(cf.idCol, r.getLong(0), r.getLong(1),
+      if (unmatched.isEmpty) 0L else r.getLong(2))
+    val m0 = 2 + unmatched.size
+    val moments: Map[Int, (Double, Double)] = stdTargets.zipWithIndex.collect {
+      case ((j, _), k) if !r.isNullAt(m0 + 2 * k) && !r.isNullAt(m0 + 2 * k + 1) &&
+          r.getDouble(m0 + 2 * k + 1) > 0.0 =>
+        j -> (r.getDouble(m0 + 2 * k), r.getDouble(m0 + 2 * k + 1))
+    }.toMap
+    val layout = RowLayout(covKinds, caseLv, design, (k, v) =>
+      moments.get(k).fold(v) { case (mu, sd) => v.map(x => (x - mu) / sd) })
+
+    val long = Modify.melt(
       cf.df.select((cf.idCol +: rvs).map(col): _*)
         .withColumn(cf.idCol, col(cf.idCol).cast("string")),
       rvs, keep = Seq(cf.idCol))
       .filter(col("value").isNotNull)
-    // survey subsets restrict analyzed rows; design totals stay full. The
-    // subset stays a DataFrame end-to-end: LEFT SEMI join, no driver id set
-    val long = surveyDesign.flatMap(_.subsetKeepIdsDf) match {
-      case Some(keep) => long0.join(keep.toDF(cf.idCol), Seq(cf.idCol), "left_semi")
-      case None       => long0
-    }
-    // LEFT join keeps rv-present rows with incomplete base visible to the
-    // missing-weight check (outcome null marks them non-fittable); the
-    // survey per-observation metadata rides along as joined columns
-    val nW = surveyDesign.map(_.weightColumnNames.size).getOrElse(0)
-    val joined = surveyDesign match {
-      case Some(sd) =>
-        long.join(baseDf, Seq(cf.idCol), "left")
-          .join(sd.surveyRowsDf, Seq(cf.idCol), "left")
-      case None => long.join(baseDf, Seq(cf.idCol)) // inner: complete base
-    }
-    // row: id(0), variable(1), value(2), outcome(3), covars(4..),
-    //      [__strat, __clust, __w_*]
-    val covarKinds = covariates.map(c => c -> (cf.typeOf(c) match {
-      case Continuous => "continuous"
-      case Binary     => "binary"
-      case _          => "categorical"
-    })).toMap
+    // each row: the observation's cells, then (variable, value); the inner
+    // join keeps just the observations (with a design, the subset's)
+    val joined = obs.join(long, Seq(cf.idCol))
     val typesB = spark.sparkContext.broadcast(rvs.map(v => v -> cf.typeOf(v).name).toMap)
     val levelsB = spark.sparkContext.broadcast(cf.levels)
-    val surveySmall = surveyDesign.map { sd =>
-      // only the TINY design-total structures are broadcast — the
-      // per-observation metadata arrived via the join above
-      (rvs.map(rv => rv -> sd.weightNameEither(rv)).toMap,
-        sd.weightColumnNames, sd.fpcPerClust, sd.clustPerStrat,
-        sd.stratForClust, sd.hasStrata, sd.hasCluster, sd.hasWeights,
-        sd.singleCluster, sd.dropUnweighted, sd.stratumTotals)
-    }
     val outcomeName = outcome
     val catBetas = reportCategoricalBetas
     val doStd = standardize
-    val nCov = covariates.size
-    val covarSeq = covariates
-    val oLevels = outcomeLevels
 
-    val resultDs = joined.groupByKey(r => r.getString(1)).flatMapGroups { (variable, rows) =>
-      val ids = new scala.collection.mutable.ArrayBuffer[String]()
-      val yBuf = new scala.collection.mutable.ArrayBuffer[Double]()
-      val vals = new scala.collection.mutable.ArrayBuffer[String]()
-      val covarBufs = Array.fill(nCov)(new scala.collection.mutable.ArrayBuffer[String]())
-      val stratBuf = new scala.collection.mutable.ArrayBuffer[String]()
-      val clustBuf = new scala.collection.mutable.ArrayBuffer[String]()
-      val fpcBuf = new scala.collection.mutable.ArrayBuffer[Double]()
-      val wBufs = Array.fill(nW)(new scala.collection.mutable.ArrayBuffer[Double]())
-      val allIds = new scala.collection.mutable.ArrayBuffer[String]()
-      val wByIdBufs = Array.fill(nW)(Map.newBuilder[String, Double])
-      rows.foreach { r =>
-        val id = r.getString(0)
-        allIds += id
-        val sBase = 4 + nCov
-        var k = 0
-        while (k < nW) {
-          val w = if (r.isNullAt(sBase + 2 + k)) Double.NaN else r.getDouble(sBase + 2 + k)
-          wByIdBufs(k) += id -> w
-          k += 1
-        }
-        if (!r.isNullAt(3)) { // base-complete row -> fittable
-          ids += id
-          vals += r.getString(2)
-          val yRaw = r.getString(3)
-          val y0 = if (oLevels.isEmpty) yRaw.toDouble
-            else if (yRaw == oLevels(1)) 1.0 else 0.0
-          yBuf += (yMuSd match {
-            case Some((mu, sd)) => (y0 - mu) / sd
-            case None           => y0
-          })
-          var j = 0
-          while (j < nCov) { covarBufs(j) += r.getString(4 + j); j += 1 }
-          if (nW > 0 || surveySmall.nonEmpty) {
-            stratBuf += (if (r.isNullAt(sBase)) null else r.getString(sBase))
-            clustBuf += (if (r.isNullAt(sBase + 1)) null else r.getString(sBase + 1))
-            var k2 = 0
-            while (k2 < nW) {
-              wBufs(k2) += (if (r.isNullAt(sBase + 2 + k2)) Double.NaN
-                else r.getDouble(sBase + 2 + k2))
-              k2 += 1
-            }
-            // per-row fpc fraction rides LAST in surveyRowsDf
-            fpcBuf += (if (r.isNullAt(sBase + 2 + nW)) 0.0
-              else r.getDouble(sBase + 2 + nW))
-          }
-        }
-      }
-      val n = yBuf.length
-      val covarData = covarSeq.zipWithIndex.map { case (c, j) =>
-        covarKinds(c) match {
-          case "continuous" =>
-            val arr = covarBufs(j).map(_.toDouble).toArray
-            val out = covMuSd.get(j) match {
-              case Some((mu, sd)) => arr.map(v => (v - mu) / sd)
-              case None           => arr
-            }
-            (c, "continuous", null: Array[String], out)
-          case k => (c, k, covarBufs(j).toArray, null: Array[Double])
-        }
-      }
-      val surveyBase = surveySmall.map { case (wLookups, wNames, fpc, cps, sfc,
-          hasStrata, hasCluster, hasWeights, singleCluster, dropUnweighted,
-          stratTotals) =>
-        SurveyBase(
-          strat = stratBuf.toArray,
-          clust = clustBuf.toArray,
-          weightsByName = wNames.zipWithIndex.map { case (wn, k) =>
-            wn -> wBufs(k).toArray }.toMap,
-          weightNameFor = wLookups.collect { case (rv, Right(w)) => rv -> w },
-          weightErrorRvs = wLookups.collect { case (rv, Left(e)) => rv -> e },
-          weightByIdAll = wNames.zipWithIndex.map { case (wn, k) =>
-            wn -> wByIdBufs(k).result() }.toMap,
-          subsetIds = None, // subset already applied to the joined rows
-          fpcPerClust = fpc, clustPerStratFull = cps, stratForClustFull = sfc,
-          hasStrata = hasStrata, hasCluster = hasCluster, hasWeights = hasWeights,
-          singleCluster = singleCluster, dropUnweighted = dropUnweighted,
-          stratumTotalsFull = stratTotals, rowFpc = fpcBuf.toArray)
-      }
-      val localBase = BaseData(Map.empty, yBuf.toArray, covarData, surveyBase)
-      fitOne(variable, outcomeName, typesB.value(variable),
-        levelsB.value.get(variable), localBase, Array.range(0, n),
-        vals.toArray, allIds.toArray, family, minN, standardize = doStd,
-        catBetas)
+    val resultDs = joined.groupByKey(r => r.getString(r.length - 2)).flatMapGroups {
+      (variable, rows) =>
+        val (b, _, vals) = assemble(rows, layout, values = true)
+        fitOne(variable, outcomeName, typesB.value(variable), levelsB.value.get(variable),
+          b, Array.range(0, vals.length), vals, family, minN, doStd, catBetas)
     }
-    // the co-group fit (melt ⋈ base shuffle + per-variable kernels) runs
-    // once, for this collect of its O(#rvs) rows
+    // the co-group fit (melt ⋈ observations shuffle + per-variable kernels)
+    // runs once, for this collect of its O(#rvs) rows
     withMissingRows(spark, cf, outcome, rvs, resultDs.collect())
   }
 
-  /** Fit one variable's model(s) against the (subset of the) base block.
-    * Runs executor-side; everything here is local array math. */
+  /** Fit one variable's model(s) on the base rows where it is present:
+    * positions `present`, values `presentVals`. Only complete-case rows are
+    * fitted; the others count for the missing-weight rule alone. Runs
+    * executor-side; everything here is local array math. */
   private def fitOne(
       variable: String,
       outcome: String,
       kind: String,
       knownLevels: Option[Seq[String]],
       b: BaseData,
-      idx: Array[Int],
-      vals: Array[String],
-      presentIds: Array[String],
+      present: Array[Int],
+      presentVals: Array[String],
       family: Glm.Family,
       minN: Long,
       standardize: Boolean,
       reportCategoricalBetas: Boolean): Seq[AssocResult] = {
+    val fitted = present.indices.filter(present(_) < b.y.length)
+    val idx = fitted.map(present).toArray
+    val vals = fitted.map(presentVals).toArray
     val n = idx.length
     val nullRes = AssocResult(variable, outcome, kind, None, Converged = false,
       n, None, None, None, None, None, None)
@@ -568,7 +508,7 @@ object AssociationStudy {
       b.survey match {
         case Some(sv) =>
           return fitOneWeighted(variable, outcome, kind, knownLevels, b, sv,
-            idx, vals, presentIds, family, minN, standardize, reportCategoricalBetas)
+            present, idx, vals, family, minN, standardize, reportCategoricalBetas)
         case None => ()
       }
       val ySub = DenseVector(idx.map(b.y))
@@ -654,45 +594,39 @@ object AssociationStudy {
       knownLevels: Option[Seq[String]],
       b: BaseData,
       sv: SurveyBase,
+      present: Array[Int],
       idx0: Array[Int],
       vals0: Array[String],
-      presentIds: Array[String],
       family: Glm.Family,
       minN: Long,
       standardize: Boolean,
       reportCategoricalBetas: Boolean): Seq[AssocResult] = {
     // an rv with no mapped weight nulls this variable, not the whole study
     // (reference: per-variable ValueError capture)
-    sv.weightErrorRvs.get(variable).foreach { msg =>
-      return Seq(AssocResult(variable, outcome, kind, None, Converged = false,
-        idx0.length, None, None, None, None, None, None, error = Some(msg)))
+    val weightName = sv.design.weightFor(variable) match {
+      case Right(w) => w
+      case Left(msg) => return Seq(AssocResult(variable, outcome, kind, None,
+        Converged = false, idx0.length, None, None, None, None, None, None,
+        error = Some(msg)))
     }
-    val weightName = sv.weightNameFor(variable)
     val wAll: Array[Double] = weightName match {
       case Some(wn) => sv.weightsByName(wn)
       case None     => Array.fill(b.y.length)(1.0)
     }
     // missing-weight policy (survey_design.py:397-486): the check runs over
-    // ALL subset rows where the variable is present (pre-complete-case,
-    // like the reference's ~variable_na & weight_na mask) -> error (null
-    // result) unless drop_unweighted
-    val anyMissingW = weightName.exists { wn =>
-      val byId = sv.weightByIdAll(wn)
-      presentIds.exists { id =>
-        sv.subsetIds.forall(_.contains(id)) &&
-          byId.get(id).forall(_.isNaN)
-      }
-    }
-    val missingW = idx0.indices.filter(i => wAll(idx0(i)).isNaN)
+    // ALL subset rows where the variable is present (pre-complete-case, like the
+    // reference's ~variable_na & weight_na mask) -> error (null result)
+    // unless drop_unweighted
+    val missingW = if (weightName.isEmpty) 0 else present.count(wAll(_).isNaN)
     val nullRes = AssocResult(variable, outcome, kind, weightName,
       Converged = false, idx0.length, None, None, None, None, None, None)
     val (idx, vals) =
-      if (!anyMissingW) (idx0, vals0)
-      else if (sv.dropUnweighted) {
-        val keep = idx0.indices.filterNot(missingW.toSet).toArray
+      if (missingW == 0) (idx0, vals0)
+      else if (sv.design.dropUnweighted) {
+        val keep = idx0.indices.filterNot(i => wAll(idx0(i)).isNaN).toArray
         (keep.map(idx0), keep.map(vals0))
       } else return Seq(nullRes.copy(error = Some(
-        s"${missingW.length} observations are missing weights (${weightName.getOrElse("")}) " +
+        s"$missingW observations are missing weights (${weightName.getOrElse("")}) " +
           "where the variable is present; pass drop_unweighted to analyze anyway")))
     val n = idx.length
     if (n < minN || n < 3) return Seq(nullRes.copy(N = n, error = Some(
@@ -707,18 +641,8 @@ object AssociationStudy {
         case (name, _, svv, _) =>
           DesignMatrix.CategoricalTerm(name, idx.map(svv))
       }
-      val design = SurveyKernel.AlignedDesign(
-        strat = idx.map(b.survey.get.strat),
-        clust = idx.map(b.survey.get.clust),
-        weights = w,
-        fpcPerClust = sv.fpcPerClust,
-        clustPerStratFull = sv.clustPerStratFull,
-        stratForClustFull = sv.stratForClustFull,
-        hasStrata = sv.hasStrata, hasCluster = sv.hasCluster,
-        hasWeights = sv.hasWeights,
-        singleCluster = sv.singleCluster,
-        stratumTotalsFull = sv.stratumTotalsFull,
-        rowFpc = if (sv.rowFpc.isEmpty) Array.empty[Double] else idx.map(sv.rowFpc))
+      val design = SurveyKernel.AlignedDesign(idx.map(sv.strat), idx.map(sv.clust), w,
+        sv.design.totals, idx.map(sv.rowFpc))
 
       kind match {
         case "continuous" | "binary" | "constant" | "unknown" =>
@@ -735,12 +659,10 @@ object AssociationStudy {
           val (names, x) = DesignMatrix.build(n, covarTerms :+ rvTerm)
           val fit = Glm.fit(x, ySub, family, Some(DenseVector(w)))
           val i = names.indexWhere(_ == rvTerm.columns.head._1)
-          val useSandwich = sv.hasStrata || sv.hasCluster || sv.hasWeights
-          val (se0, dof) =
-            if (useSandwich) {
-              val vcov = SurveyKernel.stataLinearizationVcov(x, ySub, fit, family, design)
-              (math.sqrt(vcov(i, i)), design.dof(n, x.cols))
-            } else (fit.se(i), (n - x.cols).toDouble)
+          // every design has strata, clusters or weights, so the sandwich
+          val vcov = SurveyKernel.stataLinearizationVcov(x, ySub, fit, family, design)
+          val se0 = math.sqrt(vcov(i, i))
+          val dof = design.dof(n, x.cols)
           val beta = fit.beta(i)
           // dof < 1 -> SE infinite, pvalue 1 (weighted_glm_regression.py:186-189)
           val (se, p) =

@@ -222,8 +222,13 @@ object InteractionStudy {
     val colIdx = cols.zipWithIndex.toMap
 
     val yRaw = Array.tabulate(n0)(i => rows(i).getString(0))
-    val y = encodeOutcome(yRaw, outcomeType,
-      cf.levels.get(outcome).map(_.sorted))
+    val y = outcomeType match {
+      case Binary =>
+        val one = AssociationStudy.caseLevel(outcome,
+          cf.levels.getOrElse(outcome, yRaw.distinct.toSeq))
+        yRaw.map(v => if (v == one) 1.0 else 0.0)
+      case _ => yRaw.map(_.toDouble)
+    }
     val colData: Map[String, Array[String]] = (covariates ++ vars).map { c =>
       c -> Array.tabulate(n0)(i => rows(i).getString(colIdx(c)))
     }.toMap
@@ -615,10 +620,10 @@ object InteractionStudy {
     import spark.implicits._
     // binary outcome levels: from metadata if present, else one tiny
     // distinct scan (O(#levels) rows to the driver, never row-scale)
-    val outcomeLevels: Option[Seq[String]] = cf.typeOf(outcome) match {
-      case Binary => Some(cf.levels.getOrElse(outcome,
+    val caseLv: Option[String] = cf.typeOf(outcome) match {
+      case Binary => Some(AssociationStudy.caseLevel(outcome, cf.levels.getOrElse(outcome,
         cf.df.select(col(outcome).cast("string")).na.drop().distinct()
-          .collect().map(_.getString(0)).toSeq).sorted)
+          .collect().map(_.getString(0)).toSeq)))
       case _ => None
     }
     val vars = interactions.flatMap(p => Seq(p._1, p._2)).distinct
@@ -636,7 +641,6 @@ object InteractionStudy {
     val interArr = interactions.toIndexedSeq
     val varKinds: Map[String, String] = vars.map(v => v -> cf.typeOf(v).name).toMap
     val outcomeName = outcome
-    val oLevels = outcomeLevels
     val covarSeq = covariates
 
     def collectGroup(rows: Iterator[org.apache.spark.sql.Row])
@@ -646,7 +650,8 @@ object InteractionStudy {
       val a2 = new scala.collection.mutable.ArrayBuffer[String]()
       val covarBufs = Array.fill(nCov)(new scala.collection.mutable.ArrayBuffer[String]())
       rows.foreach { r =>
-        yBuf += encodeOutcomeValue(r.getString(0), oLevels)
+        val yRaw = r.getString(0)
+        yBuf += caseLv.fold(yRaw.toDouble)(one => if (yRaw == one) 1.0 else 0.0)
         var j = 0
         while (j < nCov) { covarBufs(j) += r.getString(1 + j); j += 1 }
         a1 += r.getString(nCov + 2)
@@ -707,28 +712,6 @@ object InteractionStudy {
   private def sortPlain(df: DataFrame): DataFrame = df.orderBy(PlainOrder.map(_.column): _*)
 
   private def sortBetas(df: DataFrame): DataFrame = df.orderBy(BetasOrder.map(_.column): _*)
-
-  /** 0/1-encode a binary outcome by sorted level order with the
-    * Case/Control override (reference: glm_regression.py:128-156). */
-  private def encodeOutcome(raw: Array[String], kind: VariableType,
-                            knownLevels: Option[Seq[String]]): Array[Double] =
-    kind match {
-      case Continuous => raw.map(_.toDouble)
-      case Binary =>
-        val levels0 = knownLevels.getOrElse(raw.distinct.sorted.toSeq)
-        val levels =
-          if (levels0 == Seq("Case", "Control")) Seq("Control", "Case") else levels0
-        raw.map(v => if (v == levels(1)) 1.0 else 0.0)
-      case t => throw new IllegalArgumentException(s"bad outcome type $t")
-    }
-
-  private def encodeOutcomeValue(v: String, levels: Option[Seq[String]]): Double =
-    levels match {
-      case None => v.toDouble
-      case Some(l0) =>
-        val l = if (l0 == Seq("Case", "Control")) Seq("Control", "Case") else l0
-        if (v == l(1)) 1.0 else 0.0
-    }
 
   private def term(name: String, kind: String, raw: Array[String]): DesignMatrix.Term =
     kind match {

@@ -3,6 +3,21 @@ package graft.survey
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
+/** A design's full-population totals (survey_design.py:131-141), computed
+  * before any subset, with the flags the variance needs. One serializable
+  * value: [[SurveyDesignSpec]] builds it once and every fit's
+  * [[SurveyKernel.AlignedDesign]] holds it as is. Clustered designs fill
+  * the per-PSU maps; a no-cluster design, whose every observation is its own
+  * PSU, fills only the O(#strata) `stratumTotals`. */
+final case class DesignTotals(
+    hasStrata: Boolean,
+    hasCluster: Boolean,
+    singleCluster: String,
+    fpcPerClust: Map[String, Double],   // PSU -> sampling fraction
+    clustPerStrat: Map[String, Int],    // stratum -> PSUs (rows without clusters)
+    stratForClust: Map[String, String], // PSU -> stratum
+    stratumTotals: Map[String, (Long, Double)]) // stratum -> (PSUs, Σ(1 − fpc))
+
 /** Complex-survey design specification — strata / cluster (PSU) / sampling
   * weights / finite-population correction, aligned to the observation table
   * by id (reference: clarite/modules/survey/survey_design.py:9-146).
@@ -10,13 +25,10 @@ import org.apache.spark.sql.functions._
   * Construction is ONE grouped Spark aggregation, keyed by PSU (or by
   * stratum when there are no clusters), whose O(#PSUs) / O(#strata) rows
   * are collected once; validations (missing strata/cluster/fpc counts,
-  * empty design), weight normalization means and the DESIGN TOTALS
-  * (clusters per stratum, stratum for cluster, fpc per cluster —
-  * survey_design.py:131-141) are computed from them on the driver. The
-  * survey table itself is NEVER collected for the co-group execution path —
-  * per-observation metadata reaches the kernels via `surveyRowsDf` joins.
-  * Only the legacy broadcast execution path (which by contract collects its
-  * base block) lazily materializes id-aligned maps, and only when used.
+  * empty design), weight normalization means and the [[DesignTotals]] are
+  * computed from them on the driver. The survey table itself is never
+  * collected: per-observation metadata reaches the studies only through
+  * [[surveyRowsDf]], which both of their row paths join by id.
   */
 final class SurveyDesignSpec(
     surveyDf: DataFrame,
@@ -35,20 +47,21 @@ final class SurveyDesignSpec(
   require(strata.nonEmpty || cluster.nonEmpty || singleWeight.nonEmpty || multiWeight.nonEmpty,
     "At least one of strata, cluster, or weights must be provided")
 
-  val hasStrata: Boolean = strata.nonEmpty
-  val hasCluster: Boolean = cluster.nonEmpty
-  val hasWeights: Boolean = singleWeight.nonEmpty || multiWeight.nonEmpty
-  val hasFpc: Boolean = fpc.nonEmpty
+  private val hasStrata: Boolean = strata.nonEmpty
+  private val hasCluster: Boolean = cluster.nonEmpty
+  private val hasFpc: Boolean = fpc.nonEmpty
 
-  /** Weight column used for a given regression variable. */
-  def weightNameFor(rv: String): Option[String] =
-    singleWeight.orElse(multiWeight.get(rv) match {
-      case s @ Some(_) => s
+  /** Weight column used for a given regression variable, or Left(error)
+    * when the design maps weights per variable and has none for `rv`: one
+    * variable without a mapped weight must null that variable, not abort
+    * the study (reference: weighted_glm_regression.py per-variable error
+    * capture). */
+  def weightNameFor(rv: String): Either[String, Option[String]] =
+    singleWeight.orElse(multiWeight.get(rv)) match {
       case None if multiWeight.nonEmpty =>
-        throw new IllegalArgumentException(
-          s"No weight found in the survey design for the '$rv' variable")
-      case None => None
-    })
+        Left(s"No weight found in the survey design for the '$rv' variable")
+      case w => Right(w)
+    }
 
   private val weightCols: Seq[String] = (singleWeight.toSeq ++ multiWeight.values).distinct
 
@@ -176,28 +189,18 @@ final class SurveyDesignSpec(
     }
   }
 
-  /** Per-stratum (full-design PSU count, Σ(1−fpc fraction)) for no-cluster
-    * designs — the kernel's replacement for the per-pseudo-cluster maps. */
-  def stratumTotals: Map[String, (Long, Double)] =
-    if (hasCluster) Map.empty else noClustTotals._1
-
   /** Clusters per stratum on the full design (rows per stratum when every
     * observation is its own PSU). */
-  lazy val clustPerStrat: Map[String, Int] =
+  private def clustPerStrat: Map[String, Int] =
     if (hasCluster) clusterTable.groupBy(_._2).view.mapValues(_.length).toMap
     else noClustTotals._1.map { case (s, (n, _)) => s -> n.toInt }
-
-  /** Cluster → stratum on the full design — CLUSTERED designs only (empty
-    * for no-cluster designs, whose kernel path never enumerates PSUs). */
-  lazy val stratForClust: Map[String, String] =
-    if (hasCluster) clusterTable.map(c => c._1 -> c._2).toMap else Map.empty
 
   /** fpc as a sampling FRACTION per cluster. Values > 1 are population
     * sizes and are converted (survey_design.py:291-312): with strata, the
     * sampled stratum SIZE (row count) over the population; cluster-only
     * designs use the number of sampled clusters over the population.
     * CLUSTERED designs only — no-cluster fpc rides per-row. */
-  lazy val fpcPerClust: Map[String, Double] = {
+  private def fpcPerClust: Map[String, Double] = {
     if (!hasFpc || !hasCluster) Map.empty
     else {
       val anyPop = clusterTable.exists(_._4 > 1.0)
@@ -218,132 +221,69 @@ final class SurveyDesignSpec(
     }
   }
 
-  // eager design-rule checks that the reference performs at construction
-  if (hasFpc) { if (hasCluster) fpcPerClust else noClustTotals }
+  /** The full design's totals, built (and validated) at construction. */
+  val totals: DesignTotals = DesignTotals(
+    hasStrata = hasStrata, hasCluster = hasCluster, singleCluster = singleCluster,
+    fpcPerClust = fpcPerClust, clustPerStrat = clustPerStrat,
+    // cluster -> stratum: empty for no-cluster designs, whose kernel path
+    // never enumerates PSUs
+    stratForClust =
+      if (hasCluster) clusterTable.map(c => c._1 -> c._2).toMap else Map.empty,
+    stratumTotals = if (hasCluster) Map.empty else noClustTotals._1)
+
+  // the design-rule check that the reference performs at construction
   if (hasStrata && hasCluster &&
       !Set("average", "certainty", "adjust")(singleCluster)) {
-    val singles = clustPerStrat.filter(_._2 < 2)
+    val singles = totals.clustPerStrat.filter(_._2 < 2)
     require(singles.isEmpty,
       s"One or more strata have single clusters: ${singles.keys.mkString(", ")}. " +
         "Adjust the 'single_cluster' SurveyDesignSpec parameter or reassign " +
         "the singular cluster to avoid this error.")
   }
 
-  // --------------------------------------- broadcast-path feed (LAZY collect)
-  // Only the broadcast execution path needs id-aligned driver-side maps; it
-  // collects its base block by contract, so collecting the survey columns is
-  // the same order of driver memory. The co-group path NEVER triggers this.
-  @transient private var broadcastCollected = false
-
-  /** True iff the id-aligned maps below were ever materialized — the
-    * co-group path must keep this false (asserted in tests). */
-  def wasCollectedForBroadcast: Boolean = broadcastCollected
-
-  @transient private lazy val collected
-      : Array[(String, String, String, Double, Array[Double])] = {
-    broadcastCollected = true
-    designProj.collect().map { r =>
-      val ws = Array.tabulate(weightCols.size) { i =>
-        if (r.isNullAt(4 + i)) Double.NaN else r.getDouble(4 + i)
-      }
-      (r.getString(0), r.getString(1), r.getString(2),
-        if (r.isNullAt(3)) 0.0 else r.getDouble(3), ws)
-    }
-  }
-
-  def ids: Array[String] = collected.map(_._1)
-  lazy val stratOf: Map[String, String] = collected.map(r => r._1 -> r._2).toMap
-  lazy val clustOf: Map[String, String] = collected.map(r => r._1 -> r._3).toMap
-
-  /** Per-row fpc FRACTION by id — BROADCAST-PATH feed for no-cluster
-    * designs (the co-group path reads the `__fpc` column of
-    * [[surveyRowsDf]] instead). Empty when clustered or fpc-less. */
-  @transient lazy val fpcFracOf: Map[String, Double] =
-    if (!hasFpc || hasCluster) Map.empty
-    else {
-      val (totals, anyPop) = noClustTotals
-      collected.map { r =>
-        val f = r._4
-        r._1 -> (if (!anyPop) f else totals(r._2)._1.toDouble / f)
-      }.toMap
-    }
-
-  /** Normalized weights (w / mean(w), computed pre-subset —
-    * survey_design.py:390) per weight column, NaN where missing. */
-  lazy val normalizedWeights: Map[String, Map[String, Double]] =
-    weightCols.zipWithIndex.map { case (wc, i) =>
-      val mean = weightMeans(wc)
-      wc -> collected.map(r => r._1 -> (r._5(i) / mean)).toMap
-    }.toMap
-
   // ----------------------------------------------------------------- subset
   @transient private var subsetKeepDf: Option[DataFrame] = None
-  var subsetCount: Int = 0
 
   /** Restrict analysis to a subpopulation; the design totals above remain
     * computed on the full design (survey_design.py:552-578). The predicate
     * is evaluated against the given table (which may contain columns later
     * dropped from the analysis data — the reference materializes the
-    * boolean mask the same way). The kept-id set stays a DATAFRAME —
-    * nothing is collected here; the co-group path applies it as a left-semi
-    * join, and only the broadcast path materializes it (lazily, like the
-    * rest of its feed). */
+    * boolean mask the same way). The kept ids stay a DATAFRAME: nothing is
+    * collected here, and the studies apply them as a left-semi join. */
   def subset(df: DataFrame, predicate: Column): SurveyDesignSpec = {
     val keep = df.filter(predicate).select(col(idCol).cast("string").as(idCol))
     subsetKeepDf = Some(subsetKeepDf.map(_.join(keep, Seq(idCol), "left_semi"))
       .getOrElse(keep))
-    subsetCount += 1
     this
   }
 
-  /** Kept ids as a DataFrame (single `idCol` string column) — the scale
-    * path's subset representation; apply with a LEFT SEMI join. */
+  /** Kept ids as a DataFrame (single `idCol` string column); apply with a
+    * LEFT SEMI join. None when no subset was applied. */
   def subsetKeepIdsDf: Option[DataFrame] = subsetKeepDf
 
-  @transient private lazy val subsetIds: Option[Set[String]] = subsetKeepDf.map { d =>
-    broadcastCollected = true
-    d.collect().map(_.getString(0)).toSet
-  }
-
-  /** Ids kept by the subsets (None = no subset applied) — BROADCAST-PATH
-    * ONLY: materializes the id set on the driver, where the analyzed rows
-    * are restricted with [[subsetKeepIdsDf]] instead. */
-  def subsetIdSet: Option[Set[String]] = subsetIds
-
-  /** Like weightNameFor but Left(error) instead of throwing — one variable
-    * without a mapped weight must null that variable, not abort the study
-    * (reference: weighted_glm_regression.py per-variable error capture). */
-  def weightNameEither(rv: String): Either[String, Option[String]] =
-    try Right(weightNameFor(rv))
-    catch { case e: IllegalArgumentException => Left(e.getMessage) }
-
-  /** Per-observation survey metadata as a DataFrame — the feed for the
-    * co-group execution path, which must not materialize observation-scale
-    * data on the driver. Columns: id (string), __strat, __clust, plus one
-    * normalized weight column per distinct weight (`__w_<name>`). The
-    * normalization means and design totals are the (tiny) aggregates this
-    * spec already computed. */
+  /** Per-observation survey metadata as a DataFrame — the design's only
+    * per-observation feed, joined by id on both of the studies' row paths.
+    * Columns: id (string), __strat, __clust, one normalized weight column
+    * per distinct weight (`__w_<name>`, null where missing), then __fpc.
+    * The normalization means and design totals are the (tiny) aggregates
+    * this spec already computed. */
   def surveyRowsDf: DataFrame = {
-    val wExprs = weightCols.map { wc =>
-      (clampedW(wc) / weightMeans(wc)).as(s"__w_$wc")
-    }
-    // per-row fpc FRACTION rides LAST (positional readers unchanged):
-    // populated only for no-cluster designs with fpc; population-form
-    // values convert via the tiny per-stratum row-count map (when-chain
-    // over O(#strata) literals — no join, stays codegen'd)
-    val fpcExpr: Column =
-      if (!hasFpc || hasCluster) lit(0.0).as("__fpc")
+    // per-row fpc FRACTION rides LAST: populated only for no-cluster
+    // designs with fpc; population-form values convert via the tiny
+    // per-stratum row-count map (when-chain over O(#strata) literals — no
+    // join, stays codegen'd)
+    val fpcFrac: Column =
+      if (!hasFpc || hasCluster) lit(0.0)
       else {
         val (totals, anyPop) = noClustTotals
-        val fRaw = col(fpc.get).cast("double")
-        (if (!anyPop) fRaw
-         else totals.foldLeft(lit(Double.NaN)) { case (acc, (s, (nh, _))) =>
-           when(strataCol === lit(s), lit(nh.toDouble) / fRaw).otherwise(acc)
-         }).as("__fpc")
+        if (!anyPop) col("__fpc")
+        else totals.foldLeft(lit(Double.NaN)) { case (acc, (s, (nh, _))) =>
+          when(col("__strat") === lit(s), lit(nh.toDouble) / col("__fpc")).otherwise(acc)
+        }
       }
-    surveyDf.select(
-      (Seq(col(idCol).cast("string").as(idCol), strataCol.as("__strat"),
-        clustCol.as("__clust")) ++ wExprs :+ fpcExpr): _*)
+    designProj.select((Seq(col(idCol), col("__strat"), col("__clust")) ++
+      weightCols.map(wc => (col(s"__w_$wc") / weightMeans(wc)).as(s"__w_$wc")) :+
+      fpcFrac.as("__fpc")): _*)
   }
 
   /** Distinct weight column names (order matches surveyRowsDf). */

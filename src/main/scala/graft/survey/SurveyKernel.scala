@@ -17,23 +17,16 @@ import graft.stats.{Distributions, Glm}
   */
 object SurveyKernel {
 
-  /** Survey metadata aligned to the fitted rows. For no-cluster designs
-    * (every observation its own PSU) the full-design universe enters ONLY
-    * through `stratumTotalsFull` — O(#strata) (PSU count, Σ(1−fpc)) pairs —
-    * and the per-fitted-row `rowFpc` fractions; the per-pseudo-cluster maps
-    * stay empty (an O(rows) driver map is a scale bug). */
+  /** Survey metadata aligned to the fitted rows, with the full design's
+    * [[DesignTotals]]. For no-cluster designs (every observation its own
+    * PSU) the full-design universe enters ONLY through the totals'
+    * O(#strata) `stratumTotals` and the per-fitted-row `rowFpc` fractions;
+    * the per-PSU maps stay empty (an O(rows) driver map is a scale bug). */
   final case class AlignedDesign(
       strat: Array[String],
       clust: Array[String],
       weights: Array[Double], // normalized; aligned to rows
-      fpcPerClust: Map[String, Double],
-      clustPerStratFull: Map[String, Int],
-      stratForClustFull: Map[String, String],
-      hasStrata: Boolean,
-      hasCluster: Boolean,
-      hasWeights: Boolean,
-      singleCluster: String,
-      stratumTotalsFull: Map[String, (Long, Double)] = Map.empty,
+      totals: DesignTotals,
       rowFpc: Array[Double] = Array.empty) {
     def nStrat: Int = strat.distinct.length
     def nClust: Int = clust.distinct.length
@@ -41,9 +34,9 @@ object SurveyKernel {
     /** Survey dof: clusters − strata − (p−1), with the reference's variants
       * (survey_design.py get_dof). */
     def dof(n: Int, p: Int): Double =
-      if (hasCluster && hasStrata) nClust - nStrat - (p - 1)
-      else if (hasCluster) nClust - 1 - (p - 1)
-      else if (hasStrata) n - nStrat - (p - 1)
+      if (totals.hasCluster && totals.hasStrata) nClust - nStrat - (p - 1)
+      else if (totals.hasCluster) nClust - 1 - (p - 1)
+      else if (totals.hasStrata) n - nStrat - (p - 1)
       else n - p - 1
   }
 
@@ -93,7 +86,8 @@ object SurveyKernel {
   def stataLinearizationVcov(
       x: DenseMatrix[Double], y: DenseVector[Double], fit: Glm.Fit,
       family: Glm.Family, design: AlignedDesign): DenseMatrix[Double] = {
-    if (!design.hasCluster && design.stratumTotalsFull.nonEmpty)
+    val t = design.totals
+    if (!t.hasCluster && t.stratumTotals.nonEmpty)
       return noClusterLinearizationVcov(x, y, fit, family, design)
     val n = x.rows
     val p = x.cols
@@ -128,14 +122,14 @@ object SurveyKernel {
     // subsets/complete-case) contribute ZERO score rows, which shifts the
     // stratum means exactly as the R survey package (and the reference's
     // categorical groupby, which emits empty categories) computes them.
-    val clusters = design.stratForClustFull.keys.toArray.sorted
+    val clusters = t.stratForClust.keys.toArray.sorted
     clusters.foreach(c => if (!clusterSum.contains(c))
       clusterSum(c) = DenseVector.zeros[Double](p))
-    val byStrat = clusters.groupBy(c => design.stratForClustFull(c))
+    val byStrat = clusters.groupBy(c => t.stratForClust(c))
     val centered = scala.collection.mutable.LinkedHashMap[String, DenseVector[Double]]()
-    if (design.hasStrata) {
+    if (t.hasStrata) {
       byStrat.foreach { case (_, cs) =>
-        if (cs.length == 1 && design.singleCluster == "adjust") {
+        if (cs.length == 1 && t.singleCluster == "adjust") {
           // single-cluster stratum centered by the population mean
           centered(cs.head) = clusterSum(cs.head) - popMean
         } else {
@@ -150,8 +144,8 @@ object SurveyKernel {
     }
 
     // 'average' lonely-PSU mode: inflate by sqrt(H / (H - #single))
-    if (design.hasStrata && design.singleCluster == "average") {
-      val nSingle = design.clustPerStratFull.count(_._2 == 1)
+    if (t.hasStrata && t.singleCluster == "average") {
+      val nSingle = t.clustPerStrat.count(_._2 == 1)
       val scale = math.sqrt(design.nStrat.toDouble /
         (design.nStrat - nSingle).toDouble)
       centered.keys.foreach(c => centered(c) :*= scale)
@@ -159,9 +153,9 @@ object SurveyKernel {
 
     // scale rows: mh = sqrt(nh/(nh-1)) from the FULL design, fh = sqrt(1-fpc)
     val jrows = clusters.map { c =>
-      val nh = design.clustPerStratFull(design.stratForClustFull(c)).toDouble
+      val nh = t.clustPerStrat(t.stratForClust(c)).toDouble
       val mh = if (nh > 1) math.sqrt(nh / (nh - 1)) else 1.0
-      val fh = math.sqrt(1.0 - design.fpcPerClust.getOrElse(c, 0.0))
+      val fh = math.sqrt(1.0 - t.fpcPerClust.getOrElse(c, 0.0))
       centered(c) * (mh * fh)
     }
     val vHat = DenseMatrix.zeros[Double](p, p)
@@ -230,9 +224,10 @@ object SurveyKernel {
     }
     popMean :/= n.toDouble
 
-    val totals = design.stratumTotalsFull
+    val t = design.totals
+    val totals = t.stratumTotals
     val scale2 =
-      if (design.hasStrata && design.singleCluster == "average") {
+      if (t.hasStrata && t.singleCluster == "average") {
         val nSingle = totals.count(_._2._1 == 1L)
         design.nStrat.toDouble / (design.nStrat - nSingle).toDouble
       } else 1.0
@@ -240,7 +235,7 @@ object SurveyKernel {
     totals.foreach { case (s, (nh, sumFh2Full)) =>
       val a = acc.getOrElse(s, new StratAcc)
       val c =
-        if (design.hasStrata && nh == 1L && design.singleCluster == "adjust") popMean
+        if (t.hasStrata && nh == 1L && t.singleCluster == "adjust") popMean
         else a.s / nh.toDouble
       val mh2 = if (nh > 1L) nh.toDouble / (nh - 1.0) else 1.0
       val w = mh2 * scale2
@@ -370,11 +365,12 @@ object SurveyKernel {
     // ALL full-design clusters are deleted in turn — a cluster emptied by
     // subsets/complete-case still reweights its stratum's survivors
     // (mirrors the zero-score-row domain semantics of the linearization)
-    val clusters = design.stratForClustFull.keys.toArray.sorted
+    val t = design.totals
+    val clusters = t.stratForClust.keys.toArray.sorted
     val betaFull = DenseVector(fit.beta)
     val rows = clusters.map { dropped =>
-      val s = design.stratForClustFull(dropped)
-      val nh = design.clustPerStratFull(s).toDouble
+      val s = t.stratForClust(dropped)
+      val nh = t.clustPerStrat(s).toDouble
       val w = Array.tabulate(x.rows) { i =>
         if (design.clust(i) == dropped) 0.0
         else if (design.strat(i) == s) design.weights(i) * nh / (nh - 1)
@@ -383,7 +379,7 @@ object SurveyKernel {
       val rep = Glm.fit(x, y, family, Some(DenseVector(w)))
       val centeredB = DenseVector(rep.beta) - betaFull
       val mh = if (nh > 1) math.sqrt((nh - 1) / nh) else 1.0
-      val fh = math.sqrt(1.0 - design.fpcPerClust.getOrElse(dropped, 0.0))
+      val fh = math.sqrt(1.0 - t.fpcPerClust.getOrElse(dropped, 0.0))
       centeredB * (mh * fh)
     }
     val vcov = DenseMatrix.zeros[Double](p, p)

@@ -56,7 +56,6 @@ class AggregatedGlmSpec extends SparkSpec {
   }
 
   test("BatchSize boundary: 70 variables span two aggregation batches") {
-    import spark.implicits._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val rng = new scala.util.Random(11)
@@ -82,7 +81,7 @@ class AggregatedGlmSpec extends SparkSpec {
   }
 
   test("binary outcome + categorical rv: distributed LRT == local LRT") {
-    var cf = li.copy(df = li.df.withColumn("high",
+    val cf = li.copy(df = li.df.withColumn("high",
       (col("l_extendedprice") > 30000).cast("string")))
       .withTypes(Map("high" -> VariableType.Binary))
       .withLevels(Map("high" -> Seq("false", "true")))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.analyze.AssociationStudy
 import graft.io.Load
@@ -162,7 +161,7 @@ class AssociationStudySpec extends SparkSpec {
 
   test("regression-kind registry: custom kinds dispatch, builtin names validate") {
     import spark.implicits._
-    import graft.model.{CladeFrame, VariableType}
+    import graft.model.CladeFrame
     import graft.analyze.RegressionKind
     val df = (1 to 300).map(i => (i.toLong, i.toDouble, i * 2.0)).toDF("id", "y", "x")
     val cf = CladeFrame(df)
@@ -205,7 +204,7 @@ class AssociationStudySpec extends SparkSpec {
     assert(agg.getString(agg.fieldIndex("warnings")).contains("non-varying covariates(s): c"))
     assert(!agg.isNullAt(agg.fieldIndex("pvalue"))) // still fits without c
     // row path (a categorical covar disqualifies the aggregated one)
-    var cf2 = cf.withTypes(Map("c" -> VariableType.Categorical))
+    val cf2 = cf.withTypes(Map("c" -> VariableType.Categorical))
       .withLevels(Map("c" -> Seq("7.0")))
     val mel = AssociationStudy.run(spark, cf2, Seq("y"),
       covariates = Seq("c"), regressionVariables = Seq("x"), minN = 1).collect().head
@@ -221,9 +220,11 @@ class AssociationStudySpec extends SparkSpec {
     val std = AssociationStudy.run(spark, nhanes, outcomes = Seq("HI_CHOL"),
       covariates = Seq("race", "agecat"), regressionVariables = Seq("RIAGENDR"),
       standardizeData = true).collect().head
-    // binary rv is 0/1 either way; continuous covariates absent -> same fit;
+    // binary rv is 0/1 either way; continuous covariates absent -> same fit
+    assertRtol(std.getDouble(std.fieldIndex("pvalue")),
+      plain.getDouble(plain.fieldIndex("pvalue")), 1e-6, "binary rv pvalue invariant")
     // use a continuous rv for the real check
-    var cf = Modify.makeContinuous(nhanes, only = Some(Seq("WTMEC2YR")))
+    val cf = Modify.makeContinuous(nhanes, only = Some(Seq("WTMEC2YR")))
     val plainC = AssociationStudy.run(spark, cf, outcomes = Seq("HI_CHOL"),
       covariates = Seq("race"), regressionVariables = Seq("WTMEC2YR"))
       .collect().head

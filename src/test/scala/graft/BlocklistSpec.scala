@@ -47,7 +47,6 @@ class BlocklistSpec extends SparkSpec {
   }
 
   test("empty blocklist: filterOut is identity, keepMatching is empty") {
-    import spark.implicits._
     val df = corpus(50)
     val bl = corpus(1).filter(lit(false)).select("url")
     assert(Blocklist.filterOut(df, bl, "url").count() === 50L)

@@ -357,7 +357,7 @@ class CliSpec extends SparkSpec {
   }
 
   test("pipeline url-extract and pagerank --dangling-mass") {
-    import org.apache.spark.sql.functions.{col, sum}
+    import org.apache.spark.sql.functions.sum
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-cli11").toString
     Seq((1L, "a https://X.Example.com/p?utm_s=1&q=2 b"),

@@ -119,7 +119,6 @@ class EwasTailSpec extends SparkSpec {
     val (spec, designJobs) = jobsOf(new SurveyDesignSpec(design, "id",
       strata = Some("strat"), cluster = Some("psu"), nest = true, singleWeight = Some("w")))
     assert(designJobs <= refJobs, s"design $designJobs jobs, one aggregation $refJobs")
-    assert(spec.clustPerStrat === (0 until 4).map(s => s"S$s" -> 3).toMap)
-    assert(!spec.wasCollectedForBroadcast)
+    assert(spec.totals.clustPerStrat === (0 until 4).map(s => s"S$s" -> 3).toMap)
   }
 }

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.analyze.{AssociationStudy, InteractionStudy}
 import graft.genomics.Genotypes
-import graft.model.{CladeFrame, VariableType}
 
 /** Genotype encodings + GWAS power assertions mirroring the reference's
   * simulation tests (reference: tests/analyze/test_gwas.py:10-31). */
@@ -146,8 +145,6 @@ class GenotypesSpec extends SparkSpec {
 
   test("hweTest: chi2 matches hand formula; simulated HWE passes, planted het excess fails") {
     import spark.implicits._
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
     // hand-check on fixed counts: 50/30/20 hom_ref/het/hom_alt
     val fixed = (Seq.fill(50)(Seq(0, 0)) ++ Seq.fill(30)(Seq(0, 1)) ++
       Seq.fill(20)(Seq(1, 1))).zipWithIndex.map { case (g, i) => (i.toLong, g) }

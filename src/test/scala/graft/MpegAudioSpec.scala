@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.pipeline.{Multimodal, MpegAudio}
 
 /** Round-trip proof for the MPEG-1 Layer II sample decoder: a matched

