@@ -34,9 +34,10 @@ import VariableType._
   *     pass computing every variable's weighted normal equations and
   *     deviance simultaneously, with each variable's current β embedded as
   *     literals. Variables converge independently (statsmodels deviance
-  *     criterion); typically < 10 passes. Continuous and binary (0/1
-  *     encodable) variables run here; categorical-rv logistic LRT stays on
-  *     the fan-out path.
+  *     criterion); typically < 10 passes. Continuous, binary (0/1
+  *     encodable) and known-level categorical variables run here; a
+  *     categorical's LRT fits its full and restricted models in the same
+  *     passes.
   *
   * Numeric results are identical to the local Breeze kernel (same normal
   * equations, same convergence test) — asserted by the golden-output suite
@@ -52,7 +53,7 @@ object AggregatedGlm {
   val MaxIter = 100
   val Tol = 1e-8
 
-  private def rvKindOk(cf: CladeFrame, rv: String, gaussian: Boolean): Boolean =
+  private def rvKindOk(cf: CladeFrame, rv: String): Boolean =
     cf.typeOf(rv) match {
       case Continuous  => true
       case Binary      => cf.levels.contains(rv)
@@ -67,7 +68,7 @@ object AggregatedGlm {
     val oOk = gaussian || (cf.typeOf(outcome) == Binary && cf.levels.contains(outcome))
     oOk && !standardize &&
       covariates.forall(cf.typeOf(_) == Continuous) &&
-      rvs.forall(rvKindOk(cf, _, gaussian))
+      rvs.forall(rvKindOk(cf, _))
   }
 
   def run(spark: SparkSession, cf: CladeFrame, outcome: String,

@@ -479,6 +479,26 @@ object AssociationStudy {
     withMissingRows(spark, cf, outcome, rvs, resultDs.collect())
   }
 
+  /** The covariate terms on the fitted positions `idx`. */
+  private def covariateTerms(b: BaseData, idx: Array[Int]): Seq[DesignMatrix.Term] =
+    b.covars.map {
+      case (name, "continuous", _, dv) => DesignMatrix.ContinuousTerm(name, idx.map(dv))
+      case (name, _, sv, _)            => DesignMatrix.CategoricalTerm(name, idx.map(sv))
+    }
+
+  /** The one-column term of a non-categorical variable: a binary one coded
+    * 0/1 by its levels (declared, else observed), any other parsed as
+    * numbers and z-scored with `standardize`. */
+  private def scalarTerm(variable: String, kind: String, knownLevels: Option[Seq[String]],
+                         vals: Array[String], standardize: Boolean): DesignMatrix.Term =
+    kind match {
+      case "binary" =>
+        DesignMatrix.BinaryTerm(variable, vals, knownLevels.getOrElse(vals.distinct.sorted.toSeq))
+      case _ =>
+        val raw = vals.map(_.toDouble)
+        DesignMatrix.ContinuousTerm(variable, if (standardize) DesignMatrix.zscore(raw) else raw)
+    }
+
   /** Fit one variable's model(s) on the base rows where it is present:
     * positions `present`, values `presentVals`. Only complete-case rows are
     * fitted; the others count for the missing-weight rule alone. Runs
@@ -512,14 +532,9 @@ object AssociationStudy {
         case None => ()
       }
       val ySub = DenseVector(idx.map(b.y))
-      // covariate terms on the subset; non-varying covariates are dropped
-      // with a warning (reference: base.py:174-187)
-      val covarTerms: Seq[DesignMatrix.Term] = b.covars.map {
-        case (name, "continuous", _, dv) =>
-          DesignMatrix.ContinuousTerm(name, idx.map(dv))
-        case (name, _, sv, _) =>
-          DesignMatrix.CategoricalTerm(name, idx.map(sv))
-      }
+      // non-varying covariates are dropped with a warning
+      // (reference: base.py:174-187)
+      val covarTerms = covariateTerms(b, idx)
       val nonVarying = covarTerms.filterNot(_.varies).map(_.name)
       val warn: Option[String] =
         if (nonVarying.isEmpty) None
@@ -527,15 +542,7 @@ object AssociationStudy {
 
       kind match {
         case "continuous" | "binary" | "constant" | "unknown" =>
-          val rvTerm: DesignMatrix.Term = kind match {
-            case "binary" =>
-              val lv = knownLevels.getOrElse(vals.distinct.sorted.toSeq)
-              DesignMatrix.BinaryTerm(variable, vals, lv)
-            case _ =>
-              val raw = vals.map(_.toDouble)
-              DesignMatrix.ContinuousTerm(variable,
-                if (standardize) DesignMatrix.zscore(raw) else raw)
-          }
+          val rvTerm = scalarTerm(variable, kind, knownLevels, vals, standardize)
           if (!rvTerm.varies) return Seq(nullRes.copy(error = Some(
             s"variable '$variable' does not vary"), warnings = warn))
           val (names, x) = DesignMatrix.build(n, covarTerms :+ rvTerm)
@@ -635,26 +642,13 @@ object AssociationStudy {
     try {
       val ySub = DenseVector(idx.map(b.y))
       val w = idx.map(wAll)
-      val covarTerms: Seq[DesignMatrix.Term] = b.covars.map {
-        case (name, "continuous", _, dv) =>
-          DesignMatrix.ContinuousTerm(name, idx.map(dv))
-        case (name, _, svv, _) =>
-          DesignMatrix.CategoricalTerm(name, idx.map(svv))
-      }
+      val covarTerms = covariateTerms(b, idx)
       val design = SurveyKernel.AlignedDesign(idx.map(sv.strat), idx.map(sv.clust), w,
         sv.design.totals, idx.map(sv.rowFpc))
 
       kind match {
         case "continuous" | "binary" | "constant" | "unknown" =>
-          val rvTerm: DesignMatrix.Term = kind match {
-            case "binary" =>
-              val lv = knownLevels.getOrElse(vals.distinct.sorted.toSeq)
-              DesignMatrix.BinaryTerm(variable, vals, lv)
-            case _ =>
-              val raw = vals.map(_.toDouble)
-              DesignMatrix.ContinuousTerm(variable,
-                if (standardize) DesignMatrix.zscore(raw) else raw)
-          }
+          val rvTerm = scalarTerm(variable, kind, knownLevels, vals, standardize)
           if (!rvTerm.varies) return Seq(nullRes.copy(N = n))
           val (names, x) = DesignMatrix.build(n, covarTerms :+ rvTerm)
           val fit = Glm.fit(x, ySub, family, Some(DenseVector(w)))

@@ -1,7 +1,7 @@
 package graft.analyze
 
 import breeze.linalg.DenseVector
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.LocalPath
 import graft.model.{CladeFrame, VariableType}
@@ -42,7 +42,11 @@ final case class InteractionBetaResult(
   * `y ~ 1 + covars + v1 + v2 + v1:v2` against the model without the
   * interaction term.
   *
-  * Two execution paths, identical numerics (shared array kernels):
+  * Gaussian studies with continuous covariates over continuous and
+  * declared categorical/binary vars run from sufficient statistics
+  * ([[runAggregated]]); the rest take one of two row paths, with identical
+  * numerics — both decode their rows with one function and run ONE pair
+  * kernel ([[PairStudy.fit]]):
   *
   *  - broadcast: the projected column block is collected once and
   *    broadcast; the PAIR list distributes. Right when rows fit on the
@@ -56,6 +60,10 @@ final case class InteractionBetaResult(
   *    the path for billion-row data with a bounded pair list (each pair's
   *    rows must fit in one task, exactly like the association study's
   *    per-variable groups).
+  *
+  * Every path brings its O(#pairs) rows, in the kernel's row shape, to
+  * the driver, where one rendering ([[render]]) makes them the result
+  * table; both row paths return it as a local relation ([[complete]]).
   */
 object InteractionStudy {
 
@@ -142,8 +150,8 @@ object InteractionStudy {
         covariates, minN, reportBetas, encoding = encoding,
         edgeEncodingInfo = edgeEncodingInfo)
     }
-    val all = parts.reduce(_.unionByName(_))
-    if (!reportBetas) sortPlain(all) else sortBetas(all)
+    LocalResult.collectSorted(parts.reduce(_.unionByName(_)),
+      if (!reportBetas) PlainOrder else BetasOrder)
   }
 
   def run(
@@ -173,7 +181,7 @@ object InteractionStudy {
     // fused array arithmetic. report_betas with categorical blocks stays
     // on the row paths (per-crossing coefficient naming is exercised by the
     // golden suites there); the cross-path equivalence tests reach the row
-    // kernels directly through [[runRows]].
+    // kernel directly through [[runRows]].
     def aggEligible(v: String): Boolean = cf.typeOf(v) match {
       case Continuous => true
       case Categorical | Binary => !reportBetas && cf.levels.contains(v)
@@ -189,7 +197,7 @@ object InteractionStudy {
   /** The row paths, broadcast or co-group, as [[graft.LocalPath.gate]]
     * picks them. The block both read is the outcome, covariates and
     * interaction vars as strings, complete-cased on outcome + covariates
-    * only — per-pair completeness is decided in the task. distinct: a
+    * only — per-pair completeness is decided in the kernel. distinct: a
     * covariate reused as an interaction var must not project (and crash
     * na.drop on) a duplicate column. */
   private[graft] def runRows(
@@ -200,63 +208,38 @@ object InteractionStudy {
       covariates: Seq[String],
       minN: Long,
       reportBetas: Boolean): DataFrame = {
-    import spark.implicits._
-    val outcomeType = cf.typeOf(outcome)
-    val family = outcomeType match {
-      case Continuous => Glm.Gaussian
-      case Binary     => Glm.Binomial
-      case t => throw new IllegalArgumentException(s"bad outcome type $t")
-    }
+    val study = PairStudy(cf, outcome, interactions, covariates, minN)
     val vars = interactions.flatMap(p => Seq(p._1, p._2)).distinct
     val cols = (outcome +: (covariates ++ vars)).distinct
     val block = cf.df
       .select(cols.map(c => col(c).cast("string").as(c)): _*)
       .na.drop("any", outcome +: covariates)
-    val rows = LocalPath.gate("interactionStudy", block,
+    val fitted = LocalPath.gate("interactionStudy", block,
       AssociationStudy.broadcastRowBound(1 + covariates.size + vars.size)) match {
-      case Some(r) => r
-      case None => return runCogroup(spark, cf, outcome, interactions, covariates,
-        minN, reportBetas, family, block)
+      case Some(rows) => fitBroadcast(spark, cf, study, rows, (covariates ++ vars).distinct
+        .map(c => c -> cols.indexOf(c)))
+      case None => fitCogroup(spark, cf, study, block)
     }
-    val n0 = rows.length
-    val colIdx = cols.zipWithIndex.toMap
+    complete(spark, study, fitted, reportBetas)
+  }
 
-    val yRaw = Array.tabulate(n0)(i => rows(i).getString(0))
-    val y = outcomeType match {
-      case Binary =>
-        val one = AssociationStudy.caseLevel(outcome,
-          cf.levels.getOrElse(outcome, yRaw.distinct.toSeq))
-        yRaw.map(v => if (v == one) 1.0 else 0.0)
-      case _ => yRaw.map(_.toDouble)
-    }
-    val colData: Map[String, Array[String]] = (covariates ++ vars).map { c =>
-      c -> Array.tabulate(n0)(i => rows(i).getString(colIdx(c)))
-    }.toMap
-    val typesMap = (covariates ++ vars).map(c => c -> cf.typeOf(c).name).toMap
-
-    val yB = spark.sparkContext.broadcast(y)
-    val colsB = spark.sparkContext.broadcast(colData)
-
-    val outcomeName = outcome
-    val pairsDs = interactions.toDS().repartition(
-      math.min(interactions.size, spark.sparkContext.defaultParallelism))
-    if (!reportBetas) {
-      val results = pairsDs.map { case (v1, v2) =>
-        val cd = colsB.value
-        fitPairCore(v1, v2, outcomeName, typesMap(v1), typesMap(v2),
-          yB.value, cd(v1), cd(v2),
-          covariates.map(c => (c, typesMap(c), cd(c))), family, minN)
-      }
-      sortPlain(results.toDF())
-    } else {
-      val results = pairsDs.flatMap { case (v1, v2) =>
-        val cd = colsB.value
-        fitPairBetasCore(v1, v2, outcomeName, typesMap(v1), typesMap(v2),
-          yB.value, cd(v1), cd(v2),
-          covariates.map(c => (c, typesMap(c), cd(c))), family, minN)
-      }
-      sortBetas(results.toDF())
-    }
+  /** Broadcast execution: the gate's probe rows are decoded once on the
+    * driver and broadcast, and the PAIR list distributes — one kernel call
+    * a pair. `cells` places each covariate and interaction var in a row. */
+  private def fitBroadcast(spark: SparkSession, cf: CladeFrame, study: PairStudy,
+                           rows: Array[Row], cells: Seq[(String, Int)])
+      : Array[(Int, InteractionBetaResult)] = {
+    import spark.implicits._
+    val caseLv = caseLevel(cf, study.outcome, rows.map(_.getString(0)).distinct.toSeq)
+    val (y0, values) = decode(rows.iterator, caseLv, cells.map(_._2))
+    val shared = spark.sparkContext.broadcast((y0, cells.map(_._1).zip(values).toMap))
+    study.pairs.indices.toDS()
+      .repartition(math.min(study.pairs.size, spark.sparkContext.defaultParallelism))
+      .flatMap { k =>
+        val (y, byName) = shared.value
+        val (v1, v2) = study.pairs(k)
+        study.fit(k, y, study.covariates.map(byName), byName(v1), byName(v2)).map(k -> _)
+      }.collect()
   }
 
   /** Sufficient-statistics execution for Gaussian studies over
@@ -281,7 +264,6 @@ object InteractionStudy {
       spark: SparkSession, cf: CladeFrame, outcome: String,
       interactions: Seq[(String, String)], covariates: Seq[String],
       minN: Long, reportBetas: Boolean): DataFrame = {
-    import spark.implicits._
     val nc = covariates.size
     val vars: Seq[String] =
       (covariates ++ interactions.flatMap(p => Seq(p._1, p._2))).distinct
@@ -460,7 +442,8 @@ object InteractionStudy {
       .filter(c => slots(c).castfail >= 0)
       .map(c => (c, acc(varIdx(c)).toLong))
       .find(_._2 > 0)
-    val results: Seq[Product] = layouts.zipWithIndex.map { case (pl, k) =>
+    val study = PairStudy(cf, outcome, interactions, covariates, minN)
+    val results = layouts.zipWithIndex.map { case (pl, k) =>
       val (v1, v2) = (pl.v1, pl.v2)
       val off = pairOff(k)
       val n = acc(off).toLong
@@ -478,15 +461,7 @@ object InteractionStudy {
       val mm = off + mmOff(pl)
       def varies(colIdx: Int): Boolean =
         acc(mm + colIdx - 1) < acc(mm + (p - 1) + colIdx - 1)
-      def failPlain(err: String, nn: Long) = InteractionResult(
-        v1, v2, outcome, Converged = false, nn, None, None, None, None,
-        error = Some(err))
-      def failBetas(err: String, nn: Long) = InteractionBetaResult(
-        v1, v2, outcome, s"$v1:$v2", Converged = false, nn, None,
-        None, None, None, None, None, None, None, None, None, None, None,
-        None, None, None, None, error = Some(err))
-      def fail(err: String, nn: Long): Product =
-        if (!reportBetas) failPlain(err, nn) else failBetas(err, nn)
+      def fail(err: String, nn: Long) = errorRow(v1, v2, outcome, nn, err)
 
       // patsy selection per block: continuous -> the value column if it
       // varies; categorical -> OCCUPIED declared levels (dummy diagonal),
@@ -546,172 +521,155 @@ object InteractionStudy {
           val lrP =
             if (lrdf == 0 && lrstat == 0.0) None
             else Some(graft.stats.Distributions.chi2Sf(lrstat, lrdf.toDouble))
-          if (!reportBetas) {
-            // single-column interactions (both blocks single after patsy
-            // selection) report the crossing coefficient, like the row path
-            val (beta, se, bp) =
-              if (!interVaries || keptCross.size != 1) (None, None, None)
-              else {
-                val pf = fullIx.size
-                val scale = sseF / (n - pf)
-                val bi = bF(pf - 1)
-                val sei = math.sqrt(ainvF(pf - 1, pf - 1) * scale)
-                (Some(bi), Some(sei), Some(
-                  graft.stats.Distributions.tSfTwoSided(bi / sei, (n - pf).toDouble)))
-              }
-            InteractionResult(v1, v2, outcome, Converged = true, n,
-              beta, se, bp, lrP)
-          } else {
-            // reportBetas reaches here only for all-continuous designs
-            // (run()'s aggEligible gate): rest = [1, covars, v1, v2],
-            // full appends the single crossing
-            val pr = restIx.size
-            val scaleR = sseR / (n - pr)
-            def coefAt(b: BDV[Double], ainv: BDM[Double], scale: Double,
-                       pFit: Int, i: Int) = {
-              val bi = b(i)
-              val sei = math.sqrt(ainv(i, i) * scale)
-              (Some(bi), Some(sei), Some(
-                graft.stats.Distributions.tSfTwoSided(bi / sei, (n - pFit).toDouble)))
-            }
-            val (rb1, rs1, rp1) = coefAt(bR, ainvR, scaleR, pr, pr - 2)
-            val (rb2, rs2, rp2) = coefAt(bR, ainvR, scaleR, pr, pr - 1)
-            val (fbi, fsi, fpi, fb1, fs1, fp1, fb2, fs2, fp2) =
-              if (!interVaries) (None, None, None, None, None, None, None, None, None)
-              else {
-                val pf = fullIx.size
-                val scaleF = sseF / (n - pf)
-                val (a1, a2, a3) = coefAt(bF, ainvF, scaleF, pf, pf - 1)
-                val (b1, b2, b3) = coefAt(bF, ainvF, scaleF, pf, pf - 3)
-                val (c1, c2, c3) = coefAt(bF, ainvF, scaleF, pf, pf - 2)
-                (a1, a2, a3, b1, b2, b3, c1, c2, c3)
-              }
-            InteractionBetaResult(v1, v2, outcome, s"$v1:$v2",
-              Converged = true, n, lrP, rb1, rs1, rp1, rb2, rs2, rp2,
-              fbi, fsi, fpi, fb1, fs1, fp1, fb2, fs2, fp2)
+          // the crossing's coefficient when it is one column (both blocks
+          // single after patsy selection), like the row kernel's
+          val pf = fullIx.size
+          val scaleF = sseF / (n - pf)
+          def coefAt(b: BDV[Double], ainv: BDM[Double], scale: Double,
+                     pFit: Int, i: Int): Coef = {
+            val bi = b(i)
+            val sei = math.sqrt(ainv(i, i) * scale)
+            (Some(bi), Some(sei), Some(
+              graft.stats.Distributions.tSfTwoSided(bi / sei, (n - pFit).toDouble)))
           }
+          val inter =
+            if (interVaries && keptCross.size == 1) coefAt(bF, ainvF, scaleF, pf, pf - 1)
+            else NoCoef
+          // reportBetas reaches here only for all-continuous designs
+          // (run()'s aggEligible gate): rest = [1, covars, v1, v2], full
+          // appends the single crossing; without it the pair is one row
+          // holding just the crossing, which is what the plain row reads
+          val pr = restIx.size
+          val scaleR = sseR / (n - pr)
+          val (red1, red2) =
+            if (!reportBetas) (NoCoef, NoCoef)
+            else (coefAt(bR, ainvR, scaleR, pr, pr - 2), coefAt(bR, ainvR, scaleR, pr, pr - 1))
+          val (full1, full2) =
+            if (!reportBetas || !interVaries) (NoCoef, NoCoef)
+            else (coefAt(bF, ainvF, scaleF, pf, pf - 3), coefAt(bF, ainvF, scaleF, pf, pf - 2))
+          betaRow(v1, v2, outcome, s"$v1:$v2", converged = true, n, lrP,
+            red1, red2, inter, full1, full2)
         }
       } catch {
         case e: Exception =>
           fail(s"${e.getClass.getSimpleName}: ${e.getMessage}", n)
       }
     }
-    if (!reportBetas)
-      sortPlain(results.map(_.asInstanceOf[InteractionResult]).toDF())
-    else
-      sortBetas(results.map(_.asInstanceOf[InteractionBetaResult]).toDF())
+    // sorted lazily over the local rows, not collected like the row paths'
+    // table: the sort is the returned plan's one codegen stage
+    val (table, order) = render(spark, study, results.toSeq.map(Seq(_)), reportBetas)
+    table.orderBy(order.map(_.column): _*)
   }
 
   /** Co-group execution: a `stack` generator fans each base-complete
     * observation out to its (pair_id, val1, val2) rows, ONE shuffle keyed by
-    * pair id, and each group streams through the same local kernels as the
-    * broadcast path. The only action is the one collect of the O(#pairs)
-    * result rows, which are completed and sorted on the driver. */
-  private def runCogroup(
-      spark: SparkSession,
-      cf: CladeFrame,
-      outcome: String,
-      interactions: Seq[(String, String)],
-      covariates: Seq[String],
-      minN: Long,
-      reportBetas: Boolean,
-      family: Glm.Family,
-      base: DataFrame): DataFrame = {
+    * pair id, and each group is decoded and fitted by the same kernel as
+    * the broadcast path. Nothing row-scale reaches the driver: the only
+    * action is the one collect of the O(#pairs) result rows. */
+  private def fitCogroup(spark: SparkSession, cf: CladeFrame, study: PairStudy,
+                         base: DataFrame): Array[(Int, InteractionBetaResult)] = {
     import spark.implicits._
+    val outcome = study.outcome
     // binary outcome levels: from metadata if present, else one tiny
     // distinct scan (O(#levels) rows to the driver, never row-scale)
-    val caseLv: Option[String] = cf.typeOf(outcome) match {
-      case Binary => Some(AssociationStudy.caseLevel(outcome, cf.levels.getOrElse(outcome,
-        cf.df.select(col(outcome).cast("string")).na.drop().distinct()
-          .collect().map(_.getString(0)).toSeq)))
-      case _ => None
-    }
-    val vars = interactions.flatMap(p => Seq(p._1, p._2)).distinct
-    val baseCols = outcome +: covariates
-    val pairSql = interactions.zipWithIndex.map { case ((a, b), i) =>
+    val caseLv = caseLevel(cf, outcome, cf.df.select(col(outcome).cast("string"))
+      .na.drop().distinct().collect().map(_.getString(0)).toSeq)
+    val pairSql = study.pairs.zipWithIndex.map { case ((a, b), i) =>
       s"$i, `$a`, `$b`"
     }.mkString(", ")
-    val long = base.select(
-        baseCols.map(col) :+
-          expr(s"stack(${interactions.size}, $pairSql) AS (pair_id, val1, val2)"): _*)
-      .filter(col("val1").isNotNull && col("val2").isNotNull)
     // row: outcome(0), covars(1..nCov), pair_id(nCov+1), val1, val2
-    val nCov = covariates.size
-    val covarKindArr = covariates.map(c => cf.typeOf(c).name)
-    val interArr = interactions.toIndexedSeq
-    val varKinds: Map[String, String] = vars.map(v => v -> cf.typeOf(v).name).toMap
-    val outcomeName = outcome
-    val covarSeq = covariates
-
-    def collectGroup(rows: Iterator[org.apache.spark.sql.Row])
-        : (Array[Double], Array[String], Array[String], Seq[(String, String, Array[String])]) = {
-      val yBuf = new scala.collection.mutable.ArrayBuffer[Double]()
-      val a1 = new scala.collection.mutable.ArrayBuffer[String]()
-      val a2 = new scala.collection.mutable.ArrayBuffer[String]()
-      val covarBufs = Array.fill(nCov)(new scala.collection.mutable.ArrayBuffer[String]())
-      rows.foreach { r =>
-        val yRaw = r.getString(0)
-        yBuf += caseLv.fold(yRaw.toDouble)(one => if (yRaw == one) 1.0 else 0.0)
-        var j = 0
-        while (j < nCov) { covarBufs(j) += r.getString(1 + j); j += 1 }
-        a1 += r.getString(nCov + 2)
-        a2 += r.getString(nCov + 3)
-      }
-      val covarRaw = covarSeq.zipWithIndex.map { case (c, j) =>
-        (c, covarKindArr(j), covarBufs(j).toArray)
-      }
-      (yBuf.toArray, a1.toArray, a2.toArray, covarRaw)
-    }
-
-    val grouped = long.groupByKey(_.getInt(nCov + 1))
-    // a pair with NO complete rows forms no group; the reference still
-    // emits its non-converged row. pair_id rides along so the membership
-    // check does not depend on result naming (betas rows carry PARAMETER
-    // names). The fit runs once, for the one collect of its O(#pairs) rows,
-    // and the table is completed and sorted on the driver.
-    if (!reportBetas) {
-      val fitted = grouped.mapGroups { (pairId, rows) =>
-        val (v1, v2) = interArr(pairId)
-        val (y, a1, a2, covarRaw) = collectGroup(rows)
-        pairId -> fitPairCore(v1, v2, outcomeName, varKinds(v1), varKinds(v2),
-          y, a1, a2, covarRaw, family, minN)
-      }.collect()
-      val produced = fitted.iterator.map(_._1).toSet
-      val missing = interArr.indices.filterNot(produced).map { i =>
-        val (v1, v2) = interArr(i)
-        InteractionResult(v1, v2, outcomeName, Converged = false, 0,
-          None, None, None, None, error = Some("no non-missing observations"))
-      }
-      LocalResult.collectSorted((fitted.toSeq.map(_._2) ++ missing).toDF(), PlainOrder)
-    } else {
-      val fitted = grouped.flatMapGroups { (pairId, rows) =>
-        val (v1, v2) = interArr(pairId)
-        val (y, a1, a2, covarRaw) = collectGroup(rows)
-        fitPairBetasCore(v1, v2, outcomeName, varKinds(v1), varKinds(v2),
-          y, a1, a2, covarRaw, family, minN).map(pairId -> _)
-      }.collect()
-      val produced = fitted.iterator.map(_._1).toSet
-      val missing = interArr.indices.filterNot(produced).map { i =>
-        val (v1, v2) = interArr(i)
-        InteractionBetaResult(v1, v2, outcomeName, s"$v1:$v2",
-          Converged = false, 0, None, None, None, None, None, None, None,
-          None, None, None, None, None, None, None, None, None,
-          error = Some("no non-missing observations"))
-      }
-      LocalResult.collectSorted((fitted.toSeq.map(_._2) ++ missing).toDF(), BetasOrder)
-    }
+    val long = base.select((outcome +: study.covariates).map(col) :+
+        expr(s"stack(${study.pairs.size}, $pairSql) AS (pair_id, val1, val2)"): _*)
+      .filter(col("val1").isNotNull && col("val2").isNotNull)
+    val nCov = study.covariates.size
+    val cells = (1 to nCov) ++ Seq(nCov + 2, nCov + 3)
+    long.groupByKey(_.getInt(nCov + 1)).flatMapGroups { (k, rows) =>
+      val (y, values) = decode(rows, caseLv, cells)
+      study.fit(k, y, values.take(nCov), values(nCov), values(nCov + 1)).map(k -> _)
+    }.collect()
   }
 
-  /** Result row orders (plain and report_betas mode), shared by the
-    * distributed sorts below and the co-group path's driver-side sort. */
+  /** The value a binary outcome codes as 1, from its declared levels or
+    * else the `observed` ones; None for a continuous outcome. */
+  private def caseLevel(cf: CladeFrame, outcome: String,
+                        observed: => Seq[String]): Option[String] =
+    cf.typeOf(outcome) match {
+      case Binary => Some(AssociationStudy.caseLevel(outcome,
+        cf.levels.getOrElse(outcome, observed)))
+      case _ => None
+    }
+
+  /** Decodes rows of either row path into the kernel's inputs: the outcome
+    * in cell 0 (a binary one as 1.0 at its case level) and the string
+    * values of each of `cells`. The broadcast path decodes its probe rows
+    * once on the driver, each co-group task its pair's rows. */
+  private def decode(rows: Iterator[Row], caseLv: Option[String],
+                     cells: Seq[Int]): (Array[Double], Seq[Array[String]]) = {
+    import scala.collection.mutable.ArrayBuffer
+    val cellArr = cells.toArray
+    val y = new ArrayBuffer[Double]()
+    val values = Array.fill(cellArr.length)(new ArrayBuffer[String]())
+    rows.foreach { r =>
+      val v = r.getString(0)
+      y += caseLv.fold(v.toDouble)(one => if (v == one) 1.0 else 0.0)
+      var j = 0
+      while (j < cellArr.length) { values(j) += r.getString(cellArr(j)); j += 1 }
+    }
+    (y.toArray, values.toSeq.map(_.toArray))
+  }
+
+  /** The row paths' result table as a local relation, from each pair's
+    * kernel rows. A pair without rows — no complete observation, so no
+    * co-group group — gets the kernel's rows for zero observations. */
+  private def complete(spark: SparkSession, study: PairStudy,
+                       fitted: Seq[(Int, InteractionBetaResult)],
+                       reportBetas: Boolean): DataFrame = {
+    val byPair = fitted.groupMap(_._1)(_._2)
+    val (table, order) = render(spark, study, study.pairs.indices.map { k =>
+      byPair.getOrElse(k, study.fit(k, Array.empty,
+        study.covariates.map(_ => Array.empty[String]), Array.empty, Array.empty))
+    }, reportBetas)
+    LocalResult.collectSorted(table, order)
+  }
+
+  /** Every pair's rows, in pair order, as the result table and its row
+    * order: the rows themselves with `reportBetas`, else each pair's one
+    * plain row. */
+  private def render(spark: SparkSession, study: PairStudy,
+                     rows: Seq[Seq[InteractionBetaResult]],
+                     reportBetas: Boolean): (DataFrame, Seq[SortKey]) = {
+    import spark.implicits._
+    if (reportBetas) (rows.flatten.toDF(), BetasOrder)
+    else (rows.zipWithIndex.map { case (rs, k) => study.plain(k, rs) }.toDF(), PlainOrder)
+  }
+
+  /** Result row orders, plain and report_betas mode. */
   private val PlainOrder: Seq[SortKey] =
     Seq(SortKey("LRT_pvalue", nullsLast = true), SortKey("Term1"), SortKey("Term2"))
   private val BetasOrder: Seq[SortKey] = Seq(SortKey("LRT_pvalue", nullsLast = true),
     SortKey("Full_Var1_Var2_Pval", nullsLast = true), SortKey("Parameter"))
 
-  private def sortPlain(df: DataFrame): DataFrame = df.orderBy(PlainOrder.map(_.column): _*)
+  /** A coefficient's (beta, SE, p-value); [[NoCoef]] when a model lacks it. */
+  private type Coef = (Option[Double], Option[Double], Option[Double])
+  private val NoCoef: Coef = (None, None, None)
 
-  private def sortBetas(df: DataFrame): DataFrame = df.orderBy(BetasOrder.map(_.column): _*)
+  /** One result row of a pair: its reduced-model v1 and v2 coefficients,
+    * and its full-model crossing, v1 and v2 coefficients. */
+  private def betaRow(term1: String, term2: String, outcome: String, parameter: String,
+                      converged: Boolean, n: Long, lrP: Option[Double],
+                      red1: Coef, red2: Coef, inter: Coef, full1: Coef, full2: Coef,
+                      error: Option[String] = None): InteractionBetaResult =
+    InteractionBetaResult(term1, term2, outcome, parameter, converged, n, lrP,
+      red1._1, red1._2, red1._3, red2._1, red2._2, red2._3,
+      inter._1, inter._2, inter._3, full1._1, full1._2, full1._3,
+      full2._1, full2._2, full2._3, error)
+
+  /** A pair's one row when it has no fit: visible and not converged, never
+    * a silently vanished pair (the reference emits 'NOT Converge' rows). */
+  private def errorRow(v1: String, v2: String, outcome: String, n: Long,
+                       error: String): InteractionBetaResult =
+    betaRow(v1, v2, outcome, s"$v1:$v2", converged = false, n, None,
+      NoCoef, NoCoef, NoCoef, NoCoef, NoCoef, Some(error))
 
   private def term(name: String, kind: String, raw: Array[String]): DesignMatrix.Term =
     kind match {
@@ -737,121 +695,97 @@ object InteractionStudy {
     def varies: Boolean = columns.exists { case (_, v) => v.exists(_ != v(0)) }
   }
 
-  /** Shared pair kernel over base-complete aligned arrays (a1/a2 may hold
-    * nulls: pair completeness is filtered here). Pure local math — runs
-    * executor-side from both execution paths. */
-  private def fitPairCore(
-      v1: String, v2: String, outcome: String, k1: String, k2: String,
-      y: Array[Double], a1: Array[String], a2: Array[String],
-      covarRaw: Seq[(String, String, Array[String])],
-      family: Glm.Family, minN: Long): InteractionResult = {
-    val nullRes = InteractionResult(v1, v2, outcome, Converged = false, 0,
-      None, None, None, None)
-    try {
-      val idx = (0 until y.length).filter(i => a1(i) != null && a2(i) != null).toArray
-      val n = idx.length
-      if (n < minN || n < 3) return nullRes.copy(N = n, error = Some(
-        s"too few complete observations (min_n filter: $n < $minN)"))
-
-      val ySub = DenseVector(idx.map(y))
-      val covarTerms = covarRaw.map { case (c, k, arr) => term(c, k, idx.map(arr)) }
-      val t1 = term(v1, k1, idx.map(a1))
-      val t2 = term(v2, k2, idx.map(a2))
-      if (!t1.varies || !t2.varies) return nullRes.copy(N = n, error = Some(
-        s"interaction term does not vary"))
-      val inter = ProductTerm(t1, t2)
-
-      val (_, xRest) = DesignMatrix.build(n, covarTerms ++ Seq(t1, t2))
-      val (namesFull, xFull) = DesignMatrix.build(n, covarTerms ++ Seq(t1, t2, inter))
-      val rest = Glm.fit(xRest, ySub, family)
-      val full = Glm.fit(xFull, ySub, family)
-      val lrdf = full.p - rest.p
-      val lrstat = -2.0 * (rest.llf - full.llf)
-      // special case lrdf==0 && lrstat==0 (reference:
-      // interaction_regression.py — interaction adds no information)
-      val lrP =
-        if (lrdf == 0 && lrstat == 0.0) None
-        else Some(graft.stats.Distributions.chi2Sf(lrstat, lrdf.toDouble))
-
-      // single-column interaction (both terms continuous/binary): report its
-      // beta like the reference does
-      val interCols = inter.columns.map(_._1)
-      val (beta, se, bp) =
-        if (interCols.size == 1) {
-          val i = namesFull.indexOf(interCols.head)
-          if (i >= 0)
-            (Some(full.beta(i)), Some(full.se(i)), Some(full.pvalue(i, family)))
-          else (None, None, None)
-        } else (None, None, None)
-
-      InteractionResult(v1, v2, outcome, full.converged && rest.converged, n,
-        beta, se, bp, lrP)
-    } catch {
-      // per-pair failures carry their reason on the null row (the reference
-      // records error strings per test, base.py:155-195)
-      case e: Exception => nullRes.copy(error = Some(
-        s"${e.getClass.getSimpleName}: ${e.getMessage}"))
+  private object PairStudy {
+    def apply(cf: CladeFrame, outcome: String, interactions: Seq[(String, String)],
+              covariates: Seq[String], minN: Long): PairStudy = {
+      val family = cf.typeOf(outcome) match {
+        case Continuous => Glm.Gaussian
+        case Binary     => Glm.Binomial
+        case t => throw new IllegalArgumentException(s"bad outcome type $t")
+      }
+      val vars = covariates ++ interactions.flatMap(p => Seq(p._1, p._2))
+      PairStudy(outcome, interactions.toIndexedSeq, covariates,
+        vars.map(v => v -> cf.typeOf(v).name).toMap, family, minN)
     }
   }
 
-  /** report_betas mode: one row per interaction design column with reduced-
-    * and full-model coefficient reports (reference:
-    * interaction_regression.py:255-295). */
-  private def fitPairBetasCore(
-      v1: String, v2: String, outcome: String, k1: String, k2: String,
-      y: Array[Double], a1: Array[String], a2: Array[String],
-      covarRaw: Seq[(String, String, Array[String])],
-      family: Glm.Family, minN: Long): Seq[InteractionBetaResult] = {
-    // failures yield a visible non-converged placeholder row, never a
-    // silently-vanished pair (the reference emits 'NOT Converge' rows)
-    def failRow(n: Long) = Seq(InteractionBetaResult(v1, v2, outcome,
-      s"$v1:$v2", Converged = false, n, None, None, None, None, None, None,
-      None, None, None, None, None, None, None, None, None, None))
-    try {
-      val idx = (0 until y.length).filter(i => a1(i) != null && a2(i) != null).toArray
-      val n = idx.length
-      if (n < minN || n < 3) return failRow(n).map(_.copy(error = Some(
-        s"too few complete observations (min_n filter: $n < $minN)")))
+  /** What every pair of one study shares, with the one pair kernel and the
+    * plain row rendered from its rows. `kinds` holds each covariate's and
+    * interaction var's type name. */
+  private final case class PairStudy(
+      outcome: String,
+      pairs: IndexedSeq[(String, String)],
+      covariates: Seq[String],
+      kinds: Map[String, String],
+      family: Glm.Family,
+      minN: Long) {
 
-      val ySub = DenseVector(idx.map(y))
-      val covarTerms = covarRaw.map { case (c, k, arr) => term(c, k, idx.map(arr)) }
-      val t1 = term(v1, k1, idx.map(a1))
-      val t2 = term(v2, k2, idx.map(a2))
-      if (!t1.varies || !t2.varies) return failRow(n).map(_.copy(error = Some(
-        "interaction term does not vary")))
-      val inter = ProductTerm(t1, t2)
+    /** The pair kernel: pair `k`'s reduced and full fits and their LRT over
+      * the observations where both its vars are present, as one row per
+      * interaction design column with the reduced- and full-model
+      * coefficients (reference: interaction_regression.py:255-295), or as
+      * one error row. The inputs are aligned over the outcome- and
+      * covariate-complete observations (`a1`/`a2` may hold nulls). Pure
+      * local math; both row paths run it executor-side. */
+    def fit(k: Int, y: Array[Double], covars: Seq[Array[String]],
+            a1: Array[String], a2: Array[String]): Seq[InteractionBetaResult] = {
+      val (v1, v2) = pairs(k)
+      def failed(n: Long, error: String) = Seq(errorRow(v1, v2, outcome, n, error))
+      try {
+        val idx = y.indices.filter(i => a1(i) != null && a2(i) != null).toArray
+        val n = idx.length
+        if (n < minN || n < 3)
+          return failed(n, s"too few complete observations (min_n filter: $n < $minN)")
 
-      val (namesRest, xRest) = DesignMatrix.build(n, covarTerms ++ Seq(t1, t2))
-      val (namesFull, xFull) = DesignMatrix.build(n, covarTerms ++ Seq(t1, t2, inter))
-      val rest = Glm.fit(xRest, ySub, family)
-      val full = Glm.fit(xFull, ySub, family)
-      val lrdf = full.p - rest.p
-      val lrstat = -2.0 * (rest.llf - full.llf)
-      val lrP =
-        if (lrdf == 0 && lrstat == 0.0) None
-        else Some(graft.stats.Distributions.chi2Sf(lrstat, lrdf.toDouble))
-      val converged = full.converged && rest.converged
+        val ySub = DenseVector(idx.map(y))
+        val covarTerms = covariates.zip(covars).map { case (c, arr) =>
+          term(c, kinds(c), idx.map(arr))
+        }
+        val t1 = term(v1, kinds(v1), idx.map(a1))
+        val t2 = term(v2, kinds(v2), idx.map(a2))
+        if (!t1.varies || !t2.varies) return failed(n, "interaction term does not vary")
+        val inter = ProductTerm(t1, t2)
 
-      def coef(names: Seq[String], fit: Glm.Fit, nm: String)
-          : (Option[Double], Option[Double], Option[Double]) = {
-        val i = names.indexOf(nm)
-        if (i < 0) (None, None, None)
-        else (Some(fit.beta(i)), Some(fit.se(i)), Some(fit.pvalue(i, family)))
+        val (namesRest, xRest) = DesignMatrix.build(n, covarTerms ++ Seq(t1, t2))
+        val (namesFull, xFull) = DesignMatrix.build(n, covarTerms ++ Seq(t1, t2, inter))
+        val rest = Glm.fit(xRest, ySub, family)
+        val full = Glm.fit(xFull, ySub, family)
+        val lrdf = full.p - rest.p
+        val lrstat = -2.0 * (rest.llf - full.llf)
+        // special case lrdf==0 && lrstat==0 (reference:
+        // interaction_regression.py — interaction adds no information)
+        val lrP =
+          if (lrdf == 0 && lrstat == 0.0) None
+          else Some(graft.stats.Distributions.chi2Sf(lrstat, lrdf.toDouble))
+        val converged = full.converged && rest.converged
+
+        def coef(names: Seq[String], fit: Glm.Fit, nm: String): Coef = {
+          val i = names.indexOf(nm)
+          if (i < 0) NoCoef
+          else (Some(fit.beta(i)), Some(fit.se(i)), Some(fit.pvalue(i, family)))
+        }
+        inter.columns.map(_._1).map { param =>
+          val Array(p1, p2) = param.split(":", 2)
+          betaRow(p1, p2, outcome, param, converged, n, lrP,
+            coef(namesRest, rest, p1), coef(namesRest, rest, p2),
+            coef(namesFull, full, param), coef(namesFull, full, p1), coef(namesFull, full, p2))
+        }
+      } catch {
+        // per-pair failures carry their reason on the error row (the
+        // reference records error strings per test, base.py:155-195)
+        case e: Exception => failed(0, s"${e.getClass.getSimpleName}: ${e.getMessage}")
       }
+    }
 
-      inter.columns.map(_._1).map { param =>
-        val Array(p1, p2) = param.split(":", 2)
-        val (rb1, rs1, rp1) = coef(namesRest, rest, p1)
-        val (rb2, rs2, rp2) = coef(namesRest, rest, p2)
-        val (fbi, fsi, fpi) = coef(namesFull, full, param)
-        val (fb1, fs1, fp1) = coef(namesFull, full, p1)
-        val (fb2, fs2, fp2) = coef(namesFull, full, p2)
-        InteractionBetaResult(p1, p2, outcome, param, converged, n, lrP,
-          rb1, rs1, rp1, rb2, rs2, rp2, fbi, fsi, fpi, fb1, fs1, fp1, fb2, fs2, fp2)
-      }
-    } catch {
-      case e: Exception => failRow(0).map(_.copy(error = Some(
-        s"${e.getClass.getSimpleName}: ${e.getMessage}")))
+    /** Pair `k`'s plain row (reference: interaction_regression.py:143-168)
+      * from its kernel rows: the crossing's coefficient when the pair has
+      * exactly one interaction column. */
+    def plain(k: Int, rows: Seq[InteractionBetaResult]): InteractionResult = {
+      val (v1, v2) = pairs(k)
+      val r = rows.head
+      def single(c: Option[Double]) = c.filter(_ => rows.lengthCompare(1) == 0)
+      InteractionResult(v1, v2, outcome, r.Converged, r.N, single(r.Full_Var1_Var2_beta),
+        single(r.Full_Var1_Var2_SE), single(r.Full_Var1_Var2_Pval), r.LRT_pvalue, r.error)
     }
   }
 }

@@ -249,7 +249,7 @@ object Cli {
           val cf = loadState(spark, in)
           val cols = flag(rest, "--columns").map(_.split(",").toSeq)
             .getOrElse(cf.continuousVars)
-          graft.describe.Plots.distributions(spark, cf.df, cols,
+          graft.describe.Plots.distributions(cf.df, cols,
             flag(rest, "--bins").map(_.toInt).getOrElse(100))
         case "qq" =>
           val cf = loadState(spark, in)
@@ -380,7 +380,7 @@ object Cli {
           }
         case "semantic-dedup" =>
           // embedding-level near-dup removal; --dim required (vector width)
-          Similarity.semanticDedup(spark, df,
+          Similarity.semanticDedup(df,
             threshold = flag(rest, "--threshold").map(_.toDouble).getOrElse(0.95),
             dim = req(rest, "--dim").toInt,
             idCol = flag(rest, "--id").getOrElse("vec_id"),

@@ -603,11 +603,10 @@ object Describe {
     * one O(#groups·#partitions) metadata job, then the closed-form
     * contribution per distinct row and an O(#groups) final aggregate.
     * The previous shape sorted the raw rows and zipWithIndex'd them —
-    * measured ×17 wall at ×100 data on a tied column. `tieCols` is
-    * retained for API compatibility; the rank-SUM identity never needed a
-    * tie-break. Rows with a null group key are excluded. */
-  def giniByGroup(df: DataFrame, valueCol: String, groupCol: String,
-                  tieCols: Seq[String] = Nil): DataFrame = {
+    * measured ×17 wall at ×100 data on a tied column. The rank-SUM
+    * identity needs no tie-break. Rows with a null group key are
+    * excluded. */
+  def giniByGroup(df: DataFrame, valueCol: String, groupCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val parts = math.max(spark.sessionState.conf.numShufflePartitions, 1)

@@ -43,8 +43,7 @@ object Plots {
 
   /** Per-variable histograms for a set of continuous columns: melt + one
     * grouped aggregation (the multi-page `distributions` PDF data). */
-  def distributions(spark: SparkSession, df: DataFrame, columns: Seq[String],
-                    bins: Int = 100): DataFrame = {
+  def distributions(df: DataFrame, columns: Seq[String], bins: Int = 100): DataFrame = {
     import graft.modify.Modify
     val long = Modify.meltNumeric(df, columns).filter(col("value").isNotNull)
     val ranges = long.groupBy("variable")

@@ -204,7 +204,7 @@ object Decontaminate {
     base.join(removedStarts, Seq("id"), "left")
       .withColumn("__rm", coalesce(col("__rm"), array().cast("array<int>")))
       .select(col("id"), size(col("__ws")).cast("long").as("n_words"),
-        filter(col("__ws"), (w, p) =>
+        filter(col("__ws"), (_, p) =>
           !exists(col("__rm"), s => p >= s && p < s + n)).as("__kept"))
       .select(col("id"), col("n_words"),
         (col("n_words") - size(col("__kept"))).as("n_removed"),

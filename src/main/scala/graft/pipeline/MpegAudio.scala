@@ -266,7 +266,7 @@ object MpegAudio {
                 h.layer != first.layer) { i += 1 }
             else {
               try {
-                decodeFrame(bytes, i, h, synth, { (s: Array[Double], ch: Int) =>
+                decodeFrame(bytes, i, h, { (s: Array[Double], ch: Int) =>
                   // one granule-sample step for channel ch → 32 PCM samples;
                   // stats accumulate SAMPLE-INTERLEAVED (L0 R0 L1 R1 …), the
                   // same order the WAV path sees, once the last channel of
@@ -320,7 +320,6 @@ object MpegAudio {
   /** Parse one frame body and emit 36 subband-sample vectors per channel
     * (12 granules × 3) through `emit(samples32, ch)` in time order. */
   private def decodeFrame(b: Array[Byte], start: Int, h: Header,
-                          synth: Array[Synthesis],
                           emit: (Array[Double], Int) => Unit): Unit = {
     val r = new BitReader(b, start + 4, math.min(start + h.frameBytes, b.length))
     if ((b(start + 1) & 1) == 0) r.bits(16) // CRC present → skip

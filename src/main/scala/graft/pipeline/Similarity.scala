@@ -817,11 +817,11 @@ object Similarity {
     * corpus-scale operations are the signature projection and one
     * anti-join-shaped shuffle (the pair/component tables are duplicate-
     * sized, not corpus-sized). */
-  def semanticDedup(spark: SparkSession, df: DataFrame, threshold: Double,
+  def semanticDedup(df: DataFrame, threshold: Double,
                     dim: Int, idCol: String = "vec_id",
                     vecCol: String = "embedding", bits: Int = 6,
                     seed: Long = 42L): DataFrame = {
-    val pairs = cosineNearDups(spark, df, threshold, dim, idCol, vecCol,
+    val pairs = cosineNearDups(df, threshold, dim, idCol, vecCol,
       byBucket = true, bits, seed)
     val dupIds = Dedup.resolveKeepers(Dedup.components(pairs))
       .filter(col("id") =!= col("keeper"))
@@ -901,7 +901,7 @@ object Similarity {
   /** Embedding near-duplicate pairs: LSH-bucket self-join (`byBucket`,
     * the scale path) or a cheap consecutive-id sanity scan (id2 = id1 + 1 —
     * linear, NOT an all-pairs join). */
-  def cosineNearDups(spark: SparkSession, df: DataFrame, threshold: Double,
+  def cosineNearDups(df: DataFrame, threshold: Double,
                      dim: Int, idCol: String = "vec_id",
                      vecCol: String = "embedding", byBucket: Boolean = true,
                      bits: Int = 6, seed: Long = 42L): DataFrame = {

@@ -492,7 +492,7 @@ object Vp8 {
           i = 0
           while (i < 16) { coeffs(i * 16) = coeffs(24 * 16 + i); i += 1 }
         }
-        reconstructMb(Y, U, V, yW, cW, mbX, mbY, mbW, mbH, ymode, uvmode,
+        reconstructMb(Y, U, V, yW, cW, mbX, mbY, mbW, ymode, uvmode,
           subModes, sm, coeffs)
 
         mbX += 1
@@ -691,7 +691,7 @@ object Vp8 {
     * RFC 12.2: off-frame above = 127, off-frame left = 129. */
   private def reconstructMb(Y: Array[Byte], U: Array[Byte], V: Array[Byte],
                             yW: Int, cW: Int, mbX: Int, mbY: Int,
-                            mbW: Int, mbH: Int, ymode: Int, uvmode: Int,
+                            mbW: Int, ymode: Int, uvmode: Int,
                             subModes: Array[Byte], sm: Int,
                             coeffs: Array[Short]): Unit = {
     val yOff = mbY * 16 * yW + mbX * 16
@@ -713,7 +713,7 @@ object Vp8 {
         val bx = i & 3; val by = i >> 2
         predict4x4(Y, yW, yOff + by * 4 * yW + bx * 4, subModes(sm + i) & 0xff,
           hasAbove || by > 0, hasLeft || bx > 0,
-          mbX, mbY, bx, by, mbW)
+          mbX, mbY, bx, mbW)
         idct(coeffs, i * 16, Y, yOff + by * 4 * yW + bx * 4, yW)
         i += 1
       }
@@ -801,7 +801,7 @@ object Vp8 {
     * pixels replicate the rightmost above pixel. */
   private def predict4x4(p: Array[Byte], stride: Int, off: Int, mode: Int,
                          hasAbove: Boolean, hasLeft: Boolean,
-                         mbX: Int, mbY: Int, bx: Int, by: Int, mbW: Int): Unit = {
+                         mbX: Int, mbY: Int, bx: Int, mbW: Int): Unit = {
     // gather the 13-pixel context: above-left, above 4, above-right 4, left 4
     val A = new Array[Int](8) // above 0..3, above-right 4..7
     var i = 0

@@ -443,7 +443,7 @@ private[graft] object AnnQueries {
       val e = t(s, dir, "embeddings").select("vec_id", "embedding")
       val planted = e.filter(col("vec_id") < 30)
         .select((col("vec_id") + lit(100000L)).as("vec_id"), col("embedding"))
-      Similarity.semanticDedup(s, e.unionByName(planted), threshold = 0.95,
+      Similarity.semanticDedup(e.unionByName(planted), threshold = 0.95,
           dim = 64)
         .select(col("vec_id")).orderBy("vec_id")
     },

@@ -114,8 +114,7 @@ private[graft] object DescribeQueries {
       // sort (full parallelism however few groups — a per-group window
       // collapses to #groups tasks). Tie order cannot move the sum, so
       // the SQL window replay is exact
-      Describe.giniByGroup(t(s, dir, "lineitem"), "l_extendedprice",
-          "l_returnflag", Seq("l_orderkey", "l_linenumber"))
+      Describe.giniByGroup(t(s, dir, "lineitem"), "l_extendedprice", "l_returnflag")
         .select(col("l_returnflag"), col("n"),
           round(col("gini"), 6).as("gini"))
         .orderBy("l_returnflag"),

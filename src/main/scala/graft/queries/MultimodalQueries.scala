@@ -22,7 +22,7 @@ private[graft] object MultimodalQueries {
       () => """SELECT doc_id, CAST(length(text) AS BIGINT) AS byte_len, 'text/plain' AS mime
          FROM documents WHERE doc_id < 50 ORDER BY doc_id"""),
 
-    Q("multimodal_features", (s, dir) => {
+    Q("multimodal_features", (s, _) => {
       // every REAL decode kernel end-to-end through ONE extractFeatures
       // call on committed deterministic fixtures: MPEG-1 Layer II
       // bitstream+filterbank (mp2), from-scratch FLAC (fixed+Rice /
@@ -68,7 +68,7 @@ private[graft] object MultimodalQueries {
          t(id, f0, f1, f2, f3, f4, f5, f6, f7)
          ORDER BY id"""),
 
-    Q("multimodal_audio_mp2", (s, dir) => {
+    Q("multimodal_audio_mp2", (s, _) => {
       // REAL compressed-audio decode end-to-end through the driver
       // harness: the committed Layer II fixture (FixtureGen) runs the
       // full bitstream+filterbank decoder inside extractFeatures; the
@@ -91,7 +91,7 @@ private[graft] object MultimodalQueries {
            CAST(0.0416 AS DOUBLE) AS zcr, CAST(0.6986 AS DOUBLE) AS peak,
            CAST(0.3133 AS DOUBLE) AS mean_abs"""),
 
-    Q("multimodal_mp4_demux", (s, dir) => {
+    Q("multimodal_mp4_demux", (s, _) => {
       // REAL ISO-BMFF demux end-to-end: the committed two-chunk container
       // (ctts composition offsets, stss keyframes) explodes to one row
       // per sample; the oracle is the VALUES literal of its sample table
@@ -185,7 +185,7 @@ private[graft] object MultimodalQueries {
              END AS INTEGER) AS img_h
          FROM documents WHERE doc_id < 400 ORDER BY doc_id"""),
 
-    Q("multimodal_lossy_webp", (s, dir) => {
+    Q("multimodal_lossy_webp", (s, _) => {
       // the r17 from-scratch VP8 keyframe decoder as a first-class board
       // line: the committed real libwebp-encoded lossy fixture runs the
       // FULL decode (boolean decoder, token trees, dequant, iDCT, intra

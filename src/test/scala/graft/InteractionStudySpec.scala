@@ -3,7 +3,8 @@ package graft
 import graft.analyze.InteractionStudy
 import graft.io.Load
 import graft.modify.Modify
-import graft.model.CladeFrame
+import graft.model.{CladeFrame, VariableType}
+import org.apache.spark.sql.Row
 
 /** Interaction-study golden-output parity (reference:
   * tests/r_test_output/interactions CSVs, rtol 1e-4 on LRT_pvalue and N —
@@ -346,7 +347,6 @@ class InteractionStudySpec extends SparkSpec {
   }
 
   test("aggregated path: zero-partition input degrades to error rows, not a crash") {
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val schema = StructType(Seq("id", "y", "a", "b").map {
       case "id" => StructField("id", LongType)
@@ -361,5 +361,127 @@ class InteractionStudySpec extends SparkSpec {
     assert(rows.length === 1)
     val err = rows.head.getString(rows.head.fieldIndex("error"))
     assert(err != null && err.nonEmpty, s"expected a too-few-observations error row: ${rows.head}")
+  }
+
+  /** 300 observations: a binary outcome, a categorical covariate `c`, and
+    * the variables of [[pinPairs]] — continuous `x` (every tenth value
+    * missing), declared categorical `cat`, binary `bin`, constant `flat`
+    * and all-null `gone`. */
+  private lazy val pinFrame: CladeFrame = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val df = (1 to 300).map { i =>
+      val c = Seq("a", "b", "c")(i % 3)
+      val cat = Seq("p", "q", "r")(rnd.nextInt(3))
+      val bin = if (rnd.nextBoolean()) "yes" else "no"
+      val x = if (i % 10 == 0) None else Some(rnd.nextGaussian())
+      val eta = 0.5 * x.getOrElse(0.0) + (if (cat == "q") 0.6 else 0.0) +
+        (if (bin == "yes" && cat == "r") 0.8 else 0.0) + (if (c == "b") -0.4 else 0.0)
+      val y = if (rnd.nextDouble() < 1.0 / (1.0 + math.exp(-eta))) "1" else "0"
+      (i.toLong, y, c, x, cat, bin, 2.5, Option.empty[Double])
+    }.toDF("id", "y", "c", "x", "cat", "bin", "flat", "gone")
+    CladeFrame(df, "id").withTypes(Map(
+      "y" -> VariableType.Binary, "c" -> VariableType.Categorical,
+      "x" -> VariableType.Continuous, "cat" -> VariableType.Categorical,
+      "bin" -> VariableType.Binary, "flat" -> VariableType.Continuous,
+      "gone" -> VariableType.Continuous))
+      .withLevels(Map("y" -> Seq("0", "1"), "c" -> Seq("a", "b", "c"),
+        "cat" -> Seq("p", "q", "r"), "bin" -> Seq("no", "yes")))
+  }
+
+  /** Continuous x declared categorical, binary x categorical, continuous x
+    * binary (one interaction column, so the plain row has a Beta), a pair
+    * whose term does not vary and a pair with no complete observations. */
+  private val pinPairs =
+    Seq(("x", "cat"), ("bin", "cat"), ("x", "bin"), ("x", "flat"), ("x", "gone"))
+
+  private def pinStudy(reportBetas: Boolean): Seq[Row] =
+    InteractionStudy.run(spark, pinFrame, "y", pinPairs, covariates = Seq("c"),
+      minN = 1, reportBetas = reportBetas).collect().toSeq
+
+  /** Each row's cells, keyed by its string cells up to the outcome (plain:
+    * Term1, Term2; report_betas: Term1, Term2, Outcome, Parameter). */
+  private def pinKey(r: Row, betas: Boolean): String =
+    (0 until (if (betas) 4 else 2)).map(r.getString).mkString("|")
+
+  /** The broadcast path's rows of [[pinStudy]] before the row paths were
+    * rebuilt on one pair kernel (nulls as null). */
+  private val pinnedRows: Map[Boolean, Map[String, Seq[Any]]] = Map(
+    false -> Map(
+      "bin|cat" -> Seq("bin", "cat", "y", true, 300L, null, null, null, 0.049041714189157884,
+        null),
+      "x|bin" -> Seq("x", "bin", "y", true, 270L, -0.4779147004081472, 0.27286519211336946,
+        0.07986529836457705, 0.07808995804106089, null),
+      "x|cat" -> Seq("x", "cat", "y", true, 270L, null, null, null, 0.9681905288744627, null),
+      "x|flat" -> Seq("x", "flat", "y", false, 270L, null, null, null, null,
+        "interaction term does not vary"),
+      "x|gone" -> Seq("x", "gone", "y", false, 0L, null, null, null, null,
+        "too few complete observations (min_n filter: 0 < 1)")
+    ),
+    true -> Map(
+      "bin[T.yes]|cat[T.q]|y|bin[T.yes]:cat[T.q]" -> Seq("bin[T.yes]", "cat[T.q]", "y",
+        "bin[T.yes]:cat[T.q]", true, 300L, 0.049041714189157884, 0.1509070619517714,
+        0.23600563369517014, 0.5225488055916744, 0.33056830210939414, 0.2947609748006177,
+        0.2620839405556088, -1.0853153962922228, 0.5858765251031818, 0.06395916732287296,
+        0.45974102377925646, 0.4265893259755469, 0.28116168613481884, 0.9274574215055593,
+        0.421320498045568, 0.02771401893784725, null),
+      "bin[T.yes]|cat[T.r]|y|bin[T.yes]:cat[T.r]" -> Seq("bin[T.yes]", "cat[T.r]", "y",
+        "bin[T.yes]:cat[T.r]", true, 300L, 0.049041714189157884, 0.1509070619517714,
+        0.23600563369517014, 0.5225488055916744, 0.2723146939130291, 0.29260675696194194,
+        0.3520342603297826, 0.22805821866264042, 0.5934001002702344, 0.7007379241425862,
+        0.45974102377925646, 0.4265893259755469, 0.28116168613481884, 0.14172549502454257,
+        0.3986721361956601, 0.7222196468518769, null),
+      "x|bin[T.yes]|y|x:bin[T.yes]" -> Seq("x", "bin[T.yes]", "y", "x:bin[T.yes]", true, 270L,
+        0.07808995804106089, 0.43485129021436403, 0.1356994015449047, 0.001352884311096146,
+        0.23018843122817081, 0.25065596710363114, 0.3584387406167133, -0.4779147004081472,
+        0.27286519211336946, 0.07986529836457705, 0.6568428304746933, 0.19187806446258338,
+        6.188159387525995E-4, 0.2762615742316698, 0.25349376878444524, 0.2757941886402626,
+        null),
+      "x|cat[T.r]|y|x:cat[T.r]" -> Seq("x", "cat[T.r]", "y", "x:cat[T.r]", true, 270L,
+        0.9681905288744627, 0.42510584240825977, 0.13616640676813135, 0.0017965238941360726,
+        0.19260756941247098, 0.3122949253858721, 0.5374003243641121, -0.044812826136800765,
+        0.34816021916967527, 0.8975845669915796, 0.42592350852688077, 0.261445233444811,
+        0.10328935880445356, 0.1993327323282154, 0.31304310166566973, 0.5242824188659403, null),
+      "x|cat[T.q]|y|x:cat[T.q]" -> Seq("x", "cat[T.q]", "y", "x:cat[T.q]", true, 270L,
+        0.9681905288744627, 0.42510584240825977, 0.13616640676813135, 0.0017965238941360726,
+        0.3124877126684656, 0.3097199167946988, 0.3130051139073776, 0.03548500768645081,
+        0.33820947964910997, 0.9164391267739906, 0.42592350852688077, 0.261445233444811,
+        0.10328935880445356, 0.3085529116381926, 0.3108011511648078, 0.32082385214345044, null),
+      "x|flat|y|x:flat" -> Seq("x", "flat", "y", "x:flat", false, 270L, null, null, null, null,
+        null, null, null, null, null, null, null, null, null, null, null, null,
+        "interaction term does not vary"),
+      "x|gone|y|x:gone" -> Seq("x", "gone", "y", "x:gone", false, 0L, null, null, null, null,
+        null, null, null, null, null, null, null, null, null, null, null, null,
+        "too few complete observations (min_n filter: 0 < 1)")
+    ))
+
+  test("both row paths reproduce the pinned rows, with and without report_betas") {
+    Seq(false, true).foreach { betas =>
+      val (auto, autoDecisions) = gateDecisions(pinStudy(betas))
+      val (forced, forcedDecisions) = gateDecisions(distributed(pinStudy(betas)))
+      assert(autoDecisions.nonEmpty &&
+        autoDecisions.forall(_.endsWith("-> driver-local path")), autoDecisions)
+      assert(forcedDecisions.nonEmpty &&
+        forcedDecisions.forall(_.endsWith("-> distributed path")), forcedDecisions)
+      val want = pinnedRows(betas)
+      Seq("broadcast" -> auto, "co-group" -> forced).foreach { case (path, rows) =>
+        assert(rows.map(pinKey(_, betas)).toSet === want.keySet, s"$path betas=$betas")
+        rows.foreach { r =>
+          val k = pinKey(r, betas)
+          r.toSeq.zip(want(k)).zipWithIndex.foreach {
+            case ((x: Double, y: Double), i) =>
+              assert(math.abs(x - y) <= 1e-9 * math.abs(y), s"$path $k field $i: $x vs $y")
+            case ((x, y), i) => assert(x === y, s"$path $k field $i")
+          }
+        }
+      }
+      // the all-null pair is the min_n row on both paths
+      Seq(auto, forced).foreach { rows =>
+        val gone = rows.filter(_.getString(1) == "gone")
+        assert(gone.size === 1 && gone.head.getAs[Long]("N") === 0L &&
+          gone.head.getAs[String]("error") ===
+            "too few complete observations (min_n filter: 0 < 1)", gone)
+      }
+    }
   }
 }

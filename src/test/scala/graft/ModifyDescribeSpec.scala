@@ -532,7 +532,7 @@ class ModifyDescribeSpec extends SparkSpec {
     assert(h.forall(_.getLong(3) === 10)) // uniform data -> equal bins
     // max value lands in the last bin, not bin 10
     assert(h.map(_.getInt(0)).max === 9)
-    val d = graft.describe.Plots.distributions(spark, df, Seq("x", "y"), bins = 4)
+    val d = graft.describe.Plots.distributions(df, Seq("x", "y"), bins = 4)
       .collect()
     assert(d.map(_.getString(0)).toSet === Set("x", "y"))
     assert(d.filter(_.getString(0) == "x").map(_.getLong(2)).sum === 100)
@@ -995,7 +995,7 @@ class ModifyDescribeSpec extends SparkSpec {
       2.0 * s.zipWithIndex.map { case (x, i) => (i + 1) * x }.sum /
         (n * s.sum) - (n + 1.0) / n
     }
-    val out = Describe.giniByGroup(df, "v", "g", tieCols = Seq("v")).collect()
+    val out = Describe.giniByGroup(df, "v", "g").collect()
     assert(out.length === 2, "null group key must be excluded, not NPE")
     val m = out.map(r => r.getString(0) -> r.getDouble(2)).toMap
     assertRtol(m(g1), giniRef(vals1), 1e-9, "gini g1")

@@ -201,7 +201,7 @@ class PipelineSpec extends SparkSpec {
       (3L, base.map(_ * 2.0f)),      // cosine 1.0 with base (same LSH signs)
       (4L, base.map(-_)))            // antipode: cosine -1, never a dup
     val df = rows.toDF("vec_id", "embedding")
-    val kept = Similarity.semanticDedup(spark, df, threshold = 0.95, dim = 4,
+    val kept = Similarity.semanticDedup(df, threshold = 0.95, dim = 4,
         bits = 2)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(kept === Set(0L, 2L, 4L))
@@ -343,8 +343,8 @@ class PipelineSpec extends SparkSpec {
     val zl = Text.langId(zh, "text").collect().head
     assert(zl.getString(zl.fieldIndex("pred_lang")) === "zh")
     val fp = df.select(Text.fingerprint(col("text"))).head.getString(0)
-    planted(df)
-    fpChecks(fp, df)
+    planted()
+    fpChecks(fp)
   }
 
   test("url ops: extraction boundaries and canonicalization edge cases") {
@@ -396,7 +396,7 @@ class PipelineSpec extends SparkSpec {
     * English-ish text with arbitrary tags, so the audit query's ~0 accuracy
     * there is the CORRECT verdict — this pins the kernel's non-trivial
     * positives separately). */
-  private def planted(en: org.apache.spark.sql.DataFrame): Unit = {
+  private def planted(): Unit = {
     import spark.implicits._
     val docs = Seq(
       ("en", "The size and the shape of it is known to all, with reason."),
@@ -421,7 +421,7 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  private def fpChecks(fp: String, df: org.apache.spark.sql.DataFrame): Unit = {
+  private def fpChecks(fp: String): Unit = {
     import spark.implicits._
     assert(fp.matches("[0-9a-f]{32}"))
     // normalization-invariant

@@ -250,7 +250,7 @@ class PropertySpec extends SparkSpec {
     for (trial <- 1 to 5) {
       val nDom = 2 + rng.nextInt(8)
       val rows = (0 until nDom).flatMap { d =>
-        (0 until (1 + rng.nextInt(50))).map(i => (s"dom$d", 1L + rng.nextInt(40).toLong))
+        (0 until (1 + rng.nextInt(50))).map(_ => (s"dom$d", 1L + rng.nextInt(40).toLong))
       }.toDF("domain", "tok")
       val totCap = rows.agg(org.apache.spark.sql.functions.sum("tok")).head().getLong(0) * 3
       val budget = math.max(1L, (totCap * (0.2 + rng.nextDouble() * 1.2)).toLong)
@@ -417,7 +417,7 @@ class PropertySpec extends SparkSpec {
       (0 until 20).flatMap(h => Seq.fill(300)(s"heavy$h")) ++
       (0 until 500).flatMap(l => Seq.fill(8)(s"light$l")))
     val truthHeavy = (0 until 20).map(h => s"heavy$h").toSet
-    val reports = (0 until 5).map { trial =>
+    val reports = (0 until 5).map { _ =>
       val parts = 1 + rnd.nextInt(64)
       val ds = words.toDF("w").repartition(parts).select(col("w")).as[String]
       val rep = graft.pipeline.SpaceSaving
@@ -534,7 +534,7 @@ class PropertySpec extends SparkSpec {
     // calibration: exact int64 micro-bins -> identical to the last bit
     // under any partitioning
     val scored = (0 until 500)
-      .map(i => (rnd.nextDouble(), rnd.nextBoolean())).toDF("score", "pos")
+      .map(_ => (rnd.nextDouble(), rnd.nextBoolean())).toDF("score", "pos")
     def cal(df: org.apache.spark.sql.DataFrame) =
       graft.describe.Describe.calibration(df, "score", col("pos"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -542,7 +542,7 @@ class PropertySpec extends SparkSpec {
     assert(cal(scored) === cal(scored.repartition(7)))
     // targetEncodeLoo on integer targets: one division of exact int64s
     val te = (0 until 400)
-      .map(i => (s"c${rnd.nextInt(12)}", rnd.nextInt(1000).toLong))
+      .map(_ => (s"c${rnd.nextInt(12)}", rnd.nextInt(1000).toLong))
       .toDF("cat", "q")
     def loo(df: org.apache.spark.sql.DataFrame) =
       graft.modify.Modify.targetEncodeLoo(df, "cat", "q")
