@@ -5,7 +5,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.{CladeFrame, VariableType}
-import graft.stats.Distributions
+import graft.stats.{Distributions, Glm}
 import VariableType._
 
 /** Distributed sufficient-statistics GLM — the 100 TB execution path for
@@ -32,16 +32,23 @@ import VariableType._
   *     the {intercept, covars} block of the same statistics.
   *   - Binomial/logit: distributed IRLS — each iteration is one aggregation
   *     pass computing every variable's weighted normal equations and
-  *     deviance simultaneously, with each variable's current β embedded as
-  *     literals. Variables converge independently (statsmodels deviance
-  *     criterion); typically < 10 passes. Continuous, binary (0/1
-  *     encodable) and known-level categorical variables run here; a
-  *     categorical's LRT fits its full and restricted models in the same
-  *     passes.
+  *     deviance simultaneously at its current β. Variables converge
+  *     independently on [[Glm.devConverged]]; typically < 10 passes.
+  *     Continuous, binary (0/1 encodable) and known-level categorical
+  *     variables run here; a categorical's LRT fits its full and restricted
+  *     models in the same passes.
   *
-  * Numeric results are identical to the local Breeze kernel (same normal
-  * equations, same convergence test) — asserted by the golden-output suite
-  * and by an equivalence test against the collect path.
+  * Every pass accumulates through [[Gram]], the one packed normal-equations
+  * layout.
+  *
+  * Gaussian results equal the row kernel's ([[graft.stats.Glm]]) up to
+  * float summation order: the same normal equations, solved the same way.
+  * Binomial results do not equal it exactly. A pass computes its deviance
+  * at the β it starts from, so the deviance lags one pass behind the β the
+  * pass solves: the loop stops on Glm's rule one Newton step later than
+  * `Glm.fitBinomial`, and the SE is taken at that final β, where Glm uses
+  * the weights of its last weighted least squares. The two agree to about
+  * 1e-6 relative, the tolerance `AggregatedGlmSpec` compares them at.
   */
 object AggregatedGlm {
 
@@ -49,9 +56,6 @@ object AggregatedGlm {
     * of a single agg (codegen/JVM method-size limits), while each batch
     * still amortizes one full scan over many models. */
   val BatchSize = 64
-
-  val MaxIter = 100
-  val Tol = 1e-8
 
   private def rvKindOk(cf: CladeFrame, rv: String): Boolean =
     cf.typeOf(rv) match {
@@ -76,9 +80,8 @@ object AggregatedGlm {
     import spark.implicits._
     val binaryOutcome = cf.typeOf(outcome) == Binary
     val yExpr: Column =
-      if (!binaryOutcome) tryD(outcome) // ANSI-safe: malformed -> null -> masked
-      else when(col(outcome).cast("string") ===
-        AssociationStudy.caseLevel(outcome, cf.levels(outcome)), 1.0).otherwise(0.0)
+      if (!binaryOutcome) Gram.numeric(outcome) // malformed -> null -> masked
+      else Gram.dummy(outcome, AssociationStudy.caseLevel(outcome, cf.levels(outcome)))
     val results = rvs.grouped(BatchSize).flatMap { batch =>
       if (binaryOutcome)
         fitBinomialBatch(cf, cf.df, yExpr, Seq(outcome), covariates, batch, minN)
@@ -102,16 +105,9 @@ object AggregatedGlm {
   /** Numeric encoding of the tested column for continuous/binary rvs
     * (binary "treated as continuous 0/1", sorted second level = 1). */
   private def rvNumeric(cf: CladeFrame, v: String): Column = cf.typeOf(v) match {
-    case Binary =>
-      val second = cf.levels(v).sorted.lift(1)
-      when(col(v).cast("string") === second.orNull, 1.0).otherwise(0.0)
-    // try_cast everywhere a value could be malformed: the array
-    // materialization evaluates design columns unconditionally (no
-    // when(mask) shield), so an ANSI cast would throw instead of masking
-    case _ => tryD(v)
+    case Binary => Gram.dummy(v, cf.levels(v).sorted.lift(1).orNull)
+    case _ => Gram.numeric(v)
   }
-
-  private def tryD(c: String): Column = expr(s"try_cast(`$c` AS DOUBLE)")
 
   /** Complete-case mask over the EFFECTIVE design expressions: a value that
     * survives a raw null check but fails its numeric cast must not be
@@ -121,35 +117,20 @@ object AggregatedGlm {
   private def maskFor(cf: CladeFrame, covariates: Seq[String], v: String,
                       outcomeCols: Seq[String]): Column = {
     def notNullFor(c: String): Column = cf.typeOf(c) match {
-      case Continuous => tryD(c).isNotNull
+      case Continuous => Gram.numeric(c).isNotNull
       case _          => col(c).isNotNull
     }
     (outcomeCols.map(notNullFor) ++ covariates.map(notNullFor) :+
       notNullFor(v)).reduce(_ && _)
   }
 
-  private def tri(p: Int): Seq[(Int, Int)] =
-    for (i <- 0 until p; j <- i until p) yield (i, j)
+  /** Copies the design cells `idx` of `row` into `z`. */
+  private def gather(row: Array[Double], idx: Array[Int], z: Array[Double]): Unit = {
+    var i = 0
+    while (i < idx.length) { z(i) = row(idx(i)); i += 1 }
+  }
 
   // ------------------------------------------------------------- Gaussian
-
-  private[analyze] final case class GaussStats(n: Long, yy: Double,
-                                      zy: DenseVector[Double], zz: DenseMatrix[Double])
-
-  /** OLS solve from sufficient stats; returns (beta, Ainv, sse, llf, aic).
-    * llf/aic follow statsmodels Gaussian loglike with estimated scale. */
-  private[analyze] def solveGauss(s: GaussStats): (DenseVector[Double], DenseMatrix[Double], Double, Double, Double) = {
-    val p = s.zy.length
-    val ainv =
-      try inv(s.zz)
-      catch { case _: Exception => breeze.linalg.pinv(s.zz) }
-    val b = ainv * s.zy
-    val sse = math.max(s.yy - (b dot s.zy), 0.0)
-    val scale = sse / (s.n - p)
-    val llf = -0.5 * (sse / scale + s.n * math.log(2.0 * math.Pi * scale))
-    val aic = -2.0 * llf + 2.0 * p
-    (b, ainv, sse, llf, aic)
-  }
 
   private def fitGaussianBatch(cf: CladeFrame, df: DataFrame, yExpr: Column,
                                outCols: Seq[String], covariates: Seq[String],
@@ -166,10 +147,9 @@ object AggregatedGlm {
     //    below n exposes stale level metadata (values outside the declared
     //    levels) instead of silently pooling rows into a reference level.
     def zColumns(v: String): Seq[Column] = {
-      val base = lit(1.0) +: covariates.map(tryD)
+      val base = lit(1.0) +: covariates.map(Gram.numeric)
       cf.typeOf(v) match {
-        case Categorical => base ++ cf.levels(v).sorted.map(lvl =>
-          when(col(v).cast("string") === lvl, 1.0).otherwise(0.0))
+        case Categorical => base ++ cf.levels(v).sorted.map(Gram.dummy(v, _))
         case _ => base :+ rvNumeric(cf, v)
       }
     }
@@ -179,69 +159,33 @@ object AggregatedGlm {
     // df.agg: a 64-variable batch needs hundreds of aggregate expressions,
     // far past spark.sql.codegen.maxFields (100), so the Catalyst plan
     // silently drops to INTERPRETED evaluation (~5s for what is <1s of
-    // arithmetic at sf0.1). The accumulation over [[batchRows]] is plain
-    // fused loops with map-side combining via treeAggregate — the same
-    // shape the binomial IRLS uses, minus the iteration.
+    // arithmetic at sf0.1). Each rv's block takes w = 1, r = y and the
+    // scalar y², and one tally counts its cast fails (mask-independent).
     val nB = batch.size
-    val (rows, zIdxPer) = batchRows(cf, df, yExpr, outCols, covariates, batch,
+    val (rows, zIdx) = batchRows(cf, df, yExpr, outCols, covariates, batch,
       batch.map(zColumns))
-    val pPer: Array[Int] = zIdxPer.map(_.length)
-    // block per rv: [n, castfail, yy, zy(p), zz(tri(p))]
-    val blockOff = new Array[Int](nB)
-    var szAcc = 0
-    (0 until nB).foreach { k =>
-      blockOff(k) = szAcc; szAcc += 3 + pPer(k) + pPer(k) * (pPer(k) + 1) / 2
-    }
-    val size = szAcc
-    val acc = rows.treeAggregate(new Array[Double](size))(
-      seqOp = { (st, row) =>
-        val y = row(0)
-        var k = 0
-        while (k < nB) {
-          val off = blockOff(k)
-          st(off + 1) += row(1 + nB + k) // castfail (mask-independent)
-          if (row(1 + k) == 1.0) {
-            val p = pPer(k)
-            val zi = zIdxPer(k)
-            st(off) += 1.0
-            st(off + 2) += y * y
-            var i = 0
-            while (i < p) { st(off + 3 + i) += row(zi(i)) * y; i += 1 }
-            var t = off + 3 + p
-            i = 0
-            while (i < p) {
-              var j = i
-              while (j < p) { st(t) += row(zi(i)) * row(zi(j)); t += 1; j += 1 }
-              i += 1
-            }
-          }
-          k += 1
+    val g = new Gram(zIdx.map(_.length).toSeq, tallies = nB)
+    val sums = g.fold(rows) { (st, row, z) =>
+      val y = row(0)
+      var k = 0
+      while (k < nB) {
+        g.tally(st, k, row(1 + nB + k))
+        if (row(1 + k) == 1.0) {
+          gather(row, zIdx(k), z)
+          g.add(st, k, z, 1.0, y, y * y)
         }
-        st
-      },
-      combOp = { (a, b) =>
-        var i = 0
-        while (i < a.length) { a(i) += b(i); i += 1 }
-        a
-      })
+        k += 1
+      }
+    }
 
     batch.zipWithIndex.map { case (v, kIdx) =>
       val categorical = cf.typeOf(v) == Categorical
-      val pAll = pPer(kIdx)
-      val off = blockOff(kIdx)
-      val n = acc(off).toLong
-      val castFails = acc(off + 1).toLong
-      val yy = acc(off + 2)
-      val zy = DenseVector(Array.tabulate(pAll)(i => acc(off + 3 + i)))
-      val zz = DenseMatrix.zeros[Double](pAll, pAll)
-      var tPos = off + 3 + pAll
-      tri(pAll).foreach { case (i, j) =>
-        zz(i, j) = acc(tPos); zz(j, i) = acc(tPos); tPos += 1 }
+      val stats = sums.blocks(kIdx)
+      val pAll = stats.rhs.length
+      val n = stats.n
+      val castFails = sums.tallies(kIdx).toLong
+      val zz = stats.gram
       val kind = cf.typeOf(v).name
-
-      def sub(ix: Seq[Int]): GaussStats = GaussStats(n, yy,
-        DenseVector(ix.map(zy(_)).toArray),
-        DenseMatrix.tabulate(ix.size, ix.size)((a, b) => zz(ix(a), ix(b))))
 
       // drop covariates that do not vary under this mask (var from stats:
       // zz_jj/n - mean^2), matching the collect path / reference base.py
@@ -275,8 +219,8 @@ object AggregatedGlm {
           if (dummyIx.size < 2 || n <= fullIx.size + 1)
             RvFit(v, kind, n, converged = false)
           else {
-            val (_, _, _, llfF, aicF) = solveGauss(sub(fullIx))
-            val (_, _, _, llfR, aicR) = solveGauss(sub(restIx))
+            val (_, _, _, llfF, aicF) = Gram.solveGauss(stats.sub(fullIx))
+            val (_, _, _, llfR, aicR) = Gram.solveGauss(stats.sub(restIx))
             val lrstat = -2.0 * (llfR - llfF)
             val lrdf = (fullIx.size - restIx.size).toDouble
             val lrP = Distributions.chi2Sf(lrstat, lrdf)
@@ -296,7 +240,7 @@ object AggregatedGlm {
           val p = ix.size
           if (n <= p) RvFit(v, kind, n, converged = false)
           else {
-            val (b, ainv, sse, _, _) = solveGauss(sub(ix))
+            val (b, ainv, sse, _, _) = Gram.solveGauss(stats.sub(ix))
             val scale = sse / (n - p)
             val se = math.sqrt(ainv(p - 1, p - 1) * scale)
             val beta = b(p - 1)
@@ -313,12 +257,10 @@ object AggregatedGlm {
 
   /** The batch pass's working rows, shared by both families. Row layout:
     * [y | mask per batch rv | castfail per batch rv | distinct design
-    * columns]. Castfail marks rows where the raw rv value is present but
-    * its numeric cast fails: those must surface as the reference's
-    * per-variable NumberFormatException error row (captured per variable,
-    * base.py:155-195), not as a silently shrunk n. Design columns shared
-    * between designs (intercept, covariates) are projected once. Returns
-    * the rows and, per design, its columns' row indices. */
+    * columns]. Castfail ([[Gram.castFail]]) is 0 for binary/categorical
+    * rvs, which encode string levels. Design columns shared between
+    * designs (intercept, covariates) are projected once. Returns the rows
+    * and, per design, its columns' row indices. */
   private def batchRows(cf: CladeFrame, df: DataFrame, yExpr: Column,
                         outCols: Seq[String], covariates: Seq[String],
                         batch: Seq[String], designs: Seq[Seq[Column]])
@@ -332,11 +274,7 @@ object AggregatedGlm {
         batch.zipWithIndex.map { case (v, k) =>
           maskFor(cf, covariates, v, outCols).cast("double").as(s"__m_$k") }) ++
         batch.zipWithIndex.map { case (v, k) =>
-          (cf.typeOf(v) match {
-            case Continuous =>
-              when(col(v).isNotNull && tryD(v).isNull, 1.0).otherwise(0.0)
-            case _ => lit(0.0) // binary/categorical encode string levels
-          }).as(s"__cf_$k")
+          (if (cf.typeOf(v) == Continuous) Gram.castFail(v) else lit(0.0)).as(s"__cf_$k")
         } ++
         zList.zipWithIndex.map { case (c, j) => c.cast("double").as(s"__z_$j") }
     (graft.stats.Rows.doubleRdd(df.select(selCols: _*)),
@@ -351,9 +289,10 @@ object AggregatedGlm {
     * (interceptless all-levels dummies + covars — same span as intercept +
     * L-1 dummies, deviance-invariant) and a restricted model (intercept +
     * covars) under the SAME mask, so the working LRT is fully distributed. */
-  private final case class IrlsModel(key: String, rv: String, cols: Seq[Column]) {
-    def p: Int = cols.size
-  }
+  private final case class IrlsModel(key: String, rv: String, cols: Seq[Column])
+
+  /** A model's place in the working rows: its mask and design cells. */
+  private final case class MSpec(key: String, rv: String, maskIdx: Int, zIdx: Array[Int])
 
   private def fitBinomialBatch(cf: CladeFrame, df0: DataFrame, yExpr: Column,
                                outCols: Seq[String], covariates: Seq[String],
@@ -365,19 +304,15 @@ object AggregatedGlm {
     // ~0.7s/pass of pure overhead at sf0.1). Instead the projected working
     // set — y, one complete-case mask per variable, the DISTINCT design
     // columns — is materialized ONCE into a cached RDD of primitive double
-    // arrays, and every iteration is a treeAggregate of plain arithmetic:
+    // arrays, and every iteration is one fold of plain arithmetic:
     // milliseconds per pass, zero planning, spark.ml's own design for
     // iterative fitting. MEMORY_AND_DISK: an executor that can't hold its
     // slice spills instead of recomputing the projection.
-    // try_cast, like the gaussian path: the array materialization evaluates
-    // design columns unconditionally (no when(mask) shield), so an ANSI
-    // cast of a malformed covariate value would kill the whole study
-    val covarCols = covariates.map(tryD)
+    val covarCols = covariates.map(Gram.numeric)
     val models: Seq[IrlsModel] = batch.flatMap { v =>
       cf.typeOf(v) match {
         case Categorical =>
-          val dummies = cf.levels(v).sorted.map(lvl =>
-            when(col(v).cast("string") === lvl, 1.0).otherwise(0.0))
+          val dummies = cf.levels(v).sorted.map(Gram.dummy(v, _))
           Seq(
             IrlsModel(s"$v@full", v, covarCols ++ dummies),
             IrlsModel(s"$v@rest", v, lit(1.0) +: covarCols))
@@ -391,20 +326,80 @@ object AggregatedGlm {
     val (rows, zIdx) = batchRows(cf, df0, yExpr, outCols, covariates, batch,
       models.map(_.cols))
     val rdd = rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    final case class MSpec(key: String, rv: String, maskIdx: Int,
-                           zIdx: Array[Int], p: Int)
     val specs: Seq[MSpec] = models.zip(zIdx).map { case (md, zi) =>
-      MSpec(md.key, md.rv, 1 + maskPos(md.rv), zi, md.p)
+      MSpec(md.key, md.rv, 1 + maskPos(md.rv), zi)
     }
-    // (v, level-dummy row indices) for iteration-0 occupancy counting
-    val lcSpecs: Seq[(String, Array[Int])] = batch
-      .filter(v => cf.typeOf(v) == Categorical).map { v =>
-        val full = specs.find(_.key == s"$v@full").get
-        v -> full.zIdx.drop(covariates.size)
-      }
+    // first pass only: each categorical's level occupancy under its mask,
+    // then each rv's cast fails (mask-independent), as tallies
+    val lcVars = batch.filter(v => cf.typeOf(v) == Categorical)
+    val lcMask: Array[Int] = lcVars.map(v => 1 + maskPos(v)).toArray
+    val lcIdx: Array[Array[Int]] = lcVars.map { v =>
+      specs.find(_.key == s"$v@full").get.zIdx.drop(covariates.size)
+    }.toArray
+    val lcOff: Array[Int] = lcIdx.scanLeft(0)(_ + _.length)
+    val cfOff = lcOff.last
 
-    val lastAinv = scala.collection.mutable.Map[String, DenseMatrix[Double]]()
+    /** One IRLS pass over `active`: each model's Gram of weight
+      * w = max(μ(1−μ), 1e−10), working response η + (y−μ)/w and deviance,
+      * with μ from `betas` — or, when `betas` is null, the statsmodels
+      * start μ = (y+½)/2 and the first pass's tallies. With `gramOnly` the
+      * blocks hold just n and the Gram: no working response, no deviance.
+      * The formulas are the row kernel's ([[graft.stats.Glm]]). */
+    def pass(active: Array[MSpec], betas: Array[Array[Double]],
+             gramOnly: Boolean = false): Gram.Sums = {
+      val first = betas == null
+      val g = new Gram(active.map(_.zIdx.length).toSeq,
+        tallies = if (first) cfOff + nB else 0)
+      g.fold(rdd) { (st, row, z) =>
+        val y = row(0)
+        var k = 0
+        while (k < active.length) {
+          val sp = active(k)
+          if (row(sp.maskIdx) == 1.0) {
+            gather(row, sp.zIdx, z)
+            var eta = 0.0
+            var mu = 0.0
+            if (first) {
+              mu = (y + 0.5) / 2.0
+              eta = math.log(mu / (1.0 - mu))
+            } else {
+              val b = betas(k)
+              var i = 0
+              while (i < b.length) { eta += z(i) * b(i); i += 1 }
+              mu = 1.0 / (1.0 + math.exp(-eta))
+            }
+            val w = math.max(mu * (1.0 - mu), 1e-10)
+            if (gramOnly) g.add(st, k, z, w, 0.0, 0.0)
+            else {
+              val muC = math.min(math.max(mu, 1e-10), 1.0 - 1e-10)
+              val devT = 2.0 * (
+                (if (y > 0) y * math.log(y / muC) else 0.0) +
+                (if (y < 1) (1.0 - y) * math.log((1.0 - y) / (1.0 - muC)) else 0.0))
+              g.add(st, k, z, w, eta + (y - mu) / w, devT)
+            }
+          }
+          k += 1
+        }
+        if (first) {
+          var c = 0
+          while (c < lcIdx.length) {
+            if (row(lcMask(c)) == 1.0) {
+              val ix = lcIdx(c)
+              var l = 0
+              while (l < ix.length) {
+                if (row(ix(l)) == 1.0) g.tally(st, lcOff(c) + l, 1.0)
+                l += 1
+              }
+            }
+            c += 1
+          }
+          var j = 0
+          while (j < nB) { g.tally(st, cfOff + j, row(1 + nB + j)); j += 1 }
+        }
+      }
+    }
+
+    val ainv = scala.collection.mutable.Map[String, DenseMatrix[Double]]()
     val beta = scala.collection.mutable.Map[String, DenseVector[Double]]()
     val dev = scala.collection.mutable.Map[String, Double]()
     val done = scala.collection.mutable.Map[String, Boolean]()
@@ -415,128 +410,30 @@ object AggregatedGlm {
     models.foreach { md => done(md.key) = false; failed(md.key) = false }
     def rvFailed(v: String): Boolean =
       models.filter(_.rv == v).exists(md => failed(md.key))
+    def live: Array[MSpec] = specs.filter(sp =>
+      !done(sp.key) && !failed(sp.key) && !rvFailed(sp.rv)).toArray
 
     try {
       var iter = 0
-      while (iter < MaxIter &&
-          models.exists(md => !done(md.key) && !failed(md.key) && !rvFailed(md.rv))) {
-        val active = specs.filter(sp =>
-          !done(sp.key) && !failed(sp.key) && !rvFailed(sp.rv))
-        val firstIter = iter == 0
-        val lcs = if (firstIter) lcSpecs else Nil
-        // flat accumulator: per model [n, dev, wzr(p), wzz(tri)]; then lcs
-        val blockOff = new Array[Int](active.size)
-        var sz = 0
-        active.zipWithIndex.foreach { case (sp, k) =>
-          blockOff(k) = sz; sz += 2 + sp.p + sp.p * (sp.p + 1) / 2
-        }
-        val lcOff = new Array[Int](lcs.size)
-        lcs.zipWithIndex.foreach { case ((_, ix), k) => lcOff(k) = sz; sz += ix.length }
-        // iteration-0 only: per-rv castfail tallies (mask-independent)
-        val cfOff = sz
-        if (firstIter) sz += nB
-        val activeArr = active.toArray
-        val betas: Array[Array[Double]] =
-          if (firstIter) null else activeArr.map(sp => beta(sp.key).toArray)
-        val lcArr = lcs.toArray
-        val lcOffArr = lcOff
-        val size = sz
-
-        val acc = rdd.treeAggregate(new Array[Double](size))(
-          seqOp = { (st, row) =>
-            val y = row(0)
-            var k = 0
-            while (k < activeArr.length) {
-              val sp = activeArr(k)
-              if (row(sp.maskIdx) == 1.0) {
-                val p = sp.p
-                val zi = sp.zIdx
-                // mu: first iteration uses the statsmodels start
-                // mu=(y+1/2)/2; later the current linear predictor —
-                // identical formulas to the local Breeze kernel
-                var eta = 0.0
-                var mu = 0.0
-                if (firstIter) {
-                  mu = (y + 0.5) / 2.0
-                  eta = math.log(mu / (1.0 - mu))
-                } else {
-                  val b = betas(k)
-                  var i = 0
-                  while (i < p) { eta += row(zi(i)) * b(i); i += 1 }
-                  mu = 1.0 / (1.0 + math.exp(-eta))
-                }
-                val vfun = math.max(mu * (1.0 - mu), 1e-10)
-                val zr = eta + (y - mu) / vfun
-                val muC = math.min(math.max(mu, 1e-10), 1.0 - 1e-10)
-                val devT = 2.0 * (
-                  (if (y > 0) y * math.log(y / muC) else 0.0) +
-                  (if (y < 1) (1.0 - y) * math.log((1.0 - y) / (1.0 - muC)) else 0.0))
-                val off = blockOff(k)
-                st(off) += 1.0
-                st(off + 1) += devT
-                var i = 0
-                while (i < p) { st(off + 2 + i) += vfun * row(zi(i)) * zr; i += 1 }
-                var t = off + 2 + p
-                i = 0
-                while (i < p) {
-                  var j = i
-                  while (j < p) {
-                    st(t) += vfun * row(zi(i)) * row(zi(j)); t += 1; j += 1
-                  }
-                  i += 1
-                }
-              }
-              k += 1
-            }
-            var c = 0
-            while (c < lcArr.length) {
-              val (v, ix) = lcArr(c)
-              if (row(1 + maskPos(v)) == 1.0) {
-                var l = 0
-                while (l < ix.length) {
-                  if (row(ix(l)) == 1.0) st(lcOffArr(c) + l) += 1.0
-                  l += 1
-                }
-              }
-              c += 1
-            }
-            if (firstIter) {
-              var k2 = 0
-              while (k2 < nB) { st(cfOff + k2) += row(1 + nB + k2); k2 += 1 }
-            }
-            st
-          },
-          combOp = { (a, b) =>
-            var i = 0
-            while (i < a.length) { a(i) += b(i); i += 1 }
-            a
-          })
-
-        active.zipWithIndex.foreach { case (sp, k) =>
-          val p = sp.p
-          val off = blockOff(k)
-          val n = acc(off).toLong; ns(sp.key) = n
-          val newDev = acc(off + 1)
-          val c = DenseVector(Array.tabulate(p)(i => acc(off + 2 + i)))
-          val a = DenseMatrix.zeros[Double](p, p)
-          var t = off + 2 + p
-          tri(p).foreach { case (i, j) => a(i, j) = acc(t); a(j, i) = acc(t); t += 1 }
-          if (n < minN || n <= p) { failed(sp.key) = true }
+      var active = live
+      while (iter < Glm.MaxIter && active.nonEmpty) {
+        val first = iter == 0
+        val sums = pass(active, if (first) null else active.map(sp => beta(sp.key).toArray))
+        active.zip(sums.blocks).foreach { case (sp, s) =>
+          ns(sp.key) = s.n
+          if (s.n < minN || s.n <= s.rhs.length) failed(sp.key) = true
           else try {
-            val ai = try inv(a) catch { case _: Exception => breeze.linalg.pinv(a) }
-            beta(sp.key) = ai * c
-            lastAinv(sp.key) = ai
-            if (iter > 0 && math.abs(newDev - dev.getOrElse(sp.key, Double.MaxValue)) <=
-                Tol * (math.abs(newDev) + Tol)) done(sp.key) = true
-            dev(sp.key) = newDev
+            beta(sp.key) = s.solve._1
+            if (!first && Glm.devConverged(dev(sp.key), s.scalar)) done(sp.key) = true
+            dev(sp.key) = s.scalar
           } catch { case _: Exception => failed(sp.key) = true }
         }
-        lcs.zipWithIndex.foreach { case ((v, ix), k) =>
-          levelCounts(v) = ix.indices.map(l => acc(lcOff(k) + l).toLong)
-        }
-        if (firstIter) {
+        if (first) {
+          lcVars.zipWithIndex.foreach { case (v, c) =>
+            levelCounts(v) = (lcOff(c) until lcOff(c + 1)).map(sums.tallies(_).toLong)
+          }
           batch.zipWithIndex.foreach { case (v, k) =>
-            val c = acc(cfOff + k).toLong
+            val c = sums.tallies(cfOff + k).toLong
             if (c > 0) {
               castFails(v) = c
               models.filter(_.rv == v).foreach(md => failed(md.key) = true)
@@ -544,62 +441,20 @@ object AggregatedGlm {
           }
         }
         iter += 1
+        active = live
       }
 
-      // one final pass at the converged betas for exact SEs of numeric rvs
-      // (vcov evaluated AT the final beta, matching the local kernel)
+      // one more pass at the final betas of the fitted numeric rvs: their
+      // SEs come from the information matrix there (its Gram), inverted
+      // without the pinv fallback, so a singular one fails the fit
       val numericFitted = specs.filter(sp =>
-        sp.key == sp.rv && !failed(sp.key) && beta.contains(sp.key))
-      if (numericFitted.nonEmpty) {
-        val blockOff = new Array[Int](numericFitted.size)
-        var sz = 0
-        numericFitted.zipWithIndex.foreach { case (sp, k) =>
-          blockOff(k) = sz; sz += sp.p * (sp.p + 1) / 2
+        sp.key == sp.rv && !failed(sp.key) && beta.contains(sp.key)).toArray
+      if (numericFitted.nonEmpty)
+        numericFitted.zip(pass(numericFitted, numericFitted.map(sp => beta(sp.key).toArray),
+          gramOnly = true)
+          .blocks).foreach { case (sp, s) =>
+          try ainv(sp.key) = inv(s.gram) catch { case _: Exception => failed(sp.key) = true }
         }
-        val nfArr = numericFitted.toArray
-        val betas = nfArr.map(sp => beta(sp.key).toArray)
-        val size = sz
-        val acc = rdd.treeAggregate(new Array[Double](size))(
-          seqOp = { (st, row) =>
-            var k = 0
-            while (k < nfArr.length) {
-              val sp = nfArr(k)
-              if (row(sp.maskIdx) == 1.0) {
-                val p = sp.p
-                val zi = sp.zIdx
-                val b = betas(k)
-                var eta = 0.0
-                var i = 0
-                while (i < p) { eta += row(zi(i)) * b(i); i += 1 }
-                val mu = 1.0 / (1.0 + math.exp(-eta))
-                val w = math.max(mu * (1.0 - mu), 1e-10)
-                var t = blockOff(k)
-                i = 0
-                while (i < p) {
-                  var j = i
-                  while (j < p) {
-                    st(t) += w * row(zi(i)) * row(zi(j)); t += 1; j += 1
-                  }
-                  i += 1
-                }
-              }
-              k += 1
-            }
-            st
-          },
-          combOp = { (a, b) =>
-            var i = 0
-            while (i < a.length) { a(i) += b(i); i += 1 }
-            a
-          })
-        numericFitted.zipWithIndex.foreach { case (sp, k) =>
-          val p = sp.p
-          val a = DenseMatrix.zeros[Double](p, p)
-          var t = blockOff(k)
-          tri(p).foreach { case (i, j) => a(i, j) = acc(t); a(j, i) = acc(t); t += 1 }
-          try lastAinv(sp.key) = inv(a) catch { case _: Exception => failed(sp.key) = true }
-        }
-      }
     } finally rdd.unpersist(blocking = false)
 
     batch.map { v =>
@@ -647,7 +502,7 @@ object AggregatedGlm {
           else {
             val p = beta(v).length
             val b = beta(v)(p - 1)
-            val se = math.sqrt(lastAinv(v)(p - 1, p - 1))
+            val se = math.sqrt(ainv(v)(p - 1, p - 1))
             val pv = Distributions.zSfTwoSided(b / se)
             RvFit(v, kind, ns(v), done(v), Some(b), Some(se), Some(pv), pvalue = Some(pv))
           }

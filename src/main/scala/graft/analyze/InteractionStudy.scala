@@ -1,6 +1,6 @@
 package graft.analyze
 
-import breeze.linalg.DenseVector
+import breeze.linalg.{DenseMatrix, DenseVector}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.LocalPath
@@ -172,7 +172,7 @@ object InteractionStudy {
     // Gaussian studies over continuous/declared-categorical variables
     // never need a row anywhere: each pair's full+restricted OLS is a
     // function of its (masked) sufficient statistics, computed for EVERY
-    // pair in ONE treeAggregate scan — the AggregatedGlm shape. The patsy
+    // pair in ONE scan — the AggregatedGlm shape. The patsy
     // design's Gram is selected driver-side as a SUBMATRIX of an
     // all-declared-levels superset Gram, so categorical/binary blocks ride
     // the same pass (their level sets must be declared — the CLARITE
@@ -243,18 +243,18 @@ object InteractionStudy {
   }
 
   /** Sufficient-statistics execution for Gaussian studies over
-    * continuous and DECLARED categorical/binary variables: ONE
-    * `treeAggregate` over a primitive-array RDD accumulates, per pair, the
-    * masked Gram moments of a SUPERSET design block
-    * [1, covars, block1, block2, block1 x block2] plus y — where a
+    * continuous and DECLARED categorical/binary variables: ONE [[Gram]]
+    * fold over a primitive-array RDD accumulates, per pair, the masked
+    * normal equations [n, sum y^2, X'y, upper(X'X)] of a SUPERSET design
+    * block [1, covars, block1, block2, block1 x block2] — where a
     * continuous block is the value itself and a categorical block is one
-    * dummy per declared level — plus [n, sum y^2, X'y, upper(X'X),
-    * per-column min/max] and per-continuous-var castfail counts. The patsy
+    * dummy per declared level — with each column's min/max, and
+    * per-continuous-var castfail counts. The patsy
     * design (observed levels sorted, first dropped, level crossings) is
     * then selected DRIVER-SIDE as a submatrix of each pair's superset
     * Gram — occupancy comes free as the dummy diagonal — and full +
     * restricted OLS solve from the same moments
-    * ([[AggregatedGlm.solveGauss]]: identical normal-equations algebra,
+    * ([[Gram.solveGauss]]: identical normal-equations algebra,
     * llf/SE/t-inference formulas to [[graft.stats.Glm]]'s row kernel).
     * NOTHING row-scale reaches the driver and no per-pair row fan-out
     * shuffles — state is O(#pairs * p^2) doubles with map-side combining.
@@ -268,7 +268,6 @@ object InteractionStudy {
     val vars: Seq[String] =
       (covariates ++ interactions.flatMap(p => Seq(p._1, p._2))).distinct
     val nPairs = interactions.size
-    def tryD(c: String) = expr(s"try_cast(`$c` AS DOUBLE)")
     def isCat(v: String): Boolean = cf.typeOf(v) match {
       case Continuous => false
       case _ => true
@@ -293,17 +292,13 @@ object InteractionStudy {
       col(outcome).cast("double").as("__y") +: vars.flatMap { v =>
         val vp = when(col(v).isNotNull, 1.0).otherwise(0.0).as(s"__p_$v")
         if (!isCat(v))
-          Seq(vp, tryD(v).as(s"__v_$v"),
-            when(col(v).isNotNull && tryD(v).isNull, 1.0).otherwise(0.0)
-              .as(s"__cf_$v"))
-        else vp +: slots(v).levels.toSeq.map(l =>
-          when(col(v).cast("string") === l, 1.0).otherwise(0.0)
-            .as(s"__d_${v}_$l"))
+          Seq(vp, Gram.numeric(v).as(s"__v_$v"), Gram.castFail(v).as(s"__cf_$v"))
+        else vp +: slots(v).levels.toSeq.map(l => Gram.dummy(v, l).as(s"__d_${v}_$l"))
       }
 
     // ---- per-pair superset design: parallel primitive factor-slot arrays
     // (colA(j), colB(j)): (-1,-1) intercept; (a,-1) single factor; (a,b)
-    // product — primitive arrays keep the seqOp hot loop free of tuple
+    // product — primitive arrays keep the per-row loop free of tuple
     // dereferences
     final case class PairLayout(v1: String, v2: String,
                                 colA: Array[Int], colB: Array[Int],
@@ -323,116 +318,44 @@ object InteractionStudy {
         (for (a <- s1; b <- s2) yield (a, b))
       PairLayout(v1, v2, cols.map(_._1), cols.map(_._2), s1.length, s2.length)
     }.toArray
-    val maxP = layouts.map(_.p).max
 
-    // ---- accumulator layout: [castfail per var] ++ per pair
-    //   [n, yy, zy(p), zz(tri p), min(p-1), max(p-1)]
-    val nVars = vars.size
+    // ---- accumulator ([[Gram]]): per pair its block over the superset
+    // design with w = 1, r = y and the scalar y², the (min, max) of its
+    // p-1 non-intercept columns as ranges; per var its castfail tally
     val varIdx: Map[String, Int] = vars.zipWithIndex.toMap
-    val pairOff = new Array[Int](nPairs)
-    var szAcc = nVars
-    layouts.zipWithIndex.foreach { case (pl, k) =>
-      pairOff(k) = szAcc
-      szAcc += 2 + pl.p + pl.p * (pl.p + 1) / 2 + 2 * (pl.p - 1)
-    }
-    val size = szAcc
-    def mmOff(pl: PairLayout): Int = 2 + pl.p + pl.p * (pl.p + 1) / 2
-    val zero = new Array[Double](size)
-    layouts.zipWithIndex.foreach { case (pl, k) =>
-      val mm = pairOff(k) + mmOff(pl)
-      (0 until pl.p - 1).foreach { j =>
-        zero(mm + j) = Double.PositiveInfinity
-        zero(mm + (pl.p - 1) + j) = Double.NegativeInfinity
-      }
-    }
+    val rangeOff: Array[Int] = layouts.map(_.p - 1).scanLeft(0)(_ + _)
+    val g = new Gram(layouts.map(_.p).toSeq, tallies = vars.size, ranges = rangeOff.last)
     val cfSlotArr: Array[Int] = vars.map(v => slots(v).castfail).toArray
     val presentArr: Array[(Int, Int)] = layouts.map(pl =>
       (slots(pl.v1).present, slots(pl.v2).present))
-
-    // per-PARTITION fold (mapPartitions) + treeReduce instead of
-    // treeAggregate: the z scratch buffer and the accumulator are allocated
-    // once per partition, not per row — 6M rows at sf1 would otherwise churn
-    // 6M short-lived arrays through the young gen inside the hot loop
-    val partStates = graft.stats.Rows.doubleRdd(base.select(selCols: _*))
-      .mapPartitions { it =>
-        val st = zero.clone()
-        val z = new Array[Double](maxP)
-        it.foreach { row =>
-          var vi = 0
-          while (vi < nVars) {
-            if (cfSlotArr(vi) >= 0) st(vi) += row(cfSlotArr(vi))
-            vi += 1
-          }
-          val y = row(0)
-          var k = 0
-          while (k < nPairs) {
-            if (row(presentArr(k)._1) == 1.0 && row(presentArr(k)._2) == 1.0) {
-              val pl = layouts(k)
-              val p = pl.p
-              val ca = pl.colA
-              val cb = pl.colB
-              var j = 0
-              while (j < p) {
-                val a = ca(j); val b = cb(j)
-                z(j) = if (a < 0) 1.0 else if (b < 0) row(a) else row(a) * row(b)
-                j += 1
-              }
-              val off = pairOff(k)
-              st(off) += 1.0
-              st(off + 1) += y * y
-              var i = 0
-              while (i < p) { st(off + 2 + i) += z(i) * y; i += 1 }
-              var t = off + 2 + p
-              i = 0
-              while (i < p) {
-                var jj = i
-                while (jj < p) { st(t) += z(i) * z(jj); t += 1; jj += 1 }
-                i += 1
-              }
-              val mm = off + mmOff(pl)
-              i = 1
-              while (i < p) {
-                val v = z(i)
-                if (v < st(mm + i - 1)) st(mm + i - 1) = v
-                if (v > st(mm + (p - 1) + i - 1)) st(mm + (p - 1) + i - 1) = v
-                i += 1
-              }
-            }
-            k += 1
-          }
-        }
-        Iterator.single(st)
+    val sums = g.fold(graft.stats.Rows.doubleRdd(base.select(selCols: _*))) { (st, row, z) =>
+      var vi = 0
+      while (vi < cfSlotArr.length) {
+        if (cfSlotArr(vi) >= 0) g.tally(st, vi, row(cfSlotArr(vi)))
+        vi += 1
       }
-    // treeReduce throws on an empty collection; an empty (or AQE-coalesced-
-    // to-nothing) input yields a ZERO-partition RDD, so degrade to the zero
-    // state — every pair then reports its "too few observations" row
-    // instead of crashing (mapPartitions preserves partition count, so the
-    // check is exact)
-    val acc = if (partStates.getNumPartitions == 0) zero.clone()
-      else partStates.treeReduce { (x, yArr) =>
-        var i = 0
-        while (i < nVars) { x(i) += yArr(i); i += 1 }
-        var k = 0
-        while (k < nPairs) {
+      val y = row(0)
+      var k = 0
+      while (k < nPairs) {
+        if (row(presentArr(k)._1) == 1.0 && row(presentArr(k)._2) == 1.0) {
           val pl = layouts(k)
-          val off = pairOff(k)
-          val sumLen = mmOff(pl)
+          val p = pl.p
+          val ca = pl.colA
+          val cb = pl.colB
           var j = 0
-          while (j < sumLen) { x(off + j) += yArr(off + j); j += 1 }
-          val mm = off + sumLen
-          j = 0
-          while (j < pl.p - 1) {
-            if (yArr(mm + j) < x(mm + j)) x(mm + j) = yArr(mm + j)
-            val mx = mm + (pl.p - 1) + j
-            if (yArr(mx) > x(mx)) x(mx) = yArr(mx)
+          while (j < p) {
+            val a = ca(j); val b = cb(j)
+            z(j) = if (a < 0) 1.0 else if (b < 0) row(a) else row(a) * row(b)
             j += 1
           }
-          k += 1
+          g.add(st, k, z, 1.0, y, y * y)
+          j = 1
+          while (j < p) { g.range(st, rangeOff(k) + j - 1, z(j)); j += 1 }
         }
-        x
+        k += 1
       }
+    }
 
-    import breeze.linalg.{DenseMatrix => BDM, DenseVector => BDV}
     // a present-but-unparseable COVARIATE value (possible when a raw string
     // column is externally typed Continuous) would otherwise ride into every
     // pair's Gram as NaN and poison the solve silently; the row kernel hits
@@ -440,27 +363,16 @@ object InteractionStudy {
     // all pairs (covariates are shared across the whole study)
     val covarCastFail: Option[(String, Long)] = covariates.iterator
       .filter(c => slots(c).castfail >= 0)
-      .map(c => (c, acc(varIdx(c)).toLong))
+      .map(c => (c, sums.tallies(varIdx(c)).toLong))
       .find(_._2 > 0)
     val study = PairStudy(cf, outcome, interactions, covariates, minN)
     val results = layouts.zipWithIndex.map { case (pl, k) =>
       val (v1, v2) = (pl.v1, pl.v2)
-      val off = pairOff(k)
-      val n = acc(off).toLong
-      val yy = acc(off + 1)
-      val p = pl.p
-      val zy = Array.tabulate(p)(i => acc(off + 2 + i))
-      val zz = BDM.zeros[Double](p, p)
-      var t = off + 2 + p
-      var i = 0
-      while (i < p) {
-        var j = i
-        while (j < p) { zz(i, j) = acc(t); zz(j, i) = acc(t); t += 1; j += 1 }
-        i += 1
-      }
-      val mm = off + mmOff(pl)
+      val stats = sums.blocks(k)
+      val n = stats.n
+      val zz = stats.gram
       def varies(colIdx: Int): Boolean =
-        acc(mm + colIdx - 1) < acc(mm + (p - 1) + colIdx - 1)
+        sums.min(rangeOff(k) + colIdx - 1) < sums.max(rangeOff(k) + colIdx - 1)
       def fail(err: String, nn: Long) = errorRow(v1, v2, outcome, nn, err)
 
       // patsy selection per block: continuous -> the value column if it
@@ -479,8 +391,8 @@ object InteractionStudy {
           (occupied.drop(1).map(start + _), occupied.size > 1)
         }
 
-      val cf1 = if (slots(v1).castfail >= 0) acc(varIdx(v1)).toLong else 0L
-      val cf2 = if (slots(v2).castfail >= 0) acc(varIdx(v2)).toLong else 0L
+      val cf1 = if (slots(v1).castfail >= 0) sums.tallies(varIdx(v1)).toLong else 0L
+      val cf2 = if (slots(v2).castfail >= 0) sums.tallies(varIdx(v2)).toLong else 0L
       if (covarCastFail.isDefined) {
         val (badC, cntC) = covarCastFail.get
         fail(s"NumberFormatException: $cntC value(s) of covariate " +
@@ -509,12 +421,9 @@ object InteractionStudy {
           val interVaries = keptCross.exists(varies)
           val restIx = (0 +: keptCovarIx) ++ kept1 ++ kept2
           val fullIx = if (interVaries) restIx ++ keptCross else restIx
-          def statsOf(ix: Seq[Int]) = AggregatedGlm.GaussStats(n, yy,
-            BDV(ix.map(zy(_)).toArray),
-            BDM.tabulate(ix.size, ix.size)((a, b) => zz(ix(a), ix(b))))
-          val (bR, ainvR, sseR, llfR, _) = AggregatedGlm.solveGauss(statsOf(restIx))
+          val (bR, ainvR, sseR, llfR, _) = Gram.solveGauss(stats.sub(restIx))
           val (bF, ainvF, sseF, llfF, _) =
-            if (interVaries) AggregatedGlm.solveGauss(statsOf(fullIx))
+            if (interVaries) Gram.solveGauss(stats.sub(fullIx))
             else (bR, ainvR, sseR, llfR, 0.0)
           val lrdf = fullIx.size - restIx.size
           val lrstat = -2.0 * (llfR - llfF)
@@ -525,7 +434,7 @@ object InteractionStudy {
           // single after patsy selection), like the row kernel's
           val pf = fullIx.size
           val scaleF = sseF / (n - pf)
-          def coefAt(b: BDV[Double], ainv: BDM[Double], scale: Double,
+          def coefAt(b: DenseVector[Double], ainv: DenseMatrix[Double], scale: Double,
                      pFit: Int, i: Int): Coef = {
             val bi = b(i)
             val sei = math.sqrt(ainv(i, i) * scale)

@@ -572,12 +572,14 @@ object Modify {
       // INVARIANT (r17 verdict #3): the rank expression is evaluated on a
       // LATER action than the metadata collect, so correctness requires
       // any evicted-and-recomputed cache partition to reproduce the exact
-      // row order. That holds because (a) the sort key (vid, value, __id)
-      // is TOTAL — no duplicate keys, hence a unique in-partition order —
-      // and (b) repartitionByRange's boundary sampling is seeded
-      // deterministically per input partition (XORShiftRandom over
-      // byteswap64(partitionId)), so re-execution of a lost block yields
-      // identical partition contents. MEMORY_AND_DISK additionally makes
+      // row order, up to rows that tie on every column the rank reads.
+      // That holds because (a) the sort key (vid, value, __id) orders all
+      // rows but those tied on all three keys, which are identical rows
+      // (only a repeated `idCol` makes them), so any order of them ranks
+      // the same multiset of rows — and (b) repartitionByRange's boundary
+      // sampling is seeded deterministically per input partition
+      // (XORShiftRandom over byteswap64(partitionId)), so re-execution of a
+      // lost block yields identical partition contents. MEMORY_AND_DISK additionally makes
       // recomputation an executor-loss-only event. A nondeterministic
       // source (rand() columns) would void (b) — same contract as
       // Blocklist.filterOut's two-scan note.

@@ -21,7 +21,9 @@ private[graft] object ModifyQueries {
         .withColumn("rid", col("l_orderkey") * 10 + col("l_linenumber"))
       Modify.quantileNormalize(li, Seq("l_quantity", "l_discount", "l_tax"), "rid")
         .withColumn("normalized", round(col("normalized"), 6))
-        .orderBy("rid", "variable")
+        // rid repeats in lineitem (duplicate (orderkey, linenumber) rows),
+        // so the normalized value completes the order
+        .orderBy("rid", "variable", "normalized")
     },
       () => """WITH src AS (SELECT l_orderkey * 10 + l_linenumber AS rid,
              l_quantity, l_discount, l_tax

@@ -46,6 +46,11 @@ object Glm {
   val MaxIter = 100
   val Tol = 1e-8
 
+  /** The IRLS stopping rule: the deviance moved from `dev` to `newDev` by
+    * at most `Tol` relative to `dev`. */
+  def devConverged(dev: Double, newDev: Double): Boolean =
+    math.abs(newDev - dev) <= Tol * (math.abs(dev) + Tol)
+
   /** Fit y ~ X (X already includes the intercept column). Optional prior
     * weights act as frequency weights (survey-weighted path,
     * reference: survey_model.py:217-224). */
@@ -100,7 +105,7 @@ object Glm {
       eta = x * beta
       mu = eta.map(e => 1.0 / (1.0 + math.exp(-e)))
       val newDev = deviance(y, mu, w)
-      if (math.abs(newDev - dev) <= Tol * (math.abs(dev) + Tol)) converged = true
+      converged = devConverged(dev, newDev)
       dev = newDev
       iter += 1
     }
